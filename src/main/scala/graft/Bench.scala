@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR.
@@ -34,21 +33,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session TZ as Main/Verify: time-bucketing queries must be
-      // timed over the exact groupings the correctness gate verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSession.cpus
+    // the same session as Main/Verify: time-bucketing queries must be timed
+    // over the exact groupings the correctness gate verified
+    val spark = LocalSession(cpus)
     val warmDir = {
       val sib = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
       if (java.nio.file.Files.exists(sib)) sib.toString else sfDir
     }
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    LocalSession.warm(spark)
     try force(SparkEntry.entry(spark)) catch { case _: Throwable => () }
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run for local A/B iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -85,10 +78,8 @@ object Bench {
     // "cpus" self-describes the leg (the driver also runs a reduced-core
     // scaling leg — VERDICT r17 #1: without the field the two legs'
     // outputs are indistinguishable)
-    val cpusJson = // a number when numeric, a JSON string otherwise ("*")
-      if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else "\"" + cpus + "\""
     val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","cpus":$cpusJson}"""
+      s""""queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
     println(line)
     // also persisted to files: sbt prefixes stdout with [info] and caps what
     // log parsers see — the files carry the bare JSON line. Partial
@@ -103,14 +94,11 @@ object Bench {
           java.nio.file.Paths.get(p), line + "\n")
         catch { case _: Throwable => () }
       persist(s"BENCH_LATEST_c$cpus.json")
-      val priorCpus = try {
-        val t = java.nio.file.Files.readString(
-          java.nio.file.Paths.get("BENCH_LATEST.json"))
-        """"cpus":(\d+)""".r.findFirstMatchIn(t).map(_.group(1).toInt)
-      } catch { case _: Throwable => None }
-      // SPARK_GRAFT_CPUS may be non-numeric (e.g. "*"): treat as full-width
-      val thisCpus = scala.util.Try(cpus.toInt).getOrElse(Int.MaxValue)
-      if (priorCpus.forall(_ <= thisCpus)) persist("BENCH_LATEST.json")
+      val latest = java.nio.file.Paths.get("BENCH_LATEST.json")
+      if (!java.nio.file.Files.exists(latest) || """"cpus":(\d+)""".r
+          .findFirstMatchIn(java.nio.file.Files.readString(latest))
+          .exists(_.group(1).toInt <= cpus))
+        persist("BENCH_LATEST.json")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Decontaminate
 
@@ -20,15 +19,8 @@ object DecontamCrossover {
     val iters = args(1).toInt
     val textMult = args(2).toInt
     val scales = args.drop(3).map(_.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalSession()
+    LocalSession.warm(spark)
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
     val docs =
       if (textMult <= 1) docs0

@@ -1,0 +1,165 @@
+package graft
+
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+import scala.collection.mutable
+
+/** Gate profiler: where a gate's time goes, one mode per question.
+  *
+  * {{{
+  * sbt "runMain graft.Profile <time|jobs|stages|plan|scan> <sfDir> \
+  *   <gate,...|all> [iters] [spark.key=value ...]"
+  * }}}
+  *
+  *  - `time`: seconds of each of `iters` full materializations
+  *    ([[Bench.force]]) and their min — the per-gate A/B loop.
+  *  - `jobs`: after one warm run, each job's wall, the idle gap since the
+  *    previous job ended (driver planning and codegen), its description or
+  *    call site, then a totals line.
+  *  - `stages`: after one warm run, each stage's task count, run and cpu
+  *    time, shuffle write/read and spill, then the executed plan.
+  *  - `plan`: the formatted physical explain of each gate's analyzed plan
+  *    (pre-execution); redirect it to `plans/<round>/…` for evidence files.
+  *  - `scan`: runs each gate and lists those whose final plan scans the same
+  *    table more than once ([[graft.plans.PlanLint]] `duplicate-scan`) — a
+  *    review list, not a failure. The streaming gates are skipped: their
+  *    plan is per-batch.
+  *
+  * `iters` (default 1) is the number of timed runs per gate for `time`,
+  * `jobs` and `stages`; the walls include building the gate. Trailing
+  * `key=value` args are session conf for A/B runs (e.g. AQE off).
+  */
+object Profile {
+  private val usage = "usage: graft.Profile <time|jobs|stages|plan|scan> " +
+    "<sfDir> <gate,...|all> [iters] [spark.key=value ...]"
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 3, usage)
+    val Array(mode, dir, gateArg) = args.take(3)
+    val (confArgs, rest) = args.drop(3).toSeq.partition(_.contains("="))
+    val iters = rest.headOption.fold(1)(_.toInt)
+    val gates =
+      if (gateArg == "all") SparkEntry.queries.keys.toSeq.sorted
+      else gateArg.split(",").map(_.trim).toSeq
+    val profile: (SparkSession, String, String, Int) => Unit = mode match {
+      case "time" => time
+      case "jobs" => jobs
+      case "stages" => stages
+      case "plan" => (s, d, g, _) => plan(s, d, g)
+      case "scan" => (s, d, g, _) => scan(s, d, g)
+      case other => throw new IllegalArgumentException(s"unknown mode $other; $usage")
+    }
+    val spark = LocalSession(conf = LocalSession.parseConf(confArgs))
+    try {
+      if (mode != "plan") LocalSession.warm(spark)
+      gates.foreach(g => profile(spark, dir, g, iters))
+      if (mode == "scan") println("AUDIT done")
+    } finally spark.stop()
+  }
+
+  private def gate(spark: SparkSession, dir: String, name: String): DataFrame =
+    SparkEntry.queries(name)(spark, dir)
+
+  private def time(spark: SparkSession, dir: String, name: String, iters: Int): Unit = {
+    val times = (1 to iters).map { _ =>
+      val t0 = System.nanoTime()
+      Bench.force(gate(spark, dir, name))
+      (System.nanoTime() - t0) / 1e9
+    }
+    println(f"$name%-24s min=${times.min}%.2f  " +
+      times.map(t => f"$t%.2f").mkString(" "))
+  }
+
+  /** Warm `name` once, then run it `iters` times with `listener` attached;
+    * the listener bus is drained before each `report(df, rows, wall)`. */
+  private def traced(spark: SparkSession, dir: String, name: String, iters: Int,
+      listener: SparkListener)(report: (DataFrame, Long, Double) => Unit): Unit = {
+    val sc = spark.sparkContext
+    Bench.force(gate(spark, dir, name))
+    println(s"=== timed run: $name")
+    for (_ <- 1 to iters) {
+      GraftListenerBridge.drain(sc) // the warm run's events are not this run's
+      sc.addSparkListener(listener)
+      val t0 = System.nanoTime()
+      val df = gate(spark, dir, name)
+      val rows = Bench.force(df)
+      val wall = (System.nanoTime() - t0) / 1e9
+      GraftListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+      report(df, rows, wall)
+    }
+  }
+
+  private def jobs(spark: SparkSession, dir: String, name: String, iters: Int): Unit = {
+    final case class Job(start: Long, label: String, var end: Long = 0L)
+    val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val label = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(js.stageInfos.lastOption.map(_.name).getOrElse(""))
+        jobs.synchronized { jobs(js.jobId) = Job(js.time, label) }
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        jobs.synchronized { jobs.get(je.jobId).foreach(_.end = je.time) }
+    }
+    traced(spark, dir, name, iters, listener) { (_, rows, wall) =>
+      var prevEnd = 0L
+      var sumWall = 0.0
+      var sumGap = 0.0
+      jobs.toSeq.sortBy(_._2.start).foreach { case (id, j) =>
+        val w = (j.end - j.start) / 1e3
+        val gap = if (prevEnd == 0) 0.0 else math.max(0, j.start - prevEnd) / 1e3
+        sumWall += w; sumGap += gap
+        prevEnd = math.max(prevEnd, j.end)
+        println(f"[job] $id%-4d wall=$w%6.3fs gap=$gap%6.3fs  ${j.label.take(110)}")
+      }
+      println(f"rows=$rows wall=$wall%.2f s  jobs=${jobs.size} " +
+        f"sumJobWall=$sumWall%.2f sumGap=$sumGap%.2f")
+      jobs.clear()
+    }
+  }
+
+  private def stages(spark: SparkSession, dir: String, name: String, iters: Int): Unit = {
+    val listener = new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        val m = si.taskMetrics
+        println(f"[stage] id=${si.stageId}%-4d tasks=${si.numTasks}%-4d " +
+          f"run=${m.executorRunTime / 1e3}%7.1fs " +
+          f"cpu=${m.executorCpuTime / 1e9}%7.1fs " +
+          f"shufW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fMB " +
+          f"shufR=${m.shuffleReadMetrics.remoteBytesRead / 1e6 +
+            m.shuffleReadMetrics.localBytesRead / 1e6}%8.1fMB " +
+          f"spillMem=${m.memoryBytesSpilled / 1e6}%8.1fMB " +
+          f"spillDisk=${m.diskBytesSpilled / 1e6}%8.1fMB  ${si.name}")
+      }
+    }
+    traced(spark, dir, name, iters, listener) { (df, rows, wall) =>
+      println(f"rows=$rows wall=$wall%.2f s")
+      println("=== executed plan")
+      println(df.queryExecution.executedPlan.toString.take(8000))
+    }
+  }
+
+  private def plan(spark: SparkSession, dir: String, name: String): Unit = {
+    println(s"\n================ $name ================")
+    try println(gate(spark, dir, name).queryExecution.explainString(FormattedMode))
+    catch { case e: Throwable => println(s"explain failed: $e") }
+  }
+
+  private val streamingGates = Set("events_sessionize_stream", "events_dedup_stream")
+
+  private def scan(spark: SparkSession, dir: String, name: String): Unit =
+    if (!streamingGates(name)) try {
+      val df = gate(spark, dir, name)
+      df.collect() // finalizes df's OWN AdaptiveSparkPlan (count() would plan separately)
+      val dup = graft.plans.PlanLint.check(df)
+        .filter(_.kind == "duplicate-scan").map(_.detail)
+      if (dup.nonEmpty) println(s"AUDIT $name: ${dup.mkString(", ")}")
+      spark.catalog.clearCache()
+    } catch { case e: Throwable => println(s"AUDIT $name: ERR ${e.getClass.getSimpleName}") }
+}

@@ -3059,7 +3059,7 @@ object Queries {
       "__sum_raw" -> sum(round(col("value") * 10000)))
     val out =
       if (sliced) graft.operators.RollingAgg.trailingSliced(
-        ev, Seq("user_id"), "t", 3600000000L, aggs, numSlices = 8)
+        ev, Seq("user_id"), "t", 3600000000L, aggs)
       else graft.operators.RollingAgg.trailing(
         ev, Seq("user_id"), "t", 3600000000L, aggs)
     out.withColumn("sum_1h_e4", col("__sum_raw").cast(LongType))
@@ -3153,7 +3153,7 @@ object Queries {
     * oracle as `rolling_agg`. The grid is data-independent (width = 2^34
     * µs ≈ 4.8 h for the 1-hour range), so the fixtures' multi-day event
     * span crosses ~150 slice boundaries with real ghost traffic at every
-    * SF; the numSlices argument is API-compat only and ignored.
+    * SF.
     */
   private val rollingAggSliced: Gate = Gate(
     (s, dir) => rollingFrames(s, dir, sliced = true),

@@ -448,7 +448,6 @@ object OpStages {
       val sumCol = cfg.getStr("sum_col")
       val sumAs = cfg.getStr("sum_as").getOrElse(sumCol.map(_ + "_sum").orNull)
       val algo = cfg.getStr("algo").getOrElse("plain")
-      val numSlices = cfg.getInt("num_slices").getOrElse(64)
       val aggs =
         countAs.map(n => n -> org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1))).toSeq ++
@@ -460,7 +459,7 @@ object OpStages {
         case "plain" => graft.operators.RollingAgg.trailing(
           m.data, keys, timeCol, range, aggs)
         case "sliced" => graft.operators.RollingAgg.trailingSliced(
-          m.data, keys, timeCol, range, aggs, numSlices)
+          m.data, keys, timeCol, range, aggs)
         case other => throw new IllegalArgumentException(
           s"stage $name: unknown algo `$other` (plain|sliced)")
       })

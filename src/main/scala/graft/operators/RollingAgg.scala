@@ -57,18 +57,11 @@ object RollingAgg {
     * together, so they form one grid cell exactly as they form one peer
     * group in the plain window (and no sentinel value can collide with a
     * real slice of a negative time).
-    *
-    * @param numSlices retained for API/YAML compatibility; the absolute
-    *                  grid no longer needs a target slice count (per-key
-    *                  parallelism = the key's time span / width)
     */
   def trailingSliced(df: DataFrame, keyCols: Seq[String], timeCol: String,
-      range: Long, aggs: Seq[(String, Column)],
-      numSlices: Int = 64): DataFrame = {
+      range: Long, aggs: Seq[(String, Column)]): DataFrame = {
     require(keyCols.nonEmpty, "trailingSliced: at least one key column")
     require(range >= 0, s"trailingSliced: range must be >= 0, got $range")
-    require(numSlices >= 1,
-      s"trailingSliced: numSlices must be >= 1, got $numSlices")
     val dt = df.schema(timeCol).dataType
     require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"trailingSliced: $timeCol must be numeric (unix_micros a timestamp " +

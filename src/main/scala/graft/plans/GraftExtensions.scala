@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SQL functions, so `spark.sql("SELECT graft_dot(a, b) ...")` works for SQL
   * users and the expressions participate in Catalyst exactly like builtins.
   *
-  * Use via `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Use via a session builder's `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`; `GraftExtensions
   * .register(spark)` installs the same functions on a live session.
   */

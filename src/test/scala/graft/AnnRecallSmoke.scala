@@ -14,10 +14,7 @@ import graft.ops.Similarity
   */
 object AnnRecallSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val embs = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .localCheckpoint()
     val n = embs.count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measures the fork-point auto-persist added in round 15
@@ -22,13 +21,7 @@ import org.apache.spark.sql.functions._
 object AutoPersistProbe {
   def main(args: Array[String]): Unit = {
     val iters = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     val x64 = "target/scale_dirs/x64/events.parquet"
     val src = if (new java.io.File(x64).exists()) x64

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Bpe
 
@@ -18,12 +17,7 @@ object BpeSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("bpe-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // realistic token mix: 90% of positions draw from a ~2k-word common
     // vocabulary (the memo-friendly Zipfian head), 10% are document-unique

@@ -23,10 +23,7 @@ import graft.ops.Dedup
   */
 object ClusterSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     def storageMb: Long =
       spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum / (1024 * 1024)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Sampling}
 
@@ -24,12 +23,7 @@ object CorpusOpsSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("corpus-ops-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // ---- dedupAgainst: 1M crawl vs 100k previous release ----
     val crawl = spark.range(0, 1000000L, 1, 64).select(col("id").as("doc_id"),

@@ -48,12 +48,7 @@ object DecontamSmoke {
       i => concat(lit("w"), pmod(hash(seed * 131 + i * 17), lit(500000)))))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("decontam-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import graft.functions.GraftFunctions.tokens
     val n = 8 // the decontamination n-gram width
     val train = corpus(spark, 1000000L, 1000L).cache()

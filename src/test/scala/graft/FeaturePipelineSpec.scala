@@ -34,8 +34,7 @@ class FeaturePipelineSpec extends SparkSpec {
       graft.operators.AsOfJoin.asOfSliced(clicks, views, Seq("user_id"),
         "t", "view_ts_us", Seq("view_ts_us", "view_event_id"),
         dedupRight = Some("view_event_id"), numSlices = 8),
-      Seq("user_id"), "t", 3600000000L, Seq("n_1h" -> count(lit(1))),
-      numSlices = 8)
+      Seq("user_id"), "t", 3600000000L, Seq("n_1h" -> count(lit(1))))
       .select("event_id", "user_id", "t", "view_ts_us", "view_event_id", "n_1h")
     assert(collectSet(got) === collectSet(direct))
     assert(got.count() == 400)

@@ -13,7 +13,7 @@ import graft.operators._
   */
 class GoldenScenarioSpec extends SparkSpec {
 
-  private val stagesRoot = "/root/reference/src/MEDS_transforms/stages"
+  private def stagesRoot = ReferenceCheckout.path("src/MEDS_transforms/stages")
 
   test("reorder_measurements golden scenario (stable within-block order)") {
     val dir = s"$stagesRoot/reorder_measurements/examples"
@@ -103,7 +103,7 @@ class GoldenScenarioSpec extends SparkSpec {
   /** The canonical `simple_static_MEDS` dataset (mapreduce/stage.py:64-168,
     * the default input the reference's scenario harness injects) as shipped
     * CSV — the custom_bins_fp scenario embeds it verbatim. NOTE: the older
-    * /root/reference/example/data tree is a DIFFERENT fixture (code `DOB`
+    * reference checkout's example/data tree is a DIFFERENT fixture (code `DOB`
     * instead of `MEDS_BIRTH`).
     */
   private def simpleStaticData = GoldenScenario.shardedData(spark,

@@ -7,15 +7,14 @@ import graft.meds.MedsSchema._
 import graft.operators._
 
 /** Golden parity against the reference's own shipped example dataset
-  * (/root/reference/example/data — the `simple_static_MEDS` fixture used by
-  * its stage scenarios; see FIXTURES.md §4-5). Expectations below are the
+  * (the reference checkout's example/data — the `simple_static_MEDS`
+  * fixture used by its stage scenarios; see FIXTURES.md §4-5). Expectations below are the
   * reference's published golden outputs (e.g. filter_subjects/examples/
   * out_data.yaml keeps exactly subjects 239684, 1195293, 1500733).
   */
 class GoldenSpec extends SparkSpec {
 
-  private val root = "/root/reference/example/data"
-  private lazy val meds = MedsIO.read(spark, root)
+  private lazy val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
 
   test("reads the MEDS layout with shard/split provenance") {
     assert(meds.data.count() == 62)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -11,10 +10,7 @@ import graft.ops.Similarity
 object IvfSplitBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .withColumn("embedding", col("embedding").cast("array<double>"))
     val q = embs.orderBy("vec_id").select("embedding").head()

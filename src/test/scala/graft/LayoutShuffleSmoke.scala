@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.AggregateCodeMetadata
 import graft.ops.{Layout, Packing, Sampling}
@@ -31,13 +30,7 @@ object LayoutShuffleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("layout-shuffle-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import spark.implicits._
 
     // ---- chunkDocuments: 1M x ~200 tokens, window 128 stride 64 ----

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Classifier, Divergence, LanguageModel}
 
@@ -26,12 +25,7 @@ object LmClassifierSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("lm-classifier-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // 1M docs, ~8 tokens each, vocabulary ~50k split across 10 sources
     // with per-source token skew (source s over-samples tokens ≡ s mod 10)

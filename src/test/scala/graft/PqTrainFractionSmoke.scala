@@ -18,12 +18,8 @@ object PqTrainFractionSmoke {
   def main(args: Array[String]): Unit = {
     val root = args(0)
     val scales = args.drop(1).map(_.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warm
+    val spark = LocalSession()
+    LocalSession.warm(spark)
 
     val k = 10
     for (scale <- scales) {

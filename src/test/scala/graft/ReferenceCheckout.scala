@@ -1,0 +1,21 @@
+package graft
+
+/** The MEDS-transforms reference checkout that the golden specs read their
+  * inputs and expectations from (its `example/data` tree, stage example
+  * scenarios and example pipeline). It is not part of this repository, so a
+  * spec that needs it fails with a message naming it, before any read.
+  */
+object ReferenceCheckout {
+  val Root = "/root/reference"
+
+  /** `Root/<rel>`; fails the calling test when the checkout is missing. */
+  def path(rel: String): String = {
+    if (!new java.io.File(Root).isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"reference checkout missing at $Root (needed for $rel)")
+    s"$Root/$rel"
+  }
+
+  /** The 62-row `simple_static_MEDS` example dataset root. */
+  def exampleData: String = path("example/data")
+}

@@ -37,10 +37,8 @@ class RollingAggSpec extends SparkSpec {
       (i, rng.nextInt(4).toLong, t, rng.nextInt(50).toDouble)
     }.toDF("id", "k", "t", "v")
     val plain = RollingAgg.trailing(df, Seq("k"), "t", 17L, aggs)
-    for (n <- Seq(1, 3, 16)) {
-      val sliced = RollingAgg.trailingSliced(df, Seq("k"), "t", 17L, aggs, n)
-      assert(collectSet(sliced) === collectSet(plain), s"numSlices=$n")
-    }
+    val sliced = RollingAgg.trailingSliced(df, Seq("k"), "t", 17L, aggs)
+    assert(collectSet(sliced) === collectSet(plain))
   }
 
   test("one hot key holding 90% still matches plain (and range 0 = peers)") {
@@ -50,10 +48,10 @@ class RollingAggSpec extends SparkSpec {
         rng.nextInt(100).toLong, 1.0)
     }.toDF("id", "k", "t", "v")
     val plain = RollingAgg.trailing(df, Seq("k"), "t", 9L, aggs)
-    val sliced = RollingAgg.trailingSliced(df, Seq("k"), "t", 9L, aggs, 8)
+    val sliced = RollingAgg.trailingSliced(df, Seq("k"), "t", 9L, aggs)
     assert(collectSet(sliced) === collectSet(plain))
     val p0 = RollingAgg.trailing(df, Seq("k"), "t", 0L, aggs)
-    val s0 = RollingAgg.trailingSliced(df, Seq("k"), "t", 0L, aggs, 8)
+    val s0 = RollingAgg.trailingSliced(df, Seq("k"), "t", 0L, aggs)
     assert(collectSet(s0) === collectSet(p0))
   }
 
@@ -61,7 +59,7 @@ class RollingAggSpec extends SparkSpec {
     val allNull = Seq((1L, 1L, null.asInstanceOf[java.lang.Long], 2.0),
       (2L, 1L, null.asInstanceOf[java.lang.Long], 3.0))
       .toDF("id", "k", "t", "v")
-    val gotNull = RollingAgg.trailingSliced(allNull, Seq("k"), "t", 5L, aggs, 4)
+    val gotNull = RollingAgg.trailingSliced(allNull, Seq("k"), "t", 5L, aggs)
       .select("id", "n", "s").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     // null times form one peer group: both rows see both (matches plain)
@@ -70,11 +68,11 @@ class RollingAggSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(gotNull == wantNull)
     val one = Seq((1L, 1L, 7L, 2.0)).toDF("id", "k", "t", "v")
-    assert(RollingAgg.trailingSliced(one, Seq("k"), "t", 5L, aggs, 4)
+    assert(RollingAgg.trailingSliced(one, Seq("k"), "t", 5L, aggs)
       .select("n").head().getLong(0) == 1L)
     val strT = Seq((1L, 1L, "x", 2.0)).toDF("id", "k", "t", "v")
     val e = intercept[IllegalArgumentException] {
-      RollingAgg.trailingSliced(strT, Seq("k"), "t", 5L, aggs, 4)
+      RollingAgg.trailingSliced(strT, Seq("k"), "t", 5L, aggs)
     }
     assert(e.getMessage.contains("numeric"))
   }

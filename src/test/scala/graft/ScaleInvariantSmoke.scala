@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Engine-side scale verification for the two gates whose DuckDB oracles are
@@ -36,14 +36,7 @@ import org.apache.spark.sql.functions._
 object ScaleInvariantSmoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/scale_suite/x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     import spark.implicits._
 
     def timed[T](tag: String)(f: => T): T = {

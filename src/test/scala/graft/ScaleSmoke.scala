@@ -8,11 +8,7 @@ import graft.operators.Pipeline
 
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     def time[T](n: String)(f: => T): T = { val t0 = System.nanoTime(); val r = f
       println(f"SMOKE $n ${(System.nanoTime()-t0)/1e9}%.1f s"); r }
 

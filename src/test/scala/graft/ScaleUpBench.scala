@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the floor-amortization measurement behind the ">2× tail is
@@ -67,20 +67,10 @@ object ScaleUpBench {
     val outRoot = args(1)
     val iters = args(2).toInt
     val scales = args.drop(3).map(_.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_SCALE_CONF="k=v;k=v": ad-hoc conf for A/B runs at scale
-    sys.env.get("SPARK_GRAFT_SCALE_CONF").toSeq
-      .flatMap(_.split(';')).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalSession(conf = LocalSession.parseConf(
+      sys.env.get("SPARK_GRAFT_SCALE_CONF").toSeq.flatMap(_.split(';'))))
+    LocalSession.warm(spark)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")

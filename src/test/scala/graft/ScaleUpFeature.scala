@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the floor-amortization probe for the EVENTS-table composed
@@ -21,15 +20,8 @@ object ScaleUpFeature {
     val k = args(3).toInt
     val queries = if (args.length > 4) args.drop(4).toSeq
       else Seq("asof_join_sliced", "rolling_agg_sliced", "feature_pipeline")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalSession()
+    LocalSession.warm(spark)
 
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val dir = s"$outRoot/x$k"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: build a FULL replicated-scale dataset dir — every table, not
@@ -33,14 +33,7 @@ object ScaleUpSuite {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outRoot, kArg) = args.take(3)
     val k = kArg.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = s"$outRoot/x$k"
 
     def t(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")

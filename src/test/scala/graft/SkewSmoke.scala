@@ -57,11 +57,7 @@ object SkewSmoke {
           .cast("double") / 1000.0).as("vec"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val out = new StringBuilder
     def report(s: String): Unit = { println(s"SMOKE $s"); out.append(s).append('\n') }
 

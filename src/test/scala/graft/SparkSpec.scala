@@ -31,18 +31,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // set ONCE for the shared session: individual suites setting it at
-      // runtime made behavior depend on suite execution order
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // nanosAsLong is set ONCE for the shared session: individual suites
+  // setting it at runtime made behavior depend on suite execution order
+  lazy val session: SparkSession = LocalSession(cpus = 4,
+    conf = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 }

@@ -20,14 +20,9 @@ import graft.streaming.Sessionize
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark: org.apache.spark.sql.SparkSession = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark: org.apache.spark.sql.SparkSession = LocalSession(conf = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     import spark.implicits._
 
     val nUsers = 1000000L

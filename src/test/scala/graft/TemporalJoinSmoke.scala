@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOfJoin, RangeJoin}
 
@@ -19,12 +18,7 @@ object TemporalJoinSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("temporal-join-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // key 0 is hot: 10% of rows; times spread over ~1e9 units
     def keyed(n: Long, parts: Int) = spark.range(0, n, 1, parts).select(
@@ -98,7 +92,7 @@ object TemporalJoinSmoke {
     val rollAggs = Seq("n_2k" -> count(lit(1)))
     def runRolling(d: org.apache.spark.sql.DataFrame, sliced: Boolean) = time {
       (if (sliced) graft.operators.RollingAgg.trailingSliced(
-        d, Seq("k"), "t", 2000L, rollAggs, numSlices = 64)
+        d, Seq("k"), "t", 2000L, rollAggs)
       else graft.operators.RollingAgg.trailing(d, Seq("k"), "t", 2000L, rollAggs))
         .agg(sum("n_2k")).collect()(0).getLong(0)
     }

@@ -9,7 +9,7 @@ import graft.operators.{RangeJoin, RollingAgg}
   * asOfSliced null-sentinel bug, extended to the other two grid-boundary
   * operators (the judge-flagged risk profile: ghost/slack boundary logic in
   * trailingSliced, bucket-cover bounds in RangeJoin). Generators force the
-  * degenerate grids explicitly: all-equal times, range = 0, numSlices = 1,
+  * degenerate grids explicitly: all-equal times, range = 0,
   * bucketWidth far larger than the data span, negative times, null
   * times/keys/bounds, inverted intervals.
   */
@@ -20,7 +20,7 @@ class TemporalPropertySpec extends SparkSpec {
 
   private case class Rw(id: Long, k: Long, t: Option[Long])
 
-  private val genRolling: Gen[(List[Rw], Long, Int)] = for {
+  private val genRolling: Gen[(List[Rw], Long)] = for {
     n <- Gen.choose(0, 90)
     // all-equal-times cases collapse the grid to one cell — generated as a
     // first-class shape, not left to chance
@@ -33,16 +33,15 @@ class TemporalPropertySpec extends SparkSpec {
           (9, Gen.choose(-40L, 40L).map(Some(_))), (1, Gen.const(None)))
     } yield (k, t))
     range <- Gen.oneOf(0L, 1L, 7L, 40L, 500L)
-    slices <- Gen.oneOf(1, 2, 5, 13)
   } yield (rows.zipWithIndex.map { case ((k, t), i) => Rw(i.toLong, k, t) },
-    range, slices)
+    range)
 
   test("trailingSliced equals brute force (ghost/slack boundaries, degenerate grids)") {
     val aggs = Seq("n" -> count(lit(1)), "s" -> sum(col("v")))
-    val prop = Prop.forAll(genRolling) { case (rows, range, slices) =>
+    val prop = Prop.forAll(genRolling) { case (rows, range) =>
       val df = rows.map(r => (r.id, r.k, r.t.map(java.lang.Long.valueOf).orNull,
         r.id * 3 + 1)).toDF("id", "k", "t", "v")
-      val got = RollingAgg.trailingSliced(df, Seq("k"), "t", range, aggs, slices)
+      val got = RollingAgg.trailingSliced(df, Seq("k"), "t", range, aggs)
         .select("id", "n", "s").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val want = rows.map { r =>
@@ -55,7 +54,7 @@ class TemporalPropertySpec extends SparkSpec {
         }
         r.id -> (peers.size.toLong, peers.map(_.id * 3 + 1).sum)
       }.toMap
-      if (got != want) println(s"MISMATCH range=$range slices=$slices\n" +
+      if (got != want) println(s"MISMATCH range=$range\n" +
         s"  got=${got.toSeq.sortBy(_._1)}\n  want=${want.toSeq.sortBy(_._1)}")
       got == want
     }
@@ -70,7 +69,7 @@ class TemporalPropertySpec extends SparkSpec {
     // own net; plain `trailing` is the oracle — both sides evaluate the
     // identical IEEE comparisons, so equality is exact
     val aggs = Seq("n" -> count(lit(1)), "s" -> sum(col("v")))
-    val prop = Prop.forAll(genRolling) { case (rows, range, _) =>
+    val prop = Prop.forAll(genRolling) { case (rows, range) =>
       val df = rows.map(r => (r.id, r.k,
         r.t.map(t => java.lang.Double.valueOf(t * 0.37 - 1.1)).orNull,
         r.id * 3 + 1)).toDF("id", "k", "t", "v")
