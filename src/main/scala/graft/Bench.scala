@@ -9,12 +9,13 @@ package graft
   * timed run at the target SF then measures steady-state execution — the
   * throughput that matters for a long-running cluster job — rather than
   * one-time JVM/codegen compilation (measured 2-4× inflation on
-  * sub-second queries). The timed run executes SPARK_GRAFT_BENCH_ITERS
-  * times (default 2) and reports the MINIMUM: with 64 queries sharing one
-  * JVM, single-shot timings showed ±0.3 s run-to-run noise on untouched
-  * sub-second queries (round-7 postmortem — every "regression" vanished
-  * under BenchOne min-of-5; SMOKE.md "Suite-noise postmortem"), and the
-  * min is the steady-state number the same plan reproduces in isolation.
+  * sub-second queries). Every gate is timed twice and reports the MINIMUM:
+  * with 64 queries sharing one JVM, single-shot timings showed ±0.3 s
+  * run-to-run noise on untouched sub-second queries (round-7 postmortem —
+  * every "regression" vanished under a min-of-5; SMOKE.md "Suite-noise
+  * postmortem"), and the min is the steady-state number the same plan
+  * reproduces in isolation. Single-gate A/B runs use
+  * `graft.Profile time <sfDir> <gates> [iters]`.
   */
 object Bench {
   /** Execute a gate FULLY and return its row count. `df.count()` is the
@@ -43,17 +44,9 @@ object Bench {
     }
     LocalSession.warm(spark)
     try force(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run for local A/B iteration
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names.contains(q._1))
-      case None => SparkEntry.queries
-    }
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try { force(fn(spark, warmDir)) } catch { case _: Throwable => () }
-      val times = (1 to iters).map { _ =>
+      val times = (1 to 2).map { _ =>
         spark.catalog.clearCache() // per-query caches must not accumulate or pre-warm
         System.gc() // keep prior queries' garbage out of this query's timing
         val t0 = System.nanoTime()
@@ -81,25 +74,26 @@ object Bench {
     val line = s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
       s""""queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
     println(line)
+    // a log reader that keeps only the last ~2 KB of stdout loses the full
+    // line's front (and its total): end with a short summary line
+    println(s"""{"metric":"total","value":${sec(total)},"n":${results.size},""" +
+      s""""sf":"$sfDir","cpus":$cpus}""")
     // also persisted to files: sbt prefixes stdout with [info] and caps what
-    // log parsers see — the files carry the bare JSON line. Partial
-    // (BENCH_ONLY) runs must not clobber the full-suite snapshots, and the
+    // log parsers see — the files carry the bare full line. The
     // reduced-core sanity leg must not clobber the full-width
     // BENCH_LATEST.json (VERDICT r17: the r17 file on disk was the c8 run) —
     // each leg gets its own BENCH_LATEST_c<cpus>.json, and BENCH_LATEST.json
     // only ever moves to an equal-or-wider run.
-    if (only.isEmpty) {
-      def persist(p: String): Unit =
-        try java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(p), line + "\n")
-        catch { case _: Throwable => () }
-      persist(s"BENCH_LATEST_c$cpus.json")
-      val latest = java.nio.file.Paths.get("BENCH_LATEST.json")
-      if (!java.nio.file.Files.exists(latest) || """"cpus":(\d+)""".r
-          .findFirstMatchIn(java.nio.file.Files.readString(latest))
-          .exists(_.group(1).toInt <= cpus))
-        persist("BENCH_LATEST.json")
-    }
+    def persist(p: String): Unit =
+      try java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(p), line + "\n")
+      catch { case _: Throwable => () }
+    persist(s"BENCH_LATEST_c$cpus.json")
+    val latest = java.nio.file.Paths.get("BENCH_LATEST.json")
+    if (!java.nio.file.Files.exists(latest) || """"cpus":(\d+)""".r
+        .findFirstMatchIn(java.nio.file.Files.readString(latest))
+        .exists(_.group(1).toInt <= cpus))
+      persist("BENCH_LATEST.json")
     spark.stop()
   }
 }

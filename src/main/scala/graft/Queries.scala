@@ -39,14 +39,29 @@ object Queries {
     new java.io.File(System.getProperty("java.io.tmpdir"),
       prefix + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
 
-  /** mtime fingerprint of a staged-input SOURCE path: the staleness key a
+  /** Fingerprint of a staged-input SOURCE path: the staleness key a
     * build-once staging marker stores, so regenerating the sf dir's parquet
     * in place invalidates the staged copy instead of silently serving it.
+    * A file stamps its own mtime. A directory stamps every regular file
+    * beneath it (relative name, size, mtime): a part file rewritten under
+    * the same name leaves the directory's own mtime unchanged.
     */
   private[graft] def sourceStamp(path: String): String =
-    try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path)).toMillis.toString
-    catch { case _: Exception => "absent" }
+    try {
+      val root = java.nio.file.Paths.get(path)
+      if (!java.nio.file.Files.isDirectory(root))
+        java.nio.file.Files.getLastModifiedTime(root).toMillis.toString
+      else {
+        import scala.jdk.CollectionConverters._
+        val files = java.nio.file.Files.walk(root)
+        try files.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => s"${root.relativize(f)}:${java.nio.file.Files.size(f)}:" +
+            java.nio.file.Files.getLastModifiedTime(f).toMillis)
+          .toSeq.sorted.mkString(";")
+        finally files.close()
+      }
+    } catch { case _: Exception => "absent" }
 
   /** Build-once staging guard: true iff `marker` exists and records the
     * current [[sourceStamp]] of `sourcePath`. Callers re-stage and then
@@ -65,7 +80,7 @@ object Queries {
       sourceStamp(sourcePath).getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** Memoized ANALYZED base relations, keyed (session, path, source mtime).
+  /** Memoized ANALYZED base relations, keyed (session, path, source stamp).
     *
     * `spark.read.parquet` does eager driver work on every call — lists the
     * path into a fresh InMemoryFileIndex and reads a footer for the schema.
@@ -75,10 +90,9 @@ object Queries {
     * the measured ~0.3-0.5 s/query floor, VERDICT r17 #5). The memo shares
     * METADATA only: the DataFrame is a lazy plan, every action still scans
     * the parquet from disk (no `.cache()`, `clearCache()` semantics
-    * unchanged, per-query results always recomputed). The mtime in the key
-    * re-resolves a regenerated input (same convention as [[sourceStamp]]);
-    * the session in the key scopes the relation to the SQLConf it was
-    * resolved under.
+    * unchanged, per-query results always recomputed). The [[sourceStamp]] in
+    * the key re-resolves a regenerated input; the session in the key scopes
+    * the relation to the SQLConf it was resolved under.
     */
   private val tableMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]
@@ -2996,22 +3010,6 @@ object Queries {
       |FROM l LEFT JOIN best USING (event_id)
       |ORDER BY l.event_id""".stripMargin))
 
-  /** The skew-hardened as-of carry ([[AsOfJoin.asOfSliced]]) against the
-    * SAME DuckDB ASOF JOIN oracle as `asof_join`: numSlices=8 forces real
-    * multi-slice grids and cross-slice boundary patches at every test SF,
-    * so the sliced path's semantics are hash-verified, not only
-    * spec-equal to the plain carry.
-    */
-  private val asofJoinSliced: Gate = Gate(
-    (s, dir) => {
-      val (clicks, views) = clicksViews(s, dir)
-      AsOfJoin.asOfSliced(clicks, views, Seq("user_id"), "ts", "view_ts",
-        Seq("view_ts", "view_event_id"), dedupRight = Some("view_event_id"),
-        numSlices = 8)
-        .orderBy("event_id")
-    },
-    asofJoin.oracle)
-
   /** Column profiling: the one-pass per-column statistics report (counts,
     * nulls, exact distincts, numeric/length ranges and means) replayed as
     * per-column SQL aggregates.
@@ -3049,26 +3047,19 @@ object Queries {
     * value sum at every event — RANGE-framed window on exact epoch micros,
     * the same frame semantics in both engines.
     */
-  private def rollingFrames(s: SparkSession, dir: String,
-      sliced: Boolean): DataFrame = {
-    val ev = eventsTable(s, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t"),
-        col("value"))
-    val aggs = Seq(
-      "n_1h" -> count(lit(1)),
-      "__sum_raw" -> sum(round(col("value") * 10000)))
-    val out =
-      if (sliced) graft.operators.RollingAgg.trailingSliced(
-        ev, Seq("user_id"), "t", 3600000000L, aggs)
-      else graft.operators.RollingAgg.trailing(
-        ev, Seq("user_id"), "t", 3600000000L, aggs)
-    out.withColumn("sum_1h_e4", col("__sum_raw").cast(LongType))
-      .select("event_id", "user_id", "t", "n_1h", "sum_1h_e4")
-      .orderBy("event_id")
-  }
-
   private val rollingAgg: Gate = Gate(
-    (s, dir) => rollingFrames(s, dir, sliced = false),
+    (s, dir) => {
+      val ev = eventsTable(s, dir)
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t"),
+          col("value"))
+      val aggs = Seq(
+        "n_1h" -> count(lit(1)),
+        "__sum_raw" -> sum(round(col("value") * 10000)))
+      graft.operators.RollingAgg.trailing(ev, Seq("user_id"), "t", 3600000000L, aggs)
+        .withColumn("sum_1h_e4", col("__sum_raw").cast(LongType))
+        .select("event_id", "user_id", "t", "n_1h", "sum_1h_e4")
+        .orderBy("event_id")
+    },
     Some("""SELECT event_id, user_id, epoch_us(ts) AS t,
       | CAST(count(*) OVER w AS BIGINT) AS n_1h,
       | CAST(sum(round(value * 10000)) OVER w AS BIGINT) AS sum_1h_e4
@@ -3089,15 +3080,6 @@ object Queries {
       .getOrElse(s"config/$name")
   }
 
-  /** The composed TEMPORAL pipeline as one gate: the committed
-    * `config/feature_pipeline.yaml` (skew-hardened as-of enrichment →
-    * skew-hardened trailing 1-hour activity count, both on their `algo:
-    * sliced` grid paths) through the graft.Main CLI over the click/view
-    * timeline, the whole chain replayed as ONE DuckDB query (native ASOF
-    * LEFT JOIN feeding a native RANGE frame) — the third composed-pipeline
-    * gate, extending the composition story from curation/analysis to
-    * feature engineering.
-    */
   /** Stage the feature pipeline's per-run inputs under `tmp` (idempotent —
     * the fixture-gate convention: warmed runs time the PIPELINE, not the
     * per-fixture input preparation) and return the per-run overrides —
@@ -3124,6 +3106,14 @@ object Queries {
     Seq(s"stages.enrich_view.right_path=$tmp/views.parquet")
   }
 
+  /** The composed TEMPORAL pipeline as one gate: the committed
+    * `config/feature_pipeline.yaml` (as-of enrichment → trailing 1-hour
+    * activity count) through the graft.Main CLI over the click/view
+    * timeline, the whole chain replayed as ONE DuckDB query (native ASOF
+    * LEFT JOIN feeding a native RANGE frame) — the third composed-pipeline
+    * gate, extending the composition story from curation/analysis to
+    * feature engineering.
+    */
   private val featurePipeline: Gate = Gate(
     (s, dir) => {
       val tmp = stagingDir("graft_feature_", dir)
@@ -3146,18 +3136,6 @@ object Queries {
       | CAST(count(*) OVER (PARTITION BY user_id ORDER BY t
       |   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_1h
       |FROM e ORDER BY event_id""".stripMargin))
-
-  /** The hot-key-hardened trailing window ([[graft.operators.RollingAgg
-    * .trailingSliced]]: absolute power-of-two grid with ghost rows, slice
-    * width ≥ the trailing range) against the SAME native-RANGE-frame
-    * oracle as `rolling_agg`. The grid is data-independent (width = 2^34
-    * µs ≈ 4.8 h for the 1-hour range), so the fixtures' multi-day event
-    * span crosses ~150 slice boundaries with real ghost traffic at every
-    * SF.
-    */
-  private val rollingAggSliced: Gate = Gate(
-    (s, dir) => rollingFrames(s, dir, sliced = true),
-    rollingAgg.oracle)
 
   /** Range join: clicks inside 2-hour purchase-attribution windows (same
     * user, click within [purchase−2h, purchase]) — the grid-bucketed
@@ -4280,12 +4258,10 @@ object Queries {
     "zorder_values" -> zorderValues,
     "shuffle_rows" -> shuffleRows,
     "asof_join" -> asofJoin,
-    "asof_join_sliced" -> asofJoinSliced,
     "asof_join_nearest" -> asofJoinNearest,
     "asof_join_stream" -> asofJoinStream,
     "range_join" -> rangeJoinGate,
     "rolling_agg" -> rollingAgg,
-    "rolling_agg_sliced" -> rollingAggSliced,
     "feature_pipeline" -> featurePipeline,
     "profile" -> profileGate,
     "packing_summary" -> packingSummaryGate,

@@ -403,40 +403,24 @@ object OpStages {
         (req("right_path"), req("left_time"), req("right_time"))
       val values = cfg.getList("value_cols").collect { case Cfg.S(s) => s }
       require(values.nonEmpty, s"stage $name: `value_cols` list is required")
-      // direction: backward | forward | nearest; algo: plain (default) |
-      // sliced (the hot-key-hardened time-grid carry, num_slices tasks per
-      // pathological key — backward/forward only)
+      // direction: backward | forward | nearest
       val direction = cfg.getStr("direction").getOrElse("backward")
       val strict = cfg.getBool("strict").getOrElse(false)
       val dedup = cfg.getStr("dedup_right")
-      val algo = cfg.getStr("algo").getOrElse("plain")
-      val numSlices = cfg.getInt("num_slices").getOrElse(64)
       Pipeline.DataStage(name, m => {
         val right = m.data.sparkSession.read.parquet(rightPath)
-        (direction, algo) match {
-          case ("nearest", a) =>
-            require(!strict, s"stage $name: strict has no meaning for nearest")
-            // reject rather than ignore: a user configuring `algo: sliced`
-            // for hot-key hardening must not silently get the plain path
-            require(a == "plain",
-              s"stage $name: algo `$a` is not available for direction " +
-                "nearest (plain only)")
-            graft.operators.AsOfJoin.asOfNearest(
-              m.data, right, keys, leftTime, rightTime, values, dedup)
-          case (_, "sliced") => graft.operators.AsOfJoin.asOfSliced(
-            m.data, right, keys, leftTime, rightTime, values, direction,
-            strict, dedup, numSlices)
-          case (_, "plain") => graft.operators.AsOfJoin.asOf(
-            m.data, right, keys, leftTime, rightTime, values, direction,
-            strict, dedup)
-          case (_, other) => throw new IllegalArgumentException(
-            s"stage $name: unknown algo `$other` (plain|sliced)")
-        }
+        if (direction == "nearest") {
+          require(!strict, s"stage $name: strict has no meaning for nearest")
+          graft.operators.AsOfJoin.asOfNearest(
+            m.data, right, keys, leftTime, rightTime, values, dedup)
+        } else graft.operators.AsOfJoin.asOf(
+          m.data, right, keys, leftTime, rightTime, values, direction,
+          strict, dedup)
       })
     }
 
     // trailing time-range aggregates: append rolling counts/sums over the
-    // last `range` time units per key (algo sliced = hot-key-hardened grid)
+    // last `range` time units per key
     PipelineConfig.register("rolling_agg") { (name, cfg) =>
       val keys = cfg.getList("keys").collect { case Cfg.S(s) => s }
       require(keys.nonEmpty, s"stage $name: `keys` list is required")
@@ -447,7 +431,6 @@ object OpStages {
       val countAs = cfg.getStr("count_as")
       val sumCol = cfg.getStr("sum_col")
       val sumAs = cfg.getStr("sum_as").getOrElse(sumCol.map(_ + "_sum").orNull)
-      val algo = cfg.getStr("algo").getOrElse("plain")
       val aggs =
         countAs.map(n => n -> org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1))).toSeq ++
@@ -455,14 +438,8 @@ object OpStages {
           org.apache.spark.sql.functions.col(c))).toSeq
       require(aggs.nonEmpty,
         s"stage $name: at least one of `count_as` / `sum_col` is required")
-      Pipeline.DataStage(name, m => algo match {
-        case "plain" => graft.operators.RollingAgg.trailing(
-          m.data, keys, timeCol, range, aggs)
-        case "sliced" => graft.operators.RollingAgg.trailingSliced(
-          m.data, keys, timeCol, range, aggs)
-        case other => throw new IllegalArgumentException(
-          s"stage $name: unknown algo `$other` (plain|sliced)")
-      })
+      Pipeline.DataStage(name, m => graft.operators.RollingAgg.trailing(
+        m.data, keys, timeCol, range, aggs))
     }
 
     // range (interval) containment join: all rows of the parquet interval

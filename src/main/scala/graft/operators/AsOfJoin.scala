@@ -51,144 +51,6 @@ object AsOfJoin {
       left, valueCols, leftSide, "__carry")
   }
 
-  /** Hot-key-hardened as-of join: identical semantics to [[asOf]], but the
-    * per-key carry runs over (key, TIME-SLICE) partitions so a pathological
-    * key holding most of the corpus parallelizes across `numSlices` tasks
-    * instead of serializing one window sort (the documented residual of the
-    * plain carry; same grid trick as [[RangeJoin]]).
-    *
-    * Shape: both sides map through a MONOTONE global time grid (slice =
-    * clamped floor((t−min)/width); monotonicity is the whole correctness
-    * argument — any right row in an earlier slice is strictly earlier than
-    * every left row in this slice, any right row in a later slice strictly
-    * later, and equal times always share a slice where the side ordering
-    * applies the tie rule exactly as in [[asOf]]). Within-slice carry is the
-    * usual running `last`; the cross-slice boundary patch is a per-(key,
-    * slice) DIGEST — the slice's last right payload via `max_by`/`min_by` —
-    * running-carried per key over slice order (≤ numSlices rows per key,
-    * metadata-sized) and joined back on (key, slice). The digest's
-    * aggregation shuffles on the same (key, slice) hash as the window, so
-    * the exchange is reused, and the join's left side arrives already
-    * partitioned — the big data still shuffles ONCE.
-    *
-    * The grid degenerates gracefully: all-equal times collapse to one slice
-    * (= plain [[asOf]]); numSlices = 1 IS plain [[asOf]] modulo plan shape.
-    */
-  def asOfSliced(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      leftTime: String, rightTime: String, valueCols: Seq[String],
-      direction: String = "backward", strict: Boolean = false,
-      dedupRight: Option[String] = None, numSlices: Int = 64): DataFrame = {
-    require(numSlices >= 1, s"asOfSliced: numSlices must be >= 1, got $numSlices")
-    val (uRaw, leftSide, ord) = unionStream(left, right, keyCols, leftTime,
-      rightTime, valueCols, direction, strict, dedupRight)
-    // Keys fold into ONE non-null struct for every keyed step below. The
-    // digest patch is an equi-JOIN, and a join on raw key columns drops
-    // null-key rows (SQL equality; plain asOf's window partitionBy keeps
-    // them as a group) — struct equality compares null FIELDS as equal
-    // while the struct itself is never null, so null-key groups survive
-    // with window semantics, and window/aggregate/join all hash the same
-    // struct column, preserving the one-shuffle ReusedExchange shape.
-    val u0 = uRaw.withColumn("__gk", struct(keyCols.map(col): _*))
-      .drop(keyCols: _*)
-    val axis = numericAxis(u0.schema("__t").dataType, "asOfSliced")
-
-    // global grid bounds: from parquet FOOTER stats when both inputs are
-    // plain scans of numeric time columns (zero jobs — graft.plans
-    // .ParquetStats; bounds only need to COVER the data, and the slice
-    // expression clamps, so pre-filter footer bounds are safe), else one
-    // metadata-sized agg over the union (2 doubles to the driver). The
-    // numeric axis is ONLY used to place rows on the grid — orderings
-    // still compare native values — so double rounding cannot break
-    // correctness, just slice balance.
-    val numericTimes =
-      left.schema(leftTime).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] &&
-      right.schema(rightTime).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-    val footer: Option[Option[(Double, Double)]] =
-      if (!numericTimes) None
-      else for {
-        lb <- graft.plans.ParquetStats.columnBounds(left, leftTime)
-        rb <- graft.plans.ParquetStats.columnBounds(right, rightTime)
-      } yield (lb, rb) match {
-        case (Some((a, b)), Some((c, d))) => Some((math.min(a, c), math.max(b, d)))
-        case (x @ Some(_), None) => x
-        case (None, y) => y
-      }
-    val bounds: Option[(Double, Double)] = footer.getOrElse {
-      val b = u0.agg(min(axis(col("__t")).cast("double")),
-        max(axis(col("__t")).cast("double"))).head()
-      if (b.isNullAt(0)) None else Some((b.getDouble(0), b.getDouble(1)))
-    }
-    if (bounds.isEmpty)
-      return finish( // no timed row on either side: every payload is null
-        u0.withColumn("__carry", lit(null).cast(u0.schema("__rv").dataType)),
-        left, valueCols, leftSide, "__carry")
-    val Some((lo, hi)) = bounds
-    val width = math.max((hi - lo) / numSlices,
-      java.lang.Double.MIN_NORMAL)
-    // monotone, total: floor((t-lo)/width) clamped into [0, numSlices-1];
-    // null times park on sentinel slice -1 (right nulls are pre-filtered,
-    // left nulls are forced to null payloads in the final projection). The
-    // null branch must be an explicit `when`: Spark's `least` IGNORES null
-    // arguments (returns the smallest non-null), so `coalesce(least(floor(
-    // null), N-1), -1)` silently lands null times in the TOP slice — where
-    // forward's nulls-first desc ordering makes them the digest pick and
-    // nulls the whole cross-slice carry (caught by the randomized spec).
-    val u = u0.withColumn("__slice",
-      when(col("__t").isNull, lit(-1L)).otherwise(
-        least(floor((axis(col("__t")).cast("double") - lit(lo)) / lit(width)),
-          lit((numSlices - 1).toLong))))
-
-    val wIn = Window.partitionBy(col("__gk"), col("__slice"))
-      .orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = u.withColumn("__carry",
-      last(col("__rv"), ignoreNulls = true).over(wIn))
-
-    // per-slice digest: the payload a NEXT slice would inherit — the
-    // within-slice carry AT THE SLICE'S LAST ROW in window order (equal to
-    // the last right payload of the slice, or null for a right-less slice:
-    // rows at the same (t, side) share a carry value, so the tie pick is
-    // immaterial). Expressed as max_by/min_by OVER THE CARRY COLUMN rather
-    // than re-deriving from __rv so the digest branch consumes the window's
-    // output: its aggregation then groups data already hash-partitioned on
-    // (key, slice) — no exchange of its own — and the whole branch resolves
-    // to a ReusedExchange of the union's one shuffle. (Aggregating __rv
-    // from u instead lets column pruning drop the Window, and the agg's
-    // map-side combine canonicalizes its exchange differently from the
-    // window's row exchange — forcing a second scan of the left input;
-    // PlanSpec pins the reused shape.)
-    val sliceLast = (if (direction == "backward")
-        max_by(col("__carry"), struct(col("__t"), col("__side")))
-      else // desc time order: last row = min t, tie → larger side
-        min_by(col("__carry"), struct(col("__t"), negate(col("__side")))))
-      .as("__sl")
-    val sliceOrd =
-      if (direction == "backward") col("__slice").asc else col("__slice").desc
-    val wCarry = Window.partitionBy(col("__gk")).orderBy(sliceOrd)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // `count(__lrow) >= 0` is a semantic no-op whose one job is to REFERENCE
-    // __lrow from the digest branch: without it, column pruning drops the
-    // left-row struct from this copy of the union, its exchange payload
-    // diverges canonically from the window's, ReuseExchange cannot fire,
-    // and the left input gets re-scanned (the tfIdf `tf > 0` lesson)
-    val carryIn = carried
-      .groupBy(col("__gk"), col("__slice"))
-      .agg(sliceLast, count(col("__lrow")).as("__keep"))
-      .where(col("__keep") >= 0)
-      .withColumn("__ci", last(col("__sl"), ignoreNulls = true).over(wCarry))
-      .select(col("__gk"), col("__slice"), col("__ci"))
-
-    // inner join is total: every (key, slice) of `carried` exists in the
-    // digest by construction (both derive from the same union). SHUFFLED
-    // HASH, not sort-merge: the digest side is (key, slice)-cardinality —
-    // small per partition — while SMJ would re-sort the BIG carried side by
-    // (gk, slice) right after the window already sorted it by (t, side)
-    val patched = carried.join(carryIn.hint("shuffle_hash"),
-      Seq("__gk", "__slice"))
-      .withColumn("__cc", coalesce(col("__carry"), col("__ci")))
-    finish(patched, left, valueCols, leftSide, "__cc")
-  }
-
   /** Nearest as-of join (the Polars `join_asof(strategy="nearest")` /
     * pandas `merge_asof(direction="nearest")` surface): attach the right
     * row minimizing |rightTime − leftTime| within the key group;
@@ -241,7 +103,7 @@ object AsOfJoin {
       .withColumn("__cb", last(col("__rv"), ignoreNulls = true).over(wB))
       .withColumn("__cf", last(col("__rv"), ignoreNulls = true).over(wF))
 
-    val axis = numericAxis(u.schema("__t").dataType, "asOfNearest")
+    val axis = numericAxis(u.schema("__t").dataType)
     val dBack = axis(col("__t")) - axis(col("__cb.__rt"))
     val dFwd = axis(col("__cf.__rt")) - axis(col("__t"))
     // backward wins ties (<=); a missing side loses automatically
@@ -294,26 +156,25 @@ object AsOfJoin {
     (r.unionByName(l), leftSide, ord)
   }
 
-  /** Map a time column onto a numeric axis for grid placement / distance
-    * arithmetic. Restricted to types with a faithful numeric image —
-    * timestamps (micros), dates (days), numerics — and REJECTS everything
-    * else up front: a string time column casts to double as null, which
-    * would silently turn every sliced payload null (the grid bounds read
-    * as empty) or make the nearest chooser always pick forward (null
-    * distances), instead of failing loudly. Plain [[asOf]] needs only an
-    * ordering and keeps working on such types.
+  /** Map a time column onto a numeric axis for distance arithmetic.
+    * Restricted to types with a faithful numeric image — timestamps
+    * (micros), dates (days), numerics — and REJECTS everything else up
+    * front: a string time column casts to double as null, which would make
+    * the nearest chooser always pick forward (null distances) instead of
+    * failing loudly. Plain [[asOf]] needs only an ordering and keeps
+    * working on such types.
     */
-  private def numericAxis(dt: org.apache.spark.sql.types.DataType,
-      op: String): Column => Column = dt match {
+  private def numericAxis(
+      dt: org.apache.spark.sql.types.DataType): Column => Column = dt match {
     case _: org.apache.spark.sql.types.TimestampType => c => unix_micros(c)
     case _: org.apache.spark.sql.types.TimestampNTZType =>
       c => unix_micros(c.cast("timestamp"))
     case _: org.apache.spark.sql.types.DateType => c => datediff(c, lit("1970-01-01"))
     case _: org.apache.spark.sql.types.NumericType => c => c
     case other => throw new IllegalArgumentException(
-      s"$op: time column type $other has no numeric axis (grid placement/" +
-        "distance needs timestamps, dates, or numerics) — use asOf, which " +
-        "only requires an ordering")
+      s"asOfNearest: time column type $other has no numeric axis (distance needs " +
+        "timestamps, dates, or numerics) — use asOf, which only requires " +
+        "an ordering")
   }
 
   /** Null-time right rows filtered; optionally one deterministic winner per

@@ -1,34 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-
-/** Driver-side column bounds from parquet FOOTER statistics — the zero-job
-  * seed for the sliced temporal operators' time grids (VERDICT r9 #7): when
-  * the input is a plain scan whose time column passes through untransformed,
-  * the footers already hold per-row-group min/max and the 2-double
-  * bounds agg job can be skipped. Grid bounds only need to COVER the data
-  * (the slice expression clamps into the grid; over-wide bounds cost slice
-  * balance, never correctness), so bounds from pre-filter footers are safe
-  * under pushed filters.
-  *
-  * Returns (three-state):
-  *  - `None`               — unknown (not a plain parquet scan, column
-  *                           transformed, too many files, a chunk without
-  *                           stats): caller falls back to the agg job
-  *  - `Some(None)`         — known empty: every row group proves the column
-  *                           all-null (or there are no rows)
-  *  - `Some(Some((lo, hi)))` — covering bounds
+/** Row counts read from parquet FOOTER metadata
+  * ([[rowCount]]), with no Spark job.
   */
 object ParquetStats {
-
-  /** More files than this and a distributed agg beats serial driver-side
-    * footer reads — the 100 TB case falls back by design.
-    */
-  val MaxFooterFiles = 64
 
   /** Exact row count of a parquet file/dir from footer metadata — zero
     * Spark jobs (the runner's post-write count otherwise pays a full
@@ -90,107 +65,5 @@ object ParquetStats {
       }
       Some(n)
     } catch { case _: Exception => None }
-  }
-
-  def columnBounds(df: DataFrame, colName: String): Option[Option[(Double, Double)]] = {
-    val plan = df.queryExecution.optimizedPlan
-    for {
-      attr <- plan.output.find(_.name == colName)
-      bounds <- resolve(df, plan, attr)
-    } yield bounds
-  }
-
-  /** Follow the attribute through pass-through nodes to a parquet relation.
-    * Any node that could drop rows is fine (bounds stay covering); any node
-    * that could ADD rows or change values (joins, unions, generators,
-    * aggregates, windows) stops the walk — unknown.
-    */
-  /** Spark types whose parquet footer min/max are the column's VALUES.
-    * DecimalType is excluded deliberately: an INT32/INT64-backed decimal's
-    * footer statistics are UNSCALED integers — reading them as values
-    * yields non-covering bounds (lo far above the true minimum), the one
-    * failure mode the covering-bounds argument cannot absorb.
-    */
-  private def faithfulFooterType(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.FloatType |
-           org.apache.spark.sql.types.DoubleType => true
-      case _ => false
-    }
-
-  private def resolve(df: DataFrame, plan: LogicalPlan,
-      attr: Attribute): Option[Option[(Double, Double)]] = if (
-      !faithfulFooterType(attr.dataType)) None else plan match {
-    case p: Project =>
-      p.projectList.find(_.exprId == attr.exprId).flatMap {
-        case ar: AttributeReference => resolve(df, p.child, ar)
-        case Alias(child: AttributeReference, _) => resolve(df, p.child, child)
-        case _ => None // computed column: footer stats don't apply
-      }
-    case f: Filter => resolve(df, f.child, attr)
-    case s: SubqueryAlias => resolve(df, s.child, attr)
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-        footerBounds(df, fs, attr.name)
-      case _ => None
-    }
-    case _ => None
-  }
-
-  private def footerBounds(df: DataFrame, fs: HadoopFsRelation,
-      column: String): Option[Option[(Double, Double)]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.column.statistics._
-    import scala.jdk.CollectionConverters._
-    val files = fs.location.inputFiles
-    if (files.length > MaxFooterFiles) return None
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    var lo = Double.PositiveInfinity
-    var hi = Double.NegativeInfinity
-    var any = false
-    var unknown = false
-    try {
-      files.iterator.takeWhile(_ => !unknown).foreach { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
-        try {
-          reader.getFooter.getBlocks.asScala
-            .iterator.takeWhile(_ => !unknown).foreach { block =>
-              block.getColumns.asScala.find(_.getPath.toDotString == column) match {
-                case None => unknown = true // column not top-level in this file
-                case Some(cc) =>
-                  val stats = cc.getStatistics
-                  if (stats == null) unknown = true // no stats written
-                  else if (stats.hasNonNullValue) stats match {
-                    case s: LongStatistics =>
-                      lo = math.min(lo, s.getMin.toDouble)
-                      hi = math.max(hi, s.getMax.toDouble); any = true
-                    case s: IntStatistics =>
-                      lo = math.min(lo, s.getMin.toDouble)
-                      hi = math.max(hi, s.getMax.toDouble); any = true
-                    case s: DoubleStatistics =>
-                      lo = math.min(lo, s.getMin)
-                      hi = math.max(hi, s.getMax); any = true
-                    case s: FloatStatistics =>
-                      lo = math.min(lo, s.getMin.toDouble)
-                      hi = math.max(hi, s.getMax.toDouble); any = true
-                    case _ => unknown = true // non-numeric physical type
-                  } else if (!stats.isNumNullsSet ||
-                      stats.getNumNulls != block.getRowCount) {
-                    // no min/max, cannot prove the chunk all-null: unknown
-                    unknown = true
-                  }
-              }
-            }
-        } finally reader.close()
-      }
-      if (unknown) None
-      else Some(if (any) Some((lo, hi)) else None)
-    } catch { case _: Exception => None } // unreadable footer: fall back
   }
 }

@@ -82,41 +82,6 @@ class AsOfJoinSpec extends SparkSpec {
     assert(collectSet(a) === collectSet(b))
   }
 
-  test("asOfSliced equals asOf on the crafted timelines, every config and slice count") {
-    for (direction <- Seq("backward", "forward"); strict <- Seq(false, true);
-         n <- Seq(1, 3, 64)) {
-      val plain = AsOfJoin.asOf(queries, readings, Seq("user_id"),
-        "qt", "rt", Seq("rt", "reading"), direction, strict)
-      val sliced = AsOfJoin.asOfSliced(queries, readings, Seq("user_id"),
-        "qt", "rt", Seq("rt", "reading"), direction, strict, numSlices = n)
-      assert(collectSet(sliced) === collectSet(plain),
-        s"direction=$direction strict=$strict numSlices=$n")
-    }
-  }
-
-  test("asOfSliced equals asOf on randomized timelines (nulls, cross-key time clashes)") {
-    val rng = new scala.util.Random(7)
-    // heavy tie density: times drawn from a small range so equal (key, t)
-    // collisions, cross-slice boundaries, and left-only slices all occur
-    val l = (0L until 2000L).map { i =>
-      val t = if (rng.nextInt(20) == 0) null
-        else java.lang.Long.valueOf(rng.nextInt(200).toLong)
-      (i, rng.nextInt(5).toLong, t)
-    }.toDF("qid", "user_id", "qt")
-    val r = (0L until 600L).map { i =>
-      (i % 6, rng.nextInt(200).toLong, s"v$i")
-    }.toDF("user_id", "rt", "v")
-    for (direction <- Seq("backward", "forward"); strict <- Seq(false, true)) {
-      val plain = AsOfJoin.asOf(l, r, Seq("user_id"), "qt", "rt",
-        Seq("rt", "v"), direction, strict, dedupRight = Some("v"))
-      val sliced = AsOfJoin.asOfSliced(l, r, Seq("user_id"), "qt", "rt",
-        Seq("rt", "v"), direction, strict, dedupRight = Some("v"),
-        numSlices = 16)
-      assert(collectSet(sliced) === collectSet(plain),
-        s"direction=$direction strict=$strict")
-    }
-  }
-
   test("nearest: closest right row either direction, backward wins ties") {
     // readings at 10/20/30 for user 1
     val got = AsOfJoin.asOfNearest(queries, readings, Seq("user_id"),
@@ -168,46 +133,24 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("sliced/nearest reject time types with no numeric axis; plain asOf accepts them") {
+  test("nearest rejects time types with no numeric axis; plain asOf accepts them") {
     // string times order lexically — fine for the ordering-only plain carry,
-    // but a silent cast-to-double null would wreck the grid/distance paths
+    // but a silent cast-to-double null would wreck the distance comparison
     val l = Seq((1L, 1L, "2024-06-01")).toDF("qid", "user_id", "qt")
     val r = Seq((1L, "2024-05-31", "a"), (1L, "2024-12-01", "b"))
       .toDF("user_id", "rt", "v")
     val plain = AsOfJoin.asOf(l, r, Seq("user_id"), "qt", "rt", Seq("v"))
     assert(plain.head().getAs[String]("v") == "a")
-    val e1 = intercept[IllegalArgumentException] {
-      AsOfJoin.asOfSliced(l, r, Seq("user_id"), "qt", "rt", Seq("v"))
-    }
-    assert(e1.getMessage.contains("numeric axis"))
-    val e2 = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       AsOfJoin.asOfNearest(l, r, Seq("user_id"), "qt", "rt", Seq("v"))
     }
-    assert(e2.getMessage.contains("numeric axis"))
+    assert(e.getMessage.contains("numeric axis"))
   }
 
-  test("asOfSliced degenerates safely: all-null times, all-equal times") {
-    val lNull = Seq((1L, 1L, null.asInstanceOf[java.lang.Long]))
-      .toDF("qid", "user_id", "qt")
-    val rEmpty = Seq.empty[(Long, Long, String)].toDF("user_id", "rt", "v")
-    val gotNull = AsOfJoin.asOfSliced(lNull, rEmpty, Seq("user_id"),
-      "qt", "rt", Seq("v")).collect()
-    assert(gotNull.length == 1 && gotNull.head.isNullAt(2))
-    val lEq = (0L until 50L).map(i => (i, 1L, 42L)).toDF("qid", "user_id", "qt")
-    val rEq = Seq((1L, 42L, "x")).toDF("user_id", "rt", "v")
-    val inclusive = AsOfJoin.asOfSliced(lEq, rEq, Seq("user_id"),
-      "qt", "rt", Seq("v"), numSlices = 8)
-    assert(inclusive.filter(col("v") === "x").count() == 50)
-    val strictRun = AsOfJoin.asOfSliced(lEq, rEq, Seq("user_id"),
-      "qt", "rt", Seq("v"), strict = true, numSlices = 8)
-    assert(strictRun.filter(col("v").isNotNull).count() == 0)
-  }
-
-  test("null keys form a group in every variant (sliced digest join must not drop them)") {
+  test("null keys form a group in plain and nearest as-of joins") {
     // window partitionBy groups nulls together, so a null-key left matches
-    // null-key rights; the r9 sliced digest patch joined on raw key columns
-    // (SQL equality) and silently DROPPED these rows — keys now fold into a
-    // struct whose null fields compare equal
+    // null-key rights (SQL equality in a join on the raw key columns would
+    // drop these rows)
     val l = Seq((1L, null.asInstanceOf[java.lang.Long], 25L),
       (2L, java.lang.Long.valueOf(1L), 25L),
       (3L, null.asInstanceOf[java.lang.Long], 5L))
@@ -215,17 +158,11 @@ class AsOfJoinSpec extends SparkSpec {
     val r = Seq((null.asInstanceOf[java.lang.Long], 10L, "null_r"),
       (java.lang.Long.valueOf(1L), 20L, "one_r"))
       .toDF("user_id", "rt", "v")
-    for (n <- Seq(1, 4)) {
-      val sliced = AsOfJoin.asOfSliced(l, r, Seq("user_id"), "qt", "rt",
-        Seq("v"), numSlices = n)
-      val m = sliced.collect().map(row =>
+    val m = AsOfJoin.asOf(l, r, Seq("user_id"), "qt", "rt", Seq("v"))
+      .collect().map(row =>
         row.getAs[Long]("qid") -> Option(row.getAs[String]("v"))).toMap
-      assert(m.size == 3, s"numSlices=$n dropped rows: $m")
-      assert(m(1L) === Some("null_r") && m(2L) === Some("one_r") &&
-        m(3L) === None, s"numSlices=$n")
-      assert(collectSet(sliced) === collectSet(
-        AsOfJoin.asOf(l, r, Seq("user_id"), "qt", "rt", Seq("v"))))
-    }
+    assert(m.size == 3, s"dropped rows: $m")
+    assert(m(1L) === Some("null_r") && m(2L) === Some("one_r") && m(3L) === None)
     val near = AsOfJoin.asOfNearest(l, r, Seq("user_id"), "qt", "rt", Seq("v"))
       .collect().map(row =>
         row.getAs[Long]("qid") -> Option(row.getAs[String]("v"))).toMap

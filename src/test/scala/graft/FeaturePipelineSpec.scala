@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   */
 class FeaturePipelineSpec extends SparkSpec {
 
-  test("feature_pipeline YAML through Main equals direct asOfSliced + trailingSliced") {
+  test("feature_pipeline YAML through Main equals direct asOf + trailing") {
     import spark.implicits._
     val rng = new scala.util.Random(17)
     val clicks = (0L until 400L).map(i =>
@@ -30,10 +30,10 @@ class FeaturePipelineSpec extends SparkSpec {
     val got = graft.meds.MedsIO.read(spark, s"$tmp/out").data
       .select("event_id", "user_id", "t", "view_ts_us", "view_event_id", "n_1h")
 
-    val direct = graft.operators.RollingAgg.trailingSliced(
-      graft.operators.AsOfJoin.asOfSliced(clicks, views, Seq("user_id"),
+    val direct = graft.operators.RollingAgg.trailing(
+      graft.operators.AsOfJoin.asOf(clicks, views, Seq("user_id"),
         "t", "view_ts_us", Seq("view_ts_us", "view_event_id"),
-        dedupRight = Some("view_event_id"), numSlices = 8),
+        dedupRight = Some("view_event_id")),
       Seq("user_id"), "t", 3600000000L, Seq("n_1h" -> count(lit(1))))
       .select("event_id", "user_id", "t", "view_ts_us", "view_event_id", "n_1h")
     assert(collectSet(got) === collectSet(direct))

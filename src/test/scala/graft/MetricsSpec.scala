@@ -58,7 +58,7 @@ class MetricsSpec extends SparkSpec {
   private val bounds: Seq[(String, Long)] = Seq(
     "analysis_pipeline" -> 15_000_000L,       // measured 5.72 MB (r10)
     "curation_pipeline" -> 1_000_000L,        // measured 0.33 MB
-    "feature_pipeline" -> 8_000_000L,         // measured 3.16 MB (r10 end)
+    "feature_pipeline" -> 8_000_000L,         // measured 2.23 MB (plain asOf + trailing)
     "ngram_jaccard" -> 30_000_000L,           // measured 11.43 MB
     "tf_idf" -> 10_000_000L,                  // measured 4.02 MB
     "minhash_lsh_dedup_stage" -> 2_000_000L,  // measured 0.81 MB
@@ -66,8 +66,6 @@ class MetricsSpec extends SparkSpec {
     "cluster_reps" -> 64_000L,                // measured 17.7 KB
     "semdedup" -> 32_000L,                    // measured 5.7 KB
     "zorder_values" -> 20_000_000L,           // measured 8.06 MB
-    "asof_join_sliced" -> 6_000_000L,         // measured 2.60 MB (r10 end)
-    "rolling_agg_sliced" -> 12_000_000L,      // measured 4.91 MB
     "lm_perplexity" -> 500_000L,              // measured 183 KB (r11, in-row grams)
     "ppl_buckets" -> 450_000L,                // measured 172 KB (r11, in-row grams)
     "pq_codes" -> 450_000L,                   // measured 170 KB (train partials + output sort)

@@ -457,7 +457,7 @@ class OpStagesSpec extends SparkSpec {
     assert(counts.length == 5 && counts.forall(_ == 2L))
   }
 
-  test("asof_join stage: plain/sliced/nearest directions reach the right operator") {
+  test("asof_join stage: backward and nearest directions reach the right operator") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("asof_right").toString
     Seq((1L, 10L, "r10"), (1L, 20L, "r20"), (2L, 15L, "x15"))
@@ -480,32 +480,29 @@ class OpStagesSpec extends SparkSpec {
     val backward = run("")
     assert(backward == Map(101L -> Some("r10"), 102L -> Some("r10"),
       103L -> None))
-    val sliced = run("      algo: sliced\n      num_slices: 4\n")
-    assert(sliced == backward)
     val nearest = run("      direction: nearest\n")
     // qt=19 is nearer to r20 (d=1) than r10 (d=9); qt=5 now matches forward
     assert(nearest == Map(101L -> Some("r10"), 102L -> Some("r20"),
       103L -> Some("x15")))
   }
 
-  test("rolling_agg stage: plain and sliced append identical trailing aggregates") {
+  test("rolling_agg stage appends the trailing aggregates of the library call") {
     import spark.implicits._
     val data = (0L until 500L).map(i => (i, i % 3, (i * 7) % 97, i.toDouble))
       .toDF("id", "k", "t", "v")
-    def run(algo: String) = Pipeline.run(spark, emptyMeds(data),
+    val out = Pipeline.run(spark, emptyMeds(data),
       PipelineConfig.fromYaml(
-        s"""stages:
-           |  - rolling_agg:
-           |      keys: [k]
-           |      time_col: t
-           |      range: 10
-           |      count_as: n_10
-           |      sum_col: v
-           |      algo: $algo
-           |""".stripMargin).stages).data
-    val plain = run("plain")
-    assert(plain.columns.contains("n_10") && plain.columns.contains("v_sum"))
-    assert(collectSet(run("sliced")) === collectSet(plain))
+        """stages:
+          |  - rolling_agg:
+          |      keys: [k]
+          |      time_col: t
+          |      range: 10
+          |      count_as: n_10
+          |      sum_col: v
+          |""".stripMargin).stages).data
+    assert(out.columns.contains("n_10") && out.columns.contains("v_sum"))
+    assert(collectSet(out) === collectSet(graft.operators.RollingAgg.trailing(
+      data, Seq("k"), "t", 10L, Seq("n_10" -> count(lit(1)), "v_sum" -> sum(col("v"))))))
   }
 
   test("winnow_fingerprint appends the sketch column; short docs get null") {

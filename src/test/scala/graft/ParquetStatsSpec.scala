@@ -1,55 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.plans.ParquetStats
 
-/** Footer-stats bounds: the zero-job grid seed must be covering (or
-  * honestly unknown) in every shape the sliced operators feed it.
+/** Footer row counts: exact for committed data, None where a distributed
+  * count must decide.
   */
 class ParquetStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_pqstats_$name").toString
-
-  test("plain scan: exact bounds; projections/filters pass through; renames follow") {
-    val dir = tmp("plain")
-    Seq((1L, -7L, 2.5), (2L, 100L, -3.0), (3L, 42L, 9.0))
-      .toDF("id", "t", "v").write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    assert(ParquetStats.columnBounds(df, "t") === Some(Some((-7.0, 100.0))))
-    assert(ParquetStats.columnBounds(df, "v") === Some(Some((-3.0, 9.0))))
-    // pass-through projection + filter: bounds still known (covering —
-    // pre-filter footers are wider than the filtered data, by design)
-    val proj = df.filter(col("id") > 1).select(col("t").as("time"), col("id"))
-    assert(ParquetStats.columnBounds(proj, "time") === Some(Some((-7.0, 100.0))))
-    // computed column: unknown
-    val comp = df.select((col("t") * 2).as("t2"))
-    assert(ParquetStats.columnBounds(comp, "t2") === None)
-  }
-
-  test("null handling: nulls ignored in bounds; all-null column is known-empty") {
-    val dir = tmp("nulls")
-    Seq((1L, Some(5L)), (2L, None), (3L, Some(-2L)))
-      .map { case (i, t) => (i, t.map(java.lang.Long.valueOf).orNull) }
-      .toDF("id", "t").write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    assert(ParquetStats.columnBounds(df, "t") === Some(Some((-2.0, 5.0))))
-    val dirAllNull = tmp("allnull")
-    Seq((1L, null.asInstanceOf[java.lang.Long]), (2L, null.asInstanceOf[java.lang.Long]))
-      .toDF("id", "t").write.mode("overwrite").parquet(dirAllNull)
-    assert(ParquetStats.columnBounds(spark.read.parquet(dirAllNull), "t")
-      === Some(None))
-  }
-
-  test("non-scan inputs are unknown (fallback to the agg job)") {
-    val mem = Seq((1L, 2L)).toDF("id", "t")
-    assert(ParquetStats.columnBounds(mem, "t") === None)
-    val dir = tmp("union")
-    Seq((1L, 2L)).toDF("id", "t").write.mode("overwrite").parquet(dir)
-    val u = spark.read.parquet(dir).unionByName(Seq((9L, 999L)).toDF("id", "t"))
-    assert(ParquetStats.columnBounds(u, "t") === None)
-  }
 
   test("rowCount: footer-exact counts; missing/empty paths and _temporary fall back") {
     val dir = tmp("rowcount")
@@ -83,29 +43,5 @@ class ParquetStatsSpec extends SparkSpec {
     Seq.tabulate(5)(i => (i.toLong, s"p$i")).toDF("id", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/part/_year=2020")
     assert(ParquetStats.rowCount(spark, s"$dir/part") === Some(5L))
-  }
-
-  test("asOfSliced over parquet inputs (footer-seeded grid) still equals asOf") {
-    val dir = tmp("asof")
-    val rng = new scala.util.Random(11)
-    (0L until 1200L).map { i =>
-      val t = if (rng.nextInt(20) == 0) null
-        else java.lang.Long.valueOf(rng.nextInt(500).toLong - 100)
-      (i, rng.nextInt(5).toLong, t)
-    }.toDF("qid", "k", "t").write.mode("overwrite").parquet(s"$dir/l")
-    (0L until 300L).map(i => (i % 6, rng.nextInt(500).toLong - 100, s"v$i"))
-      .toDF("k", "rt", "v").write.mode("overwrite").parquet(s"$dir/r")
-    val l = spark.read.parquet(s"$dir/l")
-    val r = spark.read.parquet(s"$dir/r")
-    // the footer path must actually be taken for this shape
-    assert(ParquetStats.columnBounds(l, "t").flatten.isDefined)
-    for (direction <- Seq("backward", "forward")) {
-      val plain = graft.operators.AsOfJoin.asOf(
-        l, r, Seq("k"), "t", "rt", Seq("rt", "v"), direction, dedupRight = Some("v"))
-      val sliced = graft.operators.AsOfJoin.asOfSliced(
-        l, r, Seq("k"), "t", "rt", Seq("rt", "v"), direction,
-        dedupRight = Some("v"), numSlices = 16)
-      assert(collectSet(sliced) === collectSet(plain), s"direction=$direction")
-    }
   }
 }

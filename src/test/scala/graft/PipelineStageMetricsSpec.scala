@@ -125,7 +125,7 @@ class PipelineStageMetricsSpec extends SparkSpec {
     val overrides = Queries.stageFeatureInputs(spark, dir, tmp)
     profile(Queries.FeatureYaml, overrides, MedsIO.read(spark, s"$tmp/in"),
       Seq( // measured at sf0.1 (r11), ~2.5x headroom
-        "enrich_view" -> 4_800_000L,       // measured 1.92 MB (asof sliced union)
-        "trailing_activity" -> 2_000_000L))// measured 0.78 MB (rolling grid window)
+        "enrich_view" -> 4_800_000L,       // measured 1.24 MB (asof union, one keyed shuffle)
+        "trailing_activity" -> 2_000_000L))// measured 0.51 MB (RANGE window, one keyed shuffle)
   }
 }

@@ -301,45 +301,6 @@ class PlanSpec extends SparkSpec {
     scans
   }
 
-  test("asOfSliced shuffles the big union ONCE: digest exchange is reused") {
-    // the sliced carry adds a per-(key,slice) digest and a join back; the
-    // union of both inputs must still shuffle once — the digest aggregation
-    // hashes on the same (key, slice) and must be served by ReuseExchange,
-    // and only digest-sized frames may take additional exchanges
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_asofslice").toString
-    (0L until 2000L).map(i => (i, i % 11, (i * 13) % 997))
-      .toDF("qid", "k", "t").write.mode("overwrite").parquet(s"$dir/l")
-    (0L until 500L).map(i => (i % 11, (i * 7) % 997, s"v$i"))
-      .toDF("k", "rt", "v").write.mode("overwrite").parquet(s"$dir/r")
-    val q = graft.operators.AsOfJoin.asOfSliced(
-      spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"),
-      Seq("k"), "t", "rt", Seq("rt", "v"), dedupRight = Some("v"),
-      numSlices = 8)
-    q.collect()
-    // 2 scans (left, right) each feeding ONE materialized union exchange;
-    // the digest branch's copies resolve to ReusedExchange, so the walk —
-    // which dedupes reused stages by identity — must see exactly 2
-    assert(distinctScans(q) === 2,
-      s"asOfSliced re-scanned an input:\n${q.queryExecution.executedPlan}")
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    var reused = 0
-    def walk(p: SparkPlan): Unit = {
-      if (!seen.add(p)) return
-      p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(qs.plan)
-        case re: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-          reused += 1; walk(re.child)
-        case other => other.children.foreach(walk)
-      }
-    }
-    walk(q.queryExecution.executedPlan)
-    assert(reused >= 1,
-      s"digest exchange not reused:\n${q.queryExecution.executedPlan}")
-  }
-
   test("self-trained LM and NB plans reuse the corpus aggregations (no per-branch re-scan)") {
     // Shared-frame consumers (model join / marginals / vocabulary) must be
     // served from ONE scan+exchange via AQE stage reuse. This breaks

@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.RollingAgg
 
-/** Trailing RANGE-frame aggregates: crafted frame arithmetic, plain ≡
-  * sliced equality on tie/null-dense randomized timelines across grid
-  * sizes (incl. boundary-straddling windows), and the degenerate shapes.
+/** Trailing RANGE-frame aggregates: crafted frame arithmetic, range 0
+  * peer groups, and the degenerate shapes.
   */
 class RollingAggSpec extends SparkSpec {
   import spark.implicits._
@@ -29,50 +28,34 @@ class RollingAggSpec extends SparkSpec {
     assert(got(5L) == (1L, 100.0)) // key isolation
   }
 
-  test("sliced equals plain on randomized tie/null-dense timelines") {
-    val rng = new scala.util.Random(21)
-    val df = (0L until 3000L).map { i =>
-      val t = if (rng.nextInt(25) == 0) null
-        else java.lang.Long.valueOf(rng.nextInt(300).toLong)
-      (i, rng.nextInt(4).toLong, t, rng.nextInt(50).toDouble)
-    }.toDF("id", "k", "t", "v")
-    val plain = RollingAgg.trailing(df, Seq("k"), "t", 17L, aggs)
-    val sliced = RollingAgg.trailingSliced(df, Seq("k"), "t", 17L, aggs)
-    assert(collectSet(sliced) === collectSet(plain))
-  }
-
-  test("one hot key holding 90% still matches plain (and range 0 = peers)") {
+  test("range 0 = peers: each row sees exactly its key's rows at its time") {
     val rng = new scala.util.Random(3)
-    val df = (0L until 2000L).map { i =>
+    val rows = (0L until 2000L).map { i =>
       (i, if (i % 10 == 0) rng.nextInt(50).toLong + 1 else 0L,
         rng.nextInt(100).toLong, 1.0)
-    }.toDF("id", "k", "t", "v")
-    val plain = RollingAgg.trailing(df, Seq("k"), "t", 9L, aggs)
-    val sliced = RollingAgg.trailingSliced(df, Seq("k"), "t", 9L, aggs)
-    assert(collectSet(sliced) === collectSet(plain))
-    val p0 = RollingAgg.trailing(df, Seq("k"), "t", 0L, aggs)
-    val s0 = RollingAgg.trailingSliced(df, Seq("k"), "t", 0L, aggs)
-    assert(collectSet(s0) === collectSet(p0))
+    }
+    val got = RollingAgg.trailing(rows.toDF("id", "k", "t", "v"), Seq("k"),
+      "t", 0L, aggs).select("id", "n").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val peers = rows.groupBy(r => (r._2, r._3)).map { case (g, rs) => g -> rs.size.toLong }
+    assert(got == rows.map(r => r._1 -> peers((r._2, r._3))).toMap)
   }
 
   test("degenerates: all-null times, single row, non-numeric time rejected") {
     val allNull = Seq((1L, 1L, null.asInstanceOf[java.lang.Long], 2.0),
       (2L, 1L, null.asInstanceOf[java.lang.Long], 3.0))
       .toDF("id", "k", "t", "v")
-    val gotNull = RollingAgg.trailingSliced(allNull, Seq("k"), "t", 5L, aggs)
+    val gotNull = RollingAgg.trailing(allNull, Seq("k"), "t", 5L, aggs)
       .select("id", "n", "s").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    // null times form one peer group: both rows see both (matches plain)
-    val wantNull = RollingAgg.trailing(allNull, Seq("k"), "t", 5L, aggs)
-      .select("id", "n", "s").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(gotNull == wantNull)
+    // null times form one peer group: both rows see both
+    assert(gotNull == Map(1L -> (2L, 5.0), 2L -> (2L, 5.0)))
     val one = Seq((1L, 1L, 7L, 2.0)).toDF("id", "k", "t", "v")
-    assert(RollingAgg.trailingSliced(one, Seq("k"), "t", 5L, aggs)
+    assert(RollingAgg.trailing(one, Seq("k"), "t", 5L, aggs)
       .select("n").head().getLong(0) == 1L)
     val strT = Seq((1L, 1L, "x", 2.0)).toDF("id", "k", "t", "v")
     val e = intercept[IllegalArgumentException] {
-      RollingAgg.trailingSliced(strT, Seq("k"), "t", 5L, aggs)
+      RollingAgg.trailing(strT, Seq("k"), "t", 5L, aggs)
     }
     assert(e.getMessage.contains("numeric"))
   }

@@ -19,7 +19,7 @@ object ScaleUpFeature {
     val iters = args(2).toInt
     val k = args(3).toInt
     val queries = if (args.length > 4) args.drop(4).toSeq
-      else Seq("asof_join_sliced", "rolling_agg_sliced", "feature_pipeline")
+      else Seq("asof_join", "rolling_agg", "feature_pipeline")
     val spark = LocalSession()
     LocalSession.warm(spark)
 

@@ -50,59 +50,6 @@ object TemporalJoinSmoke {
     println(f"[smoke] rangeJoin 10M pts x 1M intervals (hot key 10%%): $rjCnt matches in $tRange%.1f s")
     assert(rjCnt > 0)
 
-    // hot-key hardening (VERDICT r8 #2): ONE key holding 90% of 10M rows.
-    // The plain carry serializes that key's sort into one task; the sliced
-    // carry must stay within ~2x of a uniform-key run of the same size.
-    def skewed(n: Long, parts: Int, hotPct: Int) = spark.range(0, n, 1, parts)
-      .select(col("id"),
-        when(pmod(col("id"), lit(100)) < hotPct, 0L)
-          .otherwise(pmod(hash(col("id")), lit(100000)).cast("long")).as("k"),
-        pmod(hash(col("id") * 31), lit(1000000000)).cast("long").as("t"))
-      .filter(col("t") >= 0)
-    val lHot = skewed(10000000L, 64, 90)
-    val rHot = skewed(1000000L, 16, 90)
-      .select(col("k"), col("t").as("rt"), col("id").as("rid"))
-    val lUni = skewed(10000000L, 64, 0)
-    val rUni = skewed(1000000L, 16, 0)
-      .select(col("k"), col("t").as("rt"), col("id").as("rid"))
-
-    def runAsOf(l: org.apache.spark.sql.DataFrame,
-        r: org.apache.spark.sql.DataFrame, sliced: Boolean) = time {
-      (if (sliced)
-        AsOfJoin.asOfSliced(l, r, Seq("k"), "t", "rt", Seq("rid"),
-          dedupRight = Some("rid"), numSlices = 64)
-      else
-        AsOfJoin.asOf(l, r, Seq("k"), "t", "rt", Seq("rid"),
-          dedupRight = Some("rid")))
-        .filter(col("rid").isNotNull).count()
-    }
-    val ((cUniS, tUniS)) = runAsOf(lUni, rUni, sliced = true)
-    val ((cHotS, tHotS)) = runAsOf(lHot, rHot, sliced = true)
-    val ((cHotP, tHotP)) = runAsOf(lHot, rHot, sliced = false)
-    println(f"[smoke] asOfSliced uniform keys:        $cUniS matched in $tUniS%.1f s")
-    println(f"[smoke] asOfSliced ONE key holds 90%%:   $cHotS matched in $tHotS%.1f s")
-    println(f"[smoke] asOf plain ONE key holds 90%%:   $cHotP matched in $tHotP%.1f s")
-    assert(cHotS == cHotP, s"sliced/plain disagree on skew: $cHotS vs $cHotP"
-    )
-    assert(tHotS <= 2.5 * tUniS,
-      f"sliced hot-key run $tHotS%.1f s exceeds 2.5x uniform $tUniS%.1f s")
-
-    // same skew shape for the trailing RANGE window: one key with 90% of
-    // 10M rows, trailing 2000-unit aggregates
-    val rollAggs = Seq("n_2k" -> count(lit(1)))
-    def runRolling(d: org.apache.spark.sql.DataFrame, sliced: Boolean) = time {
-      (if (sliced) graft.operators.RollingAgg.trailingSliced(
-        d, Seq("k"), "t", 2000L, rollAggs)
-      else graft.operators.RollingAgg.trailing(d, Seq("k"), "t", 2000L, rollAggs))
-        .agg(sum("n_2k")).collect()(0).getLong(0)
-    }
-    val lHotR = skewed(10000000L, 64, 90)
-    val ((rHotP2, tRollP)) = runRolling(lHotR, sliced = false)
-    val ((rHotS2, tRollS)) = runRolling(lHotR, sliced = true)
-    println(f"[smoke] rolling plain  ONE key holds 90%%: checksum $rHotP2 in $tRollP%.1f s")
-    println(f"[smoke] rolling sliced ONE key holds 90%%: checksum $rHotS2 in $tRollS%.1f s")
-    assert(rHotP2 == rHotS2, s"rolling sliced/plain disagree: $rHotP2 vs $rHotS2")
-
     spark.stop()
   }
 }
