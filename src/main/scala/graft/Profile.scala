@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.mutable
 
@@ -12,13 +13,18 @@ import scala.collection.mutable
   * {{{
   * sbt "runMain graft.Profile <time|jobs|stages|plan|scan> <sfDir> \
   *   <gate,...|all> [iters] [spark.key=value ...]"
+  * sbt "runMain graft.Profile jobs --pipeline <pipeline.yaml> <medsRoot> \
+  *   [iters] [spark.key=value ...]"
   * }}}
   *
   *  - `time`: seconds of each of `iters` full materializations
   *    ([[Bench.force]]) and their min — the per-gate A/B loop.
   *  - `jobs`: after one warm run, each job's wall, the idle gap since the
-  *    previous job ended (driver planning and codegen), its description or
-  *    call site, then a totals line.
+  *    previous job ended (driver planning and codegen), its SQL execution
+  *    id with that execution's action (adaptive stage jobs carry only a
+  *    thread-pool call site of their own), its call site, then a totals
+  *    line. With `--pipeline` the profiled run is one `graft.Main` run of
+  *    the pipeline over the MEDS root, written into a temp root.
   *  - `stages`: after one warm run, each stage's task count, run and cpu
   *    time, shuffle write/read and spill, then the executed plan.
   *  - `plan`: the formatted physical explain of each gate's analyzed plan
@@ -34,29 +40,36 @@ import scala.collection.mutable
   */
 object Profile {
   private val usage = "usage: graft.Profile <time|jobs|stages|plan|scan> " +
-    "<sfDir> <gate,...|all> [iters] [spark.key=value ...]"
+    "<sfDir> <gate,...|all> [iters] [spark.key=value ...] | graft.Profile jobs " +
+    "--pipeline <pipeline.yaml> <medsRoot> [iters] [spark.key=value ...]"
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, usage)
-    val Array(mode, dir, gateArg) = args.take(3)
+    val Array(mode, target, arg) = args.take(3)
     val (confArgs, rest) = args.drop(3).toSeq.partition(_.contains("="))
-    val iters = rest.headOption.fold(1)(_.toInt)
-    val gates =
-      if (gateArg == "all") SparkEntry.queries.keys.toSeq.sorted
-      else gateArg.split(",").map(_.trim).toSeq
-    val profile: (SparkSession, String, String, Int) => Unit = mode match {
-      case "time" => time
-      case "jobs" => jobs
-      case "stages" => stages
-      case "plan" => (s, d, g, _) => plan(s, d, g)
-      case "scan" => (s, d, g, _) => scan(s, d, g)
-      case other => throw new IllegalArgumentException(s"unknown mode $other; $usage")
-    }
     val spark = LocalSession(conf = LocalSession.parseConf(confArgs))
     try {
-      if (mode != "plan") LocalSession.warm(spark)
-      gates.foreach(g => profile(spark, dir, g, iters))
-      if (mode == "scan") println("AUDIT done")
+      if (target == "--pipeline") {
+        require(mode == "jobs", s"--pipeline profiles jobs only; $usage")
+        require(rest.nonEmpty, usage)
+        pipelineJobs(spark, arg, rest.head, rest.lift(1).fold(1)(_.toInt))
+      } else {
+        val iters = rest.headOption.fold(1)(_.toInt)
+        val gates =
+          if (arg == "all") SparkEntry.queries.keys.toSeq.sorted
+          else arg.split(",").map(_.trim).toSeq
+        val profile: (SparkSession, String, String, Int) => Unit = mode match {
+          case "time" => time
+          case "jobs" => (s, d, g, n) => jobs(s, g, n)(Bench.force(gate(s, d, g)))
+          case "stages" => stages
+          case "plan" => (s, d, g, _) => plan(s, d, g)
+          case "scan" => (s, d, g, _) => scan(s, d, g)
+          case other => throw new IllegalArgumentException(s"unknown mode $other; $usage")
+        }
+        if (mode != "plan") LocalSession.warm(spark)
+        gates.foreach(g => profile(spark, target, g, iters))
+        if (mode == "scan") println("AUDIT done")
+      }
     } finally spark.stop()
   }
 
@@ -73,40 +86,65 @@ object Profile {
       times.map(t => f"$t%.2f").mkString(" "))
   }
 
-  /** Warm `name` once, then run it `iters` times with `listener` attached;
-    * the listener bus is drained before each `report(df, rows, wall)`. */
-  private def traced(spark: SparkSession, dir: String, name: String, iters: Int,
-      listener: SparkListener)(report: (DataFrame, Long, Double) => Unit): Unit = {
+  /** Run `body` once to warm, then `iters` times with `listener` attached;
+    * the listener bus is drained before each `report(result, wall)`. */
+  private def traced[A](spark: SparkSession, name: String, iters: Int,
+      listener: SparkListener)(body: => A)(report: (A, Double) => Unit): Unit = {
     val sc = spark.sparkContext
-    Bench.force(gate(spark, dir, name))
+    body
     println(s"=== timed run: $name")
     for (_ <- 1 to iters) {
       GraftListenerBridge.drain(sc) // the warm run's events are not this run's
       sc.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val df = gate(spark, dir, name)
-      val rows = Bench.force(df)
+      val res = body
       val wall = (System.nanoTime() - t0) / 1e9
       GraftListenerBridge.drain(sc)
       sc.removeSparkListener(listener)
-      report(df, rows, wall)
+      report(res, wall)
     }
   }
 
-  private def jobs(spark: SparkSession, dir: String, name: String, iters: Int): Unit = {
-    final case class Job(start: Long, label: String, var end: Long = 0L)
+  /** `jobs` over one `graft.Main` run per pass, each into a fresh dir under
+    * one temp root (removed afterwards). */
+  private def pipelineJobs(spark: SparkSession, config: String, medsRoot: String,
+      iters: Int): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft_profile").toFile
+    var pass = 0
+    try jobs(spark, config, iters) {
+      pass += 1
+      Main.run(Array(config, medsRoot, s"$root/pass_$pass"), spark)
+      -1L // rows: Main prints what it wrote
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
+  /** `body` materializes the profiled run once and returns its row count
+    * (negative when it has none). */
+  private def jobs(spark: SparkSession, name: String, iters: Int)(
+      body: => Long): Unit = {
+    final case class Job(start: Long, exec: Option[Long], callSite: String,
+        var end: Long = 0L)
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    // SQL execution id -> its action's call site (or job description)
+    val execs = mutable.HashMap.empty[Long, String]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val label = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        val props = Option(js.properties)
+        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .map(_.toLong)
+        val callSite = props.flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(js.stageInfos.lastOption.map(_.name).getOrElse(""))
-        jobs.synchronized { jobs(js.jobId) = Job(js.time, label) }
+        jobs.synchronized { jobs(js.jobId) = Job(js.time, exec, callSite) }
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         jobs.synchronized { jobs.get(je.jobId).foreach(_.end = je.time) }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          jobs.synchronized { execs(s.executionId) = s.description }
+        case _ =>
+      }
     }
-    traced(spark, dir, name, iters, listener) { (_, rows, wall) =>
+    traced(spark, name, iters, listener)(body) { (rows, wall) =>
       var prevEnd = 0L
       var sumWall = 0.0
       var sumGap = 0.0
@@ -115,11 +153,16 @@ object Profile {
         val gap = if (prevEnd == 0) 0.0 else math.max(0, j.start - prevEnd) / 1e3
         sumWall += w; sumGap += gap
         prevEnd = math.max(prevEnd, j.end)
-        println(f"[job] $id%-4d wall=$w%6.3fs gap=$gap%6.3fs  ${j.label.take(110)}")
+        val exec = j.exec.fold("exec=-")(e =>
+          s"exec=$e ${execs.getOrElse(e, "?")} |")
+        println(f"[job] $id%-4d wall=$w%6.3fs gap=$gap%6.3fs  " +
+          s"$exec ${j.callSite}".take(150))
       }
-      println(f"rows=$rows wall=$wall%.2f s  jobs=${jobs.size} " +
+      val rowsCell = if (rows >= 0) s"rows=$rows " else ""
+      println(f"${rowsCell}wall=$wall%.2f s  jobs=${jobs.size} " +
         f"sumJobWall=$sumWall%.2f sumGap=$sumGap%.2f")
       jobs.clear()
+      execs.clear()
     }
   }
 
@@ -138,7 +181,10 @@ object Profile {
           f"spillDisk=${m.diskBytesSpilled / 1e6}%8.1fMB  ${si.name}")
       }
     }
-    traced(spark, dir, name, iters, listener) { (df, rows, wall) =>
+    traced(spark, name, iters, listener) {
+      val df = gate(spark, dir, name)
+      (df, Bench.force(df))
+    } { case ((df, rows), wall) =>
       println(f"rows=$rows wall=$wall%.2f s")
       println("=== executed plan")
       println(df.queryExecution.executedPlan.toString.take(8000))

@@ -248,23 +248,36 @@ object GraftFunctions {
 
   /** Polars `shrink_dtype` analog (reducer.py:217, fit_vocabulary_indices
     * .py:195): cast integer columns to the narrowest integral type that holds
-    * their observed min/max. Requires one extra aggregation pass, so it is
-    * applied only to small reduced metadata outputs, never the event table.
+    * their observed min/max (an empty or all-null column becomes tinyint).
+    * Applied only to small reduced metadata outputs, never the event table.
+    *
+    * The input is materialized ONCE via an eager localCheckpoint, and the
+    * same job folds each column's min and max — see
+    * GraftSqlBridge.localCheckpointWithIntegralBounds — so the casts read
+    * the materialized blocks and every consumer of the returned frame (the
+    * outlier broadcast, the next fit's join, the vocabulary's checks and
+    * numbering, the final write) reads them too instead of re-running the
+    * aggregation behind them. localCheckpoint truncates lineage to the
+    * materialized blocks, and unlike an engine-internal cache the blocks are
+    * released by the ContextCleaner once the returned frame is
+    * garbage-collected — no session-lifetime leak (graft.Main frees them
+    * eagerly once the output root commits). Trade-off: localCheckpoint is not
+    * fault-tolerant to executor loss mid-query (Spark recomputes from
+    * nothing); acceptable for a deterministic batch operator that simply
+    * re-runs.
     */
   def shrinkIntColumns(df: DataFrame, columns: Seq[String]): DataFrame = {
     val present = columns.filter(df.columns.contains)
-    if (present.isEmpty) return df
-    val aggs = present.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    present.foldLeft(df) { (d, c) =>
-      val lo = Option(row.getAs[Any](s"min_$c")).map(_.toString.toLong).getOrElse(0L)
-      val hi = Option(row.getAs[Any](s"max_$c")).map(_.toString.toLong).getOrElse(0L)
+    val (checkpointed, bounds) =
+      org.apache.spark.sql.GraftSqlBridge.localCheckpointWithIntegralBounds(df, present)
+    checkpointed.withColumns(present.zip(bounds).map { case (c, b) =>
+      val (lo, hi) = b.getOrElse((0L, 0L))
       val t: DataType =
         if (lo >= Byte.MinValue && hi <= Byte.MaxValue) ByteType
         else if (lo >= Short.MinValue && hi <= Short.MaxValue) ShortType
         else if (lo >= Int.MinValue && hi <= Int.MaxValue) IntegerType
         else LongType
-      d.withColumn(c, col(c).cast(t))
-    }
+      c -> col(c).cast(t)
+    }.toMap)
   }
 }

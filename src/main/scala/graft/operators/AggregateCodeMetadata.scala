@@ -242,7 +242,13 @@ object AggregateCodeMetadata {
     newMeta.join(broadcast(oldMeta.drop(overlap.toSeq: _*)), joinCols, "left")
   }
 
-  /** Full stage: compute + merge + integer-width shrink (reducer.py:217). */
+  /** Full stage: compute + merge + integer-width shrink (reducer.py:217).
+    * Eager: the shrink materializes the merged codes table in one job
+    * (GraftFunctions.shrinkIntColumns), so the returned frame is backed by
+    * blocks computed exactly once — every consumer (an outlier broadcast,
+    * the next fit's join, the vocabulary fit, the final write) reads them
+    * rather than re-running the aggregation over the event table.
+    */
   def apply(
       data: DataFrame,
       codes: DataFrame,

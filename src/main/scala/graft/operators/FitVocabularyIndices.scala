@@ -18,6 +18,12 @@ import graft.functions.GraftFunctions
   * single-partition WindowExec even if the vocabulary grows to hundreds of
   * millions of keys. The reference's double-arg_sort trick (lines 188-195)
   * is just `row_number` over the sort.
+  *
+  * The returned frame is backed by blocks computed exactly once: the index
+  * width shrink (GraftFunctions.shrinkIntColumns) materializes the numbered
+  * table, so the final write and any later stage read those blocks instead
+  * of re-running the numbering. The row-number helper's own blocks are
+  * released as soon as that copy exists.
   */
 object FitVocabularyIndices {
 
@@ -38,6 +44,8 @@ object FitVocabularyIndices {
     }
     val indexed = GraftFunctions.withGlobalRowNumber(codes, VocabIndex,
       keys.map(k => col(k).asc_nulls_first))
-    GraftFunctions.shrinkIntColumns(indexed, Seq(VocabIndex))
+    val shrunk = GraftFunctions.shrinkIntColumns(indexed, Seq(VocabIndex))
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(indexed)
+    shrunk
   }
 }

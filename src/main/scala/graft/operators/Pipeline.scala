@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import graft.meds.{MedsData, MedsIO}
 import graft.meds.MedsSchema._
 import org.apache.spark.sql.functions._
@@ -21,15 +21,15 @@ object Pipeline {
 
   sealed trait Stage { def name: String }
   /** A data→data transformation (MAP stages). */
-  final case class DataStage(name: String, f: MedsData => org.apache.spark.sql.DataFrame) extends Stage
+  final case class DataStage(name: String, f: MedsData => DataFrame) extends Stage
   /** A (data, codes)→codes transformation (metadata/MAPREDUCE stages); sees
     * train-split data only, per the reference's forced `train_only=True`.
     */
-  final case class MetadataStage(name: String, f: MedsData => org.apache.spark.sql.DataFrame) extends Stage
+  final case class MetadataStage(name: String, f: MedsData => DataFrame) extends Stage
   /** A dataset→splits-table transformation (split generation/repair); the
     * result replaces `MedsData.splits` for every downstream stage.
     */
-  final case class SplitsStage(name: String, f: MedsData => org.apache.spark.sql.DataFrame) extends Stage
+  final case class SplitsStage(name: String, f: MedsData => DataFrame) extends Stage
 
   final case class Checkpoint(path: String)
 
@@ -43,10 +43,12 @@ object Pipeline {
     // fail FAST when NON-EMPTY data carries no split information at all: the
     // filter below would otherwise drop every row and each metadata stage
     // would silently write empty codes (the r1 silent-drop bug). A genuinely
-    // empty input stays the reference's zero-rows behavior. The probes only
-    // run when the splits table is empty — an unusual root — and pay one
-    // extra pass of the upstream lineage there; healthy roots skip them.
-    if (m.splits.isEmpty) {
+    // empty input stays the reference's zero-rows behavior. The splits-table
+    // emptiness check is one job per splits frame — the answer is remembered
+    // until a SplitsStage or a new MedsIO.read hands in another frame — and
+    // the data probes run only when that table is empty (an unusual root),
+    // paying one extra pass of the upstream lineage there.
+    if (splitsEmpty(m.splits)) {
       val hasPathSplit = m.data.columns.contains(Split) &&
         !m.data.filter(length(col(Split)) > 0).limit(1).isEmpty
       if (!hasPathSplit) require(m.data.limit(1).isEmpty,
@@ -69,6 +71,16 @@ object Pipeline {
       .drop("__table_split")
     m.withData(d)
   }
+
+  /** `splits.isEmpty`, remembered per splits frame (by identity; weak keys,
+    * so a dropped frame's entry goes with it). */
+  private val splitsEmptyMemo =
+    new java.util.WeakHashMap[DataFrame, java.lang.Boolean]()
+
+  private def splitsEmpty(splits: DataFrame): Boolean =
+    splitsEmptyMemo.synchronized {
+      splitsEmptyMemo.computeIfAbsent(splits, s => s.isEmpty)
+    }
 
   /** A checkpointed stage output is complete only when MedsIO.write's own
     * completion marker exists — committed AFTER the data job's `_SUCCESS`
@@ -96,13 +108,44 @@ object Pipeline {
       resume: Boolean = true,
       autoPersist: Boolean = true,
       initialDirty: Boolean = false): MedsData =
-    runTracked(spark, input, stages, checkpoints, resume, autoPersist,
-      initialDirty)._1
+    runHeld(spark, input, stages, checkpoints, resume, autoPersist,
+      initialDirty).out
 
   /** [[run]], additionally returning the DataFrames auto-persisted at
     * lineage fork points so the caller can `unpersist` them once the final
-    * output is written (graft.Main does) — repeated pipeline invocations on
-    * a shared session must not accumulate cache entries.
+    * output is written — repeated pipeline invocations on a shared session
+    * must not accumulate cache entries. [[runHeld]] also returns the
+    * metadata stages' checkpointed outputs; graft.Main uses that form.
+    */
+  def runTracked(
+      spark: SparkSession,
+      input: MedsData,
+      stages: Seq[Stage],
+      checkpoints: Map[String, String] = Map.empty,
+      resume: Boolean = true,
+      autoPersist: Boolean = true,
+      initialDirty: Boolean = false): (MedsData, Seq[DataFrame]) = {
+    val held = runHeld(spark, input, stages, checkpoints, resume, autoPersist,
+      initialDirty)
+    (held.out, held.persisted)
+  }
+
+  /** A run's output plus what it pinned in executor storage: the data
+    * frames auto-persisted at lineage forks (`persisted`) and each metadata
+    * stage's output (`codes` — AggregateCodeMetadata and
+    * FitVocabularyIndices return localCheckpoint-backed tables, see
+    * GraftFunctions.shrinkIntColumns). The output's lineage reads both, so
+    * [[release]] only once the output root is written.
+    */
+  final case class Held(out: MedsData, persisted: Seq[DataFrame],
+      codes: Seq[DataFrame]) {
+    def release(): Unit = {
+      persisted.foreach(_.unpersist(false))
+      codes.foreach(GraftSqlBridge.unpersistCheckpoint)
+    }
+  }
+
+  /** The tracked run behind [[run]] and [[runTracked]].
     *
     * AUTO-PERSIST (the checkpoint-placement guidance VERDICT r14 asked
     * for, made mechanical): Spark performs no common-subplan
@@ -116,30 +159,30 @@ object Pipeline {
     * caching a raw parquet scan would defeat column pruning and pin
     * untouched columns in memory for nothing. SCOPE: the fork detector
     * covers exactly that Metadata/Splits re-traversal; an eager driver job
-    * fired INSIDE a DataStage (shrink-dtype min/max, vocabulary collects)
-    * still re-executes its own dirty lineage — place an explicit
-    * checkpoint before such a stage if that matters. Pipelines running
-    * under a `checkpointRoot` re-read each stage from disk, so their
-    * lineage is never dirty at a fork and this is a no-op — explicit
-    * checkpoint placement always wins over the heuristic.
+    * fired INSIDE a DataStage (vocabulary collects) still re-executes its
+    * own dirty lineage — place an explicit checkpoint before such a stage
+    * if that matters. Pipelines running under a `checkpointRoot` re-read
+    * each stage from disk, so their lineage is never dirty at a fork and
+    * this is a no-op — explicit checkpoint placement always wins over the
+    * heuristic.
     *
     * `initialDirty`: the dirty flag starts false because `input` is
     * normally a raw `MedsIO.read` scan; pass true when handing in a
     * MedsData whose `data` already carries in-memory transformations, so
     * the first fork persists it too.
     */
-  def runTracked(
+  def runHeld(
       spark: SparkSession,
       input: MedsData,
       stages: Seq[Stage],
       checkpoints: Map[String, String] = Map.empty,
       resume: Boolean = true,
       autoPersist: Boolean = true,
-      initialDirty: Boolean = false): (MedsData, Seq[org.apache.spark.sql.DataFrame]) = {
+      initialDirty: Boolean = false): Held = {
     // resume from the LAST complete checkpoint: stages before it must not
     // even be CONSTRUCTED — several run eager driver jobs while building
-    // (shrink-dtype min/max, vocabulary collect), which would execute full
-    // aggregations only to be discarded by the checkpoint read
+    // (the codes materialization, vocabulary collect), which would execute
+    // full aggregations only to be discarded by the checkpoint read
     val lastComplete =
       if (!resume) -1
       else stages.lastIndexWhere(s =>
@@ -147,8 +190,8 @@ object Pipeline {
     val start =
       if (lastComplete < 0) input
       else MedsIO.read(spark, checkpoints(stages(lastComplete).name))
-    val persisted = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val codes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // data lineage carries unmaterialized transformations since the last
     // scan / checkpoint read / persist; a resume re-read is never dirty
     var dirty = initialDirty && lastComplete < 0
@@ -170,7 +213,10 @@ object Pipeline {
         case DataStage(_, f) =>
           dirty = true
           m.withData(f(m))
-        case MetadataStage(_, f) => m.withCodes(f(trainOnly(m)))
+        case MetadataStage(_, f) =>
+          val c = f(trainOnly(m))
+          codes += c
+          m.withCodes(c)
         case SplitsStage(_, f) => m.withSplits(f(m))
       }
       val res = checkpoints.get(stage.name) match {
@@ -189,6 +235,6 @@ object Pipeline {
         f" in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       res
     }
-    (out, persisted.toSeq)
+    Held(out, persisted.toSeq, codes.toSeq)
   }
 }
