@@ -55,8 +55,7 @@ object Main {
     // registry discoverability — the analog of listing the reference's
     // MEDS_transforms.stages entry points (pyproject.toml:53-65)
     if (flags.contains("--list-stages")) {
-      (PipelineConfig.BuiltinStages ++ PipelineConfig.registeredStages)
-        .toSeq.sorted.foreach(println)
+      PipelineConfig.registeredStages.toSeq.sorted.foreach(println)
       return
     }
     val stageOnly = flags.collectFirst {

@@ -10,8 +10,8 @@ import graft.dsl.Cfg._
   * /root/reference/src/MEDS_transforms/runner.py:252-288). An override
   * `stages.occlude_outliers.stddev_cutoff=3` edits the parsed pipeline tree
   * in place of editing the file; values parse with the same scalar rules as
-  * the YAML loader (ints, floats, YAML 1.1 bools, null, quoted strings, flow
-  * `[...]`/`{...}` collections).
+  * the YAML loader (ints, floats, YAML 1.1 bools, null), and quoted strings
+  * and flow `[...]`/`{...}` collections parse as YAML.
   *
   * Path semantics: map segments descend by key (creating missing intermediate
   * maps, Hydra's `++` behavior); LIST segments match either an integer index
@@ -87,7 +87,13 @@ object Overrides {
     require(eq > 0, s"override must be <dotted.path>=<value>: '$arg'")
     val path = arg.substring(0, eq).split('.').toIndexedSeq
     require(path.forall(_.nonEmpty), s"override has an empty path segment: '$arg'")
-    (path, Yaml.parseScalar(arg.substring(eq + 1)))
+    // flow collections and quoted values are YAML; a plain value is one
+    // scalar taken literally (`a: b`, `foo #bar`) through the loader's table
+    val raw = arg.substring(eq + 1).trim
+    val value =
+      if (raw.nonEmpty && "[{\"'".contains(raw.head)) Yaml.parse(raw, s"override '$arg'")
+      else Yaml.parseScalar(raw)
+    (path, value)
   }
 
   private def set(node: Cfg, path: Seq[String], value: Cfg, arg: String): Cfg =

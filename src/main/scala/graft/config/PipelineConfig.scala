@@ -18,6 +18,11 @@ import graft.operators._
   * SparkSession by `Pipeline.run` — the reference's subprocess-per-stage,
   * file-lock, disk-round-trip orchestration collapses into chained DataFrame
   * transformations with optional checkpoints.
+  *
+  * Every stage — the reference's own, the hygiene and analysis stages of
+  * [[OpStages]], and third-party ones — builds through one registry
+  * ([[register]], [[buildStage]]), which also applies the `train_only` and
+  * `_match_revise` orchestration keys.
   */
 object PipelineConfig {
 
@@ -52,7 +57,7 @@ object PipelineConfig {
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
       } else java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    val base = if (path.endsWith(".yaml") || path.endsWith(".yml")) Yaml.parse(text)
+    val base = if (path.endsWith(".yaml") || path.endsWith(".yml")) Yaml.parse(text, path)
       else Cfg.fromJson(text)
     fromCfg(Overrides(base, overrides))
   }
@@ -231,96 +236,94 @@ object PipelineConfig {
 
   // ---- stage registry ---------------------------------------------------
 
-  /** Third-party stage extension point, mirroring the reference's entry-point
-    * discovery (stages/discovery.py:14-72): packages register a builder under
-    * a base-stage name and pipeline configs can then reference it like any
-    * built-in (including via `_base_stage` aliasing and `_match_revise` —
-    * registered stages are consulted BEFORE the built-in match). The builder
-    * receives (stage name, stage config).
+  /** The one stage registry, mirroring the reference's entry-point
+    * discovery (stages/discovery.py:14-72). The reference stages (below),
+    * the hygiene and analysis stages ([[OpStages]]) and third-party packages
+    * all register a builder under a base-stage name; pipeline configs then
+    * reference it directly or via `_base_stage` aliasing. The builder
+    * receives (stage name, stage config); registering a name again replaces
+    * its builder.
     */
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Cfg) => Pipeline.Stage]()
-
-  // built-in hygiene stages (dedup / text signals / sampling) register through
-  // the same path third-party stages use — see OpStages. Runs once when this
-  // object initializes; `registry` is defined above so ordering is safe.
-  OpStages.registerAll()
 
   def register(baseStage: String)(builder: (String, Cfg) => Pipeline.Stage): Unit =
     registry.put(baseStage, builder)
 
   def unregister(baseStage: String): Unit = registry.remove(baseStage)
 
+  /** Every registered base-stage name: the `--list-stages` surface. */
   def registeredStages: Set[String] = {
     import scala.jdk.CollectionConverters._
     registry.keySet().asScala.toSet
   }
 
-  /** The built-in reference stages (the `buildBuiltinStageInner` match arms
-    * — kept in sync by PipelineConfigSpec, which builds each one). Together
-    * with [[registeredStages]] this is the full `--list-stages` surface.
-    */
-  val BuiltinStages: Set[String] = Set(
-    "aggregate_code_metadata", "fit_vocabulary_indices", "reshard_to_split",
-    "generate_subject_splits", "filter_subjects", "filter_measurements",
-    "occlude_outliers", "normalization", "reorder_measurements",
-    "extract_values", "add_time_derived_measurements", "bin_numeric_values")
+  // Runs once when this object initializes; `registry` is defined above so
+  // ordering is safe.
+  registerReferenceStages()
+  OpStages.registerAll()
 
+  /** Build `baseStage` from the registry. `train_only` and `_match_revise`
+    * are orchestration keys, handled here the same way for every stage:
+    * `train_only` (config_overwrites may set it on ANY stage,
+    * pipeline.py:430) is stripped from the builder's config and wraps a data
+    * stage's input; a metadata stage is already train-only via Pipeline.run.
+    * `_match_revise` rewrites a data stage into per-matcher blocks, each
+    * block's stage built here, so a bad block or a non-data stage fails at
+    * parse time.
+    */
   def buildStage(name: String, baseStage: String, cfg: Cfg): Pipeline.Stage = {
     // single volatile read: a concurrent unregister cannot NPE us
     val b = registry.get(baseStage)
-    if (b == null) buildBuiltinStage(name, baseStage, cfg)
-    else buildRegisteredStage(b, name, cfg)
-  }
-
-  /** Registered stages get the SAME orchestration surface as built-ins: a
-    * `train_only` override wraps the input and `_match_revise` rewrites the
-    * stage into per-matcher blocks (both require the builder to yield data
-    * stages; a metadata stage is already train-only via Pipeline.run).
-    */
-  private def buildRegisteredStage(b: (String, Cfg) => Pipeline.Stage,
-      name: String, cfg: Cfg): Pipeline.Stage = {
+    require(b != null, s"unknown stage: $baseStage")
     val trainOnly = cfg.getBool("train_only").getOrElse(false)
-    val hasMatchRevise = cfg.obj.contains("_match_revise")
-    if (!trainOnly && !hasMatchRevise) b(name, cfg)
-    else {
-      val stageCfg = cfg match { case M(m0) => M(m0 - "train_only"); case c => c }
-      def simple(c: Cfg): MedsData => DataFrame = b(name, c) match {
+    val stageCfg = cfg match { case M(m0) => M(m0 - "train_only"); case c => c }
+    val stage =
+      if (!stageCfg.obj.contains("_match_revise")) b(name, stageCfg)
+      else Pipeline.DataStage(name, matchRevise(c => b(name, c) match {
         case Pipeline.DataStage(_, f) => f
         case _ => throw new IllegalArgumentException(
           s"stage $name: _match_revise requires a data stage")
-      }
-      if (hasMatchRevise) {
-        val xform = dataTransformWith(simple, stageCfg)
-        if (trainOnly) Pipeline.DataStage(name, m => xform(Pipeline.trainOnly(m)))
-        else Pipeline.DataStage(name, m => xform(m))
-      } else b(name, stageCfg) match {
-        case Pipeline.DataStage(_, f) =>
-          Pipeline.DataStage(name, m => f(Pipeline.trainOnly(m)))
-        case ms => ms // metadata stages are train-only via Pipeline.run already
-      }
-    }
-  }
-
-  /** train_only is hoisted HERE so every present and future data-stage case
-    * honors it uniformly (config_overwrites may set it on ANY stage,
-    * pipeline.py:430): the case arms see the stripped stage config, and any
-    * DataStage they return gets its input wrapped. Metadata stages are
-    * train-only via Pipeline.run already.
-    */
-  private def buildBuiltinStage(name: String, baseStage: String, cfg: Cfg): Pipeline.Stage = {
-    val stageCfg = cfg match { case M(m0) => M(m0 - "train_only"); case c => c }
-    val stage = buildBuiltinStageInner(name, baseStage, stageCfg)
-    if (!cfg.getBool("train_only").getOrElse(false)) stage
-    else stage match {
-      case Pipeline.DataStage(n, f) =>
+      }, stageCfg))
+    stage match {
+      case Pipeline.DataStage(n, f) if trainOnly =>
         Pipeline.DataStage(n, m => f(Pipeline.trainOnly(m)))
-      case ms => ms
+      case s => s
     }
   }
 
-  private def buildBuiltinStageInner(name: String, baseStage: String, cfg: Cfg): Pipeline.Stage = baseStage match {
-    case "aggregate_code_metadata" =>
+  /** The `_match_revise` rewrite (compute_modes/match_revise.py): one block
+    * per matcher, each with block-level config overrides over the stage's
+    * own config.
+    */
+  private def matchRevise(simple: Cfg => MedsData => DataFrame,
+      cfg: Cfg): MedsData => DataFrame = cfg.obj.get("_match_revise") match {
+    case None => simple(cfg)
+    case Some(L(blocks)) if blocks.nonEmpty =>
+      val mode = cfg.getStr("_match_revise_mode").getOrElse("match_and_revise")
+      // train_only is orchestration config, never stage config — strip it
+      // at the block level too
+      val shared = cfg.obj - "_match_revise" - "_match_revise_mode" - "train_only"
+      val parsed = blocks.map { b =>
+        val bm = b.obj
+        val matcher = M(scala.collection.immutable.ListMap(bm("_matcher").obj.toSeq: _*))
+        val overrides = M(scala.collection.immutable.ListMap(
+          (shared ++ (bm - "_matcher" - "train_only")).toSeq: _*))
+        (matcher, matchRevise(simple, overrides))
+      }
+      m => MatchRevise(m.data, parsed.map { case (matcher, f) =>
+        MatchRevise.Block(matcher, df => f(m.withData(df)))
+      }, multi = mode == "multi_match_and_revise")
+    case Some(other) => throw new IllegalArgumentException(
+      s"`_match_revise` must be a non-empty list of blocks, got $other")
+  }
+
+  /** The reference's own stages (stages/ in MEDS_transforms). */
+  private def registerReferenceStages(): Unit = {
+    def data(baseStage: String)(f: Cfg => MedsData => DataFrame): Unit =
+      register(baseStage)((name, cfg) => Pipeline.DataStage(name, f(cfg)))
+
+    register("aggregate_code_metadata") { (name, cfg) =>
       val pa = parseAggregations(cfg)
       val mods = cfg.strings("code_modifiers")
       val summarize = cfg.getBool("do_summarize_over_all_codes").getOrElse(false)
@@ -328,10 +331,12 @@ object PipelineConfig {
         AggregateCodeMetadata(m.data, m.codes, pa.names, pa.quantiles, mods,
           summarize, pa.quantileMode, pa.sketchK, pa.subjectCountMode,
           pa.subjectLgK))
-    case "fit_vocabulary_indices" =>
+    }
+    register("fit_vocabulary_indices") { (name, cfg) =>
       Pipeline.MetadataStage(name, m =>
         FitVocabularyIndices(m.codes, cfg.strings("code_modifiers")))
-    case "reshard_to_split" =>
+    }
+    register("reshard_to_split") { (name, cfg) =>
       // Reference stage config (reshard_to_split/config.yaml + reshard_to_split
       // .py:264-333): n_subjects_per_shard (default 50000) sizes shards per
       // split; n_shards fixes the count instead when given. The distributed
@@ -370,7 +375,8 @@ object PipelineConfig {
         }
         ReshardToSplit.applyAssigned(m.data, assignment)
       })
-    case "generate_subject_splits" =>
+    }
+    register("generate_subject_splits") { (name, cfg) =>
       // Config-reachable analog of shard_subjects' IID split generation
       // (reshard_to_split.py:25-110: split_fracs_dict, default 0.8/0.1/0.1,
       // plus the external-splits contract): subjects already present in the
@@ -406,138 +412,96 @@ object PipelineConfig {
           else ReshardToSplit.assignSplitsByFracDistributed(unassigned, fracs, seed)
         existing.unionByName(assigned)
       })
-    case _ =>
-      // resolve the transform EAGERLY so an unknown stage name fails at
-      // config-parse time, not mid-pipeline when the stage first executes
-      // (train_only was already stripped and is handled by the caller)
-      val xform = dataTransform(baseStage, cfg)
-      Pipeline.DataStage(name, m => xform(m))
-  }
-
-  /** Data-stage transformation for `baseStage` under `cfg`; `_match_revise`
-    * (compute_modes/match_revise.py) rewrites it into per-matcher blocks with
-    * block-level config overrides.
-    */
-  private def dataTransform(baseStage: String, cfg: Cfg): MedsData => DataFrame =
-    dataTransformWith(simpleDataTransform(baseStage, _), cfg)
-
-  /** The `_match_revise` rewrite over an arbitrary stage-transform factory —
-    * shared by built-in and registered stages.
-    */
-  private def dataTransformWith(simple: Cfg => MedsData => DataFrame,
-      cfg: Cfg): MedsData => DataFrame = {
-    cfg.obj.get("_match_revise") match {
-      case Some(L(blocks)) =>
-        val mode = cfg.getStr("_match_revise_mode").getOrElse("match_and_revise")
-        val parsed = blocks.map { b =>
-          val bm = b.obj
-          val matcher = M(scala.collection.immutable.ListMap(
-            bm("_matcher").obj.toSeq: _*))
-          // train_only is orchestration config, never stage config — strip it
-          // at the block level too (the top-level strip in buildStage does
-          // not see override maps)
-          val overrides = M(scala.collection.immutable.ListMap(
-            (cfg.obj - "_match_revise" - "_match_revise_mode" - "train_only"
-              ++ (bm - "_matcher" - "train_only")).toSeq: _*))
-          (matcher, overrides)
-        }
-        m => {
-          val blockDefs = parsed.map { case (matcher, overrides) =>
-            MatchRevise.Block(matcher, df => dataTransformWith(simple, overrides)(m.withData(df)))
-          }
-          MatchRevise(m.data, blockDefs, multi = mode == "multi_match_and_revise")
-        }
-      case _ => simple(cfg)
+    }
+    data("filter_subjects") { cfg => m =>
+      FilterSubjects(m.data,
+        cfg.getInt("min_measurements_per_subject"),
+        cfg.getInt("min_events_per_subject"))
+    }
+    data("filter_measurements") { cfg => m =>
+      FilterMeasurements(m.data, m.codes,
+        cfg.getInt("min_subjects_per_code"),
+        cfg.getInt("min_occurrences_per_code"),
+        cfg.strings("code_modifiers"))
+    }
+    data("occlude_outliers") { cfg => m =>
+      OccludeOutliers(m.data, m.codes,
+        cfg.getDouble("stddev_cutoff").getOrElse(4.5),
+        cfg.strings("code_modifiers"))
+    }
+    data("normalization") { cfg => m =>
+      Normalization(graft.meds.MedsIO.withRowIdx(m.data), m.codes,
+        cfg.strings("code_modifiers"))
+    }
+    data("reorder_measurements") { cfg => m =>
+      ReorderMeasurements(m.data, cfg.strings("ordered_code_patterns"))
+    }
+    data("extract_values") { cfg => m =>
+      ExtractValues(m.data, cfg.obj.toSeq.filterNot(_._1.startsWith("_")))
+    }
+    data("add_time_derived_measurements") { cfg => m =>
+      // Generators in config-key order through the sequential-semantics,
+      // single-sort driver (addAll): later generators' rows precede earlier
+      // ones' within a block — the reference's per-functor prepend
+      // (add_time_derived_measurements.py:174-231) — and TIMELINE//END
+      // lands after the block, all with ONE global sort.
+      import AddTimeDerivedMeasurements.Generator
+      val gens = cfg.obj.toSeq.collect {
+        case (_, Cfg.Null) => None // feature: None skips it, like the reference
+        case ("age", ac) => Some(Generator(df =>
+          AddTimeDerivedMeasurements.ageEvents(df,
+            ac.getStr("DOB_code").getOrElse("MEDS_BIRTH"),
+            ac.getStr("age_code").getOrElse("AGE"),
+            ac.getStr("age_unit").getOrElse("years"))))
+        case ("time_of_day", tc) => Some(Generator(df =>
+          AddTimeDerivedMeasurements.timeOfDayEvents(df,
+            // accept 6.0 as well as 6 — YAML→JSON round-trips often float
+            tc.getList("endpoints").collect { case I(i) => i.toInt; case D(d) => d.toInt },
+            tc.getStr("time_of_day_code").getOrElse("TIME_OF_DAY"))))
+        case ("timeline_tokens", tt) =>
+          val endCode = tt.getStr("timeline_end_code").getOrElse("TIMELINE//END")
+          Some(Generator(df =>
+            AddTimeDerivedMeasurements.timelineTokenEvents(df,
+              tt.getStr("time_unit").orElse(tt.getStr("unit")).getOrElse("days"),
+              startCode = tt.getStr("timeline_start_code").getOrElse("TIMELINE//START"),
+              endCode = endCode,
+              deltaCodeTemplate =
+                tt.getStr("time_delta_code").getOrElse("TIMELINE//DELTA//{time_unit}")),
+            Some(endCode)))
+        case (other, _) =>
+          throw new IllegalArgumentException(s"Unknown time-derived measurement: $other")
+      }.flatten
+      require(gens.nonEmpty, "add_time_derived_measurements: no generators configured")
+      AddTimeDerivedMeasurements.addAll(m.data, gens)
+    }
+    data("bin_numeric_values") { cfg => m =>
+      // custom_bins values may be the reference's dict form (bin name →
+      // endpoint, insertion-ordered least→greatest) or a plain list
+      def parseBins(c: Cfg): Map[String, Seq[Double]] = c.obj.map {
+        case (code, L(eps)) => code -> eps.collect { case D(d) => d; case I(i) => i.toDouble }
+        case (code, m0 @ Cfg.M(_)) =>
+          code -> m0.obj.values.toSeq.collect { case D(d) => d; case I(i) => i.toDouble }
+        case (code, other) => throw new IllegalArgumentException(s"bad bins for $code: $other")
+      }.toMap
+      // custom_bins_filepath: same structure from a YAML (like the
+      // reference) or JSON file; inline custom_bins entries win on collision
+      val fileBins = cfg.getStr("custom_bins_filepath").map { p =>
+        val text = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+        parseBins(if (p.endsWith(".yaml") || p.endsWith(".yml")) Yaml.parse(text, p)
+          else Cfg.fromJson(text))
+      }.getOrElse(Map.empty[String, Seq[Double]])
+      val custom = fileBins ++ cfg.obj.get("custom_bins").map(parseBins).getOrElse(Map.empty)
+      val binWith = cfg.strings("bin_with_columns") match {
+        case Nil => Seq(graft.meds.MedsSchema.ValuesQuantiles)
+        case cols => cols
+      }
+      BinNumericValues(m.data, m.codes,
+        binWithColumns = binWith,
+        customBins = custom.toMap,
+        dropNumeric = cfg.getBool("do_drop_numeric_value")
+          .orElse(cfg.getBool("drop_numeric_value")).getOrElse(false),
+        codeFormat = cfg.getStr("code_with_bin_name").orElse(cfg.getStr("code_format"))
+          .getOrElse("{code}//value_[{left},{right})"))
     }
   }
-
-  private def simpleDataTransform(baseStage: String, cfg: Cfg): MedsData => DataFrame =
-    baseStage match {
-      case "filter_subjects" => m =>
-        FilterSubjects(m.data,
-          cfg.getInt("min_measurements_per_subject"),
-          cfg.getInt("min_events_per_subject"))
-      case "filter_measurements" => m =>
-        FilterMeasurements(m.data, m.codes,
-          cfg.getInt("min_subjects_per_code"),
-          cfg.getInt("min_occurrences_per_code"),
-          cfg.strings("code_modifiers"))
-      case "occlude_outliers" => m =>
-        OccludeOutliers(m.data, m.codes,
-          cfg.getDouble("stddev_cutoff").getOrElse(4.5),
-          cfg.strings("code_modifiers"))
-      case "normalization" => m =>
-        Normalization(graft.meds.MedsIO.withRowIdx(m.data), m.codes,
-          cfg.strings("code_modifiers"))
-      case "reorder_measurements" => m =>
-        ReorderMeasurements(m.data, cfg.strings("ordered_code_patterns"))
-      case "extract_values" => m =>
-        ExtractValues(m.data, cfg.obj.toSeq.filterNot(_._1.startsWith("_")))
-      case "add_time_derived_measurements" => m => {
-        // Generators in config-key order through the sequential-semantics,
-        // single-sort driver (addAll): later generators' rows precede earlier
-        // ones' within a block — the reference's per-functor prepend
-        // (add_time_derived_measurements.py:174-231) — and TIMELINE//END
-        // lands after the block, all with ONE global sort.
-        import AddTimeDerivedMeasurements.Generator
-        val gens = cfg.obj.toSeq.collect {
-          case (_, Cfg.Null) => None // feature: None skips it, like the reference
-          case ("age", ac) => Some(Generator(df =>
-            AddTimeDerivedMeasurements.ageEvents(df,
-              ac.getStr("DOB_code").getOrElse("MEDS_BIRTH"),
-              ac.getStr("age_code").getOrElse("AGE"),
-              ac.getStr("age_unit").getOrElse("years"))))
-          case ("time_of_day", tc) => Some(Generator(df =>
-            AddTimeDerivedMeasurements.timeOfDayEvents(df,
-              // accept 6.0 as well as 6 — YAML→JSON round-trips often float
-              tc.getList("endpoints").collect { case I(i) => i.toInt; case D(d) => d.toInt },
-              tc.getStr("time_of_day_code").getOrElse("TIME_OF_DAY"))))
-          case ("timeline_tokens", tt) =>
-            val endCode = tt.getStr("timeline_end_code").getOrElse("TIMELINE//END")
-            Some(Generator(df =>
-              AddTimeDerivedMeasurements.timelineTokenEvents(df,
-                tt.getStr("time_unit").orElse(tt.getStr("unit")).getOrElse("days"),
-                startCode = tt.getStr("timeline_start_code").getOrElse("TIMELINE//START"),
-                endCode = endCode,
-                deltaCodeTemplate =
-                  tt.getStr("time_delta_code").getOrElse("TIMELINE//DELTA//{time_unit}")),
-              Some(endCode)))
-          case (other, _) =>
-            throw new IllegalArgumentException(s"Unknown time-derived measurement: $other")
-        }.flatten
-        require(gens.nonEmpty, "add_time_derived_measurements: no generators configured")
-        AddTimeDerivedMeasurements.addAll(m.data, gens)
-      }
-      case "bin_numeric_values" => m => {
-        // custom_bins values may be the reference's dict form (bin name →
-        // endpoint, insertion-ordered least→greatest) or a plain list
-        def parseBins(c: Cfg): Map[String, Seq[Double]] = c.obj.map {
-          case (code, L(eps)) => code -> eps.collect { case D(d) => d; case I(i) => i.toDouble }
-          case (code, m0 @ Cfg.M(_)) =>
-            code -> m0.obj.values.toSeq.collect { case D(d) => d; case I(i) => i.toDouble }
-          case (code, other) => throw new IllegalArgumentException(s"bad bins for $code: $other")
-        }.toMap
-        // custom_bins_filepath: same structure from a YAML (like the
-        // reference) or JSON file; inline custom_bins entries win on collision
-        val fileBins = cfg.getStr("custom_bins_filepath").map { p =>
-          val text = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
-          parseBins(if (p.endsWith(".yaml") || p.endsWith(".yml")) Yaml.parse(text)
-            else Cfg.fromJson(text))
-        }.getOrElse(Map.empty[String, Seq[Double]])
-        val custom = fileBins ++ cfg.obj.get("custom_bins").map(parseBins).getOrElse(Map.empty)
-        val binWith = cfg.strings("bin_with_columns") match {
-          case Nil => Seq(graft.meds.MedsSchema.ValuesQuantiles)
-          case cols => cols
-        }
-        BinNumericValues(m.data, m.codes,
-          binWithColumns = binWith,
-          customBins = custom.toMap,
-          dropNumeric = cfg.getBool("do_drop_numeric_value")
-            .orElse(cfg.getBool("drop_numeric_value")).getOrElse(false),
-          codeFormat = cfg.getStr("code_with_bin_name").orElse(cfg.getStr("code_format"))
-            .getOrElse("{code}//value_[{left},{right})"))
-      }
-      case other =>
-        throw new IllegalArgumentException(s"unknown stage: $other")
-    }
 }

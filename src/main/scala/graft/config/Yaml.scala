@@ -1,209 +1,71 @@
 package graft.config
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import org.yaml.snakeyaml.LoaderOptions
+import org.yaml.snakeyaml.error.{MarkedYAMLException, YAMLException}
+import org.yaml.snakeyaml.nodes.{MappingNode, Node, ScalarNode, SequenceNode, Tag}
 import graft.dsl.Cfg
 
-/** YAML-subset parser producing [[graft.dsl.Cfg]] trees, so the reference's
+/** YAML loader producing [[graft.dsl.Cfg]] trees, so the reference's
   * pipeline YAML files (configs/pipeline.py:222-322; e.g.
   * example/simple_example_pkg/.../example_pipeline.yaml) run unmodified
-  * through `graft.Main`. The subset is block maps, block lists (including
-  * inline-first-entry map items like `- stage_name:`), inline `[...]` /
-  * `{...}` collections, quoted/plain scalars, comments, and `---` document
-  * markers — the shapes pipeline configs actually use. Block scalars (`|`)
-  * and anchors are intentionally out of scope (no pipeline config uses
-  * them); Hydra's `???` mandatory marker parses as the string "???".
+  * through `graft.Main`. SnakeYAML (on Spark's classpath) composes the node
+  * tree — full YAML syntax, including block scalars, anchors and aliases —
+  * and this object converts it: mapping keys keep their order, quoted and
+  * block scalars are strings, and plain scalars resolve through
+  * [[parseScalar]] (PyYAML's booleans, YAML 1.2 numbers), not SnakeYAML's
+  * YAML 1.1 resolver, which would read `010` as 8 and `2020-01-01` as a
+  * date. Hydra's `???` mandatory marker parses as the string "???".
+  *
+  * Bad input fails with an `IllegalArgumentException` naming the source and
+  * the line: a syntax error or a second `---` document (with the column), a
+  * duplicate mapping key, a merge key (`<<`) or a recursive alias.
   */
 object Yaml {
 
-  private final case class Line(indent: Int, text: String)
-
-  def parse(yaml: String): Cfg = {
-    val raw = yaml.linesIterator.map(stripComment).zipWithIndex.toVector
-    // a '---' after content starts a SECOND document — silently merging the
-    // two (duplicate keys overwrite) would be a plausible-but-wrong parse
-    val docMarkers = raw.collect { case (l, n) if l.trim == "---" => n }
-    val contentAt = raw.collect { case (l, n) if l.trim.nonEmpty && l.trim != "---" => n }
-    docMarkers.find(m => contentAt.exists(_ < m)).foreach { m =>
-      throw new IllegalArgumentException(
-        s"line ${m + 1}: multi-document YAML is not supported (second '---')")
-    }
-    val lines = raw
-      .filter { case (l, _) => l.trim.nonEmpty && l.trim != "---" }
-      .map { case (l, n) =>
-        require(!l.takeWhile(c => c == ' ' || c == '\t').contains('\t'),
-          s"line ${n + 1}: tabs are not valid YAML indentation")
-        Line(l.takeWhile(_ == ' ').length, l.trim)
+  /** Parse one YAML document; `source` (a file path, if any) prefixes errors. */
+  def parse(yaml: String, source: String = ""): Cfg = {
+    val where = if (source.isEmpty) "" else s"$source: "
+    val root =
+      try new org.yaml.snakeyaml.Yaml(new LoaderOptions).compose(new java.io.StringReader(yaml))
+      catch {
+        case e: MarkedYAMLException =>
+          val at = Option(e.getProblemMark).orElse(Option(e.getContextMark))
+            .fold("")(m => s" at line ${m.getLine + 1}, column ${m.getColumn + 1}")
+          val why = (Option(e.getContext).toSeq :+ e.getProblem).mkString("; ")
+          throw new IllegalArgumentException(s"${where}invalid YAML$at: $why", e)
+        case e: YAMLException =>
+          throw new IllegalArgumentException(s"${where}invalid YAML: ${e.getMessage}", e)
       }
-    if (lines.isEmpty) Cfg.Null
-    else {
-      val (cfg, next) = parseNode(lines, 0, lines.head.indent)
-      require(next == lines.length,
-        s"trailing unparsed YAML at: '${lines(next).text}' (bad indentation?)")
-      cfg
+    if (root == null) Cfg.Null else toCfg(root, where, Nil)
+  }
+
+  private def toCfg(n: Node, where: String, open: List[Node]): Cfg = {
+    def fail(at: Node, msg: String): Nothing = throw new IllegalArgumentException(
+      s"${where}line ${at.getStartMark.getLine + 1}: $msg")
+    if (open.contains(n)) fail(n, "recursive alias")
+    n match {
+      case s: ScalarNode => if (s.isPlain) parseScalar(s.getValue) else Cfg.S(s.getValue)
+      case l: SequenceNode => Cfg.L(l.getValue.asScala.map(toCfg(_, where, n :: open)).toVector)
+      case m: MappingNode =>
+        Cfg.M(m.getValue.asScala.foldLeft(ListMap.empty[String, Cfg]) { (acc, t) =>
+          val key = t.getKeyNode match {
+            case k: ScalarNode if k.getTag == Tag.MERGE && k.isPlain =>
+              fail(k, "merge keys (<<) are not supported")
+            case k: ScalarNode => k.getValue
+            case k => fail(k, "mapping keys must be scalars")
+          }
+          if (acc.contains(key)) fail(t.getKeyNode, s"duplicate key '$key'")
+          acc.updated(key, toCfg(t.getValueNode, where, n :: open))
+        })
     }
   }
 
-  /** A quote char only OPENS a quoted region at a token boundary (start of
-    * line or after a separator) — the YAML rule that makes an apostrophe in
-    * a plain scalar (`patient's data`) literal rather than a string opener.
-    */
-  private def opensQuote(s: String, i: Int): Boolean =
-    i == 0 || " :,[{".contains(s(i - 1))
-
-  /** Strip a `#` comment that is outside quotes. */
-  private def stripComment(line: String): String = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < line.length) {
-      line(i) match {
-        case '\'' if !inD && (inS || opensQuote(line, i)) => inS = !inS
-        case '"' if !inS && (inD || opensQuote(line, i)) => inD = !inD
-        case '#' if !inS && !inD && (i == 0 || line(i - 1) == ' ') =>
-          return line.substring(0, i)
-        case _ =>
-      }
-      i += 1
-    }
-    line
-  }
-
-  private def parseNode(lines: Vector[Line], start: Int, indent: Int): (Cfg, Int) =
-    if (lines(start).text == "-" || lines(start).text.startsWith("- "))
-      parseList(lines, start, indent)
-    else parseMap(lines, start, indent)
-
-  private def parseMap(lines: Vector[Line], start: Int, indent: Int): (Cfg, Int) = {
-    var entries = ListMap.empty[String, Cfg]
-    var i = start
-    while (i < lines.length && lines(i).indent == indent &&
-        !lines(i).text.startsWith("- ") && lines(i).text != "-") {
-      val line = lines(i)
-      val colon = topLevelColon(line.text)
-      require(colon >= 0, s"expected 'key: value', got '${line.text}'")
-      val key = unquote(line.text.substring(0, colon).trim)
-      val rest = line.text.substring(colon + 1).trim
-      if (rest.nonEmpty) {
-        entries += key -> parseScalar(rest)
-        i += 1
-      } else if (i + 1 < lines.length && lines(i + 1).indent > indent) {
-        val (child, next) = parseNode(lines, i + 1, lines(i + 1).indent)
-        entries += key -> child
-        i = next
-      } else if (i + 1 < lines.length && lines(i + 1).indent == indent &&
-          (lines(i + 1).text == "-" || lines(i + 1).text.startsWith("- "))) {
-        // zero-indent block list (the common YAML style):
-        //   stages:
-        //   - filter_subjects
-        // the dash items sit at the KEY's indent; parseList stops at the
-        // first non-dash line, where this map resumes
-        val (child, next) = parseList(lines, i + 1, indent)
-        entries += key -> child
-        i = next
-      } else {
-        entries += key -> Cfg.Null
-        i += 1
-      }
-    }
-    require(i == lines.length || lines(i).indent < indent ||
-      lines(i).indent == indent, // deeper would have been consumed as a child
-      s"bad indentation at '${lines(i).text}'")
-    (Cfg.M(entries), i)
-  }
-
-  private def parseList(lines: Vector[Line], start: Int, indent: Int): (Cfg, Int) = {
-    val items = Seq.newBuilder[Cfg]
-    var i = start
-    while (i < lines.length && lines(i).indent == indent &&
-        (lines(i).text == "-" || lines(i).text.startsWith("- "))) {
-      val content = lines(i).text.drop(1).trim
-      if (content.isEmpty) {
-        // `-` alone: the item is the following deeper block
-        if (i + 1 < lines.length && lines(i + 1).indent > indent) {
-          val (child, next) = parseNode(lines, i + 1, lines(i + 1).indent)
-          items += child
-          i = next
-        } else { items += Cfg.Null; i += 1 }
-      } else {
-        val colon = topLevelColon(content)
-        if (colon >= 0) {
-          // map item with its first entry inline: `- key: …`. The entry sits
-          // at effective indent = dash indent + 2; rewrite and re-parse so
-          // continuation lines at that indent join the same map.
-          val itemIndent = indent + 2
-          val rewritten = lines.updated(i, Line(itemIndent, content))
-          val (child, next) = parseMap(rewritten, i, itemIndent)
-          items += child
-          i = next
-        } else {
-          items += parseScalar(content)
-          i += 1
-        }
-      }
-    }
-    (Cfg.L(items.result()), i)
-  }
-
-  /** Index of the first `:` that terminates a key (followed by space/EOL) and
-    * is outside quotes and brackets; -1 if none.
-    */
-  private def topLevelColon(s: String): Int = {
-    var inS = false; var inD = false; var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s(i) match {
-        case '\'' if !inD && (inS || opensQuote(s, i)) => inS = !inS
-        case '"' if !inS && (inD || opensQuote(s, i)) => inD = !inD
-        case '[' | '{' if !inS && !inD => depth += 1
-        case ']' | '}' if !inS && !inD => depth -= 1
-        case ':' if !inS && !inD && depth == 0 &&
-            (i + 1 == s.length || s(i + 1) == ' ') => return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def unquote(s: String): String =
-    if (s.length >= 2 && ((s.head == '"' && s.last == '"') ||
-        (s.head == '\'' && s.last == '\'')))
-      s.substring(1, s.length - 1)
-    else s
-
-  /** Split an inline collection body on top-level commas. */
-  private def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var inS = false; var inD = false; var depth = 0
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      s(i) match {
-        case '\'' if !inD && (inS || opensQuote(s, i)) => inS = !inS
-        case '"' if !inS && (inD || opensQuote(s, i)) => inD = !inD
-        case '[' | '{' if !inS && !inD => depth += 1
-        case ']' | '}' if !inS && !inD => depth -= 1
-        case ',' if !inS && !inD && depth == 0 =>
-          out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
+  /** The plain-scalar table, shared by documents and CLI override values. */
   private[config] def parseScalar(raw: String): Cfg = {
     val s = raw.trim
-    if (s.isEmpty) Cfg.Null // reachable via inline maps: {a: , b: 1}
-    else if (s.startsWith("[") && s.endsWith("]"))
-      Cfg.L(splitTop(s.substring(1, s.length - 1)).map(parseScalar))
-    else if (s.startsWith("{") && s.endsWith("}"))
-      Cfg.M(ListMap(splitTop(s.substring(1, s.length - 1)).map { kv =>
-        val c = topLevelColon(kv)
-        require(c >= 0, s"bad inline map entry: '$kv'")
-        unquote(kv.substring(0, c).trim) -> parseScalar(kv.substring(c + 1).trim)
-      }: _*))
-    else if (s.head == '"' || s.head == '\'') Cfg.S(unquote(s))
+    if (s.isEmpty) Cfg.Null // an empty value: `key:` or `{a: , b: 1}`
     else s match {
       case "null" | "~" | "Null" | "NULL" => Cfg.Null
       // PyYAML (the reference's loader) resolves the YAML 1.1 boolean forms

@@ -73,6 +73,167 @@ class YamlConfigSpec extends SparkSpec {
     assert(c2("after") == Cfg.S("done"))
   }
 
+  test("scalar table: the same values as a document entry and as an override") {
+    import graft.config.Overrides
+    import Cfg._
+    // (raw text, value as a block-list item, value as `k=<raw>` override).
+    // Plain scalars resolve by graft's own table (PyYAML booleans, YAML 1.2
+    // numbers), not by a YAML 1.1 resolver: 010 is 10, dates stay strings.
+    val table = Seq[(String, Cfg, Cfg)](
+      ("1e-3", D(0.001), D(0.001)),
+      ("010", I(10), I(10)),
+      ("0x1F", S("0x1F"), S("0x1F")),
+      ("1_000", S("1_000"), S("1_000")),
+      ("2020-01-01", S("2020-01-01"), S("2020-01-01")),
+      ("1:30", S("1:30"), S("1:30")),
+      ("yes", B(true), B(true)),
+      ("off", B(false), B(false)),
+      ("???", S("???"), S("???")),
+      ("~", Null, Null),
+      ("NULL", Null, Null),
+      ("-7", I(-7), I(-7)),
+      ("+3", I(3), I(3)),
+      (".5", D(0.5), D(0.5)),
+      ("1.", D(1.0), D(1.0)),
+      ("-1.5E+2", D(-150.0), D(-150.0)),
+      (".inf", S(".inf"), S(".inf")),
+      ("'true'", S("true"), S("true")),
+      ("\"quoted: with colon\"", S("quoted: with colon"), S("quoted: with colon")),
+      // a document entry reads `a: b` as a map and strips the comment; an
+      // override value is one plain scalar, taken literally
+      ("a: b", Cfg.map("a" -> S("b")), S("a: b")),
+      ("foo #bar", S("foo"), S("foo #bar")),
+      ("[don't, won't]", Cfg.list(S("don't"), S("won't")), Cfg.list(S("don't"), S("won't"))),
+      ("{a: , b: 1}", Cfg.map("a" -> Null, "b" -> I(1)), Cfg.map("a" -> Null, "b" -> I(1))),
+      ("{k: [1, two]}", Cfg.map("k" -> Cfg.list(I(1), S("two"))),
+        Cfg.map("k" -> Cfg.list(I(1), S("two")))))
+    assert(table.size == 24)
+    val doc = Yaml.parse(table.map { case (raw, _, _) => s"- $raw" }.mkString("", "\n", "\n"))
+    assert(doc == L(table.map(_._2)))
+    table.foreach { case (raw, _, want) =>
+      assert(Overrides.parseArg(s"k=$raw") == (Seq("k") -> want), raw)
+    }
+  }
+
+  test("Yaml.parse: malformed YAML fails with the source, line and column") {
+    val bad = Seq(
+      "unclosed flow list" -> "endpoints: [6, 12\nafter: 1\n",
+      "second document" -> "a: 1\n---\nb: 2\n",
+      "tab indentation" -> "stages:\n\t- filter_subjects\n",
+      "wrong indent" -> "a:\n    b: 1\n  c: 2\n")
+    bad.foreach { case (what, text) =>
+      val ex = intercept[IllegalArgumentException](Yaml.parse(text, "p.yaml"))
+      assert(ex.getMessage.startsWith("p.yaml: invalid YAML at line "), what)
+      assert(ex.getMessage.contains(", column "), what)
+    }
+    // a file loaded by path names that path
+    val tmp = java.nio.file.Files.createTempFile("graft_bad", ".yaml")
+    java.nio.file.Files.writeString(tmp, "stages: [filter_subjects\n")
+    val ex = intercept[IllegalArgumentException](PipelineConfig.fromFile(tmp.toString))
+    assert(ex.getMessage.startsWith(s"$tmp: invalid YAML at line 2, column 1"))
+  }
+
+  test("Yaml.parse: anchors and aliases parse to the anchored value") {
+    val c = Yaml.parse(
+      """defaults: &d
+        |  code_modifiers: [unit]
+        |  stddev_cutoff: 2.5
+        |stages:
+        |  - occlude_outliers: *d
+        |  - normalization: *d
+        |ref: &s shared
+        |copy: *s
+        |""".stripMargin).asInstanceOf[Cfg.M].v
+    val d = Cfg.map("code_modifiers" -> Cfg.list(Cfg("unit")), "stddev_cutoff" -> Cfg(2.5))
+    assert(c("stages") == Cfg.list(Cfg.map("occlude_outliers" -> d),
+      Cfg.map("normalization" -> d)))
+    assert(c("copy") == Cfg.S("shared"))
+    val ex = intercept[IllegalArgumentException](Yaml.parse("a: &x [1, *x]\n"))
+    assert(ex.getMessage.contains("recursive alias"))
+    val merge = intercept[IllegalArgumentException](Yaml.parse("a: &x {k: 1}\nb:\n  <<: *x\n"))
+    assert(merge.getMessage == "line 3: merge keys (<<) are not supported")
+  }
+
+  test("Yaml.parse: block scalars are strings") {
+    val c = Yaml.parse(
+      """literal: |
+        |  line one
+        |  line two
+        |folded: >
+        |  one
+        |  two
+        |number: |
+        |  12
+        |""".stripMargin).asInstanceOf[Cfg.M].v
+    assert(c("literal") == Cfg.S("line one\nline two\n"))
+    assert(c("folded") == Cfg.S("one two\n"))
+    assert(c("number") == Cfg.S("12\n"))
+  }
+
+  test("Yaml.parse: a duplicate mapping key is rejected with its line") {
+    val ex = intercept[IllegalArgumentException](Yaml.parse(
+      """stages:
+        |  - filter_subjects:
+        |      min_events_per_subject: 5
+        |      min_events_per_subject: 9
+        |""".stripMargin, "dup.yaml"))
+    assert(ex.getMessage == "dup.yaml: line 4: duplicate key 'min_events_per_subject'")
+  }
+
+  test("reference data stages honor train_only and _match_revise") {
+    import graft.meds.{MedsData, MedsSchema}
+    def v(x: Double) = java.lang.Double.valueOf(x)
+    val rows = (1L to 6L).flatMap(s => Seq(
+      (s, s"2020-01-0$s 00:00:00", "DX", null),
+      (s, s"2020-01-0$s 01:00:00", "HR", v(60.0 + s)),
+      (s, s"2020-01-0$s 03:00:00", "TEMP", v(37.0))))
+    val split = udf((s: Long) => if (s <= 4) "train" else "held_out")
+    val data = medsDf(rows: _*).withColumn(MedsSchema.Split, split(col(MedsSchema.SubjectId)))
+    val meds = MedsData(data,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        MedsSchema.codesSchema),
+      data.select(MedsSchema.SubjectId, MedsSchema.Split).distinct())
+    val trainOnly = Pipeline.run(spark, meds, PipelineConfig.fromYaml(
+      """stages:
+        |  - filter_subjects: {train_only: true}
+        |""".stripMargin).stages)
+    assert(trainOnly.data.select(MedsSchema.Split).distinct().collect()
+      .map(_.getString(0)).toSet == Set("train"))
+    // per-block overrides: HR needs 100 occurrences (dropped), TEMP needs 1
+    // (kept); DX matches no block and passes through
+    val revised = Pipeline.run(spark, meds, PipelineConfig.fromYaml(
+      """stages:
+        |  - aggregate_code_metadata:
+        |      aggregations: [code/n_occurrences, code/n_subjects]
+        |  - filter_measurements:
+        |      _match_revise:
+        |        - _matcher: {code: HR}
+        |          min_occurrences_per_code: 100
+        |        - _matcher: {code: TEMP}
+        |          min_occurrences_per_code: 1
+        |""".stripMargin).stages)
+    val counts = revised.data.groupBy(MedsSchema.Code).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == Map("DX" -> 6L, "TEMP" -> 6L))
+  }
+
+  test("_match_revise on a metadata or splits stage fails at parse time") {
+    Seq("aggregate_code_metadata", "fit_vocabulary_indices", "generate_subject_splits")
+      .foreach { stage =>
+        val ex = intercept[IllegalArgumentException](PipelineConfig.fromYaml(
+          s"""stages:
+             |  - $stage:
+             |      _match_revise:
+             |        - _matcher: {code: HR}
+             |""".stripMargin))
+        assert(ex.getMessage == s"stage $stage: _match_revise requires a data stage")
+      }
+    // an empty block list would otherwise turn the stage into a no-op data stage
+    val ex = intercept[IllegalArgumentException](PipelineConfig.fromYaml(
+      "stages:\n  - aggregate_code_metadata: {_match_revise: []}\n"))
+    assert(ex.getMessage.contains("must be a non-empty list of blocks"))
+  }
+
   test("YAML pipeline parses to the same stages as its JSON twin and runs identically") {
     val yaml =
       """description: twin test
@@ -248,10 +409,14 @@ class YamlConfigSpec extends SparkSpec {
     val listed = out.toString.linesIterator.toSet
     assert(Set("minhash_lsh_dedup", "knn_join", "filter_rows", "json_extract",
       "normalize_text", "sessionize").subsetOf(listed))
-    assert(PipelineConfig.BuiltinStages.subsetOf(listed)) // reference stages too
-    // every listed builtin actually builds (BuiltinStages stays in sync
-    // with the match arms)
-    PipelineConfig.BuiltinStages.foreach { s =>
+    val referenceStages = Set(
+      "aggregate_code_metadata", "fit_vocabulary_indices", "reshard_to_split",
+      "generate_subject_splits", "filter_subjects", "filter_measurements",
+      "occlude_outliers", "normalization", "reorder_measurements",
+      "extract_values", "add_time_derived_measurements", "bin_numeric_values")
+    assert(referenceStages.subsetOf(listed)) // reference stages too
+    // every reference stage actually builds
+    referenceStages.foreach { s =>
       PipelineConfig.fromYaml(s"stages:\n  - $s\n")
     }
   }
