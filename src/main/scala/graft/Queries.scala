@@ -881,8 +881,9 @@ object Queries {
         // tracking the parquet twice per batch), and the default
         // HDFS-backed state provider kept deliberately: RocksDB measured
         // 4.19 s here — per-partition native-DB open/commit dwarfs its
-        // benefits until state is orders of magnitude larger (StreamSmoke
-        // carries the RocksDB evidence at scale).
+        // benefits until state is orders of magnitude larger (SMOKE.md
+        // "Streaming sessionization at 1M-user state" has the RocksDB
+        // evidence at scale).
         ss.conf.set("spark.sql.shuffle.partitions",
           streamStatePartitions(ss, dir).toString)
         val src = eventsStream(ss, dir)

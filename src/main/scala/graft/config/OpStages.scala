@@ -36,6 +36,8 @@ object OpStages {
 
   private val IdCol = "id_col"
   private val TextCol = "text_col"
+  /** Estimated train-side size at which `decontaminate` takes the bloom path. */
+  private val DecontamBloomMinBytes = 256L << 20
 
   /** Register every built-in hygiene stage. Invoked once from
     * [[PipelineConfig]]'s initializer; idempotent (re-registration replaces
@@ -206,29 +208,25 @@ object OpStages {
     }
 
     // eval-set decontamination: drop rows sharing an n-gram with the corpus
-    // at `eval_path`; `algo: bloom` probes a bloom prefilter before the
-    // exact confirm (identical output, no train-side explode); `algo: auto`
-    // (the default) picks bloom once the train side's Catalyst-estimated
-    // size crosses `auto_bloom_min_bytes` — the measured crossover is
-    // ~tens of millions of train grams (DecontamCrossover evidence in
-    // SMOKE.md: exact 11.5 s vs bloom 4.9 s at ~45M grams; parity below),
-    // so the default threshold is 256 MiB of estimated train bytes.
+    // at `eval_path`. The bloom prefilter path (identical output, no
+    // train-side explode) runs once the train side's Catalyst-estimated
+    // size reaches DecontamBloomMinBytes — the measured crossover is ~tens
+    // of millions of train grams (SMOKE.md "Decontamination: auto-sized
+    // bloom + exact-vs-bloom crossover": exact 11.5 s vs bloom 4.9 s at
+    // ~45M grams; parity below).
     PipelineConfig.register("decontaminate") { (name, cfg) =>
+      val known = Seq(IdCol, TextCol, "ngram", "eval_path")
+      val unknown = cfg.obj.keySet -- known
+      require(unknown.isEmpty, s"stage $name: unknown key(s) " +
+        s"${unknown.toSeq.sorted.mkString(", ")} (known: ${known.mkString(", ")})")
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
       val text = cfg.getStr(TextCol).getOrElse("text")
       val n = cfg.getInt("ngram").getOrElse(8)
       val evalPath = cfg.getStr("eval_path").getOrElse(
         throw new IllegalArgumentException(s"stage $name: `eval_path` is required"))
-      val algo = cfg.getStr("algo").getOrElse("auto")
-      require(algo == "exact" || algo == "bloom" || algo == "auto",
-        s"stage $name: unknown algo `$algo` (expected exact|bloom|auto)")
-      val autoMinBytes = cfg.getLong("auto_bloom_min_bytes")
-        .getOrElse(256L << 20)
       Pipeline.DataStage(name, m => {
         val eval = m.data.sparkSession.read.parquet(evalPath)
-        val useBloom = algo == "bloom" || (algo == "auto" &&
-          m.data.queryExecution.optimizedPlan.stats.sizeInBytes >= autoMinBytes)
-        if (useBloom)
+        if (m.data.queryExecution.optimizedPlan.stats.sizeInBytes >= DecontamBloomMinBytes)
           Decontaminate.decontaminateBloom(m.data, eval, id, text, n)
         else Decontaminate.decontaminate(m.data, eval, id, text, n)
       })
@@ -750,7 +748,7 @@ object OpStages {
       // opq: true — learn the signed-Hadamard-permutation rotation by
       // alternating minimization before quantizing (Pq.trainOpq); same
       // fixed-point determinism, measurably higher recall at the same
-      // bit budget (AnnRecallSmoke)
+      // bit budget (SMOKE.md "OPQ: learned rotation joins PQ")
       val opq = cfg.getBool("opq").getOrElse(false)
       val alts = cfg.getInt("opq_alternations").getOrElse(2)
       Pipeline.DataStage(name, m => {
@@ -796,7 +794,8 @@ object OpStages {
       val modelPath = cfg.getStr("model_path")
       // rerank: N — ADC shortlist of N per query, exact distance on the
       // shortlist only (the standard PQ serving recipe; ~2× recall@10 at
-      // the gate config, see AnnRecallSmoke). Omitted = ADC-only.
+      // the gate config, SMOKE.md "ANN recall: PQ joins the tuning-curve
+      // evidence"). Omitted = ADC-only.
       val rerank = cfg.getInt("rerank").getOrElse(0)
       require(rerank == 0 || rerank >= k,
         s"stage $name: `rerank` ($rerank) must be >= k ($k)")

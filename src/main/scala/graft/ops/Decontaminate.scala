@@ -75,20 +75,6 @@ object Decontaminate {
     */
   val AutoBitsPerGram = 10L
 
-  /** [[decontaminate]] with a bloom prefilter: identical output (the exact
-    * confirm removes false positives; bloom filters have no false
-    * negatives), but the train corpus is never exploded — only flagged
-    * docs are. With the default `expectedItems = 0` the filter is sized
-    * from the ACTUAL distinct eval-gram count (one metadata-sized count
-    * job over the eval side — benchmarks, not crawls): a fixed-size
-    * filter over-provisioned for a small eval set pays its full byte cost
-    * in every map-side partial merge and in every probe task's reference
-    * blob regardless of how few grams it holds (the prior fixed 4 MiB
-    * default cost ~0.5 s/gate at sf0.1 on filter plumbing alone).
-    * Explicit `expectedItems`/`numBits` skip the count job; oversize
-    * `expectedItems` rather than undersize — the filter degrades to more
-    * confirm work, never to misses.
-    */
   /** Auto-sized eval-gram sets at or below this collect to the driver: ONE
     * metadata-sized job yields the gram longs, from which both the filter
     * and the confirm join's local relation are built driver-side — vs
@@ -135,6 +121,20 @@ object Decontaminate {
         gramHashes(textCol, n), bloomBytes))
   }
 
+  /** [[decontaminate]] with a bloom prefilter: identical output (the exact
+    * confirm removes false positives; bloom filters have no false
+    * negatives), but the train corpus is never exploded — only flagged
+    * docs are. With the default `expectedItems = 0` the filter is sized
+    * from the ACTUAL distinct eval-gram count (one metadata-sized count
+    * job over the eval side — benchmarks, not crawls): a fixed-size
+    * filter over-provisioned for a small eval set pays its full byte cost
+    * in every map-side partial merge and in every probe task's reference
+    * blob regardless of how few grams it holds (the prior fixed 4 MiB
+    * default cost ~0.5 s/gate at sf0.1 on filter plumbing alone).
+    * Explicit `expectedItems`/`numBits` skip the count job; oversize
+    * `expectedItems` rather than undersize — the filter degrades to more
+    * confirm work, never to misses.
+    */
   def decontaminateBloom(train: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, n: Int = 8, expectedItems: Long = 0L,
       numBits: Long = 0L): DataFrame = {
@@ -171,8 +171,8 @@ object Decontaminate {
     * codegen'd early-exit probe over the in-row hash array — no explode
     * for the overwhelmingly-clean majority (the composable exists() +
     * might_contain form interprets its lambda per element, which measured
-    * SLOWER than the explode it replaces — DecontamSmoke) — then run the
-    * exact confirm on the flagged sliver only.
+    * SLOWER than the explode it replaces — SMOKE.md "Decontamination at 1M
+    * docs") — then run the exact confirm on the flagged sliver only.
     */
   private def probeAndConfirm(train: DataFrame, grams: DataFrame,
       bloomBytes: Array[Byte], idCol: String, textCol: String,

@@ -490,9 +490,9 @@ object Dedup {
     resolveClustersStats(pairs, maxIters, smallGraphEdges)._1
 
   /** [[resolveClusters]] plus the number of propagation rounds it ran — the
-    * observable for the O(log diameter) pointer-jumping claim (ClusterSmoke
-    * measures rounds against known-diameter graphs). The fast path reports
-    * 0 rounds.
+    * observable for the O(log diameter) pointer-jumping claim (DedupSpec
+    * bounds rounds on known-diameter graphs; SMOKE.md "Connected components
+    * at 10M nodes" has the scale numbers). The fast path reports 0 rounds.
     *
     * Small-graph fast path: pair graphs are usually tiny next to the corpus
     * that produced them (near-dup edges, not documents), while the

@@ -515,7 +515,8 @@ object Pq {
     * shortlist of `shortlist` candidates (quantization error picks the
     * POOL), then the exact e6-integer squared L2 against `vecCol` on only
     * those rows (full precision picks the WINNERS). Measured ~2× recall@10
-    * over ADC-only at the gate config (AnnRecallSmoke). Output schema is
+    * over ADC-only at the gate config (SMOKE.md "ANN recall: PQ joins the
+    * tuning-curve evidence"). Output schema is
     * [[adcTopK]]'s (idCol, dist_e6), but `dist_e6` is the EXACT distance.
     *
     * Scale shape: the shortlist id-frame is a k-row TakeOrdered result,

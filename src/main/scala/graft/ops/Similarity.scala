@@ -298,7 +298,8 @@ object Similarity {
     *  - cosine arithmetic: sequential dot, sqrt of sequential sum of
     *    squares computed ONCE per row, norm product, divide — the exact op
     *    order of the native expressions ([[graft.plans.VectorExpressions]]),
-    *    verified bit-identical at x10 (ScaleInvariantSmoke); try_divide's
+    *    bit-identical to an independent in-memory pass (KnnStreamingSpec;
+    *    at x10 in SMOKE.md, round 16); try_divide's
     *    divisor==0 → null and null/mismatched/null-element arrays → null;
     *  - ordering: cos DESC NULLS LAST (NaN greatest, ±0.0 equal — Spark's
     *    normalized float ordering), ties by id_r ASC under Spark's binary

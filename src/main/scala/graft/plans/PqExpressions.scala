@@ -239,7 +239,7 @@ object PqAdcTable {
   * [[graft.ops.Pq.adcKnnJoinRerank]]): the ADC shortlist is re-scored at
   * FULL precision, so quantization error picks the candidate pool but the
   * true distance picks the winners (measured ~2× recall@10 at the gate
-  * config — see AnnRecallSmoke).
+  * config — SMOKE.md "ANN recall: PQ joins the tuning-curve evidence").
   *
   * The HOF form (`aggregate(zip_with(a, b, (x, y) -> (x-y)*(x-y)), ...)`)
   * is interpreted per row; this is one primitive loop of dim integer

@@ -135,7 +135,8 @@ object Sessionize {
     *   org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
     * }}}
     * Evidence at 1M concurrent users (open → extend → timeout-close, state
-    * fully evicted): `StreamSmoke.scala` + SMOKE.md.
+    * fully evicted): SMOKE.md "Streaming sessionization at 1M-user state";
+    * StreamingSpec runs the same shape under RocksDB at test scale.
     */
   def streamingWithTimeout(events: Dataset[Ev], gapMinutes: Int,
       watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {

@@ -202,6 +202,25 @@ class RangeJoinSpec extends SparkSpec {
     assert(out === Set((2L, "a"), (3L, "a"), (2L, "point"), (5L, "wide")))
   }
 
+  test("hot key holding 10% of rows: as-of matches most points, interval join stays non-empty") {
+    // 10k points / 1k rights over 100 keys, times over 1e6 units
+    def keyed(n: Long, parts: Int) = spark.range(0, n, 1, parts).select(
+      col("id"),
+      when(pmod(col("id"), lit(10)) === 0, 0L)
+        .otherwise(pmod(hash(col("id")), lit(100)).cast("long")).as("k"),
+      pmod(hash(col("id") * 31), lit(1000000)).cast("long").as("t"))
+      .filter(col("t") >= 0)
+    val left = keyed(10000L, 8)
+    val right = keyed(1000L, 4).select(col("k"), col("t").as("rt"), col("id").as("rid"))
+    val asof = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("rid"),
+      dedupRight = Some("rid")).filter(col("rid").isNotNull).count()
+    assert(asof > 5000L, s"suspiciously few asof matches: $asof")
+    val ivs = right.select(col("k"), (col("rt") - 1000L).as("s"),
+      (col("rt") + 1000L).as("e"), col("rid"))
+    assert(RangeJoin.pointInInterval(left, ivs, Seq("k"), "t", "s", "e",
+      Seq("rid"), bucketWidth = 2000L).count() > 0)
+  }
+
   test("interval wider than maxBucketsPerInterval raises instead of exploding") {
     val huge = Seq((1L, 0L, 1000000L, "huge")).toDF("user_id", "s", "e", "tag")
     val e = intercept[Exception] {

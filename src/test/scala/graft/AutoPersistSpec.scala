@@ -7,8 +7,8 @@ import graft.meds.{MedsData, MedsSchema}
 import graft.operators.Pipeline
 
 /** Pins the fork-point auto-persist decision rule of Pipeline.runTracked
-  * (VERDICT r15 #3: the rule was probe-measured by AutoPersistProbe but no
-  * assertion protected it). The four branches:
+  * (VERDICT r15 #3: the rule was probe-measured — SMOKE.md "Round 15:
+  * fork-point auto-persist" — but no assertion protected it). The four branches:
   *   1. a Metadata stage entered with a DIRTY data lineage persists exactly
   *      once (MEMORY_AND_DISK) and returns the frame for later unpersist;
   *   2. a raw-scan lineage (no transforming stage yet) never persists —

@@ -267,6 +267,21 @@ class BpeSpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  test("encode yields at least one subword per word on a Zipfian corpus with a rare tail") {
+    // 90% of positions draw from a ~2k-word head, 10% are document-unique
+    // rare words (the memo-miss tail)
+    val docs = spark.range(0, 2000L, 1, 8).select(col("id").as("doc_id"),
+      array_join(transform(sequence(lit(1), lit(40)), i =>
+        when(i % 10 === 0, concat(lit("rare"), col("id"), lit("x"), i))
+          .otherwise(concat(lit("w"), pmod(col("id") * i + i * i, lit(100)) *
+            pmod(col("id") + i, lit(100))))), " ").as("text"))
+    val dict = Bpe.wordFrequencies(docs, "text", maxWords = 100000)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val merges = Bpe.train(dict.toSeq, numMerges = 1000)
+    val total = docs.select(sum(size(Bpe.encode(col("text"), merges)))).head().getLong(0)
+    assert(total >= 40L * 2000, s"every doc has 40 words -> >= 40 subwords each, got $total")
+  }
+
   /** Independent re-implementation of BPE application, for the oracle-class
     * cross-check of the `bpe_tokens` gate (whose output DuckDB cannot replay:
     * the merge fixpoint is not one SQL query). Deliberately a DIFFERENT

@@ -127,6 +127,42 @@ class KnnStreamingSpec extends SparkSpec {
     assertSame(auto, streaming(df))
   }
 
+  test("sf0.001 embeddings: production and window plans equal an independent in-memory pass, cosines bit-equal") {
+    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .withColumn("embedding", col("embedding").cast("array<double>"))
+    def ranked(df: DataFrame): Map[(Long, Long, Long), Double] = df.collect().map(r =>
+      (r.getAs[Long]("id_l"), r.getAs[Long]("id_r"), r.getAs[Number]("rank").longValue) ->
+        r.getAs[Double]("cos")).toMap
+    // all pairs per block on the driver, in the native expressions' exact
+    // op order: sequential dot, sqrt of the sequential sum of squares, norm
+    // product, one divide; top 3 by (cos desc, id asc)
+    def dot(a: Array[Double], b: Array[Double]) = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val independent = embs.collect().groupBy(_.getAs[Int]("label")).values.flatMap { blk =>
+      val ids = blk.map(_.getAs[Long]("vec_id"))
+      val vecs = blk.map(_.getAs[Seq[Double]]("embedding").toArray)
+      val norms = vecs.map(v => math.sqrt(dot(v, v)))
+      ids.indices.flatMap { a =>
+        ids.indices.filter(_ != a)
+          .map(b => (ids(b), dot(vecs(a), vecs(b)) / (norms(a) * norms(b))))
+          .sortBy { case (id, c) => (-c, id) }.take(3).zipWithIndex
+          .map { case ((id, c), r) => (ids(a), id, r + 1L) -> c }
+      }
+    }.toMap
+    val production = Similarity.knnJoin(embs, embs, "vec_id", "embedding", "label",
+      k = 3, maxBlockSize = Some(100000))
+    for ((plan, df) <- Seq("production" -> production,
+        "window" -> window(embs, cap = Some(100000)))) {
+      val got = ranked(df)
+      assert(got.keySet == independent.keySet, s"$plan: (id_l, id_r, rank) set drift")
+      val maxDiff = got.map { case (k, c) => math.abs(c - independent(k)) }.max
+      assert(maxDiff == 0.0, s"$plan: cosine arithmetic drift $maxDiff")
+    }
+  }
+
   test("embeddingPairs: salt leaves the pair set invariant") {
     val df = randomCorpus(60, 8, 2, seed = 41L)
     val plain = graft.ops.Dedup.embeddingPairs(df, "vec_id", "embedding",

@@ -53,6 +53,33 @@ class LanguageModelSpec extends SparkSpec {
     }
   }
 
+  test("skewed 10-source corpus: every multi-token doc gets a score and a prediction") {
+    // ~8 tokens per doc over a ~50k vocabulary; the 10 sources (doc_id
+    // mod 10) each over-sample their own tokens
+    def corpus(n: Long) = spark.range(0, n, 1, 8).select(
+      col("id").as("doc_id"),
+      concat_ws(" ",
+        concat(lit("w"), pmod(col("id") * 7, lit(50021))),
+        concat(lit("w"), pmod(col("id") * 13 + pmod(col("id"), lit(10)) * 5000, lit(50021))),
+        concat(lit("w"), pmod(col("id") * 31, lit(997))),
+        concat(lit("w"), pmod(col("id"), lit(10)) * lit(100)),
+        concat(lit("w"), pmod(col("id") * 3, lit(50021))),
+        concat(lit("w"), pmod(col("id") * 17, lit(997))),
+        concat(lit("w"), pmod(col("id") * 23, lit(50021))),
+        concat(lit("w"), pmod(col("id"), lit(10)))).as("text"))
+    val docs = corpus(2000L)
+    val lm = LanguageModel.selfPerplexity(docs, "doc_id", "text")
+      .agg(count(lit(1)), sum(when(col("avg_nll").isNull, 1))).head()
+    assert(lm.getLong(0) == 2000L, s"row count ${lm.getLong(0)}")
+    assert(lm.isNullAt(1), s"null scores for multi-token docs: $lm")
+
+    val seed = corpus(400L).withColumn("label", concat(lit("L"), pmod(col("doc_id"), lit(4))))
+    val (tc, priors) = Classifier.trainNaiveBayes(seed, "text", "label")
+    val preds = Classifier.nbClassify(docs, "doc_id", "text", tc, priors)
+      .filter(col("pred").isNotNull).count()
+    assert(preds == 2000L, s"pred count $preds")
+  }
+
   test("scores are identical under different input partitioning") {
     val corpus = (0L until 60L).map(i =>
       (i, s"tok${i % 7} tok${(i + 1) % 5} tok${i % 3} tok${(i * 3) % 11}"))

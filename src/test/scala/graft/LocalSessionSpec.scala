@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The session factory: `SPARK_GRAFT_CPUS` resolution, its settings on the
   * live shared session (no second session is built), and that it stays the
-  * only place a session is built. */
+  * only place a session is built. Also guards against new test-side mains. */
 class LocalSessionSpec extends SparkSpec {
 
   test("cpus: unset or * = all cores, a positive integer as given, else an error") {
@@ -27,17 +27,34 @@ class LocalSessionSpec extends SparkSpec {
     assert(conf.get("spark.ui.enabled") == "false")
   }
 
-  test("no source file other than the factory builds a SparkSession") {
+  /** Every `*.scala` file under `src` as (path, contents). */
+  private def sources(): Seq[(Path, String)] = {
     val src = Paths.get("src")
     assert(Files.isDirectory(src), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
-    val builder = "SparkSession\\.builder\\(\\)".r
     val walk = Files.walk(src)
-    val offenders =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "LocalSession.scala")
-        .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
-        .map(_.toString).toSeq.sorted
-      finally walk.close()
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toList
+    finally walk.close()
+  }
+
+  test("no source file other than the factory builds a SparkSession") {
+    val builder = "SparkSession\\.builder\\(\\)".r
+    val offenders = sources().collect {
+      case (p, text) if p.getFileName.toString != "LocalSession.scala" &&
+        builder.findFirstIn(text).isDefined => p.toString
+    }.sorted
     assert(offenders.isEmpty, s"build sessions through graft.LocalSession: ${offenders.mkString(", ")}")
+  }
+
+  test("no test-side main outside the x10 replica tools") {
+    // checks belong in suites `sbt test` runs; only the x10 builders stay mains
+    val allowed = Set("ScaleUpBench.scala", "ScaleUpSuite.scala")
+    val main = """\bdef\s+main\b""".r
+    val offenders = sources().collect {
+      case (p, text) if p.startsWith(Paths.get("src", "test")) &&
+        !allowed(p.getFileName.toString) && main.findFirstIn(text).isDefined => p.toString
+    }.sorted
+    assert(offenders.isEmpty, s"move these checks into a suite: ${offenders.mkString(", ")}")
+    assert(!Files.exists(Paths.get("src/main/scala/graft/DecontamCrossover.scala")))
   }
 }

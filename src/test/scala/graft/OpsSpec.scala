@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.functions.GraftFunctions
@@ -273,6 +274,36 @@ class DedupSpec extends SparkSpec {
     assert(atLimit == got && below == got)
   }
 
+  test("resolveClusters: parallel chains and a hub star on the distributed path, log-diameter rounds") {
+    // 10 parallel 1,000-node paths: each collapses onto its base node, and
+    // pointer jumping converges within log2(diameter) + 2 rounds
+    val chainLen = 1000L
+    val nChains = 10L
+    val chainEdges = spark.range(0, nChains * chainLen, 1, 8)
+      .filter(pmod(col("id"), lit(chainLen)) =!= (chainLen - 1)) // no edge past a chain end
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val (chainLabels, rounds) =
+      Dedup.resolveClustersStats(chainEdges, maxIters = 25, smallGraphEdges = 0)
+    val chains = chainLabels.groupBy("cluster_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(chains.keySet == (0L until nChains).map(_ * chainLen).toSet,
+      "chain cluster representative is not the min node id")
+    assert(chains.values.forall(_ == chainLen), s"chain sizes: ${chains.values}")
+    val logD = (math.log(chainLen.toDouble) / math.log(2)).ceil.toInt
+    assert(rounds <= logD + 2, s"rounds $rounds exceed log-diameter bound ${logD + 2}")
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(chainLabels)
+    // one hub with 10,000 leaves: the high-degree skew shape
+    val nLeaves = 10000L
+    val (starLabels, _) = Dedup.resolveClustersStats(
+      spark.range(1, nLeaves + 1, 1, 8).select(lit(0L).as("id_a"), col("id").as("id_b")),
+      maxIters = 25, smallGraphEdges = 0)
+    val star = starLabels.agg(countDistinct(col("cluster_id")), count(lit(1)),
+      max(col("cluster_id"))).head()
+    assert(star.getLong(0) == 1L && star.getLong(1) == nLeaves + 1 &&
+      star.getLong(2) == 0L, s"star labels wrong: $star")
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(starLabels)
+  }
+
   test("dedupLines: first occurrence survives, later copies drop, columns pass through") {
     val d = Seq(
       (1L, "alpha beta\ncommon footer\ngamma", "web"),
@@ -355,6 +386,72 @@ class DedupSpec extends SparkSpec {
           r.getAs[Long]("span_end"), r.getAs[Long]("n_grams"))).toSet
       assert(got == expected, s"trial=$trial keepFirst=$keepFirst")
     }
+  }
+
+  test("line and span census on a corpus with a hot boilerplate line and a planted shared run") {
+    val nDocs = 2000L
+    val navVariants = 100
+    // every second doc opens with the same boilerplate line; the nav line
+    // has `navVariants` variants; the other lines are unique
+    val docs = spark.range(0, nDocs, 1, 8).select(col("id").as("doc_id"),
+      concat_ws("\n",
+        when(pmod(col("id"), lit(2)) === 0, lit("ACCEPT COOKIES TO CONTINUE"))
+          .otherwise(concat(lit("u"), col("id"), lit("z"))),
+        concat(lit("nav"), pmod(col("id"), lit(navVariants))),
+        concat(lit("u"), col("id"), lit("a")),
+        concat(lit("u"), col("id"), lit("b"))).as("text"))
+    val lines = Dedup.dedupLines(docs, "doc_id", "text")
+      .select(coalesce(sum(when(length(col("text")) > 0,
+          size(split(col("text"), "\n"))).otherwise(0)), lit(0L)),
+        coalesce(sum(when(col("text").contains("ACCEPT COOKIES"), 1L)
+          .otherwise(0L)), lit(0L)))
+      .head()
+    assert(lines.getLong(1) == 1L, s"boilerplate must survive exactly once, got ${lines.getLong(1)}")
+    // surviving census: odd docs' u*z, every u*a and u*b, one copy of each
+    // nav variant, one boilerplate line
+    assert(lines.getLong(0) == nDocs / 2 + 2 * nDocs + navVariants + 1,
+      s"surviving-line census off: ${lines.getLong(0)}")
+
+    // every 100th doc carries the same 12-token run at tokens [10, 22) of a
+    // pseudo-random 30-token body over a 500k vocab
+    def tokenRun(from: Int, until: Int) = concat_ws(" ", (from until until).map(i =>
+      concat(lit("w"), pmod(hash(col("id") * 131 + lit(i * 17)), lit(500000)))): _*)
+    val run = (0 until 12).map(i => s"r${i}shared").mkString(" ")
+    val spanDocs = spark.range(0, nDocs, 1, 8).select(col("id").as("doc_id"),
+      concat_ws(" ", tokenRun(0, 10),
+        when(pmod(col("id"), lit(100)) === 0, lit(run)).otherwise(tokenRun(10, 22)),
+        tokenRun(22, 30)).as("text"))
+    val spans = Dedup.duplicateSpans(spanDocs, "doc_id", "text", k = 8)
+      .select(
+        coalesce(sum(when(col("span_start") <= 10 && col("span_end") >= 22, 1L)
+          .otherwise(0L)), lit(0L)),
+        coalesce(sum(when(col("span_start") === 10 && col("span_end") === 22, 1L)
+          .otherwise(0L)), lit(0L)),
+        count(lit(1)))
+      .head()
+    val (containing, tight, total) = (spans.getLong(0), spans.getLong(1), spans.getLong(2))
+    val copies = nDocs / 100
+    // one span covering the run on every copy but the globally-first; a
+    // span may widen only where a boundary token birthday-collides
+    assert(total == copies - 1 && containing == copies - 1,
+      s"total=$total containing=$containing")
+    assert(containing - tight <= 600L, s"widened spans: ${containing - tight}")
+  }
+
+  test("dedupAgainst: every reformatted release copy matches; the bloom path agrees") {
+    def body(id: Column) = concat(lit("document body number "), id, lit(" with trailing words"))
+    val crawl = spark.range(0, 10000L, 1, 8).select(col("id").as("doc_id"), body(col("id")).as("text"))
+    // the release covers ids 0..999; its even ids differ in case and
+    // whitespace, which normalization must still match
+    val release = spark.range(0, 1000L, 1, 4).select(
+      when(pmod(col("id"), lit(2)) === 0,
+        upper(concat(lit("  document body number "), col("id"), lit("  with trailing words "))))
+        .otherwise(body(col("id"))).as("text"))
+    val exact = Dedup.dedupAgainst(crawl, "doc_id", "text", release, "text").count()
+    assert(exact == 9000L, s"expected 9000 survivors, got $exact")
+    val bloom = Dedup.dedupAgainst(crawl, "doc_id", "text", release, "text",
+      bloomItems = 1000L).count()
+    assert(bloom == exact, s"bloom path diverged: $bloom vs $exact")
   }
 
   test("removeDuplicateSpans: span tokens drop, untouched docs byte-identical") {

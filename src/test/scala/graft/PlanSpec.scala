@@ -108,6 +108,24 @@ class PlanSpec extends SparkSpec {
     assert(first == "k1")
   }
 
+  test("withGlobalRowNumber past 256 range partitions: broadcast-offsets join, exact 1..n") {
+    // 257 range partitions (one past the map-literal bound) with AQE
+    // coalescing off force the broadcast-join offsets branch
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val old = keys.map(spark.conf.get)
+    spark.conf.set(keys(0), "257")
+    spark.conf.set(keys(1), "false")
+    try {
+      val df = spark.range(0, 5000, 1, 8).select(pmod(col("id"), lit(1000)).as(SubjectId),
+        timestamp_micros(lit(1700000000000000L) + col("id") * 1000000L).as(Time))
+      val numbered = graft.functions.GraftFunctions.withGlobalRowNumber(
+        df, "pos", Seq(col(SubjectId), col(Time)))
+      assert(numbered.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+      val mx = numbered.agg(max("pos"), countDistinct("pos")).head()
+      assert(mx.getLong(0) == 5000L && mx.getLong(1) == 5000L, s"$mx")
+    } finally keys.zip(old).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("withGlobalRowNumberKeyed: exact 1..n, agrees with the generic variant, skew-safe") {
     import spark.implicits._
     // skewed numeric leading key (one subject holds 30% of rows) + secondary

@@ -196,6 +196,9 @@ class ReshardPipelineSpec extends SparkSpec {
     val k = out.data.filter(col(Split) === "train")
       .select(Shard).distinct().count()
     assert(k == 3) // 24 train subjects / 10 per shard -> 3 shards
+    val perShard = out.data.groupBy(Split, Shard).agg(countDistinct(SubjectId))
+      .collect().map(_.getLong(2))
+    assert(perShard.forall(_ <= 10), s"oversized shards: ${perShard.toSeq}")
     // reference-parity (driver-permutation) mode builds and partitions too
     val parity = Pipeline.run(spark, meds, PipelineConfig.fromJson(
       """{"stages": [{"reshard_to_split": {"n_shards": 2, "reference_parity": true}}]}""").stages)

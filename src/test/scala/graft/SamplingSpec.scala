@@ -121,6 +121,33 @@ class SamplingSpec extends SparkSpec {
     assert(again == kept)
   }
 
+  test("token_budget_cap: kept count per stratum is budget-bound, not stratum-bound") {
+    import org.apache.spark.sql.functions._
+    // 70% of the corpus in one hot stratum; 20-token docs, so a 1,000-token
+    // budget fills each stratum with 50 docs (the straddler included)
+    val corpus = spark.range(0, 10000L, 1, 8).select(col("id").as("doc_id"),
+      when(pmod(col("id"), lit(10)) < 7, lit("hot"))
+        .otherwise(concat(lit("s"), pmod(col("id"), lit(10)))).as("lang"),
+      concat_ws(" ", (1 to 20).map(i => concat(lit("w"), col("id") + i)): _*).as("text"))
+    val kept = Sampling.tokenBudgetCap(corpus, "doc_id", "text", 1000L, Some("lang"))
+      .groupBy("lang").count().collect().map(r => r.getString(0) -> r.getLong(1))
+    kept.foreach { case (lang, n) => assert(n >= 50 && n <= 51, s"stratum $lang kept $n docs") }
+  }
+
+  test("deterministicShuffle: positions are exactly 1..n, independent of partitioning") {
+    import org.apache.spark.sql.functions._
+    val ids = spark.range(0, 20000L, 1, 8).select(col("id").as("doc_id"))
+    val agg = Sampling.deterministicShuffle(ids, "doc_id")
+      .agg(count(lit(1)), min("shuffle_pos"), max("shuffle_pos"),
+        count_distinct(col("shuffle_pos"))).head()
+    assert(agg.getLong(0) == 20000L && agg.getLong(1) == 1L &&
+      agg.getLong(2) == 20000L && agg.getLong(3) == 20000L,
+      s"shuffle positions not a permutation: $agg")
+    def spot(df: org.apache.spark.sql.DataFrame) = Sampling.deterministicShuffle(df, "doc_id")
+      .filter(col("doc_id") < 5).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(spot(ids) == spot(ids.repartition(7)), "shuffle not partitioning-independent")
+  }
+
   test("resample_mix: integer rates repeat exactly, fractional rates match sample()") {
     val d = docs.withColumn("source",
       when(col("doc_id") % 3 === 0, "a").when(col("doc_id") % 3 === 1, "b")

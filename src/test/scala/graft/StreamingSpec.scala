@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 
@@ -151,6 +152,64 @@ class TemporalStreamSpec extends SparkSpec {
 }
 
 class StreamingSpec extends SparkSpec {
+
+  test("RocksDB state store: sessions open, extend and time out; as-of state churns per key") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.{Sessionize, TemporalStream}
+    import graft.streaming.TemporalStream.TEv
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val old = spark.conf.getOption(provider)
+    spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val nUsers = 500L
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rocksdb")
+    def ts(minute: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
+    try {
+      // open a session per user, extend it, then one far-future event moves
+      // the watermark past every session: all close via event-time timeout
+      val in1 = MemoryStream[Sessionize.Ev]
+      val q1 = Sessionize.streamingWithTimeout(in1.toDS(), gapMinutes = 30,
+        watermarkDelay = "1 minute").writeStream.outputMode("append")
+        .option("checkpointLocation", tmp.resolve("sessions").toString)
+        .format("memory").queryName("rocks_sessions").start()
+      try Seq(
+          (1L to nUsers).map(u => Sessionize.Ev(u, ts(0), 0L, 1.0)),
+          (1L to nUsers).map(u => Sessionize.Ev(u, ts(5), 5L, 1.0)),
+          Seq(Sessionize.Ev(0L, java.sql.Timestamp.valueOf("2024-01-01 12:00:00"), 99L, 1.0)))
+        .foreach { b => in1.addData(b); q1.processAllAvailable() }
+      finally q1.stop()
+      assert(q1.lastProgress.stateOperators(0).customMetrics.keySet.asScala
+        .exists(_.startsWith("rocksdb")), "state store is not RocksDB")
+      val s = spark.table("rocks_sessions")
+        .agg(count(lit(1)), countDistinct("user_id"), sum("n_events")).head()
+      assert(s.getLong(0) == nUsers && s.getLong(1) == nUsers && s.getLong(2) == 2 * nUsers,
+        s"session shape wrong: $s")
+
+      // streaming as-of: seed one reference per key, enrich two queries per
+      // key, then churn the references and enrich again
+      val in2 = MemoryStream[TEv]
+      val q2 = TemporalStream.streamingAsOf(in2.toDS()).writeStream.outputMode("append")
+        .option("checkpointLocation", tmp.resolve("asof").toString)
+        .format("memory").queryName("rocks_asof").start()
+      try Seq(
+          (1L to nUsers).map(k => TEv(k, Some(100L), 0, k)),
+          (1L to nUsers).flatMap(k => Seq(TEv(k, Some(150L), 1, k * 10), TEv(k, Some(200L), 1, k * 10 + 1))),
+          (1L to nUsers).flatMap(k => Seq(TEv(k, Some(300L), 0, k + nUsers), TEv(k, Some(400L), 1, k * 10 + 2))))
+        .foreach { b => in2.addData(b); q2.processAllAvailable() }
+      finally q2.stop()
+      val enr = spark.table("rocks_asof")
+      val total = enr.count()
+      val matched = enr.filter(col("matched_id").isNotNull).count()
+      assert(total == 3 * nUsers && matched == 3 * nUsers, s"total=$total matched=$matched")
+      val late = enr.filter(col("id") % 10 === 2).filter(col("matched_t") =!= 300L).count()
+      assert(late == 0, s"$late batch-3 queries missed the churned reference")
+    } finally old match {
+      case Some(v) => spark.conf.set(provider, v)
+      case None => spark.conf.unset(provider)
+    }
+  }
 
   test("streaming dedup drops repeated content within the watermark horizon") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

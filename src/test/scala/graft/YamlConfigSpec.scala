@@ -643,6 +643,16 @@ class YamlConfigSpec extends SparkSpec {
     } finally PipelineConfig.unregister("tag_rows")
   }
 
+  test("decontaminate rejects keys it does not know, naming them") {
+    val e = intercept[IllegalArgumentException] {
+      PipelineConfig.fromYaml(
+        "stages:\n  - decontaminate:\n      eval_path: /x\n      algo: bloom\n")
+    }
+    assert(e.getMessage.contains("stage decontaminate: unknown key(s) algo"), e.getMessage)
+    // the known keys still build
+    PipelineConfig.fromYaml("stages:\n  - decontaminate:\n      eval_path: /x\n      ngram: 4\n")
+  }
+
   test("unregistered unknown stage still fails fast") {
     intercept[IllegalArgumentException] {
       PipelineConfig.fromJson("""{"stages": ["no_such_stage"]}""")
