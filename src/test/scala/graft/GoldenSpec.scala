@@ -8,13 +8,23 @@ import graft.operators._
 
 /** Golden parity against the reference's own shipped example dataset
   * (the reference checkout's example/data — the `simple_static_MEDS`
-  * fixture used by its stage scenarios; see FIXTURES.md §4-5). Expectations below are the
-  * reference's published golden outputs (e.g. filter_subjects/examples/
-  * out_data.yaml keeps exactly subjects 239684, 1195293, 1500733).
+  * fixture used by its stage scenarios; see FIXTURES.md §4-5). Expectations
+  * in the four value goldens that read `meds` are the reference's published
+  * golden outputs (e.g. filter_subjects/examples/out_data.yaml keeps exactly
+  * subjects 239684, 1195293, 1500733).
+  *
+  * Six tests need only a valid MEDS root and read the in-repo MedsFixture
+  * (`fixture`) instead: "train-only metadata stage sees only train-split
+  * subjects", "end-to-end pipeline: agg → fit vocab → normalize on example
+  * data", "bucketed layout: subject-keyed join and aggregation plan without
+  * shuffle", "dataset.json and .shards.json round-trip", "MedsIO write/read
+  * roundtrip preserves data and layout" and "MedsIO.write skips
+  * statically-empty metadata tables and still round-trips".
   */
 class GoldenSpec extends SparkSpec {
 
   private lazy val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+  private lazy val fixture = MedsIO.read(spark, MedsFixture.root)
 
   test("reads the MEDS layout with shard/split provenance") {
     assert(meds.data.count() == 62)
@@ -41,11 +51,13 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("train-only metadata stage sees only train-split subjects") {
+    val meds = fixture
     val trainData = Pipeline.trainOnly(graft.meds.MedsData(meds.data.drop(Split), meds.codes, meds.splits)).data
     assert(trainData.select(SubjectId).distinct().count() == 4)
   }
 
   test("end-to-end pipeline: agg → fit vocab → normalize on example data") {
+    val meds = fixture
     val out = Pipeline.run(spark, meds, Seq(
       Pipeline.MetadataStage("agg", m =>
         AggregateCodeMetadata(m.data, m.codes,
@@ -95,6 +107,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("bucketed layout: subject-keyed join and aggregation plan without shuffle") {
+    val meds = fixture
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     Seq("meds_bucketed_a", "meds_bucketed_b").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -126,6 +139,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("dataset.json and .shards.json round-trip") {
+    val meds = fixture
     val tmp = java.nio.file.Files.createTempDirectory("meds_meta").toString
     MedsIO.writeDatasetMetadata(tmp, "example", "1.0", Map("etl" -> "graft"))
     assert(MedsIO.readDatasetMetadata(tmp) ==
@@ -138,6 +152,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("MedsIO write/read roundtrip preserves data and layout") {
+    val meds = fixture
     val tmp = java.nio.file.Files.createTempDirectory("meds_rt").toString
     val sorted = meds.data
     MedsIO.write(graft.meds.MedsData(sorted, meds.codes, meds.splits), tmp)
@@ -165,6 +180,7 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("MedsIO.write skips statically-empty metadata tables and still round-trips") {
+    val meds = fixture
     def empty(schema: org.apache.spark.sql.types.StructType) =
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val tmp = java.nio.file.Files.createTempDirectory("meds_empty_meta").toString

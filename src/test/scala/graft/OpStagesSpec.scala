@@ -74,7 +74,7 @@ class OpStagesSpec extends SparkSpec {
         |      id_col: subject_id
         |      text_col: code
         |""".stripMargin
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     val before = Pipeline.run(spark, meds,
       PipelineConfig.fromYaml("stages:\n  - filter_subjects:\n      min_events_per_subject: 5\n").stages)
     val out = Pipeline.run(spark, meds, PipelineConfig.fromYaml(yaml).stages)

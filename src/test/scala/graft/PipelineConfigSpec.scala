@@ -7,8 +7,10 @@ import graft.meds.MedsSchema._
 import graft.operators.Pipeline
 
 /** Runs the reference's 7-stage end-to-end test pipeline
-  * (tests/test_pipeline.py PIPELINE_YAML, translated to JSON) against the
-  * reference example dataset through the config-driven builder.
+  * (tests/test_pipeline.py PIPELINE_YAML, translated to JSON) through the
+  * config-driven builder, plus the builder's orchestration contracts
+  * (match-revise, train_only, CLI checkpoints and resume, `conf:` blocks,
+  * per-stage `checkpoint: false`), over the in-repo MedsFixture root.
   */
 class PipelineConfigSpec extends SparkSpec {
 
@@ -39,7 +41,7 @@ class PipelineConfigSpec extends SparkSpec {
       "add_time_derived_measurements", "fit_outlier_detection", "occlude_outliers",
       "fit_normalization", "fit_vocabulary_indices", "normalization"))
 
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     val out = Pipeline.run(spark, meds, parsed.stages)
 
     // normalization replaced string codes with integral vocab indices
@@ -68,7 +70,7 @@ class PipelineConfigSpec extends SparkSpec {
         |       {"_matcher": {"code": "TEMP"}, "categorical_value": {"literal": "temp"}}
         |     ]}}
         |]}""".stripMargin
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     val out = Pipeline.run(spark, meds, PipelineConfig.fromJson(json).stages)
     val got = out.data.filter(col("categorical_value").isNotNull)
       .select(Code, "categorical_value").distinct().collect()
@@ -79,7 +81,7 @@ class PipelineConfigSpec extends SparkSpec {
   test("data stage with train_only override sees only train-split rows") {
     val json =
       """{"stages": [{"filter_subjects": {"min_events_per_subject": 1, "train_only": true}}]}"""
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     val out = Pipeline.run(spark, meds, PipelineConfig.fromJson(json).stages)
     val splits = out.data.select(Split).distinct().collect().map(_.getString(0)).toSet
     assert(splits == Set("train"))
@@ -94,7 +96,7 @@ class PipelineConfigSpec extends SparkSpec {
         |  {"fit_outlier_detection": {"_base_stage": "aggregate_code_metadata",
         |     "aggregations": ["values/n_occurrences", "values/sum", "values/sum_sqd"]}}
         |]}""".stripMargin)
-    val args = Array(pipelineJson, ReferenceCheckout.exampleData, s"$tmp/out", s"$tmp/ckpt")
+    val args = Array(pipelineJson, MedsFixture.root, s"$tmp/out", s"$tmp/ckpt")
     Main.run(args, spark)
     assert(Pipeline.isComplete(spark, s"$tmp/out"))
     val out = MedsIO.read(spark, s"$tmp/out")
@@ -125,7 +127,7 @@ class PipelineConfigSpec extends SparkSpec {
   }
 
   test("pipeline resume skips completed checkpointed stages (.done analog)") {
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val stage = Pipeline.DataStage("fs",
       m => graft.operators.FilterSubjects(m.data, minEventsPerSubject = Some(5)))
@@ -163,7 +165,7 @@ class PipelineConfigSpec extends SparkSpec {
         |""".stripMargin)
     assert(parsed.conf == Seq("spark.sql.shuffle.partitions" -> "7"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_conf").toString
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     MedsIO.write(meds, s"$tmp/in")
     Main.run(Array(writeYaml(tmp,
       """conf:
@@ -215,7 +217,7 @@ class PipelineConfigSpec extends SparkSpec {
     assert(parsed.stages.map(_.name) ==
       Seq("filter_measurements", "reorder_measurements"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_nockpt").toString
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     MedsIO.write(meds, s"$tmp/in")
     Main.run(Array(writeYaml(tmp,
       """stages:

@@ -1,9 +1,12 @@
 package graft
 
-/** The MEDS-transforms reference checkout that the golden specs read their
-  * inputs and expectations from (its `example/data` tree, stage example
-  * scenarios and example pipeline). It is not part of this repository, so a
-  * spec that needs it fails with a message naming it, before any read.
+/** The MEDS-transforms reference checkout that the value goldens read their
+  * inputs and expectations from: GoldenScenarioSpec's 16 stage scenarios,
+  * YamlConfigSpec's run of the reference's example_pipeline.yaml, and the
+  * four GoldenSpec tests that pin the example/data values. It is not part of
+  * this repository, so a spec that needs it fails with a message naming it,
+  * before any read. Specs that need only a valid MEDS root read the in-repo
+  * MedsFixture instead.
   */
 object ReferenceCheckout {
   val Root = "/root/reference"

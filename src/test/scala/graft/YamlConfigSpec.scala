@@ -258,7 +258,7 @@ class YamlConfigSpec extends SparkSpec {
     assert(py.description == pj.description)
     assert(py.stages.map(_.name) == pj.stages.map(_.name))
 
-    val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+    val meds = MedsIO.read(spark, MedsFixture.root)
     val outY = Pipeline.run(spark, meds, py.stages)
     val outJ = Pipeline.run(spark, meds, pj.stages)
     assert(outY.data.count() == outJ.data.count())
@@ -274,7 +274,7 @@ class YamlConfigSpec extends SparkSpec {
         |  - filter_subjects:
         |      min_events_per_subject: 5
         |""".stripMargin)
-    Main.run(Array(yamlPath, ReferenceCheckout.exampleData, s"$tmp/out"), spark)
+    Main.run(Array(yamlPath, MedsFixture.root, s"$tmp/out"), spark)
     assert(Pipeline.isComplete(spark, s"$tmp/out"))
     assert(MedsIO.read(spark, s"$tmp/out").data.count() == 41) // filter_subjects golden
   }
@@ -292,12 +292,12 @@ class YamlConfigSpec extends SparkSpec {
         |          algo: sketch
         |          sketch_k: 1024
         |""".stripMargin)
-    Main.run(Array(yamlPath, ReferenceCheckout.exampleData, s"$tmp/out"), spark)
+    Main.run(Array(yamlPath, MedsFixture.root, s"$tmp/out"), spark)
     val got = MedsIO.read(spark, s"$tmp/out").codes
       .select(col("code"), col("`values/quantiles`"))
     // metadata stages run on the train split only (the reference's forced
     // train_only=True; Pipeline.MetadataStage) — mirror that here
-    val meds = Pipeline.trainOnly(MedsIO.read(spark, ReferenceCheckout.exampleData))
+    val meds = Pipeline.trainOnly(MedsIO.read(spark, MedsFixture.root))
     val want = graft.operators.AggregateCodeMetadata.compute(meds.data,
       Seq("values/quantiles"), Seq(0.25, 0.5, 0.75),
       quantileMode = "sketch", sketchK = 1024)
@@ -324,12 +324,12 @@ class YamlConfigSpec extends SparkSpec {
         |          lg_k: 16
         |        - "values/n_subjects"
         |""".stripMargin)
-    Main.run(Array(yamlPath, ReferenceCheckout.exampleData, s"$tmp/out"), spark)
+    Main.run(Array(yamlPath, MedsFixture.root, s"$tmp/out"), spark)
     val got = MedsIO.read(spark, s"$tmp/out").codes
       .select(col("code"), col("`code/n_subjects`").cast("long").as("ns"))
       .filter(col("ns").isNotNull)
     // exact regime (example data has 4 subjects): HLL estimate == exact
-    val meds = Pipeline.trainOnly(MedsIO.read(spark, ReferenceCheckout.exampleData))
+    val meds = Pipeline.trainOnly(MedsIO.read(spark, MedsFixture.root))
     val want = meds.data.groupBy("code")
       .agg(countDistinct("subject_id").as("ns"))
     assert(collectSet(got) === collectSet(want))
@@ -368,7 +368,7 @@ class YamlConfigSpec extends SparkSpec {
         |        - "values/sum"
         |        - "values/sum_sqd"
         |""".stripMargin)
-    val in = ReferenceCheckout.exampleData
+    val in = MedsFixture.root
     // the orchestrator shape: one stage per invocation, chained through roots
     Main.run(Array(p, in, s"$tmp/s1", "--stage=filter_subjects"), spark)
     Main.run(Array(p, s"$tmp/s1", s"$tmp/s2", "--stage=fit_outlier_detection"), spark)
@@ -396,7 +396,7 @@ class YamlConfigSpec extends SparkSpec {
         |""".stripMargin)
     // the reference's worker-fan-out invocation (runner.py:30-111) runs
     // unmodified: the launcher args are Spark's task scheduling here
-    Main.run(Array(p, ReferenceCheckout.exampleData, s"$tmp/mr", "--multirun",
+    Main.run(Array(p, MedsFixture.root, s"$tmp/mr", "--multirun",
       "worker=\"range(0,2)\"", "hydra/launcher=joblib", "hydra.launcher.n_jobs=2"), spark)
     assert(MedsIO.read(spark, s"$tmp/mr").data.count() == 41)
   }
@@ -429,7 +429,7 @@ class YamlConfigSpec extends SparkSpec {
         |  - filter_subjects:
         |      min_events_per_subject: 5
         |""".stripMargin)
-    val in = ReferenceCheckout.exampleData
+    val in = MedsFixture.root
     // one swept override -> two jobs, Hydra's numbered job dirs
     Main.run(Array(p, in, s"$tmp/sweep", "--multirun",
       "stages.filter_subjects.min_events_per_subject=1,5"), spark)
@@ -489,7 +489,7 @@ class YamlConfigSpec extends SparkSpec {
         |  - filter_subjects:
         |      min_events_per_subject: 1
         |""".stripMargin)
-    val in = ReferenceCheckout.exampleData
+    val in = MedsFixture.root
     Main.run(Array(p, in, s"$tmp/over",
       "stages.filter_subjects.min_events_per_subject=1"), spark)
     Main.run(Array(pEdited, in, s"$tmp/edit"), spark)
@@ -622,7 +622,7 @@ class YamlConfigSpec extends SparkSpec {
         m.data.withColumn("tag", lit(tag)))
     }
     try {
-      val meds = MedsIO.read(spark, ReferenceCheckout.exampleData)
+      val meds = MedsIO.read(spark, MedsFixture.root)
       // train_only: the registered stage must see only train-split rows
       val trainOut = Pipeline.run(spark, meds, PipelineConfig.fromJson(
         """{"stages": [{"tag_rows": {"train_only": true, "tag": "t"}}]}""").stages)
