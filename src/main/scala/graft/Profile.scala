@@ -1,12 +1,8 @@
 package graft
 
-import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import graft.obs.{Collector, Records}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-
-import scala.collection.mutable
 
 /** Gate profiler: where a gate's time goes, one mode per question.
   *
@@ -33,6 +29,9 @@ import scala.collection.mutable
   *    table more than once ([[graft.plans.PlanLint]] `duplicate-scan`) — a
   *    review list, not a failure. The streaming gates are skipped: their
   *    plan is per-batch.
+  *
+  * `jobs` and `stages` attach no listener of their own: each timed run goes
+  * through [[graft.obs.Collector.measure]] and the mode prints its records.
   *
   * `iters` (default 1) is the number of timed runs per gate for `time`,
   * `jobs` and `stages`; the walls include building the gate. Trailing
@@ -86,22 +85,20 @@ object Profile {
       times.map(t => f"$t%.2f").mkString(" "))
   }
 
-  /** Run `body` once to warm, then `iters` times with `listener` attached;
-    * the listener bus is drained before each `report(result, wall)`. */
-  private def traced[A](spark: SparkSession, name: String, iters: Int,
-      listener: SparkListener)(body: => A)(report: (A, Double) => Unit): Unit = {
-    val sc = spark.sparkContext
+  /** Run `body` once to warm, then `iters` times under
+    * [[graft.obs.Collector.measure]], handing each run's result, wall
+    * seconds (the body alone) and records to `report`. */
+  private def traced[A](spark: SparkSession, name: String, iters: Int)(
+      body: => A)(report: (A, Double, Records) => Unit): Unit = {
     body
     println(s"=== timed run: $name")
     for (_ <- 1 to iters) {
-      GraftListenerBridge.drain(sc) // the warm run's events are not this run's
-      sc.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val res = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      GraftListenerBridge.drain(sc)
-      sc.removeSparkListener(listener)
-      report(res, wall)
+      val ((res, wall), records) = Collector.measure(spark) {
+        val t0 = System.nanoTime()
+        val res = body
+        (res, (System.nanoTime() - t0) / 1e9)
+      }
+      report(res, wall, records)
     }
   }
 
@@ -121,75 +118,46 @@ object Profile {
   /** `body` materializes the profiled run once and returns its row count
     * (negative when it has none). */
   private def jobs(spark: SparkSession, name: String, iters: Int)(
-      body: => Long): Unit = {
-    final case class Job(start: Long, exec: Option[Long], callSite: String,
-        var end: Long = 0L)
-    val jobs = mutable.LinkedHashMap.empty[Int, Job]
-    // SQL execution id -> its action's call site (or job description)
-    val execs = mutable.HashMap.empty[Long, String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .map(_.toLong)
-        val callSite = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(js.stageInfos.lastOption.map(_.name).getOrElse(""))
-        jobs.synchronized { jobs(js.jobId) = Job(js.time, exec, callSite) }
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(je.jobId).foreach(_.end = je.time) }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          jobs.synchronized { execs(s.executionId) = s.description }
-        case _ =>
-      }
-    }
-    traced(spark, name, iters, listener)(body) { (rows, wall) =>
+      body: => Long): Unit =
+    traced(spark, name, iters)(body) { (rows, wall, records) =>
       var prevEnd = 0L
       var sumWall = 0.0
       var sumGap = 0.0
-      jobs.toSeq.sortBy(_._2.start).foreach { case (id, j) =>
+      records.jobs.sortBy(_.start).foreach { j =>
         val w = (j.end - j.start) / 1e3
         val gap = if (prevEnd == 0) 0.0 else math.max(0, j.start - prevEnd) / 1e3
         sumWall += w; sumGap += gap
         prevEnd = math.max(prevEnd, j.end)
-        val exec = j.exec.fold("exec=-")(e =>
-          s"exec=$e ${execs.getOrElse(e, "?")} |")
-        println(f"[job] $id%-4d wall=$w%6.3fs gap=$gap%6.3fs  " +
+        val exec = j.execution.fold("exec=-")(e =>
+          s"exec=$e ${records.executions.getOrElse(e, "?")} |")
+        println(f"[job] ${j.id}%-4d wall=$w%6.3fs gap=$gap%6.3fs  " +
           s"$exec ${j.callSite}".take(150))
       }
       val rowsCell = if (rows >= 0) s"rows=$rows " else ""
-      println(f"${rowsCell}wall=$wall%.2f s  jobs=${jobs.size} " +
+      println(f"${rowsCell}wall=$wall%.2f s  jobs=${records.jobs.size} " +
         f"sumJobWall=$sumWall%.2f sumGap=$sumGap%.2f")
-      jobs.clear()
-      execs.clear()
     }
-  }
 
-  private def stages(spark: SparkSession, dir: String, name: String, iters: Int): Unit = {
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        println(f"[stage] id=${si.stageId}%-4d tasks=${si.numTasks}%-4d " +
+  private def stages(spark: SparkSession, dir: String, name: String, iters: Int): Unit =
+    traced(spark, name, iters) {
+      val df = gate(spark, dir, name)
+      (df, Bench.force(df))
+    } { case ((df, rows), wall, records) =>
+      records.stages.foreach { s =>
+        val m = s.metrics
+        println(f"[stage] id=${s.id}%-4d tasks=${s.tasks}%-4d " +
           f"run=${m.executorRunTime / 1e3}%7.1fs " +
           f"cpu=${m.executorCpuTime / 1e9}%7.1fs " +
           f"shufW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fMB " +
           f"shufR=${m.shuffleReadMetrics.remoteBytesRead / 1e6 +
             m.shuffleReadMetrics.localBytesRead / 1e6}%8.1fMB " +
           f"spillMem=${m.memoryBytesSpilled / 1e6}%8.1fMB " +
-          f"spillDisk=${m.diskBytesSpilled / 1e6}%8.1fMB  ${si.name}")
+          f"spillDisk=${m.diskBytesSpilled / 1e6}%8.1fMB  ${s.name}")
       }
-    }
-    traced(spark, name, iters, listener) {
-      val df = gate(spark, dir, name)
-      (df, Bench.force(df))
-    } { case ((df, rows), wall) =>
       println(f"rows=$rows wall=$wall%.2f s")
       println("=== executed plan")
       println(df.queryExecution.executedPlan.toString.take(8000))
     }
-  }
 
   private def plan(spark: SparkSession, dir: String, name: String): Unit = {
     println(s"\n================ $name ================")

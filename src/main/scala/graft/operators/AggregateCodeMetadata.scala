@@ -454,13 +454,15 @@ object AggregateCodeMetadata {
     }
 
     // assemble on the grouping keys (null-safe: a null code is a genuine
-    // group); every side is metadata-sized, so broadcast the joins
+    // group); every side is metadata-sized, so the keyless cross join
+    // broadcasts. A full outer join has no broadcast build side (Spark drops
+    // the hint with a warning), so the keyed join carries none
     def joinKeyed(a: DataFrame, b: DataFrame): DataFrame =
       if (keys.isEmpty) a.crossJoin(broadcast(b))
       else {
         val (l, r) = (a.alias("__fp_l"), b.alias("__fp_r"))
         val cond = keys.map(k => col(s"__fp_l.$k") <=> col(s"__fp_r.$k")).reduce(_ && _)
-        l.join(broadcast(r), cond, "full")
+        l.join(r, cond, "full")
           .select((keys.map(k => coalesce(col(s"__fp_l.$k"), col(s"__fp_r.$k")).as(k)) ++
             a.columns.filterNot(keys.contains).map(c => col(s"__fp_l.$c")) ++
             b.columns.filterNot(keys.contains).map(c => col(s"__fp_r.$c"))): _*)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.obs.Collector
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.LogicalRDD
@@ -157,20 +157,8 @@ class CodesMaterializationSpec extends SparkSpec {
     val input = MedsIO.read(spark, in)
     val stages = PipelineConfig.fromFile(p).stages
     assert(stages.count(_.isInstanceOf[Pipeline.MetadataStage]) == 3)
-    val sc = spark.sparkContext
-    val callSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        js.stageInfos.lastOption.foreach(si => callSites.add(si.name))
-    }
-    org.apache.spark.GraftListenerBridge.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      Pipeline.run(spark, input, stages)
-      org.apache.spark.GraftListenerBridge.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    val probes = callSites.toArray.map(_.toString)
-      .filter(_.startsWith("isEmpty at Pipeline.scala"))
+    val jobs = Collector.measure(spark)(Pipeline.run(spark, input, stages))._2.jobs
+    val probes = jobs.map(_.callSite).filter(_.startsWith("isEmpty at Pipeline.scala"))
     assert(probes.length == 1, probes.mkString(", "))
   }
 

@@ -198,15 +198,17 @@ class GoldenSpec extends SparkSpec {
     assert(codesFile.isFile,
       "empty metadata must land as a single driver-written parquet FILE")
     assert(new java.io.File(s"$tmp/metadata/subject_splits.parquet").isFile)
+    // read() returns the canonical empty frames, nullability included
     val back = MedsIO.read(spark, tmp)
-    assert(back.codes.schema.fieldNames.toSeq ==
-      MedsSchema.codesSchema.fieldNames.toSeq && back.codes.count() == 0)
-    assert(back.codes.schema.map(_.dataType) == MedsSchema.codesSchema.map(_.dataType))
-    assert(back.splits.schema.fieldNames.toSeq ==
-      MedsSchema.splitsSchema.fieldNames.toSeq && back.splits.count() == 0)
+    assert(back.codes.schema == MedsSchema.codesSchema && back.codes.count() == 0)
+    assert(back.splits.schema == MedsSchema.splitsSchema && back.splits.count() == 0)
     // the empty file must also be readable WITHOUT the Spark footer key
-    // (reference/polars convention: schema from the parquet footer itself)
-    assert(spark.read.parquet(codesFile.toString).count() == 0)
+    // (reference/polars convention: schema from the parquet footer itself);
+    // a raw parquet read may relax nullability, so names and types only
+    val raw = spark.read.parquet(codesFile.toString)
+    assert(raw.count() == 0)
+    assert(raw.schema.map(f => f.name -> f.dataType) ==
+      MedsSchema.codesSchema.map(f => f.name -> f.dataType))
     // an empty frame at a NON-canonical schema is NOT skippable — its
     // schema must survive the round-trip exactly
     val odd = empty(org.apache.spark.sql.types.StructType(Seq(

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** The session factory: `SPARK_GRAFT_CPUS` resolution, its settings on the
   * live shared session (no second session is built), and that it stays the
-  * only place a session is built. Also guards against new test-side mains. */
+  * only place a session is built. Also guards against new test-side mains
+  * and against Spark listeners outside the graft.obs collector. */
 class LocalSessionSpec extends SparkSpec {
 
   test("cpus: unset or * = all cores, a positive integer as given, else an error") {
@@ -37,24 +39,32 @@ class LocalSessionSpec extends SparkSpec {
     finally walk.close()
   }
 
-  test("no source file other than the factory builds a SparkSession") {
-    val builder = "SparkSession\\.builder\\(\\)".r
-    val offenders = sources().collect {
-      case (p, text) if p.getFileName.toString != "LocalSession.scala" &&
-        builder.findFirstIn(text).isDefined => p.toString
+  /** Paths of the `sources()` that `exempt` does not cover and that match `pattern`. */
+  private def offenders(pattern: Regex)(exempt: Path => Boolean): Seq[String] =
+    sources().collect {
+      case (p, text) if !exempt(p) && pattern.findFirstIn(text).isDefined => p.toString
     }.sorted
-    assert(offenders.isEmpty, s"build sessions through graft.LocalSession: ${offenders.mkString(", ")}")
+
+  test("no source file other than the factory builds a SparkSession") {
+    val bad = offenders("SparkSession\\.builder\\(\\)".r)(_.getFileName.toString == "LocalSession.scala")
+    assert(bad.isEmpty, s"build sessions through graft.LocalSession: ${bad.mkString(", ")}")
+  }
+
+  test("no source file other than the collector attaches a Spark listener") {
+    // graft.obs.Collector.measure owns drain/attach/drain/detach; this spec
+    // is exempt because it spells the patterns out
+    val api = """\b((add|remove)SparkListener|(extends|new)\s+SparkListener|GraftListenerBridge|listenerBus)\b""".r
+    val bad = offenders(api)(p =>
+      p.endsWith("graft/obs/Collector.scala") || p.endsWith("LocalSessionSpec.scala"))
+    assert(bad.isEmpty, s"measure through graft.obs.Collector: ${bad.mkString(", ")}")
   }
 
   test("no test-side main outside the x10 replica tools") {
     // checks belong in suites `sbt test` runs; only the x10 builders stay mains
     val allowed = Set("ScaleUpBench.scala", "ScaleUpSuite.scala")
-    val main = """\bdef\s+main\b""".r
-    val offenders = sources().collect {
-      case (p, text) if p.startsWith(Paths.get("src", "test")) &&
-        !allowed(p.getFileName.toString) && main.findFirstIn(text).isDefined => p.toString
-    }.sorted
-    assert(offenders.isEmpty, s"move these checks into a suite: ${offenders.mkString(", ")}")
+    val bad = offenders("""\bdef\s+main\b""".r)(p =>
+      !p.startsWith(Paths.get("src", "test")) || allowed(p.getFileName.toString))
+    assert(bad.isEmpty, s"move these checks into a suite: ${bad.mkString(", ")}")
     assert(!Files.exists(Paths.get("src/main/scala/graft/DecontamCrossover.scala")))
   }
 }

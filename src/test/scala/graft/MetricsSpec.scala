@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.obs.Collector
 
-/** Shuffle-volume regression net (VERDICT r9 #3): SparkListener-accumulated
-  * totals for the heaviest operators at sf0.1, asserted against pinned
-  * upper bounds with ~2.5× headroom — the 100×-relevant quantities (bytes
+/** Shuffle-volume regression net (VERDICT r9 #3): stage-completed task
+  * metrics of the heaviest operators at sf0.1, summed from the records of
+  * [[graft.obs.Collector.measure]] (whose bus drains keep the warm run's
+  * events out of the measured run), asserted against pinned upper bounds
+  * with ~2.5× headroom — the 100×-relevant quantities (bytes
   * shuffled, bytes spilled) pinned directly instead of inferred from plan
   * shape. A plan regression that re-scans an input, loses an exchange
   * reuse, or explodes a join ~doubles shuffle volume and fails here even
@@ -21,35 +23,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 class MetricsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.1"
-
-  private case class Totals(shufWrite: Long, spillDisk: Long, spillMem: Long)
-
-  private def measure(name: String): Totals = {
-    // warm: one-time staging + codegen, outside the measured region
-    Bench.force(SparkEntry.queries(name)(spark, dir))
-    // listener-bus dispatch is asynchronous — drain the warm run's queued
-    // stage events BEFORE attaching, or they get attributed to the timed
-    // run (up to a full extra gate of shuffle bytes, eating the headroom)
-    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    var sw = 0L; var sd = 0L; var sm = 0L
-    val l = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        sw += m.shuffleWriteMetrics.bytesWritten
-        sd += m.diskBytesSpilled
-        sm += m.memoryBytesSpilled
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // full materialization (Bench.force): a bare count() lets Catalyst
-      // prune unreferenced windows/projections and would measure a
-      // degenerate plan — the very discovery that prompted this net
-      Bench.force(SparkEntry.queries(name)(spark, dir))
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    Totals(sw, sd, sm)
-  }
 
   /** (gate, max total shuffle bytes) — measured at sf0.1 and pinned with
     * ~2.5× headroom; a >2× volume regression fails before the headroom
@@ -76,14 +49,21 @@ class MetricsSpec extends SparkSpec {
 
   for ((q, cap) <- bounds)
     test(s"$q: shuffle volume within pinned bound, zero spill") {
-      val t = measure(q)
-      info(f"$q shuffleWrite=${t.shufWrite}%,d spillDisk=${t.spillDisk}%,d " +
-        f"spillMem=${t.spillMem}%,d")
-      assert(t.shufWrite <= cap,
-        s"$q shuffled ${t.shufWrite} bytes > pinned bound $cap — a plan " +
+      // warm: one-time staging + codegen, outside the measured region
+      Bench.force(SparkEntry.queries(q)(spark, dir))
+      // full materialization (Bench.force): a bare count() lets Catalyst
+      // prune unreferenced windows/projections and would measure a
+      // degenerate plan — the very discovery that prompted this net
+      val r = Collector.measure(spark)(Bench.force(SparkEntry.queries(q)(spark, dir)))._2
+      val (shufWrite, spillDisk, spillMem) = (r.total(_.shuffleWriteMetrics.bytesWritten),
+        r.total(_.diskBytesSpilled), r.total(_.memoryBytesSpilled))
+      info(f"$q shuffleWrite=$shufWrite%,d spillDisk=$spillDisk%,d " +
+        f"spillMem=$spillMem%,d")
+      assert(shufWrite <= cap,
+        s"$q shuffled $shufWrite bytes > pinned bound $cap — a plan " +
           "regression (lost exchange reuse, re-scan, join explosion)?")
-      assert(t.spillDisk == 0 && t.spillMem == 0,
-        s"$q spilled (disk=${t.spillDisk}, mem=${t.spillMem}) at sf0.1 — " +
+      assert(spillDisk == 0 && spillMem == 0,
+        s"$q spilled (disk=$spillDisk, mem=$spillMem) at sf0.1 — " +
           "partitions no longer fit in executor memory")
     }
 
@@ -96,18 +76,8 @@ class MetricsSpec extends SparkSpec {
     def train() = graft.ops.Pq.train(embs, "vec_id", "embedding",
       dim = 64, m = 8, ksub = 8, iters = 3, seed = 42L)
     train() // warm
-    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    var sw = 0L
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: SparkListenerStageCompleted): Unit =
-        sw += s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      train()
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val sw = Collector.measure(spark)(train())._2
+      .total(_.shuffleWriteMetrics.bytesWritten)
     info(f"Pq.train shuffleWrite=$sw%,d")
     // 3 iterations x (m*ksub = 64 partial rows per map task x 4 tasks,
     // ~dsub longs each) — generous 128 KB cap is still 100x under the

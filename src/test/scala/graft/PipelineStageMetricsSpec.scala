@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.obs.Collector
 import org.apache.spark.sql.functions._
 import graft.meds.{MedsData, MedsIO, MedsSchema}
 
@@ -16,9 +16,11 @@ import graft.meds.{MedsData, MedsIO, MedsSchema}
   * executes (measuring stages in isolation over parquet intermediates
   * would break scan sharing and column pruning across stage boundaries and
   * profile a plan the runner never runs). Volumes are plan-deterministic —
-  * no warm runs needed — and input staging happens before the listener
-  * attaches. A marginal can legitimately be ~0 (pure projections/filters)
-  * or slightly negative (a later stage's pruning shrinking an upstream
+  * no warm runs needed. Each prefix volume is summed from the records of
+  * one [[graft.obs.Collector.measure]] body; input staging happens outside
+  * it, and its bus drains keep one prefix's stage events out of the next.
+  * A marginal can legitimately be ~0 (pure projections/filters) or
+  * slightly negative (a later stage's pruning shrinking an upstream
   * exchange); bounds are upper bounds on bytes ADDED. Spill must be zero
   * at every prefix.
   *
@@ -33,27 +35,6 @@ class PipelineStageMetricsSpec extends SparkSpec {
   private def empty(schema: org.apache.spark.sql.types.StructType) =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private case class Totals(shufWrite: Long, spillDisk: Long, spillMem: Long)
-
-  private def measured(body: => Unit): Totals = {
-    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    var sw = 0L; var sd = 0L; var sm = 0L
-    val l = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        sw += m.shuffleWriteMetrics.bytesWritten
-        sd += m.diskBytesSpilled
-        sm += m.memoryBytesSpilled
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    Totals(sw, sd, sm)
-  }
-
   /** Run every prefix of the chain, asserting each stage's marginal
     * shuffle bytes against its pinned bound and zero spill throughout.
     */
@@ -65,18 +46,20 @@ class PipelineStageMetricsSpec extends SparkSpec {
     var prev = 0L
     for (i <- 1 to parsed.stages.length) {
       val (name, cap) = stageBounds(i - 1)
-      val t = measured {
+      val r = Collector.measure(spark) {
         Bench.force(graft.operators.Pipeline
           .run(spark, input, parsed.stages.take(i)).data)
-      }
-      val marginal = t.shufWrite - prev
-      info(f"stage $name%-22s marginal=$marginal%,12d cumulative=${t.shufWrite}%,d")
+      }._2
+      val (shufWrite, spillDisk, spillMem) = (r.total(_.shuffleWriteMetrics.bytesWritten),
+        r.total(_.diskBytesSpilled), r.total(_.memoryBytesSpilled))
+      val marginal = shufWrite - prev
+      info(f"stage $name%-22s marginal=$marginal%,12d cumulative=$shufWrite%,d")
       assert(marginal <= cap,
         s"stage $name added $marginal shuffle bytes > pinned bound $cap — " +
           "a stage-local plan regression (lost reuse, re-scan, join explosion)?")
-      assert(t.spillDisk == 0 && t.spillMem == 0,
-        s"prefix through $name spilled (disk=${t.spillDisk}, mem=${t.spillMem})")
-      prev = t.shufWrite
+      assert(spillDisk == 0 && spillMem == 0,
+        s"prefix through $name spilled (disk=$spillDisk, mem=$spillMem)")
+      prev = shufWrite
     }
   }
 
