@@ -27,10 +27,12 @@ object Bench {
     * the window exchange should be MBs). `toRdd` executes the plan with
     * the query's own output schema — every selected column computed, every
     * declared sort performed — which is also what the DuckDB oracle's
-    * `fetchall` does on its side.
+    * `fetchall` does on its side. It runs as one SQL execution, so each of
+    * its jobs carries the gate's execution id.
     */
   def force(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+    org.apache.spark.sql.GraftSqlBridge.withExecution(df, "force")(
+      df.queryExecution.toRdd.count())
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,7 +1,9 @@
 package graft.meds
 
+import graft.plans.ParquetStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A MEDS dataset: the event-data table plus its two metadata side tables.
   *
@@ -30,6 +32,12 @@ object MedsIO {
     * replacing the reference's shard_iterator (shard_iteration.py:70-316):
     * under Spark the directory scan + partition pruning does the enumeration
     * and `trainOnly` becomes a filter Catalyst pushes into the scan.
+    *
+    * Opening a root runs no Spark job: each of the three reads is handed
+    * the schema of one footer read on the driver ([[ParquetStats.schema]]),
+    * which is what Spark's inference job would find. Where that helper
+    * declines (no data file, summary files, schema merging on) the read
+    * infers as before, so an empty `data/` fails with Spark's own error.
     */
   def read(spark: SparkSession, root: String): MedsData = {
     val data = readData(spark, root)
@@ -47,33 +55,39 @@ object MedsIO {
 
   /** Read one metadata side table. A missing table falls back to the
     * canonical empty frame (a streaming sink writes data/ before any
-    * metadata exists). A PRESENT table whose footer proves 0 rows at the
-    * canonical column set ALSO resolves to that frame — the footer check
-    * is driver-side (no job), and restoring the statically-empty
-    * LocalRelation is what lets the NEXT checkpoint's writeMetadataTable
-    * skip its write job again (a scan of the empty file would defeat the
-    * plan-only emptiness check on every downstream stage). Non-canonical
-    * or non-empty tables read normally.
+    * metadata exists). A PRESENT single-file table whose footer proves 0
+    * rows at the canonical column set ALSO resolves to that frame — both
+    * footer checks are driver-side (no job), and restoring the
+    * statically-empty LocalRelation is what lets the NEXT checkpoint's
+    * writeMetadataTable skip its write job again (a scan of the empty file
+    * would defeat the plan-only emptiness check on every downstream stage).
+    * Non-canonical or non-empty tables read normally.
     */
   private def readMetadataTable(spark: SparkSession, path: String,
-      canonical: org.apache.spark.sql.types.StructType): DataFrame = {
+      canonical: StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def emptyCanonical = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], canonical)
-    if (!fs.exists(p)) emptyCanonical
-    else if (fs.getFileStatus(p).isFile &&
-        graft.plans.ParquetStats.rowCount(spark, path).contains(0L)) {
-      // name/type equality modulo nullability: an empty frame carries no
-      // rows for nullability to matter, but a different column SET must
-      // keep the file's own schema
-      val df = spark.read.parquet(path)
-      val same = df.schema.length == canonical.length &&
-        df.schema.zip(canonical).forall { case (a, b) =>
-          a.name == b.name && a.dataType == b.dataType }
-      if (same) emptyCanonical else df
-    } else spark.read.parquet(path)
+    if (!fs.exists(p)) return emptyCanonical
+    val schema = ParquetStats.schema(spark, path)
+    // name/type equality modulo nullability: an empty frame carries no
+    // rows for nullability to matter, but a different column SET must
+    // keep the file's own schema
+    val canonicalColumns = schema.exists(s => s.length == canonical.length &&
+      s.zip(canonical).forall { case (a, b) =>
+        a.name == b.name && a.dataType == b.dataType })
+    if (canonicalColumns && fs.getFileStatus(p).isFile &&
+        ParquetStats.rowCount(spark, path).contains(0L)) emptyCanonical
+    else readParquet(spark, path, schema)
   }
+
+  /** `spark.read.parquet(path)`, handed `schema` when the footer gave one:
+    * without it the reader runs a job to infer the same schema.
+    */
+  private def readParquet(spark: SparkSession, path: String,
+      schema: Option[StructType], options: (String, String)*): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).options(options.toMap).parquet(path)
 
   /** The data-table half of read(): sharded parquet under `root/data` with
     * the shard identity recovered from the file path. A root carrying
@@ -84,9 +98,9 @@ object MedsIO {
     * the default one.
     */
   private def readData(spark: SparkSession, root: String): DataFrame = {
-    val pathShard = spark.read
-      .option("recursiveFileLookup", "true") // shards live in split subdirs
-      .parquet(s"$root/data")
+    val dataDir = s"$root/data"
+    val pathShard = readParquet(spark, dataDir, ParquetStats.schema(spark, dataDir),
+      "recursiveFileLookup" -> "true") // shards live in split subdirs
       .withColumn(Shard,
         // Tolerate a Hive-style layout (data/split=train/...) by stripping the
         // partition-column prefix, so Shard is always "<split>/<file>". A
@@ -159,8 +173,12 @@ object MedsIO {
         // would hash every row of a split into ONE task (a serialized
         // write at 100 TB) for no invariant in return.
         case Seq() => bare
+        // Split leads the sort: the partitioned write needs its rows
+        // grouped by Split, and a sort that does not lead with it is
+        // replaced by the write's own sort on Split alone, leaving each
+        // file as several (subject_id, time) runs
         case cs => bare.repartition(col(Split), col(cs.head))
-          .sortWithinPartitions(cs.map(col): _*)
+          .sortWithinPartitions((Split +: cs).map(col): _*)
       }
       arranged.write.mode("overwrite").partitionBy(Split).parquet(s"$root/data")
       // Strip Hive partition-dir prefixes: data/split=train -> data/train.
@@ -198,7 +216,7 @@ object MedsIO {
     * prior non-empty write to the same root cannot resurface.
     */
   private def writeMetadataTable(df: DataFrame,
-      canonical: org.apache.spark.sql.types.StructType, path: String): Unit = {
+      canonical: StructType, path: String): Unit = {
     val staticallyEmpty = df.schema == canonical &&
       (df.queryExecution.optimizedPlan match {
         case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -220,7 +238,7 @@ object MedsIO {
     * distributed Spark write of the empty frame would).
     */
   private def writeEmptyParquetFile(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       p: org.apache.hadoop.fs.Path): Unit = {
     import org.apache.parquet.hadoop.ParquetFileWriter
     val conf = spark.sparkContext.hadoopConfiguration

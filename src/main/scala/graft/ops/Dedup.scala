@@ -148,28 +148,6 @@ object Dedup {
       array_distinct(graft.plans.VectorExpressions.winnowMins(
         graft.plans.VectorExpressions.shingleHash56Text(text, n, distinct = false), w)))
 
-  /** Word n-gram shingles with their start position, one row per shingle:
-    * posexplode the token array once, then assemble each shingle from window
-    * `lead`s — tokenization happens exactly once per document (the
-    * array-lambda formulation re-tokenizes per window, O(words²) per doc).
-    */
-  def positionalShingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val words = docs.select(col(idCol),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "__w0")))
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    val withLeads = (1 until n).foldLeft(words) { (df, k) =>
-      df.withColumn(s"__w$k", lead(col("__w0"), k).over(w))
-    }
-    withLeads
-      .filter(col(s"__w${n - 1}").isNotNull) // windows that run past the end
-      .select(col(idCol), col("pos"),
-        concat_ws(" ", (0 until n).map(k => col(s"__w$k")): _*).as("shingle"))
-  }
-
-  /** Distinct word n-gram shingles per document: (id, shingle) exploded. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    positionalShingles(docs, idCol, textCol, n).select(col(idCol), col("shingle")).distinct()
-
   /** N-gram Jaccard near-dup pairs via the inverted-index join: candidate
     * pairs share at least one shingle; Jaccard is computed from shared /
     * distinct counts. Emits (id_a < id_b, jaccard) above `threshold`.

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming surface over the event table.
   *
@@ -14,7 +13,9 @@ import org.apache.spark.sql.types.StructType
   */
 object EventStream {
 
-  /** Shared windowed-aggregation definition: tumbling window per event type. */
+  /** Windowed aggregation, a tumbling window per event type. The same
+    * definition runs over a batch frame or a watermarked stream.
+    */
   def windowedAgg(events: DataFrame, windowLen: String): DataFrame =
     events
       .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
@@ -97,15 +98,4 @@ object EventStream {
       .outputMode("append")
       .start()
   }
-
-  /** Streaming variant: parquet-directory source, 10-minute watermark —
-    * literally [[windowedAgg]] over the watermarked stream, so batch and
-    * streaming results match by construction (one shared definition, not a
-    * copy that can drift).
-    */
-  def streamingWindowedAgg(spark: SparkSession, dir: String, schema: StructType,
-      windowLen: String = "1 hour"): DataFrame =
-    windowedAgg(
-      spark.readStream.schema(schema).parquet(dir).withWatermark("ts", "10 minutes"),
-      windowLen)
 }

@@ -163,23 +163,31 @@ object GraftSqlBridge {
     * InternalRow copy (the iterator reuses one mutable row, which must not
     * be cached as-is - same as Dataset.checkpoint), checkpoint mark, ONE
     * materializing job that folds each partition, and the re-wrapped frame.
-    * Like Dataset.localCheckpoint, it runs as one SQL execution, so every
-    * job it submits (adaptive stage jobs included) carries that execution's
-    * id and call site.
+    * Like Dataset.localCheckpoint, it runs as one SQL execution
+    * ([[withExecution]]).
     */
   private def localCheckpointWith[A: scala.reflect.ClassTag](
       df: Dataset[org.apache.spark.sql.Row])(
       fold: (Int, Iterator[org.apache.spark.sql.catalyst.InternalRow]) => A): (DataFrame, Array[A]) = {
     val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val (internalRdd, results) = org.apache.spark.sql.execution.SQLExecution
-      .withNewExecutionId(classic.queryExecution, Some("localCheckpoint")) {
-        val rdd = classic.queryExecution.toRdd.map(_.copy())
-        rdd.localCheckpoint()
-        (rdd, rdd.mapPartitionsWithIndex((i, it) => Iterator.single(fold(i, it))).collect())
-      }
+    val (internalRdd, results) = withExecution(df, "localCheckpoint") {
+      val rdd = classic.queryExecution.toRdd.map(_.copy())
+      rdd.localCheckpoint()
+      (rdd, rdd.mapPartitionsWithIndex((i, it) => Iterator.single(fold(i, it))).collect())
+    }
     (classic.sparkSession.internalCreateDataFrame(
       internalRdd, classic.schema, isStreaming = false), results)
   }
+
+  /** Run `body` as one SQL execution of `df`'s plan, named `name`. Every
+    * job `body` submits (adaptive stage jobs included) carries that
+    * execution's id, as the jobs of a Dataset action do; RDD actions on
+    * `queryExecution.toRdd` run outside any execution without it.
+    */
+  def withExecution[A](df: Dataset[_], name: String)(body: => A): A =
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution,
+      Some(name))(body)
 
   /** `localCheckpoint(eager = true)` fused with a changed-rows count: ONE
     * job materializes the partitions and counts rows whose `col1` differs

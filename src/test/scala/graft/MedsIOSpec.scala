@@ -1,0 +1,157 @@
+package graft
+
+import graft.meds.{MedsData, MedsIO}
+import graft.meds.MedsSchema._
+import graft.obs.Collector
+import graft.operators.ReshardToSplit
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.types._
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** MedsIO's read and write contracts over the root layouts it meets: a root
+  * opens with no Spark job and reads what `spark.read.parquet` reads, and
+  * every written shard is in MEDS order.
+  */
+class MedsIOSpec extends SparkSpec {
+
+  private def tmp(name: String): String =
+    Files.createTempDirectory(s"graft_medsio_$name").toString
+
+  private def empty(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  private lazy val fixture = MedsIO.read(spark, MedsFixture.root)
+
+  private val pipeline =
+    """stages:
+      |  - filter_subjects:
+      |      min_events_per_subject: 5
+      |  - fit_normalization:
+      |      _base_stage: aggregate_code_metadata
+      |      aggregations: [code/n_occurrences, values/n_occurrences, values/sum, values/sum_sqd]
+      |  - fit_vocabulary_indices
+      |  - normalization
+      |""".stripMargin
+
+  /** A checkpoint root whose codes and splits tables are statically empty:
+    * each is a footer-only file that reads back as the canonical frame. */
+  private val checkpoint = "checkpoint with statically-empty metadata"
+
+  /** (layout, root) for every root layout MedsIO.read meets. */
+  private lazy val roots: Seq[(String, String)] = {
+    val mainOut = {
+      val dir = tmp("main")
+      Files.writeString(Paths.get(dir, "pipeline.yaml"), pipeline)
+      Main.run(Array(s"$dir/pipeline.yaml", MedsFixture.root, s"$dir/out"), spark)
+      s"$dir/out"
+    }
+    val ckpt = tmp("ckpt")
+    MedsIO.write(MedsData(fixture.data, empty(codesSchema), empty(splitsSchema)), ckpt)
+    val resharded = tmp("resharded")
+    MedsIO.write(MedsData(
+      ReshardToSplit(fixture.data.drop(Split, Shard), fixture.splits, nShards = 2),
+      fixture.codes, fixture.splits), resharded)
+    // what a streaming sink or a plain partitioned write leaves: data/split=<v>/
+    // and directory-form metadata tables
+    val hive = tmp("hive")
+    fixture.data.drop(Shard).write.partitionBy(Split).parquet(s"$hive/data")
+    fixture.codes.write.parquet(s"$hive/metadata/codes.parquet")
+    fixture.splits.write.parquet(s"$hive/metadata/subject_splits.parquet")
+    // an aborted write's leftover, at another schema, under data/ and codes
+    val leftover = tmp("temporary")
+    val src = Paths.get(MedsFixture.root)
+    Files.walk(src).iterator.asScala.foreach { p =>
+      val q = Paths.get(leftover).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    }
+    val stale = tmp("stale")
+    spark.range(3).toDF("stale").coalesce(1).write.mode("overwrite").parquet(stale)
+    val part = Files.list(Paths.get(stale)).iterator.asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Seq("data", "metadata/codes.parquet").foreach { table =>
+      assert(Files.isDirectory(Paths.get(leftover, table)), table)
+      val t = Files.createDirectories(Paths.get(leftover, table, "_temporary", "0"))
+      Files.copy(part, t.resolve("part-00000.parquet"))
+    }
+    Seq("MedsFixture.root" -> MedsFixture.root, "Main.run output" -> mainOut,
+      checkpoint -> ckpt, "resharded (.shards.json)" -> resharded,
+      "Hive-style data/split=<v>/" -> hive, "_temporary/ leftover" -> leftover)
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("MedsIO.read opens every root layout with no Spark job") {
+    assert(Files.exists(Paths.get(roots.toMap.apply("resharded (.shards.json)"), ".shards.json")))
+    roots.foreach { case (layout, root) =>
+      val jobs = Collector.measure(spark)(MedsIO.read(spark, root))._2.jobs
+      assert(jobs.isEmpty, s"$layout: ${jobs.map(_.callSite).mkString(", ")}")
+    }
+  }
+
+  test("MedsIO.read gives each table the schema and rows of spark.read.parquet") {
+    roots.foreach { case (layout, root) =>
+      val meds = MedsIO.read(spark, root)
+      val plainData = spark.read.option("recursiveFileLookup", "true").parquet(s"$root/data")
+      val data = meds.data.drop(Shard, Split)
+      assert(data.schema == plainData.schema, layout)
+      assert(rows(data) == rows(plainData), layout)
+      Seq("codes" -> meds.codes, "subject_splits" -> meds.splits).foreach { case (name, t) =>
+        val plain = spark.read.parquet(s"$root/metadata/$name.parquet")
+        if (layout == checkpoint) {
+          // the canonical empty frame keeps the canonical nullability, which
+          // the parquet reader relaxes
+          assert(t.schema == (if (name == "codes") codesSchema else splitsSchema))
+          assert(t.schema.map(f => f.name -> f.dataType) ==
+            plain.schema.map(f => f.name -> f.dataType), s"$layout $name")
+        } else assert(t.schema == plain.schema, s"$layout $name")
+        assert(rows(t) == rows(plain), s"$layout $name")
+      }
+    }
+  }
+
+  test("a data/ directory with no parquet file fails with Spark's own inference error") {
+    val root = tmp("nodata")
+    Files.createFile(Files.createDirectories(Paths.get(root, "data")).resolve("_SUCCESS"))
+    val plain = intercept[AnalysisException](
+      spark.read.option("recursiveFileLookup", "true").parquet(s"$root/data"))
+    val got = intercept[AnalysisException](MedsIO.read(spark, root))
+    assert(got.getCondition == "UNABLE_TO_INFER_SCHEMA", got.getMessage)
+    assert(got.getMessage == plain.getMessage)
+  }
+
+  test("MedsIO.write leaves each file sorted by (subject_id, time), static rows first, " +
+      "from an input spread over several map tasks") {
+    val rnd = new scala.util.Random(11)
+    val splitOf = Map(0L -> TrainSplit, 1L -> TuningSplit, 2L -> HeldOutSplit)
+    val events = (1L to 120L).flatMap { s =>
+      val split = splitOf(s % 3)
+      Row(s, null, "STATIC", null, split) +: (1 to 8).map(i => Row(s,
+        new java.sql.Timestamp(1600000000000L + rnd.nextInt(1000000) * 1000L),
+        s"E$i", java.lang.Float.valueOf(i.toFloat), split))
+    }
+    val data = spark.createDataFrame(
+      spark.sparkContext.parallelize(rnd.shuffle(events), 6),
+      StructType(Seq(StructField(SubjectId, LongType, nullable = false),
+        StructField(Time, TimestampType), StructField(Code, StringType, nullable = false),
+        StructField(NumericValue, FloatType), StructField(Split, StringType, nullable = false))))
+    val root = tmp("sorted")
+    MedsIO.write(MedsData(data, empty(codesSchema), empty(splitsSchema)), root)
+    val files = Files.walk(Paths.get(root, "data")).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.map(_.getParent.getFileName.toString).toSet ==
+      Set(TrainSplit, TuningSplit, HeldOutSplit))
+    var total = 0L
+    files.foreach { f =>
+      // a null time sorts before every time: static rows lead each subject
+      val keys = spark.read.parquet(f.toString).select(SubjectId, Time).collect()
+        .map(r => (r.getLong(0), Option(r.getTimestamp(1)).map(_.getTime)))
+      total += keys.length
+      val backs = keys.toSeq.zip(keys.drop(1)).count { case (a, b) =>
+        Ordering[(Long, Option[Long])].gt(a, b) }
+      assert(backs == 0, s"$f: (subject_id, time) steps backwards $backs times")
+    }
+    assert(total == events.length)
+  }
+}

@@ -15,8 +15,12 @@ import graft.meds.{MedsData, MedsIO, MedsSchema}
   * volume. Prefix runs keep the exact cross-stage plan fusion the runner
   * executes (measuring stages in isolation over parquet intermediates
   * would break scan sharing and column pruning across stage boundaries and
-  * profile a plan the runner never runs). Volumes are plan-deterministic —
-  * no warm runs needed. Each prefix volume is summed from the records of
+  * profile a plan the runner never runs). Shuffle volumes are not exact
+  * from run to run: two runs of one commit measured MetricsSpec's
+  * ngram_jaccard gate at 11,124,239 vs 11,433,057 B and its cluster_reps
+  * gate at 14,977 vs 17,720 B. The bounds here and there carry about 2.5×
+  * headroom over such a spread, so one cold run per prefix is enough.
+  * Each prefix volume is summed from the records of
   * one [[graft.obs.Collector.measure]] body; input staging happens outside
   * it, and its bus drains keep one prefix's stage events out of the next.
   * A marginal can legitimately be ~0 (pure projections/filters) or

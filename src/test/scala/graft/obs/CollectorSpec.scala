@@ -58,4 +58,13 @@ class CollectorSpec extends SparkSpec {
     assert(!late.jobs.exists(_.group.contains("collector-spec-outside")), late.jobs)
     assert(!late.stages.exists(_.group.contains("collector-spec-outside")), late.stages)
   }
+
+  test("every job Bench.force runs carries the gate's SQL execution id") {
+    val df = spark.range(0, 20000, 1, 4).selectExpr("id % 97 as k").groupBy("k").count()
+    val (n, r) = Collector.measure(spark)(graft.Bench.force(df))
+    assert(n == 97)
+    // the adaptive shuffle stage runs as a job of its own, then the count
+    assert(r.jobs.size >= 2 && r.jobs.forall(_.execution.isDefined), r.jobs)
+    assert(r.jobs.flatMap(_.execution).distinct.size == 1, r.jobs)
+  }
 }
