@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * sbt "runMain graft.Profile <time|jobs|stages|plan|scan> <sfDir> \
   *   <gate,...|all> [iters] [spark.key=value ...]"
   * sbt "runMain graft.Profile jobs --pipeline <pipeline.yaml> <medsRoot> \
-  *   [iters] [spark.key=value ...]"
+  *   [iters] [--checkpoint] [spark.key=value ...] [dotted.path=value ...]"
   * }}}
   *
   *  - `time`: seconds of each of `iters` full materializations
@@ -20,7 +20,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *    id with that execution's action (adaptive stage jobs carry only a
   *    thread-pool call site of their own), its call site, then a totals
   *    line. With `--pipeline` the profiled run is one `graft.Main` run of
-  *    the pipeline over the MEDS root, written into a temp root.
+  *    the pipeline over the MEDS root, written into a temp root, with the
+  *    trailing `dotted.path=value` overrides; `--checkpoint` gives each run
+  *    a fresh checkpoint root (a shared one would resume-skip every stage).
   *  - `stages`: after one warm run, each stage's task count, run and cpu
   *    time, shuffle write/read and spill, then the executed plan.
   *  - `plan`: the formatted physical explain of each gate's analyzed plan
@@ -35,23 +37,29 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * `iters` (default 1) is the number of timed runs per gate for `time`,
   * `jobs` and `stages`; the walls include building the gate. Trailing
-  * `key=value` args are session conf for A/B runs (e.g. AQE off).
+  * `spark.key=value` args are session conf for A/B runs (e.g. AQE off).
   */
 object Profile {
   private val usage = "usage: graft.Profile <time|jobs|stages|plan|scan> " +
     "<sfDir> <gate,...|all> [iters] [spark.key=value ...] | graft.Profile jobs " +
-    "--pipeline <pipeline.yaml> <medsRoot> [iters] [spark.key=value ...]"
+    "--pipeline <pipeline.yaml> <medsRoot> [iters] [--checkpoint] " +
+    "[spark.key=value ...] [dotted.path=value ...]"
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, usage)
     val Array(mode, target, arg) = args.take(3)
-    val (confArgs, rest) = args.drop(3).toSeq.partition(_.contains("="))
+    val (kvArgs, rest0) = args.drop(3).toSeq.partition(_.contains("="))
+    val (confArgs, overrides) = kvArgs.partition(_.startsWith("spark."))
+    val (checkpoint, rest) = (rest0.contains("--checkpoint"), rest0.filterNot(_ == "--checkpoint"))
+    require(target == "--pipeline" || (overrides.isEmpty && !checkpoint),
+      s"config overrides and --checkpoint apply to --pipeline only; $usage")
     val spark = LocalSession(conf = LocalSession.parseConf(confArgs))
     try {
       if (target == "--pipeline") {
         require(mode == "jobs", s"--pipeline profiles jobs only; $usage")
         require(rest.nonEmpty, usage)
-        pipelineJobs(spark, arg, rest.head, rest.lift(1).fold(1)(_.toInt))
+        pipelineJobs(spark, arg, rest.head, rest.lift(1).fold(1)(_.toInt),
+          overrides, checkpoint)
       } else {
         val iters = rest.headOption.fold(1)(_.toInt)
         val gates =
@@ -102,15 +110,17 @@ object Profile {
     }
   }
 
-  /** `jobs` over one `graft.Main` run per pass, each into a fresh dir under
-    * one temp root (removed afterwards). */
+  /** `jobs` over one `graft.Main` run per pass (with `overrides`), each
+    * into a fresh dir — and with `checkpoint`, a fresh checkpoint root —
+    * under one temp root (removed afterwards). */
   private def pipelineJobs(spark: SparkSession, config: String, medsRoot: String,
-      iters: Int): Unit = {
+      iters: Int, overrides: Seq[String], checkpoint: Boolean): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft_profile").toFile
     var pass = 0
     try jobs(spark, config, iters) {
       pass += 1
-      Main.run(Array(config, medsRoot, s"$root/pass_$pass"), spark)
+      Main.run(Array(config, medsRoot, s"$root/pass_$pass") ++
+        Option.when(checkpoint)(s"$root/ckpt_$pass") ++ overrides, spark)
       -1L // rows: Main prints what it wrote
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }

@@ -44,8 +44,6 @@ object OpStages {
     * the same builder).
     */
   private[config] def registerAll(): Unit = {
-    import PipelineConfig.CfgOps
-
     def ids(cfg: Cfg) = (cfg.getStr(IdCol).getOrElse("doc_id"),
       cfg.getStr(TextCol).getOrElse("text"))
 
@@ -215,12 +213,7 @@ object OpStages {
     // bloom + exact-vs-bloom crossover": exact 11.5 s vs bloom 4.9 s at
     // ~45M grams; parity below).
     PipelineConfig.register("decontaminate") { (name, cfg) =>
-      val known = Seq(IdCol, TextCol, "ngram", "eval_path")
-      val unknown = cfg.obj.keySet -- known
-      require(unknown.isEmpty, s"stage $name: unknown key(s) " +
-        s"${unknown.toSeq.sorted.mkString(", ")} (known: ${known.mkString(", ")})")
-      val id = cfg.getStr(IdCol).getOrElse("doc_id")
-      val text = cfg.getStr(TextCol).getOrElse("text")
+      val (id, text) = ids(cfg)
       val n = cfg.getInt("ngram").getOrElse(8)
       val evalPath = cfg.getStr("eval_path").getOrElse(
         throw new IllegalArgumentException(s"stage $name: `eval_path` is required"))
@@ -239,48 +232,40 @@ object OpStages {
     // are dropped; thresholds are inclusive bounds on the keep side.
     PipelineConfig.register("quality_filter") { (name, cfg) =>
       val text = cfg.getStr(TextCol).getOrElse("text")
-      // a typo'd rule key must not silently disable its gate
-      val knownKeys = Set(TextCol, "min_words", "max_words", "min_chars",
-        "max_chars", "min_mean_word_len", "max_mean_word_len",
-        "min_alpha_ratio", "max_punct_ratio", "max_digit_ratio",
-        "min_stopword_ratio", "max_repetition_ratio", "max_dup_line_fraction",
-        "max_dup_ngram_fraction", "min_entropy", "max_entropy", "lang")
-      val unknown = cfg.obj.keySet -- knownKeys
-      require(unknown.isEmpty, s"stage $name: unknown rule key(s) " +
-        s"${unknown.toSeq.sorted.mkString(", ")} (known: " +
-        s"${(knownKeys - TextCol).toSeq.sorted.mkString(", ")})")
+      // Filter conjuncts get no codegen subexpression elimination and
+      // predicate pushdown re-inlines projection aliases, so per-rule
+      // signal expressions would re-scan the text once PER RULE
+      // (measured 4.7x DuckDB at 320k docs). Instead each signal FAMILY
+      // is one native scan checked by ONE SignalBounds conjunct, with
+      // the historical per-rule null policy (nullAsZero = the old
+      // coalesce/otherwise(0.0) rules; others yield NULL on null text).
+      import graft.plans.{QualitySignals, SignalBounds}
+      def q(n: String): Int = QualitySignals.fields.indexOf(n)
+      val qChecks: Seq[(Int, Option[Double], Option[Double], Boolean)] = Seq(
+        cfg.getInt("min_words").map(v => (q("n_words"), Some(v.toDouble), None, false)),
+        cfg.getInt("max_words").map(v => (q("n_words"), None, Some(v.toDouble), false)),
+        cfg.getInt("min_chars").map(v => (q("n_chars"), Some(v.toDouble), None, false)),
+        cfg.getInt("max_chars").map(v => (q("n_chars"), None, Some(v.toDouble), false)),
+        // mean_word_len is the one signal that is NULL (not 0) on
+        // tokenless text — nullAsZero so empty docs fail min rules and
+        // pass max rules, like every sibling signal
+        cfg.getDouble("min_mean_word_len").map(v => (q("mean_word_len"), Some(v), None, true)),
+        cfg.getDouble("max_mean_word_len").map(v => (q("mean_word_len"), None, Some(v), true)),
+        cfg.getDouble("min_alpha_ratio").map(v => (q("alpha_ratio"), Some(v), None, false)),
+        cfg.getDouble("max_punct_ratio").map(v => (q("punct_ratio"), None, Some(v), false)),
+        cfg.getDouble("max_digit_ratio").map(v => (q("digit_ratio"), None, Some(v), false)),
+        cfg.getDouble("min_stopword_ratio").map(v => (q("stopword_ratio"), Some(v), None, true)),
+        cfg.getDouble("max_repetition_ratio").map(v => (q("repetition_ratio"), None, Some(v), true))
+      ).flatten
+      def r(n: String): Int = graft.plans.RepetitionSignals.fields.indexOf(n)
+      val rChecks: Seq[(Int, Option[Double], Option[Double], Boolean)] = Seq(
+        cfg.getDouble("max_dup_line_fraction").map(v => (r("dup_line_fraction"), None, Some(v), true)),
+        cfg.getDouble("max_dup_ngram_fraction").map(v => (r("dup_ngram_fraction"), None, Some(v), true))
+      ).flatten
+      val (minEntropy, maxEntropy) = (cfg.getDouble("min_entropy"), cfg.getDouble("max_entropy"))
+      val lang = cfg.getStr("lang")
       Pipeline.DataStage(name, m => {
         val t = col(text)
-        // Filter conjuncts get no codegen subexpression elimination and
-        // predicate pushdown re-inlines projection aliases, so per-rule
-        // signal expressions would re-scan the text once PER RULE
-        // (measured 4.7x DuckDB at 320k docs). Instead each signal FAMILY
-        // is one native scan checked by ONE SignalBounds conjunct, with
-        // the historical per-rule null policy (nullAsZero = the old
-        // coalesce/otherwise(0.0) rules; others yield NULL on null text).
-        import graft.plans.{QualitySignals, SignalBounds}
-        def q(n: String): Int = QualitySignals.fields.indexOf(n)
-        val qChecks: Seq[(Int, Option[Double], Option[Double], Boolean)] = Seq(
-          cfg.getInt("min_words").map(v => (q("n_words"), Some(v.toDouble), None, false)),
-          cfg.getInt("max_words").map(v => (q("n_words"), None, Some(v.toDouble), false)),
-          cfg.getInt("min_chars").map(v => (q("n_chars"), Some(v.toDouble), None, false)),
-          cfg.getInt("max_chars").map(v => (q("n_chars"), None, Some(v.toDouble), false)),
-          // mean_word_len is the one signal that is NULL (not 0) on
-          // tokenless text — nullAsZero so empty docs fail min rules and
-          // pass max rules, like every sibling signal
-          cfg.getDouble("min_mean_word_len").map(v => (q("mean_word_len"), Some(v), None, true)),
-          cfg.getDouble("max_mean_word_len").map(v => (q("mean_word_len"), None, Some(v), true)),
-          cfg.getDouble("min_alpha_ratio").map(v => (q("alpha_ratio"), Some(v), None, false)),
-          cfg.getDouble("max_punct_ratio").map(v => (q("punct_ratio"), None, Some(v), false)),
-          cfg.getDouble("max_digit_ratio").map(v => (q("digit_ratio"), None, Some(v), false)),
-          cfg.getDouble("min_stopword_ratio").map(v => (q("stopword_ratio"), Some(v), None, true)),
-          cfg.getDouble("max_repetition_ratio").map(v => (q("repetition_ratio"), None, Some(v), true))
-        ).flatten
-        def r(n: String): Int = graft.plans.RepetitionSignals.fields.indexOf(n)
-        val rChecks: Seq[(Int, Option[Double], Option[Double], Boolean)] = Seq(
-          cfg.getDouble("max_dup_line_fraction").map(v => (r("dup_line_fraction"), None, Some(v), true)),
-          cfg.getDouble("max_dup_ngram_fraction").map(v => (r("dup_ngram_fraction"), None, Some(v), true))
-        ).flatten
         val rules = Seq(
           if (qChecks.isEmpty) None else Some(SignalBounds.bounds(
             QualitySignals.signals(t, TextAnalysis.DefaultStopwords), qChecks)),
@@ -288,12 +273,9 @@ object OpStages {
             graft.plans.VectorExpressions.repetitionSignals(t, 3), rChecks)),
           // unigram entropy (bits): min catches degenerate repetition,
           // max catches structureless gibberish (entropy ~ log2(n_words))
-          cfg.getDouble("min_entropy").map(v => TextAnalysis.unigramEntropy(t) >= v),
-          cfg.getDouble("max_entropy").map(v => TextAnalysis.unigramEntropy(t) <= v),
-          cfg.getStr("lang").map { v =>
-            val exprs = TextAnalysis.langIdExprs(t)
-            exprs.last === v // lang_pred equality
-          }
+          minEntropy.map(v => TextAnalysis.unigramEntropy(t) >= v),
+          maxEntropy.map(v => TextAnalysis.unigramEntropy(t) <= v),
+          lang.map(v => TextAnalysis.langIdExprs(t).last === v) // lang_pred equality
         ).flatten
         require(rules.nonEmpty, s"stage $name: at least one threshold rule " +
           "is required (min_words, max_dup_line_fraction, lang, ...)")
@@ -333,9 +315,7 @@ object OpStages {
     // dataset-card diagnostics: REPLACES data with the per-group stats table
     PipelineConfig.register("corpus_stats") { (name, cfg) =>
       val text = cfg.getStr(TextCol).getOrElse("text")
-      val groups = if (cfg.obj.contains("group_cols"))
-        cfg.getList("group_cols").collect { case Cfg.S(s) => s }
-      else Seq("source")
+      val groups = cfg.get("group_cols").fold(Seq("source"))(_ => cfg.strings("group_cols"))
       require(groups.nonEmpty, s"stage $name: `group_cols` must be non-empty")
       Pipeline.DataStage(name, m => TextAnalysis.corpusStats(m.data, text, groups))
     }
@@ -346,9 +326,8 @@ object OpStages {
       val (id, text) = ids(cfg)
       val minLineWords = cfg.getInt("min_line_words").getOrElse(5)
       val minLines = cfg.getInt("min_lines").getOrElse(3)
-      val phrases = if (cfg.obj.contains("drop_phrases"))
-        cfg.getList("drop_phrases").collect { case Cfg.S(s) => s }
-      else Seq("lorem ipsum", "{")
+      val phrases = cfg.get("drop_phrases").fold(Seq("lorem ipsum", "{"))(_ =>
+        cfg.strings("drop_phrases"))
       Pipeline.DataStage(name, m =>
         TextAnalysis.c4Filters(m.data, id, text, minLineWords, minLines, phrases))
     }
@@ -866,15 +845,18 @@ object OpStages {
       require(query.nonEmpty, s"stage $name: `query` vector is required")
       val k = cfg.getInt("k").getOrElse(10)
       val mode = cfg.getStr("mode").getOrElse("brute")
+      val (m0, ksub, iters) = (cfg.getInt("m").getOrElse(8), cfg.getInt("ksub").getOrElse(8),
+        cfg.getInt("iters"))
+      val (seed, frac) = (cfg.getInt("seed").map(_.toLong).getOrElse(42L),
+        cfg.getDouble("train_fraction").getOrElse(1.0))
+      val (planes, nProbe, nCells) = (cfg.getInt("planes").getOrElse(8),
+        cfg.getInt("n_probe").getOrElse(2), cfg.getInt("n_cells").getOrElse(16))
+      val keyCol = cfg.getStr("key_col")
       def pqModel(m: graft.meds.MedsData): Pq.PqModel = {
-        val m0 = cfg.getInt("m").getOrElse(8)
         require(query.length % m0 == 0,
           s"stage $name: query dim ${query.length} not divisible by m=$m0")
-        Pq.train(m.data, id, vec, dim = query.length, m = m0,
-          ksub = cfg.getInt("ksub").getOrElse(8),
-          iters = cfg.getInt("iters").getOrElse(3),
-          seed = cfg.getInt("seed").map(_.toLong).getOrElse(42L),
-          trainFraction = cfg.getDouble("train_fraction").getOrElse(1.0))
+        Pq.train(m.data, id, vec, dim = query.length, m = m0, ksub = ksub,
+          iters = iters.getOrElse(3), seed = seed, trainFraction = frac)
       }
       val queryXe = Pq.xe(query.map(_.toDouble))
       // rerank: N (pq/ivfpq modes) — ADC shortlist of N, exact re-rank on
@@ -889,28 +871,23 @@ object OpStages {
         s"stage $name: `rerank` only applies to modes pq | ivfpq (got `$mode`)")
       Pipeline.DataStage(name, m => mode match {
         case "brute" => Similarity.topK(m.data, id, vec, query, k)
-        case "lsh" =>
-          val planes = cfg.getInt("planes").getOrElse(8)
-          Similarity.lshTopK(m.data, id, vec, query, k, 0 until planes)
-        case "ivf" =>
-          val nProbe = cfg.getInt("n_probe").getOrElse(2)
-          cfg.getStr("key_col") match {
-            case Some(key) => Similarity.ivfTopK(m.data, id, key, vec, query, k, nProbe)
-            case None => Similarity.ivfTopKKmeans(m.data, id, vec, query, k,
-              cfg.getInt("n_cells").getOrElse(16), nProbe,
-              cfg.getInt("iters").getOrElse(2))
-          }
+        case "lsh" => Similarity.lshTopK(m.data, id, vec, query, k, 0 until planes)
+        case "ivf" => keyCol match {
+          case Some(key) => Similarity.ivfTopK(m.data, id, key, vec, query, k, nProbe)
+          case None => Similarity.ivfTopKKmeans(m.data, id, vec, query, k,
+            nCells, nProbe, iters.getOrElse(2))
+        }
         case "pq" =>
           val model = pqModel(m)
           val enc = Pq.encode(m.data, vec, model)
           if (rerank > 0) Pq.adcTopKRerank(enc, id, vec, model, queryXe, k, rerank)
           else Pq.adcTopK(enc, id, model, queryXe, k)
         case "ivfpq" =>
-          val key = cfg.getStr("key_col").getOrElse(throw new
+          val key = keyCol.getOrElse(throw new
             IllegalArgumentException(s"stage $name: mode ivfpq requires `key_col`"))
           val model = pqModel(m)
           Pq.ivfPqTopK(Pq.encode(m.data, vec, model), id, key, vec, model,
-            query, queryXe, k, cfg.getInt("n_probe").getOrElse(2), rerank)
+            query, queryXe, k, nProbe, rerank)
         case other => throw new IllegalArgumentException(
           s"stage $name: unknown mode `$other` (brute | lsh | ivf | pq | ivfpq)")
       })

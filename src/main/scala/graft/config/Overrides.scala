@@ -22,64 +22,17 @@ import graft.dsl.Cfg._
 object Overrides {
 
   /** Apply `key.path=value` overrides to a parsed config tree, in order.
-    *
-    * An override whose path does not already exist is APPLIED but noted:
-    * stage keys legitimately absent from the file (builder defaults) must
-    * stay settable — the reference's stage configs carry Hydra defaults the
-    * pipeline file never spells out — but a silently-accepted typo
-    * (`sttdev_cutoff=3`) would run the pipeline with the default while the
-    * user believes the override took. Created paths surface as ONE
-    * aggregated note (not a warning per override): builder-default keys are
-    * routine, and a per-key warning stream trains users to ignore the one
-    * that is a real typo.
+    * A path that does not exist yet is created: stage keys absent from the
+    * file (builder defaults) stay settable, as with the reference's Hydra
+    * defaults. A typo'd key is not caught here but where every key is:
+    * [[PipelineConfig.buildStage]] fails on a stage key its builder never
+    * reads, and [[PipelineConfig.fromCfg]] on an unknown top-level key.
     */
-  def apply(cfg: Cfg, overrides: Seq[String]): Cfg = {
-    val created = createdPaths(cfg, overrides)
-    if (created.nonEmpty)
-      System.err.println("[graft] note: override(s) set key(s) not present in " +
-        s"the config file (builder defaults, or typos — check spelling if a " +
-        s"replacement was intended): ${created.mkString(", ")}")
+  def apply(cfg: Cfg, overrides: Seq[String]): Cfg =
     overrides.foldLeft(cfg) { (c, o) =>
       val (path, value) = parseArg(o)
       set(c, path, value, o)
     }
-  }
-
-  /** The override paths that do not yet exist while applying `overrides` in
-    * order (an earlier override can create the path a later one extends).
-    */
-  private[graft] def createdPaths(cfg: Cfg, overrides: Seq[String]): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    overrides.foldLeft(cfg) { (c, o) =>
-      val (path, value) = parseArg(o)
-      if (!exists(c, path)) out += path.mkString(".")
-      set(c, path, value, o)
-    }
-    out.result()
-  }
-
-  private[graft] def exists(node: Cfg, path: Seq[String]): Boolean = path match {
-    case Seq() => true
-    case seg +: rest => node match {
-      case M(m) => m.get(seg).exists(exists(_, rest))
-      case L(xs) =>
-        val el = seg.toIntOption match {
-          case Some(i) => xs.lift(i)
-          case None => xs.find {
-            case S(n) => n == seg
-            case M(m) => m.size == 1 && m.head._1 == seg
-            case _ => false
-          }
-        }
-        el.exists {
-          // a bare or single-key stage entry: descend into its config map
-          case S(_) => rest.isEmpty
-          case M(m) if seg.toIntOption.isEmpty && m.size == 1 => exists(m.head._2, rest)
-          case other => exists(other, rest)
-        }
-      case _ => false
-    }
-  }
 
   /** Split one `a.b.c=value` argument into its path and parsed value. */
   def parseArg(arg: String): (Seq[String], Cfg) = {

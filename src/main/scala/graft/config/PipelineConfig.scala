@@ -63,9 +63,13 @@ object PipelineConfig {
   }
 
   def fromCfg(cfg: Cfg): Parsed = {
-    val m = cfg.asInstanceOf[M].v
-    val desc = m.get("description").collect { case S(s) => s }
-    val entries = m("stages").asInstanceOf[L].v.map(parseStageEntry)
+    val (desc, stageList, conf0) = readsOnly("pipeline", cfg)(
+      (cfg.get("description").collect { case S(s) => s }, cfg.get("stages"), cfg.get("conf")))
+    val entries = stageList match {
+      case Some(L(xs)) => xs.map(parseStageEntry)
+      case other => throw new IllegalArgumentException(
+        s"pipeline: `stages` must be a list of stage entries, got ${other.getOrElse("nothing")}")
+    }
     val stages = entries.map(_._1)
     // stages declaring `checkpoint: false` are excluded from a
     // checkpointRoot run's materialization: a narrow stage (a filter, a
@@ -84,7 +88,7 @@ object PipelineConfig {
     // Hydra-config-group analog: a reporting pipeline over MBs declares
     // different engine settings than a 100 TB transform). Applied by the
     // runner for the DURATION of the run and restored after; only scalars.
-    val conf = m.get("conf").map {
+    val conf = conf0.map {
       case M(cm) => cm.toSeq.map {
         case (k, S(s)) => k -> s
         case (k, I(i)) => k -> i.toString
@@ -97,6 +101,18 @@ object PipelineConfig {
         s"`conf` must be a map of scalars, got $other")
     }.getOrElse(Nil)
     Parsed(desc, stages, conf, noCkpt)
+  }
+
+  /** Runs `read` — the reads of `cfg`'s keys — and fails on every key of
+    * `cfg` it did not read (nested maps included, see [[Cfg.Reads.check]]):
+    * the one check that a key is known, for the pipeline's top level and
+    * for every stage. */
+  private def readsOnly[A](owner: String, cfg: Cfg)(read: => A): A = {
+    val (a, reads) = Cfg.Reads.record(read)
+    val (unread, known) = reads.check(cfg)
+    require(unread.isEmpty, s"$owner: unknown key(s) ${unread.mkString(", ")} " +
+      s"(read: ${known.mkString(", ")})")
+    a
   }
 
   /** Returns the built stage plus its `checkpoint` flag (default true). */
@@ -115,68 +131,6 @@ object PipelineConfig {
       }
       (buildStage(name, base, M(cfgMap.v - "_base_stage" - "checkpoint")), ckpt)
     case other => throw new IllegalArgumentException(s"bad stage entry: $other")
-  }
-
-  // ---- config accessors -------------------------------------------------
-
-  private[config] implicit class CfgOps(val c: Cfg) {
-    def obj: Map[String, Cfg] = c match { case M(m) => m; case _ => Map.empty }
-    // A key that is PRESENT but not readable as the expected type throws
-    // instead of reading as absent: a quoted "1000" (or any typo'd value) on
-    // e.g. `max_bucket` would otherwise silently disable the very guard the
-    // user configured. Numeric strings coerce (YAML quoting is not an error).
-    private def bad(k: String, want: String, got: Cfg): Nothing =
-      throw new IllegalArgumentException(s"config key `$k`: expected $want, got $got")
-    // explicit `key: null` reads as absent (the reference's Hydra configs use
-    // null to disable optional thresholds)
-    def getInt(k: String): Option[Int] = obj.get(k).flatMap {
-      case Null => None
-      case I(i) => Some(i.toInt)
-      case D(d) => Some(d.toInt)
-      case S(s) if s.trim.toIntOption.isDefined => Some(s.trim.toInt)
-      case other => bad(k, "an integer", other)
-    }
-    // for 64-bit values (seeds): getInt would silently wrap them
-    def getLong(k: String): Option[Long] = obj.get(k).flatMap {
-      case Null => None
-      case I(i) => Some(i)
-      case D(d) => Some(d.toLong)
-      case S(s) if s.trim.toLongOption.isDefined => Some(s.trim.toLong)
-      case other => bad(k, "an integer", other)
-    }
-    def getDouble(k: String): Option[Double] = obj.get(k).flatMap {
-      case Null => None
-      case D(d) => Some(d)
-      case I(i) => Some(i.toDouble)
-      case S(s) if s.trim.toDoubleOption.isDefined => Some(s.trim.toDouble)
-      case other => bad(k, "a number", other)
-    }
-    def getStr(k: String): Option[String] = obj.get(k).flatMap {
-      case Null => None
-      case S(s) => Some(s)
-      case other => bad(k, "a string", other)
-    }
-    def getBool(k: String): Option[Boolean] = obj.get(k).flatMap {
-      case Null => None
-      case B(b) => Some(b)
-      case S(s) if s.trim.toBooleanOption.isDefined => Some(s.trim.toBoolean)
-      case other => bad(k, "a boolean", other)
-    }
-    def getList(k: String): Seq[Cfg] = obj.get(k).collect { case L(xs) => xs }.getOrElse(Nil)
-    def strings(k: String): Seq[String] = getList(k).collect { case S(s) => s }
-    /** An ordered `{name: number}` map (split fractions/weights) — one
-      * coercion shared by every split-weighted stage. */
-    def numberMap(k: String, owner: String): Option[Seq[(String, Double)]] =
-      obj.get(k).map {
-        case M(m) => m.toSeq.map {
-          case (key, D(d)) => key -> d
-          case (key, I(i)) => key -> i.toDouble
-          case (key, other) => throw new IllegalArgumentException(
-            s"$owner: bad number for $key in `$k`: $other")
-        }
-        case other => throw new IllegalArgumentException(
-          s"$owner: `$k` must be a {name: number} map, got $other")
-      }
   }
 
   // ---- stage builders ---------------------------------------------------
@@ -263,14 +217,20 @@ object PipelineConfig {
   registerReferenceStages()
   OpStages.registerAll()
 
-  /** Build `baseStage` from the registry. `train_only` and `_match_revise`
-    * are orchestration keys, handled here the same way for every stage:
-    * `train_only` (config_overwrites may set it on ANY stage,
-    * pipeline.py:430) is stripped from the builder's config and wraps a data
-    * stage's input; a metadata stage is already train-only via Pipeline.run.
-    * `_match_revise` rewrites a data stage into per-matcher blocks, each
-    * block's stage built here, so a bad block or a non-data stage fails at
-    * parse time.
+  /** Build `baseStage` from the registry. The builder runs on a config view
+    * that records the keys it reads ([[CfgOps]]); once it returns, any key it
+    * did not read fails the build (`stage <name>: unknown key(s) … (read:
+    * …)`) — so every key a builder takes must be read here, at parse time,
+    * not inside the stage function. A key the builder only reads when it
+    * applies (e.g. an aggregation entry's `algo`) fails where it does not.
+    *
+    * `train_only`, `_match_revise` and `_match_revise_mode` are orchestration
+    * keys, consumed here the same way for every stage: `train_only`
+    * (config_overwrites may set it on ANY stage, pipeline.py:430) wraps a
+    * data stage's input; a metadata stage is already train-only via
+    * Pipeline.run. `_match_revise` rewrites a data stage into per-matcher
+    * blocks, each block's stage built (and its keys checked) here, so a bad
+    * block, an unknown block key or a non-data stage fails at parse time.
     */
   def buildStage(name: String, baseStage: String, cfg: Cfg): Pipeline.Stage = {
     // single volatile read: a concurrent unregister cannot NPE us
@@ -278,9 +238,10 @@ object PipelineConfig {
     require(b != null, s"unknown stage: $baseStage")
     val trainOnly = cfg.getBool("train_only").getOrElse(false)
     val stageCfg = cfg match { case M(m0) => M(m0 - "train_only"); case c => c }
+    def build(c: Cfg) = readsOnly(s"stage $name", c)(b(name, c))
     val stage =
-      if (!stageCfg.obj.contains("_match_revise")) b(name, stageCfg)
-      else Pipeline.DataStage(name, matchRevise(c => b(name, c) match {
+      if (stageCfg.get("_match_revise").isEmpty) build(stageCfg)
+      else Pipeline.DataStage(name, matchRevise(c => build(c) match {
         case Pipeline.DataStage(_, f) => f
         case _ => throw new IllegalArgumentException(
           s"stage $name: _match_revise requires a data stage")
@@ -297,7 +258,7 @@ object PipelineConfig {
     * own config.
     */
   private def matchRevise(simple: Cfg => MedsData => DataFrame,
-      cfg: Cfg): MedsData => DataFrame = cfg.obj.get("_match_revise") match {
+      cfg: Cfg): MedsData => DataFrame = cfg.get("_match_revise") match {
     case None => simple(cfg)
     case Some(L(blocks)) if blocks.nonEmpty =>
       val mode = cfg.getStr("_match_revise_mode").getOrElse("match_and_revise")
@@ -333,20 +294,17 @@ object PipelineConfig {
           pa.subjectLgK))
     }
     register("fit_vocabulary_indices") { (name, cfg) =>
-      Pipeline.MetadataStage(name, m =>
-        FitVocabularyIndices(m.codes, cfg.strings("code_modifiers")))
+      val mods = cfg.strings("code_modifiers")
+      Pipeline.MetadataStage(name, m => FitVocabularyIndices(m.codes, mods))
     }
     register("reshard_to_split") { (name, cfg) =>
       // Reference stage config (reshard_to_split/config.yaml + reshard_to_split
       // .py:264-333): n_subjects_per_shard (default 50000) sizes shards per
-      // split; n_shards fixes the count instead when given. The distributed
-      // seeded assignment is the default; reference_parity=true selects the
-      // driver-side permutation that structurally matches the reference's
-      // collected numpy shuffle.
+      // split; n_shards fixes the count instead when given. Either way the
+      // seeded assignment is distributed: no subject list on the driver.
       val nShards = cfg.getInt("n_shards")
       val perShard = cfg.getInt("n_subjects_per_shard")
       val seed = cfg.getLong("seed").getOrElse(0L)
-      val parity = cfg.getBool("reference_parity").getOrElse(false)
       Pipeline.DataStage(name, m => {
         import org.apache.spark.sql.functions.{col, length}
         // splits table when present; else fall back to the path-derived split
@@ -365,13 +323,10 @@ object PipelineConfig {
           s"reshard_to_split stage '$name': no split information — the root has " +
             "neither a metadata/subject_splits.parquet table nor split " +
             "directories under data/")
-        val assignment = (nShards, parity) match {
-          case (Some(k), false) => ReshardToSplit.assignShardsDistributed(splitsSrc, k, seed)
-          case (Some(k), true) => ReshardToSplit.assignShardsSeeded(splitsSrc, k, seed)
-          case (None, false) =>
+        val assignment = nShards match {
+          case Some(k) => ReshardToSplit.assignShardsDistributed(splitsSrc, k, seed)
+          case None =>
             ReshardToSplit.assignShardsDistributedBySize(splitsSrc, perShard.getOrElse(50000), seed)
-          case (None, true) =>
-            ReshardToSplit.assignShardsBySize(splitsSrc, perShard.getOrElse(50000), seed)
         }
         ReshardToSplit.applyAssigned(m.data, assignment)
       })
@@ -387,7 +342,6 @@ object PipelineConfig {
       val fracs = cfg.numberMap("split_fracs", s"stage $name").getOrElse(
         Seq(TrainSplit -> 0.8, TuningSplit -> 0.1, HeldOutSplit -> 0.1))
       val seed = cfg.getLong("seed").getOrElse(1L)
-      val parity = cfg.getBool("reference_parity").getOrElse(false)
       Pipeline.SplitsStage(name, m => {
         import org.apache.spark.sql.functions.{col, countDistinct}
         val subjects = m.data.select(col(SubjectId)).distinct()
@@ -407,39 +361,39 @@ object PipelineConfig {
             "conflict upstream (an arbitrary winner would silently leak " +
             "held-out subjects into training)")
         val unassigned = subjects.join(existing, Seq(SubjectId), "left_anti")
-        val assigned =
-          if (parity) ReshardToSplit.assignSplitsByFrac(unassigned, fracs, seed)
-          else ReshardToSplit.assignSplitsByFracDistributed(unassigned, fracs, seed)
-        existing.unionByName(assigned)
+        existing.unionByName(
+          ReshardToSplit.assignSplitsByFracDistributed(unassigned, fracs, seed))
       })
     }
-    data("filter_subjects") { cfg => m =>
-      FilterSubjects(m.data,
-        cfg.getInt("min_measurements_per_subject"),
-        cfg.getInt("min_events_per_subject"))
+    data("filter_subjects") { cfg =>
+      val (minMeasurements, minEvents) =
+        (cfg.getInt("min_measurements_per_subject"), cfg.getInt("min_events_per_subject"))
+      m => FilterSubjects(m.data, minMeasurements, minEvents)
     }
-    data("filter_measurements") { cfg => m =>
-      FilterMeasurements(m.data, m.codes,
-        cfg.getInt("min_subjects_per_code"),
-        cfg.getInt("min_occurrences_per_code"),
-        cfg.strings("code_modifiers"))
+    data("filter_measurements") { cfg =>
+      val (minSubjects, minOccurrences, mods) = (cfg.getInt("min_subjects_per_code"),
+        cfg.getInt("min_occurrences_per_code"), cfg.strings("code_modifiers"))
+      m => FilterMeasurements(m.data, m.codes, minSubjects, minOccurrences, mods)
     }
-    data("occlude_outliers") { cfg => m =>
-      OccludeOutliers(m.data, m.codes,
-        cfg.getDouble("stddev_cutoff").getOrElse(4.5),
-        cfg.strings("code_modifiers"))
+    data("occlude_outliers") { cfg =>
+      val (cutoff, mods) =
+        (cfg.getDouble("stddev_cutoff").getOrElse(4.5), cfg.strings("code_modifiers"))
+      m => OccludeOutliers(m.data, m.codes, cutoff, mods)
     }
-    data("normalization") { cfg => m =>
-      Normalization(graft.meds.MedsIO.withRowIdx(m.data), m.codes,
-        cfg.strings("code_modifiers"))
+    data("normalization") { cfg =>
+      val mods = cfg.strings("code_modifiers")
+      m => Normalization(graft.meds.MedsIO.withRowIdx(m.data), m.codes, mods)
     }
-    data("reorder_measurements") { cfg => m =>
-      ReorderMeasurements(m.data, cfg.strings("ordered_code_patterns"))
+    data("reorder_measurements") { cfg =>
+      val patterns = cfg.strings("ordered_code_patterns")
+      m => ReorderMeasurements(m.data, patterns)
     }
-    data("extract_values") { cfg => m =>
-      ExtractValues(m.data, cfg.obj.toSeq.filterNot(_._1.startsWith("_")))
+    data("extract_values") { cfg =>
+      // every key is an output code: a whole-map read
+      val specs = cfg.obj.toSeq.filterNot(_._1.startsWith("_"))
+      m => ExtractValues(m.data, specs)
     }
-    data("add_time_derived_measurements") { cfg => m =>
+    register("add_time_derived_measurements") { (name, cfg) =>
       // Generators in config-key order through the sequential-semantics,
       // single-sort driver (addAll): later generators' rows precede earlier
       // ones' within a block — the reference's per-functor prepend
@@ -448,33 +402,32 @@ object PipelineConfig {
       import AddTimeDerivedMeasurements.Generator
       val gens = cfg.obj.toSeq.collect {
         case (_, Cfg.Null) => None // feature: None skips it, like the reference
-        case ("age", ac) => Some(Generator(df =>
-          AddTimeDerivedMeasurements.ageEvents(df,
-            ac.getStr("DOB_code").getOrElse("MEDS_BIRTH"),
-            ac.getStr("age_code").getOrElse("AGE"),
-            ac.getStr("age_unit").getOrElse("years"))))
-        case ("time_of_day", tc) => Some(Generator(df =>
-          AddTimeDerivedMeasurements.timeOfDayEvents(df,
-            // accept 6.0 as well as 6 — YAML→JSON round-trips often float
-            tc.getList("endpoints").collect { case I(i) => i.toInt; case D(d) => d.toInt },
-            tc.getStr("time_of_day_code").getOrElse("TIME_OF_DAY"))))
+        case ("age", ac) =>
+          val (dob, age, unit) = (ac.getStr("DOB_code").getOrElse("MEDS_BIRTH"),
+            ac.getStr("age_code").getOrElse("AGE"), ac.getStr("age_unit").getOrElse("years"))
+          Some(Generator(df => AddTimeDerivedMeasurements.ageEvents(df, dob, age, unit)))
+        case ("time_of_day", tc) =>
+          // accept 6.0 as well as 6 — YAML→JSON round-trips often float
+          val endpoints = tc.getList("endpoints").collect { case I(i) => i.toInt; case D(d) => d.toInt }
+          val code = tc.getStr("time_of_day_code").getOrElse("TIME_OF_DAY")
+          Some(Generator(df => AddTimeDerivedMeasurements.timeOfDayEvents(df, endpoints, code)))
         case ("timeline_tokens", tt) =>
+          val unit = tt.getStr("time_unit").orElse(tt.getStr("unit")).getOrElse("days")
+          val startCode = tt.getStr("timeline_start_code").getOrElse("TIMELINE//START")
           val endCode = tt.getStr("timeline_end_code").getOrElse("TIMELINE//END")
-          Some(Generator(df =>
-            AddTimeDerivedMeasurements.timelineTokenEvents(df,
-              tt.getStr("time_unit").orElse(tt.getStr("unit")).getOrElse("days"),
-              startCode = tt.getStr("timeline_start_code").getOrElse("TIMELINE//START"),
-              endCode = endCode,
-              deltaCodeTemplate =
-                tt.getStr("time_delta_code").getOrElse("TIMELINE//DELTA//{time_unit}")),
+          val deltaCode = tt.getStr("time_delta_code").getOrElse("TIMELINE//DELTA//{time_unit}")
+          Some(Generator(df => AddTimeDerivedMeasurements.timelineTokenEvents(df, unit,
+            startCode = startCode, endCode = endCode, deltaCodeTemplate = deltaCode),
             Some(endCode)))
         case (other, _) =>
-          throw new IllegalArgumentException(s"Unknown time-derived measurement: $other")
+          throw new IllegalArgumentException(s"stage $name: unknown time-derived measurement: $other")
       }.flatten
-      require(gens.nonEmpty, "add_time_derived_measurements: no generators configured")
-      AddTimeDerivedMeasurements.addAll(m.data, gens)
+      Pipeline.DataStage(name, m => {
+        require(gens.nonEmpty, s"stage $name: no generators configured")
+        AddTimeDerivedMeasurements.addAll(m.data, gens)
+      })
     }
-    data("bin_numeric_values") { cfg => m =>
+    data("bin_numeric_values") { cfg =>
       // custom_bins values may be the reference's dict form (bin name →
       // endpoint, insertion-ordered least→greatest) or a plain list
       def parseBins(c: Cfg): Map[String, Seq[Double]] = c.obj.map {
@@ -485,23 +438,25 @@ object PipelineConfig {
       }.toMap
       // custom_bins_filepath: same structure from a YAML (like the
       // reference) or JSON file; inline custom_bins entries win on collision
-      val fileBins = cfg.getStr("custom_bins_filepath").map { p =>
-        val text = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
-        parseBins(if (p.endsWith(".yaml") || p.endsWith(".yml")) Yaml.parse(text, p)
-          else Cfg.fromJson(text))
-      }.getOrElse(Map.empty[String, Seq[Double]])
-      val custom = fileBins ++ cfg.obj.get("custom_bins").map(parseBins).getOrElse(Map.empty)
+      val binsPath = cfg.getStr("custom_bins_filepath")
+      val inline = cfg.get("custom_bins").map(parseBins).getOrElse(Map.empty)
       val binWith = cfg.strings("bin_with_columns") match {
         case Nil => Seq(graft.meds.MedsSchema.ValuesQuantiles)
         case cols => cols
       }
-      BinNumericValues(m.data, m.codes,
-        binWithColumns = binWith,
-        customBins = custom.toMap,
-        dropNumeric = cfg.getBool("do_drop_numeric_value")
-          .orElse(cfg.getBool("drop_numeric_value")).getOrElse(false),
-        codeFormat = cfg.getStr("code_with_bin_name").orElse(cfg.getStr("code_format"))
-          .getOrElse("{code}//value_[{left},{right})"))
+      val dropNumeric = cfg.getBool("do_drop_numeric_value")
+        .orElse(cfg.getBool("drop_numeric_value")).getOrElse(false)
+      val codeFormat = cfg.getStr("code_with_bin_name").orElse(cfg.getStr("code_format"))
+        .getOrElse("{code}//value_[{left},{right})")
+      m => {
+        val fileBins = binsPath.map { p =>
+          val text = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+          parseBins(if (p.endsWith(".yaml") || p.endsWith(".yml")) Yaml.parse(text, p)
+            else Cfg.fromJson(text))
+        }.getOrElse(Map.empty[String, Seq[Double]])
+        BinNumericValues(m.data, m.codes, binWithColumns = binWith,
+          customBins = fileBins ++ inline, dropNumeric = dropNumeric, codeFormat = codeFormat)
+      }
     }
   }
 }

@@ -95,21 +95,17 @@ object Pipeline {
   /** Run stages sequentially; `checkpoints` maps stage name → dir to persist
     * (and re-read — cutting lineage) after that stage, providing the
     * reference's resumability boundaries without its per-stage mandatory
-    * disk round-trip. With `resume` (the reference's default behavior), a
-    * checkpointed stage whose output dir is already complete is SKIPPED and
-    * its output re-read — an interrupted pipeline re-run picks up after the
-    * last finished checkpoint.
+    * disk round-trip. As in the reference, a checkpointed stage whose output
+    * dir is already complete is SKIPPED and its output re-read — an
+    * interrupted pipeline re-run picks up after the last finished
+    * checkpoint. `input` is taken as a raw scan (see [[runHeld]]).
     */
   def run(
       spark: SparkSession,
       input: MedsData,
       stages: Seq[Stage],
-      checkpoints: Map[String, String] = Map.empty,
-      resume: Boolean = true,
-      autoPersist: Boolean = true,
-      initialDirty: Boolean = false): MedsData =
-    runHeld(spark, input, stages, checkpoints, resume, autoPersist,
-      initialDirty).out
+      checkpoints: Map[String, String] = Map.empty): MedsData =
+    runHeld(spark, input, stages, checkpoints).out
 
   /** [[run]], additionally returning the DataFrames auto-persisted at
     * lineage fork points so the caller can `unpersist` them once the final
@@ -121,12 +117,8 @@ object Pipeline {
       spark: SparkSession,
       input: MedsData,
       stages: Seq[Stage],
-      checkpoints: Map[String, String] = Map.empty,
-      resume: Boolean = true,
-      autoPersist: Boolean = true,
-      initialDirty: Boolean = false): (MedsData, Seq[DataFrame]) = {
-    val held = runHeld(spark, input, stages, checkpoints, resume, autoPersist,
-      initialDirty)
+      checkpoints: Map[String, String] = Map.empty): (MedsData, Seq[DataFrame]) = {
+    val held = runHeld(spark, input, stages, checkpoints)
     (held.out, held.persisted)
   }
 
@@ -164,41 +156,33 @@ object Pipeline {
     * if that matters. Pipelines running under a `checkpointRoot` re-read
     * each stage from disk, so their lineage is never dirty at a fork and
     * this is a no-op — explicit checkpoint placement always wins over the
-    * heuristic.
-    *
-    * `initialDirty`: the dirty flag starts false because `input` is
-    * normally a raw `MedsIO.read` scan; pass true when handing in a
-    * MedsData whose `data` already carries in-memory transformations, so
-    * the first fork persists it too.
+    * heuristic. The lineage starts clean: `input` is taken as a raw
+    * `MedsIO.read` scan, so a fork before the first data stage never
+    * persists.
     */
   def runHeld(
       spark: SparkSession,
       input: MedsData,
       stages: Seq[Stage],
-      checkpoints: Map[String, String] = Map.empty,
-      resume: Boolean = true,
-      autoPersist: Boolean = true,
-      initialDirty: Boolean = false): Held = {
+      checkpoints: Map[String, String] = Map.empty): Held = {
     // resume from the LAST complete checkpoint: stages before it must not
     // even be CONSTRUCTED — several run eager driver jobs while building
     // (the codes materialization, vocabulary collect), which would execute
     // full aggregations only to be discarded by the checkpoint read
-    val lastComplete =
-      if (!resume) -1
-      else stages.lastIndexWhere(s =>
-        checkpoints.get(s.name).exists(d => isComplete(spark, d)))
+    val lastComplete = stages.lastIndexWhere(s =>
+      checkpoints.get(s.name).exists(d => isComplete(spark, d)))
     val start =
       if (lastComplete < 0) input
       else MedsIO.read(spark, checkpoints(stages(lastComplete).name))
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val codes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // data lineage carries unmaterialized transformations since the last
-    // scan / checkpoint read / persist; a resume re-read is never dirty
-    var dirty = initialDirty && lastComplete < 0
+    // scan / checkpoint read / persist
+    var dirty = false
     val out = stages.drop(lastComplete + 1).foldLeft(start) { (m0, stage) =>
       val t0 = System.nanoTime()
       val m = stage match {
-        case (_: MetadataStage | _: SplitsStage) if autoPersist && dirty =>
+        case (_: MetadataStage | _: SplitsStage) if dirty =>
           println(s"[graft] auto-persist: transformed data lineage forks at " +
             s"stage '${stage.name}' (aggregation + final write would each " +
             "re-execute it)")

@@ -32,9 +32,11 @@ object ReshardToSplit {
     * per split, seeded-RNG permutation of the collected subject ids, then
     * near-equal contiguous chunks (numpy array_split semantics: the first
     * `n mod k` shards get one extra subject). The subject list is
-    * metadata-scale — the reference collects it too — so the driver-side
-    * permutation is not a scale hazard; semantics match the reference in
-    * structure (its numpy RNG stream is not reproducible outside numpy).
+    * metadata-scale in the reference, which collects it too; semantics match
+    * it in structure only (its numpy RNG stream is not reproducible outside
+    * numpy). Not a stage path: at cohort scale the collect is a driver-memory
+    * hazard, so the stage runs [[assignShardsDistributed]] and this
+    * collect form stays as the specs' reference for its chunk geometry.
     */
   def assignShardsSeeded(splits: DataFrame, nShards: Int, seed: Long = 0L): DataFrame =
     assignShardsWith(splits, _ => nShards, seed)
@@ -79,9 +81,8 @@ object ReshardToSplit {
     * (numpy `array_split` semantics, like the reference's `shard_subjects` —
     * reshard_to_split.py:25-195) — but the permutation rank is computed with
     * the scalable global-row-number primitive instead of a driver-side
-    * collect, so a split with 10⁸ subjects never materializes on the driver
-    * (the collect-based [[assignShardsSeeded]] stays available as the
-    * reference-parity mode). Deterministic for a given (splits, seed).
+    * collect, so a split with 10⁸ subjects never materializes on the driver.
+    * Deterministic for a given (splits, seed).
     */
   def assignShardsDistributed(splits: DataFrame, nShards: Int, seed: Long = 0L): DataFrame = {
     require(nShards > 0)
@@ -131,11 +132,11 @@ object ReshardToSplit {
     * permutation of the distinct cohort, sliced at the cumulative-fraction
     * boundaries. Fractions must sum to 1.
     *
-    * Reference-parity form: collects the distinct subject ids and permutes
-    * them on the driver, structurally matching the reference's collected
-    * numpy shuffle. At 10⁸+ subjects that is a ~GB driver materialization —
-    * use [[assignSplitsByFracDistributed]] (identical split cardinalities,
-    * no driver-side subject list) anywhere scale matters.
+    * Collects the distinct subject ids and permutes them on the driver,
+    * structurally like the reference's collected numpy shuffle. At 10⁸+
+    * subjects that is a ~GB driver materialization, so the stage runs
+    * [[assignSplitsByFracDistributed]] (identical split cardinalities, no
+    * driver-side subject list); this form stays as the specs' reference.
     */
   def assignSplitsByFrac(subjects: DataFrame, fracs: Seq[(String, Double)],
       seed: Long = 1L): DataFrame = {

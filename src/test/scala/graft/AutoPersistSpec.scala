@@ -8,16 +8,13 @@ import graft.operators.Pipeline
 
 /** Pins the fork-point auto-persist decision rule of Pipeline.runTracked
   * (VERDICT r15 #3: the rule was probe-measured — SMOKE.md "Round 15:
-  * fork-point auto-persist" — but no assertion protected it). The four branches:
+  * fork-point auto-persist" — but no assertion protected it). The three branches:
   *   1. a Metadata stage entered with a DIRTY data lineage persists exactly
   *      once (MEMORY_AND_DISK) and returns the frame for later unpersist;
   *   2. a raw-scan lineage (no transforming stage yet) never persists —
   *      caching a bare parquet scan would defeat column pruning;
   *   3. a checkpointed pipeline (the `checkpointRoot` path) never persists —
-  *      the checkpoint read resets the lineage, explicit placement wins;
-  *   4. `initialDirty = true` marks a non-scan input so the FIRST fork
-  *      persists it (the r15-advice gap: callers handing in an
-  *      already-transformed lineage previously got no persist).
+  *      the checkpoint read resets the lineage, explicit placement wins.
   * Plus the Main contract: unpersisting the returned frames drops them to
   * StorageLevel.NONE (Main.scala does this after the root commits).
   */
@@ -76,26 +73,5 @@ class AutoPersistSpec extends SparkSpec {
     assert(persisted.isEmpty,
       "checkpoint read precedes the fork; explicit placement must win")
     assert(Pipeline.isComplete(spark, s"$dir/ckpt_upper"))
-  }
-
-  test("autoPersist=false disables the heuristic entirely") {
-    val (in, _) = freshInput()
-    val (_, persisted) = Pipeline.runTracked(spark, in,
-      Seq(transformStage, aggStage("agg_off")), autoPersist = false)
-    assert(persisted.isEmpty)
-  }
-
-  test("initialDirty marks a non-scan input for the first fork") {
-    val (in0, _) = freshInput()
-    val in = in0.withData( // an already-transformed lineage handed in
-      in0.data.withColumn(MedsSchema.Code,
-        regexp_replace(col(MedsSchema.Code), "//", "|")))
-    val (_, without) = Pipeline.runTracked(spark, in, Seq(aggStage("agg_nd")))
-    assert(without.isEmpty, "default still treats the input as a scan")
-    val (_, withFlag) = Pipeline.runTracked(spark, in,
-      Seq(aggStage("agg_id")), initialDirty = true)
-    assert(withFlag.size == 1 &&
-      withFlag.head.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    withFlag.foreach(_.unpersist(true))
   }
 }

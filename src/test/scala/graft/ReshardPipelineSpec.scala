@@ -85,15 +85,13 @@ class ReshardPipelineSpec extends SparkSpec {
     // every subject assigned exactly once
     assert(out.splits.select(SubjectId).distinct().count() == 100)
     assert(out.splits.count() == 100)
-    // deterministic; parity mode gives identical cardinalities
+    // deterministic
     val again = Pipeline.run(spark, meds, parsed.stages)
     assert(collectSet(out.splits) == collectSet(again.splits))
-    val parity = Pipeline.run(spark, meds, PipelineConfig.fromJson(
-      """{"stages": [{"generate_subject_splits": {
-        |  "split_fracs": {"train": 0.8, "tuning": 0.2}, "seed": 11,
-        |  "reference_parity": true}}]}""".stripMargin).stages)
-    assert(parity.splits.groupBy(Split).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == bySplit)
+    // no driver-collect mode: `reference_parity` is an unknown key
+    val parity = intercept[IllegalArgumentException](PipelineConfig.fromJson(
+      """{"stages": [{"generate_subject_splits": {"reference_parity": true}}]}"""))
+    assert(parity.getMessage.contains("unknown key(s) reference_parity"), parity.getMessage)
 
     // chained: a split-less root becomes reshard-able in one pipeline
     val noSplits = MedsData(data, Seq.empty[String].toDF(Code),
@@ -199,10 +197,10 @@ class ReshardPipelineSpec extends SparkSpec {
     val perShard = out.data.groupBy(Split, Shard).agg(countDistinct(SubjectId))
       .collect().map(_.getLong(2))
     assert(perShard.forall(_ <= 10), s"oversized shards: ${perShard.toSeq}")
-    // reference-parity (driver-permutation) mode builds and partitions too
-    val parity = Pipeline.run(spark, meds, PipelineConfig.fromJson(
-      """{"stages": [{"reshard_to_split": {"n_shards": 2, "reference_parity": true}}]}""").stages)
-    assert(parity.data.select(SubjectId, Split, Shard).distinct().count() == 30)
+    // no driver-permutation mode: `reference_parity` is an unknown key
+    val parity = intercept[IllegalArgumentException](PipelineConfig.fromJson(
+      """{"stages": [{"reshard_to_split": {"n_shards": 2, "reference_parity": true}}]}"""))
+    assert(parity.getMessage.contains("unknown key(s) reference_parity"), parity.getMessage)
   }
 
   test("default-layout write over a resharded root clears the stale .shards.json marker") {

@@ -1,0 +1,194 @@
+package graft
+
+import graft.config.{PipelineConfig, Yaml}
+import graft.dsl.Cfg
+import graft.obs.Collector
+
+import java.nio.file.{Files, Paths}
+
+/** The config-key contract: `PipelineConfig.buildStage` fails on every stage
+  * key its builder did not read, at parse time, nested maps included, and
+  * `fromCfg` does the same for the pipeline's top-level keys.
+  */
+class StageKeysSpec extends SparkSpec {
+
+  /** A minimal valid config per registered stage: its required keys only. */
+  private val minimal: Map[String, String] = Map(
+    "add_time_derived_measurements" -> "{time_of_day: {endpoints: [6]}}",
+    "aggregate_code_metadata" -> "{}",
+    "as_media" -> "{}",
+    "asof_join" -> "{keys: [k], right_path: /x, left_time: t, right_time: t, value_cols: [v]}",
+    "audio_metadata" -> "{}",
+    "bin_numeric_values" -> "{}",
+    "bpe_encode" -> "{}",
+    "bpe_train" -> "{model_path: /x}",
+    "c4_filter" -> "{}",
+    "chunk_documents" -> "{window: 8}",
+    "corpus_stats" -> "{}",
+    "decontaminate" -> "{eval_path: /x}",
+    "dedup_against" -> "{ref_path: /x}",
+    "dedup_exact" -> "{}",
+    "dedup_fingerprint" -> "{}",
+    "dedup_lines" -> "{}",
+    "embed_dedup" -> "{}",
+    "expect_rows" -> "{expect: k > 0}",
+    "expect_schema" -> "{schema: k BIGINT}",
+    "extract_values" -> "{out: code}",
+    "filter_measurements" -> "{}",
+    "filter_rows" -> "{predicate: k > 0}",
+    "filter_subjects" -> "{}",
+    "fit_vocabulary_indices" -> "{}",
+    "freq_items" -> "{}",
+    "generate_subject_splits" -> "{}",
+    "join_table" -> "{path: /x, keys: [k]}",
+    "js_divergence" -> "{}",
+    "json_extract" -> "{json_col: j, schema: k BIGINT}",
+    "knn_join" -> "{}",
+    "lang_id" -> "{}",
+    "lm_perplexity" -> "{}",
+    "load_csv" -> "{path: /x}",
+    "load_jsonl" -> "{path: /x}",
+    "load_orc" -> "{path: /x}",
+    "media_audio_decode" -> "{}",
+    "media_decode" -> "{}",
+    "media_dimensions" -> "{}",
+    "media_frames" -> "{n_frames: 2}",
+    "media_metadata" -> "{}",
+    "media_resize" -> "{target_w: 8, target_h: 8}",
+    "media_video_frames" -> "{}",
+    "minhash_lsh_dedup" -> "{}",
+    "mp3_metadata" -> "{}",
+    "nb_classify" -> "{}",
+    "nb_eval" -> "{train_path: /x}",
+    "ngram_jaccard_dedup" -> "{}",
+    "normalization" -> "{}",
+    "normalize_text" -> "{}",
+    "occlude_outliers" -> "{}",
+    "overlap_report" -> "{ref_path: /x}",
+    "pack_sequences" -> "{capacity: 16}",
+    "ppl_buckets" -> "{}",
+    "pq_encode" -> "{}",
+    "pq_knn" -> "{queries_path: /x}",
+    "profile" -> "{}",
+    "quality_filter" -> "{min_words: 1}",
+    "range_join" -> ("{keys: [k], value_cols: [v], bucket_width: 10, right_path: /x, " +
+      "time_col: t, start_col: s, end_col: e}"),
+    "redact_pii" -> "{}",
+    "remove_dup_spans" -> "{}",
+    "reorder_measurements" -> "{}",
+    "resample_mix" -> "{stratum_col: s, rates: {a: 1}}",
+    "reshard_to_split" -> "{}",
+    "rolling_agg" -> "{keys: [k], time_col: t, range: 10, count_as: n}",
+    "sample" -> "{fraction: 0.5}",
+    "sample_split" -> "{splits: {a: 1}}",
+    "semdedup" -> "{}",
+    "sessionize" -> "{}",
+    "shuffle_rows" -> "{}",
+    "sim_topk" -> "{query: [1.0, 0.0]}",
+    "simhash_dedup" -> "{}",
+    "stratified_cap" -> "{stratum_col: s, per_stratum: 2}",
+    "temperature_mix" -> "{stratum_col: s, alpha: 0.5}",
+    "text_entropy" -> "{}",
+    "text_quality" -> "{}",
+    "text_repetition" -> "{}",
+    "text_tokens" -> "{}",
+    "tf_idf" -> "{}",
+    "token_budget_cap" -> "{budget_tokens: 100}",
+    "video_metadata" -> "{}",
+    "winnow_fingerprint" -> "{}",
+    "write_csv" -> "{path: /x}",
+    "write_jsonl" -> "{path: /x}",
+    "write_orc" -> "{path: /x}",
+    "zorder_layout" -> "{cols: [a, b]}")
+
+  /** Stages whose top-level keys are data, with the reason. */
+  private val exempt = Map(
+    "extract_values" -> "every top-level key names an output code")
+
+  private def map(yaml: String): Cfg.M = Yaml.parse(yaml).asInstanceOf[Cfg.M]
+
+  private def build(stage: String, cfg: Cfg): Unit =
+    PipelineConfig.buildStage(stage, stage, cfg)
+
+  private def unknownKey(stage: String, cfg: Cfg): String =
+    intercept[IllegalArgumentException](build(stage, cfg)).getMessage
+
+  test("the table covers exactly the registered stages, and each entry builds") {
+    assert(minimal.keySet == PipelineConfig.registeredStages,
+      s"missing: ${PipelineConfig.registeredStages -- minimal.keySet}; " +
+        s"stale: ${minimal.keySet -- PipelineConfig.registeredStages}")
+    assert(exempt.keySet.subsetOf(minimal.keySet))
+    minimal.foreach { case (stage, yaml) => build(stage, map(yaml)) }
+  }
+
+  test("every stage rejects an unknown key at build time, naming the stage and the key") {
+    val notRejected = minimal.toSeq.sorted.filterNot(e => exempt.contains(e._1)).flatMap {
+      case (stage, yaml) =>
+        val typo = Cfg.M(map(yaml).v + ("zz_typo" -> Cfg(1)))
+        scala.util.Try(build(stage, typo)).failed.toOption match {
+          case Some(e: IllegalArgumentException)
+              if e.getMessage.contains(s"stage $stage") && e.getMessage.contains("zz_typo") => None
+          case other => Some(s"$stage: ${other.fold("built")(_.toString)}")
+        }
+    }
+    assert(notRejected.isEmpty, notRejected.mkString("\n"))
+  }
+
+  test("nested maps, aggregation entries and _match_revise blocks are checked too") {
+    val tod = unknownKey("add_time_derived_measurements",
+      map("{time_of_day: {endpoints: [6], endpointz: [1]}}"))
+    assert(tod.contains("unknown key(s) time_of_day.endpointz"), tod)
+    val agg = unknownKey("aggregate_code_metadata",
+      map("{aggregations: [{name: values/quantiles, quantilez: [0.5]}]}"))
+    assert(agg.contains("unknown key(s) aggregations[0].quantilez"), agg)
+    assert(agg.contains("aggregations[0].quantiles"), agg)
+    val mr = unknownKey("occlude_outliers",
+      map("{_match_revise: [{_matcher: {code: A}, stddev_cutof: 2}]}"))
+    assert(mr.contains("stage occlude_outliers: unknown key(s) stddev_cutof"), mr)
+    assert(mr.contains("stddev_cutoff"), mr)
+    // the orchestration keys and a matcher's own (data) keys are accepted
+    build("occlude_outliers", map("{train_only: true, _match_revise_mode: " +
+      "multi_match_and_revise, _match_revise: [{_matcher: {code: {regex: A}}, " +
+      "train_only: true, stddev_cutoff: 2}]}"))
+  }
+
+  test("an unknown top-level pipeline key fails like a stage key") {
+    val e = intercept[IllegalArgumentException](
+      PipelineConfig.fromYaml("description: d\nfoo: 1\nstages: [normalization]\n"))
+    assert(e.getMessage.contains("pipeline: unknown key(s) foo (read: conf, description, stages)"),
+      e.getMessage)
+    val over = intercept[IllegalArgumentException](PipelineConfig.fromFile(
+      "pkg://graft_testcfg.pipeline.yaml", Seq("foo.bar=1")))
+    assert(over.getMessage.contains("unknown key(s) foo"), over.getMessage)
+  }
+
+  test("a typo'd key fails before any Spark job, as an override and in the file") {
+    val out = Files.createTempDirectory("graft_stage_keys").toString
+    def run(args: String*): IllegalArgumentException = {
+      val (res, records) = Collector.measure(spark)(
+        scala.util.Try(Main.run(args.toArray, spark)))
+      assert(records.jobs.isEmpty, records.jobs.map(_.callSite))
+      res.failed.get match { case e: IllegalArgumentException => e }
+    }
+    def check(e: IllegalArgumentException): Unit = {
+      assert(e.getMessage.contains("stage occlude_outliers: unknown key(s) stddev_cuttoff"),
+        e.getMessage)
+      assert(e.getMessage.contains("stddev_cutoff"), e.getMessage)
+    }
+    check(run("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/over",
+      "stages.occlude_outliers.stddev_cuttoff=3"))
+    val typo = Files.readString(Paths.get("perfbench/meds_etl.yaml"))
+      .replace("stddev_cutoff: 1", "stddev_cuttoff: 1")
+    assert(typo.contains("stddev_cuttoff"))
+    Files.writeString(Paths.get(s"$out/typo.yaml"), typo)
+    check(run(s"$out/typo.yaml", MedsFixture.root, s"$out/file"))
+  }
+
+  test("every committed pipeline builds") {
+    val committed = Files.list(Paths.get("config")).toArray.map(_.toString)
+      .filter(_.endsWith(".yaml")).toSeq
+    assert(committed.size == 4, committed)
+    (committed :+ "perfbench/meds_etl.yaml").foreach(PipelineConfig.fromFile(_))
+    PipelineConfig.fromFile("pkg://graft_testcfg.pipeline.yaml")
+  }
+}
