@@ -181,12 +181,11 @@ object Main {
       }.toMap
     }.getOrElse(Map.empty[String, String])
     val input = MedsIO.read(spark, inputRoot)
-    val held = Pipeline.runHeld(spark, input, stages, checkpoints)
-    MedsIO.write(held.out, outputRoot)
-    // release the fork-point caches and the codes checkpoints now that the
-    // output root is committed — a shared session running many pipelines
-    // must not accumulate entries
-    held.release()
+    val (out, persisted) = Pipeline.runTracked(spark, input, stages, checkpoints)
+    MedsIO.write(out, outputRoot)
+    // release the fork-point caches now that the output root is committed —
+    // a shared session running many pipelines must not accumulate entries
+    persisted.foreach(_.unpersist(false))
     MedsIO.writeDatasetMetadata(outputRoot,
       MedsIO.readDatasetMetadata(inputRoot).getOrElse("dataset_name", "dataset"),
       // provenance must list the stages that actually RAN (one stage in

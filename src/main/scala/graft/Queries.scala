@@ -479,9 +479,6 @@ object Queries {
   private val fitVocab: Gate = Gate(
     (s, dir) => {
       val codes = medsEvents(s, dir).select(Code).distinct()
-      // validateUnique deliberately left ON: this gate times the operator's
-      // full reference contract (validation included), unlike the
-      // normalization gate where the codes frame is structurally unique
       FitVocabularyIndices(codes)
         .select(col(Code).as("code"), col(VocabIndex).cast(LongType).as("vocab_index"))
         .orderBy("code")
@@ -553,9 +550,7 @@ object Queries {
       val ev = medsEvents(s, dir)
       val codes = AggregateCodeMetadata.compute(ev,
         Seq(ValuesNOccurrences, ValuesSum, ValuesSumSqd))
-      // codes is keyed by its own groupBy key: uniqueness is structural,
-      // skip the eager duplicate scan
-      val vocab = FitVocabularyIndices(codes, validateUnique = false)
+      val vocab = FitVocabularyIndices(codes)
       Normalization(ev, vocab, valueType = DoubleType)
         .select(col("event_id"), col(Code).cast(LongType).as("code"),
           r4(col(NumericValue)).as(NumericValue))

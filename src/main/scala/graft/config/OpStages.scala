@@ -264,23 +264,21 @@ object OpStages {
       ).flatten
       val (minEntropy, maxEntropy) = (cfg.getDouble("min_entropy"), cfg.getDouble("max_entropy"))
       val lang = cfg.getStr("lang")
-      Pipeline.DataStage(name, m => {
-        val t = col(text)
-        val rules = Seq(
-          if (qChecks.isEmpty) None else Some(SignalBounds.bounds(
-            QualitySignals.signals(t, TextAnalysis.DefaultStopwords), qChecks)),
-          if (rChecks.isEmpty) None else Some(SignalBounds.bounds(
-            graft.plans.VectorExpressions.repetitionSignals(t, 3), rChecks)),
-          // unigram entropy (bits): min catches degenerate repetition,
-          // max catches structureless gibberish (entropy ~ log2(n_words))
-          minEntropy.map(v => TextAnalysis.unigramEntropy(t) >= v),
-          maxEntropy.map(v => TextAnalysis.unigramEntropy(t) <= v),
-          lang.map(v => TextAnalysis.langIdExprs(t).last === v) // lang_pred equality
-        ).flatten
-        require(rules.nonEmpty, s"stage $name: at least one threshold rule " +
-          "is required (min_words, max_dup_line_fraction, lang, ...)")
-        m.data.filter(rules.reduce(_ && _))
-      })
+      val t = col(text)
+      val rules = Seq(
+        if (qChecks.isEmpty) None else Some(SignalBounds.bounds(
+          QualitySignals.signals(t, TextAnalysis.DefaultStopwords), qChecks)),
+        if (rChecks.isEmpty) None else Some(SignalBounds.bounds(
+          graft.plans.VectorExpressions.repetitionSignals(t, 3), rChecks)),
+        // unigram entropy (bits): min catches degenerate repetition,
+        // max catches structureless gibberish (entropy ~ log2(n_words))
+        minEntropy.map(v => TextAnalysis.unigramEntropy(t) >= v),
+        maxEntropy.map(v => TextAnalysis.unigramEntropy(t) <= v),
+        lang.map(v => TextAnalysis.langIdExprs(t).last === v) // lang_pred equality
+      ).flatten
+      require(rules.nonEmpty, s"stage $name: at least one threshold rule " +
+        "is required (min_words, max_dup_line_fraction, lang, ...)")
+      Pipeline.DataStage(name, m => m.data.filter(rules.reduce(_ && _)))
     }
 
     // PII scrubbing: REPLACES the text column with its redacted form and
@@ -627,18 +625,15 @@ object OpStages {
       // unique-id contract); `algo: window` selects the salted-window cap
       // for corpora with duplicate ids (`salts` applies only there)
       val algo = cfg.getStr("algo").getOrElse("topk")
+      require(algo == "topk" || algo == "window",
+        s"stage $name: unknown algo `$algo` (expected topk|window)")
       val salts = cfg.getInt("salts").getOrElse(64)
       // broadcast: false for near-unique stratum columns, where the winner
       // set is no longer metadata-sized (see Sampling.stratifiedCap)
       val bcast = cfg.getBool("broadcast").getOrElse(true)
-      Pipeline.DataStage(name, m => algo match {
-        case "topk" =>
-          Sampling.stratifiedCap(m.data, id, stratum, perStratum, seed, bcast)
-        case "window" =>
-          Sampling.stratifiedCapWindow(m.data, id, stratum, perStratum, seed, salts)
-        case other => throw new IllegalArgumentException(
-          s"stage $name: unknown algo `$other` (expected topk|window)")
-      })
+      Pipeline.DataStage(name, m =>
+        if (algo == "topk") Sampling.stratifiedCap(m.data, id, stratum, perStratum, seed, bcast)
+        else Sampling.stratifiedCapWindow(m.data, id, stratum, perStratum, seed, salts))
     }
 
     // concat-then-chunk sequence packing: REPLACES data with the per-doc
@@ -852,6 +847,9 @@ object OpStages {
       val (planes, nProbe, nCells) = (cfg.getInt("planes").getOrElse(8),
         cfg.getInt("n_probe").getOrElse(2), cfg.getInt("n_cells").getOrElse(16))
       val keyCol = cfg.getStr("key_col")
+      require(Seq("brute", "lsh", "ivf", "pq", "ivfpq").contains(mode),
+        s"stage $name: unknown mode `$mode` (brute | lsh | ivf | pq | ivfpq)")
+      require(mode != "ivfpq" || keyCol.nonEmpty, s"stage $name: mode ivfpq requires `key_col`")
       def pqModel(m: graft.meds.MedsData): Pq.PqModel = {
         require(query.length % m0 == 0,
           s"stage $name: query dim ${query.length} not divisible by m=$m0")
@@ -883,13 +881,9 @@ object OpStages {
           if (rerank > 0) Pq.adcTopKRerank(enc, id, vec, model, queryXe, k, rerank)
           else Pq.adcTopK(enc, id, model, queryXe, k)
         case "ivfpq" =>
-          val key = keyCol.getOrElse(throw new
-            IllegalArgumentException(s"stage $name: mode ivfpq requires `key_col`"))
           val model = pqModel(m)
-          Pq.ivfPqTopK(Pq.encode(m.data, vec, model), id, key, vec, model,
+          Pq.ivfPqTopK(Pq.encode(m.data, vec, model), id, keyCol.get, vec, model,
             query, queryXe, k, nProbe, rerank)
-        case other => throw new IllegalArgumentException(
-          s"stage $name: unknown mode `$other` (brute | lsh | ivf | pq | ivfpq)")
       })
     }
 

@@ -142,7 +142,7 @@ object PipelineConfig {
     quantiles: Seq[Double], quantileMode: String, sketchK: Int,
     subjectCountMode: String, subjectLgK: Int)
 
-  private def parseAggregations(cfg: Cfg): ParsedAggs = {
+  private def parseAggregations(stage: String, cfg: Cfg): ParsedAggs = {
     val dflt = ParsedAggs(AggregateCodeMetadata.AllAggregations,
       Seq(0.25, 0.5, 0.75), "nearest", graft.plans.KllExpressions.DefaultK,
       "exact", 12)
@@ -184,6 +184,12 @@ object PipelineConfig {
           name
         case other => throw new IllegalArgumentException(s"bad aggregation entry: $other")
       }
+      def check(what: String, v: String, known: Seq[String]): Unit =
+        require(known.contains(v),
+          s"stage $stage: unknown $what `$v` (expected ${known.mkString(" | ")})")
+      names.foreach(check("aggregation", _, AggregateCodeMetadata.AllAggregations))
+      check("quantiles algo", mode, Seq("nearest", "linear", "sketch"))
+      check("subject-count algo", subjMode, Seq("exact", "sketch"))
       ParsedAggs(names, quantiles, mode, sketchK, subjMode, subjLgK)
     }
   }
@@ -285,7 +291,7 @@ object PipelineConfig {
       register(baseStage)((name, cfg) => Pipeline.DataStage(name, f(cfg)))
 
     register("aggregate_code_metadata") { (name, cfg) =>
-      val pa = parseAggregations(cfg)
+      val pa = parseAggregations(name, cfg)
       val mods = cfg.strings("code_modifiers")
       val summarize = cfg.getBool("do_summarize_over_all_codes").getOrElse(false)
       Pipeline.MetadataStage(name, m =>

@@ -251,27 +251,21 @@ object GraftFunctions {
     * their observed min/max (an empty or all-null column becomes tinyint).
     * Applied only to small reduced metadata outputs, never the event table.
     *
-    * The input is materialized ONCE via an eager localCheckpoint, and the
-    * same job folds each column's min and max — see
-    * GraftSqlBridge.localCheckpointWithIntegralBounds — so the casts read
-    * the materialized blocks and every consumer of the returned frame (the
-    * outlier broadcast, the next fit's join, the vocabulary's checks and
-    * numbering, the final write) reads them too instead of re-running the
-    * aggregation behind them. localCheckpoint truncates lineage to the
-    * materialized blocks, and unlike an engine-internal cache the blocks are
-    * released by the ContextCleaner once the returned frame is
-    * garbage-collected — no session-lifetime leak (graft.Main frees them
-    * eagerly once the output root commits). Trade-off: localCheckpoint is not
-    * fault-tolerant to executor loss mid-query (Spark recomputes from
-    * nothing); acceptable for a deterministic batch operator that simply
-    * re-runs.
+    * The bounds come from one collect of the listed columns. The metadata
+    * fits pass a driver-local table (graft.meds.LocalTable), where that
+    * collect runs no job and the returned frame stays driver-local.
     */
   def shrinkIntColumns(df: DataFrame, columns: Seq[String]): DataFrame = {
     val present = columns.filter(df.columns.contains)
-    val (checkpointed, bounds) =
-      org.apache.spark.sql.GraftSqlBridge.localCheckpointWithIntegralBounds(df, present)
-    checkpointed.withColumns(present.zip(bounds).map { case (c, b) =>
-      val (lo, hi) = b.getOrElse((0L, 0L))
+    present.map(df.schema(_)).foreach(f => require(
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
+      s"column '${f.name}' is ${f.dataType.simpleString}, not an integral " +
+        "type (tinyint, smallint, int or bigint)"))
+    val rows = df.select(present.map(col): _*).collect()
+    df.withColumns(present.zipWithIndex.map { case (c, k) =>
+      val values = rows.iterator.filterNot(_.isNullAt(k))
+        .map(_.get(k).asInstanceOf[Number].longValue).toSeq
+      val (lo, hi) = if (values.isEmpty) (0L, 0L) else (values.min, values.max)
       val t: DataType =
         if (lo >= Byte.MinValue && hi <= Byte.MaxValue) ByteType
         else if (lo >= Short.MinValue && hi <= Short.MaxValue) ShortType

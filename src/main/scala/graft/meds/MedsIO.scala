@@ -213,7 +213,9 @@ object MedsIO {
     * is plan-only (no job): a frame that MIGHT be empty but needs
     * execution to know is written normally. The stale target (possibly a
     * directory from a prior distributed write) is removed first so a
-    * prior non-empty write to the same root cannot resurface.
+    * prior non-empty write to the same root cannot resurface. A non-empty
+    * driver-local table ([[LocalTable]], the fitted codes) is written as
+    * one file: its scan would split the rows into one task per core.
     */
   private def writeMetadataTable(df: DataFrame,
       canonical: StructType, path: String): Unit = {
@@ -228,6 +230,7 @@ object MedsIO {
     val p = new org.apache.hadoop.fs.Path(path)
     if (staticallyEmpty)
       writeEmptyParquetFile(df.sparkSession, canonical, p)
+    else if (LocalTable.isLocal(df)) df.coalesce(1).write.mode("overwrite").parquet(path)
     else df.write.mode("overwrite").parquet(path)
   }
 

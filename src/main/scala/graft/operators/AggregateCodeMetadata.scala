@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.meds.LocalTable
 import graft.meds.MedsSchema._
 import graft.functions.GraftFunctions
 
@@ -243,11 +244,11 @@ object AggregateCodeMetadata {
   }
 
   /** Full stage: compute + merge + integer-width shrink (reducer.py:217).
-    * Eager: the shrink materializes the merged codes table in one job
-    * (GraftFunctions.shrinkIntColumns), so the returned frame is backed by
-    * blocks computed exactly once — every consumer (an outlier broadcast,
-    * the next fit's join, the vocabulary fit, the final write) reads them
-    * rather than re-running the aggregation over the event table.
+    * Eager: the merged codes table is pulled to the driver once
+    * ([[graft.meds.LocalTable]]) and shrunk there, so every consumer (an
+    * outlier broadcast, the next fit's join, the vocabulary fit, the final
+    * write) reads those rows rather than re-running the aggregation over
+    * the event table.
     */
   def apply(
       data: DataFrame,
@@ -263,7 +264,7 @@ object AggregateCodeMetadata {
     val computed = compute(data, aggregations, quantiles, codeModifiers,
       summarizeOverAllCodes, quantileMode, sketchK, subjectCountMode, subjectLgK)
     val merged = joinAndReplace(computed, codes, Code +: codeModifiers)
-    GraftFunctions.shrinkIntColumns(merged,
+    GraftFunctions.shrinkIntColumns(LocalTable(merged, "aggregate_code_metadata"),
       Seq(CodeNSubjects, CodeNOccurrences, ValuesNSubjects, ValuesNOccurrences, ValuesNInts))
   }
 
@@ -473,89 +474,5 @@ object AggregateCodeMetadata {
     val outCols = keys.map(col) ++
       aggregations.filter(a => withQ.columns.contains(a)).map(c => col(s"`$c`"))
     withQ.select(outCols: _*).drop("__n_rows")
-  }
-
-  // ---------------------------------------------------------------------
-  // Sketch variant: approximate mergeable subject counts
-  // ---------------------------------------------------------------------
-
-  /** HLL-sketch subject counts for hyper-cardinality grouping keys — the
-    * drop-in when [[MetadataPartials]]'s exact (key, subject) artifact
-    * itself outgrows metadata scale (billions of subjects per key). One row
-    * per key with two fixed-size (2^lgK registers) binary sketches; the
-    * union of sketches over increments IS the sketch of the union, so the
-    * merge is exact ON THE SKETCH — the estimate from merged partials is
-    * bit-identical to estimating the whole corpus at once (spec-locked).
-    * Built on Spark's Datasketches HLL aggregates — codegen'd, map-side
-    * combined, shuffling only the fixed-size registers.
-    */
-  def subjectSketches(data: DataFrame, codeModifiers: Seq[String] = Nil,
-      lgK: Int = 12): DataFrame = {
-    val keys = Code +: codeModifiers
-    data.groupBy(keys.map(col): _*).agg(
-      hll_sketch_agg(col(SubjectId).cast("string"), lit(lgK)).as("subj_hll"),
-      hll_sketch_agg(when(valPresent, col(SubjectId)).cast("string"), lit(lgK))
-        .as("values_subj_hll"))
-  }
-
-  /** Merge per-increment sketch frames (associative, commutative). */
-  def mergeSubjectSketches(parts: Seq[DataFrame],
-      codeModifiers: Seq[String] = Nil): DataFrame = {
-    require(parts.nonEmpty, "mergeSubjectSketches: empty partial list")
-    val keys = Code +: codeModifiers
-    parts.reduce(_ unionByName _).groupBy(keys.map(col): _*).agg(
-      hll_union_agg(col("subj_hll")).as("subj_hll"),
-      hll_union_agg(col("values_subj_hll")).as("values_subj_hll"))
-  }
-
-  /** Estimated distinct-subject counts off a (merged) sketch frame — the
-    * approximate stand-ins for `code/n_subjects` / `values/n_subjects`.
-    */
-  def estimateSubjects(sketches: DataFrame,
-      codeModifiers: Seq[String] = Nil): DataFrame = {
-    val keys = Code +: codeModifiers
-    sketches.select(keys.map(col) ++ Seq(
-      hll_sketch_estimate(col("subj_hll")).as(CodeNSubjects),
-      hll_sketch_estimate(col("values_subj_hll")).as(ValuesNSubjects)): _*)
-  }
-
-  /** KLL value-distribution sketches per key — the quantile partial for
-    * CONTINUOUS hyper-cardinality signals, where [[MetadataPartials]]'s
-    * exact (key, value) histogram would itself be corpus-sized. One row per
-    * key with a fixed ~3 KB sketch (graft's own TypedImperativeAggregate,
-    * map-side combined); merging per-increment sketch frames is a valid
-    * sketch of the union, so incremental releases re-derive quantiles
-    * without rescanning old shards. Rank error ≤ ~1.65%/99% at the default
-    * k=200 — the documented trade against the exact path.
-    */
-  def valueSketches(data: DataFrame, codeModifiers: Seq[String] = Nil,
-      k: Int = graft.plans.KllExpressions.DefaultK): DataFrame = {
-    val keys = Code +: codeModifiers
-    data.groupBy(keys.map(col): _*).agg(
-      graft.plans.KllExpressions.kllAgg(
-        when(valPresent, col(NumericValue)).cast("double"), k)
-        .as("values_kll"))
-  }
-
-  /** Merge per-increment KLL frames (associative, commutative). */
-  def mergeValueSketches(parts: Seq[DataFrame],
-      codeModifiers: Seq[String] = Nil,
-      k: Int = graft.plans.KllExpressions.DefaultK): DataFrame = {
-    require(parts.nonEmpty, "mergeValueSketches: empty partial list")
-    val keys = Code +: codeModifiers
-    parts.reduce(_ unionByName _).groupBy(keys.map(col): _*).agg(
-      graft.plans.KllExpressions.kllMergeAgg(col("values_kll"), k)
-        .as("values_kll"))
-  }
-
-  /** Estimated value quantiles off a (merged) KLL frame — the approximate
-    * stand-in for the exact `values/quantile/q` columns.
-    */
-  def estimateValueQuantiles(sketches: DataFrame, quantiles: Seq[Double],
-      codeModifiers: Seq[String] = Nil): DataFrame = {
-    val keys = Code +: codeModifiers
-    sketches.select(keys.map(col) ++ quantiles.map(q =>
-      graft.plans.KllExpressions.kllQuantile(col("values_kll"), lit(q))
-        .as(s"values/quantile/$q")): _*)
   }
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.meds.LocalTable
 import graft.meds.MedsSchema._
 import graft.functions.GraftFunctions
 
@@ -13,39 +16,30 @@ import graft.functions.GraftFunctions
   * is reserved for UNK. Validates key uniqueness first
   * (fit_vocabulary_indices.py:98-105).
   *
-  * Scale note: the global total order is computed with the range-partitioned
-  * row-number primitive (GraftFunctions.withGlobalRowNumber) — exact, and no
-  * single-partition WindowExec even if the vocabulary grows to hundreds of
-  * millions of keys. The reference's double-arg_sort trick (lines 188-195)
-  * is just `row_number` over the sort.
-  *
-  * The returned frame is backed by blocks computed exactly once: the index
-  * width shrink (GraftFunctions.shrinkIntColumns) materializes the numbered
-  * table, so the final write and any later stage read those blocks instead
-  * of re-running the numbering. The row-number helper's own blocks are
-  * released as soon as that copy exists.
+  * The codes table is driver-sized ([[graft.meds.LocalTable]]): the check
+  * and the numbering run over its collected rows, ordered by Spark's own
+  * `asc_nulls_first` comparison of the key columns (strings in UTF-8 byte
+  * order), and the result is a driver-local table. A table that is already
+  * local, such as AggregateCodeMetadata's output, is numbered with no job.
   */
 object FitVocabularyIndices {
 
-  /** `validateUnique = false` skips the eager duplicate-key scan (one extra
-    * aggregation job over the metadata). Safe ONLY when uniqueness is
-    * structural — e.g. `codes` is the direct output of
-    * `AggregateCodeMetadata.compute`, whose groupBy keys ARE the vocabulary
-    * keys. The default matches the reference's validate-first contract.
-    */
-  def apply(codes: DataFrame, codeModifiers: Seq[String] = Nil,
-      validateUnique: Boolean = true): DataFrame = {
+  def apply(codes: DataFrame, codeModifiers: Seq[String] = Nil): DataFrame = {
     val keys = Code +: codeModifiers
-    if (validateUnique) {
-      val dup = codes.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-      if (!dup.isEmpty)
-        throw new IllegalArgumentException(
-          s"Duplicate (${keys.mkString(", ")}) keys in code metadata; cannot fit vocabulary")
-    }
-    val indexed = GraftFunctions.withGlobalRowNumber(codes, VocabIndex,
-      keys.map(k => col(k).asc_nulls_first))
-    val shrunk = GraftFunctions.shrinkIntColumns(indexed, Seq(VocabIndex))
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(indexed)
-    shrunk
+    val local = LocalTable(codes, "fit_vocabulary_indices")
+    val keySchema = StructType(keys.map(local.schema(_)))
+    val toKey = CatalystTypeConverters.createToCatalystConverter(keySchema)
+    val ordering = InterpretedOrdering.forSchema(keySchema.map(_.dataType))
+    val sorted = local.collect()
+      .map(r => toKey(Row.fromSeq(keys.map(r.getAs[Any]))).asInstanceOf[InternalRow] -> r)
+      .sortBy(_._1)(ordering)
+    if (sorted.lazyZip(sorted.drop(1)).exists((a, b) => ordering.equiv(a._1, b._1)))
+      throw new IllegalArgumentException(
+        s"Duplicate (${keys.mkString(", ")}) keys in code metadata; cannot fit vocabulary")
+    val indexed = sorted.zipWithIndex.map { case ((_, r), i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
+    GraftFunctions.shrinkIntColumns(
+      local.sparkSession.createDataFrame(java.util.Arrays.asList(indexed: _*),
+        local.schema.add(VocabIndex, LongType)),
+      Seq(VocabIndex))
   }
 }

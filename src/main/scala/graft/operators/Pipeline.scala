@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.meds.{MedsData, MedsIO}
 import graft.meds.MedsSchema._
 import org.apache.spark.sql.functions._
@@ -98,46 +98,20 @@ object Pipeline {
     * disk round-trip. As in the reference, a checkpointed stage whose output
     * dir is already complete is SKIPPED and its output re-read — an
     * interrupted pipeline re-run picks up after the last finished
-    * checkpoint. `input` is taken as a raw scan (see [[runHeld]]).
+    * checkpoint. `input` is taken as a raw scan (see [[runTracked]]).
     */
   def run(
       spark: SparkSession,
       input: MedsData,
       stages: Seq[Stage],
       checkpoints: Map[String, String] = Map.empty): MedsData =
-    runHeld(spark, input, stages, checkpoints).out
+    runTracked(spark, input, stages, checkpoints)._1
 
   /** [[run]], additionally returning the DataFrames auto-persisted at
     * lineage fork points so the caller can `unpersist` them once the final
     * output is written — repeated pipeline invocations on a shared session
-    * must not accumulate cache entries. [[runHeld]] also returns the
-    * metadata stages' checkpointed outputs; graft.Main uses that form.
-    */
-  def runTracked(
-      spark: SparkSession,
-      input: MedsData,
-      stages: Seq[Stage],
-      checkpoints: Map[String, String] = Map.empty): (MedsData, Seq[DataFrame]) = {
-    val held = runHeld(spark, input, stages, checkpoints)
-    (held.out, held.persisted)
-  }
-
-  /** A run's output plus what it pinned in executor storage: the data
-    * frames auto-persisted at lineage forks (`persisted`) and each metadata
-    * stage's output (`codes` — AggregateCodeMetadata and
-    * FitVocabularyIndices return localCheckpoint-backed tables, see
-    * GraftFunctions.shrinkIntColumns). The output's lineage reads both, so
-    * [[release]] only once the output root is written.
-    */
-  final case class Held(out: MedsData, persisted: Seq[DataFrame],
-      codes: Seq[DataFrame]) {
-    def release(): Unit = {
-      persisted.foreach(_.unpersist(false))
-      codes.foreach(GraftSqlBridge.unpersistCheckpoint)
-    }
-  }
-
-  /** The tracked run behind [[run]] and [[runTracked]].
+    * must not accumulate cache entries. The metadata stages' outputs are
+    * driver-local tables (graft.meds.LocalTable) and pin nothing.
     *
     * AUTO-PERSIST (the checkpoint-placement guidance VERDICT r14 asked
     * for, made mechanical): Spark performs no common-subplan
@@ -160,22 +134,21 @@ object Pipeline {
     * `MedsIO.read` scan, so a fork before the first data stage never
     * persists.
     */
-  def runHeld(
+  def runTracked(
       spark: SparkSession,
       input: MedsData,
       stages: Seq[Stage],
-      checkpoints: Map[String, String] = Map.empty): Held = {
+      checkpoints: Map[String, String] = Map.empty): (MedsData, Seq[DataFrame]) = {
     // resume from the LAST complete checkpoint: stages before it must not
     // even be CONSTRUCTED — several run eager driver jobs while building
-    // (the codes materialization, vocabulary collect), which would execute
-    // full aggregations only to be discarded by the checkpoint read
+    // (the metadata fits pull their tables to the driver), which would
+    // execute full aggregations only to be discarded by the checkpoint read
     val lastComplete = stages.lastIndexWhere(s =>
       checkpoints.get(s.name).exists(d => isComplete(spark, d)))
     val start =
       if (lastComplete < 0) input
       else MedsIO.read(spark, checkpoints(stages(lastComplete).name))
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val codes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // data lineage carries unmaterialized transformations since the last
     // scan / checkpoint read / persist
     var dirty = false
@@ -197,10 +170,7 @@ object Pipeline {
         case DataStage(_, f) =>
           dirty = true
           m.withData(f(m))
-        case MetadataStage(_, f) =>
-          val c = f(trainOnly(m))
-          codes += c
-          m.withCodes(c)
+        case MetadataStage(_, f) => m.withCodes(f(trainOnly(m)))
         case SplitsStage(_, f) => m.withSplits(f(m))
       }
       val res = checkpoints.get(stage.name) match {
@@ -219,6 +189,6 @@ object Pipeline {
         f" in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       res
     }
-    Held(out, persisted.toSeq, codes.toSeq)
+    (out, persisted.toSeq)
   }
 }

@@ -115,50 +115,6 @@ object GraftSqlBridge {
     (out, counts.sortBy(_._1))
   }
 
-  /** `localCheckpoint(eager = true)` fused with each listed integral
-    * column's min and max: ONE job materializes the partitions and folds
-    * the bounds as they stream by, so a caller that narrows column types by
-    * the observed range never runs a separate aggregation over the lineage.
-    * Returns `None` for a column with no non-null value (empty or all-null).
-    * Byte, Short, Int and Long columns only; any other type fails before
-    * the job runs.
-    */
-  def localCheckpointWithIntegralBounds(df: Dataset[org.apache.spark.sql.Row],
-      columns: Seq[String]): (DataFrame, Seq[Option[(Long, Long)]]) = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val fields = columns.map(df.schema(_))
-    fields.foreach(f => require(
-      Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
-      s"column '${f.name}' is ${f.dataType.simpleString}, not an integral " +
-        "type (tinyint, smallint, int or bigint)"))
-    val ordinals = columns.map(df.schema.fieldIndex).toArray
-    val types = fields.map(_.dataType).toArray
-    val (out, partials) = localCheckpointWith(df) { (_, it) =>
-      // [min_0, max_0, min_1, max_1, ...]; min > max means no value seen
-      val b = Array.tabulate(2 * ordinals.length)(j =>
-        if (j % 2 == 0) Long.MaxValue else Long.MinValue)
-      while (it.hasNext) {
-        val r = it.next()
-        var k = 0
-        while (k < ordinals.length) {
-          if (!r.isNullAt(ordinals(k))) {
-            val v = r.get(ordinals(k), types(k)).asInstanceOf[Number].longValue
-            if (v < b(2 * k)) b(2 * k) = v
-            if (v > b(2 * k + 1)) b(2 * k + 1) = v
-          }
-          k += 1
-        }
-      }
-      b
-    }
-    val bounds = ordinals.indices.map { k =>
-      val lo = partials.iterator.map(_(2 * k)).foldLeft(Long.MaxValue)(math.min)
-      val hi = partials.iterator.map(_(2 * k + 1)).foldLeft(Long.MinValue)(math.max)
-      if (lo > hi) None else Some((lo, hi))
-    }
-    (out, bounds)
-  }
-
   /** Shared scaffold for the fused localCheckpoint variants: defensive
     * InternalRow copy (the iterator reuses one mutable row, which must not
     * be cached as-is - same as Dataset.checkpoint), checkpoint mark, ONE

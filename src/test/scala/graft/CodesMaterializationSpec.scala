@@ -2,13 +2,12 @@ package graft
 
 import graft.obs.Collector
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.config.PipelineConfig
 import graft.functions.GraftFunctions
-import graft.meds.{MedsData, MedsIO, MedsSchema}
+import graft.meds.{LocalTable, MedsData, MedsIO, MedsSchema}
 import graft.meds.MedsSchema._
 import graft.operators.{AggregateCodeMetadata, FitVocabularyIndices, Pipeline}
 
@@ -90,10 +89,11 @@ class ShrinkIntColumnsSpec extends SparkSpec {
 }
 
 /** The MEDS metadata stages compute their codes table exactly once: the
-  * returned frames are checkpoint-backed, the splits probe runs once per
-  * splits frame, and graft.Main frees what a run pinned.
+  * returned frames are driver-local (graft.meds.LocalTable), the splits
+  * probe runs once per splits frame, and graft.Main leaves nothing pinned.
   */
 class CodesMaterializationSpec extends SparkSpec {
+  import spark.implicits._
 
   private val yaml =
     """stages:
@@ -131,25 +131,51 @@ class CodesMaterializationSpec extends SparkSpec {
     (s"$tmp/in", p)
   }
 
-  private def assertCheckpointBacked(df: DataFrame, what: String): Unit = {
+  private def assertLocal(df: DataFrame, what: String): Unit = {
     val logical = df.queryExecution.optimizedPlan
-    assert(logical.collect { case a: Aggregate => a }.isEmpty, s"$what: Aggregate in\n$logical")
-    assert(logical.collectLeaves().forall(_.isInstanceOf[LogicalRDD]), s"$what:\n$logical")
+    assert(logical.isInstanceOf[LocalRelation], s"$what:\n$logical")
     val leaves = df.queryExecution.executedPlan.collectLeaves().map(_.nodeName)
-    assert(leaves.nonEmpty && leaves.forall(_ == "Scan ExistingRDD"),
-      s"$what: physical leaves $leaves")
+    assert(leaves == Seq("LocalTableScan"), s"$what: physical leaves $leaves")
   }
 
-  test("AggregateCodeMetadata and FitVocabularyIndices return checkpoint-backed frames") {
+  test("the fits return driver-local frames") {
     val (in, _) = fixtureRoot()
     val m = MedsIO.read(spark, in)
     assert(m.data.queryExecution.executedPlan.toString.contains("FileScan"))
     val codes = AggregateCodeMetadata(m.data, m.codes)
-    assertCheckpointBacked(codes, "aggregate_code_metadata")
-    val vocab = FitVocabularyIndices(codes)
-    assertCheckpointBacked(vocab, "fit_vocabulary_indices")
+    assertLocal(codes, "aggregate_code_metadata")
+    val (vocab, records) = Collector.measure(spark)(FitVocabularyIndices(codes))
+    assert(records.jobs.isEmpty, records.jobs.map(_.callSite))
+    assertLocal(vocab, "fit_vocabulary_indices")
     assert(vocab.select(Code, VocabIndex).collect()
       .map(r => r.getString(0) -> r.getByte(1).toInt).toMap == Map("DX" -> 1, "HR" -> 2, "TEMP" -> 3))
+  }
+
+  test("a table over the row cap fails, naming the stage and the cap") {
+    val df = spark.range(0, 5, 1, 2).toDF("x")
+    val e = intercept[IllegalStateException](LocalTable(df, "fit_spec", cap = 4))
+    assert(e.getMessage.contains("stage fit_spec") && e.getMessage.contains("more than 4 rows"),
+      e.getMessage)
+    val atCap = LocalTable(df, "fit_spec", cap = 5)
+    assertLocal(atCap, "at the cap")
+    assert(atCap.as[Long].collect().sorted.toSeq == (0L until 5L))
+  }
+
+  test("vocabulary indices follow Spark's asc_nulls_first order, strings by UTF-8 bytes") {
+    // Java's String.compareTo puts the surrogate pair of U+1F600 before
+    // U+FF21; UTF-8 bytes (EF.. vs F0..) order them the other way round
+    assert("\uD83D\uDE00".compareTo("\uFF21") < 0)
+    val rows = Seq[(String, String)]((null, null), (null, "mg"), ("\uFF21", null),
+      ("\uD83D\uDE00", "x"), ("A", "mg"), ("A", null), ("a", "mg"), ("\u00E9", null))
+    val codes = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3)).toDF(Code, "unit")
+    def indices(df: DataFrame): Map[(String, String), Long] = df.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Number](VocabIndex).longValue).toMap
+    val reference = indices(GraftFunctions.withGlobalRowNumber(codes, VocabIndex,
+      Seq(col(Code).asc_nulls_first, col("unit").asc_nulls_first)))
+    assert(reference.values.toSet == (1L to rows.size).toSet)
+    assert(reference(("\uFF21", null)) < reference(("\uD83D\uDE00", "x")))
+    assert(indices(FitVocabularyIndices(codes, Seq("unit"))) == reference)
+    assert(indices(FitVocabularyIndices(LocalTable(codes, "spec"), Seq("unit"))) == reference)
   }
 
   test("three metadata stages probe the splits table once") {
@@ -170,5 +196,62 @@ class CodesMaterializationSpec extends SparkSpec {
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     assert(left.isEmpty, s"still pinned after the run: ${left.values.mkString(", ")}")
     assert(MedsIO.read(spark, s"$in/../out").codes.count() == 3)
+  }
+
+  /** The codes half of the MEDS layout contract on a written root: one
+    * parquet data file, one row per code, FIXTURES.md §2's column types
+    * (Spark's signed integral types for its unsigned ones), and each count
+    * and index column at the narrowest integral type holding its values. */
+  private def assertCodesLayout(root: String): Unit = {
+    val path = s"$root/metadata/codes.parquet"
+    val files = Option(new java.io.File(path).listFiles()).getOrElse(Array(new java.io.File(path)))
+      .filter(f => f.getName.endsWith(".parquet"))
+    assert(files.length == 1, s"$path: ${files.map(_.getName).mkString(", ")}")
+    val codes = spark.read.parquet(path)
+    val n = codes.count()
+    assert(n > 0 && codes.select(Code).distinct().count() == n, s"$path: a code repeats")
+    val counts = Seq(CodeNOccurrences, CodeNSubjects, ValuesNOccurrences, ValuesNSubjects,
+      ValuesNInts, VocabIndex)
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    codes.schema.foreach { f =>
+      val want: Seq[DataType] = f.name match {
+        case Code | Description => Seq(StringType)
+        case ParentCodes => Seq(ArrayType(StringType))
+        case c if counts.contains(c) => integral
+        case ValuesSum | ValuesSumSqd | ValuesMin | ValuesMax => Seq(FloatType, DoubleType)
+        case other => fail(s"$path: unexpected column $other")
+      }
+      assert(want.contains(f.dataType), s"$path: ${f.name} is ${f.dataType}")
+    }
+    counts.filter(codes.columns.contains).foreach { c =>
+      val Row(lo: Long, hi: Long) = codes.agg(min(col(s"`$c`")).cast(LongType),
+        max(col(s"`$c`")).cast(LongType)).head()
+      val narrowest = integral.find {
+        case ByteType => lo >= Byte.MinValue && hi <= Byte.MaxValue
+        case ShortType => lo >= Short.MinValue && hi <= Short.MaxValue
+        case IntegerType => lo >= Int.MinValue && hi <= Int.MaxValue
+        case _ => true
+      }.get
+      assert(codes.schema(c).dataType == narrowest, s"$path: $c [$lo, $hi] is ${codes.schema(c).dataType}")
+    }
+    if (codes.columns.contains(VocabIndex)) {
+      val vocab = codes.orderBy(col(VocabIndex)).select(VocabIndex).collect()
+      assert(vocab.map(_.getAs[Number](0).longValue).toSeq == (1L to n))
+    }
+  }
+
+  test("codes.parquet keeps the MEDS layout contract, with and without a checkpoint root") {
+    val out = java.nio.file.Files.createTempDirectory("graft_codes_layout").toString
+    // the pipeline's own threshold (20 events) keeps no fixture subject
+    val keep = "stages.filter_subjects.min_events_per_subject=5"
+    Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/run", keep), spark)
+    assertCodesLayout(s"$out/run")
+    Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/ckpt_out",
+      s"$out/ckpt", keep), spark)
+    assertCodesLayout(s"$out/ckpt_out")
+    val fitDirs = new java.io.File(s"$out/ckpt").listFiles().map(_.getName).sorted
+      .filter(_.contains("_fit_"))
+    assert(fitDirs.length == 3, fitDirs.mkString(", "))
+    fitDirs.foreach(d => assertCodesLayout(s"$out/ckpt/$d"))
   }
 }

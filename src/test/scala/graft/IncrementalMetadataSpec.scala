@@ -93,22 +93,6 @@ class IncrementalMetadataSpec extends SparkSpec {
     assertSameMetadata(incr.select(direct.columns.map(c => col(s"`$c`")): _*), direct)
   }
 
-  test("HLL sketch path: merged-increment estimate == whole-corpus estimate, exact at small n") {
-    val full = half1.unionByName(half2)
-    val merged = AggregateCodeMetadata.mergeSubjectSketches(Seq(
-      AggregateCodeMetadata.subjectSketches(half1),
-      AggregateCodeMetadata.subjectSketches(half2)))
-    val est = AggregateCodeMetadata.estimateSubjects(merged)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val whole = AggregateCodeMetadata.estimateSubjects(
-        AggregateCodeMetadata.subjectSketches(full))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(est === whole) // sketch union == sketch of union, bit-identical
-    // HLL is exact far below 2^lgK: the estimates ARE the true counts here
-    assert(est("HR") === ((4L, 4L)))
-    assert(est("STATIC") === ((2L, 0L)))
-  }
-
   test("summarizeOverAllCodes total row derives from the same partials") {
     val merged = AggregateCodeMetadata.mergePartials(Seq(
       AggregateCodeMetadata.partials(half1), AggregateCodeMetadata.partials(half2)))

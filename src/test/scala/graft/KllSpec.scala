@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.plans.KllExpressions
-import graft.operators.AggregateCodeMetadata
 
 /** KLL quantile-sketch aggregates: exact-regime equality (n ≤ k retains
   * every value), merge-vs-direct equivalence, bounded rank error at volume,
-  * parquet persistence of partials, and the incremental-metadata wiring.
+  * and null handling.
   */
 class KllSpec extends SparkSpec {
   import spark.implicits._
@@ -62,26 +61,5 @@ class KllSpec extends SparkSpec {
       .agg(KllExpressions.kllAgg(col("v")).as("s"))
       .select(KllExpressions.kllQuantile(col("s"), lit(0.5))).head()
     assert(empty.isNullAt(0))
-  }
-
-  test("incremental metadata: merged value sketches match whole-corpus quantiles") {
-    val a = medsDf(
-      (1L, "2024-01-01 00:00:00", "HR", 60.0), (1L, "2024-01-01 01:00:00", "HR", 70.0),
-      (2L, "2024-01-01 00:00:00", "HR", 80.0), (2L, null, "DX", null))
-    val b = medsDf(
-      (3L, "2024-01-02 00:00:00", "HR", 90.0), (3L, "2024-01-02 01:00:00", "HR", 100.0),
-      (4L, "2024-01-02 00:00:00", "DX", null))
-    val dir = java.nio.file.Files.createTempDirectory("kll_parts").toString
-    AggregateCodeMetadata.valueSketches(a).write.parquet(s"$dir/a")
-    AggregateCodeMetadata.valueSketches(b).write.parquet(s"$dir/b")
-    val merged = AggregateCodeMetadata.mergeValueSketches(Seq(
-      spark.read.parquet(s"$dir/a"), spark.read.parquet(s"$dir/b")))
-    val est = AggregateCodeMetadata.estimateValueQuantiles(merged, Seq(0.5, 1.0))
-      .collect().map(r => r.getString(0) ->
-        (Option(r.get(1)), Option(r.get(2)))).toMap
-    // HR values {60,70,80,90,100}: inclusive median 80, max 100
-    assert(est("HR") == ((Some(80.0), Some(100.0))))
-    // DX never carries a value -> empty sketch -> null quantiles
-    assert(est("DX") == ((None, None)))
   }
 }

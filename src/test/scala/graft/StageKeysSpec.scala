@@ -110,7 +110,7 @@ class StageKeysSpec extends SparkSpec {
   private def build(stage: String, cfg: Cfg): Unit =
     PipelineConfig.buildStage(stage, stage, cfg)
 
-  private def unknownKey(stage: String, cfg: Cfg): String =
+  private def buildError(stage: String, cfg: Cfg): String =
     intercept[IllegalArgumentException](build(stage, cfg)).getMessage
 
   test("the table covers exactly the registered stages, and each entry builds") {
@@ -135,14 +135,14 @@ class StageKeysSpec extends SparkSpec {
   }
 
   test("nested maps, aggregation entries and _match_revise blocks are checked too") {
-    val tod = unknownKey("add_time_derived_measurements",
+    val tod = buildError("add_time_derived_measurements",
       map("{time_of_day: {endpoints: [6], endpointz: [1]}}"))
     assert(tod.contains("unknown key(s) time_of_day.endpointz"), tod)
-    val agg = unknownKey("aggregate_code_metadata",
+    val agg = buildError("aggregate_code_metadata",
       map("{aggregations: [{name: values/quantiles, quantilez: [0.5]}]}"))
     assert(agg.contains("unknown key(s) aggregations[0].quantilez"), agg)
     assert(agg.contains("aggregations[0].quantiles"), agg)
-    val mr = unknownKey("occlude_outliers",
+    val mr = buildError("occlude_outliers",
       map("{_match_revise: [{_matcher: {code: A}, stddev_cutof: 2}]}"))
     assert(mr.contains("stage occlude_outliers: unknown key(s) stddev_cutof"), mr)
     assert(mr.contains("stddev_cutoff"), mr)
@@ -162,26 +162,57 @@ class StageKeysSpec extends SparkSpec {
     assert(over.getMessage.contains("unknown key(s) foo"), over.getMessage)
   }
 
+  /** `Main.run(args)`'s failure, asserting that it ran no Spark job. */
+  private def runFails(args: String*): IllegalArgumentException = {
+    val (res, records) = Collector.measure(spark)(
+      scala.util.Try(Main.run(args.toArray, spark)))
+    assert(records.jobs.isEmpty, records.jobs.map(_.callSite))
+    res.failed.get match { case e: IllegalArgumentException => e }
+  }
+
   test("a typo'd key fails before any Spark job, as an override and in the file") {
     val out = Files.createTempDirectory("graft_stage_keys").toString
-    def run(args: String*): IllegalArgumentException = {
-      val (res, records) = Collector.measure(spark)(
-        scala.util.Try(Main.run(args.toArray, spark)))
-      assert(records.jobs.isEmpty, records.jobs.map(_.callSite))
-      res.failed.get match { case e: IllegalArgumentException => e }
-    }
     def check(e: IllegalArgumentException): Unit = {
       assert(e.getMessage.contains("stage occlude_outliers: unknown key(s) stddev_cuttoff"),
         e.getMessage)
       assert(e.getMessage.contains("stddev_cutoff"), e.getMessage)
     }
-    check(run("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/over",
+    check(runFails("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/over",
       "stages.occlude_outliers.stddev_cuttoff=3"))
     val typo = Files.readString(Paths.get("perfbench/meds_etl.yaml"))
       .replace("stddev_cutoff: 1", "stddev_cuttoff: 1")
     assert(typo.contains("stddev_cuttoff"))
     Files.writeString(Paths.get(s"$out/typo.yaml"), typo)
-    check(run(s"$out/typo.yaml", MedsFixture.root, s"$out/file"))
+    check(runFails(s"$out/typo.yaml", MedsFixture.root, s"$out/file"))
+  }
+
+  test("a bad value of a known key fails at build time, naming the stage and the value") {
+    val bad = Seq(
+      ("aggregate_code_metadata", "{aggregations: [values/summ]}", "values/summ"),
+      ("aggregate_code_metadata",
+        "{aggregations: [{name: values/quantiles, algo: nearst}]}", "nearst"),
+      ("aggregate_code_metadata",
+        "{aggregations: [{name: code/n_subjects, algo: exakt}]}", "exakt"),
+      ("sim_topk", "{query: [1.0, 0.0], mode: brutee}", "brutee"),
+      ("sim_topk", "{query: [1.0, 0.0], mode: ivfpq}", "key_col"),
+      ("stratified_cap", "{stratum_col: s, per_stratum: 2, algo: windw}", "windw"),
+      ("quality_filter", "{}", "threshold rule"))
+    bad.foreach { case (stage, yaml, value) =>
+      val e = buildError(stage, map(yaml))
+      assert(e.contains(s"stage $stage") && e.contains(value), s"$stage $yaml: $e")
+    }
+  }
+
+  test("a bad aggregation name fails before any Spark job") {
+    val out = Files.createTempDirectory("graft_stage_values").toString
+    val yaml = Files.readString(Paths.get("perfbench/meds_etl.yaml"))
+      .replace("[values/n_occurrences, values/sum, values/sum_sqd]",
+        "[values/n_occurrences, values/summ, values/sum_sqd]")
+    assert(yaml.contains("values/summ"))
+    Files.writeString(Paths.get(s"$out/bad.yaml"), yaml)
+    val e = runFails(s"$out/bad.yaml", MedsFixture.root, s"$out/run")
+    assert(e.getMessage.contains("stage fit_outlier_detection: unknown aggregation `values/summ`"),
+      e.getMessage)
   }
 
   test("every committed pipeline builds") {
