@@ -822,7 +822,11 @@ object Queries {
   private def eventsStream(ss: SparkSession, dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = p.getFileSystem(ss.sessionState.newHadoopConf())
-    val reader = ss.readStream.schema(table(ss, dir, "events").schema)
+    // the per-call session's schema comes from one footer: a `table` read
+    // would add a memo entry keyed by this throwaway session
+    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val reader = ss.readStream.schema(graft.plans.ParquetStats.schema(ss, p.toString)
+      .getOrElse(ss.read.parquet(p.toString).schema))
     restoreTs(
       if (fs.getFileStatus(p).isDirectory) reader.parquet(p.toString)
       else reader.option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -3252,22 +3256,6 @@ object Queries {
       rmTree(java.nio.file.Paths.get(tmp, "out"))
       rmTree(java.nio.file.Paths.get(tmp, "ckpt"))
       val overrides = stageAnalysisInputs(s, dir, tmp)
-      // run in a DEDICATED session with the shuffle width scoped to the
-      // corpus size (parquet-footer row count, no scan) — the same
-      // mechanism the streaming gates use: 32 default partitions across a
-      // 5-stage checkpointed pipeline is pure per-task scheduling floor at
-      // snapshot scale (15.8 → 8.5 s min-of-5 at sf0.1's 5k docs with 4;
-      // the r18 re-sweep moved the divisor 1250 → 2500: 6.17 → 5.70 s
-      // min-of-4 at sf0.1's width 2, and x10 ALSO improved 12.0 → 8.0 s at
-      // width 20 vs the 32 clamp), while a replicated scale run grows back
-      // to full parallelism (~2.5k docs/partition, clamped to
-      // defaultParallelism)
-      val ss = s.newSession()
-      val docRows = graft.plans.ParquetStats
-        .rowCount(ss, s"$dir/documents.parquet").getOrElse(5000L)
-      ss.conf.set("spark.sql.shuffle.partitions",
-        math.max(2L, math.min(ss.sparkContext.defaultParallelism.toLong,
-          docRows / 2500L)).toString)
       // checkpointRoot: each stage materializes ONCE. Without it the lazy
       // five-stage lineage re-executes shared subtrees per consumer — the
       // LM-train aggregate and the CSV parse appear many times in the final
@@ -3277,23 +3265,9 @@ object Queries {
       // reads it), so the checkpointed run is the like-for-like shape.
       // (filter_rows / js_divergence opt OUT via `checkpoint: false` — a
       // narrow filter and the final stage don't need their own roots.)
-      // snapshot-scoped engine settings (keyed on DATA SIZE via the same
-      // footer row count, NOT the core count — a replicated scale run keeps
-      // the production behavior): under 100k docs the 5-stage checkpointed
-      // run is job-floor-bound, and (a) AQE's per-exchange stage
-      // materialization adds ~45 barrier futures for shuffles of a few KB
-      // (A/B min-of-4 at sf0.1: 8.08 -> 7.32 s), (b) each checkpoint
-      // read-back's >32-path file listing runs as a distributed job where a
-      // driver-side listing is microseconds (12 listing jobs/run; with both:
-      // 8.08 -> 6.36 s). Large corpora keep AQE's coalescing/skew handling
-      // and the parallel listing — there the shuffles and file counts are
-      // real.
-      if (docRows < 100000L) {
-        ss.conf.set("spark.sql.adaptive.enabled", "false")
-        ss.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      }
+      // It runs on the caller's session and settings, as graft.Main does.
       Main.run(Array(AnalysisYaml, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt")
-        ++ overrides, ss)
+        ++ overrides, s)
       graft.meds.MedsIO.read(s, s"$tmp/out").data
         .select(col("nb_pred"), col("n_tokens"), col("n_terms"), col("js_bits"))
         .orderBy("nb_pred")

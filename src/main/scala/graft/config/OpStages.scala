@@ -73,8 +73,7 @@ object OpStages {
     // `ref_path` — dedup the new crawl against the previous release
     PipelineConfig.register("dedup_against") { (name, cfg) =>
       val (id, text) = ids(cfg)
-      val refPath = cfg.getStr("ref_path").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `ref_path` is required"))
+      val refPath = cfg.reqStr("ref_path")
       val refText = cfg.getStr("ref_text_col").getOrElse(text)
       val normalize = cfg.getBool("normalize").getOrElse(true)
       // bloom_items > 0 switches on the prefilter for 100 TB-vs-100 TB
@@ -215,8 +214,7 @@ object OpStages {
     PipelineConfig.register("decontaminate") { (name, cfg) =>
       val (id, text) = ids(cfg)
       val n = cfg.getInt("ngram").getOrElse(8)
-      val evalPath = cfg.getStr("eval_path").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `eval_path` is required"))
+      val evalPath = cfg.reqStr("eval_path")
       Pipeline.DataStage(name, m => {
         val eval = m.data.sparkSession.read.parquet(evalPath)
         if (m.data.queryExecution.optimizedPlan.stats.sizeInBytes >= DecontamBloomMinBytes)
@@ -276,8 +274,8 @@ object OpStages {
         maxEntropy.map(v => TextAnalysis.unigramEntropy(t) <= v),
         lang.map(v => TextAnalysis.langIdExprs(t).last === v) // lang_pred equality
       ).flatten
-      require(rules.nonEmpty, s"stage $name: at least one threshold rule " +
-        "is required (min_words, max_dup_line_fraction, lang, ...)")
+      require(rules.nonEmpty, s"stage $name: needs at least one threshold rule " +
+        "(min_words, max_dup_line_fraction, lang, ...)")
       Pipeline.DataStage(name, m => m.data.filter(rules.reduce(_ && _)))
     }
 
@@ -285,9 +283,10 @@ object OpStages {
     // appends per-kind match counts; `kinds` defaults to every known kind
     PipelineConfig.register("redact_pii") { (name, cfg) =>
       val text = cfg.getStr(TextCol).getOrElse("text")
-      val kinds =
-        if (cfg.getList("kinds").nonEmpty) cfg.strings("kinds")
-        else Redaction.Patterns.map(_._1)
+      val kinds = cfg.strings("kinds") match {
+        case Nil => Redaction.Patterns.map(_._1)
+        case ks => ks
+      }
       Pipeline.DataStage(name, m => {
         val withCounts = appendCols(name, m.data, Redaction.piiCounts(col(text), kinds))
         withCounts.withColumn(text, Redaction.redact(col(text), kinds))
@@ -362,7 +361,7 @@ object OpStages {
     // one-pass per-column statistics report: REPLACES the data with the
     // profile table (the pipeline's standing data-quality artifact)
     PipelineConfig.register("profile") { (name, cfg) =>
-      val cols = cfg.getList("cols").collect { case Cfg.S(s) => s }
+      val cols = cfg.strings("cols")
       val approx = cfg.getBool("approx_distinct").getOrElse(false)
       Pipeline.DataStage(name, m => graft.ops.Profile.profile(m.data, cols, approx))
     }
@@ -370,14 +369,10 @@ object OpStages {
     // as-of temporal enrichment: attach the most recent prior (or next
     // upcoming) row from the parquet table at `right_path` per key
     PipelineConfig.register("asof_join") { (name, cfg) =>
-      def req(k: String) = cfg.getStr(k).getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `$k` is required"))
-      val keys = cfg.getList("keys").collect { case Cfg.S(s) => s }
-      require(keys.nonEmpty, s"stage $name: `keys` list is required")
+      val keys = cfg.reqStrings("keys")
       val (rightPath, leftTime, rightTime) =
-        (req("right_path"), req("left_time"), req("right_time"))
-      val values = cfg.getList("value_cols").collect { case Cfg.S(s) => s }
-      require(values.nonEmpty, s"stage $name: `value_cols` list is required")
+        (cfg.reqStr("right_path"), cfg.reqStr("left_time"), cfg.reqStr("right_time"))
+      val values = cfg.reqStrings("value_cols")
       // direction: backward | forward | nearest
       val direction = cfg.getStr("direction").getOrElse("backward")
       val strict = cfg.getBool("strict").getOrElse(false)
@@ -397,12 +392,9 @@ object OpStages {
     // trailing time-range aggregates: append rolling counts/sums over the
     // last `range` time units per key
     PipelineConfig.register("rolling_agg") { (name, cfg) =>
-      val keys = cfg.getList("keys").collect { case Cfg.S(s) => s }
-      require(keys.nonEmpty, s"stage $name: `keys` list is required")
-      val timeCol = cfg.getStr("time_col").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `time_col` is required"))
-      val range = cfg.getLong("range").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `range` is required"))
+      val keys = cfg.reqStrings("keys")
+      val timeCol = cfg.reqStr("time_col")
+      val range = cfg.reqLong("range")
       val countAs = cfg.getStr("count_as")
       val sumCol = cfg.getStr("sum_col")
       val sumAs = cfg.getStr("sum_as").getOrElse(sumCol.map(_ + "_sum").orNull)
@@ -412,7 +404,7 @@ object OpStages {
         sumCol.map(c => sumAs -> org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.col(c))).toSeq
       require(aggs.nonEmpty,
-        s"stage $name: at least one of `count_as` / `sum_col` is required")
+        s"stage $name: needs at least one of `count_as` / `sum_col`")
       Pipeline.DataStage(name, m => graft.operators.RollingAgg.trailing(
         m.data, keys, timeCol, range, aggs))
     }
@@ -421,17 +413,13 @@ object OpStages {
     // table at `right_path` whose [start,end] contains the row's numeric
     // time, per key — inner semantics, one row per match
     PipelineConfig.register("range_join") { (name, cfg) =>
-      def req(k: String) = cfg.getStr(k).getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `$k` is required"))
-      val keys = cfg.getList("keys").collect { case Cfg.S(s) => s }
-      require(keys.nonEmpty, s"stage $name: `keys` list is required")
-      val values = cfg.getList("value_cols").collect { case Cfg.S(s) => s }
-      require(values.nonEmpty, s"stage $name: `value_cols` list is required")
-      val bucketWidth = cfg.getLong("bucket_width").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `bucket_width` is required"))
+      val keys = cfg.reqStrings("keys")
+      val values = cfg.reqStrings("value_cols")
+      val bucketWidth = cfg.reqLong("bucket_width")
       val maxBuckets = cfg.getInt("max_buckets_per_interval").getOrElse(4096)
       val (rightPath, timeCol, startCol, endCol) =
-        (req("right_path"), req("time_col"), req("start_col"), req("end_col"))
+        (cfg.reqStr("right_path"), cfg.reqStr("time_col"), cfg.reqStr("start_col"),
+          cfg.reqStr("end_col"))
       Pipeline.DataStage(name, m => graft.operators.RangeJoin.pointInInterval(
         m.data, m.data.sparkSession.read.parquet(rightPath), keys,
         timeCol, startCol, endCol, values, bucketWidth, maxBuckets))
@@ -456,7 +444,7 @@ object OpStages {
     // following write's parquet footers carry tight min/max on EVERY listed
     // column — multi-column data skipping from plain parquet
     PipelineConfig.register("zorder_layout") { (name, cfg) =>
-      val cols = cfg.getList("cols").collect { case Cfg.S(s) => s }
+      val cols = cfg.strings("cols")
       require(cols.size == 2 || cols.size == 3,
         s"stage $name: `cols` needs 2 or 3 columns, got ${cols.size}")
       val numFiles = cfg.getLong("num_files").getOrElse(64L).toInt
@@ -469,8 +457,7 @@ object OpStages {
     // long-document dual of pack_sequences
     PipelineConfig.register("chunk_documents") { (name, cfg) =>
       val (id, text) = ids(cfg)
-      val window = cfg.getLong("window").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `window` is required")).toInt
+      val window = cfg.reqLong("window").toInt
       val stride = cfg.getLong("stride").getOrElse(window.toLong).toInt
       Pipeline.DataStage(name, m =>
         Packing.chunkDocuments(m.data, id, text, window, stride))
@@ -482,9 +469,9 @@ object OpStages {
     // to CCNet's curated head+middle
     PipelineConfig.register("ppl_buckets") { (name, cfg) =>
       val pplCol = cfg.getStr("ppl_col").getOrElse("ppl")
-      val groupCols = cfg.getList("group_by").collect { case Cfg.S(s) => s }
+      val groupCols = cfg.strings("group_by")
       val nBuckets = cfg.getLong("n_buckets").getOrElse(3L).toInt
-      val keep = cfg.getList("keep_buckets").collect { case Cfg.I(i) => i.toInt }
+      val keep = cfg.ints("keep_buckets")
       Pipeline.DataStage(name, m => {
         require(m.data.columns.contains(pplCol),
           s"stage $name: score column `$pplCol` not in the input — " +
@@ -527,8 +514,7 @@ object OpStages {
     PipelineConfig.register("nb_eval") { (name, cfg) =>
       val (id, text) = ids(cfg)
       val labelCol = cfg.getStr("label_col").getOrElse("label")
-      val trainPath = cfg.getStr("train_path").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `train_path` is required"))
+      val trainPath = cfg.reqStr("train_path")
       val trainText = cfg.getStr("train_text_col").getOrElse(text)
       val trainLabel = cfg.getStr("train_label_col").getOrElse(labelCol)
       Pipeline.DataStage(name, m => {
@@ -550,8 +536,7 @@ object OpStages {
     // deterministic Bernoulli sample on the id hash (retry/engine-stable)
     PipelineConfig.register("sample") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
-      val fraction = cfg.getDouble("fraction").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `fraction` is required"))
+      val fraction = cfg.reqDouble("fraction")
       val seed = cfg.getLong("seed").getOrElse(42L)
       Pipeline.DataStage(name, m => Sampling.sample(m.data, id, fraction, seed))
     }
@@ -560,9 +545,7 @@ object OpStages {
     PipelineConfig.register("sample_split") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
       val seed = cfg.getLong("seed").getOrElse(42L)
-      val splits = cfg.numberMap("splits", s"stage $name").getOrElse(
-        throw new IllegalArgumentException(
-          s"stage $name: `splits` map of {name: weight} is required"))
+      val splits = cfg.reqNumberMap("splits")
       Pipeline.DataStage(name, m => Sampling.assignSplits(m.data, id, splits, seed))
     }
 
@@ -571,11 +554,8 @@ object OpStages {
     // distinguishes copies), rate < 1 downsamples with sample()'s hash
     PipelineConfig.register("resample_mix") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
-      val stratum = cfg.getStr("stratum_col").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `stratum_col` is required"))
-      val rates = cfg.numberMap("rates", s"stage $name").getOrElse(
-        throw new IllegalArgumentException(
-          s"stage $name: `rates` map of {stratum: rate} is required"))
+      val stratum = cfg.reqStr("stratum_col")
+      val rates = cfg.reqNumberMap("rates")
       val defaultRate = cfg.getDouble("default_rate").getOrElse(1.0)
       val seed = cfg.getLong("seed").getOrElse(42L)
       val epochCol = cfg.getStr("epoch_col").getOrElse("epoch")
@@ -588,10 +568,8 @@ object OpStages {
     // no-op mix, alpha 0 equalizes strata
     PipelineConfig.register("temperature_mix") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
-      val stratum = cfg.getStr("stratum_col").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `stratum_col` is required"))
-      val alpha = cfg.getDouble("alpha").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `alpha` is required"))
+      val stratum = cfg.reqStr("stratum_col")
+      val alpha = cfg.reqDouble("alpha")
       val sizeFactor = cfg.getDouble("size_factor").getOrElse(1.0)
       val seed = cfg.getLong("seed").getOrElse(42L)
       val epochCol = cfg.getStr("epoch_col").getOrElse("epoch")
@@ -604,9 +582,7 @@ object OpStages {
     PipelineConfig.register("token_budget_cap") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
       val text = cfg.getStr(TextCol).getOrElse("text")
-      val budget = cfg.getLong("budget_tokens").getOrElse(
-        throw new IllegalArgumentException(
-          s"stage $name: `budget_tokens` is required"))
+      val budget = cfg.reqLong("budget_tokens")
       val stratum = cfg.getStr("stratum_col")
       val seed = cfg.getLong("seed").getOrElse(42L)
       val bcast = cfg.getBool("broadcast").getOrElse(true)
@@ -616,10 +592,8 @@ object OpStages {
 
     PipelineConfig.register("stratified_cap") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
-      val stratum = cfg.getStr("stratum_col").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `stratum_col` is required"))
-      val perStratum = cfg.getInt("per_stratum").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `per_stratum` is required"))
+      val stratum = cfg.reqStr("stratum_col")
+      val perStratum = cfg.reqInt("per_stratum")
       val seed = cfg.getLong("seed").getOrElse(42L)
       // default: bounded top-k aggregate + broadcast semi-join (skew-proof,
       // unique-id contract); `algo: window` selects the salted-window cap
@@ -641,8 +615,7 @@ object OpStages {
     PipelineConfig.register("pack_sequences") { (name, cfg) =>
       val id = cfg.getStr(IdCol).getOrElse("doc_id")
       val text = cfg.getStr(TextCol).getOrElse("text")
-      val capacity = cfg.getInt("capacity").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `capacity` is required"))
+      val capacity = cfg.reqInt("capacity")
       val shards = cfg.getInt("shards").getOrElse(256)
       val seed = cfg.getLong("seed").getOrElse(42L)
       // `shard` is also the MEDS dataset-layout provenance column, which
@@ -662,9 +635,6 @@ object OpStages {
 
     def vecIds(cfg: Cfg) = (cfg.getStr(IdCol).getOrElse("vec_id"),
       cfg.getStr("vec_col").getOrElse("embedding"))
-
-    def doubleList(cfg: Cfg, k: String): Seq[Double] =
-      cfg.getList(k).collect { case Cfg.D(d) => d; case Cfg.I(i) => i.toDouble }
 
     // append the winnowing sketch as an array column (pure projection —
     // no explode/shuffle; the exploded per-fingerprint table stays available
@@ -761,8 +731,7 @@ object OpStages {
       val iters = cfg.getInt("iters").getOrElse(3)
       val seed = cfg.getInt("seed").map(_.toLong).getOrElse(42L)
       val frac = cfg.getDouble("train_fraction").getOrElse(1.0)
-      val queriesPath = cfg.getStr("queries_path").getOrElse(throw new
-        IllegalArgumentException(s"stage $name: `queries_path` is required"))
+      val queriesPath = cfg.reqStr("queries_path")
       val qid = cfg.getStr("query_id_col").getOrElse("qid")
       val qvec = cfg.getStr("query_vec_col").getOrElse(vec)
       val modelPath = cfg.getStr("model_path")
@@ -836,8 +805,7 @@ object OpStages {
     // (`dist_e6`), not cosine, so the output column differs by design
     PipelineConfig.register("sim_topk") { (name, cfg) =>
       val (id, vec) = vecIds(cfg)
-      val query = doubleList(cfg, "query").map(_.toFloat)
-      require(query.nonEmpty, s"stage $name: `query` vector is required")
+      val query = cfg.reqDoubles("query").map(_.toFloat)
       val k = cfg.getInt("k").getOrElse(10)
       val mode = cfg.getStr("mode").getOrElse("brute")
       val (m0, ksub, iters) = (cfg.getInt("m").getOrElse(8), cfg.getInt("ksub").getOrElse(8),
@@ -915,10 +883,8 @@ object OpStages {
     // JSON rows yield null fields (from_json's PERMISSIVE default — a log
     // pipeline must not die on one corrupt line).
     PipelineConfig.register("json_extract") { (name, cfg) =>
-      val jsonCol = cfg.getStr("json_col").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `json_col` is required"))
-      val ddl = cfg.getStr("schema").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `schema` (DDL, e.g. \"k BIGINT, tag STRING\") is required"))
+      val jsonCol = cfg.reqStr("json_col")
+      val ddl = cfg.reqStr("schema")
       val schema = try org.apache.spark.sql.types.StructType.fromDDL(ddl)
       catch { case e: Exception => throw new IllegalArgumentException(
         s"stage $name: unparsable `schema` '$ddl': ${e.getMessage}")
@@ -934,8 +900,7 @@ object OpStages {
     // corpus (or emit one mid-pipeline). `schema` is validated at config
     // time — from_json/DataFrameReader only surface a bad DDL lazily.
     def sourceCfg(name: String, cfg: Cfg): (String, Option[String]) = {
-      val path = cfg.getStr("path").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `path` is required"))
+      val path = cfg.reqStr("path")
       val ddl = cfg.getStr("schema")
       ddl.foreach { d =>
         try org.apache.spark.sql.types.StructType.fromDDL(d)
@@ -951,8 +916,7 @@ object OpStages {
     // write. Data flows through unchanged so the stage composes anywhere.
     PipelineConfig.register("bpe_train") { (name, cfg) =>
       val (_, text) = ids(cfg)
-      val modelPath = cfg.getStr("model_path").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `model_path` is required"))
+      val modelPath = cfg.reqStr("model_path")
       val numMerges = cfg.getLong("num_merges").getOrElse(256L).toInt
       val maxWords = cfg.getLong("max_words").getOrElse(1L << 20).toInt
       val minFreq = cfg.getLong("min_frequency").getOrElse(2L)
@@ -993,8 +957,7 @@ object OpStages {
     // "how much of this crawl is new?" answer before any dedup pass
     PipelineConfig.register("overlap_report") { (name, cfg) =>
       val (_, text) = ids(cfg)
-      val refPath = cfg.getStr("ref_path").getOrElse(
-        throw new IllegalArgumentException(s"stage $name: `ref_path` is required"))
+      val refPath = cfg.reqStr("ref_path")
       val groupCols = cfg.getStr("group_cols")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
       val normalize = cfg.getBool("normalize").getOrElse(true)
@@ -1060,8 +1023,7 @@ object OpStages {
     // wrong cast) dies HERE with a readable message instead of twelve
     // stages later inside an analyzer error
     PipelineConfig.register("expect_schema") { (name, cfg) =>
-      val ddl = cfg.getStr("schema").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `schema` (DDL) is required"))
+      val ddl = cfg.reqStr("schema")
       val expected =
         try org.apache.spark.sql.types.StructType.fromDDL(ddl)
         catch { case e: Exception => throw new IllegalArgumentException(
@@ -1088,8 +1050,7 @@ object OpStages {
     // passing data flows through unchanged, so the contract composes
     // anywhere in a chain like expect_schema does for shapes.
     PipelineConfig.register("expect_rows") { (name, cfg) =>
-      val predicate = cfg.getStr("expect").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `expect` (SQL boolean expression) is required"))
+      val predicate = cfg.reqStr("expect")
       val maxRate = cfg.getDouble("max_violation_rate").getOrElse(0.0)
       require(maxRate >= 0 && maxRate <= 1,
         s"stage $name: max_violation_rate must be in [0,1], got $maxRate")
@@ -1134,12 +1095,12 @@ object OpStages {
     // tables are usually the small side, and a 100 TB right side should
     // flow through the corpus-side join key partitioning instead.
     PipelineConfig.register("join_table") { (name, cfg) =>
-      val path = cfg.getStr("path").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `path` is required"))
-      val keys = cfg.strings("keys")
-      require(keys.nonEmpty, s"stage $name: `keys` is required")
-      val rightKeys =
-        if (cfg.getList("right_keys").nonEmpty) cfg.strings("right_keys") else keys
+      val path = cfg.reqStr("path")
+      val keys = cfg.reqStrings("keys")
+      val rightKeys = cfg.strings("right_keys") match {
+        case Nil => keys
+        case rk => rk
+      }
       require(rightKeys.length == keys.length,
         s"stage $name: `right_keys` must match `keys` in length")
       val how = cfg.getStr("how").getOrElse("left")
@@ -1161,8 +1122,7 @@ object OpStages {
     }
 
     PipelineConfig.register("filter_rows") { (name, cfg) =>
-      val predicate = cfg.getStr("predicate").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `predicate` (a SQL boolean expression) is required"))
+      val predicate = cfg.reqStr("predicate")
       // parse eagerly so a syntax error fails at config time, not
       // mid-pipeline (Spark 4's Column API defers expr() parsing to binding)
       try org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(predicate)
@@ -1264,15 +1224,12 @@ object OpStages {
       Pipeline.DataStage(name, m => Multimodal.decodeBatched(m.data))
     }
     PipelineConfig.register("media_resize") { (name, cfg) =>
-      val w = cfg.getInt("target_w").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `target_w` is required"))
-      val h = cfg.getInt("target_h").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `target_h` is required"))
+      val w = cfg.reqInt("target_w")
+      val h = cfg.reqInt("target_h")
       Pipeline.DataStage(name, m => Multimodal.resizeImages(m.data, w, h))
     }
     PipelineConfig.register("media_frames") { (name, cfg) =>
-      val n = cfg.getInt("n_frames").getOrElse(throw new IllegalArgumentException(
-        s"stage $name: `n_frames` is required"))
+      val n = cfg.reqInt("n_frames")
       Pipeline.DataStage(name, m => Multimodal.sampleFrames(m.data, n))
     }
     PipelineConfig.register("media_audio_decode") { (name, _) =>

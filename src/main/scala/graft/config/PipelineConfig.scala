@@ -63,8 +63,8 @@ object PipelineConfig {
   }
 
   def fromCfg(cfg: Cfg): Parsed = {
-    val (desc, stageList, conf0) = readsOnly("pipeline", cfg)(
-      (cfg.get("description").collect { case S(s) => s }, cfg.get("stages"), cfg.get("conf")))
+    val (desc, stageList, conf0) = Cfg.Reads.checked("pipeline", cfg)(
+      (cfg.getStr("description"), cfg.get("stages"), cfg.get("conf")))
     val entries = stageList match {
       case Some(L(xs)) => xs.map(parseStageEntry)
       case other => throw new IllegalArgumentException(
@@ -101,18 +101,6 @@ object PipelineConfig {
         s"`conf` must be a map of scalars, got $other")
     }.getOrElse(Nil)
     Parsed(desc, stages, conf, noCkpt)
-  }
-
-  /** Runs `read` — the reads of `cfg`'s keys — and fails on every key of
-    * `cfg` it did not read (nested maps included, see [[Cfg.Reads.check]]):
-    * the one check that a key is known, for the pipeline's top level and
-    * for every stage. */
-  private def readsOnly[A](owner: String, cfg: Cfg)(read: => A): A = {
-    val (a, reads) = Cfg.Reads.record(read)
-    val (unread, known) = reads.check(cfg)
-    require(unread.isEmpty, s"$owner: unknown key(s) ${unread.mkString(", ")} " +
-      s"(read: ${known.mkString(", ")})")
-    a
   }
 
   /** Returns the built stage plus its `checkpoint` flag (default true). */
@@ -159,13 +147,12 @@ object PipelineConfig {
       val names = entries.map {
         case S(s) => s
         case m: M =>
-          val name = m.getStr("name").getOrElse(
-            throw new IllegalArgumentException(s"aggregation entry missing name: $m"))
+          val name = m.reqStr("name")
           // a quantiles list only means anything on the values/quantiles
           // entry — honoring it from any entry would let a later unrelated
           // aggregation silently overwrite the configured quantiles
           if (name == graft.meds.MedsSchema.ValuesQuantiles) {
-            quantiles = m.getList("quantiles").collect { case D(d) => d; case I(i) => i.toDouble } match {
+            quantiles = m.doubles("quantiles") match {
               case Nil => quantiles
               case qs => qs
             }
@@ -244,7 +231,7 @@ object PipelineConfig {
     require(b != null, s"unknown stage: $baseStage")
     val trainOnly = cfg.getBool("train_only").getOrElse(false)
     val stageCfg = cfg match { case M(m0) => M(m0 - "train_only"); case c => c }
-    def build(c: Cfg) = readsOnly(s"stage $name", c)(b(name, c))
+    def build(c: Cfg) = Cfg.Reads.checked(s"stage $name", c)(b(name, c))
     val stage =
       if (stageCfg.get("_match_revise").isEmpty) build(stageCfg)
       else Pipeline.DataStage(name, matchRevise(c => build(c) match {
@@ -345,7 +332,7 @@ object PipelineConfig {
       // seeded IID split by fraction. Replaces MedsData.splits for every
       // downstream stage, so `generate_subject_splits -> reshard_to_split`
       // runs on a root with no split information at all.
-      val fracs = cfg.numberMap("split_fracs", s"stage $name").getOrElse(
+      val fracs = cfg.numberMap("split_fracs").getOrElse(
         Seq(TrainSplit -> 0.8, TuningSplit -> 0.1, HeldOutSplit -> 0.1))
       val seed = cfg.getLong("seed").getOrElse(1L)
       Pipeline.SplitsStage(name, m => {
@@ -413,8 +400,7 @@ object PipelineConfig {
             ac.getStr("age_code").getOrElse("AGE"), ac.getStr("age_unit").getOrElse("years"))
           Some(Generator(df => AddTimeDerivedMeasurements.ageEvents(df, dob, age, unit)))
         case ("time_of_day", tc) =>
-          // accept 6.0 as well as 6 — YAML→JSON round-trips often float
-          val endpoints = tc.getList("endpoints").collect { case I(i) => i.toInt; case D(d) => d.toInt }
+          val endpoints = tc.ints("endpoints")
           val code = tc.getStr("time_of_day_code").getOrElse("TIME_OF_DAY")
           Some(Generator(df => AddTimeDerivedMeasurements.timeOfDayEvents(df, endpoints, code)))
         case ("timeline_tokens", tt) =>
@@ -437,11 +423,9 @@ object PipelineConfig {
       // custom_bins values may be the reference's dict form (bin name →
       // endpoint, insertion-ordered least→greatest) or a plain list
       def parseBins(c: Cfg): Map[String, Seq[Double]] = c.obj.map {
-        case (code, L(eps)) => code -> eps.collect { case D(d) => d; case I(i) => i.toDouble }
-        case (code, m0 @ Cfg.M(_)) =>
-          code -> m0.obj.values.toSeq.collect { case D(d) => d; case I(i) => i.toDouble }
-        case (code, other) => throw new IllegalArgumentException(s"bad bins for $code: $other")
-      }.toMap
+        case (code, _: M) => code -> c.numberMap(code).get.map(_._2)
+        case (code, _) => code -> c.doubles(code)
+      }
       // custom_bins_filepath: same structure from a YAML (like the
       // reference) or JSON file; inline custom_bins entries win on collision
       val binsPath = cfg.getStr("custom_bins_filepath")

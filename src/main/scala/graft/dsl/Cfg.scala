@@ -31,9 +31,41 @@ object Cfg {
   def list(xs: Cfg*): Cfg = L(xs)
   def map(kvs: (String, Cfg)*): Cfg = M(ListMap(kvs: _*))
 
+  // One coercion per type, shared by the scalar and the list readers. Numeric
+  // strings coerce (YAML quoting is not an error); an integral double reads
+  // as an integer (YAML→JSON round-trips often float), a fractional one or an
+  // out-of-range one does not.
+  private val asStr: PartialFunction[Cfg, String] = { case S(s) => s }
+  private val asInt: PartialFunction[Cfg, Int] = {
+    case I(i) if i.isValidInt => i.toInt
+    case D(d) if d.isValidInt => d.toInt
+    case S(s) if s.trim.toIntOption.isDefined => s.trim.toInt
+  }
+  private val asLong: PartialFunction[Cfg, Long] = {
+    case I(i) => i
+    case D(d) if d.toLong.toDouble == d => d.toLong
+    case S(s) if s.trim.toLongOption.isDefined => s.trim.toLong
+  }
+  private val asDouble: PartialFunction[Cfg, Double] = {
+    case D(d) => d
+    case I(i) => i.toDouble
+    case S(s) if s.trim.toDoubleOption.isDefined => s.trim.toDouble
+  }
+  private val asBool: PartialFunction[Cfg, Boolean] = {
+    case B(b) => b
+    case S(s) if s.trim.toBooleanOption.isDefined => s.trim.toBoolean
+  }
+
   /** Typed reads of a config map's keys — how every stage builder reads its
-    * config. Under [[Reads.record]] each read is recorded, so a key that no
-    * read touched can be reported as unknown ([[Reads.check]]).
+    * config. A key that is PRESENT but not readable as the expected type
+    * throws instead of reading as absent: a quoted "1000" (or any typo'd
+    * value) on e.g. `max_bucket` would otherwise silently disable the very
+    * guard the user configured. An explicit `key: null` reads as absent (the
+    * reference's Hydra configs use null to disable optional thresholds). The
+    * `req*` forms throw on an absent key, the list forms on a scalar or a
+    * mistyped element. Under [[Reads.checked]] each read is recorded, so a
+    * key that no read touched is reported as unknown, and every error names
+    * the owning stage and the key's path (`time_of_day.endpoints[1]`).
     */
   implicit class CfgOps(val c: Cfg) {
     /** The whole map (empty for a non-map): reads every key of it — the
@@ -47,76 +79,64 @@ object Cfg {
       case m: M => Reads.note(m, Set(k)); m.v.get(k)
       case _ => None
     }
-    // A key that is PRESENT but not readable as the expected type throws
-    // instead of reading as absent: a quoted "1000" (or any typo'd value) on
-    // e.g. `max_bucket` would otherwise silently disable the very guard the
-    // user configured. Numeric strings coerce (YAML quoting is not an error).
-    private def bad(k: String, want: String, got: Cfg): Nothing =
-      throw new IllegalArgumentException(s"config key `$k`: expected $want, got $got")
-    // explicit `key: null` reads as absent (the reference's Hydra configs use
-    // null to disable optional thresholds)
-    def getInt(k: String): Option[Int] = get(k).flatMap {
-      case Null => None
-      case I(i) => Some(i.toInt)
-      case D(d) => Some(d.toInt)
-      case S(s) if s.trim.toIntOption.isDefined => Some(s.trim.toInt)
-      case other => bad(k, "an integer", other)
+
+    private def fail(k: String, msg: String): Nothing = throw Reads.error(c, k, msg)
+    private def conv[A](k: String, want: String, as: PartialFunction[Cfg, A])(v: Cfg): A =
+      as.applyOrElse(v, (x: Cfg) => fail(k, s"must be $want, got $x"))
+    private def scalar[A](k: String, want: String)(as: PartialFunction[Cfg, A]): Option[A] =
+      get(k).filter(_ != Null).map(conv(k, want, as))
+    private def required[A](k: String, v: Option[A]): A = v.getOrElse(fail(k, "is required"))
+
+    def getStr(k: String): Option[String] = scalar(k, "a string")(asStr)
+    def getInt(k: String): Option[Int] = scalar(k, "an integer")(asInt)
+    // for 64-bit values (seeds): getInt would reject them
+    def getLong(k: String): Option[Long] = scalar(k, "an integer")(asLong)
+    def getDouble(k: String): Option[Double] = scalar(k, "a number")(asDouble)
+    def getBool(k: String): Option[Boolean] = scalar(k, "a boolean")(asBool)
+    def reqStr(k: String): String = required(k, getStr(k))
+    def reqInt(k: String): Int = required(k, getInt(k))
+    def reqLong(k: String): Long = required(k, getLong(k))
+    def reqDouble(k: String): Double = required(k, getDouble(k))
+
+    /** A list value (Nil when absent or null); each element read by `as`. */
+    private def list[A](k: String, want: String, each: String)(
+        as: PartialFunction[Cfg, A]): Seq[A] = get(k) match {
+      case None | Some(Null) => Nil
+      case Some(L(xs)) => xs.zipWithIndex.map { case (x, i) => conv(s"$k[$i]", each, as)(x) }
+      case Some(other) => fail(k, s"must be a list of $want, got $other")
     }
-    // for 64-bit values (seeds): getInt would silently wrap them
-    def getLong(k: String): Option[Long] = get(k).flatMap {
-      case Null => None
-      case I(i) => Some(i)
-      case D(d) => Some(d.toLong)
-      case S(s) if s.trim.toLongOption.isDefined => Some(s.trim.toLong)
-      case other => bad(k, "an integer", other)
+    private def nonEmpty[A](k: String, xs: Seq[A]): Seq[A] =
+      if (xs.nonEmpty) xs else fail(k, if (get(k).forall(_ == Null)) "is required"
+        else "must be a non-empty list")
+
+    def getList(k: String): Seq[Cfg] = list(k, "entries", "an entry")({ case x => x })
+    def strings(k: String): Seq[String] = list(k, "strings", "a string")(asStr)
+    def ints(k: String): Seq[Int] = list(k, "integers", "an integer")(asInt)
+    def doubles(k: String): Seq[Double] = list(k, "numbers", "a number")(asDouble)
+    def reqStrings(k: String): Seq[String] = nonEmpty(k, strings(k))
+    def reqDoubles(k: String): Seq[Double] = nonEmpty(k, doubles(k))
+
+    /** An ordered `{name: number}` map (split fractions/weights, bin
+      * endpoints) — one coercion shared by every split-weighted stage. */
+    def numberMap(k: String): Option[Seq[(String, Double)]] = get(k).filter(_ != Null).map {
+      case m: M => m.v.keys.toSeq.map(key => key -> m.reqDouble(key))
+      case other => fail(k, s"must be a {name: number} map, got $other")
     }
-    def getDouble(k: String): Option[Double] = get(k).flatMap {
-      case Null => None
-      case D(d) => Some(d)
-      case I(i) => Some(i.toDouble)
-      case S(s) if s.trim.toDoubleOption.isDefined => Some(s.trim.toDouble)
-      case other => bad(k, "a number", other)
-    }
-    def getStr(k: String): Option[String] = get(k).flatMap {
-      case Null => None
-      case S(s) => Some(s)
-      case other => bad(k, "a string", other)
-    }
-    def getBool(k: String): Option[Boolean] = get(k).flatMap {
-      case Null => None
-      case B(b) => Some(b)
-      case S(s) if s.trim.toBooleanOption.isDefined => Some(s.trim.toBoolean)
-      case other => bad(k, "a boolean", other)
-    }
-    def getList(k: String): Seq[Cfg] = get(k).collect { case L(xs) => xs }.getOrElse(Nil)
-    def strings(k: String): Seq[String] = getList(k).collect { case S(s) => s }
-    /** An ordered `{name: number}` map (split fractions/weights) — one
-      * coercion shared by every split-weighted stage. */
-    def numberMap(k: String, owner: String): Option[Seq[(String, Double)]] =
-      get(k).map {
-        case M(m) => m.toSeq.map {
-          case (key, D(d)) => key -> d
-          case (key, I(i)) => key -> i.toDouble
-          case (key, other) => throw new IllegalArgumentException(
-            s"$owner: bad number for $key in `$k`: $other")
-        }
-        case other => throw new IllegalArgumentException(
-          s"$owner: `$k` must be a {name: number} map, got $other")
-      }
+    def reqNumberMap(k: String): Seq[(String, Double)] = required(k, numberMap(k))
   }
 
   /** The keys read through [[CfgOps]] on each map node (by identity) while
-    * [[Reads.record]] runs its body; a whole-map read reads every key.
+    * [[Reads.checked]] runs its body on behalf of `owner`.
     */
-  final class Reads private () {
+  final class Reads private (private val owner: String, root: Cfg) {
     private val keys = new java.util.IdentityHashMap[M, Set[String]]()
 
-    /** The (unread, read) key paths under `root`, sorted. The root map is
+    /** The (unread, read) key paths under the root, sorted. The root map is
       * always checked; a nested map only once a key of it was read — a map
       * the builder never opened is data (a `_matcher`, say). Lists are
       * walked into (`aggregations[0].name`).
       */
-    def check(root: Cfg): (Seq[String], Seq[String]) = {
+    private def check(): (Seq[String], Seq[String]) = {
       val unread, read = Seq.newBuilder[String]
       def walk(c: Cfg, path: String, always: Boolean): Unit = c match {
         case m @ M(v) =>
@@ -134,6 +154,19 @@ object Cfg {
       walk(root, "", always = true)
       (unread.result(), read.result())
     }
+
+    /** Key `k` of map `m` as a path from the root (`k` alone when `m` is not
+      * under the root). */
+    private def path(m: Cfg, k: String): String = {
+      def find(c: Cfg, prefix: String): Option[String] = c match {
+        case _ if c eq m => Some(prefix + k)
+        case M(v) => v.iterator.flatMap { case (kk, x) => find(x, s"$prefix$kk.") }.nextOption()
+        case L(xs) => xs.iterator.zipWithIndex.flatMap { case (x, i) =>
+          find(x, s"${prefix.stripSuffix(".")}[$i].") }.nextOption()
+        case _ => None
+      }
+      find(root, "").getOrElse(k)
+    }
   }
 
   object Reads {
@@ -142,10 +175,22 @@ object Cfg {
     private[Cfg] def note(m: M, ks: Set[String]): Unit =
       current.value.foreach(r => r.keys.put(m, r.keys.getOrDefault(m, Set.empty) ++ ks))
 
-    /** Run `body`, recording the config reads it makes on this thread. */
-    def record[A](body: => A): (A, Reads) = {
-      val r = new Reads
-      (current.withValue(Some(r))(body), r)
+    /** A bad read of key `k` of map `m`, naming the owner and the key's path
+      * while [[checked]] runs. */
+    private[Cfg] def error(m: Cfg, k: String, msg: String): IllegalArgumentException =
+      new IllegalArgumentException(current.value.fold(s"config key `$k` $msg")(r =>
+        s"${r.owner}: `${r.path(m, k)}` $msg"))
+
+    /** Runs `body` — the reads of `root`'s keys on behalf of `owner`
+      * (`stage <name>`, `pipeline`) — and fails on every key of `root` it did
+      * not read, nested maps included: the one check that a key is known. */
+    def checked[A](owner: String, root: Cfg)(body: => A): A = {
+      val r = new Reads(owner, root)
+      val a = current.withValue(Some(r))(body)
+      val (unread, read) = r.check()
+      require(unread.isEmpty, s"$owner: unknown key(s) ${unread.mkString(", ")} " +
+        s"(read: ${read.mkString(", ")})")
+      a
     }
   }
 

@@ -99,22 +99,6 @@ object GraftFunctions {
   def searchSortedRight(endpoints: Column, value: Column): Column =
     size(filter(endpoints, e => e <= value))
 
-  /** Skew-safe exact distinct count: salt by a hash of the DISTINCT column so
-    * each salt partition holds a disjoint value set, count-distinct within
-    * (group, salt), then sum partials per group. For heavy-hitter group keys
-    * (one code holding half the corpus) this bounds any single task to
-    * 1/salts of the hot group where a plain `countDistinct` funnels the whole
-    * group through one task's expand/aggregate.
-    */
-  def skewSafeDistinctCount(df: DataFrame, groupKeys: Seq[String], distinctCol: String,
-      salts: Int = 64, outName: String = "n_distinct"): DataFrame = {
-    val salted = df.withColumn("__salt", pmod(hash(col(distinctCol)), lit(salts)))
-    salted.groupBy((groupKeys :+ "__salt").map(col): _*)
-      .agg(count_distinct(col(distinctCol)).as("__partial"))
-      .groupBy(groupKeys.map(col): _*)
-      .agg(sum(col("__partial")).as(outName))
-  }
-
   /** Scalable global row number (1-based): the distributed equivalent of
     * `row_number().over(Window.orderBy(sortCols))`, which funnels EVERY row
     * through a single partition (WindowExec warns; a non-starter at 100 TB).

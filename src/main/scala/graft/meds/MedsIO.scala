@@ -185,12 +185,17 @@ object MedsIO {
       val dataPath = new org.apache.hadoop.fs.Path(s"$root/data")
       val fs = dataPath.getFileSystem(
         meds.data.sparkSession.sparkContext.hadoopConfiguration)
-      fs.listStatus(dataPath).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.startsWith("split="))
-          fs.rename(st.getPath,
-            new org.apache.hadoop.fs.Path(dataPath, name.stripPrefix("split=")))
+      val splitDirs = fs.listStatus(dataPath).filter { st =>
+        st.isDirectory && st.getPath.getName.startsWith("split=")
       }
+      splitDirs.foreach(st => fs.rename(st.getPath,
+        new org.apache.hadoop.fs.Path(dataPath, st.getPath.getName.stripPrefix("split="))))
+      // no row, no partition dir: without a data file the root could not be
+      // read back (Spark cannot infer a schema from `_SUCCESS` alone), so
+      // leave one footer-only file at the written columns
+      if (splitDirs.isEmpty)
+        writeEmptyParquetFile(meds.data.sparkSession, bare.drop(Split).schema,
+          new org.apache.hadoop.fs.Path(dataPath, "empty.parquet"))
     }
     writeMetadataTable(meds.codes, codesSchema, s"$root/metadata/codes.parquet")
     writeMetadataTable(meds.splits, splitsSchema,

@@ -163,21 +163,11 @@ object AddTimeDerivedMeasurements {
         col("__tok.v").as(NumericValue))
   }
 
-  /** Splice generated rows into the data: new rows first within each
-    * (subject, time) block, stable within source order; codes matching
-    * `newCodeLastRegex` (e.g. TIMELINE//END) go AFTER the data rows instead
-    * (add_new_events_fntr, add_time_derived_measurements.py:19-171).
-    * `newCodeLastRegex` is regex CONTAINMENT, exactly like the reference's
-    * `str.contains(new_code_last_regex)` — an invalid pattern throws there
-    * too. Single-generator form of [[addAll]].
-    */
-  def splice(data: DataFrame, newEvents: DataFrame,
-      newCodeLastRegex: Option[String] = None): DataFrame =
-    addAll(data, Seq(Generator(_ => newEvents, newCodeLastRegex)))
-
   /** One configured event generator: `make` computes the new rows from the
-    * (already-augmented) frame; codes matching `newCodeLastRegex` go after
-    * the block instead of before.
+    * (already-augmented) frame; codes matching `newCodeLastRegex` (e.g.
+    * TIMELINE//END) go after the block instead of before. The match is regex
+    * CONTAINMENT, exactly like the reference's `str.contains` (an invalid
+    * pattern throws there too).
     */
   final case class Generator(make: DataFrame => DataFrame,
       newCodeLastRegex: Option[String] = None)

@@ -121,6 +121,26 @@ class MedsIOSpec extends SparkSpec {
     assert(got.getMessage == plain.getMessage)
   }
 
+  test("a pipeline that keeps no row writes a readable root, and resumes from its checkpoints") {
+    val out = tmp("empty_result")
+    def run(args: String*): String = {
+      val log = new java.io.ByteArrayOutputStream()
+      Console.withOut(log)(Main.run(("perfbench/meds_etl.yaml" +: MedsFixture.root +: args).toArray,
+        spark))
+      log.toString
+    }
+    // the pipeline's own threshold (20 events) keeps no fixture subject
+    assert(run(s"$out/empty").contains("wrote 0 data rows"))
+    run(s"$out/full", "stages.filter_subjects.min_events_per_subject=5")
+    def columns(root: String) = MedsIO.read(spark, root).data.schema.map(f => f.name -> f.dataType)
+    assert(MedsIO.read(spark, s"$out/empty").data.count() == 0)
+    assert(columns(s"$out/empty") == columns(s"$out/full"))
+    (1 to 2).foreach { i =>
+      assert(run(s"$out/ckpt_out", s"$out/ckpt").contains("wrote 0 data rows"), s"run $i")
+    }
+    assert(columns(s"$out/ckpt_out") == columns(s"$out/full"))
+  }
+
   test("MedsIO.write leaves each file sorted by (subject_id, time), static rows first, " +
       "from an input spread over several map tasks") {
     val rnd = new scala.util.Random(11)

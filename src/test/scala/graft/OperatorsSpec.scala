@@ -314,7 +314,8 @@ class TimeDerivedSpec extends SparkSpec {
 
   test("splice puts generated rows before data rows within a (subject,time) block") {
     val gen = AddTimeDerivedMeasurements.timeOfDayEvents(data)
-    val out = AddTimeDerivedMeasurements.splice(data, gen)
+    val out = AddTimeDerivedMeasurements.addAll(data,
+        Seq(AddTimeDerivedMeasurements.Generator(_ => gen)))
       .filter(col(SubjectId) === 2L).select(Code).collect().map(_.getString(0)).toSeq
     assert(out == Seq("TIME_OF_DAY//[12,18)", "HR"))
   }

@@ -1720,18 +1720,6 @@ class FunctionsSpec extends SparkSpec {
     assert(d.select(GraftFunctions.cosine(col("a"), col("a"))).head().getDouble(0) == 1.0)
   }
 
-  test("skew-safe distinct count equals plain countDistinct") {
-    import spark.implicits._
-    val rng = new scala.util.Random(5)
-    val df = (0 until 5000).map(i => (s"code_${i % 3}", rng.nextInt(400).toLong))
-      .toDF("code", "subject_id")
-    val plain = df.groupBy("code").agg(count_distinct(col("subject_id")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = GraftFunctions.skewSafeDistinctCount(df, Seq("code"), "subject_id")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(plain == salted)
-  }
-
   test("searchSortedRight = numpy side=right bisect") {
     val d = Seq((Array(1.0, 3.0, 5.0), 3.0), (Array(1.0, 3.0, 5.0), 0.5),
       (Array(1.0, 3.0, 5.0), 9.0)).toDF("eps", "v")

@@ -8,7 +8,9 @@ import java.nio.file.{Files, Paths}
 
 /** The config-key contract: `PipelineConfig.buildStage` fails on every stage
   * key its builder did not read, at parse time, nested maps included, and
-  * `fromCfg` does the same for the pipeline's top-level keys.
+  * `fromCfg` does the same for the pipeline's top-level keys. A missing
+  * required key, a mistyped scalar, list or list element fails there too,
+  * naming the stage and the key's path.
   */
 class StageKeysSpec extends SparkSpec {
 
@@ -201,6 +203,61 @@ class StageKeysSpec extends SparkSpec {
       val e = buildError(stage, map(yaml))
       assert(e.contains(s"stage $stage") && e.contains(value), s"$stage $yaml: $e")
     }
+  }
+
+  /** (stage, key) pairs whose absence fails a hand-written conditional or
+    * value check ("at least one of ...", "2 or 3 columns") instead of the
+    * required-key read. */
+  private val conditional = Set("quality_filter" -> "min_words", "rolling_agg" -> "count_as",
+    "zorder_layout" -> "cols")
+
+  test("dropping any key of a minimal config builds, or fails naming the stage and the key") {
+    val wrong = minimal.toSeq.sorted.flatMap { case (stage, yaml) =>
+      map(yaml).v.keys.toSeq.flatMap { k =>
+        scala.util.Try(build(stage, Cfg.M(map(yaml).v - k))).failed.toOption match {
+          case None => None
+          case Some(e: IllegalArgumentException)
+              if e.getMessage == s"stage $stage: `$k` is required" => None
+          case Some(e: IllegalArgumentException) if conditional((stage, k)) &&
+              e.getMessage.contains(s"stage $stage: ") && e.getMessage.contains(k) => None
+          case Some(e) => Some(s"$stage without $k: $e")
+        }
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  /** (stage, config, the expected error after `stage <stage>: `). */
+  private val mistyped = Seq("aggregate_code_metadata", "filter_measurements",
+    "fit_vocabulary_indices", "normalization", "occlude_outliers").flatMap(stage => Seq(
+      (stage, "{code_modifiers: unit}", "`code_modifiers` must be a list of strings, got S(unit)"),
+      (stage, "{code_modifiers: [unit, 7]}", "`code_modifiers[1]` must be a string, got I(7)"))) ++
+    Seq(
+      ("add_time_derived_measurements", "{time_of_day: {endpoints: [6, twelve]}}",
+        "`time_of_day.endpoints[1]` must be an integer, got S(twelve)"),
+      ("add_time_derived_measurements", "{time_of_day: {endpoints: [6.5]}}",
+        "`time_of_day.endpoints[0]` must be an integer, got D(6.5)"),
+      ("occlude_outliers", "{stddev_cutoff: abc}", "`stddev_cutoff` must be a number, got S(abc)"),
+      ("aggregate_code_metadata", "{aggregations: [{name: values/quantiles, sketch_k: many}]}",
+        "`aggregations[0].sketch_k` must be an integer, got S(many)"),
+      ("aggregate_code_metadata", "{aggregations: values/sum}",
+        "`aggregations` must be a list of entries, got S(values/sum)"),
+      ("sample_split", "{splits: {a: 1, b: x}}", "`splits.b` must be a number, got S(x)"),
+      ("join_table", "{path: /x, keys: k}", "`keys` must be a list of strings, got S(k)"),
+      ("sim_topk", "{query: []}", "`query` must be a non-empty list"))
+
+  test("a mistyped scalar, list or element fails at build time, naming the stage and the key path") {
+    mistyped.foreach { case (stage, yaml, error) =>
+      assert(buildError(stage, map(yaml)) == s"stage $stage: $error", yaml)
+    }
+    // numeric strings and integral doubles coerce, as the scalar readers do
+    build("add_time_derived_measurements", map("{time_of_day: {endpoints: [\"6\", 12.0]}}"))
+    // and through graft.Main the failure comes before any Spark job
+    val out = Files.createTempDirectory("graft_stage_lists").toString
+    val e = runFails("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/run",
+      "stages.occlude_outliers.code_modifiers=unit")
+    assert(e.getMessage ==
+      "stage occlude_outliers: `code_modifiers` must be a list of strings, got S(unit)", e.getMessage)
   }
 
   test("a bad aggregation name fails before any Spark job") {
