@@ -38,6 +38,6 @@ object LocalTable {
       df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
     }
 
-  def isLocal(df: DataFrame): Boolean =
+  private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 }

@@ -59,8 +59,8 @@ object MedsIO {
     * rows at the canonical column set ALSO resolves to that frame — both
     * footer checks are driver-side (no job), and restoring the
     * statically-empty LocalRelation is what lets the NEXT checkpoint's
-    * writeMetadataTable skip its write job again (a scan of the empty file
-    * would defeat the plan-only emptiness check on every downstream stage).
+    * metadata write skip its job again (a scan of the empty file would
+    * defeat the plan-only local check on every downstream stage).
     * Non-canonical or non-empty tables read normally.
     */
   private def readMetadataTable(spark: SparkSession, path: String,
@@ -180,7 +180,7 @@ object MedsIO {
         case cs => bare.repartition(col(Split), col(cs.head))
           .sortWithinPartitions((Split +: cs).map(col): _*)
       }
-      arranged.write.mode("overwrite").partitionBy(Split).parquet(s"$root/data")
+      writeParquet(arranged, s"$root/data", Split)
       // Strip Hive partition-dir prefixes: data/split=train -> data/train.
       val dataPath = new org.apache.hadoop.fs.Path(s"$root/data")
       val fs = dataPath.getFileSystem(
@@ -193,70 +193,57 @@ object MedsIO {
       // no row, no partition dir: without a data file the root could not be
       // read back (Spark cannot infer a schema from `_SUCCESS` alone), so
       // leave one footer-only file at the written columns
-      if (splitDirs.isEmpty)
-        writeEmptyParquetFile(meds.data.sparkSession, bare.drop(Split).schema,
-          new org.apache.hadoop.fs.Path(dataPath, "empty.parquet"))
+      if (splitDirs.isEmpty) writeParquet(meds.data.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row], bare.drop(Split).schema),
+        s"$root/data/empty.parquet")
     }
-    writeMetadataTable(meds.codes, codesSchema, s"$root/metadata/codes.parquet")
-    writeMetadataTable(meds.splits, splitsSchema,
-      s"$root/metadata/subject_splits.parquet")
+    // the canonical file set stays on disk even for an empty table: the
+    // reference's compute_fn reads metadata/codes.parquet unguarded, and
+    // Main's footer row counts read it. A fitted or never-populated table is
+    // driver-local, so each is one file written with no Spark job.
+    writeParquet(meds.codes, s"$root/metadata/codes.parquet")
+    writeParquet(meds.splits, s"$root/metadata/subject_splits.parquet")
     markerFs.create(markerPath, true).close()
   }
 
-  /** Write one metadata side table — bypassing the Spark job entirely when
-    * the frame is STATICALLY empty at the canonical schema (an empty
-    * LocalRelation / zero-partition RDD, the shape every pipeline carries
-    * for a metadata table it never populated): a single empty parquet FILE
-    * (footer-only, zero row groups) is written driver-side instead. Each
-    * composed pipeline checkpoint was paying 2 write jobs (~0.1 s each at
-    * bench scale) to persist zero rows — at cluster scale it is 2 fewer
-    * commit-protocol rounds per stage. Unlike r17's skip-and-delete, the
-    * canonical file SET stays on disk (ADVICE r17 medium: the reference's
-    * compute_fn does an unguarded read of metadata/codes.parquet, and
-    * MEDS consumers expect the file to exist, possibly empty), and
-    * Main's zero-job footer row counts keep working. The emptiness check
-    * is plan-only (no job): a frame that MIGHT be empty but needs
-    * execution to know is written normally. The stale target (possibly a
-    * directory from a prior distributed write) is removed first so a
-    * prior non-empty write to the same root cannot resurface. A non-empty
-    * driver-local table ([[LocalTable]], the fitted codes) is written as
-    * one file: its scan would split the rows into one task per core.
+  /** The options of every parquet file graft writes into a MEDS root, the
+    * streaming sink's included: zstd, the codec of the reference's Polars
+    * `write_parquet`. A format, not a setting.
     */
-  private def writeMetadataTable(df: DataFrame,
-      canonical: StructType, path: String): Unit = {
-    val staticallyEmpty = df.schema == canonical &&
-      (df.queryExecution.optimizedPlan match {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          l.data.isEmpty
-        case _: org.apache.spark.sql.execution.LogicalRDD =>
-          df.queryExecution.toRdd.getNumPartitions == 0
-        case _ => false
-      })
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (staticallyEmpty)
-      writeEmptyParquetFile(df.sparkSession, canonical, p)
-    else if (LocalTable.isLocal(df)) df.coalesce(1).write.mode("overwrite").parquet(path)
-    else df.write.mode("overwrite").parquet(path)
-  }
+  private[graft] val ParquetOptions: Map[String, String] = Map("compression" -> "zstd")
 
-  /** One valid parquet file with the given schema and zero row groups,
-    * written on the driver with parquet-hadoop directly — no Spark job, no
-    * commit protocol. The footer carries Spark's row-metadata key so a
-    * read-back resolves to exactly the canonical StructType (same as a
-    * distributed Spark write of the empty frame would).
+  /** The one parquet writer of a MEDS root. A driver-local frame (its rows
+    * are in the plan: a `LocalRelation`, or an RDD with no partition) is
+    * written from the driver as ONE file at `path`, with no job and no
+    * commit protocol, through Spark's own parquet writer, so the footer,
+    * timestamp type and codec are those of a distributed write; whatever
+    * stood at `path` (maybe a directory from an earlier write) is removed
+    * first. Any other frame, and every partitioned write, runs a Spark job
+    * into the directory `path`.
     */
-  private def writeEmptyParquetFile(spark: SparkSession,
-      schema: StructType,
-      p: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.parquet.hadoop.ParquetFileWriter
-    val conf = spark.sparkContext.hadoopConfiguration
-    fsFor(p).delete(p, true) // prior write may have left a DIRECTORY here
-    val msgType = org.apache.spark.sql.GraftSqlBridge.parquetMessageType(spark, schema)
-    val w = new ParquetFileWriter(conf, msgType, p,
-      ParquetFileWriter.Mode.OVERWRITE)
-    w.start()
-    w.end(java.util.Collections.singletonMap(
-      "org.apache.spark.sql.parquet.row.metadata", schema.json))
+  private def writeParquet(df: DataFrame, path: String, partitionBy: String*): Unit = {
+    val localRows = if (partitionBy.nonEmpty) None else df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l.data)
+      case _: org.apache.spark.sql.execution.LogicalRDD
+          if df.queryExecution.toRdd.getNumPartitions == 0 => Some(Nil)
+      case _ => None
+    }
+    localRows match {
+      case Some(rows) =>
+        val job = org.apache.hadoop.mapreduce.Job.getInstance(
+          df.sparkSession.sessionState.newHadoopConf())
+        val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+          .prepareWrite(df.sparkSession, job, ParquetOptions, df.schema)
+        val p = new org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(job.getConfiguration).delete(p, true)
+        val writer = factory.newInstance(path, df.schema,
+          new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+            new org.apache.hadoop.mapreduce.TaskAttemptID()))
+        try rows.foreach(writer.write) finally writer.close()
+      case None =>
+        df.write.mode("overwrite").options(ParquetOptions).partitionBy(partitionBy: _*)
+          .parquet(path)
+    }
   }
 
   /** Resharded data layout: one `data/<split>/<shardIdx>.parquet` file per
@@ -271,10 +258,8 @@ object MedsIO {
     */
   private def writeReshardedData(data: DataFrame, root: String): Unit = {
     val spark = data.sparkSession
-    data
-      .repartition(col(Split), col(Shard))
-      .sortWithinPartitions(Split, Shard, SubjectId, Time)
-      .write.mode("overwrite").partitionBy(Split, Shard).parquet(s"$root/data")
+    writeParquet(data.repartition(col(Split), col(Shard))
+      .sortWithinPartitions(Split, Shard, SubjectId, Time), s"$root/data", Split, Shard)
     val dataPath = new org.apache.hadoop.fs.Path(s"$root/data")
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(dataPath).foreach { st =>

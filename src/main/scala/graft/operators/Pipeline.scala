@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.meds.{MedsData, MedsIO}
 import graft.meds.MedsSchema._
+import graft.plans.ParquetStats
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /** Pipeline driver (reference: /root/reference/src/MEDS_transforms/runner.py:291-370
@@ -44,7 +47,7 @@ object Pipeline {
     // filter below would otherwise drop every row and each metadata stage
     // would silently write empty codes (the r1 silent-drop bug). A genuinely
     // empty input stays the reference's zero-rows behavior. The splits-table
-    // emptiness check is one job per splits frame — the answer is remembered
+    // emptiness check is at most one job per splits frame — the answer is remembered
     // until a SplitsStage or a new MedsIO.read hands in another frame — and
     // the data probes run only when that table is empty (an unusual root),
     // paying one extra pass of the upstream lineage there.
@@ -73,14 +76,24 @@ object Pipeline {
   }
 
   /** `splits.isEmpty`, remembered per splits frame (by identity; weak keys,
-    * so a dropped frame's entry goes with it). */
+    * so a dropped frame's entry goes with it). A frame whose optimized plan
+    * is a bare parquet scan (MedsIO.read's splits table) is answered from
+    * its footers' row counts with no job; any other frame, or footers that
+    * cannot be counted, runs the `isEmpty` job. */
   private val splitsEmptyMemo =
     new java.util.WeakHashMap[DataFrame, java.lang.Boolean]()
 
   private def splitsEmpty(splits: DataFrame): Boolean =
     splitsEmptyMemo.synchronized {
-      splitsEmptyMemo.computeIfAbsent(splits, s => s.isEmpty)
+      splitsEmptyMemo.computeIfAbsent(splits, s => footerRows(s).fold(s.isEmpty)(_ == 0))
     }
+
+  private def footerRows(df: DataFrame): Option[Long] = df.queryExecution.optimizedPlan match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+        if fs.fileFormat.isInstanceOf[ParquetFileFormat] && fs.location.rootPaths.length == 1 =>
+      ParquetStats.rowCount(df.sparkSession, fs.location.rootPaths.head.toString)
+    case _ => None
+  }
 
   /** A checkpointed stage output is complete only when MedsIO.write's own
     * completion marker exists — committed AFTER the data job's `_SUCCESS`

@@ -229,8 +229,4 @@ object ReshardToSplit {
       .join(assignment.select(SubjectId, Split, Shard), Seq(SubjectId), "inner")
       .repartition(col(Split), col(Shard))
       .sortWithinPartitions(SubjectId, Time)
-
-  /** Write re-sharded data in the MEDS layout (split partition dirs). */
-  def write(resharded: DataFrame, root: String): Unit =
-    resharded.write.mode("overwrite").partitionBy(Split, Shard).parquet(s"$root/data")
 }

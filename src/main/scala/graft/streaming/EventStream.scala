@@ -79,11 +79,12 @@ object EventStream {
   }
 
   /** Continuous ingestion into a MEDS dataset root: the exactly-once parquet
-    * file sink, partitioned by split, writing under `root/data`. The sink's
-    * Hive-style `split=<v>` partition dirs are transparently handled by
-    * `MedsIO.read`'s prefix-stripping, so every batch operator can run over a
-    * root a stream is still appending to. Returns the started query;
-    * checkpointing (offsets + file manifest) makes restarts exactly-once.
+    * file sink, partitioned by split, writing under `root/data` in MedsIO's
+    * on-disk format (zstd). The sink's Hive-style `split=<v>` partition dirs
+    * are transparently handled by `MedsIO.read`'s prefix-stripping, so every
+    * batch operator can run over a root a stream is still appending to.
+    * Returns the started query; checkpointing (offsets + file manifest)
+    * makes restarts exactly-once.
     */
   def medsSink(events: DataFrame, root: String, checkpointDir: String,
       split: String = "train"): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -92,6 +93,7 @@ object EventStream {
       else events.withColumn("split", lit(split))
     withSplit.writeStream
       .format("parquet")
+      .options(graft.meds.MedsIO.ParquetOptions)
       .option("path", s"$root/data")
       .option("checkpointLocation", checkpointDir)
       .partitionBy("split")

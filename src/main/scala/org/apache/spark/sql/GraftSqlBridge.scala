@@ -16,16 +16,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** The parquet MessageType Spark itself would write for this schema —
-    * `SparkToParquetSchemaConverter`'s SQLConf constructor needs the
-    * `private[sql]` sessionState (the Configuration one expects Spark's
-    * serialized job conf, not a raw hadoopConfiguration).
-    */
-  def parquetMessageType(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType): org.apache.parquet.schema.MessageType =
-    new org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter(
-      spark.sessionState.conf).convert(schema)
-
   /** The alias name at the root of a Column's node AST, if any — the Spark 4
     * `Column` wraps a `ColumnNode` tree (`private[sql]`), not a Catalyst
     * expression, so `.as("x")` is an `internal.Alias` node.

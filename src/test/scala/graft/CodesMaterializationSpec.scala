@@ -104,7 +104,7 @@ class CodesMaterializationSpec extends SparkSpec {
       |      stddev_cutoff: 1
       |  - fit_normalization:
       |      _base_stage: aggregate_code_metadata
-      |      aggregations: [code/n_occurrences, code/n_subjects, values/n_occurrences, values/sum, values/sum_sqd]
+      |      aggregations: [code/n_occurrences, code/n_subjects, values/n_occurrences, values/sum, values/sum_sqd, values/min, values/max]
       |  - fit_vocabulary_indices
       |  - normalization
       |""".stripMargin
@@ -183,9 +183,14 @@ class CodesMaterializationSpec extends SparkSpec {
     val input = MedsIO.read(spark, in)
     val stages = PipelineConfig.fromFile(p).stages
     assert(stages.count(_.isInstanceOf[Pipeline.MetadataStage]) == 3)
-    val jobs = Collector.measure(spark)(Pipeline.run(spark, input, stages))._2.jobs
-    val probes = jobs.map(_.callSite).filter(_.startsWith("isEmpty at Pipeline.scala"))
-    assert(probes.length == 1, probes.mkString(", "))
+    def probes(m: MedsData): Seq[String] =
+      Collector.measure(spark)(Pipeline.run(spark, m, stages))._2.jobs
+        .map(_.callSite).filter(_.startsWith("isEmpty at Pipeline.scala"))
+    // a derived splits frame takes one job; the read's parquet scan is
+    // answered from its footer row counts
+    val derived = probes(input.withSplits(input.splits.filter(col(SubjectId) > 0)))
+    assert(derived.length == 1, derived.mkString(", "))
+    assert(probes(input).isEmpty)
   }
 
   test("Main.run leaves no persisted or checkpointed RDD behind") {
@@ -199,9 +204,11 @@ class CodesMaterializationSpec extends SparkSpec {
   }
 
   /** The codes half of the MEDS layout contract on a written root: one
-    * parquet data file, one row per code, FIXTURES.md §2's column types
-    * (Spark's signed integral types for its unsigned ones), and each count
-    * and index column at the narrowest integral type holding its values. */
+    * parquet data file (a fitted table is that file itself, see
+    * [[assertFitted]]), one row per code, FIXTURES.md §2's column types
+    * (Spark's signed integral types for its unsigned ones, and double sums),
+    * and each count and index column at the narrowest integral type holding
+    * its values. */
   private def assertCodesLayout(root: String): Unit = {
     val path = s"$root/metadata/codes.parquet"
     val files = Option(new java.io.File(path).listFiles()).getOrElse(Array(new java.io.File(path)))
@@ -218,7 +225,8 @@ class CodesMaterializationSpec extends SparkSpec {
         case Code | Description => Seq(StringType)
         case ParentCodes => Seq(ArrayType(StringType))
         case c if counts.contains(c) => integral
-        case ValuesSum | ValuesSumSqd | ValuesMin | ValuesMax => Seq(FloatType, DoubleType)
+        case ValuesSum | ValuesSumSqd => Seq(DoubleType)
+        case ValuesMin | ValuesMax => Seq(FloatType)
         case other => fail(s"$path: unexpected column $other")
       }
       assert(want.contains(f.dataType), s"$path: ${f.name} is ${f.dataType}")
@@ -240,18 +248,31 @@ class CodesMaterializationSpec extends SparkSpec {
     }
   }
 
+  /** A codes table fitted in the writing run is written by the driver as
+    * the file metadata/codes.parquet; one read back from a checkpoint is
+    * written by a job, into a directory. */
+  private def assertFitted(root: String): Unit = {
+    assertCodesLayout(root)
+    assert(new java.io.File(s"$root/metadata/codes.parquet").isFile, s"$root: not one file")
+  }
+
   test("codes.parquet keeps the MEDS layout contract, with and without a checkpoint root") {
     val out = java.nio.file.Files.createTempDirectory("graft_codes_layout").toString
     // the pipeline's own threshold (20 events) keeps no fixture subject
     val keep = "stages.filter_subjects.min_events_per_subject=5"
     Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/run", keep), spark)
-    assertCodesLayout(s"$out/run")
+    assertFitted(s"$out/run")
     Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/ckpt_out",
       s"$out/ckpt", keep), spark)
     assertCodesLayout(s"$out/ckpt_out")
     val fitDirs = new java.io.File(s"$out/ckpt").listFiles().map(_.getName).sorted
       .filter(_.contains("_fit_"))
     assert(fitDirs.length == 3, fitDirs.mkString(", "))
-    fitDirs.foreach(d => assertCodesLayout(s"$out/ckpt/$d"))
+    fitDirs.foreach(d => assertFitted(s"$out/ckpt/$d"))
+    val (in, p) = fixtureRoot()
+    Main.run(Array(p, in, s"$out/minmax"), spark)
+    assert(spark.read.parquet(s"$out/minmax/metadata/codes.parquet").columns
+      .toSet.contains(ValuesMin))
+    assertFitted(s"$out/minmax")
   }
 }

@@ -3,7 +3,10 @@ package graft
 import graft.meds.{MedsData, MedsIO}
 import graft.meds.MedsSchema._
 import graft.obs.Collector
-import graft.operators.ReshardToSplit
+import graft.operators.{AggregateCodeMetadata, ReshardToSplit}
+import graft.streaming.EventStream
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -11,8 +14,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** MedsIO's read and write contracts over the root layouts it meets: a root
-  * opens with no Spark job and reads what `spark.read.parquet` reads, and
-  * every written shard is in MEDS order.
+  * opens with no Spark job and reads what `spark.read.parquet` reads, every
+  * written shard is in MEDS order, and every written file is zstd parquet.
   */
 class MedsIOSpec extends SparkSpec {
 
@@ -173,5 +176,65 @@ class MedsIOSpec extends SparkSpec {
       assert(backs == 0, s"$f: (subject_id, time) steps backwards $backs times")
     }
     assert(total == events.length)
+  }
+
+  /** (file under `root`, the codec of each of its column chunks) for every
+    * parquet file, read from the parquet-hadoop footers. */
+  private def chunkCodecs(root: String): Seq[(String, Seq[String])] =
+    Files.walk(Paths.get(root)).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), spark.sparkContext.hadoopConfiguration))
+        try Paths.get(root).relativize(f).toString -> reader.getFooter.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala.map(_.getCodec.name))
+        finally reader.close()
+      }.toSeq
+
+  test("every column chunk MedsIO writes is zstd: run, checkpoint, resharded, " +
+      "empty-result and streaming-sink roots") {
+    val dir = tmp("zstd")
+    Files.writeString(Paths.get(dir, "pipeline.yaml"), pipeline)
+    Main.run(Array(s"$dir/pipeline.yaml", MedsFixture.root, s"$dir/out", s"$dir/ckpt"), spark)
+    // the pipeline's own threshold (20 events) keeps no fixture subject
+    Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$dir/empty"), spark)
+    assert(Files.isRegularFile(Paths.get(dir, "empty", "data", "empty.parquet")))
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, java.sql.Timestamp, String, Float)]
+    val q = EventStream.medsSink(input.toDF().toDF(SubjectId, Time, Code, NumericValue),
+      s"$dir/sink", s"$dir/sink_ckpt")
+    try {
+      input.addData((1L, java.sql.Timestamp.valueOf("2020-01-01 10:00:00"), "HR", 60f))
+      q.processAllAvailable()
+    } finally q.stop()
+    val written = Seq("Main.run output" -> s"$dir/out", "checkpoint root" -> s"$dir/ckpt",
+      "resharded" -> roots.toMap.apply("resharded (.shards.json)"),
+      "empty result" -> s"$dir/empty", "medsSink" -> s"$dir/sink/data")
+    written.foreach { case (layout, root) =>
+      val files = chunkCodecs(root)
+      assert(files.exists(_._2.nonEmpty), s"$layout: no column chunk under $root")
+      files.foreach { case (f, codecs) =>
+        assert(codecs.forall(_ == "ZSTD"), s"$layout $f: ${codecs.distinct.mkString(", ")}")
+      }
+    }
+  }
+
+  test("a fitted codes table is written as one file, with no Spark job") {
+    val codes = AggregateCodeMetadata(fixture.data, fixture.codes)
+    val root = tmp("fitted")
+    val jobs = Collector.measure(spark)(
+      MedsIO.write(MedsData(fixture.data, codes, empty(splitsSchema)), root))._2.jobs
+    // the jobs are the data write's: one SQL execution
+    assert(jobs.nonEmpty && jobs.map(_.execution).distinct.size == 1 &&
+      jobs.head.execution.nonEmpty, jobs.mkString("\n"))
+    val file = Paths.get(root, "metadata", "codes.parquet")
+    assert(Files.isRegularFile(file))
+    val back = spark.read.parquet(file.toString)
+    assert(back.schema.map(f => f.name -> f.dataType) == codes.schema.map(f => f.name -> f.dataType))
+    assert(rows(back) == rows(codes))
+    val main = Paths.get(roots.toMap.apply("Main.run output"), "metadata", "codes.parquet")
+    assert(Files.isRegularFile(main))
   }
 }
