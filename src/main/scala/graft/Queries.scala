@@ -983,7 +983,7 @@ object Queries {
       |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
 
   // =====================================================================
-  // Training-data ops: dedup / similarity / text / multimodal
+  // Training-data ops: dedup / similarity / text
   // =====================================================================
 
   private val dedupExact: Gate = Gate(
@@ -3594,555 +3594,6 @@ object Queries {
       |SELECT doc_id, lang FROM c WHERE pre < 2000
       |ORDER BY doc_id""".stripMargin))
 
-  private def media(s: SparkSession, dir: String): DataFrame =
-    Multimodal.asMediaTable(table(s, dir, "documents"), "doc_id", "text")
-
-  private val multimodalMeta: Gate = Gate(
-    (s, dir) => Multimodal.payloadMetadata(media(s, dir))
-      .select(col("media_id"), col("mime_type"),
-        col("n_bytes").cast(LongType).as("n_bytes"), col("sha256"))
-      .orderBy("media_id"),
-    Some("""SELECT doc_id AS media_id, 'text/plain' AS mime_type,
-      | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-      | sha256(text) AS sha256
-      |FROM documents ORDER BY media_id""".stripMargin))
-
-  /** The documents scan spread to the session's parallelism BEFORE payload
-    * synthesis — the synthetic-media gates' input. The codec work downstream
-    * is per-ROW CPU (a real decoder), but a toy corpus arrives as ONE input
-    * split, so synth+decode would run single-threaded while 31 cores idle
-    * (TfIdfProbe r17: one 1.0 s-CPU task for 2000 frames). The spread MUST
-    * sit below the payload projection: only doc_id crosses the exchange and
-    * the blobs are synthesized after it, in parallel. Repartitioning the
-    * synthesized frame instead measured 9-89 s/run at x10 (one task
-    * materializing + sorting + shuffling every blob — the guide §8 "never
-    * move the heavy bytes" lesson).
-    *
-    * Fires ONLY for the degenerate single-split input (§2.5's "one huge
-    * unsplittable file"): once the scan has ≥2 splits, Spark's own split
-    * sizing already scales parallelism with the data, and an A/B at x10
-    * (5 splits, Bench methodology min-of-4) measured the forced 32-way
-    * exchange SLOWER than the natural 5-way scan (frames 1.60→3.46 s,
-    * audio 2.71→3.39 s — 32 concurrent decoders contend on allocation),
-    * while at sf0.1's single split the same spread wins 1.85→0.76 s.
-    *
-    * Used ONLY by the two gates whose per-row decode is genuinely
-    * expensive — multi-frame GIF sampling and the AVI walk + per-frame
-    * JPEG decode. The other six codec gates' decoders are microseconds/row
-    * and the exchange is pure overhead there (VERDICT r17 #3; r18 A/B at
-    * sf0.1, min-of-4, spread vs not: frames 1.05→0.74, video 1.21→0.70
-    * WITH the spread, but audio 0.55→0.92, adpcm 0.38→0.91,
-    * ulaw 0.49→0.87, png 0.39→0.70, jpeg 0.56→0.71, resize 0.34→0.68
-    * AGAINST it — those use [[docIds]]).
-    */
-  private def spreadDocs(s: SparkSession, dir: String): DataFrame = {
-    val d = docIds(s, dir)
-    val target = s.sparkContext.defaultParallelism
-    if (target > 1 && d.rdd.getNumPartitions == 1) d.repartition(target) else d
-  }
-
-  /** The unspread doc_id scan — input of the codec gates whose decode is
-    * too cheap to amortize a spread exchange (see [[spreadDocs]]).
-    */
-  private def docIds(s: SparkSession, dir: String): DataFrame =
-    table(s, dir, "documents").select("doc_id")
-
-  /** REAL-PNG media table: one [[graft.plans.PngSynth]] payload per document,
-    * dimensions derived from `doc_id` (w in 4..11, h in 3..9) so every gate
-    * row exercises a different geometry. The payload is a spec-complete
-    * truecolor PNG whose pixels follow the documented `(id, x, y)` formula —
-    * the oracle never sees the bytes, it recomputes the decoded values
-    * arithmetically.
-    */
-  private def pngMedia(s: SparkSession, dir: String): DataFrame =
-    docIds(s, dir).select(
-      col("doc_id").cast(LongType).as("media_id"),
-      graft.plans.PngSynth.png(col("doc_id").cast(LongType),
-        (col("doc_id") % 8 + 4).cast("int"),
-        (col("doc_id") % 7 + 3).cast("int")).as("payload"),
-      lit("image/png").as("mime_type"))
-
-  /** The REAL `javax.imageio` decoder over real PNG payloads; the oracle
-    * replays the synth pixel formula (sum of all three channels over the
-    * raster, integer mean) per row via a lateral `range(0, w·h)`.
-    */
-  private val multimodalDecode: Gate = Gate(
-    (s, dir) => Multimodal.decodeBatched(pngMedia(s, dir))
-      .select(col("media_id"), col("format"), col("width"), col("height"),
-        col("mean_intensity"))
-      .orderBy("media_id"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 8 + 4 AS w, doc_id % 7 + 3 AS h,
-      |         doc_id % 251 AS b
-      |  FROM documents),
-      |px AS (
-      |  SELECT d.media_id, d.w, d.h,
-      |    sum((d.b + r.s) % 256 + (d.b + 2*r.s + 7) % 256
-      |        + (d.b + 3*r.s + 13) % 256) AS total
-      |  FROM dims d, LATERAL (SELECT unnest(range(0, d.w*d.h)) AS s) r
-      |  GROUP BY 1, 2, 3)
-      |SELECT media_id, 'png' AS format, CAST(w AS BIGINT) AS width,
-      |  CAST(h AS BIGINT) AS height,
-      |  CAST(total // (3*w*h) AS BIGINT) AS mean_intensity
-      |FROM px ORDER BY media_id""".stripMargin))
-
-  /** The REAL JDK JPEG decoder over real baseline-JPEG payloads — the lossy
-    * member of the codec matrix, made hash-checkable by
-    * [[graft.plans.JpegSynth]]'s DC-only construction (flat 8×8 blocks with
-    * q00 = 8 decode bit-exactly to `g_k = (b + 23k) % 256` gray; see the
-    * expression doc for the exactness argument). Geometry varies per row
-    * (1..5 × 1..3 blocks); the oracle replays block means arithmetically:
-    * mean_intensity = floor(Σ 192·g_k ∕ 192·nb) = Σ g_k ∕ nb (integer).
-    */
-  private val multimodalDecodeJpeg: Gate = Gate(
-    (s, dir) => Multimodal.decodeBatched(
-      docIds(s, dir).select(
-        col("doc_id").cast(LongType).as("media_id"),
-        graft.plans.JpegSynth.jpeg(col("doc_id").cast(LongType),
-          (col("doc_id") % 5 + 1).cast("int"),
-          (col("doc_id") % 3 + 1).cast("int")).as("payload")))
-      .select(col("media_id"), col("format"), col("width"), col("height"),
-        col("mean_intensity"))
-      .orderBy("media_id"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 5 + 1 AS wb, doc_id % 3 + 1 AS hb,
-      |         doc_id % 251 AS b
-      |  FROM documents),
-      |px AS (
-      |  SELECT d.media_id, d.wb, d.hb,
-      |    sum((d.b + 23*r.k) % 256) AS total
-      |  FROM dims d, LATERAL (SELECT unnest(range(0, d.wb*d.hb)) AS k) r
-      |  GROUP BY 1, 2, 3)
-      |SELECT media_id, 'jpeg' AS format, CAST(wb*8 AS BIGINT) AS width,
-      |  CAST(hb*8 AS BIGINT) AS height,
-      |  CAST(total // (wb*hb) AS BIGINT) AS mean_intensity
-      |FROM px ORDER BY media_id""".stripMargin))
-
-  /** The codec matrix's VIDEO pixel gate: real MJPEG-in-AVI payloads
-    * ([[graft.plans.AviSynth]] — public RIFF/AVI container around
-    * [[graft.plans.JpegSynth]] DC-only frames) through
-    * `Multimodal.videoFrames`'s container walk + the REAL JDK JPEG
-    * decoder. Geometry and frame count vary per row (1..4 × 1..2 blocks,
-    * 2..4 frames); frame `f`'s block `k` decodes to
-    * `((doc_id + 89f) % 251 + 23k) % 256` gray (the JpegSynth exactness
-    * argument, shifted per frame), which the oracle replays
-    * arithmetically per (doc, frame, block).
-    */
-  private val videoFramesMjpeg: Gate = Gate(
-    (s, dir) => Multimodal.videoFrames(
-      spreadDocs(s, dir).select(
-        col("doc_id").cast(LongType).as("media_id"),
-        graft.plans.AviSynth.avi(col("doc_id").cast(LongType),
-          (col("doc_id") % 4 + 1).cast("int"),
-          (col("doc_id") % 2 + 1).cast("int"),
-          (col("doc_id") % 3 + 2).cast("int")).as("payload")))
-      .orderBy("media_id", "frame_idx"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 4 + 1 AS wb, doc_id % 2 + 1 AS hb,
-      |         doc_id % 3 + 2 AS nf
-      |  FROM documents),
-      |fr AS (
-      |  SELECT d.*, f.f FROM dims d,
-      |    LATERAL (SELECT unnest(range(0, d.nf)) AS f) f),
-      |px AS (
-      |  SELECT fr.media_id, fr.f, fr.wb, fr.hb,
-      |    sum(((fr.media_id + 89*fr.f) % 251 + 23*r.k) % 256) AS total
-      |  FROM fr, LATERAL (SELECT unnest(range(0, fr.wb*fr.hb)) AS k) r
-      |  GROUP BY 1, 2, 3, 4)
-      |SELECT media_id, CAST(f AS BIGINT) AS frame_idx, 'avi' AS container,
-      |  'jpeg' AS format, CAST(wb*8 AS BIGINT) AS width,
-      |  CAST(hb*8 AS BIGINT) AS height,
-      |  CAST(total // (wb*hb) AS BIGINT) AS mean_intensity
-      |FROM px ORDER BY media_id, frame_idx""".stripMargin))
-
-  /** Decode + FIXED-POINT bilinear resize to 8×8 over real PNG payloads;
-    * because every weight is 16.16 integer arithmetic, the oracle replays
-    * the interpolation exactly — `fy = ty·(h−1)·65536 // 7`, the four-tap
-    * blend, the `+2³¹ >> 32` rounding — as BIGINT CASE arithmetic over the
-    * 8·8·3 target-sample grid, then hashes the same lowercase-hex raster
-    * string. Any disagreement between the JDK decoder, the Scala resampler,
-    * and the SQL replay breaks the digest.
-    */
-  private val multimodalResize: Gate = Gate(
-    (s, dir) => Multimodal.resizeImages(pngMedia(s, dir), targetW = 8, targetH = 8)
-      .orderBy("media_id"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 8 + 4 AS w, doc_id % 7 + 3 AS h,
-      |         doc_id % 251 AS b
-      |  FROM documents),
-      |grid AS (
-      |  SELECT d.*, t1.range AS ty, t2.range AS tx, c.range AS ch
-      |  FROM dims d, range(0,8) t1, range(0,8) t2, range(0,3) c),
-      |fp AS (
-      |  SELECT *, ty*(h-1)*65536 // 7 AS fy, tx*(w-1)*65536 // 7 AS fx FROM grid),
-      |co AS (
-      |  SELECT *, fy // 65536 AS y0, fy % 65536 AS dy,
-      |         least(fy // 65536 + 1, h-1) AS y1,
-      |         fx // 65536 AS x0, fx % 65536 AS dx,
-      |         least(fx // 65536 + 1, w-1) AS x1
-      |  FROM fp),
-      |pix AS (
-      |  SELECT media_id, w, h, ty, tx, ch, dy, dx,
-      |    CASE ch WHEN 0 THEN (b + (y0*w+x0)) % 256 WHEN 1 THEN (b + 2*(y0*w+x0) + 7) % 256 ELSE (b + 3*(y0*w+x0) + 13) % 256 END AS p00,
-      |    CASE ch WHEN 0 THEN (b + (y0*w+x1)) % 256 WHEN 1 THEN (b + 2*(y0*w+x1) + 7) % 256 ELSE (b + 3*(y0*w+x1) + 13) % 256 END AS p01,
-      |    CASE ch WHEN 0 THEN (b + (y1*w+x0)) % 256 WHEN 1 THEN (b + 2*(y1*w+x0) + 7) % 256 ELSE (b + 3*(y1*w+x0) + 13) % 256 END AS p10,
-      |    CASE ch WHEN 0 THEN (b + (y1*w+x1)) % 256 WHEN 1 THEN (b + 2*(y1*w+x1) + 7) % 256 ELSE (b + 3*(y1*w+x1) + 13) % 256 END AS p11
-      |  FROM co),
-      |samp AS (
-      |  SELECT media_id, w, h, ty, tx, ch,
-      |    ((p00*(65536-dx) + p01*dx) * (65536-dy)
-      |     + (p10*(65536-dx) + p11*dx) * dy + 2147483648) // 4294967296 AS v
-      |  FROM pix),
-      |hx AS (
-      |  SELECT media_id, any_value(w) AS w, any_value(h) AS h,
-      |    string_agg(printf('%02x', v), '' ORDER BY ty, tx, ch) AS hexstr
-      |  FROM samp GROUP BY media_id)
-      |SELECT media_id, CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
-      |  round(w/8.0, 4) AS scale_x, round(h/8.0, 4) AS scale_y,
-      |  sha256(hexstr) AS resized_digest
-      |FROM hx ORDER BY media_id""".stripMargin))
-
-  /** REAL multi-frame sampling: [[graft.plans.GifSynth]] animated-GIF
-    * payloads (w in 3..8, h in 3..7, 2..5 frames per doc) through the JDK
-    * GIF reader's `getNumImages`/`read(idx)` random access; the oracle
-    * replays the sampled-frame formula `(b + s + 17·idx) % 256` — index
-    * selection, per-frame mean, and the red-channel hex digest — entirely
-    * arithmetically.
-    */
-  private val multimodalFrames: Gate = Gate(
-    (s, dir) => Multimodal.sampleFrames(
-      spreadDocs(s, dir).select(
-        col("doc_id").cast(LongType).as("media_id"),
-        graft.plans.GifSynth.gif(col("doc_id").cast(LongType),
-          (col("doc_id") % 6 + 3).cast("int"),
-          (col("doc_id") % 5 + 3).cast("int"),
-          (col("doc_id") % 4 + 2).cast("int")).as("payload")),
-      n = 4)
-      .orderBy("media_id", "sample_ord"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 6 + 3 AS w, doc_id % 5 + 3 AS h,
-      |         doc_id % 4 + 2 AS fcnt, doc_id % 251 AS b
-      |  FROM documents),
-      |samp AS (
-      |  SELECT d.*, j.range AS j, (j.range * (d.fcnt-1)) // 3 AS idx
-      |  FROM dims d, range(0,4) j),
-      |px AS (
-      |  SELECT sp.media_id, sp.j, sp.idx, sp.fcnt, sp.w, sp.h,
-      |    sum((sp.b + r.s + 17*sp.idx) % 256) AS total,
-      |    string_agg(printf('%02x', (sp.b + r.s + 17*sp.idx) % 256), ''
-      |      ORDER BY r.s) AS hexstr
-      |  FROM samp sp, LATERAL (SELECT unnest(range(0, sp.w*sp.h)) AS s) r
-      |  GROUP BY 1, 2, 3, 4, 5, 6)
-      |SELECT media_id, CAST(j AS INT) AS sample_ord,
-      |  CAST(idx AS BIGINT) AS frame_idx, CAST(fcnt AS BIGINT) AS n_frames,
-      |  CAST(total // (w*h) AS BIGINT) AS mean_intensity,
-      |  sha256(hexstr) AS frame_digest
-      |FROM px ORDER BY media_id, sample_ord""".stripMargin))
-
-  /** REAL audio sample decode: [[graft.plans.WavSynth]] RIFF/WAVE PCM
-    * payloads (100..499 samples, 8/12/16 kHz by doc_id) through the JDK's
-    * `javax.sound.sampled` WAVE reader; every 9th payload is truncated
-    * after "RIFF" and must yield a null-fielded row, not a scan failure.
-    * The oracle replays the sample formula `v16 = (b + 37·i) mod 65536`
-    * (AudioExpressions.scala) — integer duration, mean/peak |sample|, and
-    * the %04x bit-pattern digest — entirely arithmetically.
-    */
-  private val audioDecode: Gate = Gate(
-    (s, dir) => Multimodal.decodeAudio(
-      docIds(s, dir).select(
-        col("doc_id").cast(LongType).as("media_id"),
-        when(col("doc_id") % 9 === 0, unhex(lit("52494646")))
-          .otherwise(graft.plans.WavSynth.wav(col("doc_id").cast(LongType),
-            (col("doc_id") % 400 + 100).cast("int"),
-            (col("doc_id") % 3 * 4000 + 8000).cast("int"))).as("payload")))
-      .orderBy("media_id"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 400 + 100 AS n,
-      |         doc_id % 3 * 4000 + 8000 AS rate, doc_id % 251 AS b,
-      |         doc_id % 9 = 0 AS corrupt
-      |  FROM documents),
-      |sm AS (
-      |  SELECT d.media_id, sp.i, (d.b + 37 * sp.i) % 65536 AS v16
-      |  FROM dims d, LATERAL (SELECT unnest(range(0, d.n)) AS i) sp
-      |  WHERE NOT d.corrupt),
-      |ag AS (
-      |  SELECT media_id,
-      |    CAST(sum(CASE WHEN v16 >= 32768 THEN 65536 - v16 ELSE v16 END) AS BIGINT) AS total_abs,
-      |    CAST(max(CASE WHEN v16 >= 32768 THEN 65536 - v16 ELSE v16 END) AS BIGINT) AS peak_abs,
-      |    string_agg(printf('%04x', v16), '' ORDER BY i) AS hexstr
-      |  FROM sm GROUP BY 1)
-      |SELECT d.media_id,
-      |  CASE WHEN d.corrupt THEN NULL ELSE 'wave' END AS format,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(d.rate AS BIGINT) END AS sample_rate,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(1 AS BIGINT) END AS channels,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(16 AS BIGINT) END AS bits,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(d.n AS BIGINT) END AS n_frames,
-      |  CASE WHEN d.corrupt THEN NULL
-      |       ELSE CAST(d.n * 1000000 // d.rate AS BIGINT) END AS duration_us,
-      |  CAST(a.total_abs // d.n AS BIGINT) AS mean_abs,
-      |  a.peak_abs,
-      |  sha256(a.hexstr) AS pcm_digest
-      |FROM dims d LEFT JOIN ag a USING (media_id)
-      |ORDER BY d.media_id""".stripMargin))
-
-  /** REAL non-PCM audio decode: [[graft.plans.AuSynth]] Sun/NeXT `.snd`
-    * payloads carrying 8-bit G.711 μ-law (80..379 samples at 8 kHz — the
-    * telephony container/encoding pair) through the JDK's AU reader, with
-    * the engine expanding each byte via the exact public g711 integer
-    * arithmetic; every 9th payload is truncated after the magic and must
-    * yield a null-fielded row. The oracle replays byte formula AND
-    * expansion — `v = 255−u; t = ((v%16)·8+132)·2^((v∕16)%8);
-    * s = ±(t−132)` — duration, mean/peak |sample|, and the %04x
-    * bit-pattern digest, entirely arithmetically.
-    */
-  private val audioDecodeUlaw: Gate = Gate(
-    (s, dir) => Multimodal.decodeAudio(
-      docIds(s, dir).select(
-        col("doc_id").cast(LongType).as("media_id"),
-        when(col("doc_id") % 9 === 0, unhex(lit("2e736e64")))
-          .otherwise(graft.plans.AuSynth.au(col("doc_id").cast(LongType),
-            (col("doc_id") % 300 + 80).cast("int"),
-            lit(8000))).as("payload")))
-      .orderBy("media_id"),
-    Some("""WITH dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 300 + 80 AS n,
-      |         doc_id % 251 AS b, doc_id % 9 = 0 AS corrupt
-      |  FROM documents),
-      |sm AS (
-      |  SELECT d.media_id, sp.i, 255 - ((d.b + 11 * sp.i) % 256) AS v
-      |  FROM dims d, LATERAL (SELECT unnest(range(0, d.n)) AS i) sp
-      |  WHERE NOT d.corrupt),
-      |ex AS (
-      |  SELECT media_id, i,
-      |    CASE WHEN v >= 128
-      |      THEN 132 - (((v % 16) * 8 + 132) * (1 << ((v // 16) % 8)))
-      |      ELSE (((v % 16) * 8 + 132) * (1 << ((v // 16) % 8))) - 132
-      |    END AS sv
-      |  FROM sm),
-      |ag AS (
-      |  SELECT media_id,
-      |    CAST(sum(abs(sv)) AS BIGINT) AS total_abs,
-      |    CAST(max(abs(sv)) AS BIGINT) AS peak_abs,
-      |    string_agg(printf('%04x',
-      |      CASE WHEN sv < 0 THEN sv + 65536 ELSE sv END), ''
-      |      ORDER BY i) AS hexstr
-      |  FROM ex GROUP BY 1)
-      |SELECT d.media_id,
-      |  CASE WHEN d.corrupt THEN NULL ELSE 'au' END AS format,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(8000 AS BIGINT) END AS sample_rate,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(1 AS BIGINT) END AS channels,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(8 AS BIGINT) END AS bits,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(d.n AS BIGINT) END AS n_frames,
-      |  CASE WHEN d.corrupt THEN NULL
-      |       ELSE CAST(d.n * 1000000 // 8000 AS BIGINT) END AS duration_us,
-      |  CAST(a.total_abs // d.n AS BIGINT) AS mean_abs,
-      |  a.peak_abs,
-      |  sha256(a.hexstr) AS pcm_digest
-      |FROM dims d LEFT JOIN ag a USING (media_id)
-      |ORDER BY d.media_id""".stripMargin))
-
-  /** REAL compressed-audio decode: [[graft.plans.AdpcmSynth]] IMA/DVI ADPCM
-    * WAVE payloads (fmt tag 0x11, 100..499 samples, 8/12/16 kHz by doc_id)
-    * through the ENGINE'S OWN integer predictor decode (the JDK ships no
-    * ADPCM codec); every 9th payload truncated after "RIFF" → null row.
-    * The oracle replays the predictor RECURRENCE itself — per block
-    * (header predictor 0 / step index 0 = sample 0, then 16 nibbles
-    * low-first, nib_g = (b + 7g) mod 16) as a 17-deep recursive CTE over
-    * the public step/index tables with the exact clamp arithmetic — then
-    * the stats/digest conventions of the other audio gates. Any drift in a
-    * table entry, a clamp bound, nibble order, or the block layout breaks
-    * the hash.
-    */
-  private val audioDecodeAdpcm: Gate = Gate(
-    (s, dir) => Multimodal.decodeAudio(
-      docIds(s, dir).select(
-        col("doc_id").cast(LongType).as("media_id"),
-        when(col("doc_id") % 9 === 0, unhex(lit("52494646")))
-          .otherwise(graft.plans.AdpcmSynth.adpcm(col("doc_id").cast(LongType),
-            (col("doc_id") % 400 + 100).cast("int"),
-            (col("doc_id") % 3 * 4000 + 8000).cast("int"))).as("payload")))
-      .orderBy("media_id"),
-    Some {
-      val stepValues = ImaStepTable.zipWithIndex
-        .map { case (v, i) => s"($i,$v)" }.mkString(", ")
-      s"""WITH RECURSIVE dims AS (
-      |  SELECT doc_id AS media_id, doc_id % 400 + 100 AS n,
-      |         doc_id % 3 * 4000 + 8000 AS rate, doc_id % 251 AS b,
-      |         doc_id % 9 = 0 AS corrupt
-      |  FROM documents),
-      |steps(si, sv) AS (VALUES $stepValues),
-      |blocks AS (
-      |  SELECT d.media_id, d.b, d.n, bp.blk
-      |  FROM dims d, LATERAL (SELECT unnest(range(0, (d.n + 16) // 17)) AS blk) bp
-      |  WHERE NOT d.corrupt),
-      |st AS (
-      |  SELECT media_id, b, n, blk, CAST(0 AS BIGINT) AS k,
-      |         CAST(0 AS BIGINT) AS pred, CAST(0 AS BIGINT) AS idx
-      |  FROM blocks
-      |  UNION ALL
-      |  SELECT media_id, b, n, blk, k + 1,
-      |    greatest(-32768, least(32767,
-      |      pred + (CASE WHEN (nib & 8) != 0 THEN -d ELSE d END))),
-      |    greatest(0, least(88,
-      |      idx + (CASE WHEN (nib % 8) < 4 THEN -1 ELSE 2 * ((nib % 8) - 3) END)))
-      |  FROM (
-      |    SELECT st.media_id, st.b, st.n, st.blk, st.k, st.pred, st.idx,
-      |      ((st.b + 7 * (st.blk * 16 + st.k)) % 16) AS nib,
-      |      (s.sv // 8)
-      |       + (CASE WHEN (((st.b + 7 * (st.blk * 16 + st.k)) % 16) & 4) != 0
-      |           THEN s.sv ELSE 0 END)
-      |       + (CASE WHEN (((st.b + 7 * (st.blk * 16 + st.k)) % 16) & 2) != 0
-      |           THEN s.sv // 2 ELSE 0 END)
-      |       + (CASE WHEN (((st.b + 7 * (st.blk * 16 + st.k)) % 16) & 1) != 0
-      |           THEN s.sv // 4 ELSE 0 END) AS d
-      |    FROM st JOIN steps s ON s.si = st.idx
-      |    WHERE st.k < 16 AND st.blk * 17 + st.k + 1 < st.n)),
-      |ag AS (
-      |  SELECT media_id,
-      |    CAST(sum(abs(pred)) AS BIGINT) AS total_abs,
-      |    CAST(max(abs(pred)) AS BIGINT) AS peak_abs,
-      |    string_agg(printf('%04x',
-      |      CASE WHEN pred < 0 THEN pred + 65536 ELSE pred END), ''
-      |      ORDER BY blk * 17 + k) AS hexstr
-      |  FROM st GROUP BY 1)
-      |SELECT d.media_id,
-      |  CASE WHEN d.corrupt THEN NULL ELSE 'wave' END AS format,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(d.rate AS BIGINT) END AS sample_rate,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(1 AS BIGINT) END AS channels,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(4 AS BIGINT) END AS bits,
-      |  CASE WHEN d.corrupt THEN NULL ELSE CAST(d.n AS BIGINT) END AS n_frames,
-      |  CASE WHEN d.corrupt THEN NULL
-      |       ELSE CAST(d.n * 1000000 // d.rate AS BIGINT) END AS duration_us,
-      |  CAST(a.total_abs // d.n AS BIGINT) AS mean_abs,
-      |  a.peak_abs,
-      |  sha256(a.hexstr) AS pcm_digest
-      |FROM dims d LEFT JOIN ag a USING (media_id)
-      |ORDER BY d.media_id""".stripMargin
-    })
-
-  /** The public IMA step table — shared (as SQL VALUES) by the ADPCM
-    * oracle; the engine side lives in `ops/Multimodal.scala`
-    * (ImaAdpcmTables) and a spec pins the two against the reference
-    * algorithm's published values.
-    */
-  private lazy val ImaStepTable: Seq[Int] = Seq(
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484,
-    7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818,
-    18500, 20350, 22385, 24623, 27086, 29794, 32767)
-
-  /** Synthetic-but-structurally-real MP4 round trip: BUILD a spec-shaped
-    * ISO-BMFF box tree (ftyp + moov(mvhd + trak(tkhd))) per document from
-    * doc_id-derived timing/dimension values using pure binary expressions,
-    * then PARSE it back with the native [[graft.plans.Mp4Metadata]] box
-    * walk. The oracle recomputes the same fields arithmetically — any
-    * construction/parser disagreement (offset, endianness, fixed-point,
-    * box-size bookkeeping) breaks the hash. Every 7th payload is truncated
-    * mid-moov: the parser must yield null, not a partial struct or a crash.
-    */
-  /** MP3 metadata: payloads synthesized from doc_id arithmetic exercise the
-    * ID3v2-skip path (default), the bare-frame path (%5==1), the false-sync
-    * resync path (%5==2 — a sync-pattern prefix with a bad bitrate index
-    * must be skipped), and corrupt truncation (%9==0 → null row). The
-    * oracle replays the frame-header table lookups as CASE arithmetic.
-    */
-  private val mp3Meta: Gate = Gate(
-    (s, dir) => {
-      val bi = (col("doc_id") % 14) + 1 // bitrate index 1..14 (MPEG1 L3)
-      val si = col("doc_id") % 3        // sample-rate index
-      val f = (col("doc_id") % 64) * 4  // filler bytes after the header
-      val tagLen = col("doc_id") % 100  // ID3v2 tag body (syncsafe 1-byte)
-      val header = concat(unhex(lit("FFFB")),
-        unhex(lpad(hex(bi * 16 + si * 4), 2, "0")), unhex(lit("C0")))
-      val frames = concat(header, unhex(repeat(lit("00"), f.cast("int"))))
-      val id3 = concat(unhex(lit("49443304000000" + "0000")),
-        unhex(lpad(hex(tagLen), 2, "0")),
-        unhex(repeat(lit("00"), tagLen.cast("int"))))
-      val payload = when(col("doc_id") % 9 === 0, unhex(lit("494433040000")))
-        .when(col("doc_id") % 5 === 1, frames)
-        .when(col("doc_id") % 5 === 2, concat(unhex(lit("FFE2F000")), frames))
-        .otherwise(concat(id3, frames))
-      val a = Multimodal.mp3Metadata(payload)
-      table(s, dir, "documents").select(col("doc_id").as("media_id"),
-          a.getField("layer").as("layer"),
-          a.getField("bitrate_kbps").as("bitrate_kbps"),
-          a.getField("sample_rate").as("sample_rate"),
-          a.getField("audio_bytes").as("audio_bytes"),
-          round(a.getField("duration_s"), 6).as("duration_s"))
-        .orderBy("media_id")
-    },
-    Some("""WITH m AS (SELECT doc_id,
-      | CASE (doc_id % 14) + 1
-      |  WHEN 1 THEN 32 WHEN 2 THEN 40 WHEN 3 THEN 48 WHEN 4 THEN 56
-      |  WHEN 5 THEN 64 WHEN 6 THEN 80 WHEN 7 THEN 96 WHEN 8 THEN 112
-      |  WHEN 9 THEN 128 WHEN 10 THEN 160 WHEN 11 THEN 192 WHEN 12 THEN 224
-      |  WHEN 13 THEN 256 WHEN 14 THEN 320 END AS kbps,
-      | 4 + (doc_id % 64) * 4 AS abytes FROM documents)
-      |SELECT doc_id AS media_id,
-      | CASE WHEN doc_id % 9 = 0 THEN NULL ELSE CAST(3 AS BIGINT) END AS layer,
-      | CASE WHEN doc_id % 9 = 0 THEN NULL ELSE CAST(kbps AS BIGINT) END AS bitrate_kbps,
-      | CASE WHEN doc_id % 9 = 0 THEN NULL ELSE CAST(CASE doc_id % 3
-      |  WHEN 0 THEN 44100 WHEN 1 THEN 48000 WHEN 2 THEN 32000 END AS BIGINT)
-      |  END AS sample_rate,
-      | CASE WHEN doc_id % 9 = 0 THEN NULL ELSE CAST(abytes AS BIGINT) END AS audio_bytes,
-      | CASE WHEN doc_id % 9 = 0 THEN NULL
-      |  ELSE round(abytes * 8.0 / (kbps * 1000.0), 6) END AS duration_s
-      |FROM m ORDER BY media_id""".stripMargin))
-
-  private val videoMeta: Gate = Gate(
-    (s, dir) => {
-      def be32(c: Column): Column = unhex(lpad(hex(c.cast(LongType)), 8, "0"))
-      val matrixHex = // 3x3 unity transform, 16.16/2.30 fixed point
-        "00010000" + "00000000" * 3 + "00010000" + "00000000" * 3 + "40000000"
-      val ts = lit(600L) + (col("doc_id") % 5) * 100 // movie timescale
-      val dur = ts * ((col("doc_id") % 60) + 1) // whole seconds by construction
-      val w = ((col("doc_id") % 81) + 40) * 16
-      val h = ((col("doc_id") % 46) + 22) * 16
-      val full = concat(
-        // ftyp(20): major brand isom, minor 0x200, one compatible brand
-        unhex(lit("00000014" + "66747970" + "69736F6D" + "00000200" + "69736F6D")),
-        // moov(216 = 8 + mvhd 108 + trak 100)
-        unhex(lit("000000D8" + "6D6F6F76")),
-        // mvhd v0: ver/flags, creation, modification, then timescale+duration
-        unhex(lit("0000006C" + "6D766864" + "00000000" * 3)), be32(ts), be32(dur),
-        // rate 1.0, volume 1.0+reserved, reserved(8), matrix, predefined(24), next track id
-        unhex(lit("00010000" + "01000000" + "00000000" * 2 + matrixHex +
-          "00000000" * 6 + "00000002")),
-        unhex(lit("00000064" + "7472616B")),
-        // tkhd v0 flags=7: creation, modification, track id 1, reserved, duration
-        unhex(lit("0000005C" + "746B6864" + "00000007" + "00000000" * 2 +
-          "00000001" + "00000000")), be32(dur),
-        // reserved(8), layer/group/volume/reserved(8), matrix, then 16.16 dims
-        unhex(lit("00000000" * 4 + matrixHex)), be32(w * 65536), be32(h * 65536))
-      val payload = when(col("doc_id") % 7 === 0, substring(full, 1, 40))
-        .otherwise(full)
-      val v = Multimodal.videoMetadata(payload)
-      table(s, dir, "documents").select(col("doc_id").as("media_id"),
-          v.getField("format").as("video_format"),
-          v.getField("timescale").as("timescale"),
-          v.getField("duration").as("duration"),
-          v.getField("width").as("width"),
-          v.getField("height").as("height"),
-          round(v.getField("duration_s"), 4).as("duration_s"))
-        .orderBy("media_id")
-    },
-    Some("""SELECT doc_id AS media_id,
-      | CASE WHEN doc_id % 7 = 0 THEN NULL ELSE 'mp4' END AS video_format,
-      | CASE WHEN doc_id % 7 = 0 THEN NULL
-      |  ELSE CAST(600 + (doc_id % 5) * 100 AS BIGINT) END AS timescale,
-      | CASE WHEN doc_id % 7 = 0 THEN NULL
-      |  ELSE CAST((600 + (doc_id % 5) * 100) * (doc_id % 60 + 1) AS BIGINT) END AS duration,
-      | CASE WHEN doc_id % 7 = 0 THEN NULL
-      |  ELSE CAST((doc_id % 81 + 40) * 16 AS BIGINT) END AS width,
-      | CASE WHEN doc_id % 7 = 0 THEN NULL
-      |  ELSE CAST((doc_id % 46 + 22) * 16 AS BIGINT) END AS height,
-      | CASE WHEN doc_id % 7 = 0 THEN NULL
-      |  ELSE round(CAST(doc_id % 60 + 1 AS DOUBLE), 4) END AS duration_s
-      |FROM documents ORDER BY media_id""".stripMargin))
-
   // =====================================================================
 
   val gates: Seq[(String, Gate)] = Seq(
@@ -4241,17 +3692,6 @@ object Queries {
     "token_budget_cap" -> tokenBudgetCap,
     "resample_mix" -> resampleMix,
     "temperature_mix" -> temperatureMixGate,
-    "multimodal_meta" -> multimodalMeta,
-    "multimodal_decode" -> multimodalDecode,
-    "multimodal_decode_jpeg" -> multimodalDecodeJpeg,
-    "video_frames_mjpeg" -> videoFramesMjpeg,
-    "multimodal_resize" -> multimodalResize,
-    "multimodal_frames" -> multimodalFrames,
-    "audio_decode" -> audioDecode,
-    "audio_decode_ulaw" -> audioDecodeUlaw,
-    "audio_decode_adpcm" -> audioDecodeAdpcm,
-    "video_metadata" -> videoMeta,
-    "mp3_metadata" -> mp3Meta,
     "bpe_pair_counts" -> bpePairCounts,
     "bpe_tokens" -> bpeTokens,
     "corpus_overlap" -> corpusOverlap,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dsl.Cfg
 import graft.operators.Pipeline
-import graft.ops.{Decontaminate, Dedup, Multimodal, Packing, Pq, Redaction, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, Packing, Pq, Redaction, Sampling, Similarity, TextAnalysis}
 
 /** Built-in training-data-hygiene stages, registered through the SAME
   * extension point third-party packages use ([[PipelineConfig.register]],
@@ -19,11 +19,10 @@ import graft.ops.{Decontaminate, Dedup, Multimodal, Packing, Pq, Redaction, Samp
   * threads as `data` — dedup (exact/fingerprint/minhash/ngram/simhash/
   * embedding), text signals (quality/lang-id/tokens/winnow), similarity
   * (knn_join/sim_topk), sampling (sample/sample_split/stratified_cap),
-  * sessionization, multimodal plumbing (as_media/media_*), and a generic
-  * `filter_rows` predicate stage. Column names are configurable per stage
-  * (`id_col`, `text_col`, ...) with documents-table defaults
-  * (`doc_id`, `text`) and embeddings-table defaults (`vec_id`,
-  * `embedding`, `label`) for the vector stages.
+  * sessionization, and a generic `filter_rows` predicate stage. Column
+  * names are configurable per stage (`id_col`, `text_col`, ...) with
+  * documents-table defaults (`doc_id`, `text`) and embeddings-table
+  * defaults (`vec_id`, `embedding`, `label`) for the vector stages.
   *
   * Dedup-stage semantics: the stage RETURNS THE DEDUPLICATED DATA — rows
   * whose id survives as its group's representative (minimum id per exact
@@ -629,7 +628,7 @@ object OpStages {
       })
     }
 
-    // ---- similarity / sketch / multimodal stages -------------------------
+    // ---- similarity / sketch stages ------------------------------------
     // (embedding-table column defaults follow the embeddings schema:
     // `vec_id`, `embedding`, block/label column `label`)
 
@@ -1156,87 +1155,6 @@ object OpStages {
           m.data.select(col(user).as("user_id"), col(tsc).as("ts"),
             col(value).as("value"), col(tieBreak).as(tieBreak)),
           gapMinutes = gap, tieBreak = tieBreak))
-    }
-
-    // multimodal plumbing: convert a text corpus to the media-table shape,
-    // then metadata / decode / resize / frame-sample over it. The decode /
-    // resize / frame stages require media-shaped data (media_id, payload,
-    // mime_type) and REPLACE data with the operator's output table (which
-    // carries media_id for downstream joins); the codec itself is the
-    // documented deterministic stub — no media libraries in this container.
-    PipelineConfig.register("as_media") { (name, cfg) =>
-      val (id, text) = ids(cfg)
-      Pipeline.DataStage(name, m => Multimodal.asMediaTable(m.data, id, text))
-    }
-    PipelineConfig.register("media_metadata") { (name, _) =>
-      Pipeline.DataStage(name, m => Multimodal.payloadMetadata(m.data))
-    }
-    // REAL container-header parsing (PNG/GIF/BMP/JPEG dimensions; WAV audio
-    // metadata) appended as columns; unrecognized payloads yield nulls
-    PipelineConfig.register("media_dimensions") { (name, cfg) =>
-      val payload = cfg.getStr("payload_col").getOrElse("payload")
-      Pipeline.DataStage(name, m => {
-        val dim = Multimodal.imageDimensions(col(payload))
-        appendCols(name, m.data, Seq(
-          dim.getField("format").as("image_format"),
-          dim.getField("width").as("image_width"),
-          dim.getField("height").as("image_height")))
-      })
-    }
-    PipelineConfig.register("audio_metadata") { (name, cfg) =>
-      val payload = cfg.getStr("payload_col").getOrElse("payload")
-      Pipeline.DataStage(name, m => {
-        val a = Multimodal.audioMetadata(col(payload))
-        appendCols(name, m.data, Seq(
-          a.getField("channels").as("audio_channels"),
-          a.getField("sample_rate").as("audio_sample_rate"),
-          a.getField("n_frames").as("audio_n_frames"),
-          a.getField("duration_s").as("audio_duration_s")))
-      })
-    }
-
-    // MP3 sibling of audio_metadata (compressed-audio corpora): first
-    // valid frame header fields + CBR duration estimate
-    PipelineConfig.register("mp3_metadata") { (name, cfg) =>
-      val payload = cfg.getStr("payload_col").getOrElse("payload")
-      Pipeline.DataStage(name, m => {
-        val a = Multimodal.mp3Metadata(col(payload))
-        appendCols(name, m.data, Seq(
-          a.getField("layer").as("mp3_layer"),
-          a.getField("bitrate_kbps").as("mp3_bitrate_kbps"),
-          a.getField("sample_rate").as("mp3_sample_rate"),
-          a.getField("duration_s").as("mp3_duration_s")))
-      })
-    }
-    PipelineConfig.register("video_metadata") { (name, cfg) =>
-      val payload = cfg.getStr("payload_col").getOrElse("payload")
-      Pipeline.DataStage(name, m => {
-        val v = Multimodal.videoMetadata(col(payload))
-        appendCols(name, m.data, Seq(
-          v.getField("timescale").as("video_timescale"),
-          v.getField("duration").as("video_duration"),
-          v.getField("width").as("video_width"),
-          v.getField("height").as("video_height"),
-          v.getField("duration_s").as("video_duration_s")))
-      })
-    }
-    PipelineConfig.register("media_decode") { (name, _) =>
-      Pipeline.DataStage(name, m => Multimodal.decodeBatched(m.data))
-    }
-    PipelineConfig.register("media_resize") { (name, cfg) =>
-      val w = cfg.reqInt("target_w")
-      val h = cfg.reqInt("target_h")
-      Pipeline.DataStage(name, m => Multimodal.resizeImages(m.data, w, h))
-    }
-    PipelineConfig.register("media_frames") { (name, cfg) =>
-      val n = cfg.reqInt("n_frames")
-      Pipeline.DataStage(name, m => Multimodal.sampleFrames(m.data, n))
-    }
-    PipelineConfig.register("media_audio_decode") { (name, _) =>
-      Pipeline.DataStage(name, m => Multimodal.decodeAudio(m.data))
-    }
-    PipelineConfig.register("media_video_frames") { (name, _) =>
-      Pipeline.DataStage(name, m => Multimodal.videoFrames(m.data))
     }
   }
 }

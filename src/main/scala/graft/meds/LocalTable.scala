@@ -1,7 +1,9 @@
 package graft.meds
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** A fitted metadata table held on the driver.
   *
@@ -22,22 +24,34 @@ object LocalTable {
   val MaxRows: Int = 1000000
 
   /** `df` as a driver-local frame: `df` itself when its optimized plan is
-    * already a `LocalRelation` (no job), else its rows pulled with one
-    * bounded collect. More than `MaxRows` rows fail, naming `stage` and the
-    * cap; a truncated table is never returned.
+    * already a `LocalRelation`, an empty `LocalRelation` for an RDD with no
+    * partition (both with no job), else its rows pulled with one bounded
+    * collect. More than `MaxRows` rows fail, naming `owner` and the cap; a
+    * truncated table is never returned.
     */
-  def apply(df: DataFrame, stage: String): DataFrame = apply(df, stage, MaxRows)
+  def apply(df: DataFrame, owner: String): DataFrame = apply(df, owner, MaxRows)
 
-  private[graft] def apply(df: DataFrame, stage: String, cap: Int): DataFrame =
-    if (isLocal(df)) df
-    else {
-      val rows = df.limit(cap + 1).collect()
-      if (rows.length > cap) throw new IllegalStateException(
-        s"stage $stage: the metadata table has more than $cap rows, the cap " +
-          "for a driver-local table")
-      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  private[graft] def apply(df: DataFrame, owner: String, cap: Int): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df
+      case _ if localRows(df).isDefined => // an RDD with no partition
+        df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row], df.schema)
+      case _ =>
+        val rows = df.limit(cap + 1).collect()
+        if (rows.length > cap) throw new IllegalStateException(
+          s"$owner: the metadata table has more than $cap rows, the cap for a " +
+            "driver-local table")
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
     }
 
-  private def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  /** The rows of a driver-local frame, found with no job: a `LocalRelation`'s
+    * own rows, or none for an RDD with no partition (what
+    * `createDataFrame(emptyRDD, schema)` makes). None for any other frame.
+    */
+  private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _: LogicalRDD if df.queryExecution.toRdd.getNumPartitions == 0 => Some(Nil)
+      case _ => None
+    }
 }

@@ -180,28 +180,16 @@ object MedsIO {
         case cs => bare.repartition(col(Split), col(cs.head))
           .sortWithinPartitions((Split +: cs).map(col): _*)
       }
-      writeParquet(arranged, s"$root/data", Split)
-      // Strip Hive partition-dir prefixes: data/split=train -> data/train.
-      val dataPath = new org.apache.hadoop.fs.Path(s"$root/data")
-      val fs = dataPath.getFileSystem(
-        meds.data.sparkSession.sparkContext.hadoopConfiguration)
-      val splitDirs = fs.listStatus(dataPath).filter { st =>
-        st.isDirectory && st.getPath.getName.startsWith("split=")
-      }
-      splitDirs.foreach(st => fs.rename(st.getPath,
-        new org.apache.hadoop.fs.Path(dataPath, st.getPath.getName.stripPrefix("split="))))
-      // no row, no partition dir: without a data file the root could not be
-      // read back (Spark cannot infer a schema from `_SUCCESS` alone), so
-      // leave one footer-only file at the written columns
-      if (splitDirs.isEmpty) writeParquet(meds.data.sparkSession.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row], bare.drop(Split).schema),
-        s"$root/data/empty.parquet")
+      writeData(arranged, root, Split)
     }
     // the canonical file set stays on disk even for an empty table: the
     // reference's compute_fn reads metadata/codes.parquet unguarded, and
-    // Main's footer row counts read it. A fitted or never-populated table is
-    // driver-local, so each is one file written with no Spark job.
-    writeParquet(meds.codes, s"$root/metadata/codes.parquet")
+    // Main's footer row counts read it. The codes table is driver-sized, so
+    // it is always one file: a fitted or empty table is written with no
+    // Spark job, one read back from a root or a checkpoint after one
+    // bounded collect. The splits table (a row per subject) is never pulled.
+    writeParquet(LocalTable(meds.codes, s"write of $root/metadata/codes.parquet"),
+      s"$root/metadata/codes.parquet")
     writeParquet(meds.splits, s"$root/metadata/subject_splits.parquet")
     markerFs.create(markerPath, true).close()
   }
@@ -222,12 +210,7 @@ object MedsIO {
     * into the directory `path`.
     */
   private def writeParquet(df: DataFrame, path: String, partitionBy: String*): Unit = {
-    val localRows = if (partitionBy.nonEmpty) None else df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l.data)
-      case _: org.apache.spark.sql.execution.LogicalRDD
-          if df.queryExecution.toRdd.getNumPartitions == 0 => Some(Nil)
-      case _ => None
-    }
+    val localRows = if (partitionBy.nonEmpty) None else LocalTable.localRows(df)
     localRows match {
       case Some(rows) =>
         val job = org.apache.hadoop.mapreduce.Job.getInstance(
@@ -258,36 +241,57 @@ object MedsIO {
     */
   private def writeReshardedData(data: DataFrame, root: String): Unit = {
     val spark = data.sparkSession
-    writeParquet(data.repartition(col(Split), col(Shard))
-      .sortWithinPartitions(Split, Shard, SubjectId, Time), s"$root/data", Split, Shard)
-    val dataPath = new org.apache.hadoop.fs.Path(s"$root/data")
-    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dataPath).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("split=")) {
-        val splitDir = new org.apache.hadoop.fs.Path(dataPath, name.stripPrefix("split="))
-        fs.rename(st.getPath, splitDir)
-        fs.listStatus(splitDir).foreach { sh =>
-          val shName = sh.getPath.getName
-          if (sh.isDirectory && shName.startsWith("shard=")) {
-            val idx = shName.stripPrefix("shard=")
-            val files = fs.listStatus(sh.getPath)
-              .filter(_.getPath.getName.endsWith(".parquet"))
-            if (files.length == 1) {
-              // collapse dir/part-*.parquet -> <idx>.parquet (reference shape)
-              fs.rename(files(0).getPath,
-                new org.apache.hadoop.fs.Path(splitDir, s"$idx.parquet"))
-              fs.delete(sh.getPath, true)
-            } else {
-              // multi-file shard (maxRecordsPerFile etc.): keep the dir; read()
-              // still recovers a per-file shard id prefixed "<split>/<idx>/"
-              fs.rename(sh.getPath, new org.apache.hadoop.fs.Path(splitDir, idx))
-            }
+    val splitDirs = writeData(data.repartition(col(Split), col(Shard))
+      .sortWithinPartitions(Split, Shard, SubjectId, Time), root, Split, Shard)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    splitDirs.foreach { splitDir =>
+      fs.listStatus(splitDir).foreach { sh =>
+        val shName = sh.getPath.getName
+        if (sh.isDirectory && shName.startsWith("shard=")) {
+          val idx = shName.stripPrefix("shard=")
+          val files = fs.listStatus(sh.getPath)
+            .filter(_.getPath.getName.endsWith(".parquet"))
+          if (files.length == 1) {
+            // collapse dir/part-*.parquet -> <idx>.parquet (reference shape)
+            fs.rename(files(0).getPath,
+              new org.apache.hadoop.fs.Path(splitDir, s"$idx.parquet"))
+            fs.delete(sh.getPath, true)
+          } else {
+            // multi-file shard (maxRecordsPerFile etc.): keep the dir; read()
+            // still recovers a per-file shard id prefixed "<split>/<idx>/"
+            fs.rename(sh.getPath, new org.apache.hadoop.fs.Path(splitDir, idx))
           }
         }
       }
     }
-    writeShardsJson(readData(spark, root), root)
+    val shardsJson = new org.apache.hadoop.fs.Path(s"$root/.shards.json")
+    if (splitDirs.isEmpty) writeStringFile(shardsJson, "{}") // no shard to list
+    else writeShardsJson(readData(spark, root), root)
+  }
+
+  /** The partitioned data write of both layouts. Spark writes Hive
+    * `data/split=<v>/` dirs; each is renamed (metadata only) to the
+    * reference's `data/<v>/`, and the renamed dirs are returned. With no row
+    * there is no partition dir, and without a data file the root could not
+    * be read back (Spark cannot infer a schema from `_SUCCESS` alone), so
+    * one footer-only `data/empty.parquet` is left at the written columns.
+    */
+  private def writeData(df: DataFrame, root: String,
+      partitionBy: String*): Seq[org.apache.hadoop.fs.Path] = {
+    writeParquet(df, s"$root/data", partitionBy: _*)
+    val dataPath = new org.apache.hadoop.fs.Path(s"$root/data")
+    val fs = dataPath.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val splitDirs = fs.listStatus(dataPath).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith("split=") =>
+        val dir = new org.apache.hadoop.fs.Path(dataPath, st.getPath.getName.stripPrefix("split="))
+        fs.rename(st.getPath, dir)
+        dir
+    }
+    if (splitDirs.isEmpty) writeParquet(df.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row],
+      df.drop(partitionBy: _*).schema), s"$root/data/empty.parquet")
+    splitDirs
   }
 
   /** Attach the engine-wide stable-order row index (monotonic within the
@@ -295,20 +299,6 @@ object MedsIO {
     */
   def withRowIdx(df: DataFrame): DataFrame =
     df.withColumn(RowIdx, monotonically_increasing_id())
-
-  /** Bucketed event-table write: hash-bucket by subject_id and sort within
-    * buckets by (subject_id, time). This is the cluster-scale layout: every
-    * per-subject window (timeline tokens, filters, sessionization) and every
-    * subject-keyed join on two so-bucketed tables runs WITHOUT a shuffle —
-    * Spark matches the bucket spec to the operator's required distribution.
-    * See GoldenSpec("bucketed layout") for the plan-level proof.
-    */
-  def writeBucketed(data: DataFrame, tableName: String, numBuckets: Int): Unit =
-    data.write.mode("overwrite")
-      .bucketBy(numBuckets, SubjectId)
-      .sortBy(SubjectId, Time)
-      .format("parquet")
-      .saveAsTable(tableName)
 
   // Hadoop FS for the small JSON side files too — java.nio paths would break
   // the moment the root is s3://, hdfs:// etc. while parquet IO works fine

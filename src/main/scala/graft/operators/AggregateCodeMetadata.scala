@@ -264,7 +264,7 @@ object AggregateCodeMetadata {
     val computed = compute(data, aggregations, quantiles, codeModifiers,
       summarizeOverAllCodes, quantileMode, sketchK, subjectCountMode, subjectLgK)
     val merged = joinAndReplace(computed, codes, Code +: codeModifiers)
-    GraftFunctions.shrinkIntColumns(LocalTable(merged, "aggregate_code_metadata"),
+    GraftFunctions.shrinkIntColumns(LocalTable(merged, "stage aggregate_code_metadata"),
       Seq(CodeNSubjects, CodeNOccurrences, ValuesNSubjects, ValuesNOccurrences, ValuesNInts))
   }
 

@@ -26,7 +26,7 @@ object FitVocabularyIndices {
 
   def apply(codes: DataFrame, codeModifiers: Seq[String] = Nil): DataFrame = {
     val keys = Code +: codeModifiers
-    val local = LocalTable(codes, "fit_vocabulary_indices")
+    val local = LocalTable(codes, "stage fit_vocabulary_indices")
     val keySchema = StructType(keys.map(local.schema(_)))
     val toKey = CatalystTypeConverters.createToCatalystConverter(keySchema)
     val ordering = InterpretedOrdering.forSchema(keySchema.map(_.dataType))

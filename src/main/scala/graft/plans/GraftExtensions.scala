@@ -101,18 +101,6 @@ object GraftExtensions {
       "graft_winnow(hashes, w) - winnowing fingerprint (window minima)"),
       arity("graft_winnow", 2)(es => WinnowMins(es(0),
         lit("graft_winnow", "w", es(1)).toInt))),
-    ("graft_jpeg_dimensions", info("graft_jpeg_dimensions",
-      "graft_jpeg_dimensions(bytes) - (width, height) from a JPEG payload"),
-      arity("graft_jpeg_dimensions", 1)(es => JpegDimensions(es(0)))),
-    ("graft_wav_metadata", info("graft_wav_metadata",
-      "graft_wav_metadata(bytes) - RIFF/WAV header metadata"),
-      arity("graft_wav_metadata", 1)(es => WavMetadata(es(0)))),
-    ("graft_mp3_metadata", info("graft_mp3_metadata",
-      "graft_mp3_metadata(bytes) - MP3 frame-header metadata"),
-      arity("graft_mp3_metadata", 1)(es => Mp3Metadata(es(0)))),
-    ("graft_mp4_metadata", info("graft_mp4_metadata",
-      "graft_mp4_metadata(bytes) - MP4/ISO-BMFF box-walk metadata"),
-      arity("graft_mp4_metadata", 1)(es => Mp4Metadata(es(0)))),
     ("graft_kll_agg", info("graft_kll_agg",
       "graft_kll_agg(v, k) - aggregate doubles into a KLL quantile sketch"),
       arity("graft_kll_agg", 2)(es => KllExpressions.KllSketchAgg(es(0),

@@ -920,374 +920,6 @@ object RepetitionSignals {
   }
 }
 
-/** JPEG pixel dimensions from the payload's segment stream: walks the
-  * marker segments from SOI to the first frame header (SOF0-SOF15, minus
-  * DHT/DAC/RST which share the high nibble) and reads the big-endian
-  * height/width from it — the one container whose dimensions sit at a
-  * VARIABLE offset, so the fixed-offset builtin parsing used for PNG/GIF/
-  * BMP (Multimodal.imageDimensions) cannot express it. Returns a
-  * (width, height) struct; anything non-JPEG, truncated, or structurally
-  * corrupt returns null (a bad blob must not kill the scan).
-  */
-case class JpegDimensions(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-  override def nullable: Boolean = true // non-JPEG payloads yield null
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_jpeg_dims"
-
-  override def nullSafeEval(input: Any): Any =
-    JpegDimensions.dims(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val r = ctx.freshName("jpegDims")
-      s"""
-         |InternalRow $r = graft.plans.JpegDimensions.dims($arr);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object JpegDimensions {
-  /** Null for non-JPEG / truncated / corrupt streams. */
-  def dims(b: Array[Byte]): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    def u(i: Int): Int = b(i) & 0xff
-    if (b.length < 4 || u(0) != 0xff || u(1) != 0xd8) return null // no SOI
-    var i = 2
-    while (i + 3 < b.length) {
-      if (u(i) != 0xff) return null // lost marker sync
-      var marker = u(i + 1)
-      while (marker == 0xff && i + 2 < b.length) { i += 1; marker = u(i + 1) } // fill bytes
-      // standalone markers without a length field
-      if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd7)) { i += 2 }
-      else {
-        // the fill-byte skip can leave fewer than 4 bytes: a trailing 0xff
-        // run with no room for a length field is a truncated stream, not
-        // an exception (the one corrupt shape the outer bound can't see)
-        if (i + 3 >= b.length) return null
-        val len = (u(i + 2) << 8) | u(i + 3)
-        if (len < 2 || i + 2 + len > b.length) return null
-        val isSof = marker >= 0xc0 && marker <= 0xcf &&
-          marker != 0xc4 && marker != 0xc8 && marker != 0xcc
-        if (isSof) {
-          if (len < 7) return null // must hold precision + height + width
-          val h = ((u(i + 5) << 8) | u(i + 6)).toLong
-          val w = ((u(i + 7) << 8) | u(i + 8)).toLong
-          return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](w, h))
-        }
-        if (marker == 0xd9 || marker == 0xda) return null // EOI/SOS before any SOF
-        i += 2 + len
-      }
-    }
-    null
-  }
-}
-
-/** WAV (RIFF) audio metadata from the payload's chunk stream: walks the
-  * chunks to `fmt ` (codec/channels/rate/bits) and `data` (byte length →
-  * duration), tolerating any chunk order and unknown chunks (LIST, cue,
-  * etc.) — the audio analog of [[JpegDimensions]]. Returns
-  * (channels, sample_rate, bits_per_sample, n_frames) where n_frames =
-  * data bytes / block-align; null for non-WAV / truncated / corrupt
-  * payloads. Duration in seconds is n_frames / sample_rate, left to the
-  * caller (an integer-exact contract beats a lossy double here).
-  */
-case class WavMetadata(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("channels", LongType, nullable = false),
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("bits_per_sample", LongType, nullable = false),
-    StructField("n_frames", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_wav_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    WavMetadata.meta(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val r = ctx.freshName("wavMeta")
-      s"""
-         |InternalRow $r = graft.plans.WavMetadata.meta($arr);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WavMetadata {
-  def meta(b: Array[Byte]): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    def u(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u(i) | (u(i + 1) << 8)
-    def le32(i: Int): Long =
-      u(i).toLong | (u(i + 1).toLong << 8) | (u(i + 2).toLong << 16) | (u(i + 3).toLong << 24)
-    def tag(i: Int, s: String): Boolean =
-      i + s.length <= b.length && s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
-    if (b.length < 12 || !tag(0, "RIFF") || !tag(8, "WAVE")) return null
-    var channels = -1L; var rate = -1L; var bits = -1L; var blockAlign = -1L
-    var dataBytes = -1L
-    var i = 12
-    while (i + 8 <= b.length && (channels < 0 || dataBytes < 0)) {
-      val size = le32(i + 4)
-      if (size < 0 || i + 8L + size > b.length) return null // truncated chunk
-      if (tag(i, "fmt ")) {
-        if (size < 16) return null
-        channels = le16(i + 10)
-        rate = le32(i + 12)
-        blockAlign = le16(i + 20)
-        bits = le16(i + 22)
-      } else if (tag(i, "data")) dataBytes = size
-      i += (8 + size + (size & 1)).toInt // chunks are word-aligned (odd sizes pad)
-    }
-    if (channels <= 0 || rate <= 0 || blockAlign <= 0 || dataBytes < 0) return null
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](channels, rate, bits, dataBytes / blockAlign))
-  }
-}
-
-/** MP4 / ISO-BMFF video metadata from the payload's box tree: walks the
-  * top-level boxes to `moov`, then its children to `mvhd` (movie timescale
-  * + duration, version 0 and 1 layouts) and the first `trak` whose `tkhd`
-  * carries nonzero 16.16-fixed dimensions (the video track — audio tracks
-  * encode 0×0) — the video analog of [[JpegDimensions]] / [[WavMetadata]].
-  * 64-bit `largesize` (size==1) and to-end-of-file (size==0) box headers
-  * are honored; unknown boxes are skipped by size. Returns
-  * (timescale, duration, width, height); duration seconds is
-  * duration/timescale, left to the caller. Null for non-BMFF, truncated,
-  * or structurally corrupt payloads (a bad blob must not kill the scan).
-  */
-case class Mp4Metadata(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("timescale", LongType, nullable = false),
-    StructField("duration", LongType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-  override def nullable: Boolean = true // non-MP4 payloads yield null
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_mp4_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4Metadata.meta(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val r = ctx.freshName("mp4Meta")
-      s"""
-         |InternalRow $r = graft.plans.Mp4Metadata.meta($arr);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Mp4Metadata {
-  def meta(b: Array[Byte]): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    if (b.length < 16) return null
-    def u(i: Int): Int = b(i) & 0xff
-    def be32(i: Int): Long =
-      (u(i).toLong << 24) | (u(i + 1) << 16) | (u(i + 2) << 8) | u(i + 3)
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
-    def tag(i: Int, s: String): Boolean =
-      s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
-
-    // sniff: the first top-level box must be a known BMFF type (`ftyp` in
-    // any normal file; fast-start files may lead with `moov`) — otherwise
-    // arbitrary binary whose first 8 bytes happen to form plausible box
-    // sizes would be walked as if it were a container
-    if (!(tag(4, "ftyp") || tag(4, "styp") || tag(4, "moov") || tag(4, "moof") ||
-        tag(4, "mdat") || tag(4, "free") || tag(4, "skip") || tag(4, "wide") ||
-        tag(4, "pdin"))) return null
-
-    var corrupt = false
-    // first box of `typ` in [from, to): (contentStart, boxEnd), null if
-    // absent; a size that cannot fit its own header or overruns the
-    // enclosing box marks the stream corrupt. Callers resume scanning at
-    // the returned boxEnd to iterate same-type siblings.
-    def findBox(typ: String, from: Int, to: Int): (Int, Int) = {
-      var i = from
-      while (i + 8 <= to) {
-        val s32 = be32(i)
-        var hdr = 8
-        var size: Long = s32
-        if (s32 == 1) { // 64-bit largesize follows the type field
-          if (i + 16 > to) { corrupt = true; return null }
-          size = be64(i + 8); hdr = 16
-        } else if (s32 == 0) size = (to - i).toLong // extends to container end
-        if (size < hdr || i + size > to) { corrupt = true; return null }
-        if (tag(i + 4, typ)) return (i + hdr, (i + size).toInt)
-        i += size.toInt
-      }
-      null
-    }
-
-    val moov = findBox("moov", 0, b.length)
-    if (corrupt || moov == null) return null
-    val mvhd = findBox("mvhd", moov._1, moov._2)
-    if (corrupt || mvhd == null) return null
-    val ms = mvhd._1
-    if (mvhd._2 - ms < 4) return null
-    var timescale = 0L
-    var duration = 0L
-    u(ms) match { // full-box version: v1 widens creation/modification/duration to 64-bit
-      case 0 =>
-        if (mvhd._2 - ms < 20) return null
-        timescale = be32(ms + 12); duration = be32(ms + 16)
-      case 1 =>
-        if (mvhd._2 - ms < 32) return null
-        timescale = be32(ms + 20); duration = be64(ms + 24)
-      case _ => return null
-    }
-    if (timescale <= 0 || duration < 0) return null
-
-    // first trak whose tkhd has nonzero dimensions = the video track;
-    // an audio-only file (all 0x0 tkhds) reports 0x0, not null
-    var w = 0L
-    var h = 0L
-    var cursor = moov._1
-    var done = false
-    while (!done) {
-      val trak = findBox("trak", cursor, moov._2)
-      if (corrupt) return null
-      if (trak == null) done = true
-      else {
-        val tk = findBox("tkhd", trak._1, trak._2)
-        if (corrupt) return null
-        if (tk != null && tk._2 - tk._1 >= 4) {
-          // width/height sit after ver/flags + times + track id + reserved
-          // + duration + reserved(8) + layer/group/volume/reserved(8) +
-          // matrix(36): offset 76 in v0, 88 in v1 (wider times/duration)
-          val base = u(tk._1) match {
-            case 0 => tk._1 + 76
-            case 1 => tk._1 + 88
-            case _ => -1
-          }
-          if (base >= 0 && base + 8 <= tk._2) {
-            val tw = be32(base) >> 16 // 16.16 fixed point → integer pixels
-            val th = be32(base + 4) >> 16
-            if (tw > 0 || th > 0) { w = tw; h = th; done = true }
-          }
-        }
-        cursor = trak._2
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](timescale, duration, w, h))
-  }
-}
-
-/** MP3 (MPEG audio) metadata from the payload's first valid frame header:
-  * skips a leading ID3v2 tag (syncsafe 28-bit size, optional footer), then
-  * scans byte-by-byte for a frame sync whose version/layer/bitrate/
-  * sample-rate fields are all valid — a sync candidate with reserved or
-  * free/bad field values is a false sync inside tag padding or junk, and
-  * the scan continues one byte later exactly as a real decoder resyncs.
-  * Returns (layer, bitrate_kbps, sample_rate, audio_bytes) where
-  * audio_bytes counts from the first valid frame header to payload end
-  * (the CBR duration estimate audio_bytes*8/bitrate is left to the
-  * caller — same integer-exact contract as [[WavMetadata]]). Null for
-  * payloads with no valid frame header (a bad blob must not kill the
-  * scan). The audio sibling of [[JpegDimensions]]/[[WavMetadata]]/
-  * [[Mp4Metadata]].
-  */
-case class Mp3Metadata(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("layer", LongType, nullable = false),
-    StructField("bitrate_kbps", LongType, nullable = false),
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("audio_bytes", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_mp3_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    Mp3Metadata.meta(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val r = ctx.freshName("mp3Meta")
-      s"""
-         |InternalRow $r = graft.plans.Mp3Metadata.meta($arr);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Mp3Metadata {
-  // bitrate tables in kbps, indexed 1..14 (0 = free, 15 = bad → resync).
-  // Row choice: MPEG1 distinguishes all three layers; MPEG2/2.5 share one
-  // table for layers II+III. (ISO/IEC 11172-3 table B.2, 13818-3 annex.)
-  private val V1L1 = Array(32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448)
-  private val V1L2 = Array(32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384)
-  private val V1L3 = Array(32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-  private val V2L1 = Array(32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256)
-  private val V2L23 = Array(8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-  private val Rates1 = Array(44100L, 48000L, 32000L)   // MPEG1
-  private val Rates2 = Array(22050L, 24000L, 16000L)   // MPEG2
-  private val Rates25 = Array(11025L, 12000L, 8000L)   // MPEG2.5
-
-  def meta(b: Array[Byte]): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
-    def u(i: Int): Int = b(i) & 0xff
-    var start = 0
-    // ID3v2 header: "ID3" ver(2) flags(1) syncsafe-size(4); bit 4 of the
-    // flags adds a 10-byte footer after the tag body
-    if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3' &&
-        (u(6) | u(7) | u(8) | u(9)) < 0x80 * 2) { // syncsafe bytes are < 0x80
-      val size = (u(6) << 21) | (u(7) << 14) | (u(8) << 7) | u(9)
-      if ((u(6) & 0x80) == 0 && (u(7) & 0x80) == 0 && (u(8) & 0x80) == 0 &&
-          (u(9) & 0x80) == 0)
-        start = 10 + size + (if ((u(5) & 0x10) != 0) 10 else 0)
-    }
-    if (start < 0 || start > b.length) return null
-    var i = start
-    while (i + 4 <= b.length) {
-      if (u(i) == 0xff && (u(i + 1) & 0xe0) == 0xe0) {
-        val ver = (u(i + 1) >> 3) & 3   // 0=2.5  1=reserved  2=MPEG2  3=MPEG1
-        val layerBits = (u(i + 1) >> 1) & 3 // 0=reserved 1=III 2=II 3=I
-        val bi = (u(i + 2) >> 4) & 0xf
-        val si = (u(i + 2) >> 2) & 3
-        if (ver != 1 && layerBits != 0 && bi >= 1 && bi <= 14 && si != 3) {
-          val layer = 4 - layerBits // 1-indexed layer number (I/II/III)
-          val table =
-            if (ver == 3) { if (layer == 1) V1L1 else if (layer == 2) V1L2 else V1L3 }
-            else { if (layer == 1) V2L1 else V2L23 }
-          val rates = if (ver == 3) Rates1 else if (ver == 2) Rates2 else Rates25
-          return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](layer.toLong, table(bi - 1).toLong, rates(si),
-              (b.length - i).toLong))
-        }
-      }
-      i += 1 // false sync: resync one byte later, like a real decoder
-    }
-    null
-  }
-}
-
 /** True when ANY element of a long array might be in the bloom filter —
   * the per-document contamination probe, as one codegen'd early-exit loop
   * over the in-row hash array. The composable `exists(arr, h =>
@@ -1587,18 +1219,6 @@ object VectorExpressions {
 
   def bigramCounts(tokens: Column): Column =
     GraftSqlBridge.column(BigramCounts(expr(tokens)))
-
-  def jpegDimensions(payload: Column): Column =
-    GraftSqlBridge.column(JpegDimensions(expr(payload)))
-
-  def wavMetadata(payload: Column): Column =
-    GraftSqlBridge.column(WavMetadata(expr(payload)))
-
-  def mp4Metadata(payload: Column): Column =
-    GraftSqlBridge.column(Mp4Metadata(expr(payload)))
-
-  def mp3Metadata(payload: Column): Column =
-    GraftSqlBridge.column(Mp3Metadata(expr(payload)))
 
   def bloomAnyContain(hashes: Column, bloomBytes: Array[Byte]): Column =
     GraftSqlBridge.column(BloomAnyContain(expr(hashes), bloomBytes))

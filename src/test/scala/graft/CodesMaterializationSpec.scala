@@ -149,14 +149,20 @@ class CodesMaterializationSpec extends SparkSpec {
     assertLocal(vocab, "fit_vocabulary_indices")
     assert(vocab.select(Code, VocabIndex).collect()
       .map(r => r.getString(0) -> r.getByte(1).toInt).toMap == Map("DX" -> 1, "HR" -> 2, "TEMP" -> 3))
+    // the empty canonical table (an RDD with no partition) is local with no job too
+    val (empty, emptyRecords) = Collector.measure(spark)(LocalTable(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], MedsSchema.codesSchema), "stage spec"))
+    assert(emptyRecords.jobs.isEmpty, emptyRecords.jobs.map(_.callSite))
+    assertLocal(empty, "empty canonical codes")
+    assert(empty.schema == MedsSchema.codesSchema)
   }
 
   test("a table over the row cap fails, naming the stage and the cap") {
     val df = spark.range(0, 5, 1, 2).toDF("x")
-    val e = intercept[IllegalStateException](LocalTable(df, "fit_spec", cap = 4))
+    val e = intercept[IllegalStateException](LocalTable(df, "stage fit_spec", cap = 4))
     assert(e.getMessage.contains("stage fit_spec") && e.getMessage.contains("more than 4 rows"),
       e.getMessage)
-    val atCap = LocalTable(df, "fit_spec", cap = 5)
+    val atCap = LocalTable(df, "stage fit_spec", cap = 5)
     assertLocal(atCap, "at the cap")
     assert(atCap.as[Long].collect().sorted.toSeq == (0L until 5L))
   }
@@ -204,8 +210,8 @@ class CodesMaterializationSpec extends SparkSpec {
   }
 
   /** The codes half of the MEDS layout contract on a written root: one
-    * parquet data file (a fitted table is that file itself, see
-    * [[assertFitted]]), one row per code, FIXTURES.md §2's column types
+    * parquet data file (written as the file itself, see
+    * [[assertCodesFile]]), one row per code, FIXTURES.md §2's column types
     * (Spark's signed integral types for its unsigned ones, and double sums),
     * and each count and index column at the narrowest integral type holding
     * its values. */
@@ -248,10 +254,10 @@ class CodesMaterializationSpec extends SparkSpec {
     }
   }
 
-  /** A codes table fitted in the writing run is written by the driver as
-    * the file metadata/codes.parquet; one read back from a checkpoint is
-    * written by a job, into a directory. */
-  private def assertFitted(root: String): Unit = {
+  /** Every codes table, fitted in the writing run or read back from a
+    * checkpoint or an input root, is written by the driver as the one file
+    * metadata/codes.parquet, never as a directory of part files. */
+  private def assertCodesFile(root: String): Unit = {
     assertCodesLayout(root)
     assert(new java.io.File(s"$root/metadata/codes.parquet").isFile, s"$root: not one file")
   }
@@ -261,18 +267,19 @@ class CodesMaterializationSpec extends SparkSpec {
     // the pipeline's own threshold (20 events) keeps no fixture subject
     val keep = "stages.filter_subjects.min_events_per_subject=5"
     Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/run", keep), spark)
-    assertFitted(s"$out/run")
+    assertCodesFile(s"$out/run")
     Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$out/ckpt_out",
       s"$out/ckpt", keep), spark)
-    assertCodesLayout(s"$out/ckpt_out")
-    val fitDirs = new java.io.File(s"$out/ckpt").listFiles().map(_.getName).sorted
-      .filter(_.contains("_fit_"))
-    assert(fitDirs.length == 3, fitDirs.mkString(", "))
-    fitDirs.foreach(d => assertFitted(s"$out/ckpt/$d"))
+    assertCodesFile(s"$out/ckpt_out")
+    val ckptDirs = new java.io.File(s"$out/ckpt").listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted
+    assert(ckptDirs.count(_.contains("_fit_")) == 3, ckptDirs.mkString(", "))
+    assert(ckptDirs.length == 7, ckptDirs.mkString(", "))
+    ckptDirs.foreach(d => assertCodesFile(s"$out/ckpt/$d"))
     val (in, p) = fixtureRoot()
     Main.run(Array(p, in, s"$out/minmax"), spark)
     assert(spark.read.parquet(s"$out/minmax/metadata/codes.parquet").columns
       .toSet.contains(ValuesMin))
-    assertFitted(s"$out/minmax")
+    assertCodesFile(s"$out/minmax")
   }
 }

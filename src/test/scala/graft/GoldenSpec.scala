@@ -119,8 +119,8 @@ class GoldenSpec extends SparkSpec {
           .foreach(java.nio.file.Files.deleteIfExists(_))
       }
     }
-    MedsIO.writeBucketed(meds.data.drop(Shard, Split), "meds_bucketed_a", 4)
-    MedsIO.writeBucketed(meds.data.drop(Shard, Split), "meds_bucketed_b", 4)
+    Seq("meds_bucketed_a", "meds_bucketed_b").foreach(t => graft.ops.Layout.writeBucketed(
+      meds.data.drop(Shard, Split), t, Seq(SubjectId), 4, sortCols = Seq(SubjectId, Time)))
     val a = spark.table("meds_bucketed_a")
     val b = spark.table("meds_bucketed_b").groupBy(SubjectId).count()
     val joined = a.join(b, Seq(SubjectId))

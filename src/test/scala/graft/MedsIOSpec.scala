@@ -62,13 +62,17 @@ class MedsIOSpec extends SparkSpec {
     fixture.data.drop(Shard).write.partitionBy(Split).parquet(s"$hive/data")
     fixture.codes.write.parquet(s"$hive/metadata/codes.parquet")
     fixture.splits.write.parquet(s"$hive/metadata/subject_splits.parquet")
-    // an aborted write's leftover, at another schema, under data/ and codes
+    // an aborted write's leftover, at another schema, under data/ and codes;
+    // MedsIO writes codes as one file, so the copy's codes table is rewritten
+    // as the directory a plain Spark write leaves
     val leftover = tmp("temporary")
     val src = Paths.get(MedsFixture.root)
     Files.walk(src).iterator.asScala.foreach { p =>
       val q = Paths.get(leftover).resolve(src.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
     }
+    Files.delete(Paths.get(leftover, "metadata/codes.parquet"))
+    fixture.codes.write.parquet(s"$leftover/metadata/codes.parquet")
     val stale = tmp("stale")
     spark.range(3).toDF("stale").coalesce(1).write.mode("overwrite").parquet(stale)
     val part = Files.list(Paths.get(stale)).iterator.asScala

@@ -198,13 +198,9 @@ class OpStagesSpec extends SparkSpec {
     }
   }
 
-  test("similarity/winnow/multimodal stages are registered") {
+  test("similarity/winnow/corpus stages are registered") {
     val expected = Set("winnow_fingerprint", "embed_dedup", "semdedup", "knn_join",
-      "pq_encode",
-      "sim_topk", "as_media", "media_metadata", "media_decode",
-      "media_resize", "media_frames", "media_audio_decode",
-      "media_dimensions", "audio_metadata",
-      "mp3_metadata", "video_metadata", "sessionize",
+      "pq_encode", "sim_topk", "sessionize",
       "filter_rows", "json_extract", "normalize_text", "text_repetition",
       "decontaminate", "pack_sequences", "redact_pii", "quality_filter",
       "dedup_lines", "remove_dup_spans", "tf_idf", "text_entropy",
@@ -376,32 +372,6 @@ class OpStagesSpec extends SparkSpec {
     val hKept = Pipeline.run(spark, emptyMeds(d), PipelineConfig.fromYaml(yH).stages)
       .data.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(hKept.contains(1L) && !hKept.contains(3L))
-  }
-
-  test("video_metadata stage appends parsed MP4 columns; non-MP4 rows null") {
-    def be32(v: Long): Array[Byte] = Array(
-      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-    def box(typ: String, content: Array[Byte]): Array[Byte] =
-      be32(content.length + 8L) ++ typ.getBytes ++ content
-    val mp4 = box("ftyp", "isom".getBytes ++ be32(0) ++ "isom".getBytes) ++
-      box("moov",
-        box("mvhd", be32(0) ++ be32(0) ++ be32(0) ++ be32(50) ++ be32(150) ++
-          Array.fill[Byte](80)(0)) ++
-        box("trak", box("tkhd", be32(7) ++ be32(0) ++ be32(0) ++ be32(1) ++
-          be32(0) ++ be32(0) ++ Array.fill[Byte](16)(0) ++
-          Array.fill[Byte](36)(0) ++ be32(256L << 16) ++ be32(128L << 16))))
-    val media = spark.createDataFrame(Seq(
-      (1L, mp4), (2L, "plain text".getBytes)
-    )).toDF("media_id", "payload")
-    val out = Pipeline.run(spark, emptyMeds(media),
-      PipelineConfig.fromYaml("stages:\n  - video_metadata\n").stages).data
-    val got = out.select("media_id", "video_timescale", "video_duration",
-      "video_width", "video_height", "video_duration_s").collect()
-      .map(r => r.getLong(0) -> r).toMap
-    assert(got(1L).getLong(1) == 50L && got(1L).getLong(2) == 150L)
-    assert(got(1L).getLong(3) == 256L && got(1L).getLong(4) == 128L)
-    assert(got(1L).getDouble(5) == 3.0)
-    assert(got(2L).isNullAt(1) && got(2L).isNullAt(5))
   }
 
   private def embRows = {
@@ -794,32 +764,6 @@ class OpStagesSpec extends SparkSpec {
     val rows = out.select("user_id", "session_idx", "n_events", "sum_value")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(rows == Set((7L, 1L, 2L, 5.0), (7L, 2L, 1L, 1.0), (8L, 1L, 1L, 5.0)))
-  }
-
-  test("multimodal YAML chain: as_media -> media_frames plumbing") {
-    val yaml =
-      """stages:
-        |  - as_media
-        |  - media_frames:
-        |      n_frames: 3
-        |""".stripMargin
-    val out = Pipeline.run(spark, emptyMeds(docs),
-      PipelineConfig.fromYaml(yaml).stages).data
-    assert(out.columns.toSeq == Seq("media_id", "sample_ord", "frame_idx",
-      "n_frames", "mean_intensity", "frame_digest"))
-    assert(out.count() == 18) // 6 docs x 3 samples (text payloads -> null frames)
-    val decoded = Pipeline.run(spark, emptyMeds(docs), PipelineConfig.fromYaml(
-      "stages:\n  - as_media\n  - media_decode\n").stages).data
-    assert(decoded.columns.toSeq ==
-      Seq("media_id", "format", "width", "height", "mean_intensity"))
-    assert(decoded.count() == 6)
-    val audio = Pipeline.run(spark, emptyMeds(docs), PipelineConfig.fromYaml(
-      "stages:\n  - as_media\n  - media_audio_decode\n").stages).data
-    assert(audio.columns.toSeq == Seq("media_id", "format", "sample_rate",
-      "channels", "bits", "n_frames", "duration_us", "mean_abs", "peak_abs",
-      "pcm_digest"))
-    assert(audio.count() == 6) // text payloads -> null-fielded rows
-    assert(audio.where(col("format").isNull).count() == 6)
   }
 
   test("corpus pipeline end-to-end through the CLI on a non-MEDS root") {

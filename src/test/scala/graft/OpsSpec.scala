@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.functions.GraftFunctions
 
-/** Dedup / similarity / text / multimodal operator behavior. */
+/** Dedup / similarity / text operator behavior. */
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -1007,691 +1007,6 @@ class TextAnalysisSpec extends SparkSpec {
     val got = TextAnalysis.languageId(d, "doc_id", "text").collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("lang_pred")).toMap
     assert(got == Map(0L -> "de", 1L -> "en", 2L -> "unknown"))
-  }
-}
-
-class MultimodalSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("media plumbing: payload bytes, digests, real decode, frame explosion") {
-    val docs = Seq((0L, "hello"), (1L, "worlds")).toDF("doc_id", "text")
-    val media = Multimodal.asMediaTable(docs, "doc_id", "text")
-    val meta = Multimodal.payloadMetadata(media).collect()
-      .map(r => r.getLong(0) -> r.getAs[Int]("n_bytes")).toMap
-    assert(meta == Map(0L -> 5, 1L -> 6))
-    // text payloads are not images: the real decoder must yield null-field
-    // rows (the corrupt-blob contract), never throw
-    val dec = Multimodal.decodeBatched(media).orderBy("media_id").collect()
-    assert(dec.length == 2 && dec.forall(r =>
-      r.isNullAt(1) && r.isNullAt(2) && r.isNullAt(3) && r.isNullAt(4)))
-    // frame sampling over non-image payloads: the n-row structural
-    // explosion survives, frame fields are null (corrupt-blob contract)
-    val frames = Multimodal.sampleFrames(media, 3).collect()
-    assert(frames.length == 6)
-    assert(frames.forall(r => r.isNullAt(2) && r.isNullAt(5)))
-    // resize over undecodable payloads: target dims survive, scales/digest null
-    val rz = Multimodal.resizeImages(media, 64, 32).orderBy("media_id").head()
-    assert(rz.getLong(1) == 64L && rz.getLong(2) == 32L)
-    assert(rz.isNullAt(3) && rz.isNullAt(4) && rz.isNullAt(5))
-  }
-
-  /** The reference pixel formula (ImageExpressions.scala:17-19), Scala-side. */
-  private def synthPixel(id: Long, s: Long, ch: Int): Int = {
-    val b = id % 251
-    val v = ch match {
-      case 0 => b + s
-      case 1 => b + 2 * s + 7
-      case _ => b + 3 * s + 13
-    }
-    (v % 256).toInt
-  }
-
-  test("decode parity: PngSynth payload -> ImageIO codec -> pixel formula, exact") {
-    val ids = Seq(0L, 1L, 7L, 42L, 250L, 251L, 1000L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.PngSynth.png(col("media_id"),
-          (col("media_id") % 8 + 4).cast("int"),
-          (col("media_id") % 7 + 3).cast("int")).as("payload"))
-    val got = Multimodal.decodeBatched(media).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    ids.foreach { id =>
-      val w = (id % 8 + 4).toInt
-      val h = (id % 7 + 3).toInt
-      var sum = 0L
-      (0L until w.toLong * h).foreach { s =>
-        sum += synthPixel(id, s, 0) + synthPixel(id, s, 1) + synthPixel(id, s, 2)
-      }
-      val r = got(id)
-      assert(r.getString(1) == "png", s"id=$id format")
-      assert(r.getLong(2) == w && r.getLong(3) == h, s"id=$id dims")
-      assert(r.getLong(4) == sum / (3L * w * h), s"id=$id mean intensity")
-    }
-    // header-parse agreement: imageDimensions reads the same dims without decode
-    val hdr = media.select(col("media_id"),
-        Multimodal.imageDimensions(col("payload")).as("d"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getStruct(1).getString(0), r.getStruct(1).getLong(1), r.getStruct(1).getLong(2))).toMap
-    ids.foreach { id =>
-      assert(hdr(id) == (("png", id % 8 + 4, id % 7 + 3)), s"id=$id header dims")
-    }
-  }
-
-  test("decode parity: JpegSynth payload -> JDK JPEG codec -> block formula, exact") {
-    // the LOSSY member of the codec matrix: DC-only blocks with q00 = 8 and
-    // chroma pinned at 128 decode bit-exactly (JpegSynth doc has the
-    // argument); this test is the empirical leg — JDK decoder vs formula
-    val ids = Seq(0L, 1L, 7L, 42L, 250L, 251L, 123456789L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.JpegSynth.jpeg(col("media_id"),
-          (col("media_id") % 5 + 1).cast("int"),
-          (col("media_id") % 3 + 1).cast("int")).as("payload"))
-    val got = Multimodal.decodeBatched(media).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    ids.foreach { id =>
-      val wb = (id % 5 + 1).toInt; val hb = (id % 3 + 1).toInt
-      val nb = wb * hb
-      val sum = (0L until nb.toLong)
-        .map(k => graft.plans.JpegSynth.blockGray(id, k).toLong).sum
-      val r = got(id)
-      assert(r.getString(1) == "jpeg", s"id=$id format")
-      assert(r.getLong(2) == wb * 8 && r.getLong(3) == hb * 8, s"id=$id dims")
-      // mean over all RGB samples = sum(64·3·g_k) / (3·64·nb) = sum(g)/nb
-      assert(r.getLong(4) == sum / nb, s"id=$id mean intensity")
-    }
-    // every pixel of every block, not just the mean: decode driver-side
-    ids.take(3).foreach { id =>
-      val wb = (id % 5 + 1).toInt; val hb = (id % 3 + 1).toInt
-      val bytes = graft.plans.JpegSynth.compute(id, wb, hb)
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      for (y <- 0 until hb * 8; x <- 0 until wb * 8) {
-        val g = graft.plans.JpegSynth.blockGray(id, (y / 8).toLong * wb + x / 8)
-        val p = img.getRGB(x, y)
-        assert(((p >>> 16) & 0xff) == g && ((p >>> 8) & 0xff) == g &&
-          (p & 0xff) == g, s"id=$id pixel ($x,$y)")
-      }
-    }
-    // null contract: out-of-range block counts yield a null payload (and
-    // so a null-field decoded row), never a thrown scan failure
-    assert(graft.plans.JpegSynth.compute(1L, 0, 1) == null)
-    assert(graft.plans.WavSynth.compute(1L, -1, 8000) == null)
-    val badRow = Multimodal.decodeBatched(
-      Seq(5L).toDF("media_id").select(col("media_id"),
-        graft.plans.JpegSynth.jpeg(col("media_id"), lit(-1), lit(1)).as("payload")))
-      .head()
-    assert(badRow.isNullAt(1) && badRow.isNullAt(4))
-  }
-
-  test("video parity: AviSynth MJPEG payload -> container walk + JDK JPEG -> per-frame formula") {
-    val ids = Seq(0L, 1L, 7L, 42L, 250L, 251L, 999L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.AviSynth.avi(col("media_id"),
-          (col("media_id") % 4 + 1).cast("int"),
-          (col("media_id") % 2 + 1).cast("int"),
-          (col("media_id") % 3 + 2).cast("int")).as("payload"))
-    val got = Multimodal.videoFrames(media).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
-    ids.foreach { id =>
-      val wb = (id % 4 + 1).toInt; val hb = (id % 2 + 1).toInt
-      val nf = (id % 3 + 2).toInt
-      val nb = wb * hb
-      (0 until nf).foreach { f =>
-        val sum = (0L until nb.toLong)
-          .map(k => graft.plans.JpegSynth.blockGray(id + 89L * f, k).toLong).sum
-        val r = got((id, f.toLong))
-        assert(r.getString(2) == "avi" && r.getString(3) == "jpeg",
-          s"id=$id f=$f container/format")
-        assert(r.getLong(4) == wb * 8 && r.getLong(5) == hb * 8, s"id=$id f=$f dims")
-        assert(r.getLong(6) == sum / nb, s"id=$id f=$f mean intensity")
-      }
-    }
-    assert(got.size == ids.map(id => (id % 3 + 2).toInt).sum,
-      "one row per (payload, frame), nothing extra")
-    // independent leg: slice the frame bytes out with plain RIFF arithmetic
-    // and hand them to ImageIO DIRECTLY — a videoFrames bug cannot hide
-    // behind its own parser
-    val id = 42L
-    val bytes = graft.plans.AviSynth.compute(id, 3, 2, 4)
-    def le32(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-      ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-    assert(new String(bytes, 0, 4, "US-ASCII") == "RIFF" &&
-      new String(bytes, 8, 4, "US-ASCII") == "AVI ")
-    assert(le32(4) == bytes.length - 8, "RIFF size covers the whole payload")
-    var pos = 12
-    var framesSeen = 0
-    while (pos + 8 <= bytes.length) {
-      val fcc = new String(bytes, pos, 4, "US-ASCII")
-      val size = le32(pos + 4)
-      if (fcc == "LIST" && new String(bytes, pos + 8, 4, "US-ASCII") == "movi") {
-        var sp = pos + 12
-        while (sp + 8 <= pos + 8 + size) {
-          assert(new String(bytes, sp, 4, "US-ASCII") == "00dc")
-          val fsz = le32(sp + 4)
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
-            java.util.Arrays.copyOfRange(bytes, sp + 8, sp + 8 + fsz)))
-          val g0 = graft.plans.JpegSynth.blockGray(id + 89L * framesSeen, 0L)
-          assert((img.getRGB(0, 0) & 0xff) == g0,
-            s"frame $framesSeen block-0 gray via direct ImageIO")
-          framesSeen += 1
-          sp += 8 + fsz + (fsz & 1)
-        }
-      }
-      pos += 8 + size + (size & 1)
-    }
-    assert(framesSeen == 4, "movi carries exactly nf frames")
-    // corrupt-blob contract: non-AVI bytes and truncated containers yield
-    // ONE null-fielded row, never a scan failure
-    val bad = Seq(
-      (1L, "not an avi".getBytes("US-ASCII")),
-      (2L, java.util.Arrays.copyOfRange(bytes, 0, bytes.length / 2)),
-      (3L, null.asInstanceOf[Array[Byte]]))
-      .toDF("media_id", "payload")
-    val badRows = Multimodal.videoFrames(bad).orderBy("media_id").collect()
-    assert(badRows.length == 3 && badRows.forall(r =>
-      r.isNullAt(1) && r.isNullAt(2) && r.isNullAt(6)))
-    // partitioning invariance: the per-partition cached decoder is an
-    // optimization, not a semantic
-    val rep = Multimodal.videoFrames(media.repartition(7)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(6))).toSet
-    assert(rep == got.values.map(r => (r.getLong(0), r.getLong(1), r.getLong(6))).toSet)
-  }
-
-  test("frame parity: GifSynth payload -> ImageIO GIF reader -> per-frame formula, exact") {
-    val ids = Seq(0L, 1L, 9L, 250L, 777L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.GifSynth.gif(col("media_id"),
-          (col("media_id") % 6 + 3).cast("int"),
-          (col("media_id") % 5 + 3).cast("int"),
-          (col("media_id") % 4 + 2).cast("int")).as("payload"))
-    val got = Multimodal.sampleFrames(media, n = 4).collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> r).toMap
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    ids.foreach { id =>
-      val w = (id % 6 + 3).toInt; val h = (id % 5 + 3).toInt
-      val frames = (id % 4 + 2).toInt
-      (0 until 4).foreach { j =>
-        val idx = (j.toLong * (frames - 1) / 3).toInt
-        val vs = (0 until w * h).map(s => ((id % 251 + s + 17L * idx) % 256).toInt)
-        md.reset()
-        val expect = md.digest(vs.map(v => f"$v%02x").mkString.getBytes("US-ASCII"))
-          .map("%02x".format(_)).mkString
-        val r = got((id, j))
-        assert(r.getLong(2) == idx && r.getLong(3) == frames, s"id=$id j=$j idx")
-        assert(r.getLong(4) == 3L * vs.sum / (3L * w * h), s"id=$id j=$j mean")
-        assert(r.getString(5) == expect, s"id=$id j=$j digest")
-      }
-    }
-  }
-
-  test("audio parity: WavSynth payload -> javax.sound decoder -> sample formula, exact") {
-    val ids = Seq(0L, 1L, 8L, 42L, 250L, 251L, 999L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.WavSynth.wav(col("media_id"),
-          (col("media_id") % 50 + 10).cast("int"),
-          (col("media_id") % 3 * 4000 + 8000).cast("int")).as("payload"))
-    val got = Multimodal.decodeAudio(media).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    ids.foreach { id =>
-      val n = (id % 50 + 10).toInt
-      val rate = (id % 3 * 4000 + 8000).toInt
-      val v16s = (0 until n).map(i => ((id % 251 + 37L * i) % 65536).toInt)
-      val abss = v16s.map(v => if (v >= 32768) 65536 - v else v)
-      md.reset()
-      val expect = md.digest(v16s.map(v => f"$v%04x").mkString.getBytes("US-ASCII"))
-        .map("%02x".format(_)).mkString
-      val r = got(id)
-      assert(r.getString(1) == "wave", s"id=$id format")
-      assert(r.getLong(2) == rate && r.getLong(3) == 1L && r.getLong(4) == 16L,
-        s"id=$id declared format fields")
-      assert(r.getLong(5) == n, s"id=$id frames")
-      assert(r.getLong(6) == n.toLong * 1000000L / rate, s"id=$id duration")
-      assert(r.getLong(7) == abss.map(_.toLong).sum / n, s"id=$id mean")
-      assert(r.getLong(8) == abss.max.toLong, s"id=$id peak")
-      assert(r.getString(9) == expect, s"id=$id digest")
-    }
-    // corrupt / non-audio payloads: null-fielded rows, never a scan failure
-    val bad = Seq((0L, Array[Byte](82, 73, 70, 70)), (1L, "not audio".getBytes))
-      .toDF("media_id", "payload")
-    val badRows = Multimodal.decodeAudio(bad).collect()
-    assert(badRows.length == 2 && badRows.forall(r => (1 to 9).forall(r.isNullAt)))
-  }
-
-  test("ulaw parity: AuSynth payload -> AU reader + g711 expansion -> formula, exact") {
-    // reference expansion (the oracle's arithmetic, Scala-side)
-    def expand(u: Int): Int = {
-      val v = ~u & 0xff
-      val t = (((v & 0x0f) << 3) + 0x84) << ((v & 0x70) >> 4)
-      if ((v & 0x80) != 0) 0x84 - t else t - 0x84
-    }
-    // cross-check the arithmetic against the JDK's OWN μ-law codec: decode
-    // an AU payload through AudioSystem's ULAW→PCM_SIGNED conversion and
-    // compare sample-by-sample — two independent implementations of G.711
-    val id = 42L
-    val n = 256 // one full period: every μ-law code point
-    val au = graft.plans.AuSynth.compute(id, n, 8000)
-    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(au))
-    val pcm = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false), ais)
-    val raw = pcm.readAllBytes()
-    assert(raw.length == 2 * n)
-    (0 until n).foreach { i =>
-      val jdk = ((raw(2 * i + 1) << 8) | (raw(2 * i) & 0xff)).toShort.toInt
-      val mine = expand(graft.plans.AuSynth.ulawByte(id, i))
-      assert(jdk == mine, s"sample $i: jdk=$jdk g711=$mine")
-    }
-    // engine path: decodeAudio over AU payloads matches the formula
-    val ids = Seq(0L, 1L, 8L, 250L, 999L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.AuSynth.au(col("media_id"),
-          (col("media_id") % 60 + 20).cast("int"), lit(8000)).as("payload"))
-    val got = Multimodal.decodeAudio(media).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    ids.foreach { mid =>
-      val cnt = (mid % 60 + 20).toInt
-      val svs = (0 until cnt).map(i => expand(graft.plans.AuSynth.ulawByte(mid, i)))
-      md.reset()
-      val expect = md.digest(svs.map(v => f"${v & 0xffff}%04x").mkString
-        .getBytes("US-ASCII")).map("%02x".format(_)).mkString
-      val r = got(mid)
-      assert(r.getString(1) == "au", s"id=$mid format")
-      assert(r.getLong(2) == 8000L && r.getLong(3) == 1L && r.getLong(4) == 8L,
-        s"id=$mid declared fields")
-      assert(r.getLong(5) == cnt && r.getLong(6) == cnt.toLong * 1000000L / 8000,
-        s"id=$mid frames/duration")
-      assert(r.getLong(7) == svs.map(v => math.abs(v).toLong).sum / cnt, s"id=$mid mean")
-      assert(r.getLong(8) == svs.map(v => math.abs(v).toLong).max, s"id=$mid peak")
-      assert(r.getString(9) == expect, s"id=$mid digest")
-    }
-  }
-
-  test("ima adpcm parity: AdpcmSynth payload -> engine predictor decode -> recurrence, exact") {
-    // independent replay of the published IMA recurrence (the oracle's
-    // arithmetic, Scala-side): per block, predictor/index seed 0/0, the
-    // header predictor is sample 0, nibbles decode low-first
-    val step = Array(7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25,
-      28, 31, 34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118,
-      130, 143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449,
-      494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
-      1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
-      4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635,
-      13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767)
-    def samples(id: Long, n: Int): IndexedSeq[Int] =
-      (0 until (n + 16) / 17).flatMap { blk =>
-        var pred = 0; var idx = 0
-        Iterator.single(0) ++ (0 until 16).iterator.map { j =>
-          val nib = ((id % 251 + 7L * (blk * 16 + j)) % 16).toInt
-          val s = step(idx)
-          var d = s >> 3
-          if ((nib & 4) != 0) d += s
-          if ((nib & 2) != 0) d += s >> 1
-          if ((nib & 1) != 0) d += s >> 2
-          pred = math.max(-32768, math.min(32767,
-            if ((nib & 8) != 0) pred - d else pred + d))
-          idx = math.max(0, math.min(88, idx +
-            (if ((nib & 7) < 4) -1 else 2 * ((nib & 7) - 3))))
-          pred
-        }
-      }.take(n)
-    val ids = Seq(0L, 1L, 8L, 42L, 250L, 251L, 999L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.AdpcmSynth.adpcm(col("media_id"),
-          (col("media_id") % 80 + 20).cast("int"),
-          (col("media_id") % 3 * 4000 + 8000).cast("int")).as("payload"))
-    val got = Multimodal.decodeAudio(media).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    ids.foreach { id =>
-      val n = (id % 80 + 20).toInt
-      val rate = (id % 3 * 4000 + 8000).toInt
-      val svs = samples(id, n)
-      md.reset()
-      val expect = md.digest(svs.map(v => f"${v & 0xffff}%04x").mkString
-        .getBytes("US-ASCII")).map("%02x".format(_)).mkString
-      val r = got(id)
-      assert(r.getString(1) == "wave", s"id=$id format")
-      assert(r.getLong(2) == rate && r.getLong(3) == 1L && r.getLong(4) == 4L,
-        s"id=$id declared fields")
-      assert(r.getLong(5) == n && r.getLong(6) == n.toLong * 1000000L / rate,
-        s"id=$id frames/duration")
-      assert(r.getLong(7) == svs.map(v => math.abs(v).toLong).sum / n, s"id=$id mean")
-      assert(r.getLong(8) == svs.map(v => math.abs(v).toLong).max, s"id=$id peak")
-      assert(r.getString(9) == expect, s"id=$id digest")
-    }
-    // malformed IMA payloads take the null row, never a scan failure — and
-    // a PCM WAVE is untouched by the ADPCM branch (provider path decodes it)
-    val good = graft.plans.AdpcmSynth.compute(3L, 40, 8000)
-    // header intact, data chunk declared longer than the buffer holds
-    val truncated = java.util.Arrays.copyOfRange(good, 0, good.length - 8)
-    val stereo = good.clone()
-    stereo(22) = 2 // channels=2: unsupported layout for the mono decoder
-    val rows = Multimodal.decodeAudio(Seq(
-      (0L, truncated), (1L, stereo),
-      (2L, graft.plans.WavSynth.compute(7L, 25, 8000))
-    ).toDF("media_id", "payload")).collect().sortBy(_.getLong(0))
-    assert((1 to 9).forall(rows(0).isNullAt), "truncated adpcm -> null row")
-    assert((1 to 9).forall(rows(1).isNullAt), "stereo adpcm -> null row")
-    assert(rows(2).getLong(4) == 16L, "pcm wave still takes the provider path")
-  }
-
-  test("audio decode: long clips cross the frame buffer; stereo halves frames") {
-    // 10000 samples > the decoder's 4096-frame read buffer: statistics must
-    // be identical to a single-buffer pass (streamed digest, no truncation)
-    val id = 17L
-    val long = Seq((id, graft.plans.WavSynth.compute(id, 10000, 8000)))
-      .toDF("media_id", "payload")
-    val r = Multimodal.decodeAudio(long).head()
-    val v16s = (0 until 10000).map(i => ((id % 251 + 37L * i) % 65536).toInt)
-    val abss = v16s.map(v => if (v >= 32768) 65536 - v else v)
-    assert(r.getLong(5) == 10000L && r.getLong(7) == abss.map(_.toLong).sum / 10000)
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val expect = md.digest(v16s.map(v => f"$v%04x").mkString.getBytes("US-ASCII"))
-      .map("%02x".format(_)).mkString
-    assert(r.getString(9) == expect)
-    // stereo: patch the mono header (channels@22=2, byteRate@28=4*rate,
-    // blockAlign@32=4) — same PCM bytes now read as n/2 interleaved frames;
-    // per-sample statistics are unchanged, frame count and duration halve
-    val st = graft.plans.WavSynth.compute(id, 10000, 8000).clone()
-    st(22) = 2; st(28) = ((8000 * 4) & 0xff).toByte
-    st(29) = (((8000 * 4) >> 8) & 0xff).toByte; st(32) = 4
-    val r2 = Multimodal.decodeAudio(
-      Seq((id, st)).toDF("media_id", "payload")).head()
-    assert(r2.getLong(3) == 2L && r2.getLong(5) == 5000L)
-    assert(r2.getLong(6) == 5000L * 1000000L / 8000)
-    assert(r2.getLong(7) == r.getLong(7) && r2.getString(9) == r.getString(9))
-  }
-
-  test("audio decode: big-endian AIFF exercises the decoder's byte-order branch") {
-    // hand-built minimal AIFF (FORM/AIFF + COMM with the rate as an 80-bit
-    // extended float + SSND), samples big-endian from the same WavSynth
-    // formula: statistics and digest must match the little-endian WAV path
-    val id = 42L; val n = 300
-    val v16s = (0 until n).map(i => graft.plans.WavSynth.sample(id, i))
-    val bb = java.nio.ByteBuffer.allocate(12 + 26 + 16 + 2 * n)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    bb.put("FORM".getBytes("US-ASCII")); bb.putInt(4 + 26 + 16 + 2 * n)
-    bb.put("AIFF".getBytes("US-ASCII"))
-    bb.put("COMM".getBytes("US-ASCII")); bb.putInt(18)
-    bb.putShort(1); bb.putInt(n); bb.putShort(16)
-    // 8000.0 as 80-bit IEEE extended: exp 16383+12, mantissa 0x1F40 << 51
-    bb.put(Array[Byte](0x40, 0x0b, 0xfa.toByte, 0, 0, 0, 0, 0, 0, 0))
-    bb.put("SSND".getBytes("US-ASCII")); bb.putInt(8 + 2 * n)
-    bb.putInt(0); bb.putInt(0)
-    v16s.foreach(v => bb.putShort(v.toShort))
-    val r = Multimodal.decodeAudio(
-      Seq((id, bb.array())).toDF("media_id", "payload")).head()
-    val abss = v16s.map(v => if (v >= 32768) 65536 - v else v)
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val expect = md.digest(v16s.map(v => f"$v%04x").mkString.getBytes("US-ASCII"))
-      .map("%02x".format(_)).mkString
-    assert(r.getString(1) == "aiff")
-    assert(r.getLong(2) == 8000L && r.getLong(3) == 1L && r.getLong(5) == n)
-    assert(r.getLong(7) == abss.map(_.toLong).sum / n)
-    assert(r.getLong(8) == abss.max.toLong)
-    assert(r.getString(9) == expect)
-  }
-
-  test("resize parity: fixed-point bilinear matches an independent integer replay") {
-    val ids = Seq(3L, 11L, 123L)
-    val media = ids.toDF("media_id")
-      .select(col("media_id"),
-        graft.plans.PngSynth.png(col("media_id"),
-          (col("media_id") % 8 + 4).cast("int"),
-          (col("media_id") % 7 + 3).cast("int")).as("payload"))
-    val got = Multimodal.resizeImages(media, targetW = 8, targetH = 8)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    ids.foreach { id =>
-      val w = (id % 8 + 4).toInt
-      val h = (id % 7 + 3).toInt
-      val sb = new StringBuilder
-      (0 until 8).foreach { ty =>
-        val fy = ty.toLong * (h - 1) * 65536L / 7
-        val y0 = (fy >> 16).toInt; val dy = fy & 0xffffL
-        val y1 = math.min(y0 + 1, h - 1)
-        (0 until 8).foreach { tx =>
-          val fx = tx.toLong * (w - 1) * 65536L / 7
-          val x0 = (fx >> 16).toInt; val dx = fx & 0xffffL
-          val x1 = math.min(x0 + 1, w - 1)
-          (0 until 3).foreach { ch =>
-            val p00 = synthPixel(id, y0.toLong * w + x0, ch)
-            val p01 = synthPixel(id, y0.toLong * w + x1, ch)
-            val p10 = synthPixel(id, y1.toLong * w + x0, ch)
-            val p11 = synthPixel(id, y1.toLong * w + x1, ch)
-            val top = p00 * (65536L - dx) + p01 * dx
-            val bot = p10 * (65536L - dx) + p11 * dx
-            val v = ((top * (65536L - dy) + bot * dy + (1L << 31)) >> 32).toInt
-            sb.append(f"$v%02x")
-          }
-        }
-      }
-      md.reset()
-      val expect = md.digest(sb.toString.getBytes("US-ASCII"))
-        .map("%02x".format(_)).mkString
-      val r = got(id)
-      assert(r.getLong(1) == 8L && r.getLong(2) == 8L)
-      assert(r.getDouble(3) == BigDecimal(w / 8.0).setScale(4,
-        BigDecimal.RoundingMode.HALF_UP).toDouble, s"id=$id scale_x")
-      assert(r.getString(5) == expect, s"id=$id digest")
-    }
-  }
-
-  test("imageDimensions parses real PNG/GIF/BMP headers; garbage yields null") {
-    def beInt(v: Int): Array[Byte] = Array(
-      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-    def leShort(v: Int): Array[Byte] = Array(v.toByte, (v >> 8).toByte)
-    def leInt(v: Int): Array[Byte] = Array(
-      v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    // minimal REAL container headers, byte-for-byte per spec
-    val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A) ++
-      beInt(13) ++ "IHDR".getBytes ++ beInt(640) ++ beInt(480)
-    val gif = "GIF89a".getBytes ++ leShort(320) ++ leShort(200) ++ Array[Byte](0, 0, 0)
-    val bmpTopDown = "BM".getBytes ++ leInt(26) ++ leInt(0) ++ leInt(26) ++
-      leInt(12) ++ leInt(800) ++ leInt(-600) // negative height = top-down
-    val junk = "definitely not an image".getBytes
-    val truncatedPng = png.take(12) // signature ok, IHDR cut off
-    // minimal REAL JPEG: SOI, APP0 (JFIF shell), a COM segment (exercises
-    // the variable-offset walk), then SOF0 with height=1080 width=1920
-    def beShort(v: Int): Array[Byte] = Array((v >> 8).toByte, v.toByte)
-    val jpeg = Array[Byte](0xFF.toByte, 0xD8.toByte) ++
-      Array[Byte](0xFF.toByte, 0xE0.toByte) ++ beShort(16) ++
-      "JFIF".getBytes ++ Array.fill[Byte](10)(0) ++
-      Array[Byte](0xFF.toByte, 0xFE.toByte) ++ beShort(9) ++ "comment".getBytes ++
-      Array[Byte](0xFF.toByte, 0xC0.toByte) ++ beShort(11) ++ Array[Byte](8) ++
-      beShort(1080) ++ beShort(1920) ++ Array[Byte](1, 1, 0x11, 0)
-    val jpegNoSof = jpeg.take(24) ++ Array[Byte](0xFF.toByte, 0xD9.toByte) // truncated mid-COM
-    // SOI then a trailing 0xFF fill-byte run: the skip loop must not walk
-    // past the end looking for the length field (regression: AIOOBE)
-    val jpegFfRun = Array.fill[Byte](8)(0xFF.toByte)
-    jpegFfRun(1) = 0xD8.toByte
-    val rows = Seq(
-      (1L, png), (2L, gif), (3L, bmpTopDown), (4L, junk), (5L, truncatedPng),
-      (6L, null.asInstanceOf[Array[Byte]]), (7L, jpeg), (8L, jpegNoSof),
-      (9L, jpegFfRun)
-    ).toDF("media_id", "payload")
-    val got = rows.select(col("media_id"),
-      Multimodal.imageDimensions(col("payload")).as("dim"))
-      .collect().map { r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) null
-          else { val s = r.getStruct(1); (s.getString(0), s.getLong(1), s.getLong(2)) })
-      }.toMap
-    assert(got(1L) == ("png", 640L, 480L))
-    assert(got(2L) == ("gif", 320L, 200L))
-    assert(got(3L) == ("bmp", 800L, 600L)) // magnitude of the signed height
-    assert(got(4L) == null && got(5L) == null && got(6L) == null)
-    assert(got(7L) == ("jpeg", 1920L, 1080L)) // SOF found past APP0 + COM
-    assert(got(8L) == null) // truncated before any frame header
-    assert(got(9L) == null) // trailing 0xFF run: null, not AIOOBE
-  }
-
-  test("audioMetadata parses a real WAV header; chunk order and padding tolerated") {
-    def le16(v: Int): Array[Byte] = Array(v.toByte, (v >> 8).toByte)
-    def le32(v: Int): Array[Byte] = Array(
-      v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    // 2ch 16-bit 44100Hz, 441 frames (10ms); an odd-sized LIST chunk BEFORE
-    // fmt exercises the walk + word-alignment padding
-    val list = "LIST".getBytes ++ le32(5) ++ "INFOx".getBytes ++ Array[Byte](0) // pad
-    val fmt = "fmt ".getBytes ++ le32(16) ++ le16(1) ++ le16(2) ++ le32(44100) ++
-      le32(44100 * 4) ++ le16(4) ++ le16(16)
-    val dataBytes = 441 * 4
-    val data = "data".getBytes ++ le32(dataBytes) ++ Array.fill[Byte](dataBytes)(0)
-    val body = list ++ fmt ++ data
-    val wav = "RIFF".getBytes ++ le32(4 + body.length) ++ "WAVE".getBytes ++ body
-    val rows = Seq(
-      (1L, wav),
-      (2L, "RIFFxxxxNOPE".getBytes), // RIFF but not WAVE
-      (3L, wav.take(30)) // truncated mid-fmt
-    ).toDF("media_id", "payload")
-    val got = rows.select(col("media_id"),
-      Multimodal.audioMetadata(col("payload")).as("a"))
-      .collect().map { r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) null else {
-          val s = r.getStruct(1)
-          (s.getString(0), s.getLong(1), s.getLong(2), s.getLong(3), s.getLong(4),
-            s.getDouble(5))
-        })
-      }.toMap
-    assert(got(1L) == ("wav", 2L, 44100L, 16L, 441L, 0.01))
-    assert(got(2L) == null && got(3L) == null)
-  }
-
-  test("mp3Metadata: ID3v2 skip, false-sync resync, CBR duration; corrupt null") {
-    // MPEG1 Layer III 128kbps 44100Hz no-CRC header: FF FB 90 C0
-    val header = Array[Byte](0xFF.toByte, 0xFB.toByte, 0x90.toByte, 0xC0.toByte)
-    val frames = header ++ Array.fill[Byte](996)(0) // 1000 audio bytes
-    // ID3v2.4 tag, 200-byte body (syncsafe 0x00 0x00 0x01 0x48)
-    val id3 = "ID3".getBytes ++ Array[Byte](4, 0, 0, 0, 0, 1, 0x48) ++
-      Array.fill[Byte](200)(0)
-    // tag body containing a false sync with a bad bitrate index (0xF)
-    val falseSync = Array[Byte](0xFF.toByte, 0xE2.toByte, 0xF0.toByte, 0)
-    val rows = Seq(
-      (1L, id3 ++ frames),               // tag skipped
-      (2L, frames),                      // bare frame stream
-      (3L, falseSync ++ frames),         // resync past the bad candidate
-      (4L, "ID3\u0004\u0000\u0000".getBytes), // truncated tag, no frames
-      (5L, Array.fill[Byte](64)(0x11))   // no sync at all
-    ).toDF("media_id", "payload")
-    val got = rows.select(col("media_id"),
-      Multimodal.mp3Metadata(col("payload")).as("a"))
-      .collect().map { r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) null else {
-          val s = r.getStruct(1)
-          (s.getString(0), s.getLong(1), s.getLong(2), s.getLong(3), s.getLong(4),
-            s.getDouble(5))
-        })
-      }.toMap
-    val expect = ("mp3", 3L, 128L, 44100L, 1000L, 1000 * 8.0 / 128000.0)
-    assert(got(1L) == expect)
-    assert(got(2L) == expect)
-    assert(got(3L) == expect) // audio_bytes counts from the REAL header
-    assert(got(4L) == null && got(5L) == null)
-    // MPEG2 Layer II uses the shared V2 table and the MPEG2 rate row:
-    // FF F4 50 C0 = MPEG2, Layer II, idx 5 -> 40kbps, idx 0 -> 22050Hz
-    val v2 = Seq((1L, Array[Byte](0xFF.toByte, 0xF4.toByte, 0x50.toByte,
-      0xC0.toByte) ++ Array.fill[Byte](96)(0))).toDF("media_id", "payload")
-    val s2 = v2.select(Multimodal.mp3Metadata(col("payload")).as("a"))
-      .head().getStruct(0)
-    assert((s2.getLong(1), s2.getLong(2), s2.getLong(3)) == ((2L, 40L, 22050L)))
-  }
-
-  test("videoMetadata walks real MP4 box trees; corrupt payloads yield null") {
-    def be32(v: Long): Array[Byte] = Array(
-      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-    def be64(v: Long): Array[Byte] = be32(v >>> 32) ++ be32(v & 0xffffffffL)
-    def box(typ: String, content: Array[Byte]): Array[Byte] =
-      be32(content.length + 8L) ++ typ.getBytes ++ content
-    val ftyp = box("ftyp", "isom".getBytes ++ be32(0x200) ++ "isom".getBytes)
-    // full spec-length bodies (parser only reads the leading fields, but the
-    // box sizes must bookkeep exactly like a real muxer's output)
-    def mvhd0(ts: Int, dur: Int): Array[Byte] =
-      box("mvhd", be32(0) ++ be32(0) ++ be32(0) ++ be32(ts) ++ be32(dur) ++
-        Array.fill[Byte](80)(0))
-    def mvhd1(ts: Int, dur: Long): Array[Byte] =
-      box("mvhd", be32(0x01000000L) ++ be64(0) ++ be64(0) ++ be32(ts) ++
-        be64(dur) ++ Array.fill[Byte](80)(0))
-    def tkhd0(w: Int, h: Int): Array[Byte] =
-      box("tkhd", be32(7) ++ be32(0) ++ be32(0) ++ be32(1) ++ be32(0) ++
-        be32(0) ++ Array.fill[Byte](16)(0) ++ Array.fill[Byte](36)(0) ++
-        be32(w.toLong << 16) ++ be32(h.toLong << 16))
-    def tkhd1(w: Int, h: Int): Array[Byte] =
-      box("tkhd", be32(0x01000007L) ++ be64(0) ++ be64(0) ++ be32(1) ++
-        be32(0) ++ be64(0) ++ Array.fill[Byte](16)(0) ++ Array.fill[Byte](36)(0) ++
-        be32(w.toLong << 16) ++ be32(h.toLong << 16))
-    def trak(tkhd: Array[Byte]): Array[Byte] = box("trak", tkhd)
-
-    val v0 = ftyp ++ box("moov", mvhd0(1000, 5000) ++ trak(tkhd0(1280, 720)))
-    val v1 = ftyp ++ box("moov", mvhd1(600, 4200L) ++ trak(tkhd1(1920, 1080)))
-    // audio track (0x0) first: the walk must skip to the video trak
-    val twoTraks = ftyp ++ box("moov",
-      mvhd0(90000, 90000) ++ trak(tkhd0(0, 0)) ++ trak(tkhd0(640, 480)))
-    val audioOnly = ftyp ++ box("moov", mvhd0(48000, 96000) ++ trak(tkhd0(0, 0)))
-    // free box first, then a size==0 moov extending to end-of-payload
-    val moovContent = mvhd0(25, 100) ++ trak(tkhd0(320, 240))
-    val sizeZero = ftyp ++ box("free", Array.fill[Byte](4)(0)) ++
-      be32(0) ++ "moov".getBytes ++ moovContent
-    // size==1: 64-bit largesize follows the type field
-    val largesize = ftyp ++ be32(1) ++ "moov".getBytes ++
-      be64(moovContent.length + 16L) ++ moovContent
-    val truncated = v0.take(40) // cut mid-moov
-    val noMvhd = ftyp ++ box("moov", trak(tkhd0(100, 100)))
-    // child trak declares a size overrunning its moov parent: corrupt
-    val overrun = ftyp ++ box("moov", mvhd0(1000, 1000) ++
-      be32(1 << 20) ++ "trak".getBytes)
-    val garbage = "not remotely an mp4 container...".getBytes
-
-    val rows = Seq(
-      (1L, v0), (2L, v1), (3L, twoTraks), (4L, audioOnly), (5L, sizeZero),
-      (6L, largesize), (7L, truncated), (8L, noMvhd), (9L, overrun),
-      (10L, garbage), (11L, null.asInstanceOf[Array[Byte]])
-    ).toDF("media_id", "payload")
-    val got = rows.select(col("media_id"),
-      Multimodal.videoMetadata(col("payload")).as("v"))
-      .collect().map { r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) null else {
-          val s = r.getStruct(1)
-          (s.getString(0), s.getLong(1), s.getLong(2), s.getLong(3), s.getLong(4),
-            s.getDouble(5))
-        })
-      }.toMap
-    assert(got(1L) == ("mp4", 1000L, 5000L, 1280L, 720L, 5.0))
-    assert(got(2L) == ("mp4", 600L, 4200L, 1920L, 1080L, 7.0)) // v1 64-bit duration
-    assert(got(3L) == ("mp4", 90000L, 90000L, 640L, 480L, 1.0)) // skips 0x0 audio trak
-    assert(got(4L) == ("mp4", 48000L, 96000L, 0L, 0L, 2.0)) // audio-only: 0x0, not null
-    assert(got(5L) == ("mp4", 25L, 100L, 320L, 240L, 4.0)) // size==0 to end-of-file
-    assert(got(6L) == ("mp4", 25L, 100L, 320L, 240L, 4.0)) // 64-bit largesize header
-    assert(got(7L) == null && got(8L) == null && got(9L) == null)
-    assert(got(10L) == null && got(11L) == null)
-  }
-
-  test("batched decode is partitioning-invariant and null-safe on mixed payloads") {
-    // 50 real PNGs + interleaved garbage payloads, shuffled across 4
-    // partitions: results must be identical to the single-partition run,
-    // and every garbage row must decode to a null-field row in place
-    val media = (0 until 50).map(_.toLong).toDF("media_id")
-      .select(col("media_id"),
-        when(col("media_id") % 5 === 0, lit("not an image".getBytes))
-          .otherwise(graft.plans.PngSynth.png(col("media_id"),
-            (col("media_id") % 6 + 2).cast("int"),
-            (col("media_id") % 5 + 2).cast("int"))).as("payload"))
-    def run(df: org.apache.spark.sql.DataFrame) =
-      Multimodal.decodeBatched(df).collect()
-        .map(r => (r.getLong(0),
-          if (r.isNullAt(1)) null else r.getString(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2),
-          if (r.isNullAt(4)) -1L else r.getLong(4))).toSet
-    val one = run(media.coalesce(1))
-    val four = run(media.repartition(4))
-    assert(one == four)
-    assert(one.count(_._2 == null) == 10) // every media_id % 5 == 0 row
-    assert(one.count(_._2 == "png") == 40)
   }
 }
 

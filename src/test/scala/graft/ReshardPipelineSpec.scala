@@ -219,6 +219,21 @@ class ReshardPipelineSpec extends SparkSpec {
     assert(back.data.count() == 24)
   }
 
+  test("an empty resharded frame writes a complete root that reads back with an integer shard") {
+    val splits = splitsDf(12)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_empty_reshard").toString
+    val resharded = ReshardToSplit.applyAssigned(eventsFor(splits).filter(lit(false)),
+      ReshardToSplit.assignShardsDistributed(splits, nShards = 2))
+    MedsIO.write(MedsData(resharded, Seq.empty[String].toDF(Code), splits), s"$tmp/d")
+    assert(new java.io.File(s"$tmp/d/${MedsIO.CompleteMarker}").exists())
+    assert(new java.io.File(s"$tmp/d/data/empty.parquet").isFile)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$tmp/d/.shards.json")) == "{}")
+    val back = MedsIO.read(spark, s"$tmp/d")
+    assert(back.data.count() == 0)
+    assert(back.data.schema(Shard).dataType.typeName == "integer")
+    assert(back.data.columns.toSet == resharded.columns.toSet)
+  }
+
   test("reshard_to_split fails fast when no split information exists (no silent zero-row output)") {
     // flat layout (split = "") and no splits table: the assignment would be
     // empty and the inner join would silently drop every row

@@ -274,12 +274,6 @@ class GraftExtensionsSpec extends SparkSpec {
         |FROM (SELECT graft_kll_agg(CAST(id AS DOUBLE), 200) AS s
         |      FROM range(1, 101))""".stripMargin).head()
     assert(kll.getDouble(0) == 50.0 && kll.getDouble(1) == 0.25)
-    // media parsers: null-safe over a non-media payload (null result, no throw)
-    val m = spark.sql("SELECT graft_jpeg_dimensions(CAST('zz' AS BINARY)) j, " +
-      "graft_wav_metadata(CAST('zz' AS BINARY)) w, " +
-      "graft_mp3_metadata(CAST('zz' AS BINARY)) a, " +
-      "graft_mp4_metadata(CAST('zz' AS BINARY)) v").head()
-    assert((0 to 3).forall(m.isNullAt))
   }
 
   test("non-literal config argument raises a readable analysis error") {

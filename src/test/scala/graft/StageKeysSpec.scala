@@ -18,9 +18,7 @@ class StageKeysSpec extends SparkSpec {
   private val minimal: Map[String, String] = Map(
     "add_time_derived_measurements" -> "{time_of_day: {endpoints: [6]}}",
     "aggregate_code_metadata" -> "{}",
-    "as_media" -> "{}",
     "asof_join" -> "{keys: [k], right_path: /x, left_time: t, right_time: t, value_cols: [v]}",
-    "audio_metadata" -> "{}",
     "bin_numeric_values" -> "{}",
     "bpe_encode" -> "{}",
     "bpe_train" -> "{model_path: /x}",
@@ -51,15 +49,7 @@ class StageKeysSpec extends SparkSpec {
     "load_csv" -> "{path: /x}",
     "load_jsonl" -> "{path: /x}",
     "load_orc" -> "{path: /x}",
-    "media_audio_decode" -> "{}",
-    "media_decode" -> "{}",
-    "media_dimensions" -> "{}",
-    "media_frames" -> "{n_frames: 2}",
-    "media_metadata" -> "{}",
-    "media_resize" -> "{target_w: 8, target_h: 8}",
-    "media_video_frames" -> "{}",
     "minhash_lsh_dedup" -> "{}",
-    "mp3_metadata" -> "{}",
     "nb_classify" -> "{}",
     "nb_eval" -> "{train_path: /x}",
     "ngram_jaccard_dedup" -> "{}",
@@ -96,7 +86,6 @@ class StageKeysSpec extends SparkSpec {
     "text_tokens" -> "{}",
     "tf_idf" -> "{}",
     "token_budget_cap" -> "{budget_tokens: 100}",
-    "video_metadata" -> "{}",
     "winnow_fingerprint" -> "{}",
     "write_csv" -> "{path: /x}",
     "write_jsonl" -> "{path: /x}",
