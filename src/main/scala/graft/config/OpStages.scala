@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dsl.Cfg
 import graft.operators.Pipeline
-import graft.ops.{Decontaminate, Dedup, Packing, Pq, Redaction, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, Packing, Redaction, Sampling, Similarity, TextAnalysis}
 
 /** Built-in training-data-hygiene stages, registered through the SAME
   * extension point third-party packages use ([[PipelineConfig.register]],
@@ -18,7 +18,7 @@ import graft.ops.{Decontaminate, Dedup, Packing, Pq, Redaction, Sampling, Simila
   * correctness gate) as pipeline stages over whatever table the pipeline
   * threads as `data` — dedup (exact/fingerprint/minhash/ngram/simhash/
   * embedding), text signals (quality/lang-id/tokens/winnow), similarity
-  * (knn_join/sim_topk), sampling (sample/sample_split/stratified_cap),
+  * (knn_join), sampling (sample/sample_split/stratified_cap),
   * sessionization, and a generic `filter_rows` predicate stage. Column
   * names are configurable per stage (`id_col`, `text_col`, ...) with
   * documents-table defaults (`doc_id`, `text`) and embeddings-table
@@ -672,87 +672,6 @@ object OpStages {
         Dedup.semDedup(m.data, id, vec, threshold, clusterCol, k, iters, maxBlock))
     }
 
-    // product quantization: train m-subspace codebooks on the (optionally
-    // hash-sampled) corpus, append the compact `pq_codes` column — the
-    // memory-compressed ANN representation (graft.ops.Pq; fixed-point
-    // deterministic training, oracle-verified by the pq_codes gate)
-    PipelineConfig.register("pq_encode") { (name, cfg) =>
-      val (id, vec) = vecIds(cfg)
-      val dim = cfg.getInt("dim").getOrElse(64)
-      val m0 = cfg.getInt("m").getOrElse(8)
-      val ksub = cfg.getInt("ksub").getOrElse(8)
-      val iters = cfg.getInt("iters").getOrElse(3)
-      val seed = cfg.getInt("seed").map(_.toLong).getOrElse(42L)
-      val frac = cfg.getDouble("train_fraction").getOrElse(1.0)
-      // model_path: persist-or-reuse codebooks (the production shape —
-      // train on one snapshot, encode every later run against the SAME
-      // model so codes stay comparable across corpus versions)
-      val modelPath = cfg.getStr("model_path")
-      // opq: true — learn the signed-Hadamard-permutation rotation by
-      // alternating minimization before quantizing (Pq.trainOpq); same
-      // fixed-point determinism, measurably higher recall at the same
-      // bit budget (SMOKE.md "OPQ: learned rotation joins PQ")
-      val opq = cfg.getBool("opq").getOrElse(false)
-      val alts = cfg.getInt("opq_alternations").getOrElse(2)
-      Pipeline.DataStage(name, m => {
-        // encode() appends `codes` and the stage publishes it as `pq_codes`:
-        // either name pre-existing would mean silent replacement / an
-        // ambiguous duplicate downstream — fail loudly like the other
-        // column-appending stages
-        val clash = Seq("codes", "pq_codes").filter(m.data.columns.contains)
-        require(clash.isEmpty, s"stage $name: output column(s) " +
-          s"${clash.mkString(", ")} already exist in the input")
-        val encoded =
-          if (opq) {
-            val om = Pq.trainOrLoadOpq(m.data, id, vec, dim, m0, ksub, iters,
-              seed, frac, alts, modelPath)
-            Pq.encodeOpq(m.data, vec, om)
-          } else {
-            val model = Pq.trainOrLoad(m.data, id, vec, dim, m0, ksub, iters,
-              seed, frac, modelPath)
-            Pq.encode(m.data, vec, model)
-          }
-        encoded.withColumnRenamed("codes", "pq_codes")
-      })
-    }
-
-    // batch-query PQ k-NN: every row of the `queries_path` table gets its
-    // ADC top-k over the corpus (trained+encoded in-stage, or reusing a
-    // `model_path` codebook like pq_encode). REPLACES the data with the
-    // (qid, <id>, dist_e6, rank) pair table — the bulk-retrieval analog of
-    // sim_topk's single-query modes.
-    PipelineConfig.register("pq_knn") { (name, cfg) =>
-      val (id, vec) = vecIds(cfg)
-      val k = cfg.getInt("k").getOrElse(5)
-      val dim = cfg.getInt("dim").getOrElse(64)
-      val m0 = cfg.getInt("m").getOrElse(8)
-      val ksub = cfg.getInt("ksub").getOrElse(8)
-      val iters = cfg.getInt("iters").getOrElse(3)
-      val seed = cfg.getInt("seed").map(_.toLong).getOrElse(42L)
-      val frac = cfg.getDouble("train_fraction").getOrElse(1.0)
-      val queriesPath = cfg.reqStr("queries_path")
-      val qid = cfg.getStr("query_id_col").getOrElse("qid")
-      val qvec = cfg.getStr("query_vec_col").getOrElse(vec)
-      val modelPath = cfg.getStr("model_path")
-      // rerank: N — ADC shortlist of N per query, exact distance on the
-      // shortlist only (the standard PQ serving recipe; ~2× recall@10 at
-      // the gate config, SMOKE.md "ANN recall: PQ joins the tuning-curve
-      // evidence"). Omitted = ADC-only.
-      val rerank = cfg.getInt("rerank").getOrElse(0)
-      require(rerank == 0 || rerank >= k,
-        s"stage $name: `rerank` ($rerank) must be >= k ($k)")
-      Pipeline.DataStage(name, m => {
-        val spark = m.data.sparkSession
-        val model = Pq.trainOrLoad(m.data, id, vec, dim, m0, ksub, iters,
-          seed, frac, modelPath)
-        val queries = spark.read.parquet(queriesPath)
-        val encoded = Pq.encode(m.data, vec, model)
-        if (rerank > 0)
-          Pq.adcKnnJoinRerank(encoded, id, vec, model, queries, qid, qvec, k, rerank)
-        else Pq.adcKnnJoin(encoded, id, model, queries, qid, qvec, k)
-      })
-    }
-
     // k-NN join: each data row gets its k nearest rows of `right_path`
     // (another parquet table; omitted = self-join) sharing `block_col`.
     // Default output appends a `knn` array column (sorted by rank) so the
@@ -793,65 +712,6 @@ object OpStages {
       val k = cfg.getInt("k").getOrElse(5)
       Pipeline.DataStage(name, m =>
         TextAnalysis.tfIdfTopTerms(m.data, id, text, k))
-    }
-
-    // top-k selection against one query vector: brute-force exact (default),
-    // sign-LSH bucketed, or IVF (over `key_col` cells when given, else
-    // k-means cells) — replaces data with the k best rows + their cosine.
-    // `pq` / `ivfpq` are the compressed-corpus variants (train codebooks,
-    // encode, ADC-score; ivfpq prunes candidates to the `n_probe` cells of
-    // a required `key_col` first) — they rank by integer squared L2
-    // (`dist_e6`), not cosine, so the output column differs by design
-    PipelineConfig.register("sim_topk") { (name, cfg) =>
-      val (id, vec) = vecIds(cfg)
-      val query = cfg.reqDoubles("query").map(_.toFloat)
-      val k = cfg.getInt("k").getOrElse(10)
-      val mode = cfg.getStr("mode").getOrElse("brute")
-      val (m0, ksub, iters) = (cfg.getInt("m").getOrElse(8), cfg.getInt("ksub").getOrElse(8),
-        cfg.getInt("iters"))
-      val (seed, frac) = (cfg.getInt("seed").map(_.toLong).getOrElse(42L),
-        cfg.getDouble("train_fraction").getOrElse(1.0))
-      val (planes, nProbe, nCells) = (cfg.getInt("planes").getOrElse(8),
-        cfg.getInt("n_probe").getOrElse(2), cfg.getInt("n_cells").getOrElse(16))
-      val keyCol = cfg.getStr("key_col")
-      require(Seq("brute", "lsh", "ivf", "pq", "ivfpq").contains(mode),
-        s"stage $name: unknown mode `$mode` (brute | lsh | ivf | pq | ivfpq)")
-      require(mode != "ivfpq" || keyCol.nonEmpty, s"stage $name: mode ivfpq requires `key_col`")
-      def pqModel(m: graft.meds.MedsData): Pq.PqModel = {
-        require(query.length % m0 == 0,
-          s"stage $name: query dim ${query.length} not divisible by m=$m0")
-        Pq.train(m.data, id, vec, dim = query.length, m = m0, ksub = ksub,
-          iters = iters.getOrElse(3), seed = seed, trainFraction = frac)
-      }
-      val queryXe = Pq.xe(query.map(_.toDouble))
-      // rerank: N (pq/ivfpq modes) — ADC shortlist of N, exact re-rank on
-      // the shortlist only. Omitted = ADC-only ranking.
-      val rerank = cfg.getInt("rerank").getOrElse(0)
-      require(rerank == 0 || rerank >= k,
-        s"stage $name: `rerank` ($rerank) must be >= k ($k)")
-      // fail loudly on an inapplicable key: brute is already exact, and
-      // lsh/ivf have no ADC shortlist to re-rank — a silently ignored
-      // `rerank` would misreport the recall a user thinks they bought
-      require(rerank == 0 || mode == "pq" || mode == "ivfpq",
-        s"stage $name: `rerank` only applies to modes pq | ivfpq (got `$mode`)")
-      Pipeline.DataStage(name, m => mode match {
-        case "brute" => Similarity.topK(m.data, id, vec, query, k)
-        case "lsh" => Similarity.lshTopK(m.data, id, vec, query, k, 0 until planes)
-        case "ivf" => keyCol match {
-          case Some(key) => Similarity.ivfTopK(m.data, id, key, vec, query, k, nProbe)
-          case None => Similarity.ivfTopKKmeans(m.data, id, vec, query, k,
-            nCells, nProbe, iters.getOrElse(2))
-        }
-        case "pq" =>
-          val model = pqModel(m)
-          val enc = Pq.encode(m.data, vec, model)
-          if (rerank > 0) Pq.adcTopKRerank(enc, id, vec, model, queryXe, k, rerank)
-          else Pq.adcTopK(enc, id, model, queryXe, k)
-        case "ivfpq" =>
-          val model = pqModel(m)
-          Pq.ivfPqTopK(Pq.encode(m.data, vec, model), id, keyCol.get, vec, model,
-            query, queryXe, k, nProbe, rerank)
-      })
     }
 
     // text normalization: the standard pre-dedup cleanup, in-place on

@@ -414,10 +414,9 @@ object PipelineConfig {
         case (other, _) =>
           throw new IllegalArgumentException(s"stage $name: unknown time-derived measurement: $other")
       }.flatten
-      Pipeline.DataStage(name, m => {
-        require(gens.nonEmpty, s"stage $name: no generators configured")
-        AddTimeDerivedMeasurements.addAll(m.data, gens)
-      })
+      require(gens.nonEmpty,
+        s"stage $name: no generators configured (age, time_of_day, timeline_tokens)")
+      Pipeline.DataStage(name, m => AddTimeDerivedMeasurements.addAll(m.data, gens))
     }
     data("bin_numeric_values") { cfg =>
       // custom_bins values may be the reference's dict form (bin name →

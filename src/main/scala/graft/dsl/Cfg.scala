@@ -114,7 +114,6 @@ object Cfg {
     def ints(k: String): Seq[Int] = list(k, "integers", "an integer")(asInt)
     def doubles(k: String): Seq[Double] = list(k, "numbers", "a number")(asDouble)
     def reqStrings(k: String): Seq[String] = nonEmpty(k, strings(k))
-    def reqDoubles(k: String): Seq[Double] = nonEmpty(k, doubles(k))
 
     /** An ordered `{name: number}` map (split fractions/weights, bin
       * endpoints) — one coercion shared by every split-weighted stage. */

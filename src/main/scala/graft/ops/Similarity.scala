@@ -6,38 +6,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions._
 
-/** Approximate / exact nearest-neighbor search over an embedding column.
+/** Block-scoped nearest-neighbor joins over an embedding column.
   *
-  * Baseline: brute-force cosine top-k (one scan, map-side top-k via
-  * window-free aggregation when k is small). Scale paths: sign-LSH bucketing
-  * (axis-sign bits → equi-join on bucket) and IVF (coarse centroids →
-  * probe-cell search), both of which turn the O(N·Q) scan into a bucket join.
+  * [[knnJoin]] gives each row its k nearest rows within a block key, with
+  * sign-LSH sub-bucketing ([[signBucket]]) of oversized blocks; the cells
+  * of [[kmeansAssign]] serve as the block key when no natural one exists
+  * (Dedup.semDedup).
   */
 object Similarity {
 
-  /** Brute-force cosine scores of every row against one query vector
-    * (driver-provided literal — broadcast by construction).
-    */
-  def bruteForceScores(embs: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float]): DataFrame = {
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    embs.select(col(idCol), cosine(col(vecCol).cast("array<double>"), q).as("cos"))
-  }
-
-  /** Exact top-k by cosine against a query vector. Ties broken by id for
-    * determinism. `orderBy + limit k` compiles to TakeOrderedAndProject —
-    * per-partition top-k then a k-row merge on the driver, no global sort.
-    */
-  def topK(embs: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int): DataFrame =
-    bruteForceScores(embs, idCol, vecCol, query)
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-
   /** Sign-LSH bucket id: one bit per selected dimension (sign of the
     * coordinate), packed into a long. Deterministic and engine-portable.
-    * With `planes` axis-aligned hyperplanes the expected bucket occupancy is
-    * N / 2^planes; candidates are then re-ranked exactly within the bucket.
+    * With `dims.size` axis-aligned hyperplanes the expected bucket occupancy
+    * is N / 2^dims.size; candidates are then ranked exactly within the bucket.
     */
   def signBucket(vec: Column, dims: Seq[Int]): Column =
     dims.zipWithIndex.map { case (d, i) =>
@@ -46,26 +27,9 @@ object Similarity {
       when(get(vec, lit(d)) >= 0, lit(1L << i)).otherwise(0L)
     }.reduce(_ + _)
 
-  /** LSH-bucketed ANN: only candidates in the query's bucket are scored.
-    * Recall < 1 by construction; bucket dims trade recall for cost.
-    */
-  def lshTopK(embs: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, dims: Seq[Int] = 0 until 8): DataFrame = {
-    // SQL comparison semantics for the driver-side bucket too: NaN >= 0 is
-    // TRUE in Spark/DuckDB but FALSE in Scala, and a dim beyond the query's
-    // length maps to bit 0 exactly like signBucket's null-tolerant get()
-    val qBucket = dims.zipWithIndex.map { case (d, i) =>
-      if (d < query.length && (query(d) >= 0 || query(d).isNaN)) 1L << i else 0L
-    }.sum
-    bruteForceScores(
-      embs.filter(signBucket(col(vecCol), dims) === qBucket), idCol, vecCol, query)
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** IVF coarse centroids: mean vector per partition key (e.g. a cluster
-    * label or LSH bucket). Element-wise mean via posexplode + groupBy — a
-    * single shuffle of (key, dim, value) triples.
+  /** Mean vector per key (e.g. a cluster label or a k-means cell).
+    * Element-wise mean via posexplode + groupBy — a single shuffle of
+    * (key, dim, value) triples.
     */
   def centroids(embs: DataFrame, keyCol: String, vecCol: String): DataFrame =
     embs.select(col(keyCol), posexplode(col(vecCol)).as(Seq("dim", "v")))
@@ -74,27 +38,8 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("dim"), col("mean_v")))).as("pairs"))
       .select(col(keyCol), transform(col("pairs"), p => p.getField("mean_v")).as("centroid"))
 
-  /** IVF search: rank cells by centroid distance to the query, search the
-    * nearest `nProbe` cells exactly. The probed fraction bounds the scan.
-    */
-  def ivfTopK(embs: DataFrame, idCol: String, keyCol: String, vecCol: String,
-      query: Seq[Float], k: Int, nProbe: Int = 2): DataFrame = {
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    val cents = centroids(embs, keyCol, vecCol)
-    val probeCells = cents
-      .withColumn("qcos", cosine(col("centroid"), q))
-      // key tiebreaker: a centroid-cosine tie must not make probe selection
-      // engine- or run-dependent (the oracle orders identically)
-      .orderBy(col("qcos").desc, col(keyCol)).limit(nProbe)
-      .select(keyCol)
-    bruteForceScores(
-      embs.join(broadcast(probeCells), Seq(keyCol), "left_semi"), idCol, vecCol, query)
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** K-means-lite coarse quantizer for IVF when no natural partition key
-    * (label/cluster) exists: deterministic hash-based initial cells, then
+  /** K-means-lite cells for a corpus with no natural block key
+    * (label/cluster): deterministic hash-based initial cells, then
     * `iters` Lloyd rounds. Each round is one element-wise-mean aggregation
     * (centroids, k·dim doubles collected to the driver — always tiny) and one
     * per-row argmax-cosine assignment against the k centroid literals, fully
@@ -129,63 +74,6 @@ object Similarity {
     assigned
   }
 
-  /** IVF ANN without a precomputed partition key: k-means cells + probe-cell
-    * search. `nCells` ~ sqrt(N) bounds each probed cell to ~N/nCells rows.
-    */
-  def ivfTopKKmeans(embs: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, nCells: Int, nProbe: Int = 2,
-      iters: Int = 2): DataFrame =
-    ivfTopK(kmeansAssign(embs, idCol, vecCol, nCells, iters),
-      idCol, "__cell", vecCol, query, k, nProbe)
-
-  /** Persist an IVF index under `path`: `assignments/` (id, __cell) and
-    * `centroids/` (__cell, centroid) parquet — built ONCE over the corpus
-    * and reused by every [[ivfTopKIndexed]] query. This is the
-    * build-once/query-many deployment shape: per-query [[ivfTopKKmeans]]
-    * re-scans the corpus `iters + 1` times to re-derive the same cells,
-    * which is the right tool for an ad-hoc query but not for a query
-    * service. `keyCol` is any existing partition key (label, cluster);
-    * [[buildIvfIndexKmeans]] derives one when none exists.
-    */
-  def buildIvfIndex(embs: DataFrame, idCol: String, keyCol: String,
-      vecCol: String, path: String): Unit = {
-    embs.select(col(idCol), col(keyCol).as("__cell"))
-      .write.mode("overwrite").parquet(s"$path/assignments")
-    centroids(embs, keyCol, vecCol)
-      .withColumnRenamed(keyCol, "__cell")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** [[buildIvfIndex]] over k-means-lite cells ([[kmeansAssign]]). */
-  def buildIvfIndexKmeans(embs: DataFrame, idCol: String, vecCol: String,
-      path: String, nCells: Int, iters: Int = 2): Unit =
-    buildIvfIndex(kmeansAssign(embs, idCol, vecCol, nCells, iters),
-      idCol, "__cell", vecCol, path)
-
-  /** Query a persisted IVF index: probe cells are chosen from the STORED
-    * centroids (a metadata-sized read — the corpus is not touched), the
-    * stored assignments of the probed cells semi-join the corpus (ids
-    * only; broadcast when nProbe·cell size is small), and only those rows
-    * are scored exactly. Identical results to [[ivfTopK]] over the same
-    * cell assignment.
-    */
-  def ivfTopKIndexed(embs: DataFrame, idCol: String, vecCol: String,
-      path: String, query: Seq[Float], k: Int, nProbe: Int = 2): DataFrame = {
-    val spark = embs.sparkSession
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    val probeCells = spark.read.parquet(s"$path/centroids")
-      .withColumn("qcos", cosine(col("centroid"), q))
-      .orderBy(col("qcos").desc, col("__cell")).limit(nProbe)
-      .select("__cell")
-    val candIds = spark.read.parquet(s"$path/assignments")
-      .join(broadcast(probeCells), Seq("__cell"), "left_semi")
-      .select(idCol)
-    bruteForceScores(embs.join(candIds, Seq(idCol), "left_semi"),
-      idCol, vecCol, query)
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
   /** All-pairs k-NN join within blocks (each left row gets its k nearest
     * right rows sharing the block key). Window-ranked, shuffle bounded by
     * block sizes.
@@ -199,9 +87,9 @@ object Similarity {
     * degenerate vectors still co-bucket, but those are exact duplicates that
     * belong to dedup, not knn). Results are exact for every block within the
     * cap and sign-LSH-approximate (neighbors found within the query row's
-    * bucket) for oversized ones — the same exactness trade [[lshTopK]]
-    * makes. The oversized-key list is a per-block count (map-side combined)
-    * broadcast to both sides: no extra shuffle of the vectors.
+    * bucket) for oversized ones. The oversized-key list is a per-block
+    * count (map-side combined) broadcast to both sides: no extra shuffle of
+    * the vectors.
     */
   def knnJoin(left: DataFrame, right: DataFrame, idCol: String, vecCol: String,
       blockCol: String, k: Int, maxBlockSize: Option[Int] = None,

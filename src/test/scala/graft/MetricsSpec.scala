@@ -16,9 +16,9 @@ import graft.obs.Collector
   * Bounds are TOTAL shuffle bytes written across all stages of one gate
   * run at sf0.1 (local[4], 4 shuffle partitions — partition count changes
   * layout, not total volume). Each gate is warmed once first so one-time
-  * fixture staging (idempotent input roots, IVF index builds) never counts
-  * against the bound. Spill must be zero: nothing at sf0.1 should exceed
-  * executor memory, and a spill regression is exactly the kind of silent
+  * fixture staging (idempotent input roots) never counts against the
+  * bound. Spill must be zero: nothing at sf0.1 should exceed executor
+  * memory, and a spill regression is exactly the kind of silent
   * scale-killer this net exists to catch.
   */
 class MetricsSpec extends SparkSpec {
@@ -40,12 +40,8 @@ class MetricsSpec extends SparkSpec {
     "semdedup" -> 32_000L,                    // measured 5.7 KB
     "zorder_values" -> 20_000_000L,           // measured 8.06 MB
     "lm_perplexity" -> 500_000L,              // measured 183 KB (r11, in-row grams)
-    "ppl_buckets" -> 450_000L,                // measured 172 KB (r11, in-row grams)
-    "pq_codes" -> 450_000L,                   // measured 170 KB (train partials + output sort)
-    "ivfpq_topk" -> 96_000L,                  // measured 32 KB (train partials; ADC needs no exchange)
-    "pq_knn" -> 48_000L,                      // measured 16.9 KB (train partials + queries*k top-k lists — corpus never shuffles)
-    "pq_rerank" -> 32_000L,                   // measured 12.8 KB (train partials only: shortlist + exact re-rank are broadcast/TakeOrdered — corpus never shuffles)
-    "pq_knn_rerank" -> 64_000L)               // measured 21.4 KB (train partials + two bounded top-k exchanges — corpus never shuffles on either pass)
+    "ppl_buckets" -> 450_000L)                // measured 172 KB (r11, in-row grams)
+
 
   for ((q, cap) <- bounds)
     test(s"$q: shuffle volume within pinned bound, zero spill") {
@@ -66,24 +62,4 @@ class MetricsSpec extends SparkSpec {
         s"$q spilled (disk=$spillDisk, mem=$spillMem) at sf0.1 — " +
           "partitions no longer fit in executor memory")
     }
-
-  test("Pq.train shuffle is codebook-keyed, not corpus-proportional") {
-    // the PQ 100 TB claim pinned directly: each Lloyd iteration's exchange
-    // carries map-side partials onto m*ksub keys, so TRAINING shuffle must
-    // stay a few KB regardless of corpus size (the gates' totals above
-    // also include their presentation sort, which IS output-proportional)
-    val embs = spark.read.parquet(s"$dir/embeddings.parquet")
-    def train() = graft.ops.Pq.train(embs, "vec_id", "embedding",
-      dim = 64, m = 8, ksub = 8, iters = 3, seed = 42L)
-    train() // warm
-    val sw = Collector.measure(spark)(train())._2
-      .total(_.shuffleWriteMetrics.bytesWritten)
-    info(f"Pq.train shuffleWrite=$sw%,d")
-    // 3 iterations x (m*ksub = 64 partial rows per map task x 4 tasks,
-    // ~dsub longs each) — generous 128 KB cap is still 100x under the
-    // corpus-proportional failure mode (sf0.1 encode output is ~1 MB+)
-    assert(sw <= 131072L,
-      s"Pq.train shuffled $sw bytes — training exchange is no longer " +
-        "codebook-keyed partials (corpus-proportional shuffle?)")
-  }
 }

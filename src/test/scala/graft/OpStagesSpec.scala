@@ -199,8 +199,7 @@ class OpStagesSpec extends SparkSpec {
   }
 
   test("similarity/winnow/corpus stages are registered") {
-    val expected = Set("winnow_fingerprint", "embed_dedup", "semdedup", "knn_join",
-      "pq_encode", "sim_topk", "sessionize",
+    val expected = Set("winnow_fingerprint", "embed_dedup", "semdedup", "knn_join", "sessionize",
       "filter_rows", "json_extract", "normalize_text", "text_repetition",
       "decontaminate", "pack_sequences", "redact_pii", "quality_filter",
       "dedup_lines", "remove_dup_spans", "tf_idf", "text_entropy",
@@ -499,165 +498,6 @@ class OpStagesSpec extends SparkSpec {
     // vec 1~2 and 3~4 are near-identical (cos > 0.98): min ids 1 and 3 stay
     assert(kept.contains(1L) && kept.contains(3L) && kept.contains(5L))
     assert(Set(2L, 4L).intersect(kept).isEmpty)
-  }
-
-  test("pq_encode stage appends in-range codes and is chainable") {
-    val yaml =
-      """stages:
-        |  - pq_encode:
-        |      dim: 4
-        |      m: 2
-        |      ksub: 2
-        |      iters: 2
-        |""".stripMargin
-    val out = Pipeline.run(spark, emptyMeds(embRows),
-      PipelineConfig.fromYaml(yaml).stages).data
-    assert(out.columns.contains("pq_codes") && out.count() == 5)
-    val codes = out.select("pq_codes").collect().map(_.getSeq[Int](0))
-    assert(codes.forall(c => c.length == 2 && c.forall(x => x >= 0 && x < 2)))
-    // model_path: first run trains + persists; later runs REUSE the
-    // committed model even over a different corpus (codes stay comparable
-    // across snapshots — retraining would move the centroids)
-    val mp = java.nio.file.Files.createTempDirectory("graft_pq_stage")
-      .resolve("model").toString
-    val yamlMp = yaml.replace("iters: 2", s"iters: 2\n      model_path: $mp")
-    Pipeline.run(spark, emptyMeds(embRows),
-      PipelineConfig.fromYaml(yamlMp).stages).data.count()
-    val saved = graft.ops.Pq.load(spark, mp)
-    val shifted = emptyMeds(embRows).data.withColumn("embedding",
-      org.apache.spark.sql.functions.transform(col("embedding"),
-        v => (v * org.apache.spark.sql.functions.lit(2.0f)).cast("float")))
-    val second = Pipeline.run(spark, emptyMeds(embRows).withData(shifted),
-      PipelineConfig.fromYaml(yamlMp).stages).data
-    val got2 = second.select("vec_id", "pq_codes").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val want2 = graft.ops.Pq.encode(shifted, "embedding", saved)
-      .select("vec_id", "codes").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(got2 == want2)
-
-    // output-name collision fails loudly instead of silently replacing /
-    // duplicating a pre-existing codes/pq_codes column
-    val clashed = emptyMeds(embRows)
-    val withCodes = clashed.withData(clashed.data.withColumn("codes",
-      org.apache.spark.sql.functions.lit(1)))
-    val e = intercept[IllegalArgumentException] {
-      Pipeline.run(spark, withCodes, PipelineConfig.fromYaml(yaml).stages)
-        .data.count()
-    }
-    assert(e.getMessage.contains("already exist"))
-  }
-
-  test("sim_topk stage: brute and lsh modes select k rows with cosine") {
-    def run(extra: String): Seq[Long] =
-      Pipeline.run(spark, emptyMeds(embRows), PipelineConfig.fromYaml(
-        s"stages:\n  - sim_topk:\n      k: 2\n      query: [1.0, 0.0, 0.0, 0.0]\n$extra"
-      ).stages).data.select("vec_id").collect().map(_.getLong(0)).toSeq
-    val brute = run("")
-    assert(brute == Seq(1L, 2L)) // the two vectors nearest the x-axis query
-    val lsh = run("      mode: lsh\n      planes: 4\n")
-    assert(lsh.nonEmpty && lsh.toSet.subsetOf(Set(1L, 2L, 3L, 4L, 5L)))
-    val ivf = run("      mode: ivf\n      key_col: label\n")
-    assert(ivf == Seq(1L, 2L))
-    // compressed-corpus modes rank by ADC dist_e6 and must agree with the
-    // direct Pq composition on the same parameters
-    def runPq(extra: String): Seq[(Long, Long)] =
-      Pipeline.run(spark, emptyMeds(embRows), PipelineConfig.fromYaml(
-        s"stages:\n  - sim_topk:\n      k: 3\n      query: [1.0, 0.0, 0.0, 0.0]\n" +
-          s"      m: 2\n      ksub: 2\n      iters: 1\n$extra"
-      ).stages).data.select("vec_id", "dist_e6").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val pq = runPq("      mode: pq\n")
-    val embDf = emptyMeds(embRows).data
-    val model = graft.ops.Pq.train(embDf, "vec_id", "embedding", 4, 2, 2, 1)
-    val want = graft.ops.Pq.adcTopK(
-      graft.ops.Pq.encode(embDf, "embedding", model), "vec_id", model,
-      graft.ops.Pq.xe(Seq(1.0, 0.0, 0.0, 0.0)), 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(pq == want && pq.size == 3)
-    val ivfpq = runPq("      mode: ivfpq\n      key_col: label\n")
-    assert(ivfpq.nonEmpty && ivfpq.size <= 3)
-    val e = intercept[IllegalArgumentException] { runPq("      mode: ivfpq\n") }
-    assert(e.getMessage.contains("requires `key_col`"))
-  }
-
-  test("pq_knn stage: pair table equals the direct adcKnnJoin composition") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_knn_stage")
-    val qPath = tmp.resolve("queries").toString
-    val base = emptyMeds(embRows).data
-    base.filter(col("vec_id") === 1)
-      .select(col("vec_id").as("qid"), col("embedding"))
-      .write.parquet(qPath)
-    val out = Pipeline.run(spark, emptyMeds(embRows), PipelineConfig.fromYaml(
-      s"""stages:
-         |  - pq_knn:
-         |      k: 3
-         |      dim: 4
-         |      m: 2
-         |      ksub: 2
-         |      iters: 1
-         |      queries_path: $qPath
-         |""".stripMargin).stages).data
-    val model = graft.ops.Pq.train(base, "vec_id", "embedding", 4, 2, 2, 1)
-    val want = graft.ops.Pq.adcKnnJoin(
-      graft.ops.Pq.encode(base, "embedding", model), "vec_id", model,
-      spark.read.parquet(qPath), "qid", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    val got = out.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(got == want && got.size == 3)
-  }
-
-  test("rerank option: sim_topk and pq_knn stages equal the direct rerank compositions") {
-    val base = emptyMeds(embRows).data
-    val model = graft.ops.Pq.train(base, "vec_id", "embedding", 4, 2, 2, 1)
-    val enc = graft.ops.Pq.encode(base, "embedding", model)
-    // sim_topk mode pq + rerank = adcTopKRerank (exact distances, not ADC)
-    val got = Pipeline.run(spark, emptyMeds(embRows), PipelineConfig.fromYaml(
-      """stages:
-        |  - sim_topk:
-        |      k: 2
-        |      query: [1.0, 0.0, 0.0, 0.0]
-        |      mode: pq
-        |      m: 2
-        |      ksub: 2
-        |      iters: 1
-        |      rerank: 4
-        |""".stripMargin).stages).data
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val want = graft.ops.Pq.adcTopKRerank(enc, "vec_id", "embedding", model,
-      graft.ops.Pq.xe(Seq(1.0, 0.0, 0.0, 0.0)), k = 2, shortlist = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == want && got.size == 2)
-    // pq_knn + rerank = adcKnnJoinRerank
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_rerank_stage")
-    val qPath = tmp.resolve("queries").toString
-    base.filter(col("vec_id") === 1)
-      .select(col("vec_id").as("qid"), col("embedding"))
-      .write.parquet(qPath)
-    val gotKnn = Pipeline.run(spark, emptyMeds(embRows), PipelineConfig.fromYaml(
-      s"""stages:
-         |  - pq_knn:
-         |      k: 2
-         |      dim: 4
-         |      m: 2
-         |      ksub: 2
-         |      iters: 1
-         |      rerank: 4
-         |      queries_path: $qPath
-         |""".stripMargin).stages).data
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    val wantKnn = graft.ops.Pq.adcKnnJoinRerank(enc, "vec_id", "embedding",
-      model, spark.read.parquet(qPath), "qid", "embedding", k = 2, shortlist = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(gotKnn == wantKnn && gotKnn.size == 2)
-    // rerank < k is a config error, caught at parse time
-    val e = intercept[IllegalArgumentException] {
-      PipelineConfig.fromYaml(
-        "stages:\n  - sim_topk:\n      k: 5\n      query: [1.0, 0.0, 0.0, 0.0]\n" +
-          "      mode: pq\n      rerank: 3\n")
-    }
-    assert(e.getMessage.contains("rerank"))
   }
 
   test("normalize_text stage: fixed-order ops, in-place or appended") {

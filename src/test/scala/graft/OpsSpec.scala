@@ -696,54 +696,24 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("embedding", col("embedding").cast("array<double>"))
   }
 
-  test("topK returns exact k nearest by cosine") {
-    val q = Seq.fill(16)(0.1f)
-    val brute = Similarity.bruteForceScores(embsDf, "vec_id", "embedding", q)
-      .orderBy(col("cos").desc, col("vec_id")).limit(5)
-      .collect().map(_.getLong(0)).toSeq
-    val topk = Similarity.topK(embsDf, "vec_id", "embedding", q, 5)
-      .collect().map(_.getLong(0)).toSeq
-    assert(topk == brute)
+  test("signBucket packs one sign bit per dimension; a missing dimension is bit 0") {
+    val dims = 0 until 4
+    val want = embsDf.select("vec_id", "embedding").collect().map { r =>
+      val v = r.getSeq[Double](1)
+      r.getLong(0) -> dims.map(d => if (v(d) >= 0) 1L << d else 0L).sum
+    }.toMap
+    val got = embsDf.select(col("vec_id"), Similarity.signBucket(col("embedding"), dims))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == want)
+    // SQL comparison: NaN >= 0 holds; a ragged vector's absent dims read as 0
+    val edge = Seq((0L, Seq(Double.NaN, -1.0, 2.0)), (1L, Seq(3.0)))
+      .toDF("vec_id", "embedding")
+      .select(col("vec_id"), Similarity.signBucket(col("embedding"), dims))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(edge == Map(0L -> 5L, 1L -> 1L))
   }
 
-  test("IVF with all cells probed equals brute force") {
-    val q = Seq.fill(16)(0.25f)
-    val ivf = Similarity.ivfTopK(embsDf, "vec_id", "label", "embedding", q, k = 10, nProbe = 4)
-      .collect().map(_.getLong(0)).toSeq
-    val brute = Similarity.topK(embsDf, "vec_id", "embedding", q, 10)
-      .collect().map(_.getLong(0)).toSeq
-    assert(ivf == brute)
-  }
-
-  test("IVF nProbe=1 is a subset of one cell; recall is reasonable") {
-    val q = Seq.fill(16)(0.25f)
-    // nProbe=1: every result must come from exactly ONE label cell — the
-    // bounded-scan property that makes IVF a scale path
-    val labelOf = embsDf.select("vec_id", "label").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val one = Similarity.ivfTopK(embsDf, "vec_id", "label", "embedding", q, k = 10, nProbe = 1)
-      .collect().map(_.getLong(0))
-    assert(one.nonEmpty && one.map(labelOf).toSet.size == 1,
-      s"nProbe=1 results span cells: ${one.map(labelOf).toSet}")
-    val ivf = Similarity.ivfTopK(embsDf, "vec_id", "label", "embedding", q, k = 10, nProbe = 2)
-      .collect().map(_.getLong(0)).toSet
-    val brute = Similarity.topK(embsDf, "vec_id", "embedding", q, 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(ivf.intersect(brute).size >= 4) // probing half the cells → partial recall
-  }
-
-  test("LSH bucket search returns only same-bucket candidates, exact within") {
-    val q = Seq.fill(16)(0.3f)
-    val got = Similarity.lshTopK(embsDf, "vec_id", "embedding", q, k = 5, dims = 0 until 4)
-    val bucketed = embsDf.withColumn("b",
-      Similarity.signBucket(col("embedding"), 0 until 4)).filter(col("b") === 15)
-    assert(got.count() <= 5)
-    val gotIds = got.collect().map(_.getLong(0)).toSet
-    val allowed = bucketed.collect().map(_.getAs[Long]("vec_id")).toSet
-    assert(gotIds.subsetOf(allowed))
-  }
-
-  test("kmeans cells: deterministic, clusters co-assigned, IVF recall") {
+  test("kmeans cells: deterministic, planted clusters co-assigned") {
     val rng = new scala.util.Random(3)
     // 3 planted clusters around orthogonal axes, small noise
     val pts = (0 until 60).map { i =>
@@ -763,23 +733,6 @@ class SimilaritySpec extends SparkSpec {
     byAxis.foreach { case (axis, cells) =>
       assert(cells.size == 1, s"cluster $axis split across cells $cells")
     }
-    // IVF over kmeans cells with all cells probed = brute force
-    val q = Seq.tabulate(8)(d => if (d == 0) 1f else 0f)
-    val ivf = Similarity.ivfTopKKmeans(df, "vec_id", "embedding", q,
-      k = 5, nCells = 3, nProbe = 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val brute = Similarity.topK(df, "vec_id", "embedding", q, 5)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(ivf == brute)
-    // persisted index round-trip: build once (same kmeans cells), query off
-    // the stored centroids/assignments — identical to the rebuild path
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
-    Similarity.buildIvfIndexKmeans(df, "vec_id", "embedding", tmp,
-      nCells = 3, iters = 3)
-    val indexed = Similarity.ivfTopKIndexed(df, "vec_id", "embedding", tmp,
-      q, k = 5, nProbe = 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(indexed == brute)
   }
 
   test("semDedup: kmeans path co-clusters exact dups and keeps min id") {

@@ -84,14 +84,6 @@ class PlanSpec extends SparkSpec {
       s"window not partitioned by subject:\n$s")
   }
 
-  test("similarity top-k compiles to TakeOrderedAndProject (no global sort)") {
-    import spark.implicits._
-    val embs = (0 until 50).map(i => (i.toLong, Array.fill(4)(i.toDouble)))
-      .toDF("vec_id", "embedding")
-    val q = graft.ops.Similarity.topK(embs, "vec_id", "embedding", Seq(1f, 0f, 0f, 0f), 5)
-    assert(plan(q).toString.contains("TakeOrderedAndProject"), s"\n${plan(q)}")
-  }
-
   test("withGlobalRowNumber: single materialization, exact 1..n permutation") {
     import spark.implicits._
     // enough rows that range-bound sampling and AQE coalescing would expose

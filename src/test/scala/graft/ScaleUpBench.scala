@@ -88,10 +88,10 @@ object ScaleUpBench {
       if (needs(dir, "documents.parquet"))
         replicate(docs, k).repartition(math.max(k, 4))
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      // embeddings for the ANN/PQ gates: replicas get disjoint ids and a
+      // embeddings for the vector gates: replicas get disjoint ids and a
       // per-replica deterministic scaling (1 + i/1024 — float-exact for
-      // small i) so codebook training sees k× distinct vectors, not k
-      // identical copies collapsing into the same centroids
+      // small i) so k-means cells and cosine joins see k× distinct
+      // vectors, not k identical copies collapsing into the same centroids
       if (needs(dir, "embeddings.parquet"))
         (0 until k).map { i =>
           embs

@@ -59,8 +59,6 @@ class StageKeysSpec extends SparkSpec {
     "overlap_report" -> "{ref_path: /x}",
     "pack_sequences" -> "{capacity: 16}",
     "ppl_buckets" -> "{}",
-    "pq_encode" -> "{}",
-    "pq_knn" -> "{queries_path: /x}",
     "profile" -> "{}",
     "quality_filter" -> "{min_words: 1}",
     "range_join" -> ("{keys: [k], value_cols: [v], bucket_width: 10, right_path: /x, " +
@@ -76,7 +74,6 @@ class StageKeysSpec extends SparkSpec {
     "semdedup" -> "{}",
     "sessionize" -> "{}",
     "shuffle_rows" -> "{}",
-    "sim_topk" -> "{query: [1.0, 0.0]}",
     "simhash_dedup" -> "{}",
     "stratified_cap" -> "{stratum_col: s, per_stratum: 2}",
     "temperature_mix" -> "{stratum_col: s, alpha: 0.5}",
@@ -184,10 +181,9 @@ class StageKeysSpec extends SparkSpec {
         "{aggregations: [{name: values/quantiles, algo: nearst}]}", "nearst"),
       ("aggregate_code_metadata",
         "{aggregations: [{name: code/n_subjects, algo: exakt}]}", "exakt"),
-      ("sim_topk", "{query: [1.0, 0.0], mode: brutee}", "brutee"),
-      ("sim_topk", "{query: [1.0, 0.0], mode: ivfpq}", "key_col"),
       ("stratified_cap", "{stratum_col: s, per_stratum: 2, algo: windw}", "windw"),
-      ("quality_filter", "{}", "threshold rule"))
+      ("quality_filter", "{}", "threshold rule"),
+      ("add_time_derived_measurements", "{}", "no generators"))
     bad.foreach { case (stage, yaml, value) =>
       val e = buildError(stage, map(yaml))
       assert(e.contains(s"stage $stage") && e.contains(value), s"$stage $yaml: $e")
@@ -198,7 +194,7 @@ class StageKeysSpec extends SparkSpec {
     * value check ("at least one of ...", "2 or 3 columns") instead of the
     * required-key read. */
   private val conditional = Set("quality_filter" -> "min_words", "rolling_agg" -> "count_as",
-    "zorder_layout" -> "cols")
+    "zorder_layout" -> "cols", "add_time_derived_measurements" -> "time_of_day")
 
   test("dropping any key of a minimal config builds, or fails naming the stage and the key") {
     val wrong = minimal.toSeq.sorted.flatMap { case (stage, yaml) =>
@@ -233,7 +229,7 @@ class StageKeysSpec extends SparkSpec {
         "`aggregations` must be a list of entries, got S(values/sum)"),
       ("sample_split", "{splits: {a: 1, b: x}}", "`splits.b` must be a number, got S(x)"),
       ("join_table", "{path: /x, keys: k}", "`keys` must be a list of strings, got S(k)"),
-      ("sim_topk", "{query: []}", "`query` must be a non-empty list"))
+      ("join_table", "{path: /x, keys: []}", "`keys` must be a non-empty list"))
 
   test("a mistyped scalar, list or element fails at build time, naming the stage and the key path") {
     mistyped.foreach { case (stage, yaml, error) =>

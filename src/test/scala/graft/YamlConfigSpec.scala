@@ -415,9 +415,11 @@ class YamlConfigSpec extends SparkSpec {
       "occlude_outliers", "normalization", "reorder_measurements",
       "extract_values", "add_time_derived_measurements", "bin_numeric_values")
     assert(referenceStages.subsetOf(listed)) // reference stages too
-    // every reference stage actually builds
+    // every reference stage actually builds (the time-derived one needs a
+    // generator)
     referenceStages.foreach { s =>
-      PipelineConfig.fromYaml(s"stages:\n  - $s\n")
+      val body = if (s == "add_time_derived_measurements") ": {time_of_day: {endpoints: [6]}}" else ""
+      PipelineConfig.fromYaml(s"stages:\n  - $s$body\n")
     }
   }
 

@@ -53,9 +53,10 @@ print(f"{'query':20s} {'k':4s} {'rows':10s} seconds")
 for k in scales:
     for q in QUERIES:
         sql = oracle[q]
-        # run each query in a child process: the PQ-replay oracles allocate
-        # unboundedly past memory_limit (observed 130 GB RSS and a kernel
-        # OOM kill at 32k vectors despite a 48 GB limit + temp_directory) —
+        # run each query in a child process: an unrolled training-replay
+        # oracle can allocate unboundedly past memory_limit (observed 130 GB
+        # RSS and a kernel OOM kill at 32k vectors despite a 48 GB limit +
+        # temp_directory) —
         # a DNF must be a recorded data point, not a dead box. The
         # connection, limits, and views are ALL created inside the child
         # (fork first, connect after): forking a live multithreaded native

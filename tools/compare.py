@@ -7,8 +7,8 @@ oracle_sql.json in DuckDB (tables = parquet files in sfDir), sorts columns by
 name and rows by all columns, and diffs values.
 
 --fork: run each query in a forked child process with its own DuckDB
-connection — at replicated scales the PQ-training-replay oracles allocate
-unboundedly past memory_limit (observed 130 GB RSS at 32k vectors); a kernel
+connection — at replicated scales an unrolled training-replay oracle can
+allocate past memory_limit (observed 130 GB RSS at 32k vectors); a kernel
 OOM kill must be a recorded DNF for that one query, not the death of the
 whole suite pass. Same convention as tools/bench_scale.py.
 --only a,b,c: restrict to the named queries.
@@ -17,8 +17,8 @@ TYPE-FAITHFUL (round 12): the driver's hash is computed over the typed values,
 so this mimic must reject type drift that float-coercion used to mask:
   1. Any oracle column whose DuckDB declared type is HUGEINT/UHUGEINT/DECIMAL
      is a hard FAIL — DuckDB widens e.g. sum(BIGINT) to HUGEINT; the oracle
-     SQL must CAST such columns explicitly (the r11 pq_topk/ivfpq_topk/pq_knn
-     driver-hash failures were exactly this).
+     SQL must CAST such columns explicitly (a summed squared-distance column
+     left as HUGEINT once failed the driver's hash exactly this way).
   2. An integer-kind column on one side vs a float-kind column on the other is
      a hard FAIL (1 vs 1.0 hashes differently in the driver).
 Other representational kind differences (e.g. date32->object vs datetime64)
