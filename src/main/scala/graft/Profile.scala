@@ -29,8 +29,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *    (pre-execution); redirect it to `plans/<round>/…` for evidence files.
   *  - `scan`: runs each gate and lists those whose final plan scans the same
   *    table more than once ([[graft.plans.PlanLint]] `duplicate-scan`) — a
-  *    review list, not a failure. The streaming gates are skipped: their
-  *    plan is per-batch.
+  *    review list, not a failure.
   *
   * `jobs` and `stages` attach no listener of their own: each timed run goes
   * through [[graft.obs.Collector.measure]] and the mode prints its records.
@@ -175,10 +174,8 @@ object Profile {
     catch { case e: Throwable => println(s"explain failed: $e") }
   }
 
-  private val streamingGates = Set("events_sessionize_stream", "events_dedup_stream")
-
   private def scan(spark: SparkSession, dir: String, name: String): Unit =
-    if (!streamingGates(name)) try {
+    try {
       val df = gate(spark, dir, name)
       df.collect() // finalizes df's OWN AdaptiveSparkPlan (count() would plan separately)
       val dup = graft.plans.PlanLint.check(df)

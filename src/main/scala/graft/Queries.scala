@@ -10,7 +10,6 @@ import graft.dsl.Cfg
 import graft.operators._
 import graft.ops._
 import graft.functions.GraftFunctions
-import graft.streaming.{EventStream, Sessionize}
 
 /** The correctness/benchmark query surface: one entry per operator from
   * SURVEY.md §2 plus the large-scale training-data ops, each paired with an
@@ -120,10 +119,9 @@ object Queries {
     * TIMESTAMP(NANOS) read as raw longs under the legacy conf (integral `div`
     * keeps exactness — a double division would lose precision above 2^53), or
     * TIMESTAMP_NTZ cast to TIMESTAMP (value-preserving ONLY under a
-    * zero-offset session timezone, asserted below; watermarks and time
-    * windows require the LTZ type). ONE definition for the batch and
-    * streaming reads of the events table: the conversion convention must not
-    * be able to drift between the two.
+    * zero-offset session timezone, asserted below; time windows require
+    * the LTZ type). ONE definition for every read of the events table: the
+    * conversion convention must not be able to drift between gates.
     *
     * The LongType branch ASSUMES the raw longs are nanoseconds (that is the
     * only way Spark hands TIMESTAMP(NANOS) out, via
@@ -741,17 +739,6 @@ object Queries {
       | count(*) AS n_rows, count(DISTINCT user_id) AS n_subjects
       |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
 
-  private val eventsHourly: Gate = Gate(
-    (s, dir) => EventStream.windowedAgg(eventsTable(s, dir), "1 hour")
-      .select(col("window_start"), col("event_type"), col("n_events"),
-        r3(col("sum_value")).as("sum_value"))
-      .orderBy("window_start", "event_type"),
-    // ts IS NOT NULL: Spark's window() silently drops null-timestamp rows
-    // (the TimeWindowing rule adds the filter); the oracle must too
-    Some("""SELECT date_trunc('hour', ts) AS window_start, event_type,
-      | count(*) AS n_events, round(sum(value),3) AS sum_value
-      |FROM events WHERE ts IS NOT NULL GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
-
   /** Semi-structured extraction: typed `from_json` over the events `props`
     * column, then an aggregate over the extracted field — the schema-on-read
     * op every event/log pipeline needs. The oracle extracts the same field
@@ -777,77 +764,6 @@ object Queries {
       | round(avg(k), 4) AS avg_k, max(k) AS max_k
       |FROM p GROUP BY 1 ORDER BY 1""".stripMargin))
 
-  private val eventsSessionize: Gate = Gate(
-    (s, dir) => graft.streaming.Sessionize.batch(eventsTable(s, dir), gapMinutes = 30)
-      .select(col("user_id"), col("session_idx").cast(LongType).as("session_idx"),
-        col("start_ts"), col("end_ts"), col("n_events"),
-        r3(col("sum_value")).as("sum_value"))
-      .orderBy("user_id", "session_idx"),
-    // NULLS FIRST pins the null-time ordering to Spark's window default —
-    // DuckDB's nulls-last would sessionize null-ts events differently
-    Some("""WITH p AS (
-      |  SELECT user_id, ts, event_id, value,
-      |   lag(ts) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id) AS prev
-      |  FROM events),
-      |f AS (SELECT *, CASE WHEN prev IS NULL
-      |   OR epoch_us(ts) - epoch_us(prev) > 1800000000 THEN 1 ELSE 0 END AS nw FROM p),
-      |s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id
-      |   ROWS UNBOUNDED PRECEDING) AS sidx FROM f)
-      |SELECT user_id, CAST(sidx AS BIGINT) AS session_idx,
-      | min(ts) AS start_ts, max(ts) AS end_ts,
-      | count(*) AS n_events, round(sum(value),3) AS sum_value
-      |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
-
-  /** Streaming gate: the SAME sessionization computed by the Structured
-    * Streaming path — parquet `readStream` source → `flatMapGroupsWithState`
-    * partial sessions → idempotent per-batch foreachBatch parquet sink →
-    * re-aggregate partials by (user, session) — must hash-match the batch
-    * result (and the DuckDB oracle) on identical data. This is the
-    * correctness row for SURVEY §2.8: batch/streaming parity is verified by
-    * the oracle, not just by spec assertions.
-    *
-    * Null event times are filtered on both sides: event-time streaming has no
-    * ordering for a null timestamp (the batch path's NULLS FIRST convention
-    * is a window-order artifact a watermark would drop anyway).
-    */
-  /** Streaming file source over the events table, branching on the table's
-    * physical layout: `events.parquet` is a flat FILE in the shipped
-    * testdata (streamed via `pathGlobFilter` on the parent dir — a file
-    * cannot be a stream source root, "basePath must be a directory") but a
-    * DIRECTORY of part files in replicated scale dirs (ScaleUpBench) and
-    * any engine-written output (streamed directly — the glob filter on the
-    * parent matched ZERO part files there, so the stream silently ran no
-    * batches at scale until round 14).
-    */
-  private def eventsStream(ss: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(ss.sessionState.newHadoopConf())
-    // the per-call session's schema comes from one footer: a `table` read
-    // would add a memo entry keyed by this throwaway session
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val reader = ss.readStream.schema(graft.plans.ParquetStats.schema(ss, p.toString)
-      .getOrElse(ss.read.parquet(p.toString).schema))
-    restoreTs(
-      if (fs.getFileStatus(p).isDirectory) reader.parquet(p.toString)
-      else reader.option("pathGlobFilter", "events.parquet").parquet(dir))
-  }
-
-  /** State partitions for the streaming gates, scoped to the DATA, not a
-    * constant: each HDFS-backed state store pays a per-batch open/commit
-    * regardless of row count (r8 tuning: 2 beats 8 at 100k rows), but a
-    * constant 2 throttles a replicated 6M-row scale run. ~50k input rows
-    * per store (the measured r8 sweet spot) from the parquet FOOTER counts
-    * — no data scan — clamped to [2, defaultParallelism].
-    */
-  private def streamStatePartitions(ss: SparkSession, dir: String): Int = {
-    // r18 re-sweep at sf0.1 (min-of-4, trio total): 2 → 4.6 s, 4 → 6.9 s,
-    // 8 → 5.7 s — the r8 divisor still holds
-    val rows = graft.plans.ParquetStats
-      .rowCount(ss, s"$dir/events.parquet").getOrElse(100000L)
-    math.max(2L, math.min(ss.sparkContext.defaultParallelism.toLong,
-      rows / 50000L)).toInt
-  }
-
   private def rmTree(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.isDirectory(p)) {
@@ -857,133 +773,8 @@ object Queries {
     java.nio.file.Files.deleteIfExists(p); ()
   }
 
-  /** Streaming exact dedup under oracle verification: the events file is
-    * streamed TWICE and unioned, so every row arrives alongside its own
-    * duplicate; `EventStream.streamingDedup` (watermark-bounded state) must
-    * drop exactly one copy of each — the surviving set is the original
-    * table, which the batch oracle states directly. Keying on the full-row
-    * content hash makes the survivor identity well-defined (duplicates are
-    * identical), so the gate is hash-exact despite parallel arrival order.
-    */
-  private val eventsDedupStream: Gate = Gate(
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
-      val outDir = tmp.resolve("out").toString
-      try {
-        val ss = s.newSession()
-        // r8 tuning pass (min-of-5 at sf0.1, SMOKE.md): 2 state partitions
-        // (10k rows of state need neither 8 stores' per-batch commit
-        // overhead nor their scheduling; 8→4→2 = 3.20→2.90→2.73 s), rows
-        // duplicated INSIDE the one file source (vs the earlier
-        // `src.union(src)` of two independent sources scanning and
-        // tracking the parquet twice per batch), and the default
-        // HDFS-backed state provider kept deliberately: RocksDB measured
-        // 4.19 s here — per-partition native-DB open/commit dwarfs its
-        // benefits until state is orders of magnitude larger (SMOKE.md
-        // "Streaming sessionization at 1M-user state" has the RocksDB
-        // evidence at scale).
-        ss.conf.set("spark.sql.shuffle.partitions",
-          streamStatePartitions(ss, dir).toString)
-        val src = eventsStream(ss, dir)
-          .filter(col("ts").isNotNull) // watermark column must be non-null
-        val doubled = src
-          .withColumn("__copy", explode(array(lit(0), lit(1))))
-          .drop("__copy")
-        val allCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-        val q = EventStream.streamingDedup(doubled, allCols)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          // per-batch overwrite dirs keep replayed micro-batches idempotent;
-          // NO coalesce(1): a single-threaded write of a replicated-scale
-          // batch (6.4M rows at x64) serializes the sink — the state
-          // partitioning already bounds the file count per batch
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$outDir/b$batchId"); ()
-          }
-          .start()
-        q.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(outDir)
-          .select(allCols.map(col): _*)
-          .orderBy("event_id")
-          .localCheckpoint() // free the sink/checkpoint dirs immediately
-      } finally rmTree(tmp)
-    },
-    // the oracle performs the same WORK as the gate, not just the same
-    // result: a real DISTINCT over the doubled input (r14 VERDICT: the old
-    // `SELECT ... FROM events` form was a stateless sort posing as a dedup
-    // baseline). It is also more robust — a full-row duplicate already in
-    // the events table collapses on BOTH sides now.
-    Some("""SELECT DISTINCT event_id, ts, user_id, event_type, value, props
-      |FROM (SELECT * FROM events UNION ALL SELECT * FROM events) t
-      |WHERE ts IS NOT NULL ORDER BY event_id""".stripMargin))
-
-  private val eventsSessionizeStream: Gate = Gate(
-    (s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
-      import scala.jdk.CollectionConverters._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sessionize_stream")
-      val outDir = tmp.resolve("out").toString
-      try {
-        // a stateful streaming query pays per-state-partition overhead (one
-        // HDFS-backed store + delta file per partition per batch) regardless
-        // of row count — scope the state partitioning to the gate's data
-        // size in a DEDICATED session (newSession: shared SparkContext, own
-        // SQLConf) instead of flipping the shared session's conf, which a
-        // concurrently-running gate would silently inherit
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions",
-          streamStatePartitions(ss, dir).toString)
-        val src = eventsStream(ss, dir)
-        val evs = src.filter(col("ts").isNotNull)
-          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[Sessionize.Ev]
-        val q = Sessionize.streaming(evs, gapMinutes = 30).writeStream
-          .outputMode("append")
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          // per-batch overwrite dirs make a replayed micro-batch (written
-          // sink, unfinished commit log) IDEMPOTENT — a plain append sink
-          // is only at-least-once and would double-count retried partials
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[Sessionize.SessionOut], batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$outDir/b$batchId"); ()
-          }
-          .start()
-        q.awaitTermination()
-        // a session spanning micro-batches emits one partial per batch under a
-        // stable (user_id, session_idx); the re-aggregation is the downstream
-        // contract documented on Sessionize.streaming
-        s.read.option("recursiveFileLookup", "true").parquet(outDir)
-          .groupBy("user_id", "session_idx")
-          .agg(min("start_ts").as("start_ts"), max("end_ts").as("end_ts"),
-            sum("n_events").cast(LongType).as("n_events"),
-            r3(sum("sum_value")).as("sum_value"))
-          .select(col("user_id"), col("session_idx").cast(LongType).as("session_idx"),
-            col("start_ts"), col("end_ts"), col("n_events"), col("sum_value"))
-          .orderBy("user_id", "session_idx")
-          // eager materialization (session-count-sized) so the sink + state
-          // checkpoint dirs can be deleted NOW — repeated gate invocations
-          // must not accumulate temp dirs for the host to clean up
-          .localCheckpoint()
-      } finally rmTree(tmp)
-    },
-    Some("""WITH p AS (
-      |  SELECT user_id, ts, event_id, value,
-      |   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-      |  FROM events WHERE ts IS NOT NULL),
-      |f AS (SELECT *, CASE WHEN prev IS NULL
-      |   OR epoch_us(ts) - epoch_us(prev) > 1800000000 THEN 1 ELSE 0 END AS nw FROM p),
-      |s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |   ROWS UNBOUNDED PRECEDING) AS sidx FROM f)
-      |SELECT user_id, CAST(sidx AS BIGINT) AS session_idx,
-      | min(ts) AS start_ts, max(ts) AS end_ts,
-      | count(*) AS n_events, round(sum(value),3) AS sum_value
-      |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
-
   // =====================================================================
-  // Training-data ops: dedup / similarity / text
+  // Training-data ops: dedup / text
   // =====================================================================
 
   private val dedupExact: Gate = Gate(
@@ -2169,69 +1960,6 @@ object Queries {
          |FROM cand WHERE bit_count(xor(sa, sb)) <= 6
          |ORDER BY 1,2""".stripMargin))
 
-  private val embedDupPairs: Gate = Gate(
-    // salt=8: the table has 10 label blocks — far fewer than the cores the
-    // quadratic pair stage should occupy (embeddingPairs doc); the pair set
-    // is salt-invariant so the oracle is unchanged
-    (s, dir) => Dedup.embeddingPairs(
-      table(s, dir, "embeddings").withColumn("embedding", col("embedding").cast("array<double>")),
-      "vec_id", "embedding", col("label"), threshold = 0.3, salt = 1)
-      .select(col("id_a"), col("id_b"), r4(col("cos")).as("cos"))
-      .orderBy("id_a", "id_b"),
-    Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-      |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      | round(list_cosine_similarity(a.v, b.v), 4) AS cos
-      |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-      |WHERE list_cosine_similarity(a.v, b.v) >= 0.3
-      |ORDER BY 1,2""".stripMargin))
-
-  /** SemDeDup over the precomputed `label` clusters (the deterministic
-    * cluster_col path — the k-means path is engine-internal and covered by
-    * OpsSpec): within-label cosine pairs at 0.3, connected components,
-    * survivors = cluster-min ids. The oracle replays pairs + recursive
-    * reachability exactly like the minhash dedup-stage gate.
-    */
-  private val semdedupGate: Gate = Gate(
-    (s, dir) => Dedup.semDedup(
-      table(s, dir, "embeddings").withColumn("embedding", col("embedding").cast("array<double>")),
-      "vec_id", "embedding", threshold = 0.3, clusterCol = Some("label"))
-      .select(col("vec_id"), col("label")).orderBy("vec_id"),
-    Some("""WITH RECURSIVE e AS (
-      |  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-      |pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      | FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-      | WHERE list_cosine_similarity(a.v, b.v) >= 0.3),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      | UNION SELECT id_b, id_a FROM pairs),
-      |reach(src, dst) AS (
-      | SELECT src, dst FROM edges
-      | UNION
-      | SELECT r.src, g.dst FROM reach r JOIN edges g ON r.dst = g.src),
-      |dropped AS (SELECT src AS id FROM reach GROUP BY src
-      | HAVING least(src, min(dst)) != src)
-      |SELECT vec_id, label FROM embeddings
-      |WHERE vec_id NOT IN (SELECT id FROM dropped) ORDER BY vec_id""".stripMargin))
-
-  // the hot-block guard is on (production configuration); no label block
-  // exceeds the cap at tested scales, so results stay exact vs the oracle
-  private val knnJoin: Gate = Gate(
-    (s, dir) => Similarity.knnJoin(
-      table(s, dir, "embeddings").withColumn("embedding", col("embedding").cast("array<double>")),
-      table(s, dir, "embeddings").withColumn("embedding", col("embedding").cast("array<double>")),
-      "vec_id", "embedding", "label", k = 3, maxBlockSize = Some(100000),
-      salt = 1)
-      .select(col("id_l"), col("id_r"), r4(col("cos")).as("cos"),
-        col("rank").cast(LongType).as("rank"))
-      .orderBy("id_l", "rank"),
-    Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-      |SELECT id_l, id_r, round(cos, 4) AS cos, rank FROM (
-      | SELECT a.vec_id AS id_l, b.vec_id AS id_r,
-      |  list_cosine_similarity(a.v, b.v) AS cos,
-      |  CAST(row_number() OVER (PARTITION BY a.vec_id
-      |    ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id) AS BIGINT) AS rank
-      | FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id)
-      |WHERE rank <= 3 ORDER BY id_l, rank""".stripMargin))
-
   private val winnowFp: Gate = Gate(
     (s, dir) => Dedup.winnowFingerprints(table(s, dir, "documents"), "doc_id", "text",
       n = 3, w = 4)
@@ -2482,49 +2210,6 @@ object Queries {
       |FROM l ASOF LEFT JOIN r
       |  ON l.user_id = r.user_id AND r.view_ts <= l.ts
       |ORDER BY l.event_id""".stripMargin))
-
-  /** Ingest-time as-of enrichment: the SAME click/view timeline as the
-    * batch `asof_join` gate run as a STREAM through
-    * [[graft.streaming.TemporalStream]] (one keyed stream, fixed per-key
-    * carry state on flatMapGroupsWithState), checked against the identical
-    * DuckDB ASOF JOIN oracle — streaming and batch agree row-for-row on
-    * in-order data by construction.
-    */
-  private val asofJoinStream: Gate = Gate(
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files.createTempDirectory("graft_asof_stream")
-      val outDir = tmp.resolve("out").toString
-      try {
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions",
-          streamStatePartitions(ss, dir).toString)
-        import ss.implicits._
-        val src = eventsStream(ss, dir)
-        val tev = src.filter(col("event_type").isin("click", "view"))
-          .select(col("user_id").as("k"),
-            when(col("ts").isNotNull, unix_micros(col("ts"))).as("t"),
-            when(col("event_type") === "view", 0).otherwise(1).as("side"),
-            col("event_id").as("id"))
-          // null-time reference rows are "at no time": never matchable
-          .filter(!(col("side") === 0 && col("t").isNull))
-          .as[graft.streaming.TemporalStream.TEv]
-        val q = graft.streaming.TemporalStream.streamingAsOf(tev).toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .format("parquet").option("path", outDir).start()
-        q.awaitTermination()
-        s.read.parquet(outDir)
-          .select(col("id").as("event_id"), col("k").as("user_id"),
-            timestamp_micros(col("t")).as("ts"),
-            timestamp_micros(col("matched_t")).as("view_ts"),
-            col("matched_id").as("view_event_id"))
-          .orderBy("event_id")
-          .localCheckpoint() // free the sink/checkpoint dirs immediately
-      } finally rmTree(tmp)
-    },
-    asofJoin.oracle)
 
   /** Nearest-direction as-of (the Polars join_asof strategy="nearest"
     * surface; no DuckDB ASOF equivalent exists, so the oracle replays it as
@@ -3163,11 +2848,7 @@ object Queries {
     "bin_numeric_values" -> binNumericValues,
     "match_revise" -> matchReviseQuery,
     "reshard_to_split" -> reshardSummary,
-    "events_hourly" -> eventsHourly,
     "events_json" -> eventsJson,
-    "events_sessionize" -> eventsSessionize,
-    "events_sessionize_stream" -> eventsSessionizeStream,
-    "events_dedup_stream" -> eventsDedupStream,
     "dedup_exact" -> dedupExact,
     "dedup_against" -> dedupAgainstGate,
     "dedup_lines" -> dedupLinesGate,
@@ -3203,9 +2884,6 @@ object Queries {
     "cluster_reps" -> clusterReps,
     "simhash_values" -> simhashValues,
     "simhash_pairs" -> simhashPairs,
-    "embed_dup_pairs" -> embedDupPairs,
-    "semdedup" -> semdedupGate,
-    "knn_join" -> knnJoin,
     "sample_split" -> sampleSplit,
     "pack_sequences" -> packSequences,
     "chunk_documents" -> chunkDocuments,
@@ -3213,7 +2891,6 @@ object Queries {
     "shuffle_rows" -> shuffleRows,
     "asof_join" -> asofJoin,
     "asof_join_nearest" -> asofJoinNearest,
-    "asof_join_stream" -> asofJoinStream,
     "range_join" -> rangeJoinGate,
     "rolling_agg" -> rollingAgg,
     "feature_pipeline" -> featurePipeline,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dsl.Cfg
 import graft.operators.Pipeline
-import graft.ops.{Decontaminate, Dedup, Packing, Redaction, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, Packing, Redaction, Sampling, TextAnalysis}
 
 /** Built-in training-data-hygiene stages, registered through the SAME
   * extension point third-party packages use ([[PipelineConfig.register]],
@@ -16,13 +16,11 @@ import graft.ops.{Decontaminate, Dedup, Packing, Redaction, Sampling, Similarity
   * These go beyond the reference's own stage set: they wrap the
   * `graft.ops` operators (each independently oracle-verified by the
   * correctness gate) as pipeline stages over whatever table the pipeline
-  * threads as `data` — dedup (exact/fingerprint/minhash/ngram/simhash/
-  * embedding), text signals (quality/lang-id/tokens/winnow), similarity
-  * (knn_join), sampling (sample/sample_split/stratified_cap),
-  * sessionization, and a generic `filter_rows` predicate stage. Column
-  * names are configurable per stage (`id_col`, `text_col`, ...) with
-  * documents-table defaults (`doc_id`, `text`) and embeddings-table
-  * defaults (`vec_id`, `embedding`, `label`) for the vector stages.
+  * threads as `data` — dedup (exact/fingerprint/minhash/ngram/simhash),
+  * text signals (quality/lang-id/tokens/winnow), sampling
+  * (sample/sample_split/stratified_cap), and a generic `filter_rows`
+  * predicate stage. Column names are configurable per stage (`id_col`,
+  * `text_col`, ...) with documents-table defaults (`doc_id`, `text`).
   *
   * Dedup-stage semantics: the stage RETURNS THE DEDUPLICATED DATA — rows
   * whose id survives as its group's representative (minimum id per exact
@@ -628,12 +626,7 @@ object OpStages {
       })
     }
 
-    // ---- similarity / sketch stages ------------------------------------
-    // (embedding-table column defaults follow the embeddings schema:
-    // `vec_id`, `embedding`, block/label column `label`)
-
-    def vecIds(cfg: Cfg) = (cfg.getStr(IdCol).getOrElse("vec_id"),
-      cfg.getStr("vec_col").getOrElse("embedding"))
+    // ---- sketch stages ---------------------------------------------------
 
     // append the winnowing sketch as an array column (pure projection —
     // no explode/shuffle; the exploded per-fingerprint table stays available
@@ -644,65 +637,6 @@ object OpStages {
       val w = cfg.getInt("w").getOrElse(4)
       Pipeline.DataStage(name, m => appendCols(name, m.data,
         Seq(Dedup.winnowFingerprintArray(col(text), n, w).as("winnow_fingerprints"))))
-    }
-
-    // embedding-cosine near-dup dedup over a block/label column — same
-    // representative-selection semantics as the text dedup stages
-    PipelineConfig.register("embed_dedup") { (name, cfg) =>
-      val (id, vec) = vecIds(cfg)
-      val block = cfg.getStr("block_col").getOrElse("label")
-      val threshold = cfg.getDouble("threshold").getOrElse(0.95)
-      val maxBlock = cfg.getInt("max_block") // None = no hot-block sub-bucketing
-      Pipeline.DataStage(name, m => dropNonRepresentatives(m.data, id,
-        Dedup.embeddingPairs(m.data, id, vec, col(block), threshold, maxBlock)))
-    }
-
-    // SemDeDup (arXiv:2303.09540): coarse-cluster the embeddings — a
-    // precomputed `cluster_col` if the corpus has one, else `k` k-means
-    // cells over `iters` Lloyd rounds — then drop within-cluster cosine
-    // near-duplicates, keeping the cluster-min-id representative
-    PipelineConfig.register("semdedup") { (name, cfg) =>
-      val (id, vec) = vecIds(cfg)
-      val clusterCol = cfg.getStr("cluster_col")
-      val threshold = cfg.getDouble("threshold").getOrElse(0.95)
-      val k = cfg.getInt("k").getOrElse(64)
-      val iters = cfg.getInt("iters").getOrElse(1)
-      val maxBlock = cfg.getInt("max_block")
-      Pipeline.DataStage(name, m =>
-        Dedup.semDedup(m.data, id, vec, threshold, clusterCol, k, iters, maxBlock))
-    }
-
-    // k-NN join: each data row gets its k nearest rows of `right_path`
-    // (another parquet table; omitted = self-join) sharing `block_col`.
-    // Default output appends a `knn` array column (sorted by rank) so the
-    // corpus stays chainable; `output: pairs` replaces data with the raw
-    // (id_l, id_r, cos, rank) pair table for analysis pipelines.
-    PipelineConfig.register("knn_join") { (name, cfg) =>
-      val (id, vec) = vecIds(cfg)
-      val block = cfg.getStr("block_col").getOrElse("label")
-      val k = cfg.getInt("k").getOrElse(5)
-      val cap = cfg.getInt("max_block_size")
-      val rightPath = cfg.getStr("right_path")
-      val output = cfg.getStr("output").getOrElse("column")
-      require(output == "column" || output == "pairs",
-        s"stage $name: `output` must be `column` or `pairs`, got `$output`")
-      Pipeline.DataStage(name, m => {
-        val right = rightPath match {
-          case Some(p) => m.data.sparkSession.read.parquet(p)
-          case None => m.data
-        }
-        val pairs = Similarity.knnJoin(m.data, right, id, vec, block, k, cap)
-        if (output == "pairs") pairs
-        else {
-          val neighbors = pairs
-            .groupBy(col("id_l").as(id))
-            .agg(sort_array(collect_list(struct(
-              col("rank"), col("id_r"), col("cos")))).as("knn"))
-          require(!m.data.columns.contains("knn"),
-            s"stage $name: output column knn already exists in the input")
-          m.data.join(neighbors, Seq(id), "left")
-        }
-      })
     }
 
     // per-doc top-k TF-IDF terms (keyword extraction / domain-mix stats);
@@ -990,31 +924,6 @@ object OpStages {
           s"stage $name: unparsable `predicate` '$predicate': ${e.getMessage}")
       }
       Pipeline.DataStage(name, m => m.data.filter(expr(predicate)))
-    }
-
-    // batch sessionization over an event-shaped data table: groups activity
-    // into gap-separated sessions (the sequence-construction primitive).
-    // Column names are configurable; REPLACES data with the session table
-    // (user_id, session_idx, start_ts, end_ts, n_events, sum_value). The
-    // streaming twin stays on the graft.streaming API (a YAML pipeline is a
-    // batch run; identical semantics spec-locked in StreamingSpec).
-    PipelineConfig.register("sessionize") { (name, cfg) =>
-      val gap = cfg.getInt("gap_minutes").getOrElse(30)
-      val user = cfg.getStr("user_col").getOrElse("user_id")
-      val tsc = cfg.getStr("ts_col").getOrElse("ts")
-      val value = cfg.getStr("value_col").getOrElse("value")
-      val tieBreak = cfg.getStr("tie_break_col").getOrElse("event_id")
-      // the select below renames into the fixed (user_id, ts, value) shape;
-      // a tie-break column named like one of them would duplicate an output
-      // column and surface later as AMBIGUOUS_REFERENCE
-      require(!Set("user_id", "ts", "value").contains(tieBreak),
-        s"stage $name: `tie_break_col` ($tieBreak) collides with the " +
-          "sessionizer's user_id/ts/value output columns")
-      Pipeline.DataStage(name, m =>
-        graft.streaming.Sessionize.batch(
-          m.data.select(col(user).as("user_id"), col(tsc).as("ts"),
-            col(value).as("value"), col(tieBreak).as(tieBreak)),
-          gapMinutes = gap, tieBreak = tieBreak))
     }
   }
 }

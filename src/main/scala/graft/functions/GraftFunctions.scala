@@ -76,23 +76,6 @@ object GraftFunctions {
     }
   }
 
-  /** Vector math on array columns: native Catalyst expressions with tight
-    * codegen loops (graft.plans.VectorExpressions) — the higher-order
-    * `zip_with`+`aggregate` composition is semantically identical but pays a
-    * per-element lambda frame, which dominates knn/dedup at scale.
-    */
-  def dot(a: Column, b: Column): Column = graft.plans.VectorExpressions.dot(a, b)
-
-  def norm(a: Column): Column = graft.plans.VectorExpressions.l2norm(a)
-
-  def cosine(a: Column, b: Column): Column = graft.plans.VectorExpressions.cosine(a, b)
-
-  /** Reference implementation of [[dot]] via higher-order functions; kept for
-    * cross-checking the native expression in tests.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
   /** Right-bisect (numpy searchsorted side="right"): number of endpoints
     * <= value. Reference: bin_numeric_values.py:185.
     */

@@ -41,9 +41,8 @@ object MedsIO {
     */
   def read(spark: SparkSession, root: String): MedsData = {
     val data = readData(spark, root)
-    // a streaming sink writes data/ before any metadata exists — a missing
-    // codes table falls back to empty (same contract as splits below), so
-    // batch operators can run over a root a stream is still appending to
+    // a root may hold data/ with no metadata yet — a missing codes table
+    // falls back to empty (same contract as splits below)
     val codes = readMetadataTable(spark, s"$root/metadata/codes.parquet", codesSchema)
     // Only a *missing* splits table falls back to empty; a corrupt or
     // unreadable one must propagate (ADVICE r1: silently-empty splits made
@@ -54,8 +53,8 @@ object MedsIO {
   }
 
   /** Read one metadata side table. A missing table falls back to the
-    * canonical empty frame (a streaming sink writes data/ before any
-    * metadata exists). A PRESENT single-file table whose footer proves 0
+    * canonical empty frame (a root may hold data/ before any metadata
+    * exists). A PRESENT single-file table whose footer proves 0
     * rows at the canonical column set ALSO resolves to that frame — both
     * footer checks are driver-side (no job), and restoring the
     * statically-empty LocalRelation is what lets the NEXT checkpoint's
@@ -194,8 +193,8 @@ object MedsIO {
     markerFs.create(markerPath, true).close()
   }
 
-  /** The options of every parquet file graft writes into a MEDS root, the
-    * streaming sink's included: zstd, the codec of the reference's Polars
+  /** The options of every parquet file graft writes into a MEDS root:
+    * zstd, the codec of the reference's Polars
     * `write_parquet`. A format, not a setting.
     */
   private[graft] val ParquetOptions: Map[String, String] = Map("compression" -> "zstd")

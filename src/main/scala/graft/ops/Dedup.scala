@@ -573,144 +573,6 @@ object Dedup {
     (labels, i)
   }
 
-  /** Embedding-cosine near-dup pairs, blocked by a coarse partition column
-    * (cluster/label/bucket) so the cross join stays within blocks. For
-    * unblocked data pass a constant column (exact but quadratic) or an LSH
-    * bucket from `Similarity.signBucket`.
-    *
-    * `maxBlock` is this operator's hot-block guard (the same skew family as
-    * ngram `maxDf` / band `maxBucket` / knn `maxBlockSize`): a block of d
-    * rows fans into d² candidates through one join key, so one hot label
-    * degenerates the whole query at scale. With `Some(cap)`, blocks whose
-    * size exceeds the cap are sub-bucketed by sign-LSH over
-    * `subBucketDims` on BOTH join sides (join key becomes (block, bucket),
-    * expected fan-out cut ~2^dims). Results stay exact for every block
-    * within the cap; oversized blocks find pairs within the sub-bucket —
-    * near-identical vectors (the cos ≥ threshold targets of this operator)
-    * agree on coordinate signs almost everywhere, so true near-dups
-    * co-bucket, the same exactness trade `Similarity.knnJoin` makes. The
-    * oversized-block list is a map-side-combined count broadcast to both
-    * sides: no extra shuffle of the vectors.
-    *
-    * `salt` is the LOW-BLOCK-CARDINALITY parallelism knob: the pair join
-    * hash-partitions on the block key, so a corpus with fewer blocks than
-    * the cluster has cores runs the quadratic stage on #blocks tasks no
-    * matter the cluster size (block cardinality is a data property, not a
-    * scale property — 10 labels stay 10 labels at 100 TB). With `salt = S`,
-    * the a-side gets a deterministic id-hash salt and the b-side is
-    * replicated S ways (join key gains `__salt`), spreading each block's
-    * pair work across S tasks for an S× linear replication of one side —
-    * negligible next to the quadratic pair stream it parallelizes. The
-    * pair SET is unchanged. Leave at 1 when block cardinality already
-    * exceeds the cluster's parallelism.
-    *
-    * Per-pair cost: norms are computed ONCE per row before the join
-    * ([[graft.plans.VectorExpressions.cosinePrenormed]] — bit-identical
-    * arithmetic to `cosine`), so the per-pair loop is one fused dot pass
-    * instead of dot + two norm passes.
-    */
-  def embeddingPairs(
-      embs: DataFrame, idCol: String, vecCol: String, blockCol: Column,
-      threshold: Double = 0.95, maxBlock: Option[Int] = None,
-      subBucketDims: Seq[Int] = 0 until 8, salt: Int = 1,
-      pairBudget: Long = 2000000L): DataFrame = {
-    require(salt >= 1, s"salt must be >= 1, got $salt")
-    val e = embs.select(col(idCol), col(vecCol), blockCol.as("__block"),
-      graft.plans.VectorExpressions.l2norm(col(vecCol)).as("__nrm"))
-    val (a, b, joinKeys) = maxBlock match {
-      case None =>
-        (e.toDF("id_a", "vec_a", "__block", "__na"),
-          e.toDF("id_b", "vec_b", "__block", "__nb"),
-          Seq("__block"))
-      case Some(cap) =>
-        val oversized = e.groupBy("__block").agg(count(lit(1)).as("__bn"))
-          .filter(col("__bn") > cap)
-          .select(col("__block"), lit(true).as("__hot"))
-        val bucketed = e.join(broadcast(oversized), Seq("__block"), "left")
-          .withColumn("__bucket", when(col("__hot"),
-            graft.ops.Similarity.signBucket(col(vecCol), subBucketDims)).otherwise(lit(0L)))
-          .drop("__hot")
-        def side(p: String) = bucketed.select(col("__block"), col("__bucket"),
-          col(idCol).as(s"id_$p"), col(vecCol).as(s"vec_$p"),
-          col("__nrm").as(s"__n$p"))
-        (side("a"), side("b"), Seq("__block", "__bucket"))
-    }
-    // Plan dispatch, same contract as Similarity.knnJoin: above `pairBudget`
-    // estimated pairs (one metadata-sized key-count job) the STREAMING
-    // form runs — cogroup per block, each unordered pair's cosine computed
-    // ONCE (the join form materializes N² pair rows and filters half away
-    // before scoring), no SortMergeJoin row copies. Long.MaxValue forces
-    // the join form without the estimate; negative forces streaming.
-    val (estPairs, nKeys) =
-      if (pairBudget == Long.MaxValue) (0L, 1L)
-      else {
-        val cnt = a.groupBy(joinKeys.map(col): _*).agg(count(lit(1)).as("__an"))
-        val row = cnt.agg(coalesce(sum(col("__an") * col("__an")), lit(0L)),
-          count(lit(1))).head()
-        (row.getLong(0), row.getLong(1))
-      }
-    if (estPairs > pairBudget || pairBudget < 0) {
-      val parallelism = embs.sparkSession.sparkContext.defaultParallelism
-      val autoSalt = if (salt > 1) salt
-        else math.max(1L, math.min(64L, 2L * parallelism / math.max(1L, nKeys))).toInt
-      Similarity.streamingThresholdPairs(a, b, joinKeys, threshold, autoSalt)
-    } else {
-      val (as, bs, keys) =
-        if (salt == 1) (a, b, joinKeys)
-        else (
-          a.withColumn("__salt", pmod(xxhash64(col("id_a")), lit(salt)).cast("int")),
-          b.withColumn("__salt",
-            explode(array((0 until salt).map(s => lit(s)): _*))),
-          joinKeys :+ "__salt")
-      as.join(bs, keys)
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("cos", graft.plans.VectorExpressions.cosinePrenormed(
-          col("vec_a"), col("vec_b"), col("__na"), col("__nb")))
-        .filter(col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    }
-  }
-
-  /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup of an
-    * embedded corpus — cluster the embeddings coarsely, then inside each
-    * cluster drop every member of a cosine-near-duplicate group except its
-    * representative. The paper keeps a random exemplar; here the surviving
-    * exemplar is the cluster-min id (via [[resolveClusters]]), the same
-    * deterministic representative rule every text-dedup stage uses.
-    *
-    * `clusterCol` names a precomputed coarse-cluster column (a topic label,
-    * an LSH bucket). When absent — the common case for an unlabeled corpus —
-    * cells come from [[Similarity.kmeansAssign]] (`k` deterministic
-    * hash-seeded cells, `iters` Lloyd rounds). Exact-duplicate embeddings
-    * always co-cluster after one Lloyd round (identical vectors score
-    * identical cell cosines), so true duplicates cannot be split across
-    * cells; near-duplicates can straddle a cell boundary — the recall trade
-    * that makes SemDeDup linear-per-cell instead of corpus-quadratic.
-    *
-    * Scale shape: kmeans is `iters` scans with only a k×dim centroid
-    * aggregation shuffled; pair generation is [[embeddingPairs]] (equi-join
-    * on the cell key, per-cell quadratic bounded by `maxBlock` sub-bucketing
-    * at ~N/k rows per cell when k ~ sqrt(N)); resolution is log-diameter
-    * pointer jumping. Nothing corpus-quadratic, nothing driver-sized.
-    */
-  def semDedup(embs: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, clusterCol: Option[String] = None,
-      k: Int = 64, iters: Int = 1, maxBlock: Option[Int] = None): DataFrame = {
-    val (clustered, cell) = clusterCol match {
-      case Some(c) =>
-        require(embs.columns.contains(c), s"cluster column `$c` not in input")
-        (embs, c)
-      case None =>
-        (Similarity.kmeansAssign(embs, idCol, vecCol, k, iters), "__cell")
-    }
-    val pairs = embeddingPairs(clustered, idCol, vecCol, col(cell),
-      threshold, maxBlock)
-    val drop = resolveClusters(pairs)
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as(idCol))
-    embs.join(drop, Seq(idCol), "left_anti")
-  }
-
   /** Corpus-level exact line dedup (the C4 / RefinedWeb hygiene step:
     * boilerplate lines — nav menus, cookie banners, license headers — repeat
     * across millions of pages): keep only the globally-FIRST occurrence of

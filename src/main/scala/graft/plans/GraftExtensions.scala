@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** `SparkSessionExtensions` hook registering graft's native expressions as
-  * SQL functions, so `spark.sql("SELECT graft_dot(a, b) ...")` works for SQL
+  * SQL functions, so `spark.sql("SELECT graft_hash56(s) ...")` works for SQL
   * users and the expressions participate in Catalyst exactly like builtins.
   *
   * Use via a session builder's `withExtensions(new GraftExtensions)` or
@@ -60,10 +60,6 @@ object GraftExtensions {
     }
 
   val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("graft_dot", info("graft_dot", "graft_dot(a, b) - dot product of two double arrays"),
-      arity("graft_dot", 2)(es => DotProduct(es(0), es(1)))),
-    ("graft_l2norm", info("graft_l2norm", "graft_l2norm(a) - L2 norm of a double array"),
-      arity("graft_l2norm", 1)(es => L2Norm(es(0)))),
     ("graft_hash56", info("graft_hash56",
       "graft_hash56(s) - portable 56-bit string hash"),
       arity("graft_hash56", 1)(es => Hash56(es(0)))),

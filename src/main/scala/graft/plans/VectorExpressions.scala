@@ -7,114 +7,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the vector-similarity hot path.
-  *
-  * The composable alternative (`zip_with` + `aggregate` higher-order
-  * functions) allocates a lambda frame per element and falls out of efficient
-  * codegen; for 64-dim embeddings compared across millions of candidate
-  * pairs that is the dominant cost of knn/dedup queries. These expressions
-  * generate a tight primitive loop inside whole-stage codegen — preference
-  * order (b) from the build guidelines: a custom `Expression` before any
-  * custom physical operator, and never a UDF.
-  *
-  * Null semantics match the higher-order reference implementation
-  * (GraftFunctions.dotHof): mismatched lengths or any null element → NULL —
-  * a silently truncated or null-as-zero dot product would return a
-  * plausible-looking similarity for corrupt embeddings.
-  */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // mismatch/null-element yields null
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** L2 norm — same codegen shape and null semantics as DotProduct. */
-case class L2Norm(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null element yields null
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_l2norm"
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var i = 0
-    val n = x.numElements()
-    while (i < n) {
-      if (x.isNullAt(i)) return null
-      val v = x.getDouble(i)
-      acc += v * v
-      i += 1
-    }
-    math.sqrt(acc)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $v = $a.getDouble($i);
-         |  $acc += $v * $v;
-         |}
-         |if (!${ev.isNull}) { ${ev.value} = java.lang.Math.sqrt($acc); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+// Native Catalyst expressions for the dedup and text-analysis hot paths. The
+// composable alternative (`zip_with` + `aggregate` higher-order functions)
+// allocates a lambda frame per element and falls out of efficient codegen;
+// these generate a tight primitive loop inside whole-stage codegen — a
+// custom `Expression` before any custom physical operator, and never a UDF.
 
 /** One-pass MinHash signature: for each universal-hash permutation i,
   * min over the row's shingle hashes of `(a_i·(h mod P) + b_i) mod P`,
@@ -1177,11 +1074,6 @@ case class Hash56Array(child: Expression)
 object VectorExpressions {
   private def expr(c: Column) = GraftSqlBridge.expression(c)
 
-  def dot(a: Column, b: Column): Column =
-    GraftSqlBridge.column(DotProduct(expr(a), expr(b)))
-
-  def l2norm(a: Column): Column = GraftSqlBridge.column(L2Norm(expr(a)))
-
   def minhashSig(hashes: Column, params: Seq[(Long, Long)]): Column =
     GraftSqlBridge.column(MinHashSignatures(expr(hashes), params))
 
@@ -1222,20 +1114,4 @@ object VectorExpressions {
 
   def bloomAnyContain(hashes: Column, bloomBytes: Array[Byte]): Column =
     GraftSqlBridge.column(BloomAnyContain(expr(hashes), bloomBytes))
-
-  /** Zero-norm vectors have undefined cosine → null (try_divide keeps ANSI
-    * mode from throwing DIVIDE_BY_ZERO on degenerate rows).
-    */
-  def cosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.try_divide(dot(a, b), l2norm(a) * l2norm(b))
-
-  /** [[cosine]] with norms PRECOMPUTED once per row (`na`/`nb` must be
-    * `l2norm` of the respective vector): bit-identical arithmetic — the
-    * same sequential dot, the same norm product, the same try_divide —
-    * but one array pass per candidate pair instead of three. This is the
-    * form every block-quadratic pair join should use: at N² pairs the two
-    * redundant norm passes are the dominant flop count.
-    */
-  def cosinePrenormed(a: Column, b: Column, na: Column, nb: Column): Column =
-    org.apache.spark.sql.functions.try_divide(dot(a, b), na * nb)
 }

@@ -244,61 +244,4 @@ class BoundaryPropertySpec extends SparkSpec {
       org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
   }
-
-  // --- sessionize gap boundary -------------------------------------------
-
-  /** `Sessionize.batch` vs a naive per-user scan. The generator pins the
-    * boundary cases: deltas exactly AT the gap (`>` strict — a gap-sized
-    * delta continues the session), zero deltas with event-id tie-break, and
-    * null timestamps (NULLS FIRST ordering makes every null-ts event a
-    * singleton session: its `lag` is null → new; and the first timed event
-    * after the nulls also sees a null lag → new).
-    */
-  test("sessionize: exact-gap, tie, and null-ts boundaries equal a naive scan") {
-    val gapMin = 2
-    val gapMicros = gapMin * 60L * 1000000L
-    val base = 1700000000000000L // epoch micros
-    val genEvents: Gen[List[(Long, Option[Long], Long)]] = for {
-      n <- Gen.choose(1, 12)
-      evs <- Gen.listOfN(n, for {
-        user <- Gen.choose(0L, 2L)
-        ts <- Gen.frequency(
-          (8, Gen.choose(0L, 5L).map(m => Some(base + m * 60L * 1000000L))),
-          (1, Gen.const(None: Option[Long])))
-      } yield (user, ts))
-    } yield evs.zipWithIndex.map { case ((u, t), i) => (u, t, i.toLong) }
-    val prop = Prop.forAll(genEvents) { evs =>
-      val df = evs.map { case (u, t, id) => (u, t, id, (id % 5 + 1).toDouble) }
-        .toDF("user_id", "ts_us", "event_id", "value")
-        .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
-      val got = graft.streaming.Sessionize.batch(df, gapMinutes = gapMin)
-        .collect().map { r =>
-          (r.getLong(0), r.getLong(1),
-            Option(r.getTimestamp(2)).map(_.getTime * 1000L),
-            Option(r.getTimestamp(3)).map(_.getTime * 1000L),
-            r.getLong(4), r.getDouble(5))
-        }.toSet
-      val want = evs.groupBy(_._1).flatMap { case (u, es) =>
-        val sorted = es.sortBy(e => (e._2.isDefined, e._2.getOrElse(0L), e._3))
-        var idx = 0L
-        var prev: Option[Long] = None
-        val tagged = sorted.map { case (_, ts, id) =>
-          val isNew = prev.isEmpty || (ts.nonEmpty && ts.get - prev.get > gapMicros)
-          if (isNew) idx += 1
-          prev = ts
-          (idx, ts, id)
-        }
-        tagged.groupBy(_._1).map { case (sidx, ses) =>
-          val tss = ses.flatMap(_._2)
-          (u, sidx, tss.minOption, tss.maxOption, ses.size.toLong,
-            ses.map(e => (e._3 % 5 + 1).toDouble).sum)
-        }
-      }.toSet
-      if (got != want) println(s"SESSION MISMATCH evs=$evs\n got=$got\n want=$want")
-      got == want
-    }
-    val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(15), prop)
-    assert(res.passed, res.status.toString)
-  }
 }

@@ -4,7 +4,6 @@ import graft.meds.{MedsData, MedsIO}
 import graft.meds.MedsSchema._
 import graft.obs.Collector
 import graft.operators.{AggregateCodeMetadata, ReshardToSplit}
-import graft.streaming.EventStream
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
@@ -195,27 +194,16 @@ class MedsIOSpec extends SparkSpec {
         finally reader.close()
       }.toSeq
 
-  test("every column chunk MedsIO writes is zstd: run, checkpoint, resharded, " +
-      "empty-result and streaming-sink roots") {
+  test("every column chunk MedsIO writes is zstd: run, checkpoint, resharded, empty roots") {
     val dir = tmp("zstd")
     Files.writeString(Paths.get(dir, "pipeline.yaml"), pipeline)
     Main.run(Array(s"$dir/pipeline.yaml", MedsFixture.root, s"$dir/out", s"$dir/ckpt"), spark)
     // the pipeline's own threshold (20 events) keeps no fixture subject
     Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$dir/empty"), spark)
     assert(Files.isRegularFile(Paths.get(dir, "empty", "data", "empty.parquet")))
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, java.sql.Timestamp, String, Float)]
-    val q = EventStream.medsSink(input.toDF().toDF(SubjectId, Time, Code, NumericValue),
-      s"$dir/sink", s"$dir/sink_ckpt")
-    try {
-      input.addData((1L, java.sql.Timestamp.valueOf("2020-01-01 10:00:00"), "HR", 60f))
-      q.processAllAvailable()
-    } finally q.stop()
     val written = Seq("Main.run output" -> s"$dir/out", "checkpoint root" -> s"$dir/ckpt",
       "resharded" -> roots.toMap.apply("resharded (.shards.json)"),
-      "empty result" -> s"$dir/empty", "medsSink" -> s"$dir/sink/data")
+      "empty result" -> s"$dir/empty")
     written.foreach { case (layout, root) =>
       val files = chunkCodecs(root)
       assert(files.exists(_._2.nonEmpty), s"$layout: no column chunk under $root")

@@ -199,8 +199,8 @@ class OpStagesSpec extends SparkSpec {
   }
 
   test("similarity/winnow/corpus stages are registered") {
-    val expected = Set("winnow_fingerprint", "embed_dedup", "semdedup", "knn_join", "sessionize",
-      "filter_rows", "json_extract", "normalize_text", "text_repetition",
+    val expected = Set("winnow_fingerprint", "filter_rows", "json_extract",
+      "normalize_text", "text_repetition",
       "decontaminate", "pack_sequences", "redact_pii", "quality_filter",
       "dedup_lines", "remove_dup_spans", "tf_idf", "text_entropy",
       "load_jsonl", "write_jsonl", "load_csv", "c4_filter", "corpus_stats",
@@ -373,59 +373,6 @@ class OpStagesSpec extends SparkSpec {
     assert(hKept.contains(1L) && !hKept.contains(3L))
   }
 
-  private def embRows = {
-    import java.sql.Timestamp
-    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
-    val t1 = Timestamp.valueOf("2024-01-02 00:00:00")
-    // subject 30 has a single event — filter_subjects(min_events=2) drops it
-    spark.createDataFrame(Seq(
-      (10L, t0, 1L, Seq(1.0, 0.0, 0.0, 0.1), "a"),
-      (10L, t1, 2L, Seq(0.9, 0.1, 0.0, 0.0), "a"),
-      (20L, t0, 3L, Seq(0.0, 1.0, 0.0, 0.0), "a"),
-      (20L, t1, 4L, Seq(0.0, 0.9, 0.1, 0.0), "a"),
-      (30L, t0, 5L, Seq(0.5, 0.5, 0.0, 0.0), "a")
-    )).toDF("subject_id", "time", "vec_id", "embedding", "label")
-  }
-
-  test("YAML pipeline chains filter_subjects -> knn_join (column output)") {
-    val yaml =
-      """stages:
-        |  - filter_subjects:
-        |      min_events_per_subject: 2
-        |  - knn_join:
-        |      k: 1
-        |""".stripMargin
-    val out = Pipeline.run(spark, emptyMeds(embRows),
-      PipelineConfig.fromYaml(yaml).stages).data
-    assert(out.columns.contains("knn"))
-    val rows = out.select("vec_id", "knn.id_r").collect()
-    assert(rows.map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L)) // 5 filtered out
-    rows.foreach { r =>
-      val neighbors = r.getSeq[Long](1)
-      assert(neighbors.size == 1 && neighbors.head != r.getLong(0))
-      assert(neighbors.head != 5L) // the filtered row is not a candidate
-    }
-  }
-
-  test("knn_join right_path joins a second parquet table; pairs output shape") {
-    val dir = java.nio.file.Files.createTempDirectory("knn_right").toString
-    embRows.select("vec_id", "embedding", "label").write.mode("overwrite")
-      .parquet(s"$dir/right.parquet")
-    val yaml =
-      s"""stages:
-         |  - knn_join:
-         |      k: 2
-         |      right_path: $dir/right.parquet
-         |      output: pairs
-         |""".stripMargin
-    val out = Pipeline.run(spark, emptyMeds(embRows),
-      PipelineConfig.fromYaml(yaml).stages).data
-    assert(out.columns.toSeq == Seq("id_l", "id_r", "cos", "rank"))
-    // every left row found 2 right-table neighbors (self excluded by id)
-    val counts = out.groupBy("id_l").count().collect().map(_.getLong(1))
-    assert(counts.length == 5 && counts.forall(_ == 2L))
-  }
-
   test("asof_join stage: backward and nearest directions reach the right operator") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("asof_right").toString
@@ -484,20 +431,6 @@ class OpStagesSpec extends SparkSpec {
     assert(byId(6L).isNullAt(1)) // "short text" has < n words
     // identical text yields identical sketch
     assert(byId(1L).getSeq[Long](1) == byId(2L).getSeq[Long](1))
-  }
-
-  test("embed_dedup keeps the min-id representative per near-identical cluster") {
-    val yaml =
-      """stages:
-        |  - embed_dedup:
-        |      threshold: 0.98
-        |""".stripMargin
-    val out = Pipeline.run(spark, emptyMeds(embRows),
-      PipelineConfig.fromYaml(yaml).stages).data
-    val kept = out.select("vec_id").collect().map(_.getLong(0)).toSet
-    // vec 1~2 and 3~4 are near-identical (cos > 0.98): min ids 1 and 3 stay
-    assert(kept.contains(1L) && kept.contains(3L) && kept.contains(5L))
-    assert(Set(2L, 4L).intersect(kept).isEmpty)
   }
 
   test("normalize_text stage: fixed-order ops, in-place or appended") {
@@ -580,30 +513,6 @@ class OpStagesSpec extends SparkSpec {
       PipelineConfig.fromYaml("stages:\n  - filter_rows\n")
     }
     assert(ex.getMessage.contains("predicate"))
-  }
-
-  test("sessionize stage groups events into gap-separated sessions from YAML") {
-    import java.sql.Timestamp
-    def t(s: String) = Timestamp.valueOf(s)
-    val events = spark.createDataFrame(Seq(
-      (7L, t("2024-01-01 10:00:00"), 1L, 2.0),
-      (7L, t("2024-01-01 10:10:00"), 2L, 3.0),
-      (7L, t("2024-01-01 11:30:00"), 3L, 1.0), // > 30 min gap -> new session
-      (8L, t("2024-01-01 09:00:00"), 4L, 5.0)
-    )).toDF("uid", "when", "event_id", "amount")
-    val yaml =
-      """stages:
-        |  - sessionize:
-        |      gap_minutes: 30
-        |      user_col: uid
-        |      ts_col: when
-        |      value_col: amount
-        |""".stripMargin
-    val out = Pipeline.run(spark, emptyMeds(events),
-      PipelineConfig.fromYaml(yaml).stages).data
-    val rows = out.select("user_id", "session_idx", "n_events", "sum_value")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(rows == Set((7L, 1L, 2L, 5.0), (7L, 2L, 1L, 1.0), (8L, 1L, 1L, 5.0)))
   }
 
   test("corpus pipeline end-to-end through the CLI on a non-MEDS root") {

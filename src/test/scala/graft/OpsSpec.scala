@@ -471,51 +471,6 @@ class DedupSpec extends SparkSpec {
       .collect().head.getString(1)
     assert(cleaned == "p q r s")
   }
-
-  test("embedding near-dup pairs within blocks above threshold") {
-    val embs = Seq(
-      (0L, Array(1.0, 0.0, 0.0), 0),
-      (1L, Array(0.999, 0.04, 0.0), 0), // near dup of 0
-      (2L, Array(0.0, 1.0, 0.0), 0),
-      (3L, Array(1.0, 0.0, 0.0), 1) // same vector, different block → not compared
-    ).toDF("vec_id", "embedding", "label")
-    val pairs = Dedup.embeddingPairs(embs, "vec_id", "embedding", col("label"), 0.95)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((0L, 1L)))
-  }
-
-  test("embeddingPairs maxBlock guard: hot block sub-buckets, near-dups still found") {
-    val rng = new scala.util.Random(31)
-    // hot block "h": 60 vectors = 20 near-identical triples (base + tiny
-    // jitter, pairwise cos ~1) scattered across orthants so sub-bucketing
-    // splits the block; cold block "c": 4 vectors, stays exact
-    val hot = (0 until 20).flatMap { g =>
-      val base = Array.fill(8)(rng.nextGaussian())
-      (0 until 3).map(j =>
-        (g * 3L + j, base.map(_ + rng.nextGaussian() * 1e-4), "h"))
-    }
-    val cold = (0 until 4).map(i => (100L + i, Array.fill(8)(rng.nextGaussian()), "c"))
-    val embs = (hot ++ cold).toDF("vec_id", "embedding", "label")
-    val unguarded = Dedup.embeddingPairs(embs, "vec_id", "embedding", col("label"), 0.999)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val guarded = Dedup.embeddingPairs(embs, "vec_id", "embedding", col("label"), 0.999,
-      maxBlock = Some(10))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // every true near-dup pair (within a jitter triple) survives the guard:
-    // near-identical vectors agree on coordinate signs, so triples co-bucket
-    val trueDups = (0 until 20).flatMap { g =>
-      val ids = (0 until 3).map(g * 3L + _)
-      for { a <- ids; b <- ids if a < b } yield (a, b)
-    }.toSet
-    assert(trueDups.subsetOf(guarded), s"missing: ${trueDups -- guarded}")
-    // the guard never invents pairs and the cold block is untouched (exact)
-    assert(guarded.subsetOf(unguarded))
-    // maxBlock=None is plan-level zero-cost: no sub-bucket column, no
-    // oversized-block aggregate, no guard broadcast anywhere in the plan
-    val nonePlan = Dedup.embeddingPairs(embs, "vec_id", "embedding",
-      col("label"), 0.999).queryExecution.executedPlan.toString
-    assert(!nonePlan.contains("__bucket") && !nonePlan.contains("__bn"))
-  }
 }
 
 class RedactionSpec extends SparkSpec {
@@ -682,123 +637,6 @@ class DecontaminateSpec extends SparkSpec {
     val shortEval = Seq((100L, "one two three")).toDF("doc_id", "text") // < n words
     assert(Decontaminate.decontaminateBloom(train, shortEval, "doc_id", "text", 4)
       .count() == 5)
-  }
-}
-
-class SimilaritySpec extends SparkSpec {
-  import spark.implicits._
-
-  private def embsDf = {
-    val rng = new scala.util.Random(7)
-    (0 until 200).map { i =>
-      (i.toLong, Array.fill(16)(rng.nextGaussian().toFloat), i % 4)
-    }.toDF("vec_id", "embedding", "label")
-      .withColumn("embedding", col("embedding").cast("array<double>"))
-  }
-
-  test("signBucket packs one sign bit per dimension; a missing dimension is bit 0") {
-    val dims = 0 until 4
-    val want = embsDf.select("vec_id", "embedding").collect().map { r =>
-      val v = r.getSeq[Double](1)
-      r.getLong(0) -> dims.map(d => if (v(d) >= 0) 1L << d else 0L).sum
-    }.toMap
-    val got = embsDf.select(col("vec_id"), Similarity.signBucket(col("embedding"), dims))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
-    // SQL comparison: NaN >= 0 holds; a ragged vector's absent dims read as 0
-    val edge = Seq((0L, Seq(Double.NaN, -1.0, 2.0)), (1L, Seq(3.0)))
-      .toDF("vec_id", "embedding")
-      .select(col("vec_id"), Similarity.signBucket(col("embedding"), dims))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(edge == Map(0L -> 5L, 1L -> 1L))
-  }
-
-  test("kmeans cells: deterministic, planted clusters co-assigned") {
-    val rng = new scala.util.Random(3)
-    // 3 planted clusters around orthogonal axes, small noise
-    val pts = (0 until 60).map { i =>
-      val axis = i % 3
-      val v = Array.tabulate(8)(d =>
-        (if (d == axis) 1.0 else 0.0) + rng.nextGaussian() * 0.05)
-      (i.toLong, v, axis)
-    }
-    val df = pts.map { case (id, v, _) => (id, v) }.toDF("vec_id", "embedding")
-    val a1 = Similarity.kmeansAssign(df, "vec_id", "embedding", k = 3, iters = 3)
-    val a2 = Similarity.kmeansAssign(df, "vec_id", "embedding", k = 3, iters = 3)
-    val cells1 = a1.select("vec_id", "__cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val cells2 = a2.select("vec_id", "__cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(cells1 == cells2) // deterministic
-    // after Lloyd rounds, each planted cluster maps to exactly one cell
-    val byAxis = pts.groupBy(_._3).view.mapValues(_.map(p => cells1(p._1)).toSet)
-    byAxis.foreach { case (axis, cells) =>
-      assert(cells.size == 1, s"cluster $axis split across cells $cells")
-    }
-  }
-
-  test("semDedup: kmeans path co-clusters exact dups and keeps min id") {
-    val rng = new scala.util.Random(11)
-    // 15 distinct noisy axis vectors, each emitted twice (ids 2j, 2j+1):
-    // exact-duplicate embeddings must land in the same kmeans cell after a
-    // Lloyd round (identical vectors -> identical cell cosines), so every
-    // pair collapses to its min id; distinct vectors stay (cos ~0.76 at
-    // noise 0.2, far below the 0.99 threshold)
-    val vecs = (0 until 15).map { j =>
-      val axis = j % 3
-      Array.tabulate(8)(d => (if (d == axis) 1.0 else 0.0) + rng.nextGaussian() * 0.2)
-    }
-    val rows = vecs.zipWithIndex.flatMap { case (v, j) =>
-      Seq((2L * j, v), (2L * j + 1, v)) }
-    val df = rows.toDF("vec_id", "embedding")
-    val out = Dedup.semDedup(df, "vec_id", "embedding", threshold = 0.99,
-      k = 3, iters = 2)
-    assert(out.columns.toSeq == Seq("vec_id", "embedding")) // no __cell leak
-    val ids = out.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(ids == (0 until 15).map(_ * 2L).toSet)
-    // a missing precomputed cluster column fails fast
-    intercept[IllegalArgumentException] {
-      Dedup.semDedup(df, "vec_id", "embedding", clusterCol = Some("nope")) }
-  }
-
-  test("knnJoin gives each row k ranked neighbors within its block") {
-    val out = Similarity.knnJoin(embsDf, embsDf, "vec_id", "embedding", "label", k = 3)
-    assert(out.filter(col("id_l") === 0).count() == 3)
-    val ranks = out.filter(col("id_l") === 0).orderBy("rank")
-      .collect().map(r => r.getAs[Double]("cos"))
-    assert(ranks.sameElements(ranks.sorted.reverse)) // descending similarity
-  }
-
-  test("knnJoin hot-block cap: oversized block sub-buckets, small blocks stay exact") {
-    // one dominant block of 40 vectors (4 sign-quadrant groups of 10 in dims
-    // 0-1) plus a small block of 5 — the skew shape that degenerates an
-    // uncapped block join
-    def vec(i: Int, hot: Boolean): Seq[Double] = {
-      val s0 = if ((i / 10) % 2 == 0) 1.0 else -1.0
-      val s1 = if ((i / 20) % 2 == 0) 1.0 else -1.0
-      Seq(s0 * (1.0 + i % 10 * 0.01), s1 * (2.0 + i % 10 * 0.01),
-        0.1 * (i % 7), 0.2, 0.3, 0.1, 0.05, if (hot) 0.4 else -0.4)
-    }
-    val rows = (0 until 40).map(i => (i.toLong, "hot", vec(i, hot = true))) ++
-      (100 until 105).map(i => (i.toLong, "small", vec(i, hot = false)))
-    val df = rows.toDF("vec_id", "label", "embedding")
-    val dims = 0 until 2
-    val capped = Similarity.knnJoin(df, df, "vec_id", "embedding", "label",
-      k = 3, maxBlockSize = Some(20), subBucketDims = dims)
-    val exact = Similarity.knnJoin(df, df, "vec_id", "embedding", "label", k = 3)
-    // the small block (5 <= cap) is bit-identical to the unguarded join
-    assert(collectSet(capped.filter(col("id_l") >= 100L)) ==
-      collectSet(exact.filter(col("id_l") >= 100L)))
-    // every hot-block neighbor shares the query row's sign bucket (the
-    // candidate set is bounded to the sub-bucket, not the whole block)
-    val bucket = rows.map { case (id, _, v) =>
-      id -> dims.zipWithIndex.map { case (d, b) => if (v(d) >= 0) 1L << b else 0L }.sum
-    }.toMap
-    val hotPairs = capped.filter(col("id_l") < 100L)
-      .select("id_l", "id_r").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(hotPairs.nonEmpty)
-    hotPairs.foreach { case (a, b) => assert(bucket(a) == bucket(b), s"($a,$b)") }
-    // ranked top-k per row still holds
-    val perRow = capped.groupBy("id_l").count().agg(max("count")).head().getLong(0)
-    assert(perRow <= 3)
   }
 }
 
@@ -980,12 +818,6 @@ class FunctionsSpec extends SparkSpec {
     val short = Seq("a b").toDF("t")
       .select(GraftFunctions.wordShingles(col("t"), 3)).head().getSeq[String](0)
     assert(short.isEmpty)
-  }
-
-  test("cosine/dot on array columns") {
-    val d = Seq((Array(1.0, 0.0), Array(0.0, 1.0))).toDF("a", "b")
-    assert(d.select(GraftFunctions.dot(col("a"), col("b"))).head().getDouble(0) == 0.0)
-    assert(d.select(GraftFunctions.cosine(col("a"), col("a"))).head().getDouble(0) == 1.0)
   }
 
   test("searchSortedRight = numpy side=right bisect") {

@@ -175,18 +175,6 @@ class PlanSpec extends SparkSpec {
     assert(!shingleSelfJoin,
       s"guarded ngram path must not self-join on shingle:\n${plan(pruned)}")
 
-    // knnJoin cap: the oversized-block flag joins via broadcast on BOTH
-    // sides — the guard itself must not add a vector shuffle
-    val embs = (0 until 30).map(i => (i.toLong, "b", Seq.tabulate(8)(d => (i + d).toDouble)))
-      .toDF("vec_id", "label", "embedding")
-    val capped = graft.ops.Similarity.knnJoin(embs, embs, "vec_id", "embedding",
-      "label", k = 2, maxBlockSize = Some(10))
-    val broadcasts = collectNodes(plan(capped)).count {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => true
-      case _ => false
-    }
-    assert(broadcasts >= 2, s"expected broadcast oversized-flag joins:\n${plan(capped)}")
-
     // band-bucket chain guard: the hot-bucket list reaches BOTH its uses
     // (cold-side anti-join, chain-side semi-join) as a broadcast — and the
     // chain window partitions by the bucket key, never a single partition

@@ -235,10 +235,10 @@ class GraftExtensionsSpec extends SparkSpec {
   test("native expressions are callable from SQL after registration") {
     GraftExtensions.register(spark)
     val r = spark.sql(
-      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
-        "graft_l2norm(array(3.0d, 4.0d)) AS n").head()
-    assert(r.getDouble(0) == 11.0)
-    assert(r.getDouble(1) == 5.0)
+      "SELECT graft_token_count('the quick  brown fox') AS n, " +
+        "graft_unigram_entropy(array('a', 'b', 'c', 'd')) AS h").head()
+    assert(r.getInt(0) == 4)
+    assert(r.getDouble(1) == 2.0)
   }
 
   test("full SQL surface: every registered function equals its Column API twin") {
@@ -284,9 +284,9 @@ class GraftExtensionsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("graft_simhash"))
     val w = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_dot(array(1.0d)) ").collect()
+      spark.sql("SELECT graft_hash56('a', 'b') ").collect()
     }
-    assert(w.getMessage.toLowerCase.contains("graft_dot"))
+    assert(w.getMessage.toLowerCase.contains("graft_hash56"))
   }
 }
 

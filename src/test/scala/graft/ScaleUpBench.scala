@@ -88,10 +88,10 @@ object ScaleUpBench {
       if (needs(dir, "documents.parquet"))
         replicate(docs, k).repartition(math.max(k, 4))
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      // embeddings for the vector gates: replicas get disjoint ids and a
-      // per-replica deterministic scaling (1 + i/1024 — float-exact for
-      // small i) so k-means cells and cosine joins see k× distinct
-      // vectors, not k identical copies collapsing into the same centroids
+      // embeddings (read by orc_roundtrip and join_table): replicas get
+      // disjoint ids and a per-replica deterministic scaling (1 + i/1024 —
+      // float-exact for small i), so the table holds k× distinct vectors,
+      // not k identical copies
       if (needs(dir, "embeddings.parquet"))
         (0 until k).map { i =>
           embs
@@ -102,10 +102,10 @@ object ScaleUpBench {
                 v => (v * lit(1.0f + i / 1024.0f)).cast("float")))
         }.reduce(_ unionByName _).repartition(math.max(k / 4, 4))
           .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      // events for the streaming/temporal gates: disjoint event AND user
-      // ids per replica — key cardinality grows k×, per-key event density
-      // (and so per-key streaming state) stays constant, which is the
-      // "same pipeline over more data" regime keyed state scales in
+      // events for the as-of, rolling and range gates: disjoint event AND
+      // user ids per replica — key cardinality grows k×, per-key event
+      // density stays constant, which is the "same pipeline over more
+      // data" regime keyed operators scale in
       if (needs(dir, "events.parquet"))
         (0 until k).map { i =>
           evs

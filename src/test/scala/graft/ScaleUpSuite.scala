@@ -85,13 +85,10 @@ object ScaleUpSuite {
     write(ScaleUpBench.replicate(t("documents"), k), "documents",
       math.max(k / 2, 4))
     // DIRECTION-perturbed replicas, not ScaleUpBench's pure (1 + i/1024)
-    // scaling: scaling preserves cosine EXACTLY, so scaled replicas are
-    // exact cosine ties to every query and top-k rank order inside a tie
-    // group degenerates to fp-ulps (the knn_join x4 divergence measured in
-    // SMOKE.md round 15 — result sets identical, rank pairing inside equal-
-    // cos groups not). Offsetting coordinate 0 by i/16 changes the
-    // direction, so replica cosines are distinct and rank order is
-    // well-defined at every scale.
+    // scaling: offsetting coordinate 0 by i/16 changes each replica's
+    // direction, so no two replicas of a vector are exact cosine ties
+    // (SMOKE.md round 15: scaled replicas made cosine rank order inside a
+    // tie group degenerate to fp-ulps).
     val maxVecId = t("embeddings")
       .agg(max(col("vec_id").cast("long"))).head.getLong(0)
     require(maxVecId < 10_000_000L,

@@ -30,7 +30,6 @@ class StageKeysSpec extends SparkSpec {
     "dedup_exact" -> "{}",
     "dedup_fingerprint" -> "{}",
     "dedup_lines" -> "{}",
-    "embed_dedup" -> "{}",
     "expect_rows" -> "{expect: k > 0}",
     "expect_schema" -> "{schema: k BIGINT}",
     "extract_values" -> "{out: code}",
@@ -43,7 +42,6 @@ class StageKeysSpec extends SparkSpec {
     "join_table" -> "{path: /x, keys: [k]}",
     "js_divergence" -> "{}",
     "json_extract" -> "{json_col: j, schema: k BIGINT}",
-    "knn_join" -> "{}",
     "lang_id" -> "{}",
     "lm_perplexity" -> "{}",
     "load_csv" -> "{path: /x}",
@@ -71,8 +69,6 @@ class StageKeysSpec extends SparkSpec {
     "rolling_agg" -> "{keys: [k], time_col: t, range: 10, count_as: n}",
     "sample" -> "{fraction: 0.5}",
     "sample_split" -> "{splits: {a: 1}}",
-    "semdedup" -> "{}",
-    "sessionize" -> "{}",
     "shuffle_rows" -> "{}",
     "simhash_dedup" -> "{}",
     "stratified_cap" -> "{stratum_col: s, per_stratum: 2}",

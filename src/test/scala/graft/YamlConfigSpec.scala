@@ -407,8 +407,8 @@ class YamlConfigSpec extends SparkSpec {
       Main.run(Array("--list-stages"), spark)
     }
     val listed = out.toString.linesIterator.toSet
-    assert(Set("minhash_lsh_dedup", "knn_join", "filter_rows", "json_extract",
-      "normalize_text", "sessionize").subsetOf(listed))
+    assert(Set("minhash_lsh_dedup", "tf_idf", "filter_rows", "json_extract",
+      "normalize_text", "shuffle_rows").subsetOf(listed))
     val referenceStages = Set(
       "aggregate_code_metadata", "fit_vocabulary_indices", "reshard_to_split",
       "generate_subject_splits", "filter_subjects", "filter_measurements",

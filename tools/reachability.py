@@ -15,8 +15,9 @@ A stage is reached by:
 A gate is reached by a source when a definition its body calls (through the
 helpers in Queries.scala) is also called, transitively, from a stage that
 source reaches. Calls are found by `Object.member`, bare same-object names
-and top-level class names, so a call through a local alias or a SQL string
-is missed; such rows say `own gate`, never a false `config`.
+and top-level class names, outside `//` and `/* */` comments, so a call
+through a local alias or a SQL string is missed; such rows say `own gate`,
+never a false `config`.
 """
 import json
 import pathlib
@@ -36,6 +37,9 @@ DEF = re.compile(r"^  (?:(?:private|protected)(?:\[\w+\])? |override |final |imp
 TOP = re.compile(r"^(?:(?:private|protected)(?:\[\w+\])? |final |sealed |abstract |case )*"
                  r"(object|class|trait) (\w+)")
 IDENT = re.compile(r"\b([A-Za-z_]\w*)(?:\.(\w+))?")
+# a literal is matched whole, so a `/*` or `//` inside it opens no comment
+LEX = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*')
+NEST = re.compile(r"/\*|\*/")
 
 
 def units():
@@ -75,9 +79,27 @@ def units():
 NODES, OBJECTS, CLASSES, HOME = units()
 
 
+def strip_comments(text):
+    """`text` without its `//` and (nested) `/* */` comments; literals stay."""
+    out, pos = [], 0
+    while m := LEX.search(text, pos):
+        if m.group()[0] in "\"'":
+            out.append(text[pos:m.end()])
+            pos = m.end()
+            continue
+        out.append(text[pos:m.start()] + " ")
+        pos, depth = m.end(), m.group() == "/*"
+        while depth and (n := NEST.search(text, pos)):
+            depth += 1 if n.group() == "/*" else -1
+            pos = n.end()
+        if depth:
+            return "".join(out)
+    return "".join(out) + text[pos:]
+
+
 def calls(body, owner=None):
     out = set()
-    for a, b in IDENT.findall(body):
+    for a, b in IDENT.findall(strip_comments(body)):
         if a in OBJECTS and b in OBJECTS[a]:
             out.add(f"{a}.{b}")
         elif a in CLASSES or (a in OBJECTS and not b):

@@ -1,0 +1,53 @@
+"""Tests of the reachability scan's call finder.
+
+  python3 -m unittest tools/test_reachability.py    (from the repository root)
+
+`calls()` must find names in code and in string literals, and none in
+comments: a name in a scaladoc or a `//` note is not a call.
+"""
+import os
+import sys
+import unittest
+from unittest import mock
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import reachability  # noqa: E402
+
+OBJECTS = {"Similarity": {"nearest"}, "Dedup": {"exact", "simhash", "fingerprint"},
+           "Sampling": {"sample"}}
+
+BODY = '''
+  /** Near-dup pairs; the same trade [[Similarity.nearest]] makes.
+    * /* a nested Dedup.simhash */ still inside the doc comment
+    */
+  def pairs(df: DataFrame): DataFrame = {
+    // Dedup.fingerprint(df) was the old form
+    val glob = spark.read.parquet("data/*.parquet") /* Sampling.sample */
+    val q = """SELECT 1 /* a triple-quoted literal opens no comment"""
+    Dedup.exact(glob, "id", "text")
+  }
+'''
+
+
+class CallsTest(unittest.TestCase):
+    def setUp(self):
+        patch = mock.patch.multiple(reachability, OBJECTS=OBJECTS, CLASSES=set())
+        patch.start()
+        self.addCleanup(patch.stop)
+
+    def test_only_the_real_call_is_found(self):
+        self.assertEqual(reachability.calls(BODY), {"Dedup.exact"})
+
+    def test_a_string_holding_a_comment_opener_hides_no_call(self):
+        self.assertEqual(reachability.calls('x("/*"); Dedup.exact(d) // */'), {"Dedup.exact"})
+
+    def test_names_in_string_literals_are_kept(self):
+        self.assertEqual(reachability.calls('sql("Dedup.simhash")'), {"Dedup.simhash"})
+
+    def test_strip_keeps_literals(self):
+        text = 'a // x\n"/* y */" /* z\n */ b'
+        self.assertEqual(reachability.strip_comments(text), 'a  \n"/* y */"   b')
+
+
+if __name__ == "__main__":
+    unittest.main()
