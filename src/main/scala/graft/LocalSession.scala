@@ -36,6 +36,24 @@ object LocalSession {
     spark
   }
 
+  /** `body` with `conf` set on the session, then every key restored to what
+    * was EXPLICITLY set before (or unset), also on failure. `conf.getAll`
+    * lists only explicitly-set entries: `conf.get(k)` would resolve a
+    * defaulted key to its default, and the restore would pin that default as
+    * if a caller had set it. Not for two concurrent bodies on one session:
+    * the later restore would undo the other's settings.
+    */
+  def withConf[A](spark: SparkSession, conf: Seq[(String, String)])(body: => A): A = {
+    val explicitlySet = spark.conf.getAll
+    val saved = conf.map { case (k, _) => k -> explicitlySet.get(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** `key=value` strings as conf pairs (entries without `=` are dropped). */
   def parseConf(kvs: Seq[String]): Seq[(String, String)] =
     kvs.filter(_.contains("=")).map { kv =>

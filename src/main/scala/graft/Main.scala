@@ -137,24 +137,12 @@ object Main {
       overrides: Seq[String], stageOnly: Option[String]): Unit = {
     val parsed = PipelineConfig.fromFile(pipelineFile, overrides)
     parsed.description.foreach(d => println(s"[graft] pipeline: $d"))
-    // per-pipeline engine conf: apply for the duration of this run, restore
-    // whatever was set (or unset) before — two pipelines on one session must
-    // not leak settings into each other. getAll only lists EXPLICITLY-set
-    // entries; conf.get(k) would resolve defaulted keys to their default and
-    // restore would then pin that default as if the user had set it,
-    // silently freezing post-run behavior against future default changes
-    val explicitlySet = spark.conf.getAll
-    val saved = parsed.conf.map { case (k, _) => k -> explicitlySet.get(k) }
-    parsed.conf.foreach { case (k, v) =>
-      println(s"[graft] conf: $k=$v")
-      spark.conf.set(k, v)
-    }
-    try runPipelineStages(spark, parsed, inputRoot, outputRoot,
-      checkpointRoot, stageOnly)
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    // per-pipeline engine conf: applied for the duration of this run, then
+    // restored — two pipelines on one session must not leak settings into
+    // each other
+    parsed.conf.foreach { case (k, v) => println(s"[graft] conf: $k=$v") }
+    LocalSession.withConf(spark, parsed.conf)(runPipelineStages(spark, parsed,
+      inputRoot, outputRoot, checkpointRoot, stageOnly))
   }
 
   private def runPipelineStages(spark: SparkSession,

@@ -120,6 +120,12 @@ object MedsIO {
     else pathShard
   }
 
+  /** Marker committed LAST by write(): its presence proves data AND both
+    * metadata tables finished (data/_SUCCESS alone only covers the data job
+    * — a crash between it and the metadata writes must not look complete).
+    */
+  val CompleteMarker = "_GRAFT_COMPLETE"
+
   /** Write a MEDS dataset root. Data is written partitioned by shard columns
     * (split dirs) and sorted within partitions by (subject_id, time) — the
     * MEDS invariant that every window/agg operator relies on, and what makes
@@ -129,15 +135,16 @@ object MedsIO {
     * mapreduce/stage.py:64-101), NOT Hive's `data/split=<split>/`: the
     * partitioned write is followed by a metadata-only directory rename that
     * strips the `split=` prefix, so a graft-written root round-trips through
-    * read() with the split value intact (ADVICE r1 high).
+    * read() with the split value intact (ADVICE r1 high). Every file is
+    * written with [[ParquetOptions]], and every timestamp column as MEDS'
+    * INT64 microseconds ([[TimestampTypeConf]], set on the session for the
+    * duration of the write).
     */
-  /** Marker committed LAST by write(): its presence proves data AND both
-    * metadata tables finished (data/_SUCCESS alone only covers the data job
-    * — a crash between it and the metadata writes must not look complete).
-    */
-  val CompleteMarker = "_GRAFT_COMPLETE"
+  def write(meds: MedsData, root: String): Unit =
+    graft.LocalSession.withConf(meds.data.sparkSession, Seq(TimestampTypeConf))(
+      writeRoot(meds, root))
 
-  def write(meds: MedsData, root: String): Unit = {
+  private def writeRoot(meds: MedsData, root: String): Unit = {
     val markerPath = new org.apache.hadoop.fs.Path(s"$root/$CompleteMarker")
     val markerFs = markerPath.getFileSystem(
       meds.data.sparkSession.sparkContext.hadoopConfiguration)
@@ -183,48 +190,82 @@ object MedsIO {
     }
     // the canonical file set stays on disk even for an empty table: the
     // reference's compute_fn reads metadata/codes.parquet unguarded, and
-    // Main's footer row counts read it. The codes table is driver-sized, so
-    // it is always one file: a fitted or empty table is written with no
-    // Spark job, one read back from a root or a checkpoint after one
-    // bounded collect. The splits table (a row per subject) is never pulled.
+    // Main's footer row counts read it. Both tables are one file, as the
+    // reference writes them. The codes table is driver-sized: a fitted or
+    // empty table is written with no Spark job, one read back from a root or
+    // a checkpoint after one bounded collect. The splits table (a row per
+    // subject) is never pulled: unless it is already driver-local, a job
+    // writes it as one partition.
     writeParquet(LocalTable(meds.codes, s"write of $root/metadata/codes.parquet"),
       s"$root/metadata/codes.parquet")
     writeParquet(meds.splits, s"$root/metadata/subject_splits.parquet")
     markerFs.create(markerPath, true).close()
   }
 
-  /** The options of every parquet file graft writes into a MEDS root:
-    * zstd, the codec of the reference's Polars
-    * `write_parquet`. A format, not a setting.
+  /** The options of every parquet file graft writes into a MEDS root: zstd,
+    * the codec of the reference's Polars `write_parquet`; v2 data pages; and
+    * no dictionary for `time`, so its INT64 microseconds are stored
+    * `DELTA_BINARY_PACKED` (sorted event times differ by small steps) instead
+    * of as a dictionary of nearly every distinct time, which fits the 1 MiB
+    * dictionary page and so never falls back. A format, not a setting.
     */
-  private[graft] val ParquetOptions: Map[String, String] = Map("compression" -> "zstd")
+  private[graft] val ParquetOptions: Map[String, String] = Map(
+    "compression" -> "zstd",
+    "parquet.writer.version" -> "v2",
+    s"parquet.enable.dictionary#$Time" -> "false")
 
-  /** The one parquet writer of a MEDS root. A driver-local frame (its rows
-    * are in the plan: a `LocalRelation`, or an RDD with no partition) is
-    * written from the driver as ONE file at `path`, with no job and no
-    * commit protocol, through Spark's own parquet writer, so the footer,
-    * timestamp type and codec are those of a distributed write; whatever
-    * stood at `path` (maybe a directory from an earlier write) is removed
-    * first. Any other frame, and every partitioned write, runs a Spark job
-    * into the directory `path`.
+  /** MEDS' own time type, `Datetime("us")`: INT64 `TIMESTAMP(MICROS)` on
+    * disk, in place of Spark's INT96 default. Spark takes the timestamp type
+    * only from the session conf (it overrides a write option), so write()
+    * sets it for its duration and then restores the caller's value. Graft
+    * never runs two MedsIO.write calls on one session at once; two
+    * concurrent writes could restore each other's setting early.
+    */
+  private val TimestampTypeConf =
+    org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key -> "TIMESTAMP_MICROS"
+
+  /** The one parquet writer of a MEDS root. A partitioned write runs a
+    * Spark job into the directory `path`. Any other write leaves ONE file at
+    * `path`, replacing whatever stood there (maybe a directory from an
+    * earlier write):
+    *  - a driver-local frame (its rows are in the plan: a `LocalRelation`,
+    *    or an RDD with no partition) is written from the driver with no job
+    *    and no commit protocol, through Spark's own parquet writer, so the
+    *    footer, timestamp type and options are those of a distributed write;
+    *  - any other frame is written by a job as one partition, and its one
+    *    part file is renamed onto `path` (a write split into several files,
+    *    by `maxRecordsPerFile` say, keeps them in the directory `path`).
     */
   private def writeParquet(df: DataFrame, path: String, partitionBy: String*): Unit = {
-    val localRows = if (partitionBy.nonEmpty) None else LocalTable.localRows(df)
-    localRows match {
+    val spark = df.sparkSession
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def jobWrite(frame: DataFrame, to: String): Unit =
+      frame.write.mode("overwrite").options(ParquetOptions).partitionBy(partitionBy: _*)
+        .parquet(to)
+    if (partitionBy.nonEmpty) jobWrite(df, path)
+    else LocalTable.localRows(df) match {
       case Some(rows) =>
         val job = org.apache.hadoop.mapreduce.Job.getInstance(
-          df.sparkSession.sessionState.newHadoopConf())
+          spark.sessionState.newHadoopConfWithOptions(ParquetOptions))
         val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-          .prepareWrite(df.sparkSession, job, ParquetOptions, df.schema)
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(job.getConfiguration).delete(p, true)
+          .prepareWrite(spark, job, ParquetOptions, df.schema)
+        fs.delete(p, true)
         val writer = factory.newInstance(path, df.schema,
           new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
             new org.apache.hadoop.mapreduce.TaskAttemptID()))
         try rows.foreach(writer.write) finally writer.close()
       case None =>
-        df.write.mode("overwrite").options(ParquetOptions).partitionBy(partitionBy: _*)
-          .parquet(path)
+        // written beside `path` under a hidden name, so `df` may be a scan of
+        // `path` itself
+        val staged = new org.apache.hadoop.fs.Path(p.getParent, s"_${p.getName}.staged")
+        jobWrite(df.coalesce(1), staged.toString)
+        val parts = fs.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
+        fs.delete(p, true)
+        if (parts.length == 1) {
+          fs.rename(parts(0).getPath, p)
+          fs.delete(staged, true)
+        } else fs.rename(staged, p)
     }
   }
 

@@ -189,9 +189,13 @@ class CodesMaterializationSpec extends SparkSpec {
     val input = MedsIO.read(spark, in)
     val stages = PipelineConfig.fromFile(p).stages
     assert(stages.count(_.isInstanceOf[Pipeline.MetadataStage]) == 3)
-    def probes(m: MedsData): Seq[String] =
-      Collector.measure(spark)(Pipeline.run(spark, m, stages))._2.jobs
-        .map(_.callSite).filter(_.startsWith("isEmpty at Pipeline.scala"))
+    // each run's fork-point cache is released before the next run persists
+    // the same lineage, as graft.Main does
+    def probes(m: MedsData): Seq[String] = {
+      val ((_, pinned), records) = Collector.measure(spark)(Pipeline.runTracked(spark, m, stages))
+      pinned.foreach(_.unpersist(false))
+      records.jobs.map(_.callSite).filter(_.startsWith("isEmpty at Pipeline.scala"))
+    }
     // a derived splits frame takes one job; the read's parquet scan is
     // answered from its footer row counts
     val derived = probes(input.withSplits(input.splits.filter(col(SubjectId) > 0)))

@@ -4,9 +4,14 @@ import graft.meds.{MedsData, MedsIO}
 import graft.meds.MedsSchema._
 import graft.obs.Collector
 import graft.operators.{AggregateCodeMetadata, ReshardToSplit}
+import org.apache.parquet.column.Encoding
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
@@ -14,7 +19,8 @@ import scala.jdk.CollectionConverters._
 
 /** MedsIO's read and write contracts over the root layouts it meets: a root
   * opens with no Spark job and reads what `spark.read.parquet` reads, every
-  * written shard is in MEDS order, and every written file is zstd parquet.
+  * written shard is in MEDS order, every written file is zstd parquet, and
+  * `time` is MEDS' INT64 microseconds, delta-encoded, kept exactly.
   */
 class MedsIOSpec extends SparkSpec {
 
@@ -181,36 +187,127 @@ class MedsIOSpec extends SparkSpec {
     assert(total == events.length)
   }
 
-  /** (file under `root`, the codec of each of its column chunks) for every
-    * parquet file, read from the parquet-hadoop footers. */
-  private def chunkCodecs(root: String): Seq[(String, Seq[String])] =
+  /** (file under `root`, its parquet-hadoop footer) for every parquet file. */
+  private def footers(root: String): Seq[(String, ParquetMetadata)] =
     Files.walk(Paths.get(root)).iterator.asScala
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
       .map { f =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.toString), spark.sparkContext.hadoopConfiguration))
-        try Paths.get(root).relativize(f).toString -> reader.getFooter.getBlocks.asScala.toSeq
-          .flatMap(_.getColumns.asScala.map(_.getCodec.name))
+        try Paths.get(root).relativize(f).toString -> reader.getFooter
         finally reader.close()
       }.toSeq
 
-  test("every column chunk MedsIO writes is zstd: run, checkpoint, resharded, empty roots") {
-    val dir = tmp("zstd")
+  /** Roots written by Main.run and MedsIO.write: (layout, root). */
+  private lazy val written: Seq[(String, String)] = {
+    val dir = tmp("written")
     Files.writeString(Paths.get(dir, "pipeline.yaml"), pipeline)
     Main.run(Array(s"$dir/pipeline.yaml", MedsFixture.root, s"$dir/out", s"$dir/ckpt"), spark)
     // the pipeline's own threshold (20 events) keeps no fixture subject
     Main.run(Array("perfbench/meds_etl.yaml", MedsFixture.root, s"$dir/empty"), spark)
     assert(Files.isRegularFile(Paths.get(dir, "empty", "data", "empty.parquet")))
-    val written = Seq("Main.run output" -> s"$dir/out", "checkpoint root" -> s"$dir/ckpt",
+    Seq("Main.run output" -> s"$dir/out", "checkpoint root" -> s"$dir/ckpt",
       "resharded" -> roots.toMap.apply("resharded (.shards.json)"),
       "empty result" -> s"$dir/empty")
+  }
+
+  test("every column chunk MedsIO writes is zstd: run, checkpoint, resharded, empty roots") {
     written.foreach { case (layout, root) =>
-      val files = chunkCodecs(root)
+      val files = footers(root).map { case (f, footer) =>
+        f -> footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(_.getCodec.name)) }
       assert(files.exists(_._2.nonEmpty), s"$layout: no column chunk under $root")
       files.foreach { case (f, codecs) =>
         assert(codecs.forall(_ == "ZSTD"), s"$layout $f: ${codecs.distinct.mkString(", ")}")
       }
     }
+  }
+
+  /** MEDS' `Datetime("us")` as parquet writes it. */
+  private val medsTime =
+    LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+
+  /** The physical and logical type of `time` in a footer. */
+  private def timeType(footer: ParquetMetadata): (PrimitiveTypeName, LogicalTypeAnnotation) = {
+    val schema = footer.getFileMetaData.getSchema
+    val t = schema.getType(schema.getFieldIndex(Time)).asPrimitiveType
+    t.getPrimitiveTypeName -> t.getLogicalTypeAnnotation
+  }
+
+  // parquet-mr falls back to PLAIN for an undictionaried INT64 in v1 pages;
+  // DELTA_BINARY_PACKED is the v2 writer's encoding
+  test("every data file MedsIO writes stores time as INT64 TIMESTAMP(MICROS), delta-encoded") {
+    written.foreach { case (layout, root) =>
+      val data = footers(root).filter { case (f, _) => f.split('/').contains("data") }
+      assert(data.nonEmpty, s"$layout: no data file under $root")
+      data.foreach { case (f, footer) =>
+        assert(timeType(footer) == (PrimitiveTypeName.INT64 -> medsTime), s"$layout $f")
+        footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == Time).foreach { chunk =>
+            val encodings = chunk.getEncodings.asScala
+            assert(encodings.contains(Encoding.DELTA_BINARY_PACKED) &&
+              !encodings.exists(_.usesDictionary), s"$layout $f: ${encodings.mkString(", ")}")
+            assert(chunk.getCodec.name == "ZSTD", s"$layout $f")
+          }
+      }
+    }
+    val empty = footers(written.toMap.apply("empty result")).toMap.apply("data/empty.parquet")
+    assert(empty.getBlocks.isEmpty && timeType(empty) == (PrimitiveTypeName.INT64 -> medsTime))
+  }
+
+  test("metadata/subject_splits.parquet is one file on run and checkpoint roots") {
+    val byLayout = written.toMap
+    val stageRoots = Files.list(Paths.get(byLayout("checkpoint root"))).iterator.asScala.toSeq
+    assert(stageRoots.nonEmpty)
+    (Paths.get(byLayout("Main.run output")) +: stageRoots).foreach { r =>
+      val splits = r.resolve("metadata/subject_splits.parquet")
+      assert(Files.isRegularFile(splits), splits)
+      assert(rows(spark.read.parquet(splits.toString)) == rows(fixture.splits), splits)
+    }
+  }
+
+  test("MedsIO.write and MedsIO.read keep every time exactly: static rows, before 1900, " +
+      "after 2038") {
+    val micros = Seq[java.lang.Long](null, -2500000000123457L, -1L, 0L, 1600000000123456L,
+      4102444800654321L)
+    val data = spark.createDataFrame(
+      java.util.Arrays.asList(micros.zipWithIndex.map { case (m, i) =>
+        Row(i.toLong % 2, m, s"C$i", TrainSplit) }: _*),
+      StructType(Seq(StructField(SubjectId, LongType, nullable = false),
+        StructField("m", LongType), StructField(Code, StringType, nullable = false),
+        StructField(Split, StringType, nullable = false))))
+      .withColumn(Time, expr("timestamp_micros(m)")).drop("m")
+    val root = tmp("roundtrip")
+    MedsIO.write(MedsData(data, empty(codesSchema), empty(splitsSchema)), root)
+    val back = MedsIO.read(spark, root).data
+    assert(back.schema(Time).dataType == TimestampType)
+    val got = back.select(col(Code), expr(s"unix_micros($Time)")).collect()
+      .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+    assert(got ==
+      micros.zipWithIndex.map { case (m, i) => s"C$i" -> Option(m).map(_.longValue) }.toMap)
+  }
+
+  test("a session set to INT96 keeps INT96 after MedsIO.write, which writes INT64 micros") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    def dataFooters(root: String) = footers(root).filter(_._1.startsWith("data/")).map(_._2)
+    val before = spark.conf.getAll.get(key)
+    try {
+      spark.conf.unset(key)
+      val unset = tmp("ts_unset")
+      MedsIO.write(MedsData(fixture.data, empty(codesSchema), empty(splitsSchema)), unset)
+      assert(!spark.conf.getAll.contains(key))
+      spark.conf.set(key, "INT96")
+      val int96 = tmp("ts_int96")
+      MedsIO.write(MedsData(fixture.data, empty(codesSchema), empty(splitsSchema)), int96)
+      assert(spark.conf.get(key) == "INT96")
+      Seq(unset, int96).foreach { root =>
+        val fs = dataFooters(root)
+        assert(fs.nonEmpty && fs.forall(timeType(_) == (PrimitiveTypeName.INT64 -> medsTime)), root)
+      }
+      // the session's own writes still follow the session
+      val plain = tmp("ts_plain")
+      fixture.data.select(Time).write.mode("overwrite").parquet(plain)
+      assert(footers(plain).map(f => timeType(f._2)._1).toSet == Set(PrimitiveTypeName.INT96))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("a fitted codes table is written as one file, with no Spark job") {

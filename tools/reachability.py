@@ -15,7 +15,8 @@ A stage is reached by:
 A gate is reached by a source when a definition its body calls (through the
 helpers in Queries.scala) is also called, transitively, from a stage that
 source reaches. Calls are found by `Object.member`, bare same-object names
-and top-level class names, outside `//` and `/* */` comments, so a call
+and top-level class names, plus bare calls from a stage to a local `def`
+of its registry file, outside `//` and `/* */` comments, so a call
 through a local alias or a SQL string is missed; such rows say `own gate`,
 never a false `config`.
 """
@@ -129,15 +130,48 @@ def yaml_stages(path):
         set(re.findall(r"_base_stage:\s*(\w+)", text))
 
 
+REG = re.compile(r'(?:register|data)\("(\w+)"\)')
+LOCAL_DEF = re.compile(r"^([ \t]*)def (\w+)", re.M)
+
+
+def registrations(text):
+    """{stage: body} of one registry file.
+
+    A body runs from its `register("…")` to the next registration or local
+    `def`. A `def` at the indentation of the registrations is a helper of its
+    own, not the tail of the stage above it, and a stage body takes in the
+    body of every such helper it calls bare, transitively.
+    """
+    def indent(pos):
+        line = text[text.rfind("\n", 0, pos) + 1:pos]
+        return line[:len(line) - len(line.lstrip(" \t"))]
+    regs = [(m.start(), m.group(1), False) for m in REG.finditer(text)]
+    levels = {indent(s) for s, _, _ in regs}
+    helpers = [(m.start(), m.group(2), True) for m in LOCAL_DEF.finditer(text)
+               if m.group(1) in levels]
+    cuts = sorted(regs + helpers)
+    bodies, local = {}, {}
+    for i, (s, n, is_def) in enumerate(cuts):
+        end = cuts[i + 1][0] if i + 1 < len(cuts) else len(text)
+        (local if is_def else bodies)[n] = text[s:end]
+
+    def expand(body):
+        seen, todo, parts = set(), [body], [body]
+        while todo:
+            for n in re.findall(r"(?<![.\w])(\w+)\s*\(", strip_comments(todo.pop())):
+                if n in local and n not in seen:
+                    seen.add(n)
+                    todo.append(local[n])
+                    parts.append(local[n])
+        return "\n".join(parts)
+    return {n: expand(b) for n, b in bodies.items()}
+
+
 def stage_bodies():
     out = {}
     for f in (MAIN / "config").glob("*.scala"):
-        text = f.read_text()
-        starts = [(m.start(), m.group(1)) for m in re.finditer(
-            r'(?:register|data)\("(\w+)"\)', text)]
-        for i, (s, n) in enumerate(starts):
-            end = starts[i + 1][0] if i + 1 < len(starts) else len(text)
-            out[n] = (f.name, text[s:end])
+        for n, body in registrations(f.read_text()).items():
+            out[n] = (f.name, body)
     return out
 
 

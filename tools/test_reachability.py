@@ -3,7 +3,9 @@
   python3 -m unittest tools/test_reachability.py    (from the repository root)
 
 `calls()` must find names in code and in string literals, and none in
-comments: a name in a scaladoc or a `//` note is not a call.
+comments: a name in a scaladoc or a `//` note is not a call. A local `def`
+between two stage registrations belongs to the stages that call it, not to
+the stage registered above it.
 """
 import os
 import sys
@@ -47,6 +49,42 @@ class CallsTest(unittest.TestCase):
     def test_strip_keeps_literals(self):
         text = 'a // x\n"/* y */" /* z\n */ b'
         self.assertEqual(reachability.strip_comments(text), 'a  \n"/* y */"   b')
+
+
+REGISTRY = '''
+    PipelineConfig.register("first") { (name, cfg) =>
+      Pipeline.DataStage(name, m => Dedup.exact(m.data))
+    }
+
+    // drops every non-representative
+    def dropOthers(data: DataFrame): DataFrame = {
+      val inner = 1
+      Dedup.simhash(data)
+    }
+
+    PipelineConfig.register("second") { (name, cfg) =>
+      Pipeline.DataStage(name, m => dropOthers(m.data))
+    }
+'''
+
+
+class RegistrationsTest(unittest.TestCase):
+    def setUp(self):
+        patch = mock.patch.multiple(reachability, OBJECTS=OBJECTS, CLASSES=set())
+        patch.start()
+        self.addCleanup(patch.stop)
+
+    def test_a_local_def_belongs_to_its_callers(self):
+        bodies = reachability.registrations(REGISTRY)
+        self.assertEqual(set(bodies), {"first", "second"})
+        self.assertEqual(reachability.calls(bodies["first"]), {"Dedup.exact"})
+        self.assertEqual(reachability.calls(bodies["second"]), {"Dedup.simhash"})
+
+
+class TreeTest(unittest.TestCase):
+    def test_minhash_lsh_dedup_reaches_resolve_clusters(self):
+        _, body = reachability.stage_bodies()["minhash_lsh_dedup"]
+        self.assertIn("Dedup.resolveClusters", reachability.closure(reachability.calls(body)))
 
 
 if __name__ == "__main__":
