@@ -100,14 +100,7 @@ object Queries {
     // the synthetic testdata stores timestamps as TIMESTAMP(NANOS), which
     // Spark only reads under this legacy conf (as raw nanos longs)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tableAt(s, s"$dir/$name.parquet")
-  }
-
-  /** The memoized-relation read for an arbitrary parquet path — shared by
-    * [[table]] and the gates that stage their own mtime-marked artifacts
-    * (the incremental-metadata partials).
-    */
-  private def tableAt(s: SparkSession, path: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     // bound the memo (a long test run creates many sessions/dirs; entries
     // pin their session via the key) — clearing just re-pays one listing
     if (tableMemo.size > 512) tableMemo.clear()
@@ -291,42 +284,14 @@ object Queries {
       | max(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN value END) AS values_max
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
 
+  /** The reference-parity quantile path (Polars "nearest": the value at
+    * index round(q·(n−1)), half away from zero), replayed by the oracle as a
+    * rank window at rn = floor(q·(n−1) + 0.5) + 1.
+    */
   private val aggCodeQuantiles: Gate = Gate(
     (s, dir) => {
-      val ev = medsEvents(s, dir)
-      // linear mode mirrors DuckDB quantile_cont; the reference-parity
-      // "nearest" mode is exercised by GoldenSpec against golden outputs
-      val q = AggregateCodeMetadata.compute(ev, Seq(ValuesQuantiles), Seq(0.25, 0.5, 0.75),
-        quantileMode = "linear")
-      q.select(col(Code).as("code"),
-        r4(col(ValuesQuantiles).getField("values/quantile/0.25")).as("p25"),
-        r4(col(ValuesQuantiles).getField("values/quantile/0.5")).as("p50"),
-        r4(col(ValuesQuantiles).getField("values/quantile/0.75")).as("p75"))
-        .orderBy("code")
-    },
-    // NaN exclusion mirrors the Spark side's presentVal; DuckDB's
-    // quantile_cont would otherwise rank NaN as the largest value
-    Some("""SELECT event_type AS code,
-      | round(quantile_cont(CASE WHEN isnan(value) THEN NULL ELSE value END, 0.25),4) AS p25,
-      | round(quantile_cont(CASE WHEN isnan(value) THEN NULL ELSE value END, 0.5),4) AS p50,
-      | round(quantile_cont(CASE WHEN isnan(value) THEN NULL ELSE value END, 0.75),4) AS p75
-      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
-
-  /** The KLL-sketch quantile path of aggregate_code_metadata (stage option
-    * `algo: sketch`), pinned in the EXACT regime: sketch_k=32768 exceeds
-    * every per-code present-value count at all test SFs (max ~20.3k at
-    * sf0.1), so the sketch retains every value and its INCLUSIVE-criterion
-    * quantile is deterministically the order statistic at rank
-    * max(1, ceil(q·n)) — which the oracle replays as a rank window. Above
-    * capacity the identical plan degrades to ≤ ~1.65% rank error at the
-    * default k=200 (KllSpec pins that regime). The YAML-reachability of the
-    * option is spec-locked in PipelineConfigSpec.
-    */
-  private val aggCodeQuantilesSketch: Gate = Gate(
-    (s, dir) => {
       val q = AggregateCodeMetadata.compute(medsEvents(s, dir),
-        Seq(ValuesQuantiles), Seq(0.25, 0.5, 0.75),
-        quantileMode = "sketch", sketchK = 32768)
+        Seq(ValuesQuantiles), Seq(0.25, 0.5, 0.75))
       q.select(col(Code).as("code"),
         r4(col(ValuesQuantiles).getField("values/quantile/0.25")).as("p25"),
         r4(col(ValuesQuantiles).getField("values/quantile/0.5")).as("p50"),
@@ -336,7 +301,7 @@ object Queries {
     // the codes CTE + left join preserves codes whose values are ALL
     // null/NaN (Spark emits them with a null quantile struct; filtering
     // them inside `p` would silently drop the rows if testdata ever gains
-    // a valueless code — the same convention as the other quantile oracles)
+    // a valueless code)
     Some("""WITH codes AS (SELECT DISTINCT event_type AS code FROM events),
       |p AS (SELECT event_type AS code, CAST(value AS DOUBLE) AS v
       |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -344,135 +309,12 @@ object Queries {
       |  row_number() OVER (PARTITION BY code ORDER BY v) AS rn,
       |  count(*) OVER (PARTITION BY code) AS n FROM p),
       |q AS (SELECT code,
-      |  round(max(CASE WHEN rn = greatest(1, CAST(ceil(0.25*n) AS BIGINT)) THEN v END),4) AS p25,
-      |  round(max(CASE WHEN rn = greatest(1, CAST(ceil(0.5*n) AS BIGINT)) THEN v END),4) AS p50,
-      |  round(max(CASE WHEN rn = greatest(1, CAST(ceil(0.75*n) AS BIGINT)) THEN v END),4) AS p75
+      |  round(max(CASE WHEN rn = CAST(floor(0.25*(n-1) + 0.5) AS BIGINT) + 1 THEN v END),4) AS p25,
+      |  round(max(CASE WHEN rn = CAST(floor(0.5*(n-1) + 0.5) AS BIGINT) + 1 THEN v END),4) AS p50,
+      |  round(max(CASE WHEN rn = CAST(floor(0.75*(n-1) + 0.5) AS BIGINT) + 1 THEN v END),4) AS p75
       | FROM r GROUP BY code)
       |SELECT codes.code, q.p25, q.p50, q.p75
       |FROM codes LEFT JOIN q USING (code) ORDER BY codes.code""".stripMargin))
-
-  /** The HLL subject-count path of aggregate_code_metadata (stage option
-    * `algo: sketch` on the subject-count entries), pinned in the EXACT
-    * regime: an HLL sketch stores coupons exactly below ~2^(lgK−4) distinct
-    * items, and per-code distinct users max out at 1,500 at sf0.1 — far
-    * under lgK=16's ~4k window (measured: exact at 3k, first deviation at
-    * 10k) — so the estimate IS the exact count and the oracle's plain
-    * COUNT(DISTINCT) hash-matches. Above the window the identical plan
-    * degrades to ≤ ~0.8%% error with fixed-size shuffles.
-    */
-  private val aggCodeSubjectsSketch: Gate = Gate(
-    (s, dir) => AggregateCodeMetadata.compute(medsEvents(s, dir),
-        Seq(CodeNSubjects, ValuesNSubjects),
-        subjectCountMode = "sketch", subjectLgK = 16)
-      .select(col(Code).as("code"),
-        col(CodeNSubjects).as("n_subjects"),
-        col(ValuesNSubjects).as("values_n_subjects"))
-      .orderBy("code"),
-    Some("""SELECT event_type AS code,
-      | count(DISTINCT user_id) AS n_subjects,
-      | count(DISTINCT CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN user_id END) AS values_n_subjects
-      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
-
-  /** Incremental metadata: the events table split into two "releases"
-    * (event_id parity), each aggregated into mergeable partials, the
-    * partials merged, and the full metadata derived from the merged artifact
-    * alone — verified against a full recompute in DuckDB. At 100 TB this is
-    * the path that aggregates each new crawl once and never rescans old
-    * shards; the gate proves the merge is EXACT, not approximate.
-    */
-  private val aggCodeMetadataIncr: Gate = Gate(
-    (s, dir) => {
-      val ev = medsEvents(s, dir)
-      // the partial artifacts are PERSISTED (the whole point of the
-      // incremental path: aggregate an increment once, derive many times) —
-      // without the write/read the gate's many derivation branches would
-      // re-execute the raw-scan lineage per consumer
-      val tmp = stagingDir("graft_meta_partials_", dir)
-      // idempotent staging (same convention as the pipeline-fixture gates):
-      // build-once is the incremental path's actual cost model; the marker
-      // pins the SOURCE mtime so an in-place testdata regeneration rebuilds
-      val pMarker = java.nio.file.Paths.get(tmp, ".staged")
-      if (!markerFresh(pMarker, s"$dir/events.parquet")) {
-        AggregateCodeMetadata.partials(ev.filter(col("event_id") % 2 === 0))
-          .write(s"$tmp/even")
-        AggregateCodeMetadata.partials(ev.filter(col("event_id") % 2 === 1))
-          .write(s"$tmp/odd")
-        writeMarker(pMarker, s"$dir/events.parquet")
-      }
-      // memoized reads (the staged partials are mtime-marked like the
-      // source tables): 4 fewer listing/schema jobs per invocation
-      val parts = Seq(s"$tmp/even", s"$tmp/odd").map(d =>
-        AggregateCodeMetadata.MetadataPartials(
-          tableAt(s, s"$d/value_hist.parquet"),
-          tableAt(s, s"$d/subjects.parquet")))
-      val merged = AggregateCodeMetadata.mergePartials(parts)
-      val m = AggregateCodeMetadata.fromPartials(merged,
-        Seq(CodeNSubjects, CodeNOccurrences, ValuesNSubjects, ValuesNOccurrences,
-          ValuesNInts, ValuesSum, ValuesMin, ValuesMax, ValuesQuantiles),
-        quantiles = Seq(0.5), quantileMode = "linear")
-        // exact scaled-integer sum-of-squares straight off the merged
-        // histogram: fully order-independent
-        .join(merged.valueHist.groupBy(Code).agg(
-          sum(round(when(col("__v").isNotNull && !isnan(col("__v")),
-            col("__v") * col("__v") * 10000)) * col("__cnt"))
-            .cast(LongType).as("values_sum_sqd_e4")), Seq(Code))
-      m.select(col(Code).as("code"),
-        col(CodeNSubjects).as("n_subjects"),
-        col(CodeNOccurrences).as("n_occurrences"),
-        col(ValuesNSubjects).as("values_n_subjects"),
-        col(ValuesNOccurrences).as("values_n_occurrences"),
-        col(ValuesNInts).as("values_n_ints"),
-        r3(col(ValuesSum)).as("values_sum"),
-        col("values_sum_sqd_e4"),
-        col(ValuesMin).as("values_min"),
-        col(ValuesMax).as("values_max"),
-        r4(col(ValuesQuantiles).getField("values/quantile/0.5")).as("values_p50"))
-        .orderBy("code")
-    },
-    // the oracle replays the SAME incremental work, not a flat recompute
-    // (r8 verdict #6: like-for-like ratio): per-release partials (value
-    // histogram + distinct-subject artifact per event_id parity), partial
-    // MERGE (union + re-agg), then every metric derived from the merged
-    // artifacts only — including the linear-interp p50 off the cumulative
-    // histogram, the exact shape fromPartials executes. subjc's count(*)
-    // deliberately counts a hypothetical null-subject group: the Spark
-    // side's keyed fromPartials row count does too (= Polars n_unique,
-    // which counts null as a distinct value)
-    Some("""WITH ev AS (SELECT user_id, event_type AS code,
-      |  CAST(value AS DOUBLE) AS v, CAST(event_id % 2 AS INT) AS rel FROM events),
-      |hist_p AS (SELECT rel, code, v, count(*) AS cnt FROM ev GROUP BY 1,2,3),
-      |subj_p AS (SELECT rel, code, user_id,
-      |  max(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN 1 ELSE 0 END) AS has_value
-      | FROM ev GROUP BY 1,2,3),
-      |hist AS (SELECT code, v, sum(cnt) AS cnt FROM hist_p GROUP BY 1,2),
-      |subj AS (SELECT code, user_id, max(has_value) AS has_value FROM subj_p GROUP BY 1,2),
-      |scalars AS (SELECT code,
-      |  CAST(sum(cnt) AS BIGINT) AS n_occurrences,
-      |  CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN cnt END),0) AS BIGINT) AS values_n_occurrences,
-      |  CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) AND round(v)=v THEN cnt END),0) AS BIGINT) AS values_n_ints,
-      |  round(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN v*cnt END),0),3) AS values_sum,
-      |  CAST(sum(round(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN v*v*10000 END)*cnt) AS BIGINT) AS values_sum_sqd_e4,
-      |  min(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN v END) AS values_min,
-      |  max(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN v END) AS values_max
-      | FROM hist GROUP BY 1),
-      |subjc AS (SELECT code, count(*) AS n_subjects,
-      |  CAST(sum(has_value) AS BIGINT) AS values_n_subjects FROM subj GROUP BY 1),
-      |hp AS (SELECT code, v, cnt FROM hist WHERE v IS NOT NULL AND NOT isnan(v)),
-      |r AS (SELECT code, v, cnt,
-      |  sum(cnt) OVER (PARTITION BY code ORDER BY v) AS cum,
-      |  sum(cnt) OVER (PARTITION BY code) AS n FROM hp),
-      |q AS (SELECT code,
-      |  max(CASE WHEN cum - cnt < floor(0.5*(n-1))+1 AND floor(0.5*(n-1))+1 <= cum THEN v END) AS lov,
-      |  max(CASE WHEN cum - cnt < ceil(0.5*(n-1))+1 AND ceil(0.5*(n-1))+1 <= cum THEN v END) AS hiv,
-      |  max(0.5*(n-1) - floor(0.5*(n-1))) AS frac
-      | FROM r GROUP BY 1)
-      |SELECT s.code,
-      | sc.n_subjects, s.n_occurrences, sc.values_n_subjects,
-      | s.values_n_occurrences, s.values_n_ints, s.values_sum,
-      | s.values_sum_sqd_e4, s.values_min, s.values_max,
-      | round(q.lov*(1-q.frac) + q.hiv*q.frac, 4) AS values_p50
-      |FROM scalars s JOIN subjc sc USING (code) LEFT JOIN q USING (code)
-      |ORDER BY s.code""".stripMargin))
 
   private val fitVocab: Gate = Gate(
     (s, dir) => {
@@ -576,9 +418,7 @@ object Queries {
       val df = medsEvents(s, dir)
         .withColumn("order_idx", ReorderMeasurements.orderIndex(pats))
       // scalable global position: materializing row number, not a
-      // single-partition Window.orderBy. (A/B-measured faster here than the
-      // checkpoint-free withGlobalRowNumberKeyed, whose extra lineage passes
-      // cost more than this cheap lineage's one materialization.)
+      // single-partition Window.orderBy
       GraftFunctions.withGlobalRowNumber(df, "out_pos",
         Seq(col(SubjectId), col(Time).asc_nulls_first, col("order_idx"), col("event_id")))
         .select(col("event_id"), col("order_idx").cast(LongType).as("order_idx"),
@@ -1029,7 +869,7 @@ object Queries {
     * document re-joins its word sequence against the final state. The
     * corpus vocabulary (31 distinct synthetic words at every SF, far under
     * the gate's 2^16 word cap) keeps the unrolled replay trivially sized —
-    * the same exact-regime trick the sketch gates pin.
+    * the same exact-regime trick the `freq_terms` sketch gate pins.
     */
   private lazy val bpeTokensOracle: String = {
     val numMerges = 64
@@ -2831,10 +2671,7 @@ object Queries {
     "q3_segment_revenue" -> q3Segment,
     "q5_nation_revenue" -> q5Nation,
     "agg_code_metadata" -> aggCodeMetadata,
-    "agg_code_metadata_incr" -> aggCodeMetadataIncr,
     "agg_code_quantiles" -> aggCodeQuantiles,
-    "agg_code_quantiles_sketch" -> aggCodeQuantilesSketch,
-    "agg_code_subjects_sketch" -> aggCodeSubjectsSketch,
     "fit_vocab_indices" -> fitVocab,
     "filter_subjects" -> filterSubjects,
     "filter_measurements" -> filterMeasurements,

@@ -126,24 +126,14 @@ object PipelineConfig {
   /** Aggregations may be plain names or {name: values/quantiles, quantiles:
     * [...]} entries (cfg.yaml of aggregate_code_metadata scenarios).
     */
-  private[graft] final case class ParsedAggs(names: Seq[String],
-    quantiles: Seq[Double], quantileMode: String, sketchK: Int,
-    subjectCountMode: String, subjectLgK: Int)
+  private[graft] final case class ParsedAggs(names: Seq[String], quantiles: Seq[Double])
 
   private def parseAggregations(stage: String, cfg: Cfg): ParsedAggs = {
-    val dflt = ParsedAggs(AggregateCodeMetadata.AllAggregations,
-      Seq(0.25, 0.5, 0.75), "nearest", graft.plans.KllExpressions.DefaultK,
-      "exact", 12)
+    val dflt = ParsedAggs(AggregateCodeMetadata.AllAggregations, Seq(0.25, 0.5, 0.75))
     val entries = cfg.getList("aggregations")
     if (entries.isEmpty) dflt
     else {
       var quantiles = dflt.quantiles
-      var mode = dflt.quantileMode
-      var sketchK = dflt.sketchK
-      var subjMode = dflt.subjectCountMode
-      var subjLgK = dflt.subjectLgK
-      val subjectCountNames = Set(graft.meds.MedsSchema.CodeNSubjects,
-        graft.meds.MedsSchema.ValuesNSubjects)
       val names = entries.map {
         case S(s) => s
         case m: M =>
@@ -156,28 +146,14 @@ object PipelineConfig {
               case Nil => quantiles
               case qs => qs
             }
-            // algo: nearest (reference parity) | linear | sketch (KLL, the
-            // hyper-cardinality path; sketch_k sizes the sketch)
-            mode = m.getStr("algo").getOrElse(mode)
-            sketchK = m.getInt("sketch_k").getOrElse(sketchK)
-          }
-          // algo: sketch on either subject-count entry switches BOTH to the
-          // HLL estimate (one shared mode: mixing exact and sketched subject
-          // counts in one metadata table would be a silent inconsistency)
-          if (subjectCountNames.contains(name)) {
-            subjMode = m.getStr("algo").getOrElse(subjMode)
-            subjLgK = m.getInt("lg_k").getOrElse(subjLgK)
           }
           name
         case other => throw new IllegalArgumentException(s"bad aggregation entry: $other")
       }
-      def check(what: String, v: String, known: Seq[String]): Unit =
-        require(known.contains(v),
-          s"stage $stage: unknown $what `$v` (expected ${known.mkString(" | ")})")
-      names.foreach(check("aggregation", _, AggregateCodeMetadata.AllAggregations))
-      check("quantiles algo", mode, Seq("nearest", "linear", "sketch"))
-      check("subject-count algo", subjMode, Seq("exact", "sketch"))
-      ParsedAggs(names, quantiles, mode, sketchK, subjMode, subjLgK)
+      names.foreach(n => require(AggregateCodeMetadata.AllAggregations.contains(n),
+        s"stage $stage: unknown aggregation `$n` (expected " +
+          s"${AggregateCodeMetadata.AllAggregations.mkString(" | ")})"))
+      ParsedAggs(names, quantiles)
     }
   }
 
@@ -215,7 +191,8 @@ object PipelineConfig {
     * did not read fails the build (`stage <name>: unknown key(s) … (read:
     * …)`) — so every key a builder takes must be read here, at parse time,
     * not inside the stage function. A key the builder only reads when it
-    * applies (e.g. an aggregation entry's `algo`) fails where it does not.
+    * applies (e.g. `quantiles` on an aggregation entry other than
+    * `values/quantiles`) fails where it does not.
     *
     * `train_only`, `_match_revise` and `_match_revise_mode` are orchestration
     * keys, consumed here the same way for every stage: `train_only`
@@ -283,8 +260,7 @@ object PipelineConfig {
       val summarize = cfg.getBool("do_summarize_over_all_codes").getOrElse(false)
       Pipeline.MetadataStage(name, m =>
         AggregateCodeMetadata(m.data, m.codes, pa.names, pa.quantiles, mods,
-          summarize, pa.quantileMode, pa.sketchK, pa.subjectCountMode,
-          pa.subjectLgK))
+          summarize))
     }
     register("fit_vocabulary_indices") { (name, cfg) =>
       val mods = cfg.strings("code_modifiers")

@@ -150,69 +150,6 @@ object GraftFunctions {
     */
   private val MapLiteralMaxEntries = 256
 
-  /** Scalable global row number, keyed variant: same contract as
-    * [[withGlobalRowNumber]] but REQUIRES `bucketKey` to be a numeric
-    * expression equal to the leading sort column (ascending, nulls first).
-    * That restriction buys a fundamentally cheaper plan: bucket boundaries
-    * are collected ONCE as literals (approxQuantile over the key), so the
-    * bucket id is a pure function of row values — two executions of the
-    * plan agree by construction, which is exactly the property a range
-    * shuffle lacks (RangePartitioner reseeds per RDD id; AQE coalesces per
-    * consumer) and the reason the generic variant must pay an eager
-    * localCheckpoint. Here nothing is materialized: one pass computes exact
-    * per-bucket counts (map-side combined — only bucket partials shuffle),
-    * the offsets broadcast back, and the main pass runs one hash shuffle on
-    * the bucket id with a streaming row_number window per bucket. Also
-    * fault-tolerant: with no checkpointed blocks, executor loss just
-    * recomputes lineage.
-    *
-    * Bucket count follows spark.sql.shuffle.partitions; quantile bounds keep
-    * buckets balanced under key skew (heavily duplicated keys collapse
-    * bounds, never split a key across buckets — equal keys always share a
-    * bucket, so ordering by the remaining sort columns stays within one
-    * window partition).
-    */
-  def withGlobalRowNumberKeyed(df: DataFrame, outCol: String, bucketKey: Column,
-      sortCols: Seq[Column], numBuckets: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numBuckets > 0) numBuckets
-      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val keyed = df.withColumn("__bk", bucketKey.cast("double"))
-    val bounds =
-      if (n <= 1) Array.empty[Double]
-      else keyed.stat.approxQuantile("__bk",
-        (1 until n).map(_.toDouble / n).toArray, 0.001).distinct.sorted
-    // pure-function bucket id: number of bounds strictly below the key.
-    // Nulls compare to null -> dropped by filter -> bucket 0 (nulls first).
-    val pid =
-      if (bounds.isEmpty) lit(0)
-      else size(filter(array(bounds.map(lit(_)): _*), b => col("__bk") > b))
-    val withPid = keyed.withColumn("__pid", pid)
-    // exact counts; deterministic because __pid is value-derived
-    val counts = withPid.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.map { case (p, cnt) => val o = acc; acc += cnt; (p, o) }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__pid").orderBy(sortCols: _*)
-    val numbered = withPid.withColumn("__rn", row_number().over(w).cast(LongType))
-    val out =
-      if (offsets.isEmpty) // empty input: map() would be a typeless literal
-        numbered.withColumn(outCol, col("__rn"))
-      else if (offsets.length <= MapLiteralMaxEntries) {
-        // constant-folded map literal — the offset lookup is a pure projection
-        val kv = offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }
-        numbered.withColumn(outCol,
-          col("__rn") + element_at(map(kv.toIndexedSeq: _*), col("__pid")))
-      } else {
-        val offsetsDf = spark.createDataFrame(offsets.toSeq).toDF("__pid", "__offset")
-        numbered.join(broadcast(offsetsDf), Seq("__pid"))
-          .withColumn(outCol, col("__rn") + col("__offset"))
-          .drop("__offset")
-      }
-    out.drop("__bk", "__pid", "__rn")
-  }
-
   /** Polars `shrink_dtype` analog (reducer.py:217, fit_vocabulary_indices
     * .py:195): cast integer columns to the narrowest integral type that holds
     * their observed min/max (an empty or all-null column becomes tinyint).

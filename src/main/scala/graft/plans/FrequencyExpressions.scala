@@ -13,18 +13,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Frequent-items (heavy-hitter) sketches — the frequency leg of the
-  * mergeable-sketch suite (HLL distinct · theta sets · KLL quantiles ·
-  * THIS). Where a plain `groupBy(key).count()` is already map-side
-  * combined and fine for vocabulary-sized key domains, it is NOT fine for
-  * unbounded ones — hosts, URLs, n-grams, user agents at crawl scale: the
-  * aggregation state itself becomes corpus-sized. An ItemsSketch tracks at
-  * most `maxMapSize` candidates in fixed memory with the Misra-Gries
-  * guarantee: every item with true count > N/maxMapSize survives (no false
+/** Frequent-items (heavy-hitter) sketches, beside the theta sketches of
+  * `corpus_overlap` in the mergeable-sketch suite. Where a plain
+  * `groupBy(key).count()` is already map-side combined and fine for
+  * vocabulary-sized key domains, it is NOT fine for unbounded ones — hosts,
+  * URLs, n-grams, user agents at crawl scale: the aggregation state itself
+  * becomes corpus-sized. An ItemsSketch tracks at most `maxMapSize`
+  * candidates in fixed memory with the Misra-Gries guarantee: every item with true count > N/maxMapSize survives (no false
   * negatives above threshold), estimates off by at most the documented
   * per-sketch error bound, and merges of per-shard sketches keep the
-  * guarantee — so per-increment partials work exactly like the other
-  * sketch artifacts.
+  * guarantee — so per-increment partials merge like theta sketches do.
   *
   * Exactness contract: while the number of distinct items stays under the
   * sketch's map capacity (0.75 · maxMapSize), nothing is ever evicted and

@@ -97,20 +97,6 @@ object GraftExtensions {
       "graft_winnow(hashes, w) - winnowing fingerprint (window minima)"),
       arity("graft_winnow", 2)(es => WinnowMins(es(0),
         lit("graft_winnow", "w", es(1)).toInt))),
-    ("graft_kll_agg", info("graft_kll_agg",
-      "graft_kll_agg(v, k) - aggregate doubles into a KLL quantile sketch"),
-      arity("graft_kll_agg", 2)(es => KllExpressions.KllSketchAgg(es(0),
-        lit("graft_kll_agg", "k", es(1)).toInt))),
-    ("graft_kll_merge", info("graft_kll_merge",
-      "graft_kll_merge(sketch, k) - merge serialized KLL sketches"),
-      arity("graft_kll_merge", 2)(es => KllExpressions.KllMergeAgg(es(0),
-        lit("graft_kll_merge", "k", es(1)).toInt))),
-    ("graft_kll_quantile", info("graft_kll_quantile",
-      "graft_kll_quantile(sketch, q) - quantile at normalized rank q"),
-      arity("graft_kll_quantile", 2)(es => KllExpressions.KllQuantile(es(0), es(1)))),
-    ("graft_kll_rank", info("graft_kll_rank",
-      "graft_kll_rank(sketch, v) - estimated normalized rank of v"),
-      arity("graft_kll_rank", 2)(es => KllExpressions.KllRank(es(0), es(1)))),
     ("graft_freq_agg", info("graft_freq_agg",
       "graft_freq_agg(item, max_map_size) - frequent-items (heavy-hitter) sketch"),
       arity("graft_freq_agg", 2)(es => FrequencyExpressions.FreqSketchAgg(es(0),

@@ -210,7 +210,7 @@ class GoldenScenarioSpec extends SparkSpec {
     val data = Pipeline.trainOnly(MedsData(all, prior, splits)).data
     val computed = AggregateCodeMetadata.compute(data,
       AggregateCodeMetadata.AllAggregations, Seq(0.25, 0.5, 0.75),
-      summarizeOverAllCodes = true, quantileMode = "nearest")
+      summarizeOverAllCodes = true)
     val merged = AggregateCodeMetadata.joinAndReplace(computed, prior, Seq(Code))
       // real codes.parquet stores parent_codes as list[str]; the CSV fixture
       // loads it as a scalar string — lift to the contract type for compare
@@ -228,7 +228,7 @@ class GoldenScenarioSpec extends SparkSpec {
       "codes").get // the canonical metadata/codes.parquet of the default dataset
     val computed = AggregateCodeMetadata.compute(data,
       AggregateCodeMetadata.AllAggregations, Seq(0.25, 0.5, 0.75),
-      summarizeOverAllCodes = true, quantileMode = "nearest")
+      summarizeOverAllCodes = true)
     val merged = AggregateCodeMetadata.joinAndReplace(computed, prior, Seq(Code))
       .withColumn("parent_codes",
         when(col("parent_codes").isNotNull, array(col("parent_codes"))))

@@ -78,7 +78,7 @@ class GoldenSpec extends SparkSpec {
     val trainData = Pipeline.trainOnly(meds).data
     val m = AggregateCodeMetadata.compute(trainData,
       AggregateCodeMetadata.AllAggregations, Seq(0.25, 0.5, 0.75),
-      summarizeOverAllCodes = true, quantileMode = "nearest")
+      summarizeOverAllCodes = true)
       .collect().map(r => Option(r.getAs[String](Code)).getOrElse("__ALL__") -> r).toMap
 
     val hr = m("HR")

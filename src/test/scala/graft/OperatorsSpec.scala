@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.meds.MedsSchema._
@@ -53,17 +54,24 @@ class AggregateCodeMetadataSpec extends SparkSpec {
     assert(merged("STATIC").getAs[String]("description") == null)
   }
 
-  test("quantile modes: linear interpolates, nearest picks round(q*(n-1))") {
-    val d = medsDf((1L, "2020-01-01 00:00:00", "X", 1.0),
-      (1L, "2020-01-01 00:01:00", "X", 2.0),
-      (1L, "2020-01-01 00:02:00", "X", 3.0),
-      (1L, "2020-01-01 00:03:00", "X", 10.0))
-    def median(mode: String) =
-      AggregateCodeMetadata.compute(d, Seq(ValuesQuantiles), Seq(0.5), quantileMode = mode)
-        .select(col(ValuesQuantiles).getField("values/quantile/0.5")).head().getDouble(0)
-    assert(median("linear") == 2.5)
-    // Polars "nearest": idx = round(0.5*3) = 2 (half away from zero) → 3.0
-    assert(median("nearest") == 3.0)
+  test("nearest quantiles pick index round(q*(n-1)), half away from zero") {
+    val x = Seq(1.0, 2.0, 3.0, 10.0).zipWithIndex.map { case (v, i) =>
+      (1L, f"2020-01-01 00:0$i%d:00", "X", java.lang.Double.valueOf(v)) }
+    val d = medsDf(x ++ Seq[(Long, String, String, java.lang.Double)](
+      (2L, "2020-01-01 00:00:00", "ONE", 5.0),
+      (3L, "2020-01-01 00:00:00", "NONE", null),
+      (3L, "2020-01-01 00:01:00", "NONE", Double.NaN)): _*)
+    val qs = Seq(0.0, 0.25, 0.5, 1.0)
+    val got = AggregateCodeMetadata.compute(d, Seq(ValuesQuantiles), qs).collect()
+      .map(r => r.getAs[String](Code) -> Option(r.getAs[Row](ValuesQuantiles))).toMap
+    // (code, q, value): X has n = 4, so the median's index round(1.5) = 2
+    // rounds half away from zero, to 3.0, not 2.5 or 2.0
+    val want = Seq(("X", 0.0, 1.0), ("X", 0.25, 2.0), ("X", 0.5, 3.0), ("X", 1.0, 10.0),
+      ("ONE", 0.0, 5.0), ("ONE", 0.5, 5.0), ("ONE", 1.0, 5.0))
+    want.foreach { case (code, q, v) =>
+      assert(got(code).get.getDouble(qs.indexOf(q)) == v, s"$code q=$q") }
+    // a code whose values are all null or NaN gets a null struct
+    assert(got("NONE").isEmpty)
   }
 
   test("shrink dtype narrows count columns") {

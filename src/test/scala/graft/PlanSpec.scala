@@ -118,35 +118,6 @@ class PlanSpec extends SparkSpec {
     } finally keys.zip(old).foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("withGlobalRowNumberKeyed: exact 1..n, agrees with the generic variant, skew-safe") {
-    import spark.implicits._
-    // skewed numeric leading key (one subject holds 30% of rows) + secondary
-    // tiebreakers, at enough rows that bucket-boundary bugs would surface
-    val df = spark.range(0, 20000).select(
-      when(col("id") % 10 < 3, lit(7L)).otherwise(col("id") % 500).as("subj"),
-      col("id").as("tie"))
-    val keyed = graft.functions.GraftFunctions.withGlobalRowNumberKeyed(
-      df, "pos", col("subj"), Seq(col("subj"), col("tie")))
-    val rows = keyed.select("pos", "subj", "tie").collect()
-    assert(rows.length == 20000)
-    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 20000L))
-    // numbering identical to the checkpoint-based generic variant
-    val generic = graft.functions.GraftFunctions.withGlobalRowNumber(
-      df, "pos", Seq(col("subj"), col("tie")))
-      .select("pos", "subj", "tie").collect()
-    assert(rows.map(_.toSeq).toSet == generic.map(_.toSeq).toSet)
-    // value-derived bucket id: a SECOND evaluation is bit-identical (the
-    // property a raw range shuffle lacks)
-    val again = keyed.select("pos", "subj", "tie").collect()
-    assert(rows.map(_.toSeq).toSet == again.map(_.toSeq).toSet)
-    // the row_number window must be PARTITIONED by the bucket id — a
-    // regression to a global Window.orderBy would produce identical values
-    // through a single partition, which only the plan can reveal
-    val s = plan(keyed).toString
-    assert(s.contains("windowspecdefinition(__pid"),
-      s"window not partitioned by bucket id:\n$s")
-  }
-
   test("skew guards keep their bounded shapes: broadcast anti-join / broadcast hot-list") {
     import spark.implicits._
     val docs = Seq((1L, "a b c d e f"), (2L, "b c d e f g"), (3L, "a b c x y z"))

@@ -267,13 +267,6 @@ class GraftExtensionsSpec extends SparkSpec {
       VectorExpressions.sortedPairs(
         array(lit(3L), lit(1L), lit(2L))).as("sp")).head()
     assert(viaSql.toSeq == viaApi.toSeq)
-    // KLL aggregate + scalars end-to-end in SQL (exact regime: 100 values)
-    val kll = spark.sql(
-      """SELECT graft_kll_quantile(s, 0.5d) AS med,
-        |       graft_kll_rank(s, 25.0d) AS r
-        |FROM (SELECT graft_kll_agg(CAST(id AS DOUBLE), 200) AS s
-        |      FROM range(1, 101))""".stripMargin).head()
-    assert(kll.getDouble(0) == 50.0 && kll.getDouble(1) == 0.25)
   }
 
   test("non-literal config argument raises a readable analysis error") {

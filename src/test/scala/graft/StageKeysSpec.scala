@@ -126,6 +126,17 @@ class StageKeysSpec extends SparkSpec {
       map("{aggregations: [{name: values/quantiles, quantilez: [0.5]}]}"))
     assert(agg.contains("unknown key(s) aggregations[0].quantilez"), agg)
     assert(agg.contains("aggregations[0].quantiles"), agg)
+    // the retired quantile-sketch and subject-sketch keys fail closed
+    // rather than quietly computing exact values
+    Seq("{aggregations: [{name: values/quantiles, algo: sketch}]}" -> "aggregations[0].algo",
+      "{aggregations: [{name: values/quantiles, sketch_k: 1024}]}" -> "aggregations[0].sketch_k",
+      "{aggregations: [values/sum, {name: code/n_subjects, algo: sketch}]}" ->
+        "aggregations[1].algo",
+      "{aggregations: [{name: values/n_subjects, lg_k: 16}]}" -> "aggregations[0].lg_k")
+      .foreach { case (yaml, key) =>
+        val e = buildError("aggregate_code_metadata", map(yaml))
+        assert(e.contains(s"stage aggregate_code_metadata: unknown key(s) $key "), e)
+      }
     val mr = buildError("occlude_outliers",
       map("{_match_revise: [{_matcher: {code: A}, stddev_cutof: 2}]}"))
     assert(mr.contains("stage occlude_outliers: unknown key(s) stddev_cutof"), mr)
@@ -173,10 +184,6 @@ class StageKeysSpec extends SparkSpec {
   test("a bad value of a known key fails at build time, naming the stage and the value") {
     val bad = Seq(
       ("aggregate_code_metadata", "{aggregations: [values/summ]}", "values/summ"),
-      ("aggregate_code_metadata",
-        "{aggregations: [{name: values/quantiles, algo: nearst}]}", "nearst"),
-      ("aggregate_code_metadata",
-        "{aggregations: [{name: code/n_subjects, algo: exakt}]}", "exakt"),
       ("stratified_cap", "{stratum_col: s, per_stratum: 2, algo: windw}", "windw"),
       ("quality_filter", "{}", "threshold rule"),
       ("add_time_derived_measurements", "{}", "no generators"))
@@ -219,8 +226,8 @@ class StageKeysSpec extends SparkSpec {
       ("add_time_derived_measurements", "{time_of_day: {endpoints: [6.5]}}",
         "`time_of_day.endpoints[0]` must be an integer, got D(6.5)"),
       ("occlude_outliers", "{stddev_cutoff: abc}", "`stddev_cutoff` must be a number, got S(abc)"),
-      ("aggregate_code_metadata", "{aggregations: [{name: values/quantiles, sketch_k: many}]}",
-        "`aggregations[0].sketch_k` must be an integer, got S(many)"),
+      ("aggregate_code_metadata", "{aggregations: [{name: values/quantiles, quantiles: [0.5, x]}]}",
+        "`aggregations[0].quantiles[1]` must be a number, got S(x)"),
       ("aggregate_code_metadata", "{aggregations: values/sum}",
         "`aggregations` must be a list of entries, got S(values/sum)"),
       ("sample_split", "{splits: {a: 1, b: x}}", "`splits.b` must be a number, got S(x)"),

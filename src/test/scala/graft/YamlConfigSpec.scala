@@ -282,8 +282,8 @@ class YamlConfigSpec extends SparkSpec {
     assert(MedsIO.read(spark, s"$tmp/out").data.count() == 41) // filter_subjects golden
   }
 
-  test("aggregate_code_metadata `algo: sketch` is YAML-reachable and matches the library path") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sketchq").toString
+  test("aggregate_code_metadata quantiles from YAML match the library path") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_yamlq").toString
     val yamlPath = s"$tmp/pipeline.yaml"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(yamlPath),
       """stages:
@@ -292,8 +292,6 @@ class YamlConfigSpec extends SparkSpec {
         |      aggregations:
         |        - name: "values/quantiles"
         |          quantiles: [0.25, 0.5, 0.75]
-        |          algo: sketch
-        |          sketch_k: 1024
         |""".stripMargin)
     Main.run(Array(yamlPath, MedsFixture.root, s"$tmp/out"), spark)
     val got = MedsIO.read(spark, s"$tmp/out").codes
@@ -302,8 +300,7 @@ class YamlConfigSpec extends SparkSpec {
     // train_only=True; Pipeline.MetadataStage) — mirror that here
     val meds = Pipeline.trainOnly(MedsIO.read(spark, MedsFixture.root))
     val want = graft.operators.AggregateCodeMetadata.compute(meds.data,
-      Seq("values/quantiles"), Seq(0.25, 0.5, 0.75),
-      quantileMode = "sketch", sketchK = 1024)
+      Seq("values/quantiles"), Seq(0.25, 0.5, 0.75))
       .select(col("code"), col("`values/quantiles`"))
     // join on code: the stage merges into the prior codes table (extra rows
     // with no data keep null quantiles), the library call aggregates data
@@ -312,49 +309,6 @@ class YamlConfigSpec extends SparkSpec {
       .filter(not(col("g.`values/quantiles`") <=> col("w.`values/quantiles`")))
       .count()
     assert(disagree == 0)
-  }
-
-  test("subject-count `algo: sketch` is YAML-reachable; exact regime equals countDistinct") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sketchs").toString
-    val yamlPath = s"$tmp/pipeline.yaml"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(yamlPath),
-      """stages:
-        |  - agg_s:
-        |      _base_stage: aggregate_code_metadata
-        |      aggregations:
-        |        - name: "code/n_subjects"
-        |          algo: sketch
-        |          lg_k: 16
-        |        - "values/n_subjects"
-        |""".stripMargin)
-    Main.run(Array(yamlPath, MedsFixture.root, s"$tmp/out"), spark)
-    val got = MedsIO.read(spark, s"$tmp/out").codes
-      .select(col("code"), col("`code/n_subjects`").cast("long").as("ns"))
-      .filter(col("ns").isNotNull)
-    // exact regime (example data has 4 subjects): HLL estimate == exact
-    val meds = Pipeline.trainOnly(MedsIO.read(spark, MedsFixture.root))
-    val want = meds.data.groupBy("code")
-      .agg(countDistinct("subject_id").as("ns"))
-    assert(collectSet(got) === collectSet(want))
-  }
-
-  test("sketch quantiles in the approximate regime: reported value's true rank within KLL bound") {
-    import spark.implicits._
-    // 5000 distinct values >> k=200: genuinely approximate
-    val data = (0 until 5000).map(i => (i.toLong, "2024-01-01 00:00:00", "C",
-        java.lang.Double.valueOf(i.toDouble)))
-      .map { case (s, t, c, v) => (s, ts(t), c, v.floatValue()) }
-      .toDF("subject_id", "time", "code", "numeric_value")
-    val qs = Seq(0.25, 0.5, 0.75)
-    val got = graft.operators.AggregateCodeMetadata.compute(data,
-      Seq("values/quantiles"), qs, quantileMode = "sketch")
-      .select(col("`values/quantiles`")).head().getStruct(0)
-    for ((q, i) <- qs.zipWithIndex) {
-      val v = got.getDouble(i)
-      val trueRank = (v + 1.0) / 5000.0 // values are 0..4999, rank of v = v+1
-      assert(math.abs(trueRank - q) <= 0.02,
-        f"q=$q: reported $v%.0f has true rank $trueRank%.4f (err > 2%%)")
-    }
   }
 
   test("--stage= runs one named stage; chained single-stage runs equal the full pipeline") {

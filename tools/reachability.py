@@ -246,7 +246,10 @@ def main():
 
     print("# Reachability of graft's stages and gates\n")
     print("Generated by `python3 tools/reachability.py` (a name grep; see its"
-          " docstring for the rules).\n")
+          " docstring for the rules). Names inside `//` and `/* */` comments"
+          " are not calls; a `def` between two stage registrations belongs to"
+          " the stages that call it. `tools/test_reachability.py` fails when"
+          " this file differs from the script's output.\n")
     print("## Stages\n")
     print("| stage | defined in | reached by | gates | specs |")
     print("|---|---|---|---|---|")

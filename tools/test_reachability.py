@@ -5,8 +5,11 @@
 `calls()` must find names in code and in string literals, and none in
 comments: a name in a scaladoc or a `//` note is not a call. A local `def`
 between two stage registrations belongs to the stages that call it, not to
-the stage registered above it.
+the stage registered above it. The committed REACHABILITY.md is the
+script's output.
 """
+import contextlib
+import io
 import os
 import sys
 import unittest
@@ -85,6 +88,16 @@ class TreeTest(unittest.TestCase):
     def test_minhash_lsh_dedup_reaches_resolve_clusters(self):
         _, body = reachability.stage_bodies()["minhash_lsh_dedup"]
         self.assertIn("Dedup.resolveClusters", reachability.closure(reachability.calls(body)))
+
+
+class CommittedTableTest(unittest.TestCase):
+    def test_reachability_md_is_the_script_output(self):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            reachability.main()
+        committed = (reachability.ROOT / "REACHABILITY.md").read_text()
+        self.assertEqual(committed, out.getvalue(),
+                         "REACHABILITY.md is stale: python3 tools/reachability.py > REACHABILITY.md")
 
 
 if __name__ == "__main__":
