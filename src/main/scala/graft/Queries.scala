@@ -168,83 +168,6 @@ object Queries {
   private val r4 = (c: Column) => round(c, 4)
 
   // =====================================================================
-  // TPC-H-style relational queries (scan / agg / join benchmarks)
-  // =====================================================================
-
-  private val q1Pricing: Gate = Gate(
-    (s, dir) => table(s, dir, "lineitem")
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        r3(sum("l_quantity")).as("sum_qty"),
-        r3(sum("l_extendedprice")).as("sum_base_price"),
-        // exact scaled-integer sum: order-independent, no rounding boundary
-        sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000))
-          .cast(LongType).as("sum_disc_price_e4"),
-        r4(avg("l_quantity")).as("avg_qty"),
-        r3(avg("l_extendedprice")).as("avg_price"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus"),
-    Some("""SELECT l_returnflag, l_linestatus,
-      | round(sum(l_quantity),3) AS sum_qty,
-      | round(sum(l_extendedprice),3) AS sum_base_price,
-      | CAST(sum(round(l_extendedprice*(1-l_discount)*10000)) AS BIGINT) AS sum_disc_price_e4,
-      | round(avg(l_quantity),4) AS avg_qty,
-      | round(avg(l_extendedprice),3) AS avg_price,
-      | count(*) AS count_order
-      |FROM lineitem GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
-
-  private val q3Segment: Gate = Gate(
-    (s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val o = table(s, dir, "orders")
-      val c = table(s, dir, "customer")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000))
-          .cast(LongType).as("revenue_e4"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("c_mktsegment")
-    },
-    Some("""SELECT c_mktsegment,
-      | CAST(sum(round(l_extendedprice*(1-l_discount)*10000)) AS BIGINT) AS revenue_e4,
-      | count(*) AS n_rows
-      |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
-      |JOIN customer ON o_custkey=c_custkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin))
-
-  private val q5Nation: Gate = Gate(
-    (s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val o = table(s, dir, "orders")
-      val c = table(s, dir, "customer")
-      val su = table(s, dir, "supplier")
-      val n = table(s, dir, "nation")
-      val r = table(s, dir, "region")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(c),
-          col("o_custkey") === col("c_custkey") && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000))
-          .cast(LongType).as("revenue_e4"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("r_name", "n_name")
-    },
-    Some("""SELECT r_name, n_name,
-      | CAST(sum(round(l_extendedprice*(1-l_discount)*10000)) AS BIGINT) AS revenue_e4,
-      | count(*) AS n_rows
-      |FROM lineitem
-      |JOIN orders ON l_orderkey=o_orderkey
-      |JOIN supplier ON l_suppkey=s_suppkey
-      |JOIN customer ON o_custkey=c_custkey AND c_nationkey=s_nationkey
-      |JOIN nation ON s_nationkey=n_nationkey
-      |JOIN region ON n_regionkey=r_regionkey
-      |GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
-
-  // =====================================================================
   // MEDS stage operators over the events table (SURVEY §2.4)
   // =====================================================================
 
@@ -579,31 +502,6 @@ object Queries {
       | count(*) AS n_rows, count(DISTINCT user_id) AS n_subjects
       |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
 
-  /** Semi-structured extraction: typed `from_json` over the events `props`
-    * column, then an aggregate over the extracted field — the schema-on-read
-    * op every event/log pipeline needs. The oracle extracts the same field
-    * with a regexp so it never depends on a DuckDB JSON extension.
-    */
-  private val eventsJson: Gate = Gate(
-    (s, dir) => {
-      val parsed = eventsTable(s, dir).select(col("event_type"),
-        from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
-          .getField("k").as("k"))
-      parsed.groupBy("event_type").agg(
-        count(lit(1)).cast(LongType).as("n"),
-        sum("k").as("sum_k"),
-        r4(avg("k")).as("avg_k"),
-        max("k").as("max_k"))
-        .orderBy("event_type")
-    },
-    Some("""WITH p AS (
-      |  SELECT event_type,
-      |   CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
-      |  FROM events)
-      |SELECT event_type, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
-      | round(avg(k), 4) AS avg_k, max(k) AS max_k
-      |FROM p GROUP BY 1 ORDER BY 1""".stripMargin))
-
   private def rmTree(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (java.nio.file.Files.isDirectory(p)) {
@@ -868,8 +766,7 @@ object Queries {
     * corpus-wide as it is learned — the classic BPE invariant), so each
     * document re-joins its word sequence against the final state. The
     * corpus vocabulary (31 distinct synthetic words at every SF, far under
-    * the gate's 2^16 word cap) keeps the unrolled replay trivially sized —
-    * the same exact-regime trick the `freq_terms` sketch gate pins.
+    * the gate's 2^16 word cap) keeps the unrolled replay trivially sized.
     */
   private lazy val bpeTokensOracle: String = {
     val numMerges = 64
@@ -919,76 +816,6 @@ object Queries {
         .orderBy("doc_id")
     },
     Some(bpeTokensOracle))
-
-  /** Cross-release overlap audit via theta sketches, per language: two
-    * pseudo-releases carved from the documents table (A = doc_id % 3 != 0,
-    * B = doc_id % 2 == 0 — overlapping on doc_id % 6 ∈ {2, 4}), sketch
-    * estimates vs the oracle's EXACT distinct/intersect counts. The sketch
-    * is in exact mode at every test SF (lg 16 = 65k entries per group), so
-    * estimate ≡ exact and the hash comparison is legitimate; above capacity
-    * the same plan degrades to ~0.4% error with fixed-size shuffles —
-    * OverlapSpec pins that regime separately.
-    */
-  private val corpusOverlap: Gate = Gate(
-    (s, dir) => {
-      val docs = table(s, dir, "documents")
-      Overlap.overlapReport(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 2 === 0),
-        "text", Seq("lang")).orderBy("lang")
-    },
-    Some("""WITH a AS (SELECT DISTINCT lang,
-      |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-      |  FROM documents WHERE doc_id % 3 <> 0 AND text IS NOT NULL),
-      |b AS (SELECT DISTINCT lang,
-      |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-      |  FROM documents WHERE doc_id % 2 = 0 AND text IS NOT NULL),
-      |langs AS (SELECT lang FROM a UNION SELECT lang FROM b),
-      |na AS (SELECT lang, count(*) AS n FROM a GROUP BY lang),
-      |nb AS (SELECT lang, count(*) AS n FROM b GROUP BY lang),
-      |ni AS (SELECT lang, count(*) AS n
-      |  FROM (SELECT lang, t FROM a INTERSECT SELECT lang, t FROM b)
-      |  GROUP BY lang),
-      |nu AS (SELECT lang, count(*) AS n
-      |  FROM (SELECT lang, t FROM a UNION SELECT lang, t FROM b)
-      |  GROUP BY lang)
-      |SELECT l.lang,
-      |  CAST(coalesce(na.n, 0) AS BIGINT) AS est_docs_a,
-      |  CAST(coalesce(nb.n, 0) AS BIGINT) AS est_docs_b,
-      |  CAST(coalesce(ni.n, 0) AS BIGINT) AS est_common,
-      |  CAST(coalesce(nu.n, 0) AS BIGINT) AS est_union,
-      |  CAST(coalesce(nb.n, 0) - coalesce(ni.n, 0) AS BIGINT) AS est_new_in_b,
-      |  round(CASE WHEN coalesce(nu.n, 0) = 0 THEN 0.0
-      |    ELSE coalesce(ni.n, 0) * 1.0 / nu.n END, 4) AS jaccard
-      |FROM langs l LEFT JOIN na USING(lang) LEFT JOIN nb USING(lang)
-      |  LEFT JOIN ni USING(lang) LEFT JOIN nu USING(lang)
-      |ORDER BY l.lang""".stripMargin))
-
-  /** Heavy-hitter corpus terms via the frequent-items sketch
-    * (graft's Misra-Gries TypedImperativeAggregate): the whole corpus
-    * aggregates into ONE fixed-size sketch (map-side merged — the state
-    * stays 8k entries however many distinct tokens stream through), then
-    * the ≥-threshold items unpack. Exact regime at every test SF (distinct
-    * tokens ≪ map capacity, so estimates ARE true counts — the oracle is a
-    * plain GROUP BY/HAVING); beyond capacity the no-false-negatives bound
-    * takes over (FrequencySpec).
-    */
-  private val freqTerms: Gate = Gate(
-    (s, dir) => {
-      val sk = table(s, dir, "documents")
-        .select(explode(GraftFunctions.tokens(col("text"))).as("token"))
-        .agg(graft.plans.FrequencyExpressions.freqAgg(col("token")).as("sk"))
-      sk.select(explode(graft.plans.FrequencyExpressions.freqItems(
-          col("sk"), lit(100L))).as("f"))
-        .select(col("f.item").as("token"), col("f.estimate").as("freq"))
-        .where(col("freq") >= 100)
-        .orderBy(col("freq").desc, col("token"))
-    },
-    Some("""SELECT token, CAST(count(*) AS BIGINT) AS freq
-      |FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
-      |  w -> w <> '')) AS token FROM documents WHERE text IS NOT NULL)
-      |GROUP BY token HAVING count(*) >= 100
-      |ORDER BY freq DESC, token""".stripMargin))
 
   /** Corpus statistics per (source, lang): totals plus a nearest-rank token
     * median computed by the order-statistics window (same rank arithmetic
@@ -1928,52 +1755,6 @@ object Queries {
   private val decontaminate: Gate = decontamGate(bloom = false)
   private val decontaminateBloom: Gate = decontamGate(bloom = true)
 
-  /** The corpus text carries no PII, so the gate INJECTS synthetic
-    * identifiers deterministically (an email every 3rd doc, a phone every
-    * 5th, an IP every 7th — doc_id-derived so both engines build the same
-    * string) and verifies redaction + counts over the full redacted text
-    * hash. Real-format edge cases are spec-covered (RedactionSpec).
-    */
-  private val redactPii: Gate = Gate(
-    (s, dir) => {
-      val id = col("doc_id")
-      val withPii = concat(col("text"),
-        when(id % 3 === 0,
-          concat(lit(" contact user"), id, lit("@example.org now"))).otherwise(lit("")),
-        when(id % 5 === 0,
-          concat(lit(" or call 555-867-"), lpad((id % 10000).cast("string"), 4, "0")))
-          .otherwise(lit("")),
-        when(id % 7 === 0,
-          concat(lit(" from 10.0."), (id % 256).cast("string"), lit("."),
-            ((id * 7) % 256).cast("string"))).otherwise(lit("")))
-      table(s, dir, "documents")
-        .select(id, withPii.as("__t"))
-        .select((id.as("doc_id") +:
-          Redaction.redact(col("__t")).as("text_redacted") +:
-          Redaction.piiCounts(col("__t"))): _*)
-        .orderBy("doc_id")
-    },
-    Some("""WITH t AS (
-      |  SELECT doc_id, text
-      |   || CASE WHEN doc_id % 3 = 0
-      |      THEN ' contact user' || doc_id || '@example.org now' ELSE '' END
-      |   || CASE WHEN doc_id % 5 = 0
-      |      THEN ' or call 555-867-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END
-      |   || CASE WHEN doc_id % 7 = 0
-      |      THEN ' from 10.0.' || (doc_id % 256) || '.' || ((doc_id * 7) % 256) ELSE '' END
-      |   AS txt FROM documents)
-      |SELECT doc_id,
-      | regexp_replace(regexp_replace(regexp_replace(regexp_replace(txt,
-      |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      |   '(?:\+?1[-. ])?(?:\([0-9]{3}\)|\b[0-9]{3})[-. ][0-9]{3}[-. ][0-9]{4}\b', '<PHONE>', 'g'),
-      |   '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g'),
-      |   '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '<SSN>', 'g') AS text_redacted,
-      | CAST(len(regexp_extract_all(txt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-      | CAST(len(regexp_extract_all(txt, '(?:\+?1[-. ])?(?:\([0-9]{3}\)|\b[0-9]{3})[-. ][0-9]{3}[-. ][0-9]{4}\b')) AS BIGINT) AS n_phone,
-      | CAST(len(regexp_extract_all(txt, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS BIGINT) AS n_ipv4,
-      | CAST(len(regexp_extract_all(txt, '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b')) AS BIGINT) AS n_ssn
-      |FROM t ORDER BY doc_id""".stripMargin))
-
   private val packSequences: Gate = Gate(
     (s, dir) => Packing.packSequences(table(s, dir, "documents"),
       "doc_id", "text", capacity = 256, shards = 8)
@@ -2080,39 +1861,6 @@ object Queries {
       |FROM l LEFT JOIN best USING (event_id)
       |ORDER BY l.event_id""".stripMargin))
 
-  /** Column profiling: the one-pass per-column statistics report (counts,
-    * nulls, exact distincts, numeric/length ranges and means) replayed as
-    * per-column SQL aggregates.
-    */
-  private val profileGate: Gate = Gate(
-    (s, dir) => graft.ops.Profile.profile(table(s, dir, "documents"),
-      Seq("doc_id", "text", "lang", "n_chars"))
-      .select(col("column"), col("dtype"), col("n_rows"), col("n_null"),
-        col("n_distinct"),
-        r4(col("num_min")).as("num_min"), r4(col("num_max")).as("num_max"),
-        r4(col("num_avg")).as("num_avg"))
-      .orderBy("column"),
-    Some("""SELECT 'doc_id' AS "column", 'bigint' AS dtype,
-      | count(*) AS n_rows, count(*) - count(doc_id) AS n_null,
-      | count(DISTINCT doc_id) AS n_distinct,
-      | round(CAST(min(doc_id) AS DOUBLE),4) AS num_min,
-      | round(CAST(max(doc_id) AS DOUBLE),4) AS num_max,
-      | round(CAST(avg(doc_id) AS DOUBLE),4) AS num_avg
-      |FROM documents
-      |UNION ALL SELECT 'lang', 'string', count(*), count(*) - count(lang),
-      | count(DISTINCT lang), round(CAST(min(length(lang)) AS DOUBLE),4),
-      | round(CAST(max(length(lang)) AS DOUBLE),4),
-      | round(CAST(avg(length(lang)) AS DOUBLE),4) FROM documents
-      |UNION ALL SELECT 'n_chars', 'bigint', count(*), count(*) - count(n_chars),
-      | count(DISTINCT n_chars), round(CAST(min(n_chars) AS DOUBLE),4),
-      | round(CAST(max(n_chars) AS DOUBLE),4),
-      | round(CAST(avg(n_chars) AS DOUBLE),4) FROM documents
-      |UNION ALL SELECT 'text', 'string', count(*), count(*) - count(text),
-      | count(DISTINCT text), round(CAST(min(length(text)) AS DOUBLE),4),
-      | round(CAST(max(length(text)) AS DOUBLE),4),
-      | round(CAST(avg(length(text)) AS DOUBLE),4) FROM documents
-      |ORDER BY 1""".stripMargin))
-
   /** Time-range rolling aggregate: per-user trailing-1-hour event count and
     * value sum at every event — RANGE-framed window on exact epoch micros,
     * the same frame semantics in both engines.
@@ -2207,36 +1955,6 @@ object Queries {
       |   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_1h
       |FROM e ORDER BY event_id""".stripMargin))
 
-  /** Range join: clicks inside 2-hour purchase-attribution windows (same
-    * user, click within [purchase−2h, purchase]) — the grid-bucketed
-    * equi-join implementation against DuckDB's inequality join, exact
-    * epoch-micro arithmetic on both sides.
-    */
-  private val rangeJoinGate: Gate = Gate(
-    (s, dir) => {
-      val ev = eventsTable(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t"))
-      val windows = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          (unix_micros(col("ts")) - lit(7200000000L)).as("w_start"),
-          unix_micros(col("ts")).as("w_end"),
-          col("event_id").as("purchase_id"))
-      RangeJoin.pointInInterval(clicks, windows, Seq("user_id"), "t",
-        "w_start", "w_end", Seq("purchase_id", "w_end"),
-        bucketWidth = 3600000000L)
-        .orderBy("event_id", "purchase_id")
-    },
-    Some("""WITH c AS (SELECT event_id, user_id, epoch_us(ts) AS t
-      |  FROM events WHERE event_type='click'),
-      |p AS (SELECT user_id, epoch_us(ts) - 7200000000 AS w_start,
-      |  epoch_us(ts) AS w_end, event_id AS purchase_id
-      |  FROM events WHERE event_type='purchase')
-      |SELECT c.event_id, c.user_id, c.t, p.purchase_id, p.w_end
-      |FROM c JOIN p ON c.user_id = p.user_id
-      |  AND c.t BETWEEN p.w_start AND p.w_end
-      |ORDER BY 1, 4""".stripMargin))
-
   /** Deterministic global shuffle: the reproducible corpus permutation
     * (hash-of-id order, scalable two-pass global numbering) replayed in SQL
     * as a row_number over the same md5-derived unit hash.
@@ -2249,32 +1967,6 @@ object Queries {
       |  (('0x' || substr(md5(doc_id::VARCHAR || ':42'),1,14))::BIGINT
       |    % 1000000000)/1000000000.0, doc_id) AS BIGINT) AS shuffle_pos
       |FROM documents ORDER BY doc_id""".stripMargin))
-
-  /** Z-order interleave: the Morton spread ladder replayed bit-for-bit in
-    * SQL (DuckDB bitwise ops) over lineitem's part/supp keys — any drift in
-    * a mask or shift breaks the hash. The LAYOUT payoff (tight per-file
-    * footer ranges on both columns) is spec-locked in LayoutSpec.
-    */
-  private val zorderValues: Gate = Gate(
-    (s, dir) => table(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        graft.ops.Layout.zValue(Seq(
-          pmod(col("l_partkey"), lit(65536)),
-          pmod(col("l_suppkey"), lit(65536)))).as("z"))
-      .orderBy("l_orderkey", "l_linenumber"),
-    Some("""WITH r AS (SELECT l_orderkey, l_linenumber,
-      |  CAST(l_partkey % 65536 AS BIGINT) AS x,
-      |  CAST(l_suppkey % 65536 AS BIGINT) AS y FROM lineitem),
-      |s1 AS (SELECT *, (x | (x<<8)) & 16711935 AS xa,
-      |  (y | (y<<8)) & 16711935 AS ya FROM r),
-      |s2 AS (SELECT *, (xa | (xa<<4)) & 252645135 AS xb,
-      |  (ya | (ya<<4)) & 252645135 AS yb FROM s1),
-      |s3 AS (SELECT *, (xb | (xb<<2)) & 858993459 AS xc,
-      |  (yb | (yb<<2)) & 858993459 AS yc FROM s2),
-      |s4 AS (SELECT *, (xc | (xc<<1)) & 1431655765 AS xd,
-      |  (yc | (yc<<1)) & 1431655765 AS yd FROM s3)
-      |SELECT l_orderkey, l_linenumber, CAST(xd | (yd << 1) AS BIGINT) AS z
-      |FROM s4 ORDER BY 1,2""".stripMargin))
 
   private[graft] val AnalysisYaml: String =
     Seq("config/analysis_pipeline.yaml",
@@ -2667,9 +2359,6 @@ object Queries {
   // =====================================================================
 
   val gates: Seq[(String, Gate)] = Seq(
-    "q1_pricing" -> q1Pricing,
-    "q3_segment_revenue" -> q3Segment,
-    "q5_nation_revenue" -> q5Nation,
     "agg_code_metadata" -> aggCodeMetadata,
     "agg_code_quantiles" -> aggCodeQuantiles,
     "fit_vocab_indices" -> fitVocab,
@@ -2685,7 +2374,6 @@ object Queries {
     "bin_numeric_values" -> binNumericValues,
     "match_revise" -> matchReviseQuery,
     "reshard_to_split" -> reshardSummary,
-    "events_json" -> eventsJson,
     "dedup_exact" -> dedupExact,
     "dedup_against" -> dedupAgainstGate,
     "dedup_lines" -> dedupLinesGate,
@@ -2711,7 +2399,6 @@ object Queries {
     "text_repetition" -> textRepetition,
     "quality_filter_stage" -> qualityFilterStage,
     "tf_idf" -> tfIdf,
-    "redact_pii" -> redactPii,
     "lang_id" -> langId,
     "ngram_jaccard" -> ngramJaccard,
     "minhash_lsh" -> minhashLsh,
@@ -2724,14 +2411,11 @@ object Queries {
     "sample_split" -> sampleSplit,
     "pack_sequences" -> packSequences,
     "chunk_documents" -> chunkDocuments,
-    "zorder_values" -> zorderValues,
     "shuffle_rows" -> shuffleRows,
     "asof_join" -> asofJoin,
     "asof_join_nearest" -> asofJoinNearest,
-    "range_join" -> rangeJoinGate,
     "rolling_agg" -> rollingAgg,
     "feature_pipeline" -> featurePipeline,
-    "profile" -> profileGate,
     "packing_summary" -> packingSummaryGate,
     "curation_pipeline" -> curationPipeline,
     "analysis_pipeline" -> analysisPipeline,
@@ -2741,9 +2425,7 @@ object Queries {
     "temperature_mix" -> temperatureMixGate,
     "bpe_pair_counts" -> bpePairCounts,
     "bpe_tokens" -> bpeTokens,
-    "corpus_overlap" -> corpusOverlap,
-    "orc_roundtrip" -> orcRoundtrip,
-    "freq_terms" -> freqTerms
+    "orc_roundtrip" -> orcRoundtrip
   )
 
   def queries: Map[String, Q] = gates.map { case (n, g) => n -> g.query }.toMap

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dsl.Cfg
 import graft.operators.Pipeline
-import graft.ops.{Decontaminate, Dedup, Packing, Redaction, Sampling, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, Packing, Sampling, TextAnalysis}
 
 /** Built-in training-data-hygiene stages, registered through the SAME
   * extension point third-party packages use ([[PipelineConfig.register]],
@@ -276,20 +276,6 @@ object OpStages {
       Pipeline.DataStage(name, m => m.data.filter(rules.reduce(_ && _)))
     }
 
-    // PII scrubbing: REPLACES the text column with its redacted form and
-    // appends per-kind match counts; `kinds` defaults to every known kind
-    PipelineConfig.register("redact_pii") { (name, cfg) =>
-      val text = cfg.getStr(TextCol).getOrElse("text")
-      val kinds = cfg.strings("kinds") match {
-        case Nil => Redaction.Patterns.map(_._1)
-        case ks => ks
-      }
-      Pipeline.DataStage(name, m => {
-        val withCounts = appendCols(name, m.data, Redaction.piiCounts(col(text), kinds))
-        withCounts.withColumn(text, Redaction.redact(col(text), kinds))
-      })
-    }
-
     PipelineConfig.register("text_repetition") { (name, cfg) =>
       val text = cfg.getStr(TextCol).getOrElse("text")
       val n = cfg.getInt("ngram").getOrElse(3)
@@ -355,14 +341,6 @@ object OpStages {
       })
     }
 
-    // one-pass per-column statistics report: REPLACES the data with the
-    // profile table (the pipeline's standing data-quality artifact)
-    PipelineConfig.register("profile") { (name, cfg) =>
-      val cols = cfg.strings("cols")
-      val approx = cfg.getBool("approx_distinct").getOrElse(false)
-      Pipeline.DataStage(name, m => graft.ops.Profile.profile(m.data, cols, approx))
-    }
-
     // as-of temporal enrichment: attach the most recent prior (or next
     // upcoming) row from the parquet table at `right_path` per key
     PipelineConfig.register("asof_join") { (name, cfg) =>
@@ -406,22 +384,6 @@ object OpStages {
         m.data, keys, timeCol, range, aggs))
     }
 
-    // range (interval) containment join: all rows of the parquet interval
-    // table at `right_path` whose [start,end] contains the row's numeric
-    // time, per key — inner semantics, one row per match
-    PipelineConfig.register("range_join") { (name, cfg) =>
-      val keys = cfg.reqStrings("keys")
-      val values = cfg.reqStrings("value_cols")
-      val bucketWidth = cfg.reqLong("bucket_width")
-      val maxBuckets = cfg.getInt("max_buckets_per_interval").getOrElse(4096)
-      val (rightPath, timeCol, startCol, endCol) =
-        (cfg.reqStr("right_path"), cfg.reqStr("time_col"), cfg.reqStr("start_col"),
-          cfg.reqStr("end_col"))
-      Pipeline.DataStage(name, m => graft.operators.RangeJoin.pointInInterval(
-        m.data, m.data.sparkSession.read.parquet(rightPath), keys,
-        timeCol, startCol, endCol, values, bucketWidth, maxBuckets))
-    }
-
     // deterministic global shuffle: append the reproducible permutation
     // position (same seed -> same order anywhere); write sorted by it for
     // in-order streaming shards
@@ -434,19 +396,6 @@ object OpStages {
           s"stage $name: output column $outCol already exists in the input")
         Sampling.deterministicShuffle(m.data, id, outCol, seed)
       })
-    }
-
-    // Z-order layout: append the interleaved `__z` curve position over
-    // `cols` (2-3 numeric columns) and range-partition+sort by it, so the
-    // following write's parquet footers carry tight min/max on EVERY listed
-    // column — multi-column data skipping from plain parquet
-    PipelineConfig.register("zorder_layout") { (name, cfg) =>
-      val cols = cfg.strings("cols")
-      require(cols.size == 2 || cols.size == 3,
-        s"stage $name: `cols` needs 2 or 3 columns, got ${cols.size}")
-      val numFiles = cfg.getLong("num_files").getOrElse(64L).toInt
-      Pipeline.DataStage(name, m =>
-        graft.ops.Layout.zOrderBy(m.data, cols, numFiles))
     }
 
     // sliding-window chunking: REPLACES the data with chunk-grain rows
@@ -744,23 +693,6 @@ object OpStages {
       })
     }
 
-    // theta-sketch overlap audit against a reference release: replaces the
-    // flowing data with the metadata-sized per-group overlap report (A =
-    // the reference at `ref_path`, B = the flowing corpus) — the cheap
-    // "how much of this crawl is new?" answer before any dedup pass
-    PipelineConfig.register("overlap_report") { (name, cfg) =>
-      val (_, text) = ids(cfg)
-      val refPath = cfg.reqStr("ref_path")
-      val groupCols = cfg.getStr("group_cols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      val normalize = cfg.getBool("normalize").getOrElse(true)
-      val lgNom = cfg.getLong("lg_nominal_entries")
-        .getOrElse(graft.ops.Overlap.DefaultLgNominal.toLong).toInt
-      Pipeline.DataStage(name, m => graft.ops.Overlap.overlapReport(
-        m.data.sparkSession.read.parquet(refPath), m.data, text, groupCols,
-        normalize, lgNom))
-    }
-
     PipelineConfig.register("load_jsonl") { (name, cfg) =>
       val (path, ddl) = sourceCfg(name, cfg)
       Pipeline.DataStage(name, m =>
@@ -771,26 +703,6 @@ object OpStages {
       val (path, _) = sourceCfg(name, cfg)
       Pipeline.DataStage(name, m => {
         graft.sources.CorpusSources.writeJsonl(m.data, path); m.data })
-    }
-
-    // heavy-hitter report: replaces the flowing data with the corpus's
-    // frequent items over `item_col` (a token/host/url column — explode
-    // upstream with json_extract/chunk stages as needed): ONE fixed-size
-    // sketch aggregation, then the >= `threshold` items unpacked
-    PipelineConfig.register("freq_items") { (name, cfg) =>
-      val itemCol = cfg.getStr("item_col").getOrElse("item")
-      val threshold = cfg.getLong("threshold").getOrElse(2L)
-      val maxMap = cfg.getLong("max_map_size")
-        .getOrElse(graft.plans.FrequencyExpressions.DefaultMaxMapSize.toLong).toInt
-      require(maxMap > 0 && (maxMap & (maxMap - 1)) == 0,
-        s"stage $name: max_map_size must be a power of 2, got $maxMap")
-      Pipeline.DataStage(name, m => {
-        import graft.plans.FrequencyExpressions._
-        m.data.agg(freqAgg(col(itemCol), maxMap).as("__sk"))
-          .select(explode(freqItems(col("__sk"), lit(threshold))).as("f"))
-          .select(col("f.item").as(itemCol), col("f.estimate").as("estimate"),
-            col("f.lower").as("lower"), col("f.upper").as("upper"))
-      })
     }
 
     PipelineConfig.register("load_orc") { (name, cfg) =>

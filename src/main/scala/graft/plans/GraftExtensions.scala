@@ -96,18 +96,7 @@ object GraftExtensions {
     ("graft_winnow", info("graft_winnow",
       "graft_winnow(hashes, w) - winnowing fingerprint (window minima)"),
       arity("graft_winnow", 2)(es => WinnowMins(es(0),
-        lit("graft_winnow", "w", es(1)).toInt))),
-    ("graft_freq_agg", info("graft_freq_agg",
-      "graft_freq_agg(item, max_map_size) - frequent-items (heavy-hitter) sketch"),
-      arity("graft_freq_agg", 2)(es => FrequencyExpressions.FreqSketchAgg(es(0),
-        lit("graft_freq_agg", "max_map_size", es(1)).toInt))),
-    ("graft_freq_merge", info("graft_freq_merge",
-      "graft_freq_merge(sketch, max_map_size) - merge frequent-items sketches"),
-      arity("graft_freq_merge", 2)(es => FrequencyExpressions.FreqMergeAgg(es(0),
-        lit("graft_freq_merge", "max_map_size", es(1)).toInt))),
-    ("graft_freq_items", info("graft_freq_items",
-      "graft_freq_items(sketch, threshold) - heavy hitters above threshold"),
-      arity("graft_freq_items", 2)(es => FrequencyExpressions.FreqItems(es(0), es(1))))
+        lit("graft_winnow", "w", es(1)).toInt)))
   )
 
   /** Register on an existing session (tests, REPL). */

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 /** Plan-shape lint as a LIBRARY API — the checks the engine's own gate
   * audit runs (duplicate corpus scans, cartesian products, nested-loop
   * joins), callable against any user pipeline before it ships to a
-  * cluster: `PlanLint.check(df)` returns human-readable findings,
-  * `PlanLint.assertClean(df)` turns them into a failed run.
+  * cluster: `PlanLint.check(df)` returns human-readable findings
+  * (`graft.Profile scan` prints them per gate).
   *
   * Findings, per executed (post-AQE when already executed, else compiled)
   * plan:
@@ -63,14 +63,5 @@ object PlanLint {
     val dups = scans.groupBy(identity).filter(_._2.size > 1)
       .map { case (t, l) => Finding("duplicate-scan", s"$t scanned ${l.size}x") }
     (findings.reverse ++ dups).toSeq
-  }
-
-  /** Fail loudly unless every finding's kind is in `allow` (e.g. a
-    * deliberate tiny-side nested-loop join).
-    */
-  def assertClean(df: DataFrame, allow: Set[String] = Set.empty): Unit = {
-    val bad = check(df).filterNot(f => allow.contains(f.kind))
-    require(bad.isEmpty,
-      s"PlanLint: ${bad.size} finding(s):\n  ${bad.mkString("\n  ")}")
   }
 }

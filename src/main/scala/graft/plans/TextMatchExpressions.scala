@@ -610,284 +610,3 @@ object SignalBounds {
       checks: Seq[(Int, Option[Double], Option[Double], Boolean)]): Column =
     GraftSqlBridge.column(SignalBounds(GraftSqlBridge.expression(child), checks))
 }
-
-/** Hand matchers for the four FIXED PII patterns of
-  * [[graft.ops.Redaction]] — linear byte scans with java.util.regex-
-  * identical semantics (leftmost match, the patterns' exact greedy/
-  * backtracking and alternation order, non-Unicode `\b` = ASCII `\w`
-  * transitions, boundary context read from the SOURCE bytes exactly like
-  * `Matcher.appendReplacement`). The regex strings in
-  * `Redaction.Patterns` remain the SPEC (and the DuckDB oracle); these
-  * scanners are the engine's execution of it — java.util.regex re-scans
-  * every position through a 4-way alternation head and measured 3.8×
-  * DuckDB's RE2 marginal at 320k docs, all of it engine constant.
-  * PiiParitySpec pins every matcher against `Pattern.compile` of the spec
-  * string on randomized adversarial text.
-  *
-  * All four patterns are pure ASCII; bytes ≥ 0x80 are never word/class
-  * bytes, so byte-level scanning is character-exact on UTF-8.
-  */
-object PiiMatchers {
-  @inline private def isWord(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
-      (b >= '0' && b <= '9') || b == '_'
-  @inline private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
-  @inline private def isAlpha(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
-  @inline private def isLocal(b: Byte): Boolean = // [A-Za-z0-9._%+-]
-    isWord(b) || b == '.' || b == '%' || b == '+' || b == '-'
-  @inline private def isDomain(b: Byte): Boolean = // [A-Za-z0-9.-]
-    isAlpha(b) || isDigit(b) || b == '.' || b == '-'
-  @inline private def isSep(b: Byte): Boolean = // [-. ]
-    b == '-' || b == '.' || b == ' '
-  @inline private def pack(s: Int, e: Int): Long = (s.toLong << 32) | e
-  @inline private def bndBefore(b: Array[Byte], i: Int): Boolean =
-    i == 0 || !isWord(b(i - 1))
-  @inline private def bndAfter(b: Array[Byte], i: Int): Boolean =
-    i == b.length || !isWord(b(i))
-
-  /** `[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}` — '@'-driven: the
-    * local part is the maximal local-class run ending at the '@' (clipped
-    * at `from`, matching find(from)'s consumption start); the domain is
-    * resolved like the engine's backtracking — dots tried right-to-left
-    * within the maximal domain run, TLD = the greedy letter run after the
-    * dot (≥2).
-    */
-  def findEmail(b: Array[Byte], from: Int): Long = {
-    var j = from + 1
-    val len = b.length
-    while (j < len) {
-      if (b(j) == '@') {
-        var ls = j
-        while (ls > from && isLocal(b(ls - 1))) ls -= 1
-        if (ls < j) {
-          var de = j + 1
-          while (de < len && isDomain(b(de))) de += 1
-          if (de > j + 1) {
-            var d = de - 1
-            while (d >= j + 2) {
-              if (b(d) == '.') {
-                var e = d + 1
-                while (e < de && isAlpha(b(e))) e += 1
-                if (e - d - 1 >= 2) return pack(ls, e)
-              }
-              d -= 1
-            }
-          }
-        }
-      }
-      j += 1
-    }
-    -1L
-  }
-
-  /** `\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b` */
-  def findSsn(b: Array[Byte], from: Int): Long = {
-    val len = b.length
-    var i = from
-    while (i + 11 <= len) {
-      if (isDigit(b(i)) && bndBefore(b, i) &&
-          isDigit(b(i + 1)) && isDigit(b(i + 2)) && b(i + 3) == '-' &&
-          isDigit(b(i + 4)) && isDigit(b(i + 5)) && b(i + 6) == '-' &&
-          isDigit(b(i + 7)) && isDigit(b(i + 8)) && isDigit(b(i + 9)) &&
-          isDigit(b(i + 10)) && bndAfter(b, i + 11))
-        return pack(i, i + 11)
-      i += 1
-    }
-    -1L
-  }
-
-  /** `\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b` — each dotted octet's digit run
-    * must be 1-3 long ({1,3} cannot backtrack past a digit to find the
-    * '.'), and the final run 1-3 long with a non-word follower (a longer
-    * run can never satisfy the trailing `\b` at any backtrack depth).
-    */
-  def findIpv4(b: Array[Byte], from: Int): Long = {
-    val len = b.length
-    var i = from
-    while (i < len) {
-      if (isDigit(b(i)) && bndBefore(b, i)) {
-        var j = i
-        var ok = true
-        var seg = 0
-        while (seg < 3 && ok) {
-          val rs = j
-          while (j < len && isDigit(b(j))) j += 1
-          ok = j - rs >= 1 && j - rs <= 3 && j < len && b(j) == '.'
-          if (ok) j += 1
-          seg += 1
-        }
-        if (ok) {
-          val rs = j
-          while (j < len && isDigit(b(j))) j += 1
-          if (j - rs >= 1 && j - rs <= 3 && bndAfter(b, j)) return pack(i, j)
-        }
-      }
-      i += 1
-    }
-    -1L
-  }
-
-  /** `(?:\+?1[-. ])?(?:\([0-9]{3}\)|\b[0-9]{3})[-. ][0-9]{3}[-. ][0-9]{4}\b`
-    * — alternatives tried in the engine's backtracking order at each
-    * start: prefix `+1<sep>`, then `1<sep>`, then no prefix; within each,
-    * the paren area code before the `\b`-digit one. First success wins
-    * (Java returns the first match in backtracking order, not the
-    * longest).
-    */
-  def findPhone(b: Array[Byte], from: Int): Long = {
-    val len = b.length
-    @inline def digits(at: Int, k: Int): Boolean = {
-      if (at + k > len) return false
-      var i = at
-      while (i < at + k) { if (!isDigit(b(i))) return false; i += 1 }
-      true
-    }
-    // the trailing `<sep>ddd<sep>dddd\b` shared by every alternative
-    @inline def tail(at: Int): Int =
-      if (at < len && isSep(b(at)) && digits(at + 1, 3) &&
-          at + 4 < len && isSep(b(at + 4)) && digits(at + 5, 4) &&
-          bndAfter(b, at + 9)) at + 9
-      else -1
-    @inline def area(at: Int): Int = {
-      if (at < len && b(at) == '(' && digits(at + 1, 3) &&
-          at + 4 < len && b(at + 4) == ')') {
-        val t = tail(at + 5)
-        if (t >= 0) return t
-      }
-      if (bndBefore(b, at) && digits(at, 3)) {
-        val t = tail(at + 3)
-        if (t >= 0) return t
-      }
-      -1
-    }
-    var p = from
-    while (p < len) {
-      val c = b(p)
-      // candidate starts only: '+'/'1' (prefix), '(' or a boundary digit
-      if (c == '+' || c == '1' || c == '(' || (isDigit(c) && bndBefore(b, p))) {
-        var e = -1
-        if (c == '+' && p + 2 < len && b(p + 1) == '1' && isSep(b(p + 2)))
-          e = area(p + 3)
-        if (e < 0 && c == '1' && p + 1 < len && isSep(b(p + 1)))
-          e = area(p + 2)
-        if (e < 0) e = area(p)
-        if (e >= 0) return pack(p, e)
-      }
-      p += 1
-    }
-    -1L
-  }
-
-  type Finder = (Array[Byte], Int) => Long
-
-  /** (kind, finder, sentinel bytes) in the fixed application order. */
-  val Kinds: Seq[(String, Finder, Array[Byte])] = Seq(
-    ("email", findEmail _, "<EMAIL>".getBytes),
-    ("phone", findPhone _, "<PHONE>".getBytes),
-    ("ipv4", findIpv4 _, "<IP>".getBytes),
-    ("ssn", findSsn _, "<SSN>".getBytes))
-
-  def countMatches(b: Array[Byte], f: Finder): Int = {
-    var n = 0
-    var from = 0
-    var m = f(b, from)
-    while (m >= 0) {
-      n += 1
-      from = (m & 0xffffffffL).toInt
-      m = if (from < b.length) f(b, from) else -1L
-    }
-    n
-  }
-
-  def replaceAll(b: Array[Byte], f: Finder, sentinel: Array[Byte]): Array[Byte] = {
-    var m = f(b, 0)
-    if (m < 0) return b // common case: no PII, zero allocation
-    val out = new java.io.ByteArrayOutputStream(b.length)
-    var from = 0
-    while (m >= 0) {
-      val s = (m >>> 32).toInt
-      val e = (m & 0xffffffffL).toInt
-      out.write(b, from, s - from)
-      out.write(sentinel, 0, sentinel.length)
-      from = e
-      m = if (from < b.length) f(b, from) else -1L
-    }
-    out.write(b, from, b.length - from)
-    out.toByteArray
-  }
-}
-
-/** One-expression PII scan: the sequential redaction (email → phone →
-  * ipv4 → ssn over the evolving text, exactly the chained
-  * `regexp_replace` semantics) AND the per-kind pre-redaction counts on
-  * the ORIGINAL text, as one struct — `redacted` plus `n_<kind>` for each
-  * requested kind. [[graft.ops.Redaction]] extracts fields; the `counts` /
-  * `redact` flags prune the unneeded pass per call site (field pruning
-  * cannot reach inside a single struct-producing function, so a
-  * redact-only caller would otherwise pay one count scan per kind).
-  * A null text yields a null struct (the regexp functions' null
-  * propagation).
-  */
-case class PiiScan(child: Expression, kinds: Seq[String],
-    counts: Boolean = true, redact: Boolean = true)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  private val known = PiiMatchers.Kinds.map(_._1)
-  require(kinds.nonEmpty && kinds.forall(known.contains),
-    s"unknown PII kind(s) ${kinds.filterNot(known.contains).mkString(", ")}")
-  require(counts || redact, "PiiScan with neither counts nor redact is empty")
-  // fixed application order regardless of request order
-  private val ordered = known.filter(kinds.contains)
-
-  override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(StringType)
-  override def dataType: DataType = StructType(
-    (if (redact) Seq(StructField("redacted", StringType, nullable = true)) else Nil) ++
-      (if (counts) ordered.map(k => StructField(s"n_$k", LongType, nullable = false)) else Nil))
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_pii_scan"
-
-  @transient private lazy val mask: Int =
-    ordered.map(k => 1 << PiiMatchers.Kinds.indexWhere(_._1 == k)).sum
-
-  override def nullSafeEval(input: Any): Any =
-    PiiScan.compute(input.asInstanceOf[UTF8String], mask, counts, redact)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.plans.PiiScan.compute($t, $mask, $counts, $redact);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PiiScan {
-  def compute(text: UTF8String, mask: Int, counts: Boolean,
-      redact: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
-    val orig = text.getBytes
-    val nKinds = if (counts) java.lang.Integer.bitCount(mask) else 0
-    val base = if (redact) 1 else 0
-    val out = new Array[Any](base + nKinds)
-    var cur = orig
-    var slot = base
-    var k = 0
-    while (k < PiiMatchers.Kinds.length) {
-      if ((mask & (1 << k)) != 0) {
-        val (_, finder, sentinel) = PiiMatchers.Kinds(k)
-        if (counts) {
-          out(slot) = PiiMatchers.countMatches(orig, finder).toLong
-          slot += 1
-        }
-        if (redact) cur = PiiMatchers.replaceAll(cur, finder, sentinel)
-      }
-      k += 1
-    }
-    if (redact) out(0) = if (cur eq orig) text else UTF8String.fromBytes(cur)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-  }
-
-  def scan(text: Column, kinds: Seq[String], counts: Boolean = true,
-      redact: Boolean = true): Column =
-    GraftSqlBridge.column(
-      PiiScan(GraftSqlBridge.expression(text), kinds, counts, redact))
-}

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOfJoin, RangeJoin}
+import graft.operators.AsOfJoin
 
 /** As-of join semantics on crafted timelines: backward/forward direction,
   * inclusive-vs-strict tie rule, null times on both sides, right-side
@@ -177,32 +177,8 @@ class AsOfJoinSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("__rt"))
   }
-}
 
-class RangeJoinSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def pts = (Seq(
-    (1L, 1L, Some(5L)), (2L, 1L, Some(10L)), (3L, 1L, Some(25L)),
-    (4L, 1L, Some(100L)), (5L, 2L, Some(10L)), (6L, 1L, None)))
-    .map { case (id, u, t) => (id, u, t.map(java.lang.Long.valueOf).orNull) }
-    .toDF("pid", "user_id", "t")
-
-  private def ivs = Seq(
-    (1L, 8L, 30L, "a"),        // matches t=10, 25
-    (1L, 10L, 10L, "point"),   // degenerate single-instant: matches t=10
-    (1L, 40L, 20L, "inverted"),// end < start: matches nothing
-    (2L, 0L, 1000L, "wide"))   // other key
-    .toDF("user_id", "s", "e", "tag")
-
-  test("point-in-interval: containment inclusive both ends, multi-match, key isolation") {
-    val out = RangeJoin.pointInInterval(pts, ivs, Seq("user_id"), "t",
-      "s", "e", Seq("tag"), bucketWidth = 7)
-      .select("pid", "tag").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(out === Set((2L, "a"), (3L, "a"), (2L, "point"), (5L, "wide")))
-  }
-
-  test("hot key holding 10% of rows: as-of matches most points, interval join stays non-empty") {
+  test("hot key holding 10% of rows: as-of matches most points") {
     // 10k points / 1k rights over 100 keys, times over 1e6 units
     def keyed(n: Long, parts: Int) = spark.range(0, n, 1, parts).select(
       col("id"),
@@ -215,45 +191,5 @@ class RangeJoinSpec extends SparkSpec {
     val asof = AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("rid"),
       dedupRight = Some("rid")).filter(col("rid").isNotNull).count()
     assert(asof > 5000L, s"suspiciously few asof matches: $asof")
-    val ivs = right.select(col("k"), (col("rt") - 1000L).as("s"),
-      (col("rt") + 1000L).as("e"), col("rid"))
-    assert(RangeJoin.pointInInterval(left, ivs, Seq("k"), "t", "s", "e",
-      Seq("rid"), bucketWidth = 2000L).count() > 0)
-  }
-
-  test("interval wider than maxBucketsPerInterval raises instead of exploding") {
-    val huge = Seq((1L, 0L, 1000000L, "huge")).toDF("user_id", "s", "e", "tag")
-    val e = intercept[Exception] {
-      RangeJoin.pointInInterval(pts, huge, Seq("user_id"), "t",
-        "s", "e", Seq("tag"), bucketWidth = 7, maxBucketsPerInterval = 10).collect()
-    }
-    assert(e.getMessage.contains("buckets") || e.getCause != null)
-    // span so wide that b1 - b0 WRAPS negative (ADVICE r10): must still hit
-    // the intended per-row error, not sequence()'s generic size failure
-    val wrap = Seq((1L, Long.MinValue + 10L, Long.MaxValue - 10L, "wrap"))
-      .toDF("user_id", "s", "e", "tag")
-    val w = intercept[Exception] {
-      RangeJoin.pointInInterval(pts, wrap, Seq("user_id"), "t",
-        "s", "e", Seq("tag"), bucketWidth = 1, maxBucketsPerInterval = 10).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(w).exists(_.contains("widen bucketWidth")), messages(w).mkString("; "))
-  }
-
-  test("bucket grid handles negative times and results are partitioning-independent") {
-    val p = Seq((1L, 1L, -15L), (2L, 1L, -7L)).toDF("pid", "user_id", "t")
-    val iv = Seq((1L, -20L, -10L, "neg")).toDF("user_id", "s", "e", "tag")
-    val out = RangeJoin.pointInInterval(p, iv, Seq("user_id"), "t",
-      "s", "e", Seq("tag"), bucketWidth = 7).select("pid").collect().map(_.getLong(0)).toSet
-    assert(out === Set(1L))
-    val l = (0L until 400L).map(i => (i, i % 5, (i * 13 % 211) - 100)).toDF("pid", "user_id", "t")
-    val r = (0L until 60L).map(i => (i % 5, (i * 7 % 97) - 50, (i * 7 % 97) - 50 + (i % 23), s"i$i"))
-      .toDF("user_id", "s", "e", "tag")
-    val a = RangeJoin.pointInInterval(l.repartition(1), r.repartition(1),
-      Seq("user_id"), "t", "s", "e", Seq("tag"), bucketWidth = 11)
-    val b = RangeJoin.pointInInterval(l.repartition(13), r.repartition(3),
-      Seq("user_id"), "t", "s", "e", Seq("tag"), bucketWidth = 11)
-    assert(collectSet(a) === collectSet(b) && a.count() > 0)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import graft.ops.Layout
 
 /** Bucketed layout: joins and aggregations on the bucket key must be
   * exchange-free against bucketed tables, and the same query against plain
@@ -35,8 +34,8 @@ class BucketedJoinSpec extends SparkSpec {
     val dims = spark.range(n / 10).select(col("id").as("k"),
       concat(lit("d"), col("id")).as("name"))
     try {
-      Layout.writeBucketed(facts, "bj_facts", Seq("k"), 8, sortCols = Seq("k"))
-      Layout.writeBucketed(dims, "bj_dims", Seq("k"), 8, sortCols = Seq("k"))
+      BucketedLayout.writeBucketed(facts, "bj_facts", Seq("k"), 8, sortCols = Seq("k"))
+      BucketedLayout.writeBucketed(dims, "bj_dims", Seq("k"), 8, sortCols = Seq("k"))
       val bf = spark.table("bj_facts")
       val bd = spark.table("bj_dims")
       // a broadcast join would dodge the exchange question entirely —
@@ -74,7 +73,7 @@ class BucketedJoinSpec extends SparkSpec {
     // conf and is locked by the test above; this pins the optional
     // sort-free variant.
     try {
-      Layout.writeBucketed(spark.range(10000).select(col("id").as("k"),
+      BucketedLayout.writeBucketed(spark.range(10000).select(col("id").as("k"),
         col("id").as("x")), "bj_sorted", Seq("k"), 4, sortCols = Seq("k"))
       val buckets = new java.io.File("spark-warehouse/bj_sorted")
         .listFiles().filter(_.getName.endsWith(".parquet"))

@@ -119,7 +119,7 @@ class GoldenSpec extends SparkSpec {
           .foreach(java.nio.file.Files.deleteIfExists(_))
       }
     }
-    Seq("meds_bucketed_a", "meds_bucketed_b").foreach(t => graft.ops.Layout.writeBucketed(
+    Seq("meds_bucketed_a", "meds_bucketed_b").foreach(t => BucketedLayout.writeBucketed(
       meds.data.drop(Shard, Split), t, Seq(SubjectId), 4, sortCols = Seq(SubjectId, Time)))
     val a = spark.table("meds_bucketed_a")
     val b = spark.table("meds_bucketed_b").groupBy(SubjectId).count()

@@ -37,7 +37,6 @@ class MetricsSpec extends SparkSpec {
     "minhash_lsh_dedup_stage" -> 2_000_000L,  // measured 0.81 MB
     "dedup_clusters" -> 64_000L,              // measured 9.0 KB
     "cluster_reps" -> 64_000L,                // measured 17.7 KB
-    "zorder_values" -> 20_000_000L,           // measured 8.06 MB
     "lm_perplexity" -> 500_000L,              // measured 183 KB (r11, in-row grams)
     "ppl_buckets" -> 450_000L)                // measured 172 KB (r11, in-row grams)
 

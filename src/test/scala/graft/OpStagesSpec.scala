@@ -201,7 +201,7 @@ class OpStagesSpec extends SparkSpec {
   test("similarity/winnow/corpus stages are registered") {
     val expected = Set("winnow_fingerprint", "filter_rows", "json_extract",
       "normalize_text", "text_repetition",
-      "decontaminate", "pack_sequences", "redact_pii", "quality_filter",
+      "decontaminate", "pack_sequences", "quality_filter",
       "dedup_lines", "remove_dup_spans", "tf_idf", "text_entropy",
       "load_jsonl", "write_jsonl", "load_csv", "c4_filter", "corpus_stats",
       "dedup_against", "token_budget_cap", "join_table", "write_csv",

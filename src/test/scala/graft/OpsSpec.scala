@@ -473,48 +473,6 @@ class DedupSpec extends SparkSpec {
   }
 }
 
-class RedactionSpec extends SparkSpec {
-  import spark.implicits._
-  import graft.ops.Redaction
-
-  test("redacts emails, phones, IPs, SSNs with typed sentinels; counts match") {
-    val d = Seq(
-      (1L, "mail bob.smith+spam@sub.example.co.uk or (555) 123-4567 ok"),
-      (2L, "server at 10.0.42.7 and 192.168.0.255 no phone"),
-      (3L, "ssn 123-45-6789 and +1 555-123-4567 and a@b.io"),
-      (4L, "clean text with version 1.2 and year 2024"),
-      (5L, "")
-    ).toDF("doc_id", "text")
-    val out = d.select((col("doc_id") +:
-      Redaction.redact(col("text")).as("r") +:
-      Redaction.piiCounts(col("text"))): _*)
-      .collect().map(r => r.getLong(0) ->
-        (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    assert(out(1L)._1 == "mail <EMAIL> or <PHONE> ok")
-    assert(out(1L)._2 == 1L && out(1L)._3 == 1L)
-    assert(out(2L)._1 == "server at <IP> and <IP> no phone" && out(2L)._4 == 2L)
-    assert(out(3L)._1 == "ssn <SSN> and <PHONE> and <EMAIL>")
-    // SSN-shaped strings also match nothing else: fixed order keeps one sentinel
-    assert(out(3L)._5 == 1L && out(3L)._3 == 1L && out(3L)._2 == 1L)
-    // version numbers / years / short dotted strings are NOT over-matched
-    assert(out(4L)._1 == "clean text with version 1.2 and year 2024")
-    assert(out(4L)._2 + out(4L)._3 + out(4L)._4 + out(4L)._5 == 0L)
-    assert(out(5L)._1 == "")
-  }
-
-  test("kind selection is validated and order-independent") {
-    val d = Seq((1L, "a@b.io and 10.0.0.1")).toDF("doc_id", "text")
-    val r = d.select(Redaction.redact(col("text"), Seq("ipv4", "email")).as("r")).head()
-    assert(r.getString(0) == "<EMAIL> and <IP>")
-    // email-only: the IP survives
-    val e = d.select(Redaction.redact(col("text"), Seq("email")).as("r")).head()
-    assert(e.getString(0) == "<EMAIL> and 10.0.0.1")
-    intercept[IllegalArgumentException] {
-      Redaction.redact(col("text"), Seq("passport"))
-    }
-  }
-}
-
 class PackingSpec extends SparkSpec {
   import spark.implicits._
 

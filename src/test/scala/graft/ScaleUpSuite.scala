@@ -3,28 +3,17 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Dev tool: build a FULL replicated-scale dataset dir — every table, not
-  * just the documents/embeddings/events trio of [[ScaleUpBench]] — so the
-  * ENTIRE 109-gate hash suite and the whole bench can run at the next order
-  * of magnitude (VERDICT r14 gap #1: "the 109-gate suite has never run
-  * above sf0.1"; point measurements of individual queries are not a suite
-  * pass).
+/** Dev tool: build a FULL replicated-scale dataset dir — every table the
+  * gates read (documents, embeddings, events) — so the whole hash suite and
+  * the whole bench can run at the next order of magnitude (a point
+  * measurement of one query is not a suite pass).
   *
-  * Replication keeps foreign keys consistent so join selectivities scale
-  * like real data instead of degenerating (an unshifted o_custkey against
-  * shifted c_custkey would orphan 90% of orders; an unshifted l_orderkey
-  * would fan every lineitem across k order replicas):
-  *   - customer/orders/lineitem/part/supplier entity keys shift by
-  *     replica-disjoint offsets, and every FK column shifts by ITS
-  *     referenced table's offset — each replica is a closed TPC-H world.
-  *   - region/nation stay fixed (shared dimensions, like calendar tables
-  *     at 100 TB): nationkey FKs remain valid unshifted.
-  *   - documents/embeddings/events reuse [[ScaleUpBench]]'s conventions
-  *     (affine alphabet permutations, per-replica float scaling, disjoint
-  *     user/event ids) so per-stage work scales ~linearly in k.
+  * The tables reuse [[ScaleUpBench]]'s conventions (affine alphabet
+  * permutations, per-replica float scaling, disjoint user/event ids) so
+  * per-stage work scales ~linearly in k.
   *
   * Usage: Test/runMain graft.ScaleUpSuite <sfDir> <outRoot> <k>
-  * Writes <outRoot>/x<k>/<table>.parquet for all ten tables; then
+  * Writes <outRoot>/x<k>/<table>.parquet for the three tables; then
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.Verify <outRoot>/x<k> <dump>"
   *   python3 tools/compare.py <outRoot>/x<k> <dump> --fork
   * is the suite pass at scale.
@@ -44,7 +33,7 @@ object ScaleUpSuite {
       * replica-disjoint offsets (offset per column = i·step). Guard: the
       * fixed steps below only keep replicas disjoint while every source key
       * fits under its step — for a source dir past roughly sf50 the shifted
-      * ranges would overlap and silently corrupt FK closure, so assert
+      * ranges would overlap and silently merge distinct ids, so assert
       * max(key) < step up front instead.
       */
     def shifted(df: DataFrame, k: Int, shifts: (String, Long)*): DataFrame = {
@@ -63,25 +52,6 @@ object ScaleUpSuite {
       }.reduce(_ unionByName _)
     }
 
-    val C = 10_000_000L // custkey step
-    val O = 100_000_000L // orderkey step
-    val P = 10_000_000L // partkey step
-    val S = 1_000_000L // suppkey step
-
-    // shared dimensions: copied once, unshifted
-    write(t("region"), "region", 1)
-    write(t("nation"), "nation", 1)
-    write(shifted(t("customer"), k, "c_custkey" -> C), "customer",
-      math.max(k / 8, 2))
-    write(shifted(t("supplier"), k, "s_suppkey" -> S), "supplier", 2)
-    write(shifted(t("part"), k, "p_partkey" -> P), "part", math.max(k / 8, 2))
-    write(shifted(t("orders"), k, "o_orderkey" -> O, "o_custkey" -> C),
-      "orders", math.max(k / 2, 4))
-    write(shifted(t("lineitem"), k,
-      "l_orderkey" -> O, "l_partkey" -> P, "l_suppkey" -> S),
-      "lineitem", math.max(k, 8))
-
-    // the ScaleUpBench trio, same conventions
     write(ScaleUpBench.replicate(t("documents"), k), "documents",
       math.max(k / 2, 4))
     // DIRECTION-perturbed replicas, not ScaleUpBench's pure (1 + i/1024)

@@ -37,7 +37,6 @@ class StageKeysSpec extends SparkSpec {
     "filter_rows" -> "{predicate: k > 0}",
     "filter_subjects" -> "{}",
     "fit_vocabulary_indices" -> "{}",
-    "freq_items" -> "{}",
     "generate_subject_splits" -> "{}",
     "join_table" -> "{path: /x, keys: [k]}",
     "js_divergence" -> "{}",
@@ -54,14 +53,9 @@ class StageKeysSpec extends SparkSpec {
     "normalization" -> "{}",
     "normalize_text" -> "{}",
     "occlude_outliers" -> "{}",
-    "overlap_report" -> "{ref_path: /x}",
     "pack_sequences" -> "{capacity: 16}",
     "ppl_buckets" -> "{}",
-    "profile" -> "{}",
     "quality_filter" -> "{min_words: 1}",
-    "range_join" -> ("{keys: [k], value_cols: [v], bucket_width: 10, right_path: /x, " +
-      "time_col: t, start_col: s, end_col: e}"),
-    "redact_pii" -> "{}",
     "remove_dup_spans" -> "{}",
     "reorder_measurements" -> "{}",
     "resample_mix" -> "{stratum_col: s, rates: {a: 1}}",
@@ -82,8 +76,7 @@ class StageKeysSpec extends SparkSpec {
     "winnow_fingerprint" -> "{}",
     "write_csv" -> "{path: /x}",
     "write_jsonl" -> "{path: /x}",
-    "write_orc" -> "{path: /x}",
-    "zorder_layout" -> "{cols: [a, b]}")
+    "write_orc" -> "{path: /x}")
 
   /** Stages whose top-level keys are data, with the reason. */
   private val exempt = Map(
@@ -194,10 +187,10 @@ class StageKeysSpec extends SparkSpec {
   }
 
   /** (stage, key) pairs whose absence fails a hand-written conditional or
-    * value check ("at least one of ...", "2 or 3 columns") instead of the
+    * value check ("at least one of ...", "no generators") instead of the
     * required-key read. */
   private val conditional = Set("quality_filter" -> "min_words", "rolling_agg" -> "count_as",
-    "zorder_layout" -> "cols", "add_time_derived_measurements" -> "time_of_day")
+    "add_time_derived_measurements" -> "time_of_day")
 
   test("dropping any key of a minimal config builds, or fails naming the stage and the key") {
     val wrong = minimal.toSeq.sorted.flatMap { case (stage, yaml) =>

@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
-import graft.operators.{RangeJoin, RollingAgg}
+import graft.operators.RollingAgg
 
-/** Property-based equivalence of the trailing window and the range join
-  * against brute-force oracles in plain Scala (frame bounds in
-  * [[RollingAgg.trailing]], bucket-cover bounds in RangeJoin). Generators
-  * force the degenerate shapes explicitly: all-equal times, range = 0,
-  * bucketWidth far larger than the data span, negative times, null
-  * times/keys/bounds, inverted intervals.
+/** Property-based equivalence of the trailing window against a
+  * brute-force oracle in plain Scala (frame bounds in
+  * [[RollingAgg.trailing]]). Generators force the degenerate shapes
+  * explicitly: all-equal times, range = 0, negative times, null
+  * times.
   */
 class TemporalPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -59,91 +58,5 @@ class TemporalPropertySpec extends SparkSpec {
     val res = org.scalacheck.Test.check(
       org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(res.passed, res.status.toString)
-  }
-
-  // --- RangeJoin vs brute force ------------------------------------------
-
-  private case class Pt(pid: Long, k: Option[Long], t: Option[Long])
-  private case class Iv(k: Option[Long], s: Option[Long], e: Option[Long],
-    tag: String)
-
-  private val genKey: Gen[Option[Long]] =
-    Gen.frequency((7, Gen.choose(0L, 2L).map(Some(_))), (1, Gen.const(None)))
-
-  private val genRange: Gen[(List[Pt], List[Iv], Long)] = for {
-    np <- Gen.choose(0, 80)
-    ni <- Gen.choose(0, 30)
-    pts <- Gen.listOfN(np, for {
-      k <- genKey
-      t <- Gen.frequency(
-        (9, Gen.choose(-40L, 40L).map(Some(_))), (1, Gen.const(None)))
-    } yield (k, t))
-    ivs <- Gen.listOfN(ni, for {
-      k <- genKey
-      s <- Gen.frequency(
-        (9, Gen.choose(-40L, 40L).map(Some(_))), (1, Gen.const(None)))
-      // short, point (e = s), inverted, and null bounds all occur
-      e <- Gen.frequency(
-        (6, Gen.choose(0L, 15L).map(d => s.map(_ + d))),
-        (2, Gen.const(s)),
-        (1, Gen.choose(-40L, 40L).map(Some(_))),
-        (1, Gen.const(None)))
-    } yield (k, s, e))
-    width <- Gen.oneOf(1L, 3L, 7L, 1000L)
-  } yield (
-    pts.zipWithIndex.map { case ((k, t), i) => Pt(i.toLong, k, t) },
-    ivs.zipWithIndex.map { case ((k, s, e), i) => Iv(k, s, e, s"i$i") },
-    width)
-
-  test("pointInInterval equals brute force (bucket-cover bounds, degenerate widths)") {
-    val prop = Prop.forAll(genRange) { case (pts, ivs, width) =>
-      val p = pts.map(x => (x.pid, x.k.map(java.lang.Long.valueOf).orNull,
-        x.t.map(java.lang.Long.valueOf).orNull)).toDF("pid", "k", "t")
-      val iv = ivs.map(x => (x.k.map(java.lang.Long.valueOf).orNull,
-        x.s.map(java.lang.Long.valueOf).orNull,
-        x.e.map(java.lang.Long.valueOf).orNull, x.tag)).toDF("k", "s", "e", "tag")
-      val got = RangeJoin.pointInInterval(p, iv, Seq("k"), "t", "s", "e",
-        Seq("tag"), bucketWidth = width)
-        .select("pid", "tag").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      // SQL inner-join semantics: null keys/times/bounds match nothing,
-      // inverted intervals match nothing, containment inclusive both ends
-      val want = (for {
-        pt <- pts; i <- ivs
-        if pt.k.isDefined && pt.k == i.k
-        t <- pt.t; s <- i.s; e <- i.e
-        if e >= s && t >= s && t <= e
-      } yield (pt.pid, i.tag)).toSet
-      if (got != want) println(s"MISMATCH width=$width got=$got want=$want")
-      got == want
-    }
-    val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(12), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("bucket arithmetic is exact beyond 2^53 (epoch-nanos magnitudes)") {
-    // a cast-to-double floor-division has ~512-unit granularity at 3e18:
-    // the exact pmod bucketing must keep strict boundaries regardless
-    val t0 = 3000000000000000000L
-    val p = Seq((1L, 1L, t0 - 1), (2L, 1L, t0), (3L, 1L, t0 + 1),
-      (4L, 1L, t0 + 1000), (5L, 1L, t0 + 1001)).toDF("pid", "k", "t")
-    val iv = Seq((1L, t0, t0 + 1000L, "w")).toDF("k", "s", "e", "tag")
-    for (width <- Seq(7L, 513L, 1000000L)) {
-      val got = RangeJoin.pointInInterval(p, iv, Seq("k"), "t", "s", "e",
-        Seq("tag"), bucketWidth = width)
-        .select("pid").collect().map(_.getLong(0)).toSet
-      assert(got === Set(2L, 3L, 4L), s"width=$width got=$got")
-    }
-    // Long.MinValue edge: `t - pmod(t, w)` would wrap below MinValue; the
-    // quotient/remainder form must keep exact containment there too
-    val lo2 = Long.MinValue
-    val p2 = Seq((1L, 1L, lo2), (2L, 1L, lo2 + 10), (3L, 1L, lo2 + 11))
-      .toDF("pid", "k", "t")
-    val iv2 = Seq((1L, lo2, lo2 + 10L, "w")).toDF("k", "s", "e", "tag")
-    val got2 = RangeJoin.pointInInterval(p2, iv2, Seq("k"), "t", "s", "e",
-      Seq("tag"), bucketWidth = 7L)
-      .select("pid").collect().map(_.getLong(0)).toSet
-    assert(got2 === Set(1L, 2L))
   }
 }

@@ -4,154 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop}
-import graft.ops.{Redaction, TextAnalysis}
-
-/** Parity net for the native PII scanners ([[graft.plans.PiiMatchers]] /
-  * [[graft.plans.PiiScan]]) against `java.util.regex` compiled from the
-  * SPEC strings in [[Redaction.Patterns]] — per-matcher match spans,
-  * sequential redaction, and pre-redaction counts, through the full Spark
-  * expression path (codegen) AND the JVM compute directly. Generators mix
-  * valid PII, near-misses that exercise each pattern's backtracking
-  * corners, unicode filler, and sentinel-adjacent sequences (a redaction
-  * can CREATE a boundary enabling a later kind — sequential semantics).
-  */
-class PiiParitySpec extends SparkSpec {
-
-  private val compiled = Redaction.Patterns.map { case (k, (p, s)) =>
-    (k, java.util.regex.Pattern.compile(p), s)
-  }
-
-  private def refRedact(text: String): String =
-    compiled.foldLeft(text) { case (t, (_, p, s)) => p.matcher(t).replaceAll(s) }
-
-  private def refCounts(text: String): Seq[Long] =
-    compiled.map { case (_, p, _) =>
-      val m = p.matcher(text)
-      var n = 0L
-      while (m.find()) n += 1
-      n
-    }
-
-  private val fragments: Gen[String] = Gen.oneOf(
-    // emails: valid + backtracking corners
-    "a.b%c+d-e@mail-srv.example.com", "x@y.zz", "a@b.c-d.ee", "a@b.cc-x",
-    "@x.com", "a@b", "a@b.c", "a@@b.cc", "a@b..cc", "a@b.cc@d.ee",
-    "x@y.zz123-45-6789", // email TLD stops at digits; redaction frees an SSN boundary
-    // phones: every alternative + near-misses
-    "+1 555-123-4567", "1-555-123-4567", "(555) 123-4567", "555.123.4567",
-    "(555)123-4567", "55-123-4567", "5551234567", "+15551234567",
-    "11 234-567-8901", "+1 (555) 123-4567", "1 555 123 4567x",
-    // ipv4: octet-length backtracking, trailing \b
-    "1.2.3.4", "255.255.255.255", "1234.5.6.7", "1.2.3.4567", "1.2.3.4.5",
-    "a1.2.3.4", "1.2.3.4a", "10.0.0.1:8080",
-    // ssn
-    "123-45-6789", "1234-56-7890", "123-45-67890", "x123-45-6789",
-    "<EMAIL>123-45-6789",
-    // filler incl. unicode and word-boundary bait
-    "héllo", "…", "call", "_1", "at", "x", "-", ".", "(", ")", "+", "")
-  private val seps: Gen[String] = Gen.oneOf(" ", "", "\n", ", ", "\t", " x")
-  private val genDoc: Gen[String] = for {
-    k <- Gen.choose(0, 12)
-    fs <- Gen.listOfN(k, fragments)
-    ss <- Gen.listOfN(k, seps)
-  } yield fs.zip(ss).map { case (f, s) => f + s }.mkString
-
-  test("per-matcher match spans equal java.util.regex on randomized adversarial text") {
-    val finders = graft.plans.PiiMatchers.Kinds.map(x => (x._1, x._2)).toMap
-    def spans(f: (Array[Byte], Int) => Long, b: Array[Byte]): Seq[(Int, Int)] = {
-      var out = Vector.empty[(Int, Int)]
-      var from = 0
-      var m = f(b, from)
-      while (m >= 0) {
-        val (s, e) = ((m >>> 32).toInt, (m & 0xffffffffL).toInt)
-        out :+= ((s, e))
-        from = e
-        m = if (from < b.length) f(b, from) else -1L
-      }
-      out
-    }
-    val prop = Prop.forAll(genDoc) { doc =>
-      // compare on BYTE offsets: the patterns are ASCII so every match
-      // lies on ASCII spans; regex char offsets are remapped through the
-      // doc's byte encoding
-      val bytes = doc.getBytes("UTF-8")
-      val byteOff = {
-        val off = new Array[Int](doc.length + 1)
-        var i = 0
-        var b = 0
-        while (i < doc.length) {
-          off(i) = b
-          b += doc.substring(i, i + 1).getBytes("UTF-8").length
-          i += 1
-        }
-        off(doc.length) = b
-        off
-      }
-      compiled.forall { case (kind, p, _) =>
-        val m = p.matcher(doc)
-        var want = Vector.empty[(Int, Int)]
-        while (m.find()) want :+= ((byteOff(m.start), byteOff(m.end)))
-        spans(finders(kind), bytes) == want
-      }
-    }
-    val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(300), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("sequential redaction + counts equal the chained-regex reference through Spark") {
-    val prop = Prop.forAll(Gen.listOfN(20, genDoc)) { docs =>
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          docs.zipWithIndex.map { case (t, i) => Row(i.toLong, t) } :+
-            Row(999L, null), 2),
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-      val cols = col("doc_id") +: Redaction.redact(col("text")).as("red") +:
-        Redaction.piiCounts(col("text"))
-      val got = df.select(cols: _*).collect()
-        .map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      docs.zipWithIndex.forall { case (t, i) =>
-        got(i.toLong) == (refRedact(t) +: refCounts(t))
-      } && got(999L).forall(_ == null)
-    }
-    val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(30), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("directed: a redaction creates a boundary enabling a later kind (sequential semantics)") {
-    val t = "x@y.zz123-45-6789"
-    // counts are on the ORIGINAL text: no SSN boundary there ('z' before '1')
-    assert(refCounts(t) == Seq(1L, 0L, 0L, 0L))
-    assert(refRedact(t) == "<EMAIL><SSN>")
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, t))),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-    val r = df.select(Redaction.redact(col("text")).as("red") +:
-      Redaction.piiCounts(col("text")): _*).head()
-    assert(r.getString(0) == "<EMAIL><SSN>")
-    assert((1 to 4).map(r.getLong) == Seq(1L, 0L, 0L, 0L))
-  }
-
-  test("kind subset: only requested kinds are redacted/counted, in fixed order") {
-    val t = "a@b.cc and 123-45-6789"
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, t))),
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-    val r = df.select(Redaction.redact(col("text"), Seq("ssn")).as("red") +:
-      Redaction.piiCounts(col("text"), Seq("ssn", "email")): _*).head()
-    assert(r.getString(0) == "a@b.cc and <SSN>")
-    // fixed order: email count column first regardless of request order
-    assert(r.schema.fieldNames.toSeq == Seq("red", "n_email", "n_ssn"))
-    assert(r.getLong(1) == 1L && r.getLong(2) == 1L)
-    intercept[IllegalArgumentException] {
-      Redaction.redact(col("text"), Seq("iban"))
-    }
-  }
-}
+import graft.ops.TextAnalysis
 
 /** Parity net for the native [[graft.plans.MarkerCounts]] word scan
   * against the old per-language regex form, both evaluated through Spark

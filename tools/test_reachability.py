@@ -6,7 +6,8 @@
 comments: a name in a scaladoc or a `//` note is not a call. A local `def`
 between two stage registrations belongs to the stages that call it, not to
 the stage registered above it. The committed REACHABILITY.md is the
-script's output.
+script's output, and its family table lists no family that only its own
+gates and specs reach (such a family is deleted, not kept).
 """
 import contextlib
 import io
@@ -98,6 +99,21 @@ class CommittedTableTest(unittest.TestCase):
         committed = (reachability.ROOT / "REACHABILITY.md").read_text()
         self.assertEqual(committed, out.getvalue(),
                          "REACHABILITY.md is stale: python3 tools/reachability.py > REACHABILITY.md")
+
+
+def family_rows(md):
+    """(family, reached by) for each row of the `## Gate families` table."""
+    section = md.split("## Gate families", 1)[1]
+    rows = [line.split("|")[1:-1] for line in section.splitlines() if line.startswith("| ")]
+    return [(cells[0].strip(), cells[2].strip()) for cells in rows[1:]]
+
+
+class FamilyTableTest(unittest.TestCase):
+    def test_no_family_is_reached_only_by_its_own_gates_and_specs(self):
+        md = (reachability.ROOT / "REACHABILITY.md").read_text()
+        alone = [f for f, by in family_rows(md) if by == "own gates and specs only"]
+        self.assertEqual(alone, [], "families reached only by their own gates and specs: "
+                         + ", ".join(alone))
 
 
 if __name__ == "__main__":
